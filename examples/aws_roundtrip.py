@@ -59,10 +59,9 @@ def main() -> None:
 
     sub = (
         SubscriberBuilder()
-        # reader_mode="parallel" (the default) runs GetRecords on
-        # executors, one partition per shard — on a multi-node cluster
-        # also pass position_dir=<shared path>; reader_mode="simple"
-        # keeps the driver-side fetch for small streams
+        # GetRecords runs on executors, one partition per shard — on
+        # a multi-node cluster also pass position_dir=<shared path>,
+        # on the same storage as the checkpoint
         .with_kinesis(endpoint_url=endpoint_url, starting_position="TRIM_HORIZON")
         .build()
     )

@@ -82,6 +82,22 @@ def test_two_topics_one_builder_no_shared_state(spark, sf_dir, tmp_path):
     assert sub.subscribe_batch(spark, "topic-b").count() == b.count()
 
 
+def test_subscribe_batch_reads_the_kinesis_transport(spark):
+    """subscribe_batch honors with_kinesis: a bounded snapshot of the
+    stream through kinesis_aws, not a directory read that finds no
+    topic and returns nothing."""
+    sub = (
+        SubscriberBuilder()
+        .with_kinesis(
+            client_factory="watermill_kinesis_spark.sources.kinesis_stub:demo_client"
+        )
+        .build()
+    )
+    back = sub.subscribe_batch(spark, "demo-stream").collect()
+    # five envelopes decoded, the corrupt record skipped
+    assert sorted(r.uuid for r in back) == [f"uuid-{i}" for i in range(5)]
+
+
 def test_subscribe_stream_and_close(spark, sf_dir, tmp_path):
     """Streaming subscribe drains the topic; close() stops the query
     gracefully (Closer semantics) and is idempotent."""

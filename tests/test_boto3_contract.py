@@ -20,7 +20,8 @@ from botocore.stub import ANY, Stubber  # noqa: E402
 
 from watermill_kinesis_spark.sources.kinesis_aws import (  # noqa: E402
     SHARD_END,
-    KinesisAwsStreamReader,
+    KinesisAwsBatchReader,
+    KinesisAwsParallelStreamReader,
     _get_iterator,
     _get_records_throttled,
     _list_shards,
@@ -169,16 +170,21 @@ def test_get_iterator_request_shapes_validate_against_model():
         stub.assert_no_pending_responses()
 
 
-def test_simple_reader_end_to_end_on_real_botocore_pipeline():
-    """The driver-side reader's full poll loop against the real client:
+def test_shard_drain_end_to_end_on_real_botocore_pipeline(monkeypatch, tmp_path):
+    """The streaming reader's full poll loop against the real client,
+    driven as the engine drives it (plan, then read each partition):
     list_shards → get_shard_iterator → get_records pages → a closed
     shard's final page (no NextShardIterator) fences SHARD_END."""
+    import watermill_kinesis_spark.sources.kinesis_aws as mod
+
     c = _client()
-    r = KinesisAwsStreamReader({"streamname": "s", "clientfactory": "x:y"})
-    r._client_obj = c
+    monkeypatch.setattr(mod, "_make_client", lambda options: c)
+    r = KinesisAwsParallelStreamReader(
+        {"streamname": "s", "positiondir": str(tmp_path / "pos")}
+    )
     with Stubber(c) as stub:
-        # initialOffset lists shards once; read() re-lists (mid-stream
-        # shard pickup) before polling
+        # initialOffset and latestOffset each list shards (mid-stream
+        # shard pickup) before the partition is read
         for _ in range(2):
             stub.add_response(
                 "list_shards",
@@ -207,15 +213,19 @@ def test_simple_reader_end_to_end_on_real_botocore_pipeline():
             {"ShardIterator": "itA", "Limit": 1000},
         )
         # closed + drained: the service returns a null NextShardIterator
-        # (botocore omits the key) → reader tombstones SHARD_END
+        # (botocore omits the key) → the reader fences SHARD_END
         stub.add_response(
             "get_records",
             {"Records": [], "MillisBehindLatest": 0},
             {"ShardIterator": "itB", "Limit": 1000},
         )
-        rows, off = r.read(r.initialOffset())
-    assert [t[0] for t in rows] == ["r1", "r2"]
-    assert off["shards"]["shardId-000000000000"] == SHARD_END
+        start = r.initialOffset()
+        (part,) = r.partitions(start, r.latestOffset())
+        batches = list(r.read(part))
+        stub.assert_no_pending_responses()
+    assert [d for b in batches for d in b.column("data").to_pylist()] == ["r1", "r2"]
+    r._merge_fences()
+    assert r._pos["shardId-000000000000"] == SHARD_END
 
 
 def test_publisher_partial_failure_retry_on_real_pipeline(monkeypatch):
@@ -275,11 +285,12 @@ def test_publisher_partial_failure_retry_on_real_pipeline(monkeypatch):
     assert n == 2
 
 
-def test_expired_iterator_refreshes_at_last_position():
+def test_expired_iterator_refreshes_at_last_position(monkeypatch):
     """A stalled consumer's iterator ages out (~5 min validity); the
     poll path must mint a fresh iterator AT THE LAST CONSUMED
     POSITION and continue — losing nothing, replaying nothing —
     instead of failing the task (the KCL's internal refresh)."""
+    import watermill_kinesis_spark.sources.kinesis_aws as mod
     from watermill_kinesis_spark.sources.kinesis_aws import (
         _get_records_refreshing,
     )
@@ -317,6 +328,67 @@ def test_expired_iterator_refreshes_at_last_position():
         resp = _get_records_refreshing(c, "s", "sh", "stale-it", "41", 7)
         stub.assert_no_pending_responses()
     assert [r["SequenceNumber"] for r in resp["Records"]] == ["42"]
+
+    # the batch (backfill) reader drains through the same loop: an
+    # iterator that expires mid-drain is refreshed after record 41
+    r = KinesisAwsBatchReader({"streamname": "s", "maxrecords": "7"})
+    monkeypatch.setattr(mod, "_make_client", lambda options: c)
+    with Stubber(c) as stub:
+        stub.add_response(
+            "list_shards", {"Shards": [_shard("sh")]}, {"StreamName": "s"}
+        )
+        stub.add_response(
+            "get_shard_iterator",
+            {"ShardIterator": "it0"},
+            {"StreamName": "s", "ShardId": "sh", "ShardIteratorType": "TRIM_HORIZON"},
+        )
+        stub.add_response(
+            "get_records",
+            {
+                "Records": [
+                    {"SequenceNumber": "41", "Data": b"a", "PartitionKey": "k"}
+                ],
+                "NextShardIterator": "stale-it",
+                "MillisBehindLatest": 10,
+            },
+            {"ShardIterator": "it0", "Limit": 7},
+        )
+        stub.add_client_error(
+            "get_records",
+            service_error_code="ExpiredIteratorException",
+            service_message="Iterator expired",
+            http_status_code=400,
+        )
+        stub.add_response(
+            "get_shard_iterator",
+            {"ShardIterator": "fresh"},
+            {
+                "StreamName": "s",
+                "ShardId": "sh",
+                "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
+                "StartingSequenceNumber": "41",
+            },
+        )
+        stub.add_response(
+            "get_records",
+            {
+                "Records": [
+                    {"SequenceNumber": "42", "Data": b"b", "PartitionKey": "k"}
+                ],
+                "NextShardIterator": "n1",
+                "MillisBehindLatest": 0,
+            },
+            {"ShardIterator": "fresh", "Limit": 7},
+        )
+        stub.add_response(
+            "get_records",
+            {"Records": [], "NextShardIterator": "n2", "MillisBehindLatest": 0},
+            {"ShardIterator": "n1", "Limit": 7},
+        )
+        (part,) = r.partitions()
+        batches = list(r.read(part))
+        stub.assert_no_pending_responses()
+    assert [d for b in batches for d in b.column("data").to_pylist()] == ["a", "b"]
 
 
 def test_expired_iterator_double_expiry_propagates(monkeypatch):

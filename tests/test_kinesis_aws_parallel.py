@@ -1,5 +1,4 @@
-"""kinesis_aws parallel reader (`readerMode=parallel`, the default):
-one InputPartition per shard, GetRecords on executors, executor→driver
+"""kinesis_aws streaming reader: one InputPartition per shard, GetRecords on executors, executor→driver
 position fences — the 100 TB read path. Exercised against the
 file-backed stub so executor python workers see the same stream state
 as the driver (the reference's own fake-the-producer strategy,
@@ -12,7 +11,6 @@ import os
 from watermill_kinesis_spark.sources.kinesis_aws import (
     SHARD_END,
     KinesisAwsParallelStreamReader,
-    KinesisAwsStreamReader,
 )
 from watermill_kinesis_spark.sources.kinesis_stub import FileStubKinesisClient
 
@@ -159,27 +157,8 @@ def test_reshard_tombstone_and_pickup(tmp_path):
     assert "shardId-000000000000" not in {p.shard_id for p in parts3}
 
 
-def test_simple_and_parallel_read_identical_data(tmp_path):
-    """Replay parity: both readers over the same stream state produce
-    the same multiset of wire rows."""
-    client, rp = _mk(tmp_path)
-    _fill(client, n=8)
-    simple = KinesisAwsStreamReader(
-        {
-            "streamname": "s",
-            "clientfactory": "watermill_kinesis_spark.sources.kinesis_stub:file_stub_client",
-            "stubdir": client._dir,
-        }
-    )
-    simple._client_obj = client
-    s_rows, _ = simple.read(simple.initialOffset())
-    p_rows, _, _ = _run_batch(rp, rp.initialOffset())
-    key = lambda t: (t[3], t[2])  # (shard, seq)
-    assert sorted(s_rows, key=key) == sorted(p_rows, key=key)
-
-
 def test_end_to_end_readstream_parallel(spark, tmp_path):
-    """Full engine path: spark.readStream with readerMode=parallel —
+    """Full engine path: spark.readStream.format('kinesis_aws') —
     GetRecords runs in executor workers (proven by the file-backed
     stub being the only shared channel), checkpointed, codec-decoded,
     corrupt record skipped."""
@@ -371,35 +350,24 @@ def test_stop_preserves_explicit_positiondir_fences(tmp_path):
 
 
 def test_reader_mode_switch_offsets_compatible(tmp_path):
-    """Offsets written by one reader mode must resume correctly in the
-    other (same checkpoint, readerMode flipped): simple → parallel and
-    parallel → simple both continue without loss or re-read."""
+    """An offset without an "epoch" key — the shape a checkpoint
+    written by the former driver-side reader mode holds — resumes
+    without loss or re-read."""
     client, rp = _mk(tmp_path)
     _fill(client, n=4)
-    simple = KinesisAwsStreamReader(
-        {
-            "streamname": "s",
-            "clientfactory": "watermill_kinesis_spark.sources.kinesis_stub:file_stub_client",
-            "stubdir": client._dir,
-        }
-    )
-    simple._client_obj = client
-
-    # simple consumes the backlog; its offset feeds the parallel reader
-    rows, simple_off = simple.read(simple.initialOffset())
-    assert len(rows) == 4
+    # the backlog was consumed and committed as {shards, init} only
+    logged = {
+        "shards": {
+            sid: client._shards[sid][-1]["SequenceNumber"]
+            for sid in ("shardId-000000000000", "shardId-000000000001")
+        },
+        "init": None,
+    }
     client.put("shardId-000000000000", "after-switch")
     end = rp.latestOffset()
-    parts = rp.partitions(simple_off, end)  # no "epoch" key in start
+    parts = rp.partitions(logged, end)  # no "epoch" key in start
     got = [t[0] for p in parts for t in _tuples(rp.read(p))]
     assert got == ["after-switch"]
-
-    # parallel's committed offset (epoch + positions) feeds simple
-    rp._merge_fences()
-    par_off = {"epoch": 99, "shards": dict(rp._pos)}
-    client.put("shardId-000000000001", "back-on-simple")
-    rows2, _ = simple.read(par_off)  # extra "epoch" key ignored
-    assert [t[0] for t in rows2] == ["back-on-simple"]
 
 
 def test_vanished_shard_tombstones_other_errors_raise(tmp_path):
@@ -427,6 +395,10 @@ def test_vanished_shard_tombstones_other_errors_raise(tmp_path):
 
     import watermill_kinesis_spark.sources.kinesis_aws as ka
 
+    # the batch (backfill) reader drains through the same loop
+    batch = ka.KinesisAwsBatchReader(r.options)
+    batch_parts = batch.partitions()
+
     orig = ka._make_client
     try:
         ka._make_client = lambda opts: _Gone(opts["stubdir"])
@@ -438,10 +410,13 @@ def test_vanished_shard_tombstones_other_errors_raise(tmp_path):
         fence = [f for f in oslib.listdir(r._fence_dir) if parts[0].shard_id in f]
         with open(oslib.path.join(r._fence_dir, fence[0])) as f:
             assert jsonlib.load(f)["pos"] == "SHARD_END"
+        assert _tuples(batch.read(batch_parts[0])) == []
 
         ka._make_client = lambda opts: _Broken(opts["stubdir"])
         with pytest.raises(RuntimeError, match="auth failure"):
             _tuples(r.read(parts[1]))
+        with pytest.raises(RuntimeError, match="auth failure"):
+            _tuples(batch.read(batch_parts[1]))
     finally:
         ka._make_client = orig
 
@@ -742,25 +717,6 @@ def test_split_defers_children_until_parent_drained(tmp_path):
     # no batch ever interleaved child records before the parent's tail
     all_rows = [t[0] for t in rows1 + rows2 + rows3]
     assert all_rows.index("c0") > all_rows.index("p-final")
-
-
-def test_split_ordering_simple_reader(tmp_path):
-    """Same TERMINATE ordering through the simple (driver-side)
-    reader: children wait for the parent's SHARD_END tombstone."""
-    stub_dir = str(tmp_path / "stub")
-    client = FileStubKinesisClient(stub_dir)
-    r = KinesisAwsStreamReader({"streamname": "s", "clientfactory": "x:y"})
-    r._client_obj = client
-    client.put("shardId-000000000000", "p0", partition_key="k")
-    client.split_shard("shardId-000000000000", "shardId-000000000002")
-    client.put("shardId-000000000002", "c0", partition_key="k")
-    rows1, off1 = r.read(r.initialOffset())
-    # parent drains fully (p0 then SHARD_END); child deferred
-    assert [t[0] for t in rows1] == ["p0"]
-    assert off1["shards"]["shardId-000000000000"] == SHARD_END
-    assert "shardId-000000000002" not in off1["shards"]
-    rows2, off2 = r.read(off1)
-    assert [t[0] for t in rows2] == ["c0"]
 
 
 def test_merge_child_waits_for_adjacent_parent_unit():

@@ -8,10 +8,12 @@ import json
 
 import pytest
 
+import watermill_kinesis_spark.sources.kinesis_aws as ka
 from watermill_kinesis_spark.sources.kinesis_aws import (
     SHARD_END,
-    KinesisAwsStreamReader,
-    _list_shard_ids,
+    KinesisAwsBatchReader,
+    KinesisAwsParallelStreamReader,
+    _list_shards,
 )
 from watermill_kinesis_spark.sources.kinesis_stub import (
     StubKinesisClient,
@@ -19,12 +21,30 @@ from watermill_kinesis_spark.sources.kinesis_stub import (
 )
 
 
-def _reader(client, **opts):
-    options = {"streamname": "s"}
-    options.update({k.lower(): v for k, v in opts.items()})
-    r = KinesisAwsStreamReader(options)
-    r._client_obj = client
-    return r
+@pytest.fixture
+def reader_on(monkeypatch, tmp_path):
+    """Build a streaming reader whose driver and executor sides both
+    talk to one in-memory stub client."""
+
+    def make(client, **opts):
+        monkeypatch.setattr(ka, "_make_client", lambda options: client)
+        options = {"streamname": "s", "positiondir": str(tmp_path / "pos")}
+        options.update({k.lower(): v for k, v in opts.items()})
+        return KinesisAwsParallelStreamReader(options)
+
+    return make
+
+
+def _tuples(batches):
+    """Flatten the reader's Arrow batches back to wire tuples."""
+    return [t for b in batches for t in zip(*(c.to_pylist() for c in b.columns))]
+
+
+def _batch(r, start):
+    """One micro-batch as the engine runs it: plan, then read every
+    shard partition; returns the wire rows and the planned end offset."""
+    end = r.latestOffset()
+    return [t for p in r.partitions(start, end) for t in _tuples(r.read(p))], end
 
 
 def _fill(client, n=6):
@@ -32,66 +52,47 @@ def _fill(client, n=6):
         client.put(f"shardId-{i % 2:012d}", f"d{i}", partition_key=f"k{i % 2}")
 
 
-def test_trim_horizon_reads_all_then_drains():
+def test_trim_horizon_reads_all_then_drains(reader_on):
     c = StubKinesisClient()
     _fill(c)
-    r = _reader(c)
+    r = reader_on(c)
     start = r.initialOffset()
     assert set(start["shards"]) == {"shardId-000000000000", "shardId-000000000001"}
     assert all(v is None for v in start["shards"].values())
 
-    rows, end = r.read(start)
+    rows, end = _batch(r, start)
     assert len(rows) == 6
     # rows carry decoded data + shard + sequence + key + arrival slot
     datas = sorted(row[0] for row in rows)
     assert datas == [f"d{i}" for i in range(6)]
     assert all(row[3].startswith("shardId-") for row in rows)
-    # offsets advanced to each shard's last sequence
-    assert all(v is not None for v in end["shards"].values())
 
-    rows2, end2 = r.read(end)
-    assert rows2 == [] and end2 == end  # caught up: no progress, no rows
+    rows2, end2 = _batch(r, end)
+    assert rows2 == []  # caught up: no rows
+    # the next plan carries each shard's last sequence (via the fences)
+    assert all(v is not None for v in end2["shards"].values())
 
     c.put("shardId-000000000000", "d6", partition_key="k0")
-    rows3, end3 = r.read(end2)
+    rows3, _ = _batch(r, end2)
     assert [row[0] for row in rows3] == ["d6"]
 
 
-def test_latest_skips_backlog():
+def test_latest_skips_backlog(reader_on):
     c = StubKinesisClient()
     _fill(c)
-    r = _reader(c, startingPosition="LATEST")
-    start = r.initialOffset()
-    rows, end = r.read(start)
+    r = reader_on(c, startingPosition="LATEST")
+    rows, end = _batch(r, r.initialOffset())
     assert rows == []  # backlog skipped
     c.put("shardId-000000000001", "fresh")
-    rows2, _ = r.read(end)
+    rows2, _ = _batch(r, end)
     assert [row[0] for row in rows2] == ["fresh"]
 
 
-def test_read_between_offsets_replays_exact_range():
+def test_reshard_new_shard_picked_up_and_closed_shard_tombstoned(reader_on):
     c = StubKinesisClient()
     _fill(c, n=4)
-    r = _reader(c)
-    start = r.initialOffset()
-    rows, mid = r.read(start)
-    c.put("shardId-000000000000", "late-a")
-    c.put("shardId-000000000001", "late-b")
-    rows2, end = r.read(mid)
-    assert sorted(row[0] for row in rows2) == ["late-a", "late-b"]
-
-    # the crash-replay path must reproduce each batch exactly
-    replay1 = list(r.readBetweenOffsets(start, mid))
-    assert sorted(x[0] for x in replay1) == sorted(x[0] for x in rows)
-    replay2 = list(r.readBetweenOffsets(mid, end))
-    assert sorted(x[0] for x in replay2) == ["late-a", "late-b"]
-
-
-def test_reshard_new_shard_picked_up_and_closed_shard_tombstoned():
-    c = StubKinesisClient()
-    _fill(c, n=4)
-    r = _reader(c)
-    rows, off = r.read(r.initialOffset())
+    r = reader_on(c)
+    rows, off = _batch(r, r.initialOffset())
     assert len(rows) == 4
 
     # split: a new shard appears, the old one closes after a last record
@@ -100,23 +101,23 @@ def test_reshard_new_shard_picked_up_and_closed_shard_tombstoned():
     c.put("shardId-000000000000", "final-on-old")
     c.close_shard("shardId-000000000000")
 
-    rows2, off2 = r.read(off)
+    rows2, off2 = _batch(r, off)
     assert sorted(row[0] for row in rows2) == ["final-on-old", "from-new-shard"]
+
+    rows3, off3 = _batch(r, off2)
+    assert rows3 == []
     # the closed shard drained → tombstone (TERMINATE checkpoint,
     # reference subscriber.go:78-88); the new shard has a live offset
-    assert off2["shards"]["shardId-000000000000"] == SHARD_END
-    assert off2["shards"]["shardId-000000000002"] is not None
-
-    rows3, off3 = r.read(off2)
-    assert rows3 == []
     assert off3["shards"]["shardId-000000000000"] == SHARD_END
+    assert off3["shards"]["shardId-000000000002"] is not None
 
 
 def test_options_validation():
-    with pytest.raises(ValueError, match="streamName"):
-        KinesisAwsStreamReader({})
-    with pytest.raises(ValueError, match="startingPosition"):
-        KinesisAwsStreamReader({"streamname": "s", "startingposition": "AT_DAWN"})
+    for reader in (KinesisAwsParallelStreamReader, KinesisAwsBatchReader):
+        with pytest.raises(ValueError, match="streamName"):
+            reader({})
+        with pytest.raises(ValueError, match="startingPosition"):
+            reader({"streamname": "s", "startingposition": "AT_DAWN"})
 
 
 def test_list_shards_paginates():
@@ -127,7 +128,7 @@ def test_list_shards_paginates():
             assert NextToken == "t1"
             return {"Shards": [{"ShardId": "b"}]}
 
-    assert _list_shard_ids(Paged(), "s") == ["a", "b"]
+    assert [s["ShardId"] for s in _list_shards(Paged(), "s")] == ["a", "b"]
 
 
 def test_subscriber_builder_kinesis_transport(spark, tmp_path):
@@ -229,7 +230,7 @@ def test_kpl_aggregate_roundtrip():
     assert not kpl.is_aggregated(b"plain bytes")
 
 
-def test_kpl_deaggregation_through_source():
+def test_kpl_deaggregation_through_source(reader_on):
     """A KPL-packed Kinesis record explodes into per-user-record wire
     rows with sub-sequence numbers; plain records pass through; a
     corrupt container degrades to a single (droppable) row."""
@@ -249,17 +250,20 @@ def test_kpl_deaggregation_through_source():
          "ApproximateArrivalTimestamp": None}
     )
 
-    r = _reader(c)
-    rows, end = r.read(r.initialOffset())
+    r = reader_on(c)
+    start = r.initialOffset()
+    end = r.latestOffset()
+    (part,) = r.partitions(start, end)
+    rows = _tuples(r.read(part))
     datas = [row[0] for row in rows]
     assert datas[:3] == ["sub-a", "sub-b", "sub-c"]
     assert [row[2] for row in rows[:3]] == ["100:0", "100:1", "100:2"]
     assert [row[1] for row in rows[:3]] == ["k1", "k2", "k1"]
     assert "plain-record" in datas
     assert len(rows) == 5  # 3 subs + plain + corrupt-container fallback row
-    # offsets track the CONTAINER sequence, so replay reproduces subs
-    replay = list(r.readBetweenOffsets(r.initialOffset(), end))
-    assert [row[0] for row in replay] == datas
+    # positions track the CONTAINER sequence, so a retried task
+    # replaying to the fence reproduces the subs
+    assert [row[0] for row in _tuples(r.read(part))] == datas
 
 
 def test_kpl_pack_publish_consume_full_cycle():

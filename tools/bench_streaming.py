@@ -13,9 +13,8 @@ numbers, not hand-waving:
   pubsub_e2e      publish to a topic dir + streaming read-back with
                   checkpoint (the full subscribe path incl. decode)
   kinesis_aws_parallel_read
-                  spark.readStream.format('kinesis_aws') in the
-                  default executor-parallel readerMode against the
-                  file-backed stub (GetRecords on executor python
+                  spark.readStream.format('kinesis_aws') (executor-
+                  parallel GetRecords) against the file-backed stub (GetRecords on executor python
                   workers, position fences, decode) — the 100 TB read
                   path, previously correctness-tested but unmeasured
 
@@ -141,7 +140,7 @@ def main() -> None:
     results["kinesis_aws_parallel_read_msgs_per_s"] = _bench_kinesis_parallel(
         spark, base
     )
-    results["kinesis_aws_simple_read_msgs_per_s"] = _bench_kinesis_simple(base)
+    results["kinesis_aws_poll_loop_msgs_per_s"] = _bench_kinesis_poll_loop(base)
     results.update(
         _bench_kinesis_sustained(spark, base, "sustained", 8, 20_000, 1000)
     )
@@ -165,18 +164,17 @@ KINESIS_BENCH_SHARDS = 8
 KINESIS_BENCH_PER_SHARD = 5000
 
 
-def _bench_kinesis_simple(base: str) -> int:
-    """Time the DRIVER-side poll loop (readerMode=simple) over an
-    IN-MEMORY stub seeded with the same stream: read() drains all
-    shards sequentially in one process — the per-record
-    GetRecords→wire-row cost with zero Spark machinery AND zero stub
-    file-reload overhead (the file-backed stub re-parses its whole
-    state per call, which would swamp the number), isolating
+def _bench_kinesis_poll_loop(base: str) -> int:
+    """Time the shard poll loop (``_drain_shard``, the loop every
+    kinesis_aws reader runs) over an IN-MEMORY stub seeded with the
+    same stream, draining all shards sequentially in one process — the
+    per-record GetRecords→wire-row cost with zero Spark machinery AND
+    zero stub file-reload overhead (the file-backed stub re-parses its
+    whole state per call, which would swamp the number), isolating
     transport-loop cost from the parallel row's micro-batch tax."""
-    import json as _json
-
     from watermill_kinesis_spark.sources.kinesis_aws import (
-        KinesisAwsStreamReader,
+        _drain_shard,
+        _list_shards,
     )
     from watermill_kinesis_spark.sources.kinesis_stub import (
         FileStubKinesisClient,
@@ -187,22 +185,14 @@ def _bench_kinesis_simple(base: str) -> int:
     seeded = FileStubKinesisClient(stub_dir)
     mem = StubKinesisClient()
     mem.copy_state_from(seeded)
-    r = KinesisAwsStreamReader(
-        {"streamname": "bench", "clientfactory": "x:y", "maxrecords": "1000"}
-    )
-    r._client_obj = mem
     t0 = time.perf_counter()
     total = 0
-    off = r.initialOffset()
-    while True:
-        rows, off = r.read(off)
-        rows = list(rows)
-        if not rows:
-            break
-        total += len(rows)
+    for shard in _list_shards(mem, "bench"):
+        for rows, _ in _drain_shard(mem, "bench", shard["ShardId"], None, 1000):
+            total += len(rows)
     dt = time.perf_counter() - t0
     n = KINESIS_BENCH_SHARDS * KINESIS_BENCH_PER_SHARD
-    assert total == n, f"simple read lost rows: {total}/{n}"
+    assert total == n, f"poll loop lost rows: {total}/{n}"
     return round(n / dt)
 
 

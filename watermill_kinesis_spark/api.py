@@ -203,11 +203,8 @@ class _SubscriberOptions:
     starting_position: str = "TRIM_HORIZON"
     #: override the boto3 client for tests: "module:callable"
     client_factory: str | None = None
-    #: "parallel" (GetRecords on executors, the scale path) or
-    #: "simple" (driver-side fetch) — kinesis transport only
-    reader_mode: str = "parallel"
-    #: shared dir for the parallel reader's position fences (must be
-    #: visible to driver AND executors on a multi-node cluster)
+    #: shared dir for the reader's position fences (must be visible to
+    #: driver AND executors on a multi-node cluster)
     position_dir: str | None = None
 
 
@@ -225,49 +222,50 @@ class Subscriber:
     def _topic_dir(self, topic: str) -> str:
         return os.path.join(self._opts.endpoint, topic)
 
-    def subscribe(self, spark: SparkSession, topic: str) -> DataFrame:
-        """Unbounded message stream for the topic (reference Subscribe,
-        subscriber/subscriber.go:46-75): wire records via the
-        kinesis_sim streaming source, unmarshalled to messages. Start
-        it with ``writeStream`` (track with ``track`` to let ``close``
-        manage the query)."""
+    def _wire(self, spark: SparkSession, reader, topic: str) -> DataFrame:
+        """Load the topic's wire records from this subscriber's
+        transport through ``reader`` (``spark.read`` or
+        ``spark.readStream``)."""
         opts = self._opts
         if opts.transport == "kinesis":
             from watermill_kinesis_spark.sources import kinesis_aws
 
             kinesis_aws.register(spark)
             reader = (
-                spark.readStream.format(kinesis_aws.FORMAT_NAME)
+                reader.format(kinesis_aws.FORMAT_NAME)
                 .option("streamName", topic)
                 .option("startingPosition", opts.starting_position)
             )
-            if opts.kinesis_region:
-                reader = reader.option("regionName", opts.kinesis_region)
-            if opts.kinesis_endpoint_url:
-                reader = reader.option("endpointUrl", opts.kinesis_endpoint_url)
-            if opts.client_factory:
-                reader = reader.option("clientfactory", opts.client_factory)
-            reader = reader.option("readerMode", opts.reader_mode)
-            if opts.position_dir:
-                reader = reader.option("positionDir", opts.position_dir)
-            return opts.unmarshaller(reader.load())
+            for key, value in (
+                ("regionName", opts.kinesis_region),
+                ("endpointUrl", opts.kinesis_endpoint_url),
+                ("clientfactory", opts.client_factory),
+                ("positionDir", opts.position_dir),
+            ):
+                if value:
+                    reader = reader.option(key, value)
+            return reader.load()
         kinesis_sim.register(spark)
-        wire = (
-            spark.readStream.format(kinesis_sim.FORMAT_NAME)
+        return (
+            reader.format(kinesis_sim.FORMAT_NAME)
             .option("path", self._topic_dir(topic))
             .load()
         )
-        return self._opts.unmarshaller(wire)
+
+    def subscribe(self, spark: SparkSession, topic: str) -> DataFrame:
+        """Unbounded message stream for the topic (reference Subscribe,
+        subscriber/subscriber.go:46-75): wire records from the
+        subscriber's transport — the ``kinesis_sim`` directory source,
+        or the ``kinesis_aws`` GetRecords source after
+        ``with_kinesis`` — unmarshalled to messages. Start it with
+        ``writeStream`` (track with ``track`` to let ``close`` manage
+        the query)."""
+        return self._opts.unmarshaller(self._wire(spark, spark.readStream, topic))
 
     def subscribe_batch(self, spark: SparkSession, topic: str) -> DataFrame:
-        """Bounded snapshot of the topic (one partition per shard)."""
-        kinesis_sim.register(spark)
-        wire = (
-            spark.read.format(kinesis_sim.FORMAT_NAME)
-            .option("path", self._topic_dir(topic))
-            .load()
-        )
-        return self._opts.unmarshaller(wire)
+        """Bounded snapshot of the topic (one partition per shard),
+        from the same transport as ``subscribe``."""
+        return self._opts.unmarshaller(self._wire(spark, spark.read, topic))
 
     def process(
         self,
@@ -355,7 +353,6 @@ class SubscriberBuilder:
         endpoint_url: str | None = None,
         starting_position: str = "TRIM_HORIZON",
         client_factory: str | None = None,
-        reader_mode: str = "parallel",
         position_dir: str | None = None,
     ) -> "SubscriberBuilder":
         """Consume real AWS Kinesis (topic = stream name) through the
@@ -364,9 +361,9 @@ class SubscriberBuilder:
         KCL-in-DynamoDB checkpoints (subscriber.go:114-128, 65-75).
         ``endpoint_url`` overrides for Localstack; ``client_factory``
         ("module:callable") injects a stub client for tests.
-        ``reader_mode='parallel'`` (default) runs GetRecords on
-        executors — one partition per shard; ``position_dir`` must
-        then be shared storage on a multi-node cluster."""
+        GetRecords runs on executors, one partition per shard; on a
+        multi-node cluster ``position_dir`` must be storage that driver
+        and executors share, like the query's checkpoint location."""
         self._opts = replace(
             self._opts,
             transport="kinesis",
@@ -374,7 +371,6 @@ class SubscriberBuilder:
             kinesis_endpoint_url=endpoint_url,
             starting_position=starting_position,
             client_factory=client_factory,
-            reader_mode=reader_mode,
             position_dir=position_dir,
         )
         return self

@@ -32,37 +32,32 @@ Rows come out in ``WIRE_RECORD_SCHEMA`` — identical to the simulator's
 — so everything downstream (codec, corrupt-skip, semantics, sinks) is
 transport-agnostic; ``codec.unmarshal`` turns them into messages.
 
-Two readers share the offset model; ``option("readerMode", ...)``
-picks one:
+Streaming reads plan one ``InputPartition`` per shard and run every
+``GetRecords`` call ON AN EXECUTOR. The driver does control-plane work
+only (one ``list_shards`` + merging tiny position-fence files per
+trigger), so read throughput scales with executors × shards — the
+100 TB path. Executors report attained positions through fence files
+under ``positionDir`` (the engine's DynamoDB-checkpoint analogue).
+Fence I/O goes through pyarrow's filesystem layer (``fencestore.py``)
+so ``positionDir`` accepts the same URI schemes as
+``checkpointLocation`` — file://, s3a://, hdfs://, gs:// — and works
+from executor Python workers, which have no JVM gateway for Hadoop's
+FileSystem API. It defaults to a DRIVER-LOCAL temp dir, valid only on
+local[n]; on a multi-node cluster point it at storage shared by driver
+and executors (NFS/EFS, s3a://, hdfs://), next to the checkpoint — a
+loud warning fires at start when the default is used, and the driver
+hard-fails (rather than silently re-reading the same window forever)
+if planned batches never surface a fence. The first attempt of a
+(epoch, shard) task records its attained position as the fence; task
+RETRIES replay deterministically up to that fence. Losing the fence
+dir costs nothing but replay width: positions live in Spark's offset
+log, so the contract degrades to the same at-least-once window the
+reference has.
 
-- ``parallel`` (default) — a partition-planning
-  ``DataSourceStreamReader``: one ``InputPartition`` per shard, every
-  ``GetRecords`` call runs ON AN EXECUTOR. The driver does
-  control-plane work only (one ``list_shards`` + merging tiny
-  position-fence files per trigger), so read throughput scales with
-  executors × shards — the 100 TB path. Executors report attained
-  positions through fence files under ``positionDir`` (the engine's
-  DynamoDB-checkpoint analogue). Fence I/O goes through pyarrow's
-  filesystem layer (``fencestore.py``) so ``positionDir`` accepts the
-  same URI schemes as ``checkpointLocation`` — file://, s3a://,
-  hdfs://, gs:// — and works from executor Python workers, which have
-  no JVM gateway for Hadoop's FileSystem API. It defaults to a
-  DRIVER-LOCAL temp dir, valid only on local[n]; on a multi-node
-  cluster point it at storage shared by driver and executors
-  (NFS/EFS, s3a://, hdfs://) — a loud warning fires at start when the
-  default is used, and the driver hard-fails (rather than silently
-  re-reading the same window forever) if planned batches never
-  surface a fence. The first attempt of a (epoch,
-  shard) task records its attained position as the fence; task
-  RETRIES replay deterministically up to that fence. Losing the
-  fence dir costs nothing but replay width: positions live in
-  Spark's offset log, so the contract degrades to the same
-  at-least-once window the reference has.
-- ``simple`` — a ``SimpleDataSourceStreamReader``: fetch on the
-  driver with prefetch-cache replay (``readBetweenOffsets``
-  re-fetches the exact (start, end] range). Right-sized for
-  control-plane streams at the reference's own deployment shape
-  (~10 shards/worker, reference README.md:30-32).
+The streaming reader and the batch (backfill) reader drain a shard
+through one poll loop, :func:`_drain_shard`: throttle backoff,
+expired-iterator refresh at the last consumed position, vanished-shard
+tombstoning and SHARD_END detection are the same for both.
 
 ``boto3`` is imported lazily. Tests (and Localstack-free CI) inject a
 client via ``option("clientfactory", "module:callable")`` — mirroring
@@ -86,7 +81,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -154,10 +148,6 @@ def _list_shards(client, stream: str) -> list[dict]:
         if not token:
             return sorted(shards, key=lambda s: s["ShardId"])
         kwargs = {"NextToken": token}
-
-
-def _list_shard_ids(client, stream: str) -> list[str]:
-    return [s["ShardId"] for s in _list_shards(client, stream)]
 
 
 def _admit_new_shards(
@@ -389,12 +379,68 @@ def _max_pos(a: str | None, b: str | None) -> str | None:
     return a if _pos_rank(a) >= _pos_rank(b) else b
 
 
-class KinesisAwsStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side GetRecords poller with per-shard position offsets
-    (``readerMode=simple``; see module docstring)."""
+def _drain_shard(
+    client,
+    stream: str,
+    shard_id: str,
+    start_pos: str | None,
+    max_records: int,
+    *,
+    max_polls: int | None = None,
+    target: str | None = None,
+) -> Iterator[tuple[list[tuple], str | None]]:
+    """The one GetRecords loop: polls ``shard_id`` from ``start_pos``
+    and yields ``(wire_rows, attained)`` per page, ``attained`` being
+    the position after that page. Stops at the tip (an empty page with
+    ``MillisBehindLatest`` 0), after ``max_polls`` pages (None: no
+    budget), at the record whose sequence number is ``target`` (a
+    fenced replay), or at shard close, where ``attained`` becomes
+    ``SHARD_END`` (the TERMINATE checkpoint, reference
+    subscriber.go:78-88). A shard that vanished after listing (aged
+    past retention) also ends at ``SHARD_END``; any other iterator
+    failure (auth, throttle, network) raises — silent data loss is
+    worse than a dead task."""
+    try:
+        it = _get_iterator(client, stream, shard_id, start_pos)
+    except Exception as e:
+        if type(e).__name__ != "ResourceNotFoundException":
+            raise
+        it = None
+    if not it:
+        yield [], SHARD_END
+        return
+    attained = start_pos
+    polls = 0
+    while max_polls is None or polls < max_polls:
+        polls += 1
+        resp = _get_records_refreshing(
+            client, stream, shard_id, it, attained, max_records
+        )
+        recs = resp.get("Records", [])
+        rows: list[tuple] = []
+        for rec in recs:
+            rows.extend(_record_rows(rec, shard_id))
+            attained = rec["SequenceNumber"]
+            if attained == target:
+                yield rows, attained
+                return
+        it = resp.get("NextShardIterator")
+        if not it:
+            yield rows, SHARD_END  # closed shard fully drained
+            return
+        yield rows, attained
+        if not recs and not resp.get("MillisBehindLatest"):
+            return  # caught up; the next trigger continues
+
+
+class _KinesisReader:
+    """Options and the driver-side client shared by the streaming and
+    batch readers. The client is created on first use, after Spark has
+    pickled the reader for its executors, so no client handle is ever
+    pickled; executors build their own through ``_make_client``."""
 
     def __init__(self, options):
-        self.options = options
+        self.options = dict(options)
         self.stream = options.get("streamname")
         if not self.stream:
             raise ValueError(
@@ -414,154 +460,43 @@ class KinesisAwsStreamReader(SimpleDataSourceStreamReader):
             self._client_obj = _make_client(self.options)
         return self._client_obj
 
-    # -- offset protocol ---------------------------------------------
-
     def _initial_pos(self) -> str | None:
         if self.starting_position == "TRIM_HORIZON":
             return None  # "from the shard's oldest record"
-        # LATEST: pin "now" as a service-side timestamp. O(1) — the
-        # previous design scanned from TRIM_HORIZON with a poll cap,
-        # which cost O(shard retention) GetRecords at startup and, on
-        # a shard holding more than the cap, silently REPLAYED a
-        # mid-shard backlog. AT_TIMESTAMP re-resolves identically on
-        # restart, so the offset stays deterministic.
+        # LATEST: pin "now" as a service-side timestamp. O(1), and
+        # AT_TIMESTAMP re-resolves identically on restart, so the
+        # offset stays deterministic — scanning from TRIM_HORIZON would
+        # cost O(shard retention) GetRecords at startup.
         return f"{AT_TS_PREFIX}{time.time()}"
-
-    def initialOffset(self) -> dict:
-        client = self._client()
-        pos = self._initial_pos()
-        state: dict[str, str | None] = {}
-        # parent-gated even at t0: a listing taken right after a split
-        # still carries the drained-later parent; children wait for its
-        # SHARD_END like any mid-stream pickup. "init" pins the start
-        # position so deferred children later enter at the SAME pin
-        # (AT_TS) instead of TRIM_HORIZON.
-        _admit_new_shards(state, _list_shards(client, self.stream), pos)
-        return {"shards": state, "init": pos}
-
-    def _iterator_after(self, client, shard_id: str, seq: str | None) -> str | None:
-        return _get_iterator(client, self.stream, shard_id, seq)
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        client = self._client()
-        state: dict[str, str | None] = dict(start.get("shards", {}))
-        # reshard pickup, parent-gated (KCL TERMINATE ordering): a
-        # child enters only after its parent drained to SHARD_END, at
-        # the query's pinned initial position (≡ TRIM_HORIZON for
-        # post-start children)
-        _admit_new_shards(
-            state, _list_shards(client, self.stream), start.get("init")
-        )
-        rows: list[tuple] = []
-        for shard_id in sorted(state):
-            seq = state[shard_id]
-            if seq == SHARD_END:
-                continue
-            it = self._iterator_after(client, shard_id, seq)
-            if not it:
-                state[shard_id] = SHARD_END
-                continue
-            for _ in range(MAX_POLLS_PER_BATCH):
-                resp = _get_records_refreshing(
-                    client, self.stream, shard_id, it,
-                    state[shard_id], self.max_records,
-                )
-                recs = resp.get("Records", [])
-                for rec in recs:
-                    rows.extend(_record_rows(rec, shard_id))
-                if recs:
-                    state[shard_id] = recs[-1]["SequenceNumber"]
-                it = resp.get("NextShardIterator")
-                if not it:
-                    # shard closed and drained: tombstone (TERMINATE
-                    # checkpoint, reference subscriber.go:78-88)
-                    state[shard_id] = SHARD_END
-                    break
-                if not recs and not resp.get("MillisBehindLatest"):
-                    break  # caught up; next trigger continues
-        # materialized list, not a generator: Spark's prefetch cache
-        # copy.copy()s the iterator for possible replay
-        return rows, {"shards": state, "init": start.get("init")}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        """Deterministic replay of the exact (start, end] range — the
-        restarted-query path after a crash between read and commit.
-        An ``AT_TS`` start replays from the same pinned timestamp, so
-        the range is identical to the original read's."""
-        client = self._client()
-        start_shards = start.get("shards", {})
-        rows: list[tuple] = []
-        for shard_id, end_seq in sorted(end.get("shards", {}).items()):
-            if end_seq is None:
-                continue  # shard had produced nothing by `end`
-            start_seq = start_shards.get(shard_id)
-            if end_seq == SHARD_END and start_seq == SHARD_END:
-                continue
-            if isinstance(end_seq, str) and end_seq.startswith(AT_TS_PREFIX):
-                continue  # LATEST pin unmoved ⇒ the range holds no records
-            it = self._iterator_after(
-                client, shard_id, None if start_seq == SHARD_END else start_seq
-            )
-            if not it:
-                continue
-            done = False
-            last = None if start_seq == SHARD_END else start_seq
-            while not done and it:
-                resp = _get_records_refreshing(
-                    client, self.stream, shard_id, it, last, self.max_records
-                )
-                recs = resp.get("Records", [])
-                for rec in recs:
-                    rows.extend(_record_rows(rec, shard_id))
-                    last = rec["SequenceNumber"]
-                    if end_seq != SHARD_END and rec["SequenceNumber"] == end_seq:
-                        done = True
-                        break
-                it = resp.get("NextShardIterator")
-                if not recs and not resp.get("MillisBehindLatest"):
-                    break
-        # MUST be an iterator (not a list): the checkpointed-replay
-        # path type-checks the return strictly
-        return iter(rows)
 
 
 class _ShardPartition(InputPartition):
-    """One Kinesis shard's work for one micro-batch. Carries everything
-    the executor needs (client factory options included) so ``read``
-    never depends on driver state."""
+    """One Kinesis shard's work for one micro-batch. Carries the
+    planning reader's run token and fence dir, so ``read`` (on a
+    separately unpickled reader) never depends on driver state."""
 
     def __init__(
         self,
         shard_id: str,
         start_pos: str | None,
         epoch: int,
-        options: dict,
-        stream: str,
         fence_dir: str,
-        max_records: int,
         run: str,
     ):
         self.shard_id = shard_id
         self.start_pos = start_pos
         self.epoch = epoch
-        self.options = options
-        self.stream = stream
         self.fence_dir = fence_dir
-        self.max_records = max_records
         self.run = run
 
 
-class KinesisAwsParallelStreamReader(DataSourceStreamReader):
+class KinesisAwsParallelStreamReader(_KinesisReader, DataSourceStreamReader):
     """Partition-planning reader: one ``InputPartition`` per shard,
-    ``GetRecords`` on executors (``readerMode=parallel``, the default —
-    see module docstring for the fence/offset protocol)."""
+    ``GetRecords`` on executors — see module docstring for the
+    fence/offset protocol."""
 
     def __init__(self, options):
-        # reuse the Simple reader's option validation + client cache
-        self._base = KinesisAwsStreamReader(options)
-        self.options = dict(options)
-        self.stream = self._base.stream
-        self.max_records = self._base.max_records
+        super().__init__(options)
         self._epoch = 0
         #: furthest-known position per shard (offset-log authoritative;
         #: fence files only carry it between executors and driver)
@@ -608,12 +543,12 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
             import logging
 
             logging.getLogger(__name__).warning(
-                "kinesis_aws readerMode=parallel is using a DRIVER-LOCAL "
-                "positionDir default (%s). This only works when executors "
-                "share the driver's filesystem (local[n]). On a multi-node "
-                "cluster, set .option('positionDir', <shared URI>) to "
-                "storage reachable by driver and executors (NFS/EFS, "
-                "s3a://, hdfs://) — like checkpointLocation.",
+                "kinesis_aws is using a DRIVER-LOCAL positionDir default "
+                "(%s). This only works when executors share the driver's "
+                "filesystem (local[n]). On a multi-node cluster, set "
+                ".option('positionDir', <shared URI>) to storage reachable "
+                "by driver and executors (NFS/EFS, s3a://, hdfs://) — like "
+                "checkpointLocation.",
                 self._fence_dir,
             )
         self._store = FenceStore(self._fence_dir)
@@ -621,21 +556,11 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
         #: fence file was last observed (see latestOffset)
         self._planned_since_fence = 0
 
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_base"] = None  # client handles don't pickle
-        return state
-
-    def _client(self):
-        if self._base is None:
-            self._base = KinesisAwsStreamReader(self.options)
-        return self._base._client()
-
     # -- offsets ------------------------------------------------------
 
     def initialOffset(self) -> dict:
         client = self._client()
-        pos = self._base._initial_pos()
+        pos = self._initial_pos()
         self._init_pos = pos
         self._pos = {}
         # parent-gated admission even at t0 (see _admit_new_shards)
@@ -732,10 +657,7 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
                 shard_id=shard,
                 start_pos=pos,
                 epoch=int(end.get("epoch", 0)),
-                options=self.options,
-                stream=self.stream,
                 fence_dir=self._fence_dir,
-                max_records=self.max_records,
                 run=self._run,
             )
             for shard, pos in sorted(merged.items())
@@ -749,7 +671,6 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _ShardPartition) -> Iterator:
         """Yields ``pyarrow.RecordBatch``es (see _rows_to_arrow_batches)."""
-        client = _make_client(partition.options)
         # FenceStore, not POSIX: read() runs in executor Python workers
         # (no JVM gateway), and positionDir may be a remote URI
         store = FenceStore(partition.fence_dir)
@@ -759,46 +680,19 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
         if target is not None and _pos_rank(target) <= _pos_rank(partition.start_pos):
             return iter(())  # fenced batch made no progress on this shard
         rows: list[tuple] = []
-        try:
-            it = _get_iterator(
-                client, partition.stream, partition.shard_id, partition.start_pos
-            )
-        except Exception as e:
-            # ONLY a vanished shard (aged past retention after close)
-            # tombstones — any other failure (auth, throttle, network)
-            # must fail the task loudly, never silently drop data
-            if type(e).__name__ != "ResourceNotFoundException":
-                raise
-            it = None
         attained = partition.start_pos
-        if not it:
-            attained = SHARD_END
-        else:
-            polls = 0
-            while it:
-                # fenced replay drains to the fence, first attempts
-                # respect the per-trigger poll budget
-                if target is None and polls >= MAX_POLLS_PER_BATCH:
-                    break
-                polls += 1
-                resp = _get_records_refreshing(
-                    client, partition.stream, partition.shard_id, it,
-                    attained, partition.max_records,
-                )
-                recs = resp.get("Records", [])
-                done = False
-                for rec in recs:
-                    rows.extend(_record_rows(rec, partition.shard_id))
-                    attained = rec["SequenceNumber"]
-                    if target not in (None, SHARD_END) and attained == target:
-                        done = True
-                        break
-                it = resp.get("NextShardIterator")
-                if not it:
-                    attained = SHARD_END  # closed shard fully drained
-                    break
-                if done or (not recs and not resp.get("MillisBehindLatest")):
-                    break
+        # fenced replay drains to the fence, first attempts respect the
+        # per-trigger poll budget
+        for page, attained in _drain_shard(
+            _make_client(self.options),
+            self.stream,
+            partition.shard_id,
+            partition.start_pos,
+            self.max_records,
+            max_polls=MAX_POLLS_PER_BATCH if target is None else None,
+            target=target,
+        ):
+            rows.extend(page)
         if target is None:
             # first attempt: record the fence so (a) the driver learns
             # the attained position at the next trigger and (b) task
@@ -840,14 +734,12 @@ class KinesisAwsParallelStreamReader(DataSourceStreamReader):
 
 
 class _BatchShardPartition(InputPartition):
-    def __init__(self, shard_id: str, start_pos: str | None, options: dict, stream: str):
+    def __init__(self, shard_id: str, start_pos: str | None):
         self.shard_id = shard_id
         self.start_pos = start_pos
-        self.options = options
-        self.stream = stream
 
 
-class KinesisAwsBatchReader(DataSourceReader):
+class KinesisAwsBatchReader(_KinesisReader, DataSourceReader):
     """Batch read of a Kinesis stream — drain each shard from the
     starting position to its current tip, one ``InputPartition`` per
     shard with all ``GetRecords`` on executors (the backfill/bootstrap
@@ -856,11 +748,7 @@ class KinesisAwsBatchReader(DataSourceReader):
     stops at ``MillisBehindLatest == 0`` or shard close; records
     arriving mid-scan land in the streaming phase instead."""
 
-    def __init__(self, options):
-        self._base = KinesisAwsStreamReader(options)  # validation + start pos
-        self.options = dict(options)
-        self.stream = self._base.stream
-        self._shard_filter: set[str] | None = None
+    _shard_filter: set[str] | None = None
 
     def pushFilters(self, filters):
         """Consume shard_id equality/IN filters: whole shard partitions
@@ -881,35 +769,26 @@ class KinesisAwsBatchReader(DataSourceReader):
         return iter(unsupported)
 
     def partitions(self) -> Sequence[InputPartition]:
-        client = self._base._client()
-        pos = self._base._initial_pos()
-        shards = _list_shard_ids(client, self.stream)
+        pos = self._initial_pos()
+        shards = [s["ShardId"] for s in _list_shards(self._client(), self.stream)]
         if self._shard_filter is not None:
             shards = [s for s in shards if s in self._shard_filter]
-        return [
-            _BatchShardPartition(s, pos, self.options, self.stream)
-            for s in shards
-        ]
+        return [_BatchShardPartition(s, pos) for s in shards]
 
     def read(self, partition: _BatchShardPartition) -> Iterator:
         """Yields ``pyarrow.RecordBatch``es (see _rows_to_arrow_batches)."""
-        client = _make_client(partition.options)
-        it = _get_iterator(
-            client, partition.stream, partition.shard_id, partition.start_pos
-        )
-        max_records = int(partition.options.get("maxrecords", "1000"))
         pending: list[tuple] = []
-        while it:
-            resp = _get_records_throttled(client, ShardIterator=it, Limit=max_records)
-            recs = resp.get("Records", [])
-            for rec in recs:
-                pending.extend(_record_rows(rec, partition.shard_id))
+        for page, _ in _drain_shard(
+            _make_client(self.options),
+            self.stream,
+            partition.shard_id,
+            partition.start_pos,
+            self.max_records,
+        ):
+            pending.extend(page)
             if len(pending) >= ARROW_BATCH_ROWS:
                 yield from _rows_to_arrow_batches(pending)
                 pending = []
-            it = resp.get("NextShardIterator")
-            if not recs and not resp.get("MillisBehindLatest"):
-                break  # at the tip: the batch ends here
         yield from _rows_to_arrow_batches(pending)
 
 
@@ -1013,24 +892,7 @@ class KinesisAwsDataSource(DataSource):
         return KinesisAwsStreamWriter(self.options)
 
     def streamReader(self, schema: StructType) -> KinesisAwsParallelStreamReader:
-        mode = (self.options.get("readermode") or "parallel").lower()
-        if mode == "simple":
-            # raising NOT_IMPLEMENTED makes Spark fall back to
-            # simpleStreamReader (the documented dispatch contract)
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
-        if mode != "parallel":
-            raise ValueError(
-                f"readerMode must be 'parallel' or 'simple', got {mode!r}"
-            )
         return KinesisAwsParallelStreamReader(self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> KinesisAwsStreamReader:
-        return KinesisAwsStreamReader(self.options)
 
 
 def register(spark) -> None:
