@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from watermill_kinesis_spark.api import (
@@ -42,8 +43,6 @@ def test_builder_wires_marshaller(tmp_path):
 
 
 def test_publisher_requires_endpoint():
-    import pytest
-
     with pytest.raises(ValueError):
         PublisherBuilder().build()
     with pytest.raises(ValueError):
@@ -96,6 +95,27 @@ def test_subscribe_batch_reads_the_kinesis_transport(spark):
     back = sub.subscribe_batch(spark, "demo-stream").collect()
     # five envelopes decoded, the corrupt record skipped
     assert sorted(r.uuid for r in back) == [f"uuid-{i}" for i in range(5)]
+
+
+@pytest.mark.parametrize("how", ["subscribe_batch", "subscribe"])
+def test_empty_topic_reads_zero_rows(spark, tmp_path, how):
+    """A topic nobody has published to reads as 0 rows, as a bounded
+    snapshot and as a stream (not PATH_NOT_FOUND)."""
+    sub = SubscriberBuilder().with_endpoint(str(tmp_path / "endpoint")).build()
+    if how == "subscribe_batch":
+        assert sub.subscribe_batch(spark, "nothing").count() == 0
+        return
+    q = sub.track(
+        sub.subscribe(spark, "nothing")
+        .writeStream.format("memory")
+        .queryName("api_empty_topic_drain")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert spark.table("api_empty_topic_drain").count() == 0
+    sub.close()
 
 
 def test_subscribe_stream_and_close(spark, sf_dir, tmp_path):

@@ -60,14 +60,21 @@ def test_one_partition_per_shard_and_rows_flow(tmp_path):
     _fill(client)
     start = r.initialOffset()
     assert start["epoch"] == 0
-    rows, end, parts = _run_batch(r, start)
+    parts = r.partitions(start, r.latestOffset())
     assert sorted(p.shard_id for p in parts) == [
         "shardId-000000000000",
         "shardId-000000000001",
     ]
+    rows = []
+    for p in parts:
+        part_rows = _tuples(r.read(p))
+        # per-shard FIFO: a partition holds only its shard's records,
+        # in ascending sequence-number order
+        assert part_rows and all(row[3] == p.shard_id for row in part_rows)
+        seqs = [int(row[2]) for row in part_rows]
+        assert seqs == sorted(seqs)
+        rows.extend(part_rows)
     assert sorted(row[0] for row in rows) == [f"d{i}" for i in range(6)]
-    # every row tagged with its own shard
-    assert all(row[3] == p_shard for row, p_shard in [])  # shape only
 
 
 def test_fence_makes_task_retry_deterministic(tmp_path):
@@ -524,28 +531,27 @@ def test_batch_write_then_read_roundtrip(spark, tmp_path):
 
 
 def test_stream_write_quadrant(spark, tmp_path):
-    """writeStream.format('kinesis_aws'): a streaming pipe from the
-    sim topic into the Kinesis transport — micro-batches publish
+    """writeStream.format('kinesis_aws'): a streaming pipe from a
+    directory topic into the Kinesis transport — micro-batches publish
     executor-side; everything lands exactly as produced on a clean
     run."""
-    from pyspark.sql import Row
-
-    from watermill_kinesis_spark.sources import kinesis_aws, kinesis_sim
+    from watermill_kinesis_spark.sources import kinesis_aws
+    from watermill_kinesis_spark.streaming.sink import (
+        DirectoryPublisher,
+        PutRecordsEntry,
+    )
+    from watermill_kinesis_spark.streaming.source import read_topic
 
     stub_dir = str(tmp_path / "stub")
     FileStubKinesisClient(stub_dir)
-    kinesis_sim.register(spark)
     kinesis_aws.register(spark)
 
     topic = str(tmp_path / "topic")
-    wire = spark.createDataFrame(
-        [Row(data=f"m-{i}", partition_key=f"k{i % 2}") for i in range(12)]
+    DirectoryPublisher(topic, n_shards=2).put_records(
+        [PutRecordsEntry(f"m-{i}", f"k{i % 2}") for i in range(12)]
     )
-    wire.write.format("kinesis_sim").option("path", topic).option(
-        "n_shards", "2"
-    ).mode("append").save()
 
-    stream = spark.readStream.format("kinesis_sim").option("path", topic).load()
+    stream = read_topic(spark.readStream, topic)
     q = (
         stream.select("data", "partition_key")
         .writeStream.format("kinesis_aws")

@@ -318,8 +318,7 @@ def test_register_flips_filter_pushdown_on_vanilla_session(spark, sf_dir):
     """r4 judge-red regression: on a session without the engine's tuned
     configs (the driver's gate session), KinesisAwsBatchReader's
     pushFilters() hard-fails with DATA_SOURCE_PUSHDOWN_DISABLED unless
-    register() itself flips spark.sql.python.filterPushdown.enabled —
-    the same contract kinesis_sim.register() already honors."""
+    register() itself flips spark.sql.python.filterPushdown.enabled."""
     from watermill_kinesis_spark.operators.custom_source import aws_transport_roundtrip
     from watermill_kinesis_spark.sources import kinesis_aws
 

@@ -26,7 +26,6 @@ from watermill_kinesis_spark.streaming import (
     DirectoryPublisher,
     publish_batch,
     subscribe,
-    write_stream_files,
 )
 from watermill_kinesis_spark.streaming.sink import PutRecordsEntry, put_chunked
 
@@ -41,6 +40,12 @@ def _messages(spark, n=100):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, MESSAGE_SCHEMA)
+
+
+def _publish(msgs, topic, n_shards=4):
+    """Publish messages to a topic directory through the engine's batch
+    publisher and the directory transport's writer."""
+    publish_batch(msgs, lambda: DirectoryPublisher(topic, n_shards))
 
 
 def test_put_chunked_splits_above_500(spark):
@@ -160,7 +165,7 @@ def test_builder_wires_kinesis_transport(spark):
 def test_stream_roundtrip_with_corrupt_skip(spark, tmp_path):
     topic = str(tmp_path / "topic")
     msgs = _messages(spark, 60)
-    write_stream_files(msgs, topic, n_shards=3)
+    _publish(msgs, topic, n_shards=3)
     # poison record injected into one shard file (subscriber.go:54-59)
     poison = json.dumps(
         {
@@ -196,7 +201,7 @@ def test_stream_roundtrip_with_corrupt_skip(spark, tmp_path):
 def test_same_key_same_shard(spark, tmp_path):
     """Kinesis routing contract: one partition key never spans shards."""
     topic = str(tmp_path / "topic")
-    write_stream_files(_messages(spark, 200), topic, n_shards=4)
+    _publish(_messages(spark, 200), topic, n_shards=4)
     shard_of: dict[str, set] = {}
     for fname in os.listdir(topic):
         with open(os.path.join(topic, fname)) as f:
@@ -204,6 +209,39 @@ def test_same_key_same_shard(spark, tmp_path):
                 rec = json.loads(line)
                 shard_of.setdefault(rec["partition_key"], set()).add(rec["shard_id"])
     assert shard_of and all(len(s) == 1 for s in shard_of.values())
+
+
+def test_directory_put_fails_halfway_leaves_no_visible_file(tmp_path, monkeypatch):
+    """A put whose file write dies halfway must leave no ``*.json`` in
+    the topic: a reader that lists the directory sees whole files or
+    nothing, never a truncated last line."""
+    from watermill_kinesis_spark.streaming import sink
+
+    real_open = open
+
+    class _TornFile:
+        def __init__(self, *args, **kwargs):
+            self._f = real_open(*args, **kwargs)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def write(self, text):
+            self._f.write(text[: len(text) // 2])
+            self._f.flush()
+            raise OSError("disk full")
+
+    monkeypatch.setattr(sink, "open", _TornFile, raising=False)
+    topic = tmp_path / "topic"
+    with pytest.raises(OSError, match="disk full"):
+        DirectoryPublisher(str(topic), n_shards=2).put_records(
+            [PutRecordsEntry(f"d{i}", f"k{i}") for i in range(10)]
+        )
+    assert list(topic.glob("*.json")) == []
+    assert os.listdir(topic) == []  # the partial temp file is gone too
 
 
 def test_restart_replay_exactly_once(spark, tmp_path):
@@ -215,7 +253,7 @@ def test_restart_replay_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
     m1 = _messages(spark, 50)
-    write_stream_files(m1, topic, n_shards=2, file_label="b0")
+    _publish(m1, topic, n_shards=2)
 
     def run_once():
         decoded = subscribe(spark, topic)
@@ -235,9 +273,7 @@ def test_restart_replay_exactly_once(spark, tmp_path):
         Row(uuid=f"u-{i}", payload=b"second", metadata={"partitionKey": "k"})
         for i in range(50, 80)
     ]
-    write_stream_files(
-        spark.createDataFrame(rows2, MESSAGE_SCHEMA), topic, n_shards=2, file_label="b1"
-    )
+    _publish(spark.createDataFrame(rows2, MESSAGE_SCHEMA), topic, n_shards=2)
     run_once()  # restart from checkpoint: only new files processed
 
     delivered = spark.read.json(out_dir)
@@ -415,7 +451,7 @@ def test_rate_limited_drain_paces_micro_batches(spark, sf_dir, tmp_path):
         F.col("uuid").cast("bigint") < 800
     )
     n_in = msgs.count()
-    stream_source.write_stream_files(msgs, topic, n_shards=4)
+    _publish(msgs, topic, n_shards=4)
 
     decoded = stream_source.subscribe(spark, topic, max_files_per_trigger=1)
     q = (
@@ -466,9 +502,9 @@ def test_reshard_mid_stream_no_loss(spark, sf_dir, tmp_path):
         )
         q.awaitTermination()
 
-    stream_source.write_stream_files(b0, topic, n_shards=2, file_label="pre")
+    _publish(b0, topic, n_shards=2)
     drain()
-    stream_source.write_stream_files(b1, topic, n_shards=6, file_label="post")
+    _publish(b1, topic, n_shards=6)
     drain()  # SAME checkpoint: only the new shards' files are unread
 
     out = spark.read.schema("uuid string, shard_id string").json(out_dir)
@@ -496,7 +532,7 @@ def test_idempotent_sink_survives_batch_replay(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 400)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
     n_in = msgs.count()
 
     def run_once(ckpt_dir):
@@ -564,7 +600,7 @@ def test_poison_batch_lands_in_dlq_and_stream_progresses(spark, sf_dir, tmp_path
     out = str(tmp_path / "out")
     dlq = str(tmp_path / "dlq")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 200)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
     n_in = msgs.count()
     # the poison marker: whichever batch carries this uuid fails
     poison_uuid = msgs.orderBy("uuid").first().uuid
@@ -636,7 +672,7 @@ def test_chaos_reshard_corrupt_poison_restart_conserves_rows(spark, sf_dir, tmp_
 
     # wave 1: two shards of valid messages
     msgs1 = _event_messages(spark, sf_dir, F.col("event_id") < 150)
-    stream_source.write_stream_files(msgs1, topic, n_shards=2, file_label="w1")
+    _publish(msgs1, topic, n_shards=2)
     # corrupt records appended into an existing shard file's stream
     with open(f"{topic}/shard-0-corrupt.json", "w") as f:
         f.write(
@@ -656,7 +692,7 @@ def test_chaos_reshard_corrupt_poison_restart_conserves_rows(spark, sf_dir, tmp_
     msgs2 = _event_messages(
         spark, sf_dir, (F.col("event_id") >= 150) & (F.col("event_id") < 250)
     )
-    stream_source.write_stream_files(msgs2, topic, n_shards=4, file_label="w2")
+    _publish(msgs2, topic, n_shards=4)
 
     n_valid = msgs1.count() + msgs2.count()
     poison_uuid = msgs2.orderBy("uuid").first().uuid
@@ -719,7 +755,7 @@ def test_streaming_progress_metrics_surface(spark, sf_dir, tmp_path):
 
     topic = str(tmp_path / "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 300)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
     n_in = msgs.count()
 
     q = (
@@ -760,7 +796,7 @@ def test_state_ttl_expires_idle_keys(spark, sf_dir, tmp_path):
     b0 = _event_messages(
         spark, sf_dir, (F.col("event_id") < 300) & (F.col("user_id") < 30)
     )
-    stream_source.write_stream_files(b0, topic, file_label="b0")
+    _publish(b0, topic)
 
     acct = key_accounting_ttl(stream_source.subscribe(spark, topic), ttl_ms)
     q = (
@@ -806,37 +842,50 @@ def test_state_ttl_expires_idle_keys(spark, sf_dir, tmp_path):
 
 
 def test_sim_publisher_roundtrips_bytes_payloads(spark, tmp_path):
-    """KPL-packed (bytes) entries must survive the simulator transport:
+    """KPL-packed (bytes) entries must survive the directory transport:
     base64 on the JSON line, latin1-mapped in the string column, exact
-    bytes via encode(data, 'ISO-8859-1')."""
-    from pyspark.sql import functions as F
+    bytes via encode(data, 'ISO-8859-1') — the same convention through
+    the streaming subscribe and the builder's batch snapshot."""
+    from watermill_kinesis_spark.api import SubscriberBuilder
 
-    from watermill_kinesis_spark.sources import kinesis_sim
-    from watermill_kinesis_spark.streaming.sink import (
-        DirectoryPublisher,
-        PutRecordsEntry,
-    )
-
-    topic = str(tmp_path / "topic")
+    root = str(tmp_path / "endpoint")
+    topic = os.path.join(root, "topic")
     payload = bytes(range(256)) * 2  # every byte value, not UTF-8 safe
-    pub = DirectoryPublisher(topic, n_shards=2)
-    pub.put_records(
+    DirectoryPublisher(topic, n_shards=2).put_records(
         [
             PutRecordsEntry(payload, "pk-bytes"),
             PutRecordsEntry('{"plain":"json"}', "pk-str"),
         ]
     )
-    kinesis_sim.register(spark)
-    back = (
-        spark.read.format("kinesis_sim")
-        .option("path", topic)
-        .load()
-        .select("partition_key", F.encode("data", "ISO-8859-1").alias("raw"))
-        .collect()
+
+    def raw_by_key(wire):
+        return wire.select(
+            "partition_key", F.encode("data", "ISO-8859-1").alias("raw")
+        )
+
+    q = (
+        raw_by_key(subscribe(spark, topic, decode=False))
+        .writeStream.format("memory")
+        .queryName("bytes_payload_stream")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    by_key = {r.partition_key: bytes(r.raw) for r in back}
-    assert by_key["pk-bytes"] == payload
-    assert by_key["pk-str"] == b'{"plain":"json"}'
+    q.awaitTermination()
+    snapshot = (
+        SubscriberBuilder()
+        .with_endpoint(root)
+        .with_unmarshaller(lambda wire: wire)
+        .build()
+        .subscribe_batch(spark, "topic")
+    )
+    for rows in (
+        spark.table("bytes_payload_stream").collect(),
+        raw_by_key(snapshot).collect(),
+    ):
+        by_key = {r.partition_key: bytes(r.raw) for r in rows}
+        assert by_key["pk-bytes"] == payload
+        assert by_key["pk-str"] == b'{"plain":"json"}'
 
 
 import pytest as _pytest

@@ -40,6 +40,10 @@ from watermill_kinesis_spark.operators.streaming_batch import (  # noqa: E402
 )
 from watermill_kinesis_spark.session import get_spark  # noqa: E402
 from watermill_kinesis_spark.streaming import source as stream_source  # noqa: E402
+from watermill_kinesis_spark.streaming.sink import (  # noqa: E402
+    DirectoryPublisher,
+    publish_batch,
+)
 
 
 def main() -> None:
@@ -126,7 +130,7 @@ def main() -> None:
     topic = os.path.join(base, "topic")
     ckpt = os.path.join(base, "ckpt")
     t0 = time.perf_counter()
-    stream_source.write_stream_files(msgs, topic, n_shards=8)
+    publish_batch(msgs, lambda: DirectoryPublisher(topic, n_shards=8))
     q = (
         stream_source.subscribe(spark, topic)
         .writeStream.format("noop")

@@ -30,13 +30,13 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 
 from watermill_kinesis_spark import codec
-from watermill_kinesis_spark.sources import kinesis_sim
 from watermill_kinesis_spark.streaming.sink import (
     DirectoryPublisher,
     PutRecordsEntry,
     kinesis_publisher_factory,
     put_chunked,
 )
+from watermill_kinesis_spark.streaming.source import read_topic
 
 #: a marshaller turns a message DataFrame (uuid, payload, metadata) into
 #: wire records (data, partition_key) — the reference's pluggable
@@ -245,26 +245,22 @@ class Subscriber:
                 if value:
                     reader = reader.option(key, value)
             return reader.load()
-        kinesis_sim.register(spark)
-        return (
-            reader.format(kinesis_sim.FORMAT_NAME)
-            .option("path", self._topic_dir(topic))
-            .load()
-        )
+        return read_topic(reader, self._topic_dir(topic))
 
     def subscribe(self, spark: SparkSession, topic: str) -> DataFrame:
         """Unbounded message stream for the topic (reference Subscribe,
         subscriber/subscriber.go:46-75): wire records from the
-        subscriber's transport — the ``kinesis_sim`` directory source,
-        or the ``kinesis_aws`` GetRecords source after
-        ``with_kinesis`` — unmarshalled to messages. Start it with
+        subscriber's transport — the topic directory
+        (``streaming.source.read_topic``), or the ``kinesis_aws``
+        GetRecords source after ``with_kinesis`` — unmarshalled to
+        messages. Start it with
         ``writeStream`` (track with ``track`` to let ``close`` manage
         the query)."""
         return self._opts.unmarshaller(self._wire(spark, spark.readStream, topic))
 
     def subscribe_batch(self, spark: SparkSession, topic: str) -> DataFrame:
-        """Bounded snapshot of the topic (one partition per shard),
-        from the same transport as ``subscribe``."""
+        """Bounded snapshot of the topic, from the same transport and
+        reader as ``subscribe``."""
         return self._opts.unmarshaller(self._wire(spark, spark.read, topic))
 
     def process(

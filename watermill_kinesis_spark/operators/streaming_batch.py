@@ -25,6 +25,7 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 from watermill_kinesis_spark.streaming import source as stream_source
 from watermill_kinesis_spark.streaming.semantics import dedup_by_uuid
+from watermill_kinesis_spark.streaming.sink import DirectoryPublisher, publish_batch
 
 
 def _event_messages(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
@@ -42,6 +43,15 @@ def _event_messages(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
             F.lit("eventType"), F.col("event_type"),
             F.lit("eventTime"), F.date_format("ts", "yyyy-MM-dd HH:mm:ss"),
         ).alias("metadata"),
+    )
+
+
+def _publish(messages: DataFrame, topic: str) -> None:
+    """Publish messages to a 4-shard topic directory through the
+    directory transport's writer, in the scan's own partitions (crc32
+    key routing still keeps every key on one shard)."""
+    publish_batch(
+        messages, lambda: DirectoryPublisher(topic), preserve_key_order=False
     )
 
 
@@ -72,7 +82,7 @@ def stream_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix=f"wk_stream_{run_id}_")
     topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    stream_source.write_stream_files(msgs, topic, n_shards=4)
+    _publish(msgs, topic)
     decoded = stream_source.subscribe(spark, topic)
     counted = decoded.select(
         F.col("metadata").getItem("eventType").alias("event_type"),
@@ -106,8 +116,8 @@ def stream_dedup_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 1000)
     # batch0: all messages; batch1: the same messages again (redelivery)
-    stream_source.write_stream_files(msgs, topic, file_label="b0")
-    stream_source.write_stream_files(msgs, topic, file_label="b1")
+    _publish(msgs, topic)
+    _publish(msgs, topic)
     decoded = stream_source.subscribe(spark, topic).withColumn(
         "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
     )
@@ -182,9 +192,9 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    stream_source.write_stream_files(fresh, topic, file_label="b0")
+    _publish(fresh, topic)
     run_once()  # commits the fresh watermark
-    stream_source.write_stream_files(late, topic, file_label="b1")
+    _publish(late, topic)
     run_once()  # replay run: every late row gated by the watermark
     n_fresh, n_late = fresh.count(), late.count()
     return spark.read.json(out_dir).agg(
@@ -229,9 +239,9 @@ def stream_stateful_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = _event_messages(
         spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
     )
-    stream_source.write_stream_files(b0, topic, file_label="b0")
+    _publish(b0, topic)
     run_once()
-    stream_source.write_stream_files(b1, topic, file_label="b1")
+    _publish(b1, topic)
     run_once()  # restart: state restored from checkpoint, counts continue
 
     out = spark.read.schema(
@@ -257,7 +267,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix=f"wk_ssj_{run_id}_")
     topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("string").alias("partition_key"),
         "c_mktsegment",
@@ -288,7 +298,7 @@ def _watermarked_click_buy_join(
     base = tempfile.mkdtemp(prefix=f"wk_{prefix}_{run_id}_")
     topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 4000)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
 
     def side(kind: str, ts_alias: str, key_alias: str):
         return (
@@ -387,7 +397,7 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"ssr_{run_id}"
 
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    stream_source.write_stream_files(msgs, topic)
+    _publish(msgs, topic)
     counts = (
         stream_source.subscribe(spark, topic)
         .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
@@ -499,9 +509,9 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         b1 = _event_messages(
             spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
         )
-        stream_source.write_stream_files(b0, topic, file_label="b0")
+        _publish(b0, topic)
         run_once()
-        stream_source.write_stream_files(b1, topic, file_label="b1")
+        _publish(b1, topic)
         run_once()  # restart: ValueState restored, totals continue
     finally:
         if prior_provider is None:
@@ -542,11 +552,11 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = os.path.join(base, "topic")
     name = f"upd_{run_id}"
 
-    for lo, hi, label in ((0, 1000, "b0"), (1000, 2000, "b1")):
+    for lo, hi in ((0, 1000), (1000, 2000)):
         msgs = _event_messages(
             spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         )
-        stream_source.write_stream_files(msgs, topic, file_label=label)
+        _publish(msgs, topic)
 
     counts = (
         stream_source.subscribe(spark, topic)
@@ -587,11 +597,11 @@ def stream_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = os.path.join(base, "topic")
     name = f"cmp_{run_id}"
 
-    for lo, hi, label in ((0, 1000, "b0"), (1000, 2000, "b1")):
+    for lo, hi in ((0, 1000), (1000, 2000)):
         msgs = _event_messages(
             spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         )
-        stream_source.write_stream_files(msgs, topic, file_label=label)
+        _publish(msgs, topic)
 
     counts = (
         stream_source.subscribe(spark, topic)

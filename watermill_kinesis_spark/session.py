@@ -63,7 +63,7 @@ def get_spark(app_name: str = "watermill-kinesis-spark", cpus: int | None = None
         # silently drops them to interpreted eval (~10× slower)
         .config("spark.sql.codegen.maxFields", "256")
         # Python Data Source readers that implement pushFilters()
-        # (sources/kinesis_sim.py shard pruning) fail without this
+        # (the kinesis_aws batch reader's shard pruning) fail without this
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # stock pyspark.daemon plus the CPython 3.12 zipimport
         # cache-invalidation backport (fastdaemon.py): on 3.11 every

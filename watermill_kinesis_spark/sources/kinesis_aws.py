@@ -28,8 +28,8 @@ Spark's own machinery instead of the KCL's:
   timestamp, the metadata the reference injects per message
   (reference subscriber.go:60, marshaller.go:39-40).
 
-Rows come out in ``WIRE_RECORD_SCHEMA`` — identical to the simulator's
-— so everything downstream (codec, corrupt-skip, semantics, sinks) is
+Rows come out in ``WIRE_RECORD_SCHEMA`` — identical to the directory
+transport's ``streaming.source.read_topic`` — so everything downstream (codec, corrupt-skip, semantics, sinks) is
 transport-agnostic; ``codec.unmarshal`` turns them into messages.
 
 Streaming reads plan one ``InputPartition`` per shard and run every
@@ -85,9 +85,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from watermill_kinesis_spark.schema import WIRE_RECORD_SCHEMA
 from watermill_kinesis_spark.sources.fencestore import FenceStore
-
-from watermill_kinesis_spark.sources.kinesis_sim import WIRE_DDL
 
 FORMAT_NAME = "kinesis_aws"
 
@@ -753,9 +752,8 @@ class KinesisAwsBatchReader(_KinesisReader, DataSourceReader):
     def pushFilters(self, filters):
         """Consume shard_id equality/IN filters: whole shard partitions
         are pruned before any task launches — the Python-source
-        analogue of parquet partition pruning, same contract as the
-        kinesis_sim batch reader. Everything else stays in Spark's
-        plan."""
+        analogue of parquet partition pruning. Everything else stays
+        in Spark's plan."""
         from pyspark.sql.datasource import EqualTo, In
 
         unsupported = []
@@ -866,16 +864,17 @@ class KinesisAwsStreamWriter(DataSourceStreamWriter):
 
 
 class KinesisAwsDataSource(DataSource):
-    """format("kinesis_aws") — streaming read from a real Kinesis
-    stream. Writes go through ``PublisherBuilder.with_kinesis()`` /
-    ``streaming.sink.KinesisPublisher`` (the produce side)."""
+    """format("kinesis_aws") — batch read, batch write, streaming read
+    and streaming write of a Kinesis stream, the engine's one Python
+    Data Source. Against ``kinesis_stub.FileStubKinesisClient`` (option
+    ``clientfactory``) the same four quadrants run with no AWS."""
 
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
-    def schema(self) -> str:
-        return WIRE_DDL
+    def schema(self) -> StructType:
+        return WIRE_RECORD_SCHEMA
 
     def reader(self, schema: StructType) -> KinesisAwsBatchReader:
         return KinesisAwsBatchReader(self.options)
@@ -902,8 +901,7 @@ def register(spark) -> None:
     Also flips ``spark.sql.python.filterPushdown.enabled`` (runtime-
     settable, default false): ``KinesisAwsBatchReader`` implements
     ``pushFilters`` and Spark hard-fails with
-    ``DATA_SOURCE_PUSHDOWN_DISABLED`` when the flag is off — the same
-    flip :func:`kinesis_sim.register` performs.
+    ``DATA_SOURCE_PUSHDOWN_DISABLED`` when the flag is off.
     """
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(KinesisAwsDataSource)

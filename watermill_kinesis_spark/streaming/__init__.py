@@ -19,16 +19,13 @@ from watermill_kinesis_spark.streaming.sink import (
     publish_batch,
     publish_stream,
 )
-from watermill_kinesis_spark.streaming.source import (
-    subscribe,
-    write_stream_files,
-)
+from watermill_kinesis_spark.streaming.source import read_topic, subscribe
 
 __all__ = [
     "CollectingPublisher",
     "DirectoryPublisher",
     "publish_batch",
     "publish_stream",
+    "read_topic",
     "subscribe",
-    "write_stream_files",
 ]

@@ -52,18 +52,20 @@ class PutRecordsResult:
 
 
 class DirectoryPublisher:
-    """File-backed stand-in for the Kinesis service: each put appends a
-    JSON-lines file into the topic directory (readable by
-    ``source.subscribe``). Used by tests and the local dev loop, same
-    role as the reference's Localstack harness."""
+    """File-backed stand-in for the Kinesis service and the one writer
+    of the directory transport: each put lands one JSON-lines file per
+    touched shard in the topic directory (read back by
+    ``source.read_topic``). Used by tests and the local dev loop, same
+    role as the reference's Localstack harness.
+
+    Each file becomes visible whole: it is written under a dot-prefixed
+    temp name (Spark's file source skips hidden files) and renamed into
+    place, so a reader listing the topic mid-put never sees a truncated
+    line, and a put that fails halfway leaves nothing visible."""
 
     def __init__(self, topic_dir: str, n_shards: int = 4):
         self.topic_dir = topic_dir
         self.n_shards = n_shards
-        #: absolute paths of every file this publisher wrote — lets a
-        #: two-phase caller (kinesis_sim stream writer) stage puts in a
-        #: side directory and publish them atomically on epoch commit
-        self.written: list[str] = []
 
     def put_records(self, entries: list[PutRecordsEntry]) -> PutRecordsResult:
         import json
@@ -75,11 +77,11 @@ class DirectoryPublisher:
         for seq, e in enumerate(entries):
             # bytes payloads (KPL aggregate containers, binary codecs)
             # round-trip through the JSON-lines transport as base64 +
-            # a marker field; the kinesis_sim reader decodes them back
-            # into the string `data` column latin1-mapped (one
-            # codepoint per byte — recover exact bytes with
-            # encode(data, 'ISO-8859-1')). json.dumps on raw bytes
-            # would otherwise TypeError and crash the simulator.
+            # a marker field; source.read_topic decodes them back into
+            # the string `data` column latin1-mapped (one codepoint per
+            # byte — recover exact bytes with encode(data,
+            # 'ISO-8859-1')). json.dumps on raw bytes would otherwise
+            # TypeError and crash the simulator.
             if isinstance(e.data, (bytes, bytearray)):
                 import base64 as _b64
 
@@ -111,17 +113,22 @@ class DirectoryPublisher:
                 )
             )
         # monotonic time prefix: lexicographic file order == publish
-        # order within a producer, so shard-ordered readers (the
-        # kinesis_sim source) replay each shard's records FIFO; the
-        # random token breaks same-nanosecond collisions across
-        # concurrent producers (cross-producer order is loose, exactly
-        # like Kinesis sequence numbers across PutRecords calls)
+        # order within a producer; the random token breaks
+        # same-nanosecond collisions across concurrent producers
+        # (cross-producer order is loose, exactly like Kinesis sequence
+        # numbers across PutRecords calls)
         token = f"{time.time_ns():020d}-{uuidlib.uuid4().hex[:8]}"
         for shard, lines in by_shard.items():
-            path = os.path.join(self.topic_dir, f"shard-{shard}-put-{token}.json")
-            with open(path, "w") as f:
-                f.write("\n".join(lines) + "\n")
-            self.written.append(path)
+            name = f"shard-{shard}-put-{token}.json"
+            tmp = os.path.join(self.topic_dir, f".{name}.tmp")
+            try:
+                with open(tmp, "w") as f:
+                    f.write("\n".join(lines) + "\n")
+                os.replace(tmp, os.path.join(self.topic_dir, name))
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise
         return PutRecordsResult()
 
 

@@ -1,31 +1,59 @@
-"""Kinesis-like streaming source (simulator).
+"""Kinesis-like streaming source (directory transport).
 
 The reference consumes a Kinesis stream through a KCL worker
 (reference subscriber.go:114-128, subscriber/subscriber.go:46-75); its
 dev harness substitutes Localstack and hand-built envelope records
 (reference example/docker-compose.yml, example/functions.sh:9-24).
-This module is the same idea Spark-first: a **topic is a directory**,
-a **shard is a JSON-lines file prefix**, and ``readStream`` over the
-directory gives an unbounded DataFrame with exactly the semantics the
-KCL provides — partition-parallel reads, offset tracking in the
-checkpoint (replacing DynamoDB), rate limiting via
-``maxFilesPerTrigger`` (the ``MaxRecords`` analogue,
-reference example/cmd/subscribe/main.go:36).
+This module is the same idea Spark-first: a **topic is a directory**
+of JSON-lines files written by ``sink.DirectoryPublisher``, and Spark's
+own JSON file source reads it — ``readStream`` over the directory
+gives an unbounded DataFrame with the semantics the KCL provides:
+partition-parallel reads, offset tracking in the checkpoint (replacing
+DynamoDB), rate limiting via ``maxFilesPerTrigger`` (the
+``MaxRecords`` analogue, reference example/cmd/subscribe/main.go:36).
 
-A real Kinesis connector slot-in replaces ``subscribe`` with
-``spark.readStream.format("aws-kinesis")...`` — everything downstream
-(codec, semantics, sinks) is source-agnostic because it only sees the
-WIRE_RECORD_SCHEMA columns.
+:func:`read_topic` is the one reader of a topic directory; the
+deployable transport is ``format("kinesis_aws")``. Everything
+downstream (codec, semantics, sinks) is source-agnostic because it
+only sees the WIRE_RECORD_SCHEMA columns.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from watermill_kinesis_spark import codec
 from watermill_kinesis_spark.schema import WIRE_RECORD_SCHEMA
+
+#: one JSON line as DirectoryPublisher writes it: the wire record plus
+#: the marker it sets on a base64-carried bytes payload
+_FILE_SCHEMA = T.StructType(
+    [*WIRE_RECORD_SCHEMA.fields, T.StructField("data_encoding", T.StringType())]
+)
+
+
+def read_topic(reader, topic_dir: str) -> DataFrame:
+    """Wire records of a topic directory through ``reader``
+    (``spark.read`` or ``spark.readStream``), in WIRE_RECORD_SCHEMA.
+
+    A topic nobody has published to reads as 0 rows (the directory is
+    created, as a publisher would). A bytes payload (KPL containers,
+    binary codecs) comes back latin1-mapped, one codepoint per byte:
+    recover the exact bytes with ``encode(data, 'ISO-8859-1')``."""
+    os.makedirs(topic_dir, exist_ok=True)
+    raw = reader.schema(_FILE_SCHEMA).json(topic_dir)
+    data = F.when(
+        F.col("data_encoding") == "base64",
+        F.decode(F.unbase64("data"), "ISO-8859-1"),
+    ).otherwise(F.col("data"))
+    return raw.select(
+        *(
+            data.alias("data") if f.name == "data" else F.col(f.name)
+            for f in WIRE_RECORD_SCHEMA.fields
+        )
+    )
 
 
 def subscribe(
@@ -43,53 +71,10 @@ def subscribe(
     query with a checkpoint. ``decode=False`` yields raw wire records.
     ``drop_corrupt=True`` reproduces the reference's poison-record skip
     (reference subscriber.go:54-59)."""
-    reader = spark.readStream.schema(WIRE_RECORD_SCHEMA)
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    wire = reader.json(topic_dir)
+    wire = read_topic(reader, topic_dir)
     if not decode:
         return wire
     return codec.unmarshal(wire, drop_corrupt=drop_corrupt)
-
-
-def write_stream_files(
-    messages: DataFrame,
-    topic_dir: str,
-    n_shards: int = 4,
-    file_label: str = "batch0",
-) -> None:
-    """Test/dev harness: land messages into a topic directory as the
-    wire format, one JSON-lines file per shard (the moral equivalent of
-    ``example/functions.sh write_batch_n``, which hand-builds envelope
-    records against Localstack).
-
-    Shard assignment hashes the partition key — same key ⇒ same shard
-    ⇒ per-key FIFO within the shard file, which is exactly the Kinesis
-    routing contract (reference marshaller.go:65-69)."""
-    import json
-
-    os.makedirs(topic_dir, exist_ok=True)
-    wire = codec.marshal(messages)
-    shard = F.pmod(F.xxhash64("partition_key"), F.lit(n_shards)).cast("int")
-    rows = wire.withColumn(
-        "shard_id", F.concat(F.lit("shard-"), shard)
-    ).collect()  # driver-side: this is the *test* producer, not a sink
-    by_shard: dict[str, list[str]] = {}
-    for r in rows:
-        by_shard.setdefault(r.shard_id, []).append(r)
-    for shard_id, shard_rows in by_shard.items():
-        lines = [
-            json.dumps(
-                {
-                    "data": r.data,
-                    "partition_key": r.partition_key,
-                    "sequence_number": str(seq),
-                    "shard_id": shard_id,
-                    "approximate_arrival_timestamp": None,
-                }
-            )
-            for seq, r in enumerate(shard_rows)
-        ]
-        path = os.path.join(topic_dir, f"{shard_id}-{file_label}.json")
-        with open(path, "w") as f:
-            f.write("\n".join(lines) + "\n")
