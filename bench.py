@@ -293,15 +293,6 @@ def main() -> int:
     warm.mapInPandas(lambda it: it, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
-    # NOTE (optimization round 13, measurement fix): bench.py had pinned
-    # every base table under a 256 MB budget with
-    # sources/tables.cache_tables() here since round 2 — at bench SF
-    # that persisted ALL ten inputs in executor memory before anything
-    # was timed. Removed: every timed query now computes from the
-    # parquet inputs (no .cache() of base tables outside the timed
-    # region). r12-methodology numbers for comparison are recorded in
-    # OPTIMIZATION_r13.md; round-over-round deltas across this change
-    # must compare like with like.
 
     # Five runs per query, keep the fastest: the first run of a plan
     # shape pays one-time JIT/codegen compilation (measured 3-6×

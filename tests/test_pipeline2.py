@@ -1,16 +1,12 @@
-"""Tests for the table catalog (memoization + buffer-pool pinning) and
-the second-wave pipeline operators."""
+"""Tests for the table catalog (memoization) and the second-wave
+pipeline operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from watermill_kinesis_spark.registry import queries
-from watermill_kinesis_spark.sources.tables import (
-    cache_tables,
-    load_table,
-    uncache_tables,
-)
+from watermill_kinesis_spark.sources.tables import load_table
 
 
 def test_load_table_memoized(spark, sf_dir):
@@ -26,32 +22,6 @@ def test_self_join_after_memoization(spark, sf_dir):
     out = queries()["q8_market_share"](spark, sf_dir)
     assert out.columns == ["o_year", "mkt_share"]
     assert out.count() >= 1
-
-
-def test_cache_tables_pins_and_preserves_results(spark, sf_dir):
-    before = (
-        queries()["q1_pricing_summary"](spark, sf_dir)
-        .orderBy("l_returnflag", "l_linestatus")
-        .collect()
-    )
-    try:
-        pinned = cache_tables(spark, sf_dir, names=("lineitem", "nation"))
-        assert set(pinned) == {"lineitem", "nation"}
-        assert load_table(spark, sf_dir, "lineitem").is_cached
-        # second call is idempotent (no re-pin, still reported)
-        assert set(cache_tables(spark, sf_dir, names=("lineitem",))) == {"lineitem"}
-        after = (
-            queries()["q1_pricing_summary"](spark, sf_dir)
-            .orderBy("l_returnflag", "l_linestatus")
-            .collect()
-        )
-        assert before == after  # pinning is a physical choice, not semantic
-        # a zero budget pins nothing
-        assert cache_tables(spark, sf_dir, names=("orders",), budget_bytes=0) == []
-    finally:
-        # release pins so later tests see parquet scans (pushdown plans)
-        uncache_tables(spark, sf_dir, names=("lineitem", "nation"))
-    assert not load_table(spark, sf_dir, "lineitem").is_cached
 
 
 def test_quality_filter_funnel_monotone(spark, sf_dir):

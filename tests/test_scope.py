@@ -1,0 +1,175 @@
+"""Materialization lifetimes (``functions/scope.py``): intermediates are
+scoped, and a returned DataFrame owns its checkpoints.
+
+- the scope releases and restores everything on every exit path;
+- a returned DataFrame stays usable after later calls of the same query;
+- a failed call leaves the session's confs and caches as it found them;
+- dropped results free their blocks (no session-long cache pins);
+- no operator module persists, caches or overrides the session conf
+  outside the scope.
+"""
+
+from __future__ import annotations
+
+import ast
+import gc
+import math
+import time
+from pathlib import Path
+
+import pytest
+
+from watermill_kinesis_spark.functions.scope import Scope
+from watermill_kinesis_spark.registry import queries
+
+#: the queries that kept a module-global "latest result" slot before
+#: the scope existed
+FORMER_SLOT_QUERIES = (
+    "graph_bfs_hops",
+    "pagerank_bipartite",
+    "simhash_recall_audit",
+    "cluster_kmeans_embeddings",
+    "bloom_fpp_audit",
+)
+
+OPERATORS = (
+    Path(__file__).resolve().parents[1] / "watermill_kinesis_spark" / "operators"
+)
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _canon(rows) -> list:
+    """Order-insensitive rows; floats rounded so partial-sum order
+    cannot fail an equality that is about lifetimes, not arithmetic."""
+    return sorted(
+        tuple(
+            round(v, 9) if isinstance(v, float) and math.isfinite(v) else v
+            for v in r
+        )
+        for r in rows
+    )
+
+
+def test_scope_releases_and_restores_when_the_body_raises(spark):
+    conf = spark.conf
+    before = _persisted(spark)
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    with pytest.raises(ValueError, match="body failed"):
+        with Scope(spark) as scope:
+            df = scope.persisted(spark.range(100))
+            df.count()
+            cp = scope.checkpointed(spark.range(50))
+            cp_rdd = cp._jdf.queryExecution().analyzed().rdd()
+            assert df.is_cached and cp_rdd.getStorageLevel().isValid()
+            scope.set_conf("spark.sql.adaptive.enabled", "false")
+            scope.set_conf("spark.graft.test.unset.key", "1")
+            raise ValueError("body failed")
+    assert not df.is_cached
+    assert not cp_rdd.getStorageLevel().isValid()  # StorageLevel.NONE
+    assert _persisted(spark) <= before
+    assert conf.get("spark.sql.adaptive.enabled") == aqe
+    assert conf.get("spark.graft.test.unset.key", None) is None
+
+
+def test_scope_keeps_the_body_error_when_a_release_fails(spark):
+    with pytest.raises(ValueError, match="body failed") as info:
+        with Scope(spark) as scope:
+            scope._undo.append(lambda: 1 / 0)
+            raise ValueError("body failed")
+    assert any("ZeroDivisionError" in n for n in info.value.__notes__)
+
+
+def test_scope_raises_a_release_error_after_a_clean_body(spark):
+    with pytest.raises(ZeroDivisionError):
+        with Scope(spark) as scope:
+            scope._undo.append(lambda: 1 / 0)
+
+
+@pytest.mark.parametrize("name", FORMER_SLOT_QUERIES)
+def test_earlier_result_survives_a_later_call(spark, sf_dir, name):
+    q = queries()[name]
+    a = q(spark, sf_dir)
+    b = q(spark, sf_dir)
+    rows_b = b.collect()
+    assert rows_b
+    assert _canon(a.collect()) == _canon(rows_b)
+
+
+def test_failed_call_leaves_the_session_as_found(spark):
+    before = _persisted(spark)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    with pytest.raises(Exception):
+        queries()["graph_bfs_hops"](spark, "/nonexistent")
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    # ``<=``: unrelated garbage from earlier tests may be freed meanwhile
+    assert _persisted(spark) <= before
+
+
+def test_dropped_results_release_their_blocks(spark, sf_dir):
+    gc.collect()
+    before = _persisted(spark)
+    extra = ("stupid_backoff_score", "q11_important_stock")
+    for name in FORMER_SLOT_QUERIES + extra:
+        queries()[name](spark, sf_dir).collect()
+    # Python drops the results now; the JVM frees their checkpoint RDDs
+    # once py4j detaches them and a GC clears the ContextCleaner's weak
+    # references. Sleep before each System.gc(): the py4j detach runs
+    # on a finalizer thread, and each count below pins its map for a
+    # moment the same way.
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        time.sleep(1)
+        spark.sparkContext._jvm.System.gc()
+        now = _persisted(spark)
+        if now <= before or time.monotonic() > deadline:
+            break
+    assert now <= before
+
+
+def _violations(path: Path) -> list[str]:
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        where = f"{path.name}:{getattr(node, 'lineno', '?')}"
+        if isinstance(node, ast.Global):
+            out.append(f"{where} global {', '.join(node.names)}")
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if f.attr in ("persist", "cache"):
+                out.append(f"{where} .{f.attr}(")
+            elif (
+                f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+                and isinstance(f.value.value, ast.Name)
+                and f.value.value.id == "spark"
+            ):
+                out.append(f"{where} spark.conf.{f.attr}(")
+    return out
+
+
+def test_operators_leave_lifetimes_to_the_scope():
+    """Only functions/scope.py may persist, cache or override the
+    session conf; a module-global slot or an unowned cache must not come
+    back. (A memoized child session's own conf — sqltext's
+    ``newSession()`` — is not the caller's session and is not matched.)"""
+    files = sorted(OPERATORS.glob("*.py"))
+    assert len(files) > 30
+    found = [v for p in files for v in _violations(p)]
+    assert not found, "\n".join(found)
+
+
+def test_guard_catches_each_forbidden_form(tmp_path):
+    p = tmp_path / "bad.py"
+    p.write_text(
+        "def f(spark, df):\n"
+        "    global X\n"
+        "    df.persist()\n"
+        "    df.cache()\n"
+        "    spark.conf.set('k', 'v')\n"
+        "    spark.conf.unset('k')\n"
+    )
+    assert len(_violations(p)) == 5

@@ -664,14 +664,10 @@ def lagged_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("mn", "mx")).alias("day")
     )
-    daily = (
-        spine.join(d, "day", "left")
-        .select(
-            "day",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-        .persist()
+    daily = spine.join(d, "day", "left").select(
+        "day",
+        F.coalesce("x", F.lit(0)).alias("x"),
+        F.coalesce("y", F.lit(0)).alias("y"),
     )
     lags = spark.range(0, XCORR_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -707,7 +703,6 @@ def lagged_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             " END"
         ).alias("xcorr"),
     )
-    daily.unpersist()
     return out
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -43,30 +44,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     return e.repartition(adaptive_partitions(spark, sf_dir, "embeddings"), "vec_id")
-
-
-#: the one live cached embedding DataFrame (unpersisted when replaced,
-#: so repeated fits — e.g. bench loops — cannot accumulate cache)
-_cached_emb: DataFrame | None = None
-
-
-def _emb_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The iterative loops scan the SAME rows 6+ times; without a
-    cache every pass re-reads parquet AND re-runs the repartition
-    shuffle. MEMORY_AND_DISK persists the post-shuffle Arrow-friendly
-    layout once — at 100 TB the cache spills to executor-local disk,
-    which still beats re-shuffling the corpus per iteration."""
-    global _cached_emb
-    from pyspark import StorageLevel
-
-    if _cached_emb is not None:
-        try:
-            _cached_emb.unpersist(False)
-        except Exception:
-            pass  # previous session stopped; nothing left to release
-    e = _emb(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _cached_emb = e
-    return e
 
 
 def _assign_kernel(C):
@@ -131,14 +108,17 @@ def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = KMEANS_K,
                iters: int = KMEANS_ITERS):
     """Lloyd's algorithm. Init is deterministic (the k lowest vec_ids —
     k-means|| would replace this at scale without changing the loop).
-    Each iteration: one distributed assign+reduce pass over the CACHED
-    post-shuffle rows (``_emb_cached``); the kernel reduces to ≤ k
+    Each iteration: one distributed assign+reduce pass over the
+    CHECKPOINTED post-shuffle rows; the kernel reduces to ≤ k
     rows per partition in-process, so the per-iteration driver collect
     is ≤ k × partitions tiny rows and the k × dim model update is a
     numpy reduce. Returns (centroids ndarray, assigned DataFrame)."""
     import numpy as np
 
-    e = _emb_cached(spark, sf_dir)
+    # the loops scan the SAME rows 6+ times; without materializing them
+    # every pass re-reads parquet AND re-runs the repartition shuffle.
+    # The returned assignment reads them: the result's own checkpoint.
+    e = _emb(spark, sf_dir).localCheckpoint()
     C = np.stack(
         [
             r["emb"]
@@ -369,8 +349,6 @@ def kcenter_greedy_fit(spark: SparkSession, sf_dir: str, k: int = KCENTER_K):
     import numpy as np
     import pandas as pd
 
-    e = _emb_cached(spark, sf_dir)
-
     def mind_df(C_list, with_emb=True):
         C = np.asarray(C_list, dtype=np.float64)  # (c, dim)
 
@@ -399,35 +377,37 @@ def kcenter_greedy_fit(spark: SparkSession, sf_dir: str, k: int = KCENTER_K):
             schema += ", emb array<double>"
         return e.mapInPandas(kernel, schema)
 
-    first = e.orderBy("vec_id").limit(1).collect()[0]
-    center_ids = [first.vec_id]
-    centers = [list(first.emb)]
-    for _ in range(1, k):
-        # exclude already-selected ids (tiny isin, k ≤ KCENTER_K):
-        # on a duplicate-heavy corpus every remaining mind can be 0,
-        # and without the exclusion the (mind DESC, vec_id ASC) pick
-        # re-selects center 0 forever — duplicate center ids, breaking
-        # the audit's distinctness guarantee (r13 tie-safety find)
-        far_rows = (
-            mind_df(centers)
-            .where(~F.col("vec_id").isin(center_ids))
-            .orderBy(F.desc("mind"), F.asc("vec_id"))
-            .limit(1)
-            .collect()
+    with Scope(spark) as scope:
+        e = scope.checkpointed(_emb(spark, sf_dir))
+        first = e.orderBy("vec_id").limit(1).collect()[0]
+        center_ids = [first.vec_id]
+        centers = [list(first.emb)]
+        for _ in range(1, k):
+            # exclude already-selected ids (tiny isin, k ≤ KCENTER_K):
+            # on a duplicate-heavy corpus every remaining mind can be 0,
+            # and without the exclusion the (mind DESC, vec_id ASC) pick
+            # re-selects center 0 forever — duplicate center ids, breaking
+            # the audit's distinctness guarantee (r13 tie-safety find)
+            far_rows = (
+                mind_df(centers)
+                .where(~F.col("vec_id").isin(center_ids))
+                .orderBy(F.desc("mind"), F.asc("vec_id"))
+                .limit(1)
+                .collect()
+            )
+            if not far_rows:  # corpus smaller than k
+                break
+            far = far_rows[0]
+            center_ids.append(far.vec_id)
+            centers.append(list(far.emb))
+        # the radius pass consumes only max(mind) — skip the full-corpus
+        # emb column transfer the selection passes need
+        radius = (
+            mind_df(centers, with_emb=False)
+            .agg(F.max("mind").alias("r"))
+            .collect()[0]
+            .r
         )
-        if not far_rows:  # corpus smaller than k
-            break
-        far = far_rows[0]
-        center_ids.append(far.vec_id)
-        centers.append(list(far.emb))
-    # the radius pass consumes only max(mind) — skip the full-corpus
-    # emb column transfer the selection passes need
-    radius = (
-        mind_df(centers, with_emb=False)
-        .agg(F.max("mind").alias("r"))
-        .collect()[0]
-        .r
-    )
     return center_ids, np.asarray(centers, dtype=np.float64), float(radius)
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -330,16 +331,15 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "sig": sigs, "sh": shs})
 
     # One scan emits both the signature (for banding) and the shingle-
-    # hash set (for the verify join); persisted because three plan
-    # branches read it — ~200 B/doc, far cheaper than recomputing the
-    # kernel per branch. (A localCheckpoint spelling was A/B-measured
-    # in optimization round 14 — the simhash-audit win did not
-    # reproduce here: this plan has far fewer downstream AQE stages.)
+    # hash set (for the verify join); materialized once because three
+    # plan branches read it — ~200 B/doc, far cheaper than recomputing
+    # the kernel per branch. The returned plan reads it, so it is the
+    # result's own checkpoint (functions/scope.py).
     base = (
         _docs(spark, sf_dir)
         .select("doc_id", "text")
         .mapInPandas(scan, "doc_id long, sig array<long>, sh array<long>")
-        .persist()
+        .localCheckpoint()
     )
     signed = base.select("doc_id", "sig")
     # Bands carry ONLY (band, bucket, doc_id): the candidate self-join
@@ -636,7 +636,7 @@ def connected_components(
     directional for an asymmetric edge list: a node appearing only as
     ``doc_b`` was labeled isolated while still receiving labels, and
     labels only flowed a→b). A caller that already materializes both
-    directions — ``dedup_cluster_canonical`` persists the symmetric
+    directions — ``dedup_cluster_canonical`` checkpoints the symmetric
     relation for the sweep loop — passes ``symmetric_edges=True`` and
     skips the doubled join work the internal union would cost it.
 
@@ -719,7 +719,7 @@ def connected_components(
     # Anti-join against the FINAL labels, not ``touched`` (optimization
     # round 14, ADVICE r13): labels is a localCheckpointed flat RDD with
     # exactly the touched doc_id set, while touched's lineage is the
-    # caller's edge relation — dedup_cluster_canonical unpersists edges
+    # caller's edge relation — dedup_cluster_canonical releases edges
     # before the returned plan executes, so an anti-join on touched
     # re-ran the entire shingle-pair/jaccard pipeline a second time at
     # action time.
@@ -786,40 +786,32 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure."""
     docs = _docs(spark, sf_dir).select("doc_id")
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    # keyed repartition WITHOUT an explicit count before the persist:
-    # REPARTITION_BY_COL is AQE-coalescible, so the persisted edge
+    # keyed repartition WITHOUT an explicit count before the checkpoint:
+    # REPARTITION_BY_COL is AQE-coalescible, so the checkpointed edge
     # relation's partition count tracks its actual bytes (a handful of
     # near-dup edges → 1-2 partitions; a duplicate-heavy crawl → many)
     # instead of inheriting the corpus pipeline's full fan-out — every
     # CC sweep's map stages iterate over these partitions (optimization
     # round 13; the loop stages ran 96 near-empty tasks per sweep)
-    # localCheckpoint, not persist (optimization round 14, the
-    # simhash-audit finding): every CC sweep replans against the edge
-    # relation, and with a persisted python-kernel lineage each AQE
-    # replan dragged the full shingle-pair cached plan along — the
-    # sweep map stages ran ~45 ms/task of zero-CPU wall. The eager
-    # checkpoint is a flat LogicalRDD with the same AQE-coalesced
-    # keyed layout; alternating A/B at sf0.1: persist 2.27/1.66 s vs
-    # checkpoint 1.64/1.25 s, identical output.
-    edges = (
-        pairs.union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
+    # checkpoint, not persist (optimization round 14, the simhash-audit
+    # finding): every CC sweep replans against the edge relation, and
+    # with a persisted python-kernel lineage each AQE replan dragged
+    # the full shingle-pair cached plan along — the sweep map stages
+    # ran ~45 ms/task of zero-CPU wall. The eager checkpoint is a flat
+    # LogicalRDD with the same AQE-coalesced keyed layout; alternating
+    # A/B at sf0.1: persist 2.27/1.66 s vs checkpoint 1.64/1.25 s,
+    # identical output. It is scoped: labels is itself checkpointed
+    # (flat) and the isolated leg anti-joins labels, not edges, so the
+    # returned plan never reads the edge blocks.
+    with Scope(spark) as scope:
+        edges = scope.checkpointed(
+            pairs.union(
+                pairs.select(
+                    F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+                )
+            ).repartition(F.col("doc_a"))
         )
-        .repartition(F.col("doc_a"))
-        .localCheckpoint(eager=True)
-    )
-    labels = connected_components(docs, edges, symmetric_edges=True)
-    from watermill_kinesis_spark.operators.graph import (
-        _release_local_checkpoint,
-    )
-
-    # labels is itself checkpointed (flat) and the isolated leg
-    # anti-joins labels, not edges — nothing in the returned plan
-    # reads the edge blocks, so release them now (the persist-era
-    # unpersist point)
-    _release_local_checkpoint(edges)
+        labels = connected_components(docs, edges, symmetric_edges=True)
     return labels.select(
         "doc_id",
         F.col("comp").alias("cluster_id"),
@@ -1199,11 +1191,6 @@ def seed_label_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: the one live cached fingerprint DataFrame of simhash_recall_audit
-#: (unpersisted when replaced — the clustering-module slot convention)
-_cached_simhash_fps: DataFrame | None = None
-
-
 @query(
     "simhash_recall_audit",
     oracle="""
@@ -1255,17 +1242,6 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok_hash = F.transform(
         F.array_distinct(F.split("text", " ")), lambda t: F.xxhash64(t)
     )
-    # one live materialized fingerprint slot (the clustering-module
-    # convention): repeated runs — bench loops, driver sweeps —
-    # replace rather than accumulate block-manager state (r7 ADVICE)
-    global _cached_simhash_fps
-    if _cached_simhash_fps is not None:
-        from watermill_kinesis_spark.operators.graph import (
-            _release_local_checkpoint,
-        )
-
-        _release_local_checkpoint(_cached_simhash_fps)
-        _cached_simhash_fps = None
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
     base = (
@@ -1301,10 +1277,10 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the cached token hashes (profiled: 3 tasks × ~150 ms of
         # zero-JVM-CPU run per job). The checkpoint materializes the
         # fingerprints ONCE into flat RDD blocks; measured 1.96 → 1.33 s
-        # on the identical audit body, bit-identical output.
+        # on the identical audit body, bit-identical output. The
+        # returned plan reads it: the result's own checkpoint.
         .localCheckpoint(eager=True)
     )
-    _cached_simhash_fps = base
     fps = base.select("doc_id", "fp")
 
     pair_sum = lambda n: F.coalesce(  # Σ C(n,2), exact integer

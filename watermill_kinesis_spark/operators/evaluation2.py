@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -93,11 +94,10 @@ def blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ever materialized, so the plan is one corpus shuffle plus
     group-table rollups at any scale. The group table persists
     DISK_ONLY (heap-resident caches of corpus-scale relations starved
-    the unified pool at 100× — the r11 pagerank lesson) and is
-    RELEASED before return: the two rollups are each one row, so they
-    localCheckpoint(eager) — the scoped-cache-release convention
-    graph.py established in r11 — and the returned plan reads only
-    those bounded checkpoints. Degenerate corpora (< 2 docs) pin both
+    the unified pool at 100× — the r11 pagerank lesson) for the scope
+    of the call: the two rollups are each one row, so they
+    localCheckpoint and the returned plan reads only those bounded
+    checkpoints (functions/scope.py). Degenerate corpora (< 2 docs) pin both
     ratios at 10⁶ instead of dividing by zero (non-ANSI Spark would
     NULL where DuckDB errors — a cross-engine divergence). Pair sums
     ride HUGEINT ↔ DECIMAL(38,0) end to end (C(N,2) wraps int64 at
@@ -106,31 +106,30 @@ def blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     d = load_table(spark, sf_dir, "documents")
-    g = (
-        d.groupBy(
-            F.md5("text").alias("h"),
-            F.col("lang"),
-            F.expr(f"length(text) div {BLOCK_CHAR_BUCKET}").alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k"))
-        .persist(StorageLevel.DISK_ONLY)
-    )
     pairs = lambda c: F.expr(f"{c} * ({c} - 1) div 2")  # noqa: E731
-    per_block = g.groupBy("lang", "bucket").agg(
-        F.sum("k").alias("nb"), F.sum(pairs("k")).alias("co")
-    )
-    per_hash = g.groupBy("h").agg(F.sum("k").alias("m"))
-    tot_block = per_block.agg(
-        F.sum("nb").alias("n_docs"),
-        F.sum(pairs("nb")).alias("candidate_pairs"),
-        F.sum("co").alias("co_blocked_pairs"),
-    )
-    tot_hash = per_hash.agg(F.sum(pairs("m")).alias("true_pairs"))
-    # materialize the two 1-row rollups (second job reads g's disk
-    # cache), then release the corpus-scale cache before returning
-    tot_block = tot_block.localCheckpoint(eager=True)
-    tot_hash = tot_hash.localCheckpoint(eager=True)
-    g.unpersist()
+    with Scope(spark) as scope:
+        g = scope.persisted(
+            d.groupBy(
+                F.md5("text").alias("h"),
+                F.col("lang"),
+                F.expr(f"length(text) div {BLOCK_CHAR_BUCKET}").alias("bucket"),
+            ).agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k")),
+            StorageLevel.DISK_ONLY,
+        )
+        per_block = g.groupBy("lang", "bucket").agg(
+            F.sum("k").alias("nb"), F.sum(pairs("k")).alias("co")
+        )
+        per_hash = g.groupBy("h").agg(F.sum("k").alias("m"))
+        # materialize the two 1-row rollups (the second job reads g's
+        # disk cache)
+        tot_block = per_block.agg(
+            F.sum("nb").alias("n_docs"),
+            F.sum(pairs("nb")).alias("candidate_pairs"),
+            F.sum("co").alias("co_blocked_pairs"),
+        ).localCheckpoint()
+        tot_hash = per_hash.agg(
+            F.sum(pairs("m")).alias("true_pairs")
+        ).localCheckpoint()
     out = tot_block.crossJoin(F.broadcast(tot_hash)).selectExpr(
         "CAST(n_docs AS BIGINT) AS n_docs",
         "CAST(candidate_pairs AS BIGINT) AS candidate_pairs",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -118,163 +119,162 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     at cluster heaps)."""
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    b = ev.select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            # merge pin (r11): b is the post-shuffle distinct bucket
-            # relation — corpus-scale; at the 10× replica AQE elected
-            # to broadcast it into its own self-join from compressed
-            # shuffle bytes (~8 MB wire, ~150 MB deserialized × every
-            # task) and OOM'd the vanilla 1 GiB session at any
-            # heap-per-core. Sort-merge streams the bucket groups.
-            c.hint("merge"),
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .groupBy(
-            F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= TRIANGLE_MIN_SHARED)
-        .select("u", "v")
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    # total order for orientation: (degree, id) rank over |nodes| rows
-    rank = nodes.select(
-        "node",
-        "d",
-        F.row_number()
-        .over(W.orderBy(F.asc("d"), F.asc("node")))
-        .alias("r"),
-    )
-    ru = rank.select(F.col("node").alias("u"), F.col("r").alias("ru"))
-    rv = rank.select(F.col("node").alias("v"), F.col("r").alias("rv"))
-    # merge pins (r11): the rank table is |nodes|-sized and
-    # post-shuffle — at the 10× replica AQE's compressed-bytes
-    # estimate elected node/edge-scale broadcasts here and in the
-    # closure semi-join and OOM'd the 1 GiB vanilla session (the
-    # referential_integrity class); sort-merge spills and streams
-    oriented = (
-        e.join(ru.hint("merge"), "u")
-        .join(rv.hint("merge"), "v")
-        .select(
-            F.when(F.col("ru") < F.col("rv"), F.col("ru"))
-            .otherwise(F.col("rv"))
-            .alias("src"),
-            F.when(F.col("ru") < F.col("rv"), F.col("rv"))
-            .otherwise(F.col("ru"))
-            .alias("dst"),
-        )
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    # closure: Σ_edges |N⁺(u) ∩ N⁺(v)| counts each triangle exactly
-    # once at its lowest-ranked vertex — never materialize wedges (r11
-    # full-sweep fix: the densified 10× replica graph — 13.9M edges
-    # over just 15k nodes, replicas share the same 720-hour window so
-    # bucket sizes scale and pairs grow quadratically — generates
-    # 7.2e9 wedge rows, a 115 GB shuffle the old wedge⋈edge semi-join
-    # had to sort; OOM/hours-class on any heap budget). The
-    # intersection representation is DENSITY-ADAPTIVE:
-    #
-    # * DENSE graphs have few nodes relative to edges by definition,
-    #   so the full packed adjacency BITMAP (|nodes|²/8 bytes over
-    #   dense row_number ranks) is bounded — ≤64 MB covers ~23k nodes
-    #   (28 MB at the 10× replica). It broadcasts once and the closure
-    #   is a shuffle-free mapInPandas popcount of bm[u] & bm[v] per
-    #   edge partition — 7.2e9 wedge checks become ~26 GB of memory
-    #   bandwidth, no exchange at all. The |nodes|-row bitset collect
-    #   is a bounded ⊙ driver-fold artifact, gated by the same 64 MB
-    #   check.
-    # * SPARSE graphs (bitmap over budget ⇒ many nodes ⇒ low average
-    #   degree, and orientation bounds every out-list by O(√|E|)) use
-    #   per-node sorted adjacency ARRAYS carried through two
-    #   merge-pinned node-table joins and a JVM array_intersect —
-    #   Σ(d(u)+d(v)) volume, the standard edge-centric distributed
-    #   triangle shape.
-    n_nodes_val = int(rank.count())
-    nwords = (n_nodes_val + 63) // 64
-    if n_nodes_val * nwords * 8 <= _TRI_BITMAP_MAX_BYTES:
-        import numpy as np
-        import pandas as pd
-
-        def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            w = np.zeros(nwords, dtype=np.uint64)
-            d = pdf["dst"].to_numpy(dtype=np.int64) - 1
-            np.bitwise_or.at(
-                w,
-                d // 64,
-                np.left_shift(
-                    np.uint64(1), (d % 64).astype(np.uint64)
-                ),
+    with Scope(spark) as scope:
+        ev = load_table(spark, sf_dir, "events")
+        b = ev.select(
+            "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+        ).distinct()
+        a, c = b.alias("a"), b.alias("c")
+        e = scope.persisted(
+            a.join(
+                # merge pin (r11): b is the post-shuffle distinct bucket
+                # relation — corpus-scale; at the 10× replica AQE elected
+                # to broadcast it into its own self-join from compressed
+                # shuffle bytes (~8 MB wire, ~150 MB deserialized × every
+                # task) and OOM'd the vanilla 1 GiB session at any
+                # heap-per-core. Sort-merge streams the bucket groups.
+                c.hint("merge"),
+                (F.col("a.event_type") == F.col("c.event_type"))
+                & (F.col("a.h") == F.col("c.h"))
+                & (F.col("a.user_id") < F.col("c.user_id")),
             )
-            return pd.DataFrame(
-                {"src": [int(pdf["src"].iloc[0])], "bits": [w.tobytes()]}
+            .groupBy(
+                F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
             )
-
-        packed = oriented.groupBy("src").applyInPandas(
-            _pack, "src int, bits binary"
+            .agg(F.count(F.lit(1)).alias("shared"))
+            .where(F.col("shared") >= TRIANGLE_MIN_SHARED)
+            .select("u", "v"),
+            StorageLevel.DISK_ONLY,
         )
-        bm = np.zeros((n_nodes_val, nwords), dtype=np.uint64)
-        for row in packed.collect():  # bounded: ≤ _TRI_BITMAP_MAX_BYTES
-            bm[row.src - 1] = np.frombuffer(row.bits, dtype=np.uint64)
-        bc = spark.sparkContext.broadcast(bm.tobytes())
-        pop = np.array(
-            [bin(i).count("1") for i in range(256)], dtype=np.int64
+        nodes = (
+            e.select(F.col("u").alias("node"))
+            .unionAll(e.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
         )
-
-        def _popcount(batches):
-            m = np.frombuffer(bc.value, dtype=np.uint64).reshape(
-                n_nodes_val, nwords
-            )
-            for pdf in batches:
-                u = pdf["src"].to_numpy(dtype=np.int64) - 1
-                v = pdf["dst"].to_numpy(dtype=np.int64) - 1
-                x = np.bitwise_and(m[u], m[v])
-                t = int(pop[x.view(np.uint8)].sum())
-                yield pd.DataFrame({"t": [t]})
-
-        tri_row = (
-            oriented.mapInPandas(_popcount, "t long").agg(F.sum("t")).first()
+        # total order for orientation: (degree, id) rank over |nodes| rows
+        rank = nodes.select(
+            "node",
+            "d",
+            F.row_number()
+            .over(W.orderBy(F.asc("d"), F.asc("node")))
+            .alias("r"),
         )
-        n_triangles = int(tri_row[0] or 0)
-        bc.unpersist()
-    else:
-        adj = oriented.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs")
-        )
-        au = adj.select(F.col("src"), F.col("nbrs").alias("u_nbrs"))
-        av = adj.select(
-            F.col("src").alias("dst"), F.col("nbrs").alias("v_nbrs")
-        )
-        n_triangles = (
-            oriented.join(au.hint("merge"), "src")
-            .join(av.hint("merge"), "dst")
+        ru = rank.select(F.col("node").alias("u"), F.col("r").alias("ru"))
+        rv = rank.select(F.col("node").alias("v"), F.col("r").alias("rv"))
+        # merge pins (r11): the rank table is |nodes|-sized and
+        # post-shuffle — at the 10× replica AQE's compressed-bytes
+        # estimate elected node/edge-scale broadcasts here and in the
+        # closure semi-join and OOM'd the 1 GiB vanilla session (the
+        # referential_integrity class); sort-merge spills and streams
+        oriented = scope.persisted(
+            e.join(ru.hint("merge"), "u")
+            .join(rv.hint("merge"), "v")
             .select(
-                F.size(F.array_intersect("u_nbrs", "v_nbrs")).alias("t")
-            )
-            .agg(F.sum("t"))
-            .first()[0]
-            or 0
+                F.when(F.col("ru") < F.col("rv"), F.col("ru"))
+                .otherwise(F.col("rv"))
+                .alias("src"),
+                F.when(F.col("ru") < F.col("rv"), F.col("rv"))
+                .otherwise(F.col("ru"))
+                .alias("dst"),
+            ),
+            StorageLevel.DISK_ONLY,
         )
-    n_edges = e.count()
-    stats = nodes.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        # d(d-1) is always even ⇒ DIV 2 is exact; stays integer end to end
-        F.expr("CAST(sum(d * (d - 1)) DIV 2 AS BIGINT)").alias("n_wedges"),
-    ).first()
-    e.unpersist()
-    oriented.unpersist()
+        # closure: Σ_edges |N⁺(u) ∩ N⁺(v)| counts each triangle exactly
+        # once at its lowest-ranked vertex — never materialize wedges (r11
+        # full-sweep fix: the densified 10× replica graph — 13.9M edges
+        # over just 15k nodes, replicas share the same 720-hour window so
+        # bucket sizes scale and pairs grow quadratically — generates
+        # 7.2e9 wedge rows, a 115 GB shuffle the old wedge⋈edge semi-join
+        # had to sort; OOM/hours-class on any heap budget). The
+        # intersection representation is DENSITY-ADAPTIVE:
+        #
+        # * DENSE graphs have few nodes relative to edges by definition,
+        #   so the full packed adjacency BITMAP (|nodes|²/8 bytes over
+        #   dense row_number ranks) is bounded — ≤64 MB covers ~23k nodes
+        #   (28 MB at the 10× replica). It broadcasts once and the closure
+        #   is a shuffle-free mapInPandas popcount of bm[u] & bm[v] per
+        #   edge partition — 7.2e9 wedge checks become ~26 GB of memory
+        #   bandwidth, no exchange at all. The |nodes|-row bitset collect
+        #   is a bounded ⊙ driver-fold artifact, gated by the same 64 MB
+        #   check.
+        # * SPARSE graphs (bitmap over budget ⇒ many nodes ⇒ low average
+        #   degree, and orientation bounds every out-list by O(√|E|)) use
+        #   per-node sorted adjacency ARRAYS carried through two
+        #   merge-pinned node-table joins and a JVM array_intersect —
+        #   Σ(d(u)+d(v)) volume, the standard edge-centric distributed
+        #   triangle shape.
+        n_nodes_val = int(rank.count())
+        nwords = (n_nodes_val + 63) // 64
+        if n_nodes_val * nwords * 8 <= _TRI_BITMAP_MAX_BYTES:
+            import numpy as np
+            import pandas as pd
+
+            def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
+                w = np.zeros(nwords, dtype=np.uint64)
+                d = pdf["dst"].to_numpy(dtype=np.int64) - 1
+                np.bitwise_or.at(
+                    w,
+                    d // 64,
+                    np.left_shift(
+                        np.uint64(1), (d % 64).astype(np.uint64)
+                    ),
+                )
+                return pd.DataFrame(
+                    {"src": [int(pdf["src"].iloc[0])], "bits": [w.tobytes()]}
+                )
+
+            packed = oriented.groupBy("src").applyInPandas(
+                _pack, "src int, bits binary"
+            )
+            bm = np.zeros((n_nodes_val, nwords), dtype=np.uint64)
+            for row in packed.collect():  # bounded: ≤ _TRI_BITMAP_MAX_BYTES
+                bm[row.src - 1] = np.frombuffer(row.bits, dtype=np.uint64)
+            bc = spark.sparkContext.broadcast(bm.tobytes())
+            pop = np.array(
+                [bin(i).count("1") for i in range(256)], dtype=np.int64
+            )
+
+            def _popcount(batches):
+                m = np.frombuffer(bc.value, dtype=np.uint64).reshape(
+                    n_nodes_val, nwords
+                )
+                for pdf in batches:
+                    u = pdf["src"].to_numpy(dtype=np.int64) - 1
+                    v = pdf["dst"].to_numpy(dtype=np.int64) - 1
+                    x = np.bitwise_and(m[u], m[v])
+                    t = int(pop[x.view(np.uint8)].sum())
+                    yield pd.DataFrame({"t": [t]})
+
+            tri_row = (
+                oriented.mapInPandas(_popcount, "t long").agg(F.sum("t")).first()
+            )
+            n_triangles = int(tri_row[0] or 0)
+            bc.unpersist()
+        else:
+            adj = oriented.groupBy("src").agg(
+                F.sort_array(F.collect_list("dst")).alias("nbrs")
+            )
+            au = adj.select(F.col("src"), F.col("nbrs").alias("u_nbrs"))
+            av = adj.select(
+                F.col("src").alias("dst"), F.col("nbrs").alias("v_nbrs")
+            )
+            n_triangles = (
+                oriented.join(au.hint("merge"), "src")
+                .join(av.hint("merge"), "dst")
+                .select(
+                    F.size(F.array_intersect("u_nbrs", "v_nbrs")).alias("t")
+                )
+                .agg(F.sum("t"))
+                .first()[0]
+                or 0
+            )
+        n_edges = e.count()
+        stats = nodes.agg(
+            F.count(F.lit(1)).alias("n_nodes"),
+            # d(d-1) is always even ⇒ DIV 2 is exact; stays integer end to end
+            F.expr("CAST(sum(d * (d - 1)) DIV 2 AS BIGINT)").alias("n_wedges"),
+        ).first()
     return local_relation(spark, 
         [
             (
@@ -305,10 +305,6 @@ def bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: the one live checkpointed rank state of the latest pagerank call
-_pagerank_final = None
-
-
 def pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -320,9 +316,10 @@ def pagerank(
     join co-partitioned on the node key), summed per dst. The bipartite
     construction guarantees no dangling nodes, so total rank mass is
     conserved at |nodes| · 1/|nodes| scaled by the damping identity.
-    Iterations are persisted and the previous rank state released
-    per step — lineage stays O(1) and at 100 TB each step is a single
-    co-partitioned shuffle of |edges| rows. The degree and rank join
+    Every rank generation is checkpointed — lineage stays O(1) and at
+    100 TB each step is a single co-partitioned shuffle of |edges|
+    rows. The edge caches and the superseded generations are scoped to
+    the call; the returned ranks own their final checkpoint. The degree and rank join
     sides are MERGE-pinned (r11: the fact-key plan-audit rule flagged
     the planner electing to broadcast them — they are NODE-scale
     post-shuffle relations whose compressed-bytes size estimate
@@ -332,88 +329,76 @@ def pagerank(
     sort-merge spills and streams at any scale)."""
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
-    # persist the base edge relation for the setup phase (optimization
-    # round 14): it feeds deg, the deg-count, AND both sides of the
-    # edges_deg join — unpersisted, the orders⋈lineitem distinct
-    # pipeline was planned and EXECUTED four times at materialization
-    # (profiled: 4 × ~0.5 s identical 5.5 MB exchange-write stages)
-    edges = bipartite_edges(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    # Geometry-derived partition count for the persisted loop state
-    # (optimization round 14, guide §2): the caches previously pinned
-    # spark.sql.shuffle.partitions (32) partitions, and EVERY
-    # iteration's map stages — cache scan, sort, shuffle write — ran
-    # 32 near-empty tasks over ~5 MB of edges at sf0.1 (profiled
-    # 9-19 s of per-stage task run time carrying ~2 s of CPU). The
-    # explicit src repartition also makes the edge side of every
-    # iteration join exchange-free (the BFS two-copy rationale).
+    # Geometry-derived partition count for the loop state (optimization
+    # round 14, guide §2): at spark.sql.shuffle.partitions (32) EVERY
+    # iteration's map stages — cache scan, sort, shuffle write — ran 32
+    # near-empty tasks over ~5 MB of edges at sf0.1 (profiled 9-19 s of
+    # per-stage task run time carrying ~2 s of CPU). The explicit src
+    # repartition also makes the edge side of every iteration join
+    # exchange-free (the BFS two-copy rationale).
     par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
-    # DISK_ONLY (r11): edge- and node-scale caches on the heap starve
-    # the execution pool at replica scale — the 100× vanilla session
-    # died UNABLE_TO_ACQUIRE_MEMORY with the default MEMORY_AND_DISK
-    # because the protected storage half of the unified pool held the
-    # cached edges while every iteration's sorts competed for the
-    # rest; disk caches cost one serialization pass and nothing at
-    # cluster heaps
-    edges_deg = (
-        edges.join(deg.hint("merge"), "src")
-        .repartition(par, "src")
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    # the returned rank state of the previous invocation — replaced,
-    # never accumulated (the r7 ADVICE slot convention; the persist
-    # spelling leaked one node-scale cache per call the same way)
-    global _pagerank_final
-    if _pagerank_final is not None:
-        _release_local_checkpoint(_pagerank_final)
-        _pagerank_final = None
-    n_nodes = deg.count()  # also materializes edges_deg's inputs
-    base = (1.0 - damping) / n_nodes
-    # Rank state rides eager DISK_ONLY localCheckpoints, not persist
-    # (optimization round 14, the BFS lineage rule): persist caches
-    # execution but does NOT truncate lineage, so iteration i's
-    # analyzed plan chained every previous iteration — analysis/AQE
-    # planning cost grew O(iters²) (profiled: 615 stages, ~8 s of
-    # driver gap on a 14.5 s wall at sf0.1). The checkpoint keeps each
-    # iteration's plan a flat LogicalRDD join — measured 13.3-13.9 →
-    # 5.6-8.4 s same-session A/B. The checkpoint also materializes
-    # eagerly, replacing the per-iteration count() job. Rank values
-    # can differ from the persist spelling by float summation order
-    # (≤1 ulp, ~1e-15 relative measured); every consumer is
-    # insensitive by construction — pagerank_bipartite rounds to 9 dp
-    # and is rows-only, the mass audit's verdicts carry explicit
-    # tolerances, and test_graph.py pins tolerance-based invariants.
-    ranks = (
-        deg.select("src", F.lit(1.0 / n_nodes).alias("rank"))
-        .repartition(par, "src")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    for _ in range(iters):
-        contribs = (
-            edges_deg.join(ranks.hint("merge"), "src")
-            .select("dst", (F.col("rank") / F.col("degree")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
+
+    with Scope(spark) as scope:
+        # the base edge relation feeds deg, the deg-count AND both sides
+        # of the edges_deg join — unpersisted, the orders⋈lineitem
+        # distinct pipeline ran four times (optimization round 14,
+        # profiled: 4 × ~0.5 s identical 5.5 MB exchange-write stages).
+        # DISK_ONLY (r11): edge- and node-scale caches on the heap
+        # starve the execution pool at replica scale — the 100× vanilla
+        # session died UNABLE_TO_ACQUIRE_MEMORY with MEMORY_AND_DISK
+        edges = scope.persisted(
+            bipartite_edges(spark, sf_dir), StorageLevel.DISK_ONLY
         )
-        new_ranks = (
-            contribs.select(
-                F.col("dst").alias("src"),
-                (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("rank"),
-            )
-            # re-keying on the renamed node column keeps the cached
-            # rank state co-partitioned with edges_deg: the alias
-            # erases the groupBy's hash partitioning metadata, so
-            # without this every iteration re-exchanged the edge side
-            .repartition(par, "src")
-            .localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+        edges_deg = scope.persisted(
+            edges.join(deg.hint("merge"), "src").repartition(par, "src"),
+            StorageLevel.DISK_ONLY,
         )
-        _release_local_checkpoint(ranks)
-        ranks = new_ranks
-    edges_deg.unpersist()
-    edges.unpersist()
-    _pagerank_final = ranks
+        n_nodes = deg.count()  # also materializes edges_deg's inputs
+        base = (1.0 - damping) / n_nodes
+
+        def step(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                edges_deg.join(ranks.hint("merge"), "src")
+                .select("dst", (F.col("rank") / F.col("degree")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            return (
+                contribs.select(
+                    F.col("dst").alias("src"),
+                    (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("rank"),
+                )
+                # re-keying on the renamed node column keeps the rank
+                # state co-partitioned with edges_deg: the alias erases
+                # the groupBy's hash partitioning metadata, so without
+                # this every iteration re-exchanged the edge side
+                .repartition(par, "src")
+            )
+
+        # Rank state rides eager DISK_ONLY localCheckpoints, not persist
+        # (optimization round 14): persist caches execution but does NOT
+        # truncate lineage, so iteration i's analyzed plan chained every
+        # previous iteration — planning cost grew O(iters²) (profiled:
+        # 615 stages, ~8 s of driver gap on a 14.5 s wall at sf0.1). A
+        # checkpoint keeps each iteration's plan a flat LogicalRDD join
+        # and replaces the per-iteration count() job. Rank values can
+        # differ from the persist spelling by float summation order
+        # (≤1 ulp); every consumer is insensitive by construction —
+        # pagerank_bipartite rounds to 9 dp and is rows-only, the mass
+        # audit's verdicts carry explicit tolerances.
+        ranks = scope.checkpointed(
+            deg.select("src", F.lit(1.0 / n_nodes).alias("rank")).repartition(
+                par, "src"
+            ),
+            StorageLevel.DISK_ONLY,
+        )
+        for _ in range(iters - 1):
+            ranks = scope.checkpointed(step(ranks), StorageLevel.DISK_ONLY)
+        # the last generation is what the result reads: its own checkpoint
+        ranks = step(ranks).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
+        )
     return ranks.select(F.col("src").alias("node"), "rank")
 
 
@@ -631,29 +616,6 @@ def pagerank_mass_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (bipartite graphs alternate node kinds per hop)
 BFS_MAX_HOPS = 4
 
-#: the per-level frontier checkpoints of the latest invocation — the
-#: only BFS state that must outlive the call (the returned census
-#: DataFrame reads their union lazily). The edge caches are released
-#: before the function returns; the frontiers are disjoint, so the
-#: total retained bytes equal ONE copy of the final visited set (the
-#: pre-r14 loop retained the same bytes as a single checkpoint).
-#: Replaced, never accumulated.
-_bfs_final: list = []
-
-
-def _release_local_checkpoint(df) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint``-ed
-    DataFrame. ``DataFrame.unpersist`` only reaches CacheManager
-    entries, not checkpoint blocks; the checkpointed RDD itself hangs
-    off the LogicalRDD analyzed plan. After this the df is
-    unusable by design — only ever called on generations no live plan
-    references."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # session stopped / plan shape changed: nothing to free
-
-
 @query(
     "graph_bfs_hops",
     oracle=f"""
@@ -720,87 +682,71 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered plan is a single aggregate over their union; (3) frontier/visited join sides are
     shuffle_hash-pinned: they are node-scale but corpus-derived, and
     AQE's size estimate must never elect to broadcast a node-scale
-    relation at 100 TB. Checkpoint storage is scoped per invocation
-    (ADVICE r10): the edge caches are released before returning, and
-    only the disjoint per-level frontiers (whose union the returned
-    census plan reads — one visited set's worth of bytes in total)
-    survive the call, replaced on the next one.
+    relation at 100 TB. The edge caches and the loop's AQE override
+    are scoped to the call; the disjoint per-level frontiers (whose
+    union the returned census plan reads — one visited set's worth of
+    bytes in total) belong to the returned DataFrame.
     Output is ≤{BFS_MAX_HOPS + 1} census rows of exact integers."""
-    global _bfs_final
-    for df in _bfs_final:
-        _release_local_checkpoint(df)
-    _bfs_final = []
-
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
-    # AQE off for the LEVEL LOOP only (optimization round 14, guide
-    # §1.2 "configuration after algorithm"): every exchange inside the
-    # loop is already explicitly sized (geometry-derived ``par``) and
-    # strategy-pinned (shuffle_hash hints), so adaptive re-planning
-    # contributes nothing but one stage-materialization round trip per
-    # exchange per level — a pure driver-latency tax on an iterative
-    # operator (alternating A/B at sf0.1: 2.24/2.61 s AQE-on vs
-    # 1.89/1.95 s off; identical plans otherwise). This is NOT a
-    # local[32] tune: the loop's partition counts scale with input
-    # geometry, and the conf is restored in the existing ``finally``
-    # before the returned census plan compiles, so the corpus-facing
-    # aggregate still runs under AQE.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with Scope(spark) as scope:
+        # AQE off for the LEVEL LOOP only (optimization round 14, guide
+        # §1.2 "configuration after algorithm"): every exchange inside
+        # the loop is already explicitly sized (geometry-derived
+        # ``par``) and strategy-pinned (shuffle_hash hints), so adaptive
+        # re-planning contributes nothing but one stage-materialization
+        # round trip per exchange per level — a pure driver-latency tax
+        # on an iterative operator (alternating A/B at sf0.1: 2.24/2.61 s
+        # AQE-on vs 1.89/1.95 s off; identical plans otherwise). The
+        # scope restores the conf before the returned census plan
+        # compiles, so the corpus-facing aggregate still runs under AQE.
+        scope.set_conf("spark.sql.adaptive.enabled", "false")
 
-    li = load_table(spark, sf_dir, "lineitem")
-    # edge-relation partition count derived from the input geometry
-    # (optimization round 14, guide §2): the distinct (p, s) relation
-    # shuffles ~0.5× the lineitem parquet bytes, and EVERY level join
-    # stage iterates these partitions — a flat defaultParallelism
-    # pinned 32 near-empty tasks per level at sf0.1 (profiled ~0.2 s
-    # task-overhead wall per join stage for KB-scale frontiers)
-    par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
-    dedup = (
-        li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .repartition(F.col("p"), F.col("s"))
-        .distinct()
-    )
-    # TWO persisted copies, pre-partitioned on each traversal key
-    # (optimization round 13, guide §2.4 "two operations keyed the same
-    # way share one exchange"): every BFS level joins the edge relation
-    # once on s and once on p — with a single unkeyed persist each of
-    # the ≤2·BFS_MAX_HOPS level joins re-shuffled the full edge relation
-    # to its key; pre-partitioned copies make the edge side of every
-    # level join exchange-free (only the tiny frontier still shuffles).
-    # Memory cost is one extra edge copy — per-node-key partitioned, the
-    # same layout any production BFS keeps resident. The p-copy derives
-    # from the PERSISTED s-copy (optimization round 14): deriving both
-    # from the lazy dedup plan ran the scan+distinct pipeline twice,
-    # once per copy's materialization.
-    edges_s = dedup.repartition(par, "s").persist()
-    edges_p = edges_s.repartition(par, "p").persist()
-    seed = li.agg(F.min("l_suppkey").alias("k")).select(
-        (F.col("k") * 2 + 1).alias("node"), F.lit(0).alias("hop")
-    )
-    # Per-level FRONTIER checkpoints (optimization round 14, VERDICT
-    # r13 task 5): the former loop checkpointed the full accumulated
-    # visited set every level — O(levels·|V|) block-manager writes,
-    # with each superseded generation released by hand. Now only each
-    # level's frontier (the genuinely new rows) is materialized;
-    # ``visited`` is the lazy union of the ≤BFS_MAX_HOPS+1 flat
-    # checkpointed levels, so the anti-join and the final census read
-    # the same bytes as before while each level's job writes only
-    # frontier-sized data. Lineage still stays flat: every level plans
-    # against LogicalRDDs, never a growing recursive plan.
-    frontier = seed.localCheckpoint(eager=True)
-    levels = [frontier]
-    visited = frontier
-    try:
+        li = load_table(spark, sf_dir, "lineitem")
+        # edge-relation partition count derived from the input geometry
+        # (optimization round 14, guide §2): the distinct (p, s)
+        # relation shuffles ~0.5× the lineitem parquet bytes, and EVERY
+        # level join stage iterates these partitions — a flat
+        # defaultParallelism pinned 32 near-empty tasks per level at
+        # sf0.1 (profiled ~0.2 s task-overhead wall per join stage for
+        # KB-scale frontiers)
+        par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
+        dedup = (
+            li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
+            .repartition(F.col("p"), F.col("s"))
+            .distinct()
+        )
+        # TWO persisted copies, pre-partitioned on each traversal key
+        # (optimization round 13, guide §2.4 "two operations keyed the
+        # same way share one exchange"): every BFS level joins the edge
+        # relation once on s and once on p — with a single unkeyed
+        # persist each of the ≤2·BFS_MAX_HOPS level joins re-shuffled
+        # the full edge relation to its key; pre-partitioned copies make
+        # the edge side of every level join exchange-free (only the tiny
+        # frontier still shuffles). Memory cost is one extra edge copy.
+        # The p-copy derives from the PERSISTED s-copy (optimization
+        # round 14): deriving both from the lazy dedup plan ran the
+        # scan+distinct pipeline twice.
+        edges_s = scope.persisted(dedup.repartition(par, "s"))
+        edges_p = scope.persisted(edges_s.repartition(par, "p"))
+        seed = li.agg(F.min("l_suppkey").alias("k")).select(
+            (F.col("k") * 2 + 1).alias("node"), F.lit(0).alias("hop")
+        )
+        # Per-level FRONTIER checkpoints (optimization round 14): only
+        # each level's frontier (the genuinely new rows) is
+        # materialized; ``visited`` is the lazy union of the
+        # ≤BFS_MAX_HOPS+1 flat checkpointed levels, so each level's job
+        # writes only frontier-sized data and every level plans against
+        # LogicalRDDs, never a growing recursive plan. The levels are
+        # plain checkpoints: the returned census reads them.
+        frontier = seed.localCheckpoint(eager=True)
+        visited = frontier
         for hop in range(1, BFS_MAX_HOPS + 1):
             # bipartite PARITY (optimization round 14): the graph has
-            # only supplier↔part edges and the seed is a supplier
-            # (odd node), so by induction the hop-(h−1) frontier is
-            # all-odd when h is odd and all-even when h is even — the
-            # other side's join input is provably empty. The former
-            # loop still planned, scheduled, and ran BOTH joins every
-            # level: half the level-join stages were full-width scans
-            # of an edge cache against an empty frontier.
+            # only supplier↔part edges and the seed is a supplier (odd
+            # node), so by induction the hop-(h−1) frontier is all-odd
+            # when h is odd and all-even when h is even — the other
+            # side's join input is provably empty, so only one join runs
             if hop % 2 == 1:
                 expanded = edges_s.join(
                     frontier.select(F.expr("node div 2").alias("s")).hint(
@@ -831,16 +777,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             if obs.get["n"] == 0:
-                _release_local_checkpoint(nxt)
                 break  # frontier exhausted — the graph is fully reached
-            levels.append(nxt)
             visited = visited.unionByName(nxt)
             frontier = nxt
-    finally:
-        edges_s.unpersist(False)
-        edges_p.unpersist(False)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    _bfs_final = levels
     return (
         visited.groupBy("hop")
         .agg(

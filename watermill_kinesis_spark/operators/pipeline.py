@@ -210,8 +210,8 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical text normalization: lowercase → strip non-alphanumeric
     → squeeze whitespace → trim. All JVM regexp built-ins (no Python),
     partition-local, zero shuffle — the pre-tokenization stage of every
-    corpus build. (DuckDB needs the 'g' flag; Spark regexp_replace is
-    global by default.)"""
+    corpus build. (DuckDB needs the 'g' flag; Spark's regexp_replace
+    is global by default.)"""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
     norm = F.trim(
         F.regexp_replace(

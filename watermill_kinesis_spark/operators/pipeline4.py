@@ -597,11 +597,6 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 BLOOM_FPP_BUDGET_PERMILLE = 100
 BLOOM_AUDIT_BITS_PER_KEY = 16
 
-#: the one live cached member set of bloom_fpp_audit (see the
-#: clustering-module cache-slot convention)
-_cached_members: DataFrame | None = None
-
-
 @query(
     "bloom_fpp_audit",
     oracle="""
@@ -633,23 +628,15 @@ def bloom_fpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same at sf0.001 and at the sf1-equivalent sweep; a genuinely
     broken hash/pack/probe path still flips the verdict instantly."""
     ev = load_table(spark, sf_dir, "events")
-    # cache the distinct member set: it feeds the count, the build,
-    # and the probe union — one shuffle instead of three. One live
-    # slot, clustering.py's pattern: repeated runs (bench loops)
-    # replace rather than accumulate cache entries.
-    global _cached_members
-    if _cached_members is not None:
-        try:
-            _cached_members.unpersist(False)
-        except Exception:
-            pass  # previous session stopped; nothing left to release
+    # materialize the distinct member set: it feeds the count, the
+    # build, and the probe union — one shuffle instead of three. The
+    # returned plan reads it: the result's own checkpoint.
     members = (
         ev.where(F.col("user_id").isNotNull())  # a NULL key has no hash
         .select(F.col("user_id").cast("string").alias("key"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
-    _cached_members = members
     # geometry scales with membership: next power of two ≥ 16 bits/key
     # (floor 2^16). The driver artifact no longer scales with it:
     # _bloom_hit densifies the packed words into a plan literal only

@@ -205,7 +205,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .groupBy(F.col("l_partkey").alias("partkey"))
         .agg(F.sum(val).alias("v"))
-        .persist()
+        .localCheckpoint()
     )
     total = by_part.agg(
         ((F.sum("v").cast("double") / 10000) * F.lit(0.001)).alias("threshold")

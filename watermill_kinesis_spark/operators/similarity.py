@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -340,9 +341,11 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
+    # the corpus and query legs both read the assignment: materialize
+    # the kernel once, as the result's own checkpoint
     a = e.select("vec_id", "emb").mapInPandas(
         assign, "vec_id long, emb array<double>, cells array<int>"
-    ).persist()
+    ).localCheckpoint()
     corpus = a.select("vec_id", "emb", F.col("cells")[0].alias("cell"))
     q = (
         a.where(F.col("vec_id") < N_QUERIES)
@@ -386,12 +389,10 @@ def _ann_recall_audit(
     engine-specific hit count itself never crosses the compare (ANN
     candidate sets may wiggle with float partial-sum order); its
     correctness envelope does — the ``hll_accuracy_audit`` pattern."""
-    exact = similarity_topk(spark, sf_dir).persist()
-    try:
-        # eager, like lsh_recall_audit: the three scalars are computed
-        # NOW so the cached brute-force result can be released before
-        # returning (a lazy plan would pin it for the session — r7
-        # review)
+    # eager, like lsh_recall_audit: the three scalars are computed NOW
+    # so the cached brute-force result is released before returning
+    with Scope(spark) as scope:
+        exact = scope.persisted(similarity_topk(spark, sf_dir))
         n_hits = exact.join(
             ann.select("query_id", "neighbor_id"),
             ["query_id", "neighbor_id"],
@@ -402,8 +403,6 @@ def _ann_recall_audit(
             .cast("bigint")
             .alias("exact_top1_sum"),
         ).collect()[0]
-    finally:
-        exact.unpersist()
     ok = 1 if n_hits * 1000 >= floor_permille * base.n_queries * TOP_K else 0
     return local_relation(spark, 
         [(base.n_queries, TOP_K, base.exact_top1_sum, ok)],

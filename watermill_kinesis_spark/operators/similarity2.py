@@ -1004,8 +1004,8 @@ def binary_quant_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance is ``bit_count(code_a ^ code_b)``, one xor + popcount
     per comparison, no Python anywhere.
 
-    The top-k uses the small-distance-domain trick instead of a
-    global rank window: a 64-bit code admits only 65 Hamming values,
+    The top-k uses the small-distance-domain trick instead of a global
+    rank window: a 64-bit code admits only 65 Hamming values,
     so pass 1 aggregates (query, hamming) → count — map-side
     combinable to ≤ 65·|queries| rows per task, NO corpus-scale
     shuffle — and the per-query cutoff h* (the smallest distance

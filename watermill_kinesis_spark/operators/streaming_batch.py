@@ -21,6 +21,7 @@ import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 from watermill_kinesis_spark.streaming import source as stream_source
@@ -483,43 +484,32 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     out_dir = os.path.join(base, "out")
 
-    prior_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    def run_once() -> None:
+        decoded = stream_source.subscribe(spark, topic)
+        acct = key_accounting_tws(decoded)
+        q = (
+            acct.writeStream.format("json")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-        def run_once() -> None:
-            decoded = stream_source.subscribe(spark, topic)
-            acct = key_accounting_tws(decoded)
-            q = (
-                acct.writeStream.format("json")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        b0 = _event_messages(spark, sf_dir, F.col("event_id") < 600)
-        b1 = _event_messages(
-            spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
+    b0 = _event_messages(spark, sf_dir, F.col("event_id") < 600)
+    b1 = _event_messages(
+        spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
+    )
+    with Scope(spark) as scope:
+        scope.set_conf(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         _publish(b0, topic)
         run_once()
         _publish(b1, topic)
         run_once()  # restart: ValueState restored, totals continue
-    finally:
-        if prior_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior_provider
-            )
 
     out = spark.read.schema(
         "partition_key string, n_messages long, n_bytes long, batch_messages long"

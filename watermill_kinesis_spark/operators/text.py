@@ -14,7 +14,7 @@ IEEE-754 on both engines, so oracle hashes are bit-stable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
@@ -638,11 +638,18 @@ def stupid_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c12 = bi_train.groupBy("bg").agg(F.count(F.lit(1)).alias("c12"))
     uni_train = train.select(F.explode("p").alias("w"))
-    # cache the vocab-sized count table: the scalar N comes from ITS
-    # sum (not a second full explode-and-count over the train corpus)
-    # and both count-table joins below reuse the same materialization
-    c1 = uni_train.groupBy("w").agg(F.count(F.lit(1)).alias("c1")).cache()
-    n_tot = int(c1.agg(F.sum("c1")).first()[0])
+    # materialize the vocab-sized count table — the result's own
+    # checkpoint, which both count-table joins below reuse; the scalar
+    # N is ITS sum, observed on the same job (not a second full
+    # explode-and-count over the train corpus)
+    n_obs = Observation("stupid_backoff_n")
+    c1 = (
+        uni_train.groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c1"))
+        .observe(n_obs, F.sum("c1").alias("n"))
+        .localCheckpoint()
+    )
+    n_tot = int(n_obs.get["n"])
     held = (
         toks.where((F.col("doc_id") % 10 == 0) & (F.col("np") >= 2))
         .select("doc_id", F.explode(bigram_expr).alias("bg"))

@@ -169,66 +169,3 @@ def adaptive_partitions(
         return spark.sparkContext.defaultParallelism
     want = -(-int(size * expand) // target_bytes)  # ceil
     return max(2, min(spark.sparkContext.defaultParallelism, want))
-
-
-#: per-table cache budget for ``cache_tables`` (bytes on disk). Tables
-#: above the budget keep streaming from parquet — at 100 TB that's every
-#: fact table; the pinned set is the dimension/hot-table working set.
-CACHE_BUDGET_BYTES = 256 * 1024 * 1024
-
-
-def cache_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    names: tuple[str, ...] = TABLE_NAMES,
-    budget_bytes: int | None = None,
-) -> list[str]:
-    """Pin hot tables in executor memory — the resident engine's buffer
-    pool. Each table under the size budget is redistributed across the
-    cluster's full parallelism (the testdata ships single-row-group
-    parquet files, which otherwise scan as ONE task) and persisted
-    deserialized, so every subsequent query starts from an in-memory,
-    fully-parallel relation.
-
-    Scale policy: the budget is per-table bytes ON DISK. On a 100 TB
-    deployment the dims (region/nation/supplier/customer/part) fit and
-    get pinned; lineitem-sized facts exceed any sane budget and keep
-    streaming from parquet with pushdown/pruning intact. Returns the
-    list of tables actually pinned; call ``.unpersist()`` via the memo
-    to release."""
-    budget = CACHE_BUDGET_BYTES if budget_bytes is None else budget_bytes
-    pinned: list[str] = []
-    par = spark.sparkContext.defaultParallelism
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            continue
-        if size > budget:
-            continue
-        per_session = _TABLE_MEMO.setdefault(spark, {})
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        cached = per_session.get(key)
-        if cached is not None and cached.is_cached:
-            pinned.append(name)
-            continue
-        df = load_table(spark, sf_dir, name).repartition(par).persist()
-        df.count()  # materialize now so queries never pay the warm-up
-        per_session[key] = df
-        pinned.append(name)
-    return pinned
-
-
-def uncache_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> None:
-    """Release pinned tables and drop them from the catalog memo, so the
-    next ``load_table`` reads parquet again (restoring scan-level
-    pushdown/pruning for those tables)."""
-    per_session = _TABLE_MEMO.get(spark) or {}
-    for name in names:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        df = per_session.pop(key, None)
-        if df is not None and df.is_cached:
-            df.unpersist()
