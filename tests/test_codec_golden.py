@@ -240,12 +240,11 @@ def test_proto_sql_encoder_byte_parity_with_runtime(spark):
     assert bytes(rw.w) == encode_envelope("", {}, b"")
 
 
-def test_marshal_proto_engines_agree_and_sql_has_no_python_stage(spark):
-    """marshal_proto's default (JVM) and pandas engines emit identical
-    wire over a realistic message relation, and the default engine's
-    plan contains NO Python stage — the property that closes the r10
-    forced-marshal throughput gap."""
-    from watermill_kinesis_spark.protocodec import marshal_proto
+def test_marshal_proto_matches_runtime_encoder_and_has_no_python_stage(spark):
+    """marshal_proto's JVM-expression wire equals the protobuf runtime
+    encoder (``encode_envelope``) applied to the collected rows, over a
+    realistic message relation, and its plan contains NO Python stage."""
+    from watermill_kinesis_spark.protocodec import encode_envelope, marshal_proto
 
     msgs = spark.createDataFrame(
         [
@@ -254,14 +253,14 @@ def test_marshal_proto_engines_agree_and_sql_has_no_python_stage(spark):
         ],
         "uuid string, payload binary, metadata map<string,string>",
     )
-    sql_rows = sorted(
+    got = sorted(
         (bytes(r.data), r.partition_key)
         for r in marshal_proto(msgs).collect()
     )
-    pd_rows = sorted(
-        (bytes(r.data), r.partition_key)
-        for r in marshal_proto(msgs, engine="pandas").collect()
+    want = sorted(
+        (encode_envelope(r.uuid, r.metadata, bytes(r.payload)), r.metadata["partitionKey"])
+        for r in msgs.collect()
     )
-    assert sql_rows == pd_rows
+    assert got == want
     plan = marshal_proto(msgs)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

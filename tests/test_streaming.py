@@ -20,12 +20,14 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from watermill_kinesis_spark import codec
+from watermill_kinesis_spark.api import PublisherBuilder, SubscriberBuilder
+from watermill_kinesis_spark.operators.streaming_batch import _subscribe
 from watermill_kinesis_spark.schema import MESSAGE_SCHEMA
 from watermill_kinesis_spark.streaming import (
     CollectingPublisher,
     DirectoryPublisher,
     publish_batch,
-    subscribe,
+    read_topic,
 )
 from watermill_kinesis_spark.streaming.sink import PutRecordsEntry, put_chunked
 
@@ -46,6 +48,13 @@ def _publish(msgs, topic, n_shards=4):
     """Publish messages to a topic directory through the engine's batch
     publisher and the directory transport's writer."""
     publish_batch(msgs, lambda: DirectoryPublisher(topic, n_shards))
+
+
+def _paced_subscribe(spark, topic, max_files_per_trigger):
+    """Decoded message stream of a topic directory, at most
+    ``max_files_per_trigger`` put files per micro-batch."""
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return codec.unmarshal(read_topic(reader, topic), drop_corrupt=True)
 
 
 def test_put_chunked_splits_above_500(spark):
@@ -140,26 +149,96 @@ def test_kinesis_publisher_exhausts_retry_budget(spark):
         put_chunked(pub, [PutRecordsEntry("d", "k")], max_retries=2)
 
 
-def test_builder_wires_kinesis_transport(spark):
-    """with_kinesis flips the transport and the factory builds the
-    boto3-backed publisher for the topic-as-stream-name (no directory
-    endpoint required)."""
-    from watermill_kinesis_spark.api import PublisherBuilder
+def test_builder_wires_kinesis_transport(monkeypatch):
+    """with_kinesis flips the transport: the executor-side factory
+    builds its boto3 client through the transport's one client builder
+    with the configured region and endpoint, and puts to the topic as
+    the stream name (no directory endpoint required)."""
+    import boto3
 
+    made: list[tuple] = []
+    client = _StubKinesisClient()
+
+    def fake_client(service, **kwargs):
+        made.append((service, kwargs))
+        return client
+
+    monkeypatch.setattr(boto3, "client", fake_client)
     pub = (
         PublisherBuilder()
         .with_kinesis(region_name="eu-west-1", endpoint_url="http://localhost:4566")
         .build()
     )
-    factory = pub._transport_factory("orders-stream")
-    # the factory is executor-side; building it must not require boto3
-    # here — only calling it does. Verify the closure carries the config.
-    import inspect
+    put_chunked(pub._transport_factory("orders-stream")(), [PutRecordsEntry("d", "k")])
+    assert made == [
+        (
+            "kinesis",
+            {"region_name": "eu-west-1", "endpoint_url": "http://localhost:4566"},
+        )
+    ]
+    assert [c["StreamName"] for c in client.calls] == ["orders-stream"]
 
-    closure = inspect.getclosurevars(factory).nonlocals
-    assert closure["stream_name"] == "orders-stream"
-    assert closure["region_name"] == "eu-west-1"
-    assert closure["endpoint_url"] == "http://localhost:4566"
+
+def _put_files_per_key(topic_dir):
+    """partition key → the put files of the topic holding its records."""
+    files: dict[str, set] = {}
+    for fname in os.listdir(topic_dir):
+        with open(os.path.join(topic_dir, fname)) as f:
+            for line in f:
+                files.setdefault(json.loads(line)["partition_key"], set()).add(fname)
+    return files
+
+
+def _keyed_messages(spark):
+    """120 messages over 3 partition keys, every key in each of 4 input
+    partitions."""
+    rows = [
+        Row(
+            uuid=f"u-{i}",
+            payload=f"p-{i}".encode(),
+            metadata={"partitionKey": f"key-{i % 3}"},
+        )
+        for i in range(120)
+    ]
+    return spark.createDataFrame(rows, MESSAGE_SCHEMA).repartition(4)
+
+
+def test_publisher_puts_each_key_in_one_call(spark, tmp_path):
+    """The builder's Publisher publishes through the sink's one put
+    loop: each key's records go out in one put call, so they land in
+    one put file (one PutRecords per batch and key, the reference's
+    per-key order, marshaller.go:65-69)."""
+    root = str(tmp_path / "endpoint")
+    msgs = _keyed_messages(spark)
+    assert msgs.rdd.getNumPartitions() == 4
+    PublisherBuilder().with_endpoint(root).build().publish("topic", msgs)
+    files = _put_files_per_key(os.path.join(root, "topic"))
+    assert sorted(files) == ["key-0", "key-1", "key-2"]
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+def test_publisher_stream_puts_each_key_in_one_call(spark, tmp_path):
+    """The same rule on the streaming path: one micro-batch of 4 input
+    partitions puts each key's records in one call."""
+    src = str(tmp_path / "src")
+    _keyed_messages(spark).write.parquet(src)
+    root = str(tmp_path / "endpoint")
+    q = (
+        PublisherBuilder()
+        .with_endpoint(root)
+        .build()
+        .publish_stream(
+            "topic",
+            spark.readStream.schema(MESSAGE_SCHEMA).parquet(src),
+            str(tmp_path / "ckpt"),
+            availableNow=True,
+        )
+    )
+    q.awaitTermination()
+    assert [p["numInputRows"] for p in q.recentProgress] == [120]
+    files = _put_files_per_key(os.path.join(root, "topic"))
+    assert sorted(files) == ["key-0", "key-1", "key-2"]
+    assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_stream_roundtrip_with_corrupt_skip(spark, tmp_path):
@@ -179,7 +258,7 @@ def test_stream_roundtrip_with_corrupt_skip(spark, tmp_path):
     with open(os.path.join(topic, "shard-0-poison.json"), "w") as f:
         f.write(poison + "\n")
 
-    decoded = subscribe(spark, topic)
+    decoded = _subscribe(spark, topic)
     q = (
         decoded.writeStream.format("memory")
         .queryName("rt_test")
@@ -256,7 +335,7 @@ def test_restart_replay_exactly_once(spark, tmp_path):
     _publish(m1, topic, n_shards=2)
 
     def run_once():
-        decoded = subscribe(spark, topic)
+        decoded = _subscribe(spark, topic)
         q = (
             decoded.selectExpr("uuid", "CAST(payload AS STRING) AS body")
             .writeStream.format("json")
@@ -444,7 +523,6 @@ def test_rate_limited_drain_paces_micro_batches(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.messages import messages_from_events
-    from watermill_kinesis_spark.streaming import source as stream_source
 
     topic = str(tmp_path / "topic")
     msgs = messages_from_events(spark, sf_dir).where(
@@ -453,7 +531,7 @@ def test_rate_limited_drain_paces_micro_batches(spark, sf_dir, tmp_path):
     n_in = msgs.count()
     _publish(msgs, topic, n_shards=4)
 
-    decoded = stream_source.subscribe(spark, topic, max_files_per_trigger=1)
+    decoded = _paced_subscribe(spark, topic, 1)
     q = (
         decoded.select("uuid")
         .writeStream.format("memory")
@@ -479,7 +557,6 @@ def test_reshard_mid_stream_no_loss(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.messages import messages_from_events
-    from watermill_kinesis_spark.streaming import source as stream_source
 
     topic = str(tmp_path / "topic")
     ckpt = str(tmp_path / "ckpt")
@@ -491,7 +568,7 @@ def test_reshard_mid_stream_no_loss(spark, sf_dir, tmp_path):
 
     def drain():
         q = (
-            stream_source.subscribe(spark, topic)
+            _subscribe(spark, topic)
             .select("uuid", F.col("metadata").getItem("shardID").alias("shard_id"))
             .writeStream.format("json")
             .option("path", out_dir)
@@ -525,7 +602,6 @@ def test_idempotent_sink_survives_batch_replay(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.streaming_batch import _event_messages
-    from watermill_kinesis_spark.streaming import source as stream_source
     from watermill_kinesis_spark.streaming.sink import idempotent_batch_sink
 
     topic = str(tmp_path / "topic")
@@ -537,7 +613,7 @@ def test_idempotent_sink_survives_batch_replay(spark, sf_dir, tmp_path):
 
     def run_once(ckpt_dir):
         q = (
-            stream_source.subscribe(spark, topic)
+            _subscribe(spark, topic)
             .writeStream.foreachBatch(idempotent_batch_sink(out))
             .option("checkpointLocation", ckpt_dir)
             .trigger(availableNow=True)
@@ -589,7 +665,6 @@ def test_poison_batch_lands_in_dlq_and_stream_progresses(spark, sf_dir, tmp_path
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.streaming_batch import _event_messages
-    from watermill_kinesis_spark.streaming import source as stream_source
     from watermill_kinesis_spark.streaming.sink import (
         dead_letter_sink,
         idempotent_batch_sink,
@@ -616,7 +691,7 @@ def test_poison_batch_lands_in_dlq_and_stream_progresses(spark, sf_dir, tmp_path
 
     def run_once():
         q = (
-            stream_source.subscribe(spark, topic, max_files_per_trigger=1)
+            _paced_subscribe(spark, topic, 1)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -659,7 +734,6 @@ def test_chaos_reshard_corrupt_poison_restart_conserves_rows(spark, sf_dir, tmp_
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.streaming_batch import _event_messages
-    from watermill_kinesis_spark.streaming import source as stream_source
     from watermill_kinesis_spark.streaming.sink import (
         dead_letter_sink,
         idempotent_batch_sink,
@@ -708,7 +782,7 @@ def test_chaos_reshard_corrupt_poison_restart_conserves_rows(spark, sf_dir, tmp_
 
     def run_once():
         q = (
-            stream_source.subscribe(spark, topic, max_files_per_trigger=2)
+            _paced_subscribe(spark, topic, 2)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -730,17 +804,20 @@ def test_chaos_reshard_corrupt_poison_restart_conserves_rows(spark, sf_dir, tmp_
     quarantined = spark.read.parquet(dlq)
     # conservation: all valid rows exactly once across sink+DLQ
     assert delivered.count() + quarantined.count() == n_valid
-    all_uuids = delivered.select("uuid").union(quarantined.select("uuid"))
-    assert all_uuids.distinct().count() == n_valid
+    all_rows = delivered.unionByName(quarantined)
+    assert all_rows.select("uuid").distinct().count() == n_valid
     assert quarantined.where(F.col("uuid") == poison_uuid).count() == 1
     # corrupt records skipped, not delivered anywhere
     assert delivered.where(F.col("metadata")["partitionKey"] == "kx").count() == 0
-    # the resharded wave's messages arrived (shard spread grew)
+    # the resharded wave's messages arrived (shard spread grew): every
+    # shard's records reached the sink or, sharing the poison batch, the
+    # DLQ (Spark's file source orders same-millisecond files
+    # arbitrarily, so which files share that batch varies run to run)
     shards = {
         r[0]
-        for r in delivered.select(F.col("metadata")["shardID"]).distinct().collect()
+        for r in all_rows.select(F.col("metadata")["shardID"]).distinct().collect()
     }
-    assert len(shards) >= 3, f"reshard files not consumed: {shards}"
+    assert shards == {f"shard-{i}" for i in range(4)}, f"reshard files not consumed: {shards}"
 
 
 def test_streaming_progress_metrics_surface(spark, sf_dir, tmp_path):
@@ -751,7 +828,6 @@ def test_streaming_progress_metrics_surface(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.streaming_batch import _event_messages
-    from watermill_kinesis_spark.streaming import source as stream_source
 
     topic = str(tmp_path / "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 300)
@@ -759,7 +835,7 @@ def test_streaming_progress_metrics_surface(spark, sf_dir, tmp_path):
     n_in = msgs.count()
 
     q = (
-        stream_source.subscribe(spark, topic)
+        _subscribe(spark, topic)
         .writeStream.format("noop")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -785,7 +861,6 @@ def test_state_ttl_expires_idle_keys(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.operators.streaming_batch import _event_messages
-    from watermill_kinesis_spark.streaming import source as stream_source
     from watermill_kinesis_spark.streaming.stateful import key_accounting_ttl
 
     topic = str(tmp_path / "topic")
@@ -798,7 +873,7 @@ def test_state_ttl_expires_idle_keys(spark, sf_dir, tmp_path):
     )
     _publish(b0, topic)
 
-    acct = key_accounting_ttl(stream_source.subscribe(spark, topic), ttl_ms)
+    acct = key_accounting_ttl(_subscribe(spark, topic), ttl_ms)
     q = (
         acct.writeStream.format("json")
         .option("path", out)
@@ -846,8 +921,6 @@ def test_sim_publisher_roundtrips_bytes_payloads(spark, tmp_path):
     base64 on the JSON line, latin1-mapped in the string column, exact
     bytes via encode(data, 'ISO-8859-1') — the same convention through
     the streaming subscribe and the builder's batch snapshot."""
-    from watermill_kinesis_spark.api import SubscriberBuilder
-
     root = str(tmp_path / "endpoint")
     topic = os.path.join(root, "topic")
     payload = bytes(range(256)) * 2  # every byte value, not UTF-8 safe
@@ -863,8 +936,14 @@ def test_sim_publisher_roundtrips_bytes_payloads(spark, tmp_path):
             "partition_key", F.encode("data", "ISO-8859-1").alias("raw")
         )
 
+    sub = (
+        SubscriberBuilder()
+        .with_endpoint(root)
+        .with_unmarshaller(lambda wire: wire)
+        .build()
+    )
     q = (
-        raw_by_key(subscribe(spark, topic, decode=False))
+        raw_by_key(sub.subscribe(spark, "topic"))
         .writeStream.format("memory")
         .queryName("bytes_payload_stream")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -872,16 +951,9 @@ def test_sim_publisher_roundtrips_bytes_payloads(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    snapshot = (
-        SubscriberBuilder()
-        .with_endpoint(root)
-        .with_unmarshaller(lambda wire: wire)
-        .build()
-        .subscribe_batch(spark, "topic")
-    )
     for rows in (
         spark.table("bytes_payload_stream").collect(),
-        raw_by_key(snapshot).collect(),
+        raw_by_key(sub.subscribe_batch(spark, "topic")).collect(),
     ):
         by_key = {r.partition_key: bytes(r.raw) for r in rows}
         assert by_key["pk-bytes"] == payload

@@ -30,11 +30,11 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 
 from watermill_kinesis_spark import codec
+from watermill_kinesis_spark.sources import kinesis_aws
 from watermill_kinesis_spark.streaming.sink import (
     DirectoryPublisher,
-    PutRecordsEntry,
-    kinesis_publisher_factory,
-    put_chunked,
+    KinesisPublisher,
+    put_wire,
 )
 from watermill_kinesis_spark.streaming.source import read_topic
 
@@ -71,9 +71,14 @@ class _PublisherOptions:
 
 
 class Publisher:
-    """Batch/streaming publisher bound to an endpoint (a topic-root
-    directory in the simulator — the Localstack-override analogue,
-    reference publisher.go:28-34)."""
+    """Batch/streaming publisher bound to a transport: a topic-root
+    directory (the simulator — the Localstack-override analogue,
+    reference publisher.go:28-34) or, after ``with_kinesis``, AWS
+    Kinesis with topic = stream name. Both publish calls marshal with
+    the builder's marshaller and put through ``sink.put_wire``, the
+    message layer's one put loop: records are repartitioned by
+    partition key, so each key's records go out in one partition's
+    ordered put calls (reference publisher.go:64-86)."""
 
     def __init__(self, opts: _PublisherOptions):
         if opts.transport == "directory" and not opts.endpoint:
@@ -97,11 +102,14 @@ class Publisher:
         driver boundary)."""
         opts = self._opts
         if opts.transport == "kinesis":
-            # topic = Kinesis stream name (reference publisher.go:81)
-            return kinesis_publisher_factory(
-                topic,
-                region_name=opts.kinesis_region,
-                endpoint_url=opts.kinesis_endpoint_url,
+            # topic = Kinesis stream name (reference publisher.go:81);
+            # the client comes from the reader's and writer's builder
+            options = {
+                "regionname": opts.kinesis_region,
+                "endpointurl": opts.kinesis_endpoint_url,
+            }
+            return lambda: KinesisPublisher(
+                topic, client=kinesis_aws._make_client(options)
             )
         topic_dir, n_shards = self._topic_dir(topic), opts.n_shards
         return lambda: DirectoryPublisher(topic_dir, n_shards)
@@ -110,35 +118,20 @@ class Publisher:
         """Marshal + chunked, partition-parallel put (reference
         Publish, publisher.go:64-86 — with >500 chunking and
         per-record retry the reference left TODO)."""
-        wire = self._opts.marshaller(messages)
-        factory = self._transport_factory(topic)
-
-        def run(rows) -> None:
-            entries = [PutRecordsEntry(r.data, r.partition_key) for r in rows]
-            if entries:
-                put_chunked(factory(), entries)
-
-        wire.foreachPartition(run)
+        put_wire(self._opts.marshaller(messages), self._transport_factory(topic))
 
     def publish_stream(
         self, topic: str, messages: DataFrame, checkpoint_dir: str, **trigger
     ):
-        """Streaming publish through ``foreachBatch`` — epoch commit is
-        the per-batch checkpoint (reference subscriber.go:65-70)."""
-        opts = self._opts
+        """Streaming publish through ``foreachBatch``: each micro-batch
+        is published like ``publish``; epoch commit is the per-batch
+        checkpoint (reference subscriber.go:65-70), and a raised error
+        replays the batch from the checkpoint (at-least-once)."""
+        marshaller = self._opts.marshaller
         factory = self._transport_factory(topic)
 
         def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            wire = opts.marshaller(batch_df)
-
-            def run(rows) -> None:
-                entries = [
-                    PutRecordsEntry(r.data, r.partition_key) for r in rows
-                ]
-                if entries:
-                    put_chunked(factory(), entries)
-
-            wire.foreachPartition(run)
+            put_wire(marshaller(batch_df), factory)
 
         writer = messages.writeStream.foreachBatch(sink).option(
             "checkpointLocation", checkpoint_dir
@@ -228,8 +221,6 @@ class Subscriber:
         ``spark.readStream``)."""
         opts = self._opts
         if opts.transport == "kinesis":
-            from watermill_kinesis_spark.sources import kinesis_aws
-
             kinesis_aws.register(spark)
             reader = (
                 reader.format(kinesis_aws.FORMAT_NAME)

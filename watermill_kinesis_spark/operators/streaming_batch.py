@@ -21,10 +21,10 @@ import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from watermill_kinesis_spark.api import SubscriberBuilder
 from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
-from watermill_kinesis_spark.streaming import source as stream_source
 from watermill_kinesis_spark.streaming.semantics import dedup_by_uuid
 from watermill_kinesis_spark.streaming.sink import DirectoryPublisher, publish_batch
 
@@ -56,6 +56,13 @@ def _publish(messages: DataFrame, topic: str) -> None:
     )
 
 
+def _subscribe(spark: SparkSession, topic: str) -> DataFrame:
+    """Decoded message stream of a topic directory (corrupt records
+    skipped), through the builder's subscriber."""
+    root, name = os.path.split(topic)
+    return SubscriberBuilder().with_endpoint(root).build().subscribe(spark, name)
+
+
 def _run_available_now(stream_df: DataFrame, name: str, checkpoint: str):
     q = (
         stream_df.writeStream.format("memory")
@@ -84,7 +91,7 @@ def stream_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
     _publish(msgs, topic)
-    decoded = stream_source.subscribe(spark, topic)
+    decoded = _subscribe(spark, topic)
     counted = decoded.select(
         F.col("metadata").getItem("eventType").alias("event_type"),
         F.col("metadata").getItem("shardID").alias("shard_id"),
@@ -119,7 +126,7 @@ def stream_dedup_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch0: all messages; batch1: the same messages again (redelivery)
     _publish(msgs, topic)
     _publish(msgs, topic)
-    decoded = stream_source.subscribe(spark, topic).withColumn(
+    decoded = _subscribe(spark, topic).withColumn(
         "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
     )
     deduped = dedup_by_uuid(decoded, delay="1 hour")
@@ -169,7 +176,7 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(base, "out")
 
     def run_once() -> None:
-        decoded = stream_source.subscribe(spark, topic).withColumn(
+        decoded = _subscribe(spark, topic).withColumn(
             "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
         )
         windowed = (
@@ -224,7 +231,7 @@ def stream_stateful_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(base, "out")
 
     def run_once() -> None:
-        decoded = stream_source.subscribe(spark, topic)
+        decoded = _subscribe(spark, topic)
         acct = key_accounting(decoded)
         q = (
             acct.writeStream.format("json")
@@ -273,7 +280,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").cast("string").alias("partition_key"),
         "c_mktsegment",
     )
-    decoded = stream_source.subscribe(spark, topic).select(
+    decoded = _subscribe(spark, topic).select(
         F.col("metadata").getItem("partitionKey").alias("partition_key")
     )
     enriched = decoded.join(cust, "partition_key", "left")
@@ -303,7 +310,7 @@ def _watermarked_click_buy_join(
 
     def side(kind: str, ts_alias: str, key_alias: str):
         return (
-            stream_source.subscribe(spark, topic)
+            _subscribe(spark, topic)
             .where(F.col("metadata").getItem("eventType") == kind)
             .select(
                 F.col("metadata").getItem("partitionKey").alias(key_alias),
@@ -400,7 +407,7 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
     _publish(msgs, topic)
     counts = (
-        stream_source.subscribe(spark, topic)
+        _subscribe(spark, topic)
         .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
         .groupBy("partition_key")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -485,7 +492,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(base, "out")
 
     def run_once() -> None:
-        decoded = stream_source.subscribe(spark, topic)
+        decoded = _subscribe(spark, topic)
         acct = key_accounting_tws(decoded)
         q = (
             acct.writeStream.format("json")
@@ -549,7 +556,7 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         _publish(msgs, topic)
 
     counts = (
-        stream_source.subscribe(spark, topic)
+        _subscribe(spark, topic)
         .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
         .groupBy("partition_key")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -594,7 +601,7 @@ def stream_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _publish(msgs, topic)
 
     counts = (
-        stream_source.subscribe(spark, topic)
+        _subscribe(spark, topic)
         .select(F.col("metadata").getItem("eventType").alias("event_type"))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -360,37 +360,12 @@ def encode_envelope_col(uuid_col, metadata_col, payload_col):
 #       lambda wire: unmarshal_proto(wire, drop_corrupt=True))...
 
 
-def _udfs():
-    """Encode/decode pandas UDFs (built lazily so importing this module
-    never needs an active session). The decode UDF carries an ``ok``
-    flag instead of raising: a poison record must not kill the batch —
-    the corrupt-skip contract (subscriber.go:54-59)."""
+def _decode_udf():
+    """Decode pandas UDF (built lazily so importing this module never
+    needs an active session). It carries an ``ok`` flag instead of
+    raising: a poison record must not kill the batch — the corrupt-skip
+    contract (subscriber.go:54-59)."""
     from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def enc(
-        uuid: pd.Series, payload: pd.Series, metadata: pd.Series
-    ) -> pd.Series:
-        out = []
-        for u, p, m in zip(uuid, payload, metadata):
-            # proto map<string,string> cannot hold a null value — the
-            # JSON path serializes {"k": null}; here a NULL value
-            # coerces to "" (like the NULL payload below), and the
-            # roundtrip audit's eqNullSafe compare flips its verdict
-            # loudly on any such row rather than crashing the job
-            md = (
-                {k: (v if v is not None else "") for k, v in m.items()}
-                if m is not None
-                else {}
-            )
-            out.append(
-                encode_envelope(
-                    u if u is not None else "",
-                    md,
-                    bytes(p) if p is not None else b"",
-                )
-            )
-        return pd.Series(out, dtype=object)
 
     @pandas_udf(
         "uuid string, headers map<string,string>, payload binary, ok boolean"
@@ -417,7 +392,7 @@ def _udfs():
                 rows.append((None, None, None, False))
         return pd.DataFrame(rows, columns=["uuid", "headers", "payload", "ok"])
 
-    return enc, dec
+    return dec
 
 
 def marshal_proto(
@@ -425,7 +400,6 @@ def marshal_proto(
     uuid_col: str = "uuid",
     payload_col: str = "payload",
     metadata_col: str = "metadata",
-    engine: str = "sql",
 ):
     """Messages → wire entries ``(data binary, partition_key)`` — the
     protobuf counterpart of ``codec.marshal``. Proto3 cannot represent
@@ -433,34 +407,18 @@ def marshal_proto(
     NULL marshals as empty — callers needing the distinction keep the
     JSON or length-prefixed binary codec.
 
-    ``engine="sql"`` (default) emits the wire bytes with the JVM
-    expression :func:`encode_envelope_col` — no Python worker in the
-    plan, no protobuf runtime needed anywhere, ~the JSON codec's
-    throughput class (VERDICT r10 task 5 closed this way; the two
-    encoders are byte-equality-pinned in tests/test_codec_golden.py).
-    ``engine="pandas"`` keeps the runtime-backed Arrow-batch encoder —
-    the parity reference, and the path a user extending the message
-    schema beyond the fixed Envelope would generalize. That path
-    ships the vendored protobuf runtime to workers first (a bare path
-    append on the worker resolves ``google`` as an empty namespace
-    package)."""
+    The wire bytes come from the JVM expression
+    :func:`encode_envelope_col` — no Python worker in the plan, no
+    protobuf runtime needed anywhere, ~the JSON codec's throughput
+    class. The runtime-backed :func:`encode_envelope` is its reference:
+    tests/test_codec_golden.py pins the two byte-for-byte."""
     from pyspark.sql import functions as F
 
     from watermill_kinesis_spark.schema import META_PARTITION_KEY
 
-    if engine == "sql":
-        data = encode_envelope_col(
-            F.col(uuid_col), F.col(metadata_col), F.col(payload_col)
-        )
-    else:
-        from watermill_kinesis_spark.streaming.pbcompat import (
-            ensure_protobuf_on_workers,
-        )
-
-        if not ensure_protobuf_on_workers(df.sparkSession):  # pragma: no cover
-            raise ImportError("no protobuf runtime available for workers")
-        enc, _ = _udfs()
-        data = enc(F.col(uuid_col), F.col(payload_col), F.col(metadata_col))
+    data = encode_envelope_col(
+        F.col(uuid_col), F.col(metadata_col), F.col(payload_col)
+    )
     return df.select(
         data.alias("data"),
         F.col(metadata_col).getItem(META_PARTITION_KEY).alias("partition_key"),
@@ -494,7 +452,7 @@ def unmarshal_proto(
 
     if not ensure_protobuf_on_workers(df.sparkSession):  # pragma: no cover
         raise ImportError("no protobuf runtime available for workers")
-    _, dec = _udfs()
+    dec = _decode_udf()
     raw = F.col(data_col)
     if not isinstance(df.schema[data_col].dataType, BinaryType):
         raw = F.encode(raw, "ISO-8859-1")

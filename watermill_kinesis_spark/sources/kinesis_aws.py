@@ -1,6 +1,9 @@
-"""``kinesis_aws`` — the deployable AWS Kinesis streaming source
-(Python Data Source API, Spark 4), the read-side counterpart of
-``streaming.sink.KinesisPublisher``.
+"""``kinesis_aws`` — the deployable AWS Kinesis transport (Python Data
+Source API, Spark 4): batch and streaming read and write of a Kinesis
+stream, and :func:`_make_client`, the message layer's one Kinesis
+client builder. The reader, the writer and the builder's
+``Publisher`` (through ``streaming.sink.KinesisPublisher``) all take
+their client from it.
 
 The reference consumes Kinesis through a KCL worker (reference
 subscriber.go:114-128): the KCL discovers shards, leases them, pulls

@@ -17,15 +17,12 @@ from watermill_kinesis_spark.streaming.sink import (
     CollectingPublisher,
     DirectoryPublisher,
     publish_batch,
-    publish_stream,
 )
-from watermill_kinesis_spark.streaming.source import read_topic, subscribe
+from watermill_kinesis_spark.streaming.source import read_topic
 
 __all__ = [
     "CollectingPublisher",
     "DirectoryPublisher",
     "publish_batch",
-    "publish_stream",
     "read_topic",
-    "subscribe",
 ]

@@ -1,4 +1,4 @@
-"""Kinesis-like publish sink.
+"""Kinesis-like publish sink: the one put loop of the message layer.
 
 Reference behavior reproduced and repaired (SURVEY.md §2-A #1, §3.1):
 - ``Publish`` marshals messages and calls ``PutRecords``
@@ -7,15 +7,16 @@ Reference behavior reproduced and repaired (SURVEY.md §2-A #1, §3.1):
   and **discards** the ``PutRecords`` response, silently dropping
   partial failures (reference publisher.go:84). This sink chunks to
   ≤500 per call and retries failed entries with bounded attempts.
-- The reference's builder bug — ``Build()`` never wires the marshaller
-  (reference publisher.go:53-57) — has no analogue here: the codec is
-  applied inline, there is no mutable builder state.
 
-Scale design: the sink runs ``foreachPartition`` inside
-``foreachBatch`` — every executor core publishes its own partition
-concurrently; the service client is constructed per partition (never
-serialized from the driver). Repartitioning by partition key before
-publish preserves per-key ordering end-to-end.
+The one rule: every publish — ``publish_batch`` and the builder's
+``Publisher.publish``/``publish_stream`` — goes through
+:func:`put_wire`, which repartitions the wire records by partition key
+(``preserve_key_order``, on by default) and puts each partition from
+its own executor. All records of a key
+therefore reach the service in one partition's ordered put calls, the
+per-key order the reference gets from one ``PutRecords`` per batch
+(reference marshaller.go:65-69). The service client is built per
+partition on the executor, never serialized from the driver.
 """
 
 from __future__ import annotations
@@ -146,35 +147,13 @@ class KinesisPublisher:
     - >500-record requests never happen — ``put_chunked`` splits first
       (the reference hard-errors instead, publisher.go:65-68).
 
-    ``boto3`` is imported lazily so the engine has no hard AWS
-    dependency; pass ``endpoint_url`` for Localstack (the reference's
-    own integration harness, example/docker-compose.yml:4-11). A
-    pre-built ``client`` can be injected for tests. Construct this ON
-    THE EXECUTOR (via a factory) — boto3 clients don't pickle."""
+    The client is built ON THE EXECUTOR — boto3 clients don't pickle —
+    by ``sources.kinesis_aws._make_client``, the one client builder of
+    the message layer (region and Localstack ``endpoint_url``
+    overrides, the reference's WithEndpoint, publisher.go:28-34); tests
+    inject a stub client."""
 
-    def __init__(
-        self,
-        stream_name: str,
-        region_name: str | None = None,
-        endpoint_url: str | None = None,
-        client: object | None = None,
-    ):
-        if client is None:
-            try:
-                import boto3  # noqa: PLC0415 — optional dependency
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise RuntimeError(
-                    "KinesisPublisher requires boto3 (pip install boto3) "
-                    "or an injected client"
-                ) from e
-            kwargs: dict = {}
-            if region_name:
-                kwargs["region_name"] = region_name
-            if endpoint_url:
-                # Localstack/custom-endpoint override, the reference's
-                # WithEndpoint (publisher.go:28-34)
-                kwargs["endpoint_url"] = endpoint_url
-            client = boto3.client("kinesis", **kwargs)
+    def __init__(self, stream_name: str, client: object):
         self._client = client
         self.stream_name = stream_name
 
@@ -203,23 +182,6 @@ class KinesisPublisher:
             if r.get("ErrorCode")
         ]
         return PutRecordsResult(failed_indexes=failed)
-
-
-def kinesis_publisher_factory(
-    stream_name: str,
-    region_name: str | None = None,
-    endpoint_url: str | None = None,
-) -> Callable[[], KinesisPublisher]:
-    """Picklable zero-arg factory for ``publish_batch``/
-    ``publish_stream``: ships only strings to the executor, builds the
-    boto3 client there (clients are not serializable)."""
-
-    def make() -> KinesisPublisher:
-        return KinesisPublisher(
-            stream_name, region_name=region_name, endpoint_url=endpoint_url
-        )
-
-    return make
 
 
 class CollectingPublisher:
@@ -271,17 +233,17 @@ def put_chunked(
     return published
 
 
-def publish_batch(
-    messages: DataFrame,
+def put_wire(
+    wire: DataFrame,
     publisher_factory: Callable[[], object],
     preserve_key_order: bool = True,
 ) -> None:
-    """Batch publish: marshal + partition-parallel chunked put.
+    """Partition-parallel chunked put of wire records
+    ``(data, partition_key)``.
 
     ``publisher_factory`` is called once per partition ON THE EXECUTOR
     (a picklable zero-arg callable) — service clients never cross the
     driver/executor boundary."""
-    wire = codec.marshal(messages)
     if preserve_key_order:
         # co-locate each key in one partition so chunked puts preserve
         # the per-key FIFO contract (reference marshaller.go:65-69)
@@ -295,28 +257,14 @@ def publish_batch(
     wire.foreachPartition(run)
 
 
-def publish_stream(
+def publish_batch(
     messages: DataFrame,
     publisher_factory: Callable[[], object],
-    checkpoint_dir: str,
-    trigger_available_now: bool = False,
-):
-    """Streaming publish via ``foreachBatch``: each micro-batch goes
-    through the same chunked/retrying path; the epoch commit after a
-    successful batch is the reference's per-batch checkpoint
-    (reference subscriber.go:65-70), and a raised error replays the
-    batch from the checkpoint (at-least-once)."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        publish_batch(batch_df, publisher_factory)
-
-    writer = (
-        messages.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    preserve_key_order: bool = True,
+) -> None:
+    """Batch publish: JSON-envelope marshal (``codec.marshal``), then
+    :func:`put_wire`."""
+    put_wire(codec.marshal(messages), publisher_factory, preserve_key_order)
 
 
 def idempotent_batch_sink(out_dir: str) -> Callable[[DataFrame, int], None]:

@@ -9,22 +9,22 @@ of JSON-lines files written by ``sink.DirectoryPublisher``, and Spark's
 own JSON file source reads it — ``readStream`` over the directory
 gives an unbounded DataFrame with the semantics the KCL provides:
 partition-parallel reads, offset tracking in the checkpoint (replacing
-DynamoDB), rate limiting via ``maxFilesPerTrigger`` (the
+DynamoDB), rate limiting via the reader's ``maxFilesPerTrigger`` (the
 ``MaxRecords`` analogue, reference example/cmd/subscribe/main.go:36).
 
 :func:`read_topic` is the one reader of a topic directory; the
-deployable transport is ``format("kinesis_aws")``. Everything
-downstream (codec, semantics, sinks) is source-agnostic because it
-only sees the WIRE_RECORD_SCHEMA columns.
+deployable transport is ``format("kinesis_aws")``, and
+``api.Subscriber.subscribe`` is the one subscribe entry point over
+both. Everything downstream (codec, semantics, sinks) is
+source-agnostic because it only sees the WIRE_RECORD_SCHEMA columns.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from watermill_kinesis_spark import codec
 from watermill_kinesis_spark.schema import WIRE_RECORD_SCHEMA
 
 #: one JSON line as DirectoryPublisher writes it: the wire record plus
@@ -55,26 +55,3 @@ def read_topic(reader, topic_dir: str) -> DataFrame:
         )
     )
 
-
-def subscribe(
-    spark: SparkSession,
-    topic_dir: str,
-    max_files_per_trigger: int | None = None,
-    decode: bool = True,
-    drop_corrupt: bool = True,
-) -> DataFrame:
-    """Streaming DataFrame of messages from a topic directory.
-
-    Spark analogue of ``Subscriber.Subscribe(ctx, topic)``
-    (reference subscriber/subscriber.go:46-75): returns the unbounded
-    message flow; the caller attaches transformations and starts a
-    query with a checkpoint. ``decode=False`` yields raw wire records.
-    ``drop_corrupt=True`` reproduces the reference's poison-record skip
-    (reference subscriber.go:54-59)."""
-    reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    wire = read_topic(reader, topic_dir)
-    if not decode:
-        return wire
-    return codec.unmarshal(wire, drop_corrupt=drop_corrupt)
