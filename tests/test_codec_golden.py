@@ -227,7 +227,8 @@ def test_proto_sql_encoder_byte_parity_with_runtime(spark):
         ref = encode_envelope(u, m, p)
         assert bytes(r.w) == ref, f"wire divergence for uuid={u!r}"
         assert decode_envelope(bytes(r.w)) == (u, m, p)
-    # NULL coercion parity with the pandas encoder's documented rules
+    # NULL uuid/metadata/payload encode as '', {}, b'': the same wire as
+    # encode_envelope('', {}, b'')
     nulls = spark.createDataFrame(
         [(None, None, None)],
         "uuid string, metadata map<string,string>, payload binary",

@@ -144,7 +144,7 @@ def main() -> int:
     ok = engine == oracle
     print(
         f"{'PASS' if ok else 'FAIL'}  knn_mutual_label_blocked: "
-        f"engine {engine} oracle {oracle} "
+        f"engine={engine} oracle={oracle} "
         f"(engine {engine_s:.1f}s, oracle {oracle_s:.1f}s)"
     )
     return 0 if ok else 1

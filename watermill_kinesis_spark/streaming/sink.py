@@ -8,15 +8,18 @@ Reference behavior reproduced and repaired (SURVEY.md §2-A #1, §3.1):
   partial failures (reference publisher.go:84). This sink chunks to
   ≤500 per call and retries failed entries with bounded attempts.
 
-The one rule: every publish — ``publish_batch`` and the builder's
-``Publisher.publish``/``publish_stream`` — goes through
-:func:`put_wire`, which repartitions the wire records by partition key
+The one rule: ``publish_batch`` and the builder's
+``Publisher.publish``/``publish_stream`` go through :func:`put_wire`,
+which repartitions the wire records by partition key
 (``preserve_key_order``, on by default) and puts each partition from
-its own executor. All records of a key
-therefore reach the service in one partition's ordered put calls, the
-per-key order the reference gets from one ``PutRecords`` per batch
-(reference marshaller.go:65-69). The service client is built per
-partition on the executor, never serialized from the driver.
+its own executor. All records of a key therefore reach the service in
+one partition's ordered put calls, the per-key order the reference gets
+from one ``PutRecords`` per batch (reference marshaller.go:65-69). The
+``kinesis_aws`` DataSource writer is the one other caller of the put
+loop: it puts each Spark write task's rows through :func:`put_chunked`
+as the task receives them, without a key repartition. The service
+client is built per partition on the executor, never serialized from
+the driver.
 """
 
 from __future__ import annotations
