@@ -23,8 +23,8 @@ from watermill_kinesis_spark.sources.kinesis_aws import (  # noqa: E402
     KinesisAwsBatchReader,
     KinesisAwsParallelStreamReader,
     _get_iterator,
-    _get_records_throttled,
     _list_shards,
+    _throttled,
 )
 
 
@@ -102,7 +102,7 @@ def test_get_records_throttle_backoff_then_success(monkeypatch):
             },
             {"ShardIterator": "it1", "Limit": 5},
         )
-        resp = _get_records_throttled(c, ShardIterator="it1", Limit=5)
+        resp = _throttled(c.get_records, ShardIterator="it1", Limit=5)
     assert [r["Data"] for r in resp["Records"]] == [b"d0"]
     # bounded exponential backoff: 0.2, then 0.4
     assert sleeps == [mod.THROTTLE_BACKOFF_S, mod.THROTTLE_BACKOFF_S * 2]
@@ -125,7 +125,7 @@ def test_get_records_nonretryable_error_raises_immediately(monkeypatch):
             http_status_code=400,
         )
         with pytest.raises(Exception) as ei:
-            _get_records_throttled(c, ShardIterator="it1", Limit=5)
+            _throttled(c.get_records, ShardIterator="it1", Limit=5)
     assert type(ei.value).__name__ == "ExpiredIteratorException"
 
 

@@ -2,6 +2,8 @@
 round-trip contract (marshaller.go) and poison-record behavior
 (subscriber.go:54-59)."""
 
+import json
+
 from pyspark.sql import Row, functions as F
 
 from watermill_kinesis_spark import codec
@@ -117,6 +119,62 @@ def test_split_corrupt_dead_letter(spark):
     assert {r.data for r in dead.collect()} == {
         "garbage",
         '{"watermill_message_uuid":"bad1","data":"%%%not-b64","headers":{}}',
+    }
+
+
+def _envelope_rows(datas):
+    """Wire rows ``u0, u1, ...`` whose envelope ``data`` fields are ``datas``."""
+    return [
+        (json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}),)
+        + (None,) * 4
+        for i, d in enumerate(datas)
+    ]
+
+
+def test_crlf_inside_padding_decodes_instead_of_failing(spark):
+    """Go's base64.StdEncoding ignores CR/LF anywhere, padding included,
+    so ``"AA=\\r\\n="`` decodes to ``b"\\x00"``. The payload must be
+    decoded from that same stripped text: decoding the raw text throws
+    in the JVM, which failed the task instead of skipping a record."""
+    datas = ["AA=\r\n=", "AB=\n=", "aG\r\nk=", "aGk="]
+    wire = spark.createDataFrame(_envelope_rows(datas), WIRE_RECORD_SCHEMA)
+    want = {"u0": b"\x00", "u1": b"\x00", "u2": b"hi", "u3": b"hi"}
+    for drop in (True, False):
+        out = codec.unmarshal(wire, drop_corrupt=drop).collect()
+        assert {r.uuid: bytes(r.payload) for r in out} == want
+    good, dead = codec.split_corrupt(wire)
+    assert good.count() == 4 and dead.count() == 0
+
+
+def test_trailing_unicode_line_separator_is_corrupt(spark):
+    """Go's base64.StdEncoding ignores only CR and LF. A Java regex
+    ``$`` also matches before a final U+0085, U+2028 or U+2029, which
+    let such a record through the shape check; it is corrupt."""
+    datas = ["aGk=\u0085", "aGk=\u2028", "aGk=\u2029", "aGk="]
+    wire = spark.createDataFrame(_envelope_rows(datas), WIRE_RECORD_SCHEMA)
+    out = codec.unmarshal(wire, drop_corrupt=True).collect()
+    assert [(r.uuid, bytes(r.payload)) for r in out] == [("u3", b"hi")]
+
+
+def _from_json_count(df):
+    return df._jdf.queryExecution().optimizedPlan().toString().count("from_json(")
+
+
+def test_each_decode_path_parses_the_envelope_once(spark):
+    """Predicate pushdown copies a projected ``from_json`` into every
+    field reference of the corrupt filter; the parse sits behind a
+    barrier so each path's optimized plan holds exactly one."""
+    wire = spark.createDataFrame(_envelope_rows(["aGk="]), WIRE_RECORD_SCHEMA)
+    good, dead = codec.split_corrupt(wire)
+    frames = {
+        "unmarshal(drop_corrupt)": codec.unmarshal(wire, drop_corrupt=True),
+        "unmarshal": codec.unmarshal(wire),
+        "skip_corrupt(unmarshal)": codec.skip_corrupt(codec.unmarshal(wire)),
+        "split_corrupt good": good,
+        "split_corrupt dead": dead,
+    }
+    assert {k: _from_json_count(df) for k, df in frames.items()} == {
+        k: 1 for k in frames
     }
 
 

@@ -9,11 +9,16 @@ example, so the suite stays fast while the content space stays wild.
 
 from __future__ import annotations
 
+import base64
+import json
+import re
+import string
+
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import Row
 
 from watermill_kinesis_spark import codec
-from watermill_kinesis_spark.schema import MESSAGE_SCHEMA
+from watermill_kinesis_spark.schema import MESSAGE_SCHEMA, WIRE_RECORD_SCHEMA
 
 # strings that stress JSON escaping and UTF-8 width; Spark SQL strings
 # are well-formed unicode, so surrogates are out of contract
@@ -89,6 +94,62 @@ def test_binary_codec_roundtrip_property(spark, batch):
         gp, gm = got[u]
         assert gp == p, f"payload mismatch for {u!r}"
         assert gm == m, f"metadata mismatch for {u!r}"
+
+
+# ---------------------------------------------------------------------------
+# Corrupt-record predicate vs the grouped-regex definition it replaced
+
+# The former check: this regex matched against the CR/LF-stripped text.
+# Kept here as the oracle for the linear shape + length check.
+_GROUPED_BASE64_RE = (
+    "^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
+)
+_B64_ALPHABET = string.ascii_letters + string.digits + "+/"
+_NOISE = "=\r\n -_é"
+
+
+@st.composite
+def _b64_candidates(draw):
+    """Valid base64 with a few noise characters spliced in, or
+    arbitrary text over the alphabet plus noise."""
+    if draw(st.booleans()):
+        text = base64.b64encode(draw(st.binary(max_size=12))).decode()
+        for _ in range(draw(st.integers(0, 3))):
+            i = draw(st.integers(0, len(text)))
+            text = text[:i] + draw(st.sampled_from(_NOISE)) + text[i:]
+        return text
+    return draw(st.text(alphabet=_B64_ALPHABET + _NOISE, max_size=14))
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(datas=st.lists(_b64_candidates(), min_size=1, max_size=40))
+def test_corrupt_predicate_matches_grouped_regex_property(spark, datas):
+    rows = [
+        (
+            json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}),
+            None, None, None, None,
+        )
+        for i, d in enumerate(datas)
+    ]
+    wire = spark.createDataFrame(rows, WIRE_RECORD_SCHEMA)
+    stripped = (d.replace("\r", "").replace("\n", "") for d in datas)
+    want = {
+        f"u{i}": base64.b64decode(t)
+        for i, t in enumerate(stripped)
+        if re.search(_GROUPED_BASE64_RE, t)
+    }
+    got = {
+        r.uuid: bytes(r.payload)
+        for r in codec.unmarshal(wire, drop_corrupt=True).collect()
+    }
+    assert got == want
+    good, _ = codec.split_corrupt(wire)
+    kept = {json.loads(r.data)["watermill_message_uuid"] for r in good.collect()}
+    assert kept == set(want)
 
 
 # ---------------------------------------------------------------------------

@@ -362,7 +362,7 @@ def test_get_records_retries_throttle_then_succeeds(monkeypatch):
             return {"Records": [], "NextShardIterator": None}
 
     c = Flaky(2)
-    resp = ka._get_records_throttled(c, ShardIterator="it", Limit=10)
+    resp = ka._throttled(c.get_records, ShardIterator="it", Limit=10)
     assert resp["Records"] == [] and c.calls == 3
 
     # budget exhausted → the throttle surfaces
@@ -370,7 +370,7 @@ def test_get_records_retries_throttle_then_succeeds(monkeypatch):
     import pytest
 
     with pytest.raises(Exception, match="slow down"):
-        ka._get_records_throttled(c, ShardIterator="it", Limit=10)
+        ka._throttled(c.get_records, ShardIterator="it", Limit=10)
     assert c.calls == ka.THROTTLE_RETRIES
 
     class Auth:
@@ -378,4 +378,32 @@ def test_get_records_retries_throttle_then_succeeds(monkeypatch):
             raise PermissionError("denied")
 
     with pytest.raises(PermissionError):  # non-retryable: immediate
-        ka._get_records_throttled(Auth(), ShardIterator="it", Limit=10)
+        ka._throttled(Auth().get_records, ShardIterator="it", Limit=10)
+
+
+def test_throttled_shard_iterator_call_retries_not_fails(reader_on, monkeypatch):
+    """GetShardIterator answers a burst with LimitExceededException
+    (5 calls per second per shard). The shard read backs off and
+    retries, as for GetRecords, instead of failing the task."""
+    monkeypatch.setattr(ka.time, "sleep", lambda s: None)
+
+    class Limit(Exception):
+        pass
+
+    Limit.__name__ = "LimitExceededException"
+
+    class Bursty(StubKinesisClient):
+        throttled = 0
+
+        def get_shard_iterator(self, **kw):
+            if not self.throttled:
+                self.throttled += 1
+                raise Limit("Rate exceeded for shard")
+            return super().get_shard_iterator(**kw)
+
+    c = Bursty()
+    _fill(c)
+    r = reader_on(c)
+    rows, _ = _batch(r, r.initialOffset())
+    assert c.throttled == 1
+    assert sorted(row[0] for row in rows) == [f"d{i}" for i in range(6)]

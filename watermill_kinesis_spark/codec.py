@@ -20,6 +20,15 @@ Reference behavior being reproduced (Spark-first, not ported):
   JSON null ⇒ uuid non-null, payload NULL), and ``skip_corrupt``
   filters them out; ``split_corrupt`` exposes the dead-letter branch
   instead of silently dropping (an improvement over the reference).
+  The base64 check mirrors Go's ``base64.StdEncoding``: CR/LF is
+  ignored, the rest must be RFC 4648 padded base64, and the payload is
+  decoded from the CR/LF-free text — so a record that passes never
+  fails the decode.
+- one parse per record: ``unmarshal``, ``skip_corrupt(unmarshal(...))``
+  and both halves of ``split_corrupt`` read the envelope struct from
+  one ``from_json`` placed behind an optimizer barrier
+  (:func:`_parse_envelope`), so predicate pushdown cannot copy the
+  parse into each field reference of the corrupt filter.
 
 All of this is built-in Spark SQL expressions — JVM-side, codegen'd,
 no Python in the hot path — so it runs at scan speed on a cluster.
@@ -43,15 +52,15 @@ from watermill_kinesis_spark.schema import (
 # RFC3339 in UTC (reference marshaller.go:40 formats with time.RFC3339).
 RFC3339_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
-# Strict base64 shape; used to reject corrupt payloads portably instead
-# of relying on engine-specific lenient/strict unbase64 behavior.
-# Applied AFTER stripping CR/LF (see _b64_clean): the reference's Go
-# consumer uses base64.StdEncoding (strict RFC 4648, marshaller.go:42),
-# but records published by older builds of THIS engine carried MIME
-# line-wraps (Spark's base64() wraps at 76 chars) — those legacy
-# records must keep decoding, so the shape check runs on the unwrapped
-# text while marshal now emits unwrapped output only.
-_BASE64_RE = "^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
+# Base64 shape of CR/LF-free text: alphabet characters, then at most
+# two '=' pads. Together with ``length % 4 == 0`` this accepts exactly
+# RFC 4648 padded base64 (the reference's Go consumer decodes with
+# base64.StdEncoding, marshaller.go:42). One character class and no
+# groups, so the match is linear. ``\z``, not ``$``: Java's ``$`` also
+# matches before a trailing line terminator such as U+2028, which Go
+# rejects. The check runs in the JVM instead of relying on
+# engine-specific lenient/strict unbase64 behavior.
+_BASE64_SHAPE = r"^[A-Za-z0-9+/]*={0,2}\z"
 
 def _b64_unwrapped(payload: Column) -> Column:
     """RFC 4648 (unwrapped) base64 of a binary column.
@@ -62,17 +71,22 @@ def _b64_unwrapped(payload: Column) -> Column:
     payloads always decoded fine on the Go side — the strip exists for
     two other reasons: (1) byte-identical output to Go
     ``EncodeToString`` (interop goldens, content-addressed dedup of
-    wire bytes), and (2) the engine's own strict ``_BASE64_RE``
-    corruption check, which would misclassify its own ≥58-byte wrapped
-    envelopes as corrupt. ``translate`` (plain char deletion) beats a
-    regex pass on the publish hot path; still one codegen'd JVM
-    expression."""
+    wire bytes), and (2) the decode side strips CR/LF only from the
+    records that hold one, so unwrapped text skips that pass.
+    ``translate`` (plain char deletion) beats a regex pass on the
+    publish hot path; still one codegen'd JVM expression."""
     return F.translate(F.base64(payload), "\r\n", "")
 
 
-def _b64_clean(data: Column) -> Column:
-    """Base64 text with MIME line-wraps removed (legacy-record tolerant)."""
-    return F.translate(data, "\r\n", "")
+def _b64_text(data: Column) -> Column:
+    """Base64 text with MIME line-wraps removed. Records published by
+    older builds of this engine carried them (Spark's ``base64()`` wraps
+    at 76 chars) and Go's decoder ignores CR/LF, so they stay valid;
+    the engine's own marshal never emits them, so ``translate`` runs
+    only on the rows that hold one."""
+    return F.when(
+        data.contains("\r") | data.contains("\n"), F.translate(data, "\r\n", "")
+    ).otherwise(data)
 
 
 def envelope_json(
@@ -115,18 +129,37 @@ def marshal(
     )
 
 
+def _parse_envelope(df: DataFrame, data_col: str) -> DataFrame:
+    """``df`` plus ``_env``, the parsed envelope struct, parsed once per
+    record. The parse sits in a one-element ``explode`` — an optimizer
+    barrier: predicate pushdown substitutes a projected ``from_json``
+    into every reference to it, so a plain projection parsed each
+    envelope once per field the corrupt filter reads, and once more for
+    the output. Malformed JSON stays a row with a NULL struct."""
+    env = F.from_json(F.col(data_col), ENVELOPE_SCHEMA)
+    return df.select("*", F.explode(F.array(env)).alias("_env"))
+
+
+def _is_base64(text: Column) -> Column:
+    """RFC 4648 padded base64: the shape regex and a length that is a
+    multiple of 4. ``octet_length`` is O(1) and equals the character
+    count of any text the regex accepts, which is all ASCII."""
+    return (F.octet_length(text) % 4 == 0) & text.rlike(_BASE64_SHAPE)
+
+
 def _is_corrupt(env: Column) -> Column:
     """True iff the wire record would fail the reference's unmarshal:
     unparseable JSON envelope (⇒ NULL struct / NULL uuid) OR a non-null
-    ``data`` field that is not well-formed base64 (the reference's
-    ``base64.StdEncoding.DecodeString`` error, marshaller.go:42-46).
-    The regex check avoids ANSI-mode decode errors so poison records
-    stay non-fatal. CR/LF is stripped first: MIME-wrapped base64 from
-    legacy records is well-formed payload, not corruption."""
+    ``data`` field that is not well-formed base64 once CR/LF is
+    stripped (the reference's ``base64.StdEncoding.DecodeString``
+    error, marshaller.go:42-46). Checked before decoding so poison
+    records stay non-fatal. The raw text is checked first: a CR or LF
+    fails that check, so only such records (and corrupt ones) pay for
+    the strip."""
     data = env.getField(ENVELOPE_DATA_FIELD)
-    return (
-        env.getField(ENVELOPE_UUID_FIELD).isNull()
-        | (data.isNotNull() & ~_b64_clean(data).rlike(_BASE64_RE))
+    return env.getField(ENVELOPE_UUID_FIELD).isNull() | (
+        data.isNotNull()
+        & ~(_is_base64(data) | _is_base64(F.translate(data, "\r\n", "")))
     )
 
 
@@ -202,36 +235,26 @@ def unmarshal(
     ``uuid IS NULL``; pass ``drop_corrupt=True`` for the reference's
     skip behavior (subscriber.go:54-59).
     """
-    env = F.from_json(F.col(data_col), ENVELOPE_SCHEMA)
-    parsed = df.withColumn("_env", env)
-
+    parsed = _parse_envelope(df, data_col)
+    env = F.col("_env")
+    uuid = env.getField(ENVELOPE_UUID_FIELD)
+    payload = F.unbase64(_b64_text(env.getField(ENVELOPE_DATA_FIELD)))
     headers = F.coalesce(
-        F.col(f"_env.{ENVELOPE_HEADERS_FIELD}"),
+        env.getField(ENVELOPE_HEADERS_FIELD),
         F.create_map().cast("map<string,string>"),
     )
     metadata = merge_system_metadata(
         df, headers, shard_id_col, arrival_ts_col, partition_key_col
     )
 
-    ok = ~_is_corrupt(F.col("_env"))
+    ok = ~_is_corrupt(env)
     if drop_corrupt:
-        # Filter on the parsed envelope BEFORE the projection: filtering
-        # the projected messages afterwards (skip_corrupt) lets Catalyst
-        # collapse the filter through the project, replicating the
-        # from_json tree into every when()-gated output AND the
-        # predicate (9 copies, codegen lost — measured 6× slower on the
-        # decode path). Post-filter, every row satisfies ``ok``, so the
-        # outputs project plain envelope fields. Same result set: a
-        # corrupt row nulls uuid in the gated spelling and is dropped
-        # here.
         return parsed.where(ok).select(
-            F.col(f"_env.{ENVELOPE_UUID_FIELD}").alias("uuid"),
-            F.unbase64(F.col(f"_env.{ENVELOPE_DATA_FIELD}")).alias("payload"),
-            metadata.alias("metadata"),
+            uuid.alias("uuid"), payload.alias("payload"), metadata.alias("metadata")
         )
     return parsed.select(
-        F.when(ok, F.col(f"_env.{ENVELOPE_UUID_FIELD}")).alias("uuid"),
-        F.when(ok, F.unbase64(F.col(f"_env.{ENVELOPE_DATA_FIELD}"))).alias("payload"),
+        F.when(ok, uuid).alias("uuid"),
+        F.when(ok, payload).alias("payload"),
         F.when(ok, metadata).alias("metadata"),
     )
 
@@ -333,5 +356,6 @@ def split_corrupt(df: DataFrame, data_col: str = "data") -> tuple[DataFrame, Dat
     ``data`` field that fails the base64 shape check dead-letters the
     record (reference subscriber.go:54-59 skips any unmarshal error,
     including base64 decode errors)."""
-    ok = ~_is_corrupt(F.from_json(F.col(data_col), ENVELOPE_SCHEMA))
-    return df.filter(ok), df.filter(~ok)
+    parsed = _parse_envelope(df, data_col)
+    corrupt = _is_corrupt(F.col("_env"))
+    return parsed.filter(~corrupt).drop("_env"), parsed.filter(corrupt).drop("_env")

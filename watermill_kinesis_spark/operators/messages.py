@@ -143,7 +143,7 @@ def corrupt_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poison records are skipped, not fatal (reference subscriber.go:54-59).
 
     Every 97th envelope is mangled into invalid JSON; the decode path
-    must null it out and ``skip_corrupt`` drops it.
+    (``unmarshal(drop_corrupt=True)``) must drop it.
     """
     msgs = messages_from_events(spark, sf_dir, fanout=True)
     wire = msgs.select(
@@ -156,22 +156,10 @@ def corrupt_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_id") % 97 == 0, F.concat(F.lit("{broken"), F.col("data")))
         .otherwise(F.col("data")),
     )
-    # Optimizer barrier on the roundtrip wire (optimization round 14,
-    # guide §4.4 applied to JVM expressions): unmarshal's corrupt
-    # filter references from_json(data), and with data still an
-    # expression (this query marshals and unmarshals in ONE plan)
-    # predicate pushdown substituted the ENTIRE marshal tree into the
-    # filter and sank it below the fan-out exchange — the full
-    # JSON+base64 encode ran 3× per row inside the single-split scan
-    # task (profiled 3.3 s serial). shuffle() is non-deterministic, so
-    # the filter cannot cross this projection; on a 1-element array it
-    # is the identity, so the wire bytes are unchanged (oracle-pinned).
-    # Real stored-wire consumers go through codec.unmarshal directly
-    # and keep full scan-level filter pushdown.
-    wire = wire.select(
-        "event_id",
-        F.element_at(F.shuffle(F.array("data")), 1).alias("data"),
-    )
+    # Marshal and unmarshal share this plan. unmarshal parses behind its
+    # own optimizer barrier, so its corrupt filter reads the parsed
+    # struct and the marshal tree still runs once per row, above the
+    # fan-out exchange.
     decoded = codec.unmarshal(wire, partition_key_col=None, drop_corrupt=True)
     return (
         decoded.select(F.col("metadata").getItem("eventType").alias("event_type"))

@@ -90,6 +90,7 @@ from pyspark.sql.types import StructType
 
 from watermill_kinesis_spark.schema import WIRE_RECORD_SCHEMA
 from watermill_kinesis_spark.sources.fencestore import FenceStore
+from watermill_kinesis_spark.streaming import kpl
 
 FORMAT_NAME = "kinesis_aws"
 
@@ -249,8 +250,6 @@ def _record_rows(rec: dict, shard_id: str) -> list[tuple]:
     ``<seq>:<i>`` sub-sequence numbers, KCL-style. A corrupt container
     falls through as a single undecodable row, which the downstream
     corrupt-skip drops (reference subscriber.go:54-59)."""
-    from watermill_kinesis_spark.streaming import kpl
-
     data = rec["Data"]
     raw = bytes(data) if isinstance(data, (bytes, bytearray)) else str(data).encode()
     seq = rec.get("SequenceNumber")
@@ -282,11 +281,13 @@ def _record_rows(rec: dict, shard_id: str) -> list[tuple]:
     ]
 
 
-#: throttle retry budget for get_records: attempts and base backoff.
-#: The KCL retries ProvisionedThroughputExceededException with backoff
-#: (the service's documented contract: throttles are transient and
-#: per-shard); failing the whole Spark task instead would tear down
-#: and replay the entire batch for a routine rate blip.
+#: throttle retry budget for get_records and get_shard_iterator:
+#: attempts and base backoff. The KCL retries
+#: ProvisionedThroughputExceededException with backoff (the service's
+#: documented contract: throttles are transient and per-shard), and
+#: GetShardIterator answers a burst with LimitExceededException;
+#: failing the whole Spark task instead would tear down and replay the
+#: entire batch for a routine rate blip.
 THROTTLE_RETRIES = 5
 THROTTLE_BACKOFF_S = 0.2
 
@@ -294,14 +295,15 @@ THROTTLE_BACKOFF_S = 0.2
 _RETRYABLE = ("ProvisionedThroughputExceededException", "LimitExceededException")
 
 
-def _get_records_throttled(client, **kwargs) -> dict:
-    """``get_records`` with bounded exponential backoff on throttling.
-    Any other failure (auth, network, iterator expiry) raises
-    immediately — those are not resolved by waiting, and silently
-    retrying them would hide real misconfiguration."""
+def _throttled(call, **kwargs) -> dict:
+    """``call(**kwargs)`` — a ``get_records`` or ``get_shard_iterator``
+    — with bounded exponential backoff on throttling. Any other failure
+    (auth, network, iterator expiry) raises immediately — those are not
+    resolved by waiting, and silently retrying them would hide real
+    misconfiguration."""
     for attempt in range(THROTTLE_RETRIES):
         try:
-            return client.get_records(**kwargs)
+            return call(**kwargs)
         except Exception as e:
             if (
                 type(e).__name__ not in _RETRYABLE
@@ -327,40 +329,37 @@ def _get_records_refreshing(
     expiry inside one poll propagates: that is a stuck consumer, not
     a stale handle."""
     try:
-        return _get_records_throttled(client, ShardIterator=it, Limit=limit)
+        return _throttled(client.get_records, ShardIterator=it, Limit=limit)
     except Exception as e:
         if type(e).__name__ != "ExpiredIteratorException":
             raise
         fresh = _get_iterator(client, stream, shard_id, last_pos)
         if not fresh:
             return {"Records": [], "NextShardIterator": None}
-        return _get_records_throttled(client, ShardIterator=fresh, Limit=limit)
+        return _throttled(client.get_records, ShardIterator=fresh, Limit=limit)
 
 
 def _get_iterator(client, stream: str, shard_id: str, pos: str | None) -> str | None:
     """Shard iterator for a stored position (see module docstring for
-    the position alphabet)."""
+    the position alphabet), minted with throttle backoff."""
     if pos is None:
-        resp = client.get_shard_iterator(
-            StreamName=stream, ShardId=shard_id, ShardIteratorType="TRIM_HORIZON"
-        )
+        kw = {"ShardIteratorType": "TRIM_HORIZON"}
     elif isinstance(pos, str) and pos.startswith(AT_TS_PREFIX):
         from datetime import datetime, timezone
 
         t = float(pos[len(AT_TS_PREFIX) :])
-        resp = client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="AT_TIMESTAMP",
-            Timestamp=datetime.fromtimestamp(t, tz=timezone.utc),
-        )
+        kw = {
+            "ShardIteratorType": "AT_TIMESTAMP",
+            "Timestamp": datetime.fromtimestamp(t, tz=timezone.utc),
+        }
     else:
-        resp = client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-            StartingSequenceNumber=pos,
-        )
+        kw = {
+            "ShardIteratorType": "AFTER_SEQUENCE_NUMBER",
+            "StartingSequenceNumber": pos,
+        }
+    resp = _throttled(
+        client.get_shard_iterator, StreamName=stream, ShardId=shard_id, **kw
+    )
     return resp.get("ShardIterator")
 
 
@@ -399,9 +398,10 @@ def _drain_shard(
     fenced replay), or at shard close, where ``attained`` becomes
     ``SHARD_END`` (the TERMINATE checkpoint, reference
     subscriber.go:78-88). A shard that vanished after listing (aged
-    past retention) also ends at ``SHARD_END``; any other iterator
-    failure (auth, throttle, network) raises — silent data loss is
-    worse than a dead task."""
+    past retention) also ends at ``SHARD_END``; a throttled call is
+    retried with bounded backoff (:func:`_throttled`), and any other
+    failure (auth, network, a throttle past that budget) raises —
+    silent data loss is worse than a dead task."""
     try:
         it = _get_iterator(client, stream, shard_id, start_pos)
     except Exception as e:
