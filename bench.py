@@ -145,22 +145,24 @@ HEADLINE = [
     "dedup_containment_capped",
 ]
 
-#: index where the r4-added heavies start in HEADLINE
-_R4_START = HEADLINE.index("bpe_train_merges")
-#: index where the r5-added heavies start
-_R5_START = HEADLINE.index("winnowing_fingerprints")
-#: index where the r6-added heavies start
-_R6_START = HEADLINE.index("auc_roc_exact")
-#: index where the r7-added heavies start
-_R7_START = HEADLINE.index("gopher_quality_rules")
-#: index where the r8-added heavies start
-_R8_START = HEADLINE.index("knn_mutual_label_blocked")
-#: index where the r9-added heavies start
-_R9_START = HEADLINE.index("dedup_substring_excise")
-#: index where the r10-added heavies start
-_R10_START = HEADLINE.index("yule_sichel_richness")
-#: index where the r11+ additions start (r12 VERDICT task 4)
-_R11P_START = HEADLINE.index("graph_bfs_hops")
+#: payload subtotals: (key, first HEADLINE name of its block); a block
+#: runs up to the next block's first name. The core14 block is the
+#: r1/r2 headline set, unchanged so round-over-round comparison stays
+#: like for like. ``llm_heavies_added_r3`` is what the other blocks
+#: leave of the total.
+SUBTOTAL_BLOCKS = (
+    ("core14_r1r2_comparable", "q1_pricing_summary"),
+    ("llm_heavies_added_r3", "decontaminate_bloom"),
+    ("heavies_added_r4", "bpe_train_merges"),
+    ("heavies_added_r5", "winnowing_fingerprints"),
+    ("heavies_added_r6", "auc_roc_exact"),
+    ("heavies_added_r7", "gopher_quality_rules"),
+    ("heavies_added_r8", "knn_mutual_label_blocked"),
+    ("heavies_added_r9", "dedup_substring_excise"),
+    ("heavies_added_r10", "yule_sichel_richness"),
+    ("heavies_added_r10plus", "graph_bfs_hops"),
+)
+_RESIDUAL_BLOCK = "llm_heavies_added_r3"
 
 #: Calibration anchors (r5 VERDICT "what's wrong #3"; widened to a
 #: 3-anchor median by r8 VERDICT task 4): the machine is co-tenant, so
@@ -352,39 +354,17 @@ def build_payload(
     parse failure; the contract must be breakable only visibly)."""
     sf_dir = SF_DIR if sf_dir is None else sf_dir
     total = round(sum(timings.values()), 3)
-    # the r1/r2 headline set, unchanged, so round-over-round comparison
-    # stays apples-to-apples after round 3 added the LLM heavies
-    core14 = HEADLINE[:14]
-    core_total = round(sum(timings.get(n, 0.0) for n in core14), 3)
-    r4_heavies = HEADLINE[_R4_START:_R5_START]
-    r4_total = round(sum(timings.get(n, 0.0) for n in r4_heavies), 3)
-    r5_heavies = HEADLINE[_R5_START:_R6_START]
-    r5_total = round(sum(timings.get(n, 0.0) for n in r5_heavies), 3)
-    r6_heavies = HEADLINE[_R6_START:_R7_START]
-    r6_total = round(sum(timings.get(n, 0.0) for n in r6_heavies), 3)
-    r7_heavies = HEADLINE[_R7_START:_R8_START]
-    r7_total = round(sum(timings.get(n, 0.0) for n in r7_heavies), 3)
-    r8_heavies = HEADLINE[_R8_START:_R9_START]
-    r8_total = round(sum(timings.get(n, 0.0) for n in r8_heavies), 3)
-    r9_heavies = HEADLINE[_R9_START:_R10_START]
-    r9_total = round(sum(timings.get(n, 0.0) for n in r9_heavies), 3)
-    r10_heavies = HEADLINE[_R10_START:_R11P_START]
-    r10_total = round(sum(timings.get(n, 0.0) for n in r10_heavies), 3)
-    r11p_heavies = HEADLINE[_R11P_START:]
-    r11p_total = round(sum(timings.get(n, 0.0) for n in r11p_heavies), 3)
-    heavy_total = round(
-        total
-        - core_total
-        - r4_total
-        - r5_total
-        - r6_total
-        - r7_total
-        - r8_total
-        - r9_total
-        - r10_total
-        - r11p_total,
-        3,
-    )
+    starts = [HEADLINE.index(first) for _, first in SUBTOTAL_BLOCKS]
+    subtotals = {
+        key: round(sum(timings.get(n, 0.0) for n in HEADLINE[a:b]), 3)
+        for (key, _), a, b in zip(SUBTOTAL_BLOCKS, starts, starts[1:] + [None])
+    }
+    rest = total
+    for key, v in subtotals.items():
+        if key != _RESIDUAL_BLOCK:
+            rest -= v
+    subtotals[_RESIDUAL_BLOCK] = round(rest, 3)
+    core_total = subtotals["core14_r1r2_comparable"]
     import statistics
 
     drifts = {
@@ -401,18 +381,7 @@ def build_payload(
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "subtotals": {
-                    "core14_r1r2_comparable": core_total,
-                    "llm_heavies_added_r3": heavy_total,
-                    "heavies_added_r4": r4_total,
-                    "heavies_added_r5": r5_total,
-                    "heavies_added_r6": r6_total,
-                    "heavies_added_r7": r7_total,
-                    "heavies_added_r8": r8_total,
-                    "heavies_added_r9": r9_total,
-                    "heavies_added_r10": r10_total,
-                    "heavies_added_r10plus": r11p_total,
-                },
+                "subtotals": subtotals,
                 "calibration": {
                     # legacy single-anchor fields (scan) for continuity
                     # with BENCH_r1-r8 readers

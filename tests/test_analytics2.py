@@ -152,10 +152,10 @@ def test_containment_capped_drops_hot_shingles(spark, tmp_path):
 def test_containment_capped_equals_exact_below_cap(spark, sf_dir):
     """With no shingle above the cap (true at sf0.001), the capped
     face must emit exactly the exact face's pairs."""
-    from watermill_kinesis_spark.operators.dedup import _docs, _shingles
+    from watermill_kinesis_spark.operators.dedup import _shingles
 
     df_max = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(_shingles(F.col("text"))).alias("sh"))
         .groupBy("sh").count().agg(F.max("count")).first()[0]
     )

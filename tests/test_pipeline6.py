@@ -304,7 +304,7 @@ def test_excise_edge_cases_handcrafted(spark, monkeypatch):
     df = spark.createDataFrame(
         [(k, v) for k, v in texts.items()], "doc_id long, text string"
     )
-    monkeypatch.setattr(p6, "_docs", lambda _s, _d: df)
+    monkeypatch.setattr(p6, "load_table", lambda _s, _d, _t: df)
     ref = _excise_reference(texts, p6.SUB_L)
     census = {r.doc_id: r for r in p6.dedup_substring_excise(spark, "_").collect()}
     kept = {
@@ -323,23 +323,3 @@ def test_excise_edge_cases_handcrafted(spark, monkeypatch):
     assert kept[1] == "" and ref[1]["n_removed"] == len(base)
     assert ref[3]["n_removed"] > 0  # intra-doc dup detected
     assert kept[4] == texts[4] and kept[5] == texts[5]
-
-
-def test_gram_explode_partitions_remote_fs_aware(spark, sf_dir):
-    """Geometry sizing must resolve the input through the Hadoop
-    FileSystem API, not driver-local os.path (VERDICT r11 task 4): a
-    ``file://`` URI is the mock remote store — os.path cannot stat it,
-    Hadoop FS can — so the URI spelling must return the SAME
-    geometry-derived count as the plain local path, not the flat
-    8×parallelism fallback. A nonexistent path still falls back."""
-    import watermill_kinesis_spark.operators.pipeline6 as p6
-
-    dp = spark.sparkContext.defaultParallelism
-    local = p6._gram_explode_partitions(spark, sf_dir)
-    via_uri = p6._gram_explode_partitions(spark, "file://" + sf_dir)
-    assert via_uri == local
-    # the count is geometry-derived (within the documented clamps),
-    # and distinct inputs yield distinct geometry: the 10x-larger
-    # corpus must not size like the flat fallback of a failed stat
-    assert dp <= local <= 64 * dp
-    assert p6._gram_explode_partitions(spark, "/nonexistent/nowhere") == 8 * dp

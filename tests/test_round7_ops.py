@@ -377,12 +377,12 @@ def test_simhash_fp_identical_for_same_token_set(spark):
         ],
         "doc_id long, text string",
     )
-    orig = D._docs
-    D._docs = lambda spark, sf_dir: df
+    orig = D.fanned_documents
+    D.fanned_documents = lambda spark, sf_dir: df
     try:
         fps = {r.doc_id: r.fp for r in D._simhash_fps(spark, "unused").collect()}
     finally:
-        D._docs = orig
+        D.fanned_documents = orig
     assert fps[1] == fps[2] == fps[3]
     assert fps[4] != fps[1]
 

@@ -6,7 +6,9 @@ scoped, and a returned DataFrame owns its checkpoints.
 - a failed call leaves the session's confs and caches as it found them;
 - dropped results free their blocks (no session-long cache pins);
 - no operator module persists, caches or overrides the session conf
-  outside the scope.
+  outside the scope;
+- operators read tables through ``load_table`` and size fan-outs with
+  ``tables.adaptive_partitions`` only.
 """
 
 from __future__ import annotations
@@ -173,3 +175,75 @@ def test_guard_catches_each_forbidden_form(tmp_path):
         "    spark.conf.unset('k')\n"
     )
     assert len(_violations(p)) == 5
+
+
+#: the one ``defaultParallelism`` reference the operator layer keeps:
+#: ``similarity._emb(fixed=True)``, because similarity_ann_pq's
+#: approximate output depends on the batch layout
+PARALLELISM_PIN = ("similarity.py", "_emb")
+
+
+def _only_wraps_load_table(fn: ast.FunctionDef) -> bool:
+    body = fn.body
+    if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]  # docstring
+    return (
+        len(body) == 1
+        and isinstance(body[0], ast.Return)
+        and isinstance(body[0].value, ast.Call)
+        and isinstance(body[0].value.func, ast.Name)
+        and body[0].value.func.id == "load_table"
+    )
+
+
+def _sizing_violations(path: Path) -> list[str]:
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        where = f"{path.name}:{top.lineno}"
+        name = getattr(top, "name", None)
+        if isinstance(top, ast.FunctionDef) and _only_wraps_load_table(top):
+            out.append(f"{where} {name} only wraps load_table")
+        if isinstance(top, ast.ImportFrom) and any(
+            a.name == "adaptive_partitions" for a in top.names
+        ):
+            out.append(f"{where} module-level import of adaptive_partitions")
+        if (path.name, name) == PARALLELISM_PIN:
+            continue
+        for node in ast.walk(top):
+            if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
+                out.append(f"{path.name}:{node.lineno} defaultParallelism")
+    return out
+
+
+def test_operators_share_one_loader_and_one_sizing_policy():
+    """Operators read tables through ``load_table`` itself (no per-module
+    wrapper) and size every fan-out with ``tables.adaptive_partitions``,
+    imported inside the function body so a reassignment of the module
+    attribute (tools/tune_fanout.py) reaches every site. The only
+    ``defaultParallelism`` left is the ``similarity._emb(fixed=True)``
+    layout pin."""
+    files = sorted(OPERATORS.glob("*.py"))
+    assert len(files) > 30
+    found = [v for p in files for v in _sizing_violations(p)]
+    assert not found, "\n".join(found)
+
+
+def test_sizing_guard_catches_each_forbidden_form(tmp_path):
+    p = tmp_path / "bad.py"
+    p.write_text(
+        "from watermill_kinesis_spark.sources.tables import adaptive_partitions\n"
+        "def _t(spark, sf_dir, name):\n"
+        "    '''a bare wrapper'''\n"
+        "    return load_table(spark, sf_dir, name)\n"
+        "def f(spark, df):\n"
+        "    return df.repartition(spark.sparkContext.defaultParallelism)\n"
+        "def _emb(spark):\n"
+        "    return spark.sparkContext.defaultParallelism\n"
+    )
+    assert len(_sizing_violations(p)) == 4
+    pin = tmp_path / PARALLELISM_PIN[0]
+    pin.write_text(
+        "def _emb(spark):\n"
+        "    return spark.sparkContext.defaultParallelism\n"
+    )
+    assert _sizing_violations(pin) == []

@@ -117,8 +117,9 @@ class _StubKinesisClient:
 
 def test_kinesis_publisher_chunking_and_partial_failure_retry(spark):
     """The boto3-backed transport: ≤500-record PutRecords calls, utf-8
-    Data, non-empty PartitionKey, and per-record retry of exactly the
-    entries whose response row carries an ErrorCode."""
+    Data, non-empty PartitionKey, and a retry of the entries whose
+    response row carries an ErrorCode plus the later records of their
+    keys."""
     from watermill_kinesis_spark.streaming.sink import KinesisPublisher
 
     client = _StubKinesisClient(fail_first=7)
@@ -126,18 +127,79 @@ def test_kinesis_publisher_chunking_and_partial_failure_retry(spark):
     entries = [PutRecordsEntry(f"d{i}", f"k{i % 3}" if i % 5 else None) for i in range(1203)]
     n = put_chunked(pub, entries)
     assert n == 1203
-    # 3 chunks + 1 retry call for the 7 throttled records
-    assert [len(c["Records"]) for c in client.calls] == [500, 7, 500, 203]
+    # 3 chunks + 1 retry call: the 7 throttled records (keys k0, k1, k2
+    # and two keyless) and the 395 later keyed records of the chunk
+    assert [len(c["Records"]) for c in client.calls] == [500, 402, 500, 203]
     assert all(c["StreamName"] == "my-stream" for c in client.calls)
-    assert len(client.landed) == 1203
-    # every record landed exactly once, bytes round-trip, keys non-empty
-    datas = sorted(r["Data"].decode("utf-8") for r in client.landed)
-    assert datas == sorted(f"d{i}" for i in range(1203))
+    # every record landed, bytes round-trip, keys non-empty; only the
+    # resent keyed records landed twice
+    datas = [r["Data"].decode("utf-8") for r in client.landed]
+    assert set(datas) == {f"d{i}" for i in range(1203)}
+    assert len(datas) == 1203 + 395
     assert all(r["PartitionKey"] for r in client.landed)
-    # keyless entries route under the shared default key
+    # keyless entries route under the shared default key, once each
     assert sum(1 for r in client.landed if r["PartitionKey"] == "0") == len(
         [e for e in entries if e.partition_key is None]
     )
+    # keyed records keep their order; keyless ones ("0") carry none
+    got, want = _last_copy_order(client.landed), _send_order(entries)
+    del got["0"], want["0"]
+    assert got == want
+
+
+def _send_order(entries) -> dict:
+    """partition key → the key's records in send order."""
+    out: dict = {}
+    for e in entries:
+        out.setdefault(e.partition_key or "0", []).append(e.data)
+    return out
+
+
+def _last_copy_order(landed) -> dict:
+    """partition key → the key's records ordered by the position of
+    each record's LAST landed copy — the order a consumer that keeps
+    the latest copy of a resent record sees."""
+    last = {}
+    for pos, r in enumerate(landed):
+        key = r["PartitionKey"] if isinstance(r, dict) else (r.partition_key or "0")
+        data = r["Data"].decode("utf-8") if isinstance(r, dict) else r.data
+        last[(key, data)] = pos
+    out: dict = {}
+    for (key, data), _ in sorted(last.items(), key=lambda kv: kv[1]):
+        out.setdefault(key, []).append(data)
+    return out
+
+
+def test_put_chunked_keeps_key_order_under_partial_failure():
+    """A failed record is resent with every later record of its key
+    that already landed, so the key's records land (last copy) in send
+    order; a record of another key is not resent."""
+    pub = CollectingPublisher(fail_first=1)
+    entries = [
+        PutRecordsEntry("k1-first", "k1"),
+        PutRecordsEntry("k2-only", "k2"),
+        PutRecordsEntry("k1-second", "k1"),
+    ]
+    assert put_chunked(pub, entries, backoff_s=0) == 3
+    assert _last_copy_order(pub.records) == _send_order(entries)
+    assert [e.data for e in pub.calls[1]] == ["k1-first", "k1-second"]
+
+
+def test_kinesis_publisher_keeps_key_order_under_partial_failure():
+    """The same order over the boto3-shaped transport, whose response
+    marks one record with an ErrorCode."""
+    from watermill_kinesis_spark.streaming.sink import KinesisPublisher
+
+    client = _StubKinesisClient(fail_first=1)
+    entries = [
+        PutRecordsEntry("k1-first", "k1"),
+        PutRecordsEntry("k2-only", "k2"),
+        PutRecordsEntry("k1-second", "k1"),
+    ]
+    n = put_chunked(KinesisPublisher("s", client=client), entries, backoff_s=0)
+    assert n == 3
+    assert _last_copy_order(client.landed) == _send_order(entries)
+    assert [len(c["Records"]) for c in client.calls] == [3, 2]
 
 
 def test_kinesis_publisher_exhausts_retry_budget(spark):

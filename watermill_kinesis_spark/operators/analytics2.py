@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.operators.distscan import range_slices
 from watermill_kinesis_spark.registry import query
-from watermill_kinesis_spark.sources.tables import load_table
+from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
 # ---------------------------------------------------------------------------
 # fixed-width histogram
@@ -664,10 +664,8 @@ def unigram_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-derived string dictionary, the build-side class whose
     compressed-size estimate AQE under-sizes (the r9
     ngram_novelty_score OOM; plan_audit's DictBcast guard)."""
-    toks = (
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    toks = fanned_documents(spark, sf_dir).select(
+        "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     return (

@@ -21,29 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.functions.scope import Scope
+from watermill_kinesis_spark.operators.similarity import _emb
 from watermill_kinesis_spark.registry import query
-from watermill_kinesis_spark.sources.tables import load_table
 
 KMEANS_K = 8
 KMEANS_ITERS = 5
 PCA_COMPONENTS = 2
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings fanned out for per-row kernel work. Partition count
-    is derived from the table's on-disk size (optimization guide §2,
-    scale-adaptive partitioning): the iterative fits here run ~10
-    Python-kernel stages per call, and at small corpus sizes a
-    32-partition layout pays 32 × ~20 ms of Python-task fixed cost per
-    stage for BLAS work that takes microseconds — measured 5.2 s → 3.3 s
-    on the k-center audit at sf0.1. A real corpus still reaches
-    defaultParallelism via the cap."""
-    from watermill_kinesis_spark.sources.tables import adaptive_partitions
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    return e.repartition(adaptive_partitions(spark, sf_dir, "embeddings"), "vec_id")
 
 
 def _assign_kernel(C):
@@ -118,7 +101,11 @@ def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = KMEANS_K,
     # the loops scan the SAME rows 6+ times; without materializing them
     # every pass re-reads parquet AND re-runs the repartition shuffle.
     # The returned assignment reads them: the result's own checkpoint.
-    e = _emb(spark, sf_dir).localCheckpoint()
+    e = (
+        _emb(spark, sf_dir, distribute=True)
+        .select("vec_id", "emb")
+        .localCheckpoint()
+    )
     C = np.stack(
         [
             r["emb"]
@@ -194,7 +181,7 @@ def pca_fit(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    e = _emb(spark, sf_dir)
+    e = _emb(spark, sf_dir, distribute=True).select("vec_id", "emb")
     dim_row = e.select(F.size("emb").alias("d")).first()
     dim = dim_row["d"]
 
@@ -378,7 +365,9 @@ def kcenter_greedy_fit(spark: SparkSession, sf_dir: str, k: int = KCENTER_K):
         return e.mapInPandas(kernel, schema)
 
     with Scope(spark) as scope:
-        e = scope.checkpointed(_emb(spark, sf_dir))
+        e = scope.checkpointed(
+            _emb(spark, sf_dir, distribute=True).select("vec_id", "emb")
+        )
         first = e.orderBy("vec_id").limit(1).collect()[0]
         center_ids = [first.vec_id]
         centers = [list(first.emb)]

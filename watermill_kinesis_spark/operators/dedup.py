@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
-from watermill_kinesis_spark.sources.tables import load_table
+from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
 #: shingle width for near-dup candidate generation
 SHINGLE_N = 5
@@ -37,15 +37,6 @@ MH_PRIME = (1 << 31) - 1
 #: 36 cells, enough to spread local[32] while keeping cells chunky; at
 #: 100 TB size B ≈ √(N·dim·8B / executor_budget) instead.
 EMB_GRID_BLOCKS = 8
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, redistributed across all cores: the table is small on
-    disk (one input split) but shingling/hashing is CPU-bound per row —
-    without the repartition the whole operator would run on one task.
-    Keyed on doc_id so the layout is deterministic."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
 
 
 def _shingles(col, n: int = SHINGLE_N):
@@ -82,7 +73,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash shuffle on the content key; at 100 TB you'd key on
     ``xxhash64(text)`` instead of the full text to shrink shuffle bytes
     — semantics identical, collisions ~2^-64."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("text").orderBy("doc_id")
@@ -336,7 +327,7 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the kernel per branch. The returned plan reads it, so it is the
     # result's own checkpoint (functions/scope.py).
     base = (
-        _docs(spark, sf_dir)
+        fanned_documents(spark, sf_dir)
         .select("doc_id", "text")
         .mapInPandas(scan, "doc_id long, sig array<long>, sh array<long>")
         .localCheckpoint()
@@ -465,17 +456,8 @@ def _simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     on each of 64 bits; the sign vector is the fingerprint. One long
     per doc: downstream shuffles are 16 bytes/row regardless of
     document size."""
-    from watermill_kinesis_spark.sources.tables import adaptive_partitions
-
-    d = (
-        _docs(spark, sf_dir)
-        # fan the vote kernel out of the single-split scan task (the
-        # simhash_recall_audit rationale, optimization round 14)
-        .repartition(
-            adaptive_partitions(spark, sf_dir, "documents", expand=10),
-            "doc_id",
-        )
-        .select("doc_id", F.split("text", " ").alias("toks"))
+    d = fanned_documents(spark, sf_dir).select(
+        "doc_id", F.split("text", " ").alias("toks")
     )
     tok_hash = F.transform(F.array_distinct("toks"), lambda t: F.xxhash64(t))
     return d.withColumn("th", tok_hash).select(
@@ -784,7 +766,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join. The oracle is
     the same fixpoint computed as a DuckDB recursive-CTE transitive
     closure."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = fanned_documents(spark, sf_dir).select("doc_id")
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     # keyed repartition WITHOUT an explicit count before the checkpoint:
     # REPARTITION_BY_COL is AQE-coalescible, so the checkpointed edge
@@ -1245,14 +1227,13 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
     base = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         # repartition before the sha2-census-key + xxhash64 + vote
-        # kernel projection (optimization round 14, VERDICT r13 task
-        # 6): the whole fingerprint pass otherwise runs inside the
-        # single-split scan task at persist materialization — the
-        # serial stage behind the entry's 0.82 8-vs-32-core ratio.
-        # expand=2, NOT the text-decompression 10: the persisted
+        # kernel projection: the whole fingerprint pass otherwise runs
+        # inside the single-split scan task at persist materialization
+        # — the serial stage behind the entry's 0.82 8-vs-32-core
+        # ratio. expand=2, NOT fanned_documents' 10: the persisted
         # relation's partition count is inherited by every downstream
         # aggregate of the audit (~7 stages), so the sweep optimum
         # sits well below the kernel-alone breakeven

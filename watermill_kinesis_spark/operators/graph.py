@@ -707,7 +707,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (optimization round 14, guide §2): the distinct (p, s)
         # relation shuffles ~0.5× the lineitem parquet bytes, and EVERY
         # level join stage iterates these partitions — a flat
-        # defaultParallelism pinned 32 near-empty tasks per level at
+        # core-count fan-out pinned 32 near-empty tasks per level at
         # sf0.1 (profiled ~0.2 s task-overhead wall per join stage for
         # KB-scale frontiers)
         par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from watermill_kinesis_spark.registry import query
-from watermill_kinesis_spark.sources.tables import load_table
+from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
 #: training-sequence token budget for pack_concat_offsets
 PACK_BUDGET = 256
@@ -84,9 +84,7 @@ def dedup_exact_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit hash collisions (~n²/2⁶⁵ — absent at any test SF, and in
     production you'd add a length column to the key), so it shares
     dedup_exact's oracle."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = fanned_documents(spark, sf_dir)
     keepers = (
         d.select(F.xxhash64("text").alias("h"), "doc_id")
         .groupBy("h")

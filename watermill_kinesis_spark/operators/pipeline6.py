@@ -14,8 +14,6 @@ a float division.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
@@ -38,51 +36,10 @@ NOVELTY_N = 5
 #: trim fraction per tail for length_trim_percentile (5% ⇒ inner 90%)
 TRIM_PCT = 5
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _gram_explode_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Partition count for the pre-explosion doc repartition of the
-    excise pair — sized from INPUT GEOMETRY, not a fixed multiplier
-    (VERDICT r10 task 3). The r10 fix repartitioned docs to a flat
-    8×defaultParallelism before every gram explosion because parquet
-    splits size tasks by FILE bytes, blind to the ~n_chars× explode
-    amplification; but a fixed multiplier overshoots small inputs
-    (sf0.1 got 256 partitions for ~140 MB of gram rows — ~220 near-empty
-    tasks through every downstream doc-partitioned window stage, the
-    r10 bench regression) and undershoots at cluster scale. Instead the
-    gram-row volume is estimated from the documents parquet byte size
-    (text compresses ~10×; a gram row is ~24 B of (doc_id, i, hash) in
-    the exchange) and divided into ~128 MB tasks, floored at
-    defaultParallelism so every core works at any input size and capped
-    at 64×defaultParallelism so a mis-estimate can never schedule an
-    absurd task count. At the 100× replica (58 MB parquet, 4-core
-    vanilla session) this yields ~105 partitions — MORE headroom per
-    1 GiB heap than r10's 8×4=32 — while sf0.1 drops to exactly
-    defaultParallelism.
-
-    The input is stat'd through the Hadoop FileSystem API resolved
-    from the session's Hadoop conf (``getContentSummary`` — one
-    namenode/list call, works identically for local paths, s3a://,
-    hdfs://, …), NOT the driver's local ``os.walk`` (VERDICT r11
-    task 4): a driver-local stat silently returns nothing for the
-    remote stores the 100 TB deployment actually reads from, which
-    would degrade geometry sizing to the flat 8×dp rule exactly where
-    it matters most. The flat rule remains only as the fallback for a
-    genuinely unstattable path."""
-    dp = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        size = int(fs.getContentSummary(jpath).getLength())
-    except Exception:
-        return 8 * dp  # unstattable input: the r10 flat rule
-    est_gram_bytes = size * 10 * 24
-    return max(dp, min(64 * dp, est_gram_bytes // (128 << 20) + 1))
+#: ``adaptive_partitions`` expansion for a pre-explode doc repartition:
+#: text decompresses ~10× out of parquet and each char-gram row is
+#: ~24 B of (doc_id, i, hash) in the exchange
+GRAM_EXPAND = 10 * 24
 
 
 def _char_gram_hashes(d: DataFrame, k: int) -> DataFrame:
@@ -164,18 +121,20 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the doc's minhash over all windows). One explode + one w-row
     window frame + one groupBy — all partitioned by doc_id, so the
     whole plan is one doc-keyed shuffle at any corpus size."""
-    # Repartition by doc_id BEFORE the gram explode (optimization
-    # round 13, guide §2.3 "project before the exchange", inverted:
-    # exchange before the explode): the explode+md5 otherwise runs in
-    # the single-split scan task (profiled 3.7 s serial) and the
+    # Repartition by doc_id BEFORE the gram explode (guide §2.3
+    # "project before the exchange", inverted: exchange before the
+    # explode): the explode+md5 otherwise runs in the single-split
+    # scan task (profiled 3.7 s serial) and the
     # doc_id window then shuffles the EXPLODED rows — 52 MB of md5
     # strings at sf0.1 versus ~0.6 MB of raw text. With the text
     # exchanged first, hashing is parallel and the window + final
     # groupBy reuse the doc_id partitioning: zero post-explode
-    # exchanges. Partition count is the excise pair's input-geometry
-    # rule (gram volume / ~128 MB tasks, floored at cores).
-    d = _docs(spark, sf_dir).repartition(
-        _gram_explode_partitions(spark, sf_dir), "doc_id"
+    # exchanges. Sized from the estimated gram volume.
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
     )
     grams = _char_gram_hashes(d, WINNOW_K)
     win = (
@@ -237,8 +196,11 @@ def chunk_cdc_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-explode doc_id repartition: parallel gram hashing + the LAG
     # window and the final doc_id join reuse the partitioning (see
     # winnowing_fingerprints)
-    d = _docs(spark, sf_dir).repartition(
-        _gram_explode_partitions(spark, sf_dir), "doc_id"
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
     )
     grams = _char_gram_hashes(d, CDC_K)
     bounds = grams.where(
@@ -305,7 +267,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit by luck). Now no gram-keyed join exists to mis-plan: the gram
     dictionary lives exactly one aggregation long. Novelty is an exact
     integer permille, never a float."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     starts = F.sequence(F.lit(1), F.size("t") - NOVELTY_N + 1)
     g = (
@@ -371,7 +333,7 @@ def length_trim_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible everywhere, deterministic under ties, and at scale
     costs one source-keyed window (no global sort: each source ranks
     inside its own partition)."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     win = W.partitionBy("source").orderBy("n_chars", "doc_id")
     cnt = W.partitionBy("source")
     ranked = d.select(
@@ -426,7 +388,7 @@ def vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over TYPES (vocabulary-sized, millions at worst — not corpus
     rows), so the single-partition window is bounded regardless of
     corpus size; the k-expansion is a 3-row broadcast cross join."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
@@ -488,7 +450,7 @@ def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit reduces the corpus to 16 rows BEFORE the window computes
     the total, so the single-partition exchange carries 16 rows at
     any corpus size."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     per = (
         d.select(
             F.substr(F.md5(F.col("doc_id").cast("string")), F.lit(1), F.lit(1)).alias(
@@ -542,7 +504,7 @@ def reservoir_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     every engine/run/retry) and keep the k smallest. One source-keyed
     window, no global pass; at 100 TB each source ranks inside its own
     partition and emits exactly k rows."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     win = W.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
@@ -594,7 +556,9 @@ def packing_next_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation, not against itself."""
     import pandas as pd
 
-    d = _docs(spark, sf_dir).select("source", "doc_id", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select(
+        "source", "doc_id", "n_chars"
+    )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
@@ -681,10 +645,17 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-explode doc_id repartition: parallel gram hashing for BOTH
     # gram passes + the winnowing window reuses the partitioning (see
     # winnowing_fingerprints)
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
     d = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < SUB_MAX_DOC)
-        .repartition(_gram_explode_partitions(spark, sf_dir), "doc_id")
+        .repartition(
+            adaptive_partitions(
+                spark, sf_dir, "documents", expand=GRAM_EXPAND
+            ),
+            "doc_id",
+        )
     )
     # binary md5 grams (engine-internal — h never reaches the output;
     # see _char_gram_hashes_bin: same selection/equality semantics,
@@ -882,8 +853,7 @@ def _excise_spans(spark: SparkSession, sf_dir: str):
     one corpus-wide exchange is the gram hash ranking over candidate
     docs, the same budget the pair detector already pays.
 
-    The candidate gate runs on xxhash64 LONGS (r10 re-plan, forged
-    at the 100× replica): the gate is collision-TOLERANT — a hash
+    The candidate gate runs on xxhash64 LONGS: the gate is collision-TOLERANT — a hash
     collision only ever ADDS a candidate doc (more shared
     fingerprints, more apparent intra-doc repeats), never removes
     one, so the superset guarantee — and with it the oracle-proved
@@ -897,9 +867,8 @@ def _excise_spans(spark: SparkSession, sf_dir: str):
     sort/aggregate spill-merges (140M × 56B gram rows; each spill
     file's reader buffers ~1 MB of heap); the long-gram gate carries
     the same rows at 24 B. Docs are also REPARTITIONED by doc_id
-    before every gram explosion, sized from input geometry
-    (:func:`_gram_explode_partitions` — ~128 MB of estimated gram
-    rows per task, floored at defaultParallelism): parquet
+    before every gram explosion, sized from the estimated gram volume
+    (``adaptive_partitions`` with ``GRAM_EXPAND``): parquet
     splits size input tasks by FILE bytes, blind to the ~n_chars×
     explode amplification, so 500k docs arrived as ~4 tasks — the
     repartition also shuffles megabytes of documents instead of
@@ -907,8 +876,11 @@ def _excise_spans(spark: SparkSession, sf_dir: str):
     window downstream (a first row-local-array redesign of this gate
     avoided the explode entirely but paid ~10× in interpreted HOF
     time; the long-explode form keeps whole-stage codegen)."""
-    d = _docs(spark, sf_dir).repartition(
-        _gram_explode_partitions(spark, sf_dir), "doc_id"
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
     )
     starts = F.sequence(F.lit(1), F.length("text") - SUB_K + 1)
     kg = (

@@ -76,7 +76,7 @@ def skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange moves raw text bytes, far less than the ~2W× pair rows
     # it would otherwise take to distribute the work. Geometry-derived
     # count (optimization round 14, VERDICT r13 task 1): the flat
-    # defaultParallelism fan-out over-fanned small inputs (8-core run
+    # core-count fan-out over-fanned small inputs (8-core run
     # beat the 32-core run, PERF_r13 ratio 0.73). expand=14 centers
     # the measured partition-sweep optimum (tools/tune_fanout.py,
     # best-of-4 at sf0.1: 8→0.309 s, 16→0.265, 32→0.365; see

@@ -23,10 +23,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # ---------------------------------------------------------------------------
 # lexical richness: Yule's K + Sichel's S + hapax ratio per source
 
@@ -76,7 +72,7 @@ def yule_sichel_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     quotients truncate nonnegative numerators (Σc² ≥ N by c ≥ 1), so
     Spark ``div`` and DuckDB ``//`` agree."""
     toks = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull() & F.col("source").isNotNull())
         .select("source", F.explode(F.split("text", " ")).alias("tok"))
     )
@@ -142,7 +138,7 @@ def token_burstiness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup → TakeOrderedAndProject top-N with a total order (df desc,
     tok) — never a global sort, nothing broadcast."""
     td = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok", "doc_id")
@@ -226,7 +222,7 @@ def unigram_tvd_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     class AQE must never broadcast (the r9 rule; plan_audit's
     DictBcast column enforces the static face). Per-source totals
     need NO second explode — sum(size(split)) per doc row."""
-    d = _docs(spark, sf_dir).where(
+    d = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull() & F.col("source").isNotNull()
     )
     ps = (
@@ -346,7 +342,7 @@ def mann_whitney_u_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100× replica (n = 5·10⁵ total); past that lift to
     decimal(38,0)."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select(
             F.col("n_chars").alias("v"),
@@ -433,7 +429,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride size(split(·)) per doc row — no explode. int64-safe
     trivially (token totals)."""
     keyed = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull())
         .select(
             "source",
@@ -703,7 +699,7 @@ def cramer_von_mises_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars| rows first; cumulative windows run over that bounded
     aggregated table (plan-audit-exempt); one scalar fold."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select(
             F.col("n_chars").alias("v"),
@@ -797,7 +793,7 @@ def mood_median_test_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-table aggregate for the median, one |langs|-sized cell
     aggregate, windows only over those bounded relations."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select("lang", F.col("n_chars").alias("v"))
     )
@@ -1001,7 +997,7 @@ def ingest_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson). Intra-batch keep-first is a window over the hash
     partition — no dictionary join at all (the dedup_token_savings
     shape). The ingest cut itself is one scalar MIN/MAX aggregate."""
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     bounds = d.agg(
         F.min("doc_id").alias("lo"), F.max("doc_id").alias("hihi")
     ).selectExpr(

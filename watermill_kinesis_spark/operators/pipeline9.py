@@ -43,10 +43,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 #: shared ∞ sentinel for ratio statistics whose denominator can be
 #: made arbitrarily small by (pathological but constructible) data:
 #: 10¹⁵ micro-units = 10⁹ in natural units, far above any meaningful
@@ -151,7 +147,7 @@ def kruskal_wallis_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs — 6× past the 100× replica; beyond that, shift the
     contribution to ÷2⁶ fixed-point."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select("lang", F.col("n_chars").alias("v"))
     )
@@ -323,7 +319,7 @@ def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs at the 600-char cap; past that, drop the contribution to
     unit scale (the Kruskal-Wallis pattern)."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("source").isNotNull())
         .select("source", F.col("n_chars").alias("v"))
     )
@@ -486,7 +482,7 @@ def ansari_bradley_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over that bounded relation (aggregate-below
     exemption) and the statistic is one scalar aggregate."""
     vals = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select(
             F.col("n_chars").alias("v"),

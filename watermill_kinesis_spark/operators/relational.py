@@ -37,10 +37,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # scans / projection / filter
 
@@ -62,7 +58,7 @@ def project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`PushedFilters`/`ReadSchema` in the plan); at 100 TB this is the
     difference between scanning 2 columns of 1 year vs 11 columns of
     everything."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -110,7 +106,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: wide multi-aggregate after a pushed-down range
     filter. Map-side partial aggregation means the shuffle carries only
     |groups|×|aggs| rows — constant in data size."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp_ntz")
     )
     disc_price = lcents("l_extendedprice") * lfactor("l_discount", -1)
@@ -145,7 +141,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash aggregation with the standard agg family over the stream
     stand-in table."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         dsum("value").alias("sum_value"),
@@ -171,7 +167,7 @@ def agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct aggregation (expand + two-phase shuffle under the
     hood; for approximate at scale see approx_distinct)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.countDistinct("o_orderpriority").alias("n_priorities"),
@@ -213,7 +209,7 @@ def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct leg's buffer is counters only and the sketch leg
     keeps one register array per GROUP — the fixed-size promise the
     docstring always claimed."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("bigint").alias("n_users_exact"),
         F.count(F.lit(1)).alias("n"),
@@ -252,7 +248,7 @@ def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals via ROLLUP grouping sets."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("sum_qty")
     )
@@ -270,7 +266,7 @@ def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All grouping-set combinations via CUBE."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), dsum("o_totalprice").alias("sum_total")
     )
@@ -294,7 +290,7 @@ def pivot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot event types into per-user columns. Explicit value list ⇒
     single pass, no extra job to discover pivot values (matters on a
     100 TB fact table)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     kinds = ["click", "view", "purchase", "signup", "error"]
     p = (
         ev.groupBy("user_id")
@@ -327,8 +323,8 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim equi-join + aggregate. customer is small relative to
     orders ⇒ Catalyst broadcasts it (verify in plan); orders never
     shuffles for the join."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(c.c_nationkey.alias("nationkey"))
@@ -353,8 +349,8 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join preserving customers with no matching orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -378,8 +374,8 @@ def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI = EXISTS: ships only the join key of the probe side,
     no row duplication — the right way to filter 100 TB by membership."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -397,8 +393,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI = NOT EXISTS — set-difference without a distinct."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -420,9 +416,9 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast of the dimension chain (nation→region): zero
     shuffle on the probe side regardless of its size."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -455,11 +451,11 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → fact join → agg → top-k.
     The limit is pushed into a TakeOrderedAndProject — no global sort."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp_ntz")
     )
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp_ntz")
     )
     rev = lcents("l_extendedprice") * lfactor("l_discount", -1)
@@ -495,15 +491,15 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: five-way join with a region filter that prunes
     through broadcast dims; only the two fact tables shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     rev = lcents("l_extendedprice") * lfactor("l_discount", -1)
     return (
         c.join(o, c.c_custkey == o.o_custkey)
@@ -533,7 +529,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-agg, fully pushed down; the
     canonical 'is the scan efficient' benchmark."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
@@ -563,7 +559,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window function with a deterministic tie-break."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -594,7 +590,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running (cumulative) aggregate over an event-ordered frame; the
     ORDER BY includes unique keys so every prefix sum is well-defined."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 10)
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_suppkey") < 10)
     w = (
         W.partitionBy("l_suppkey")
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
@@ -627,7 +623,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via row_number — Spark's WindowGroupLimit pushes
     the k-limit into the shuffle, so only k rows per group survive the
     exchange (critical at scale)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
         c.select(
@@ -653,7 +649,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: ORDER BY + LIMIT compiles to TakeOrderedAndProject
     (per-partition heap + driver merge), never a full sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -680,8 +676,8 @@ def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of two membership sets."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     urgent = c.join(
         o.where(F.col("o_orderpriority") == "1-URGENT"),
         c.c_custkey == o.o_custkey,
@@ -706,7 +702,7 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — multiset difference with multiplicity preserved."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     left = o.where(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("custkey")
     )
@@ -727,7 +723,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL — multiset intersection."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     left = o.where(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("custkey")
     )
@@ -767,7 +763,7 @@ def scalar_string_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar function family (string/date/math) — all JVM built-ins
     inside whole-stage codegen; chosen for cross-engine bit-identical
     semantics (sqrt is IEEE-exact, round is half-away-from-zero in both)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.where(
         F.col("o_orderpriority").like("1-%") | F.col("o_orderpriority").like("5-%")
     ).select(
@@ -806,7 +802,7 @@ def scalar_string_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional bucketing + aggregate (CASE WHEN)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     band = (
         F.when(F.col("c_acctbal") < 0, "negative")
         .when(F.col("c_acctbal") < 3000, "low")
@@ -834,7 +830,7 @@ def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON scalar extraction from the payload-like ``props`` column —
     the envelope-decode analogue for structured payloads."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),

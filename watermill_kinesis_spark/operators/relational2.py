@@ -28,10 +28,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "scan_parquet",
     oracle="""
@@ -42,7 +38,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bare columnar scan with projection — the checklist's atom; the
     plan must show only ReadSchema's two columns reaching the scan."""
-    return _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    return load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
 
 
 @query(
@@ -64,11 +60,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (heavy-line orders; the testdata lacks commit/receipt dates) — a
     semi-join whose probe side is pre-filtered row-locally, so the
     join input is already reduced before any shuffle."""
-    o = _t(spark, sf_dir, "orders").where(
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
     )
-    late = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 45)
+    late = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 45)
     return (
         o.join(late, o.o_orderkey == late.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -92,7 +88,7 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: customers above the global average
     balance. Spark evaluates the subquery once and broadcasts the
     scalar — no per-row recomputation."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     avg_bal = c.agg(davg("c_acctbal").alias("a"))
     return (
         c.join(F.broadcast(avg_bal))
@@ -119,7 +115,7 @@ def having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation predicate (HAVING) — filters groups, not rows;
     runs after the partial/final aggregate so the shuffle still carries
     only group summaries."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(
@@ -149,11 +145,11 @@ def q12_shipmode_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional aggregation (CASE inside SUM) after
     a fact-fact join with row-local predicates pushed to the scan
     (linestatus stands in for shipmode, absent from the testdata)."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
@@ -186,11 +182,11 @@ def q12_shipmode_case(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: broadcast dim join + ratio of conditional to
     total revenue, all in exact decimal until the final division."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     rev = lcents("l_extendedprice") * lfactor("l_discount", -1)
     promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(
         F.lit(0).cast("bigint")
@@ -232,17 +228,17 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN over a grouped-HAVING subquery (semi-join
     against an aggregate), then a three-way join and top-k."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("q"))
         .where(F.col("q") > 150)
         .select("l_orderkey")
     )
-    o = _t(spark, sf_dir, "orders").join(
+    o = load_table(spark, sf_dir, "orders").join(
         big, F.col("o_orderkey") == big.l_orderkey, "left_semi"
     )
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -274,8 +270,8 @@ def q19_disjunctive_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     the common l_quantity range [1,30] as a pushable scan filter while
     the disjunction evaluates post-join — both halves visible in the
     plan."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 11))
         | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25) & F.col("l_quantity").between(10, 20))
@@ -309,8 +305,8 @@ def q22_global_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar subquery + anti-join (above-average
     balance, no pending orders — every testdata customer has *some*
     order, so the status filter keeps the anti-join non-trivial)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
     avg_pos = c.where(F.col("c_acctbal") > 0.0).agg(davg("c_acctbal").alias("a"))
     return (
         c.join(F.broadcast(avg_pos))
@@ -335,8 +331,8 @@ def q22_global_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cross_join_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit Cartesian product of two (small) dims — broadcast
     nested loop, no shuffle."""
-    r = _t(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
-    n = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("nation"))
+    r = load_table(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
+    n = load_table(spark, sf_dir, "nation").select(F.col("n_name").alias("nation"))
     return r.crossJoin(F.broadcast(n))
 
 
@@ -350,7 +346,7 @@ def cross_join_small(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT = group-by-all-columns; partial aggregation collapses
     duplicates map-side before the shuffle."""
-    return _t(spark, sf_dir, "orders").select(
+    return load_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderpriority"
     ).distinct()
 
@@ -386,10 +382,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no shuffle, hence no shuffle skew; the salted pattern only
     means anything on a shuffle join, which the pin guarantees."""
     n_salt = 8
-    e = _t(spark, sf_dir, "events").withColumn(
+    e = load_table(spark, sf_dir, "events").withColumn(
         "salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salt)).cast("int")
     )
-    c = _t(spark, sf_dir, "customer").withColumn(
+    c = load_table(spark, sf_dir, "customer").withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     ).hint("merge")
     return (

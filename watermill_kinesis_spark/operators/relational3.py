@@ -39,10 +39,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # TPC-H deep-join shapes
 
@@ -70,14 +66,14 @@ def q7_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     Six-way join where both nation dims broadcast twice under different
     aliases; the disjunctive pair predicate lands after the broadcasts
     so only lineitem↔orders shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     rev = lcents("l_extendedprice") * lfactor("l_discount", -1)
@@ -135,23 +131,23 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of regional PROMO volume per
     year — conditional aggregation as a ratio of two exact-decimal sums
     (single double division at the end keeps it bit-deterministic)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
     )
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("nation")
     )
     # second view of nation (load_table memoizes the table plan, so a
     # self-join needs aliased projections to mint fresh attribute ids)
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_regionkey").alias("n2_region")
     )
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     vol = lcents("l_extendedprice") * lfactor("l_discount", -1)
     zero = F.lit(0).cast("bigint")
     return (
@@ -203,11 +199,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     product family. No partsupp table exists, so unit cost is proxied
     as 10% of p_retailprice — the exact-decimal chain (12,2)×(12,2)×
     (4,2) stays far under the decimal(38) cap in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     profit = (
         lcents("l_extendedprice") * lfactor("l_discount", -1) * F.lit(10)
         - lcents("p_retailprice") * lcents("l_quantity")
@@ -248,13 +244,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter. Exact-decimal revenue makes the DESC sort deterministic;
     c_custkey breaks any residual ties so LIMIT is stable across
     engines and parallelism."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
     )
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     rev = lcents("l_extendedprice") * lfactor("l_discount", -1)
     return (
         c.join(o, c.c_custkey == o.o_custkey)
@@ -286,8 +282,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outer join keeps zero-order customers (COUNT of a null-extended
     column is 0), then a second tiny aggregation histograms the counts.
     First agg shuffles on c_custkey; second is a few hundred rows."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") != "P")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") != "P")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -318,7 +314,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The revenue view is computed once and self-compared against its own
     max via a 1-row broadcast cross join; equality on exact-decimal
     totals (cast to double once) is safe cross-engine."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
     )
@@ -327,7 +323,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsum(rev, 4).alias("total_revenue")
     )
     mx = revenue.agg(F.max("total_revenue").alias("max_rev"))
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return (
         revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("max_rev"))
         .join(F.broadcast(s), F.col("supplier_no") == s.s_suppkey)
@@ -355,14 +351,14 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluding flagged suppliers. With no partsupp table, lineitem is
     the part↔supplier bridge; the NOT IN becomes a broadcast left-anti
     join (s_suppkey is non-null so anti-join ≡ NOT IN)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#1")
         & (~F.col("p_type").isin("PROMO", "ECONOMY"))
         & (F.col("p_size").isin(1, 5, 10, 15, 20, 25))
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -395,8 +391,8 @@ def q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — one shuffle on l_partkey instead of a nested loop, exactly
     the plan a 100 TB lineitem needs. l_quantity is integer-valued so
     the double AVG is order-independent (exact integer sums)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#3")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#3")
     avg_q = li.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         (F.lit(0.2) * F.avg("l_quantity")).alias("qty_thresh")
     )
@@ -432,9 +428,9 @@ def q20_nested_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem (broadcast), the per-(supplier,part) HAVING aggregates,
     and the surviving supplier set semi-joins the supplier dim.
     l_quantity sums are integer-exact in double."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pk = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .where(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
@@ -446,7 +442,7 @@ def q20_nested_in(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return s.join(
         F.broadcast(heavy), s.s_suppkey == heavy.l_suppkey, "left_semi"
     ).select("s_name", "s_acctbal")
@@ -485,8 +481,8 @@ def q21_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey total, versus two extra self-joins for the literal
     correlated form; the oracle keeps the EXISTS formulation so the
     equivalence is cross-checked."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
+    li = load_table(spark, sf_dir, "lineitem")
     lo = li.join(
         o.select("o_orderkey", "o_orderdate"), li.l_orderkey == F.col("o_orderkey")
     ).withColumn(
@@ -498,7 +494,7 @@ def q21_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_late_supp"
         ),
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return (
         lo.where(F.col("is_late"))
         .join(per_order, "o_orderkey")
@@ -530,7 +526,7 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark expands to a single shuffle with a grouping-id column, not
     three scans (same contract as rollup_agg/cube_agg but with an
     explicit, non-hierarchical set list)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("gs_lineitem")
     return spark.sql(
         """

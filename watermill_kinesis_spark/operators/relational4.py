@@ -16,10 +16,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "window_analytics",
     oracle="""
@@ -46,7 +42,7 @@ def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (o_custkey) so the plan sorts each partition once and
     evaluates every function in a single Window node. o_orderkey breaks
     date ties; percent_rank/cume_dist are single exact double divisions."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 100)
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 100)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     return o.select(
@@ -79,8 +75,8 @@ def string_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-deterministic in arrival order, so the engine's contract is
     sort-then-join — array_sort(collect_list(..)) makes the result a
     pure function of the group's SET of values at any parallelism."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") < 300)
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 300)
+    n = load_table(spark, sf_dir, "nation")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
@@ -114,7 +110,7 @@ def percentile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently in the last ulp. At 100 TB the approximate twin
     (`approx_distinct`-style percentile_approx) is the scale path;
     this is the exact-semantics contract."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.25)), 6).alias("p25_price"),
         F.round(F.percentile("l_extendedprice", F.lit(0.5)), 6).alias("median_price"),
@@ -151,9 +147,9 @@ def q2_min_value_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set — one shuffle on p_partkey, no per-row re-scan; the
     oracle keeps the correlated formulation so the equivalence is
     cross-checked. s_suppkey breaks acctbal ties deterministically."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_size") == 10)
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").where(F.col("p_size") == 10)
+    s = load_table(spark, sf_dir, "supplier")
     bridge = li.select("l_partkey", "l_suppkey").distinct()
     w = W.partitionBy("p_partkey").orderBy("s_acctbal", "s_suppkey")
     return (
@@ -194,9 +190,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     second scan. Sums are exact decimal; the threshold compare happens
     in double on both engines (one identical IEEE rounding each), so
     the boundary is bit-deterministic."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_7")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_7")
     from watermill_kinesis_spark.functions.exact import lcents, lfactor
 
     val = lcents("l_extendedprice") * lfactor("l_discount", -1)
@@ -276,7 +272,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from watermill_kinesis_spark.functions.exact import lcents
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     xc = lcents("l_extendedprice")
     q = lcents("l_quantity", 0)
     d38 = "decimal(38,0)"

@@ -22,10 +22,6 @@ from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "join_full_outer",
     oracle=f"""
@@ -54,7 +50,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per key per side — at 100 TB the join input is |customers|,
     not |orders|, and the full-outer shuffle is the already-reduced
     keyset."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def year_slice(y: int, n_alias: str, s_alias: str) -> DataFrame:
         return (
@@ -118,7 +114,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in both engines. The windowed COUNT is cast to BIGINT on
     both sides (the oracle's HUGEINT otherwise lands as float64 in the
     comparator)."""
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id") < 50)
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 50)
     base = ev.groupBy(
         "user_id",
         "event_id",
@@ -172,7 +168,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     render through decimal so min/max strings are engine-identical.
     At 100 TB swap COUNT(DISTINCT) for approx_count_distinct — the
     rest re-aggregates from per-file statistics."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wide = o.agg(
         F.count(F.lit(1)).alias("n"),
         (F.count(F.lit(1)) - F.count("o_custkey")).alias("nn_ck"),
@@ -218,7 +214,7 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats. Spark expands it as a generator projection (no shuffle until
     the aggregate); per-measure sums run as exact decimal."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") < 2000)
         .select(
             "l_orderkey",
@@ -268,7 +264,7 @@ def union_by_name_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     only safe union at 100 TB, where positional union silently pairs
     mismatched columns after any schema change. The null-count audit
     shows exactly which generation carried which field."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v1 = ev.where(F.col("event_id") < 500).select("event_id", "event_type", "value")
     v2 = ev.where((F.col("event_id") >= 500) & (F.col("event_id") < 1000)).select(
         "event_id", "user_id", "event_type"
@@ -304,7 +300,7 @@ def changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     any history depth. The streaming twin is
     ``dropDuplicatesWithinWatermark``/state-store upsert; this batch
     form is the backfill/compaction job run against the same data."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -356,7 +352,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus side, candidates travel as ids+grams only. At 100 TB
     the eval-gram set stays benchmark-sized (MBs), so the broadcast
     pattern holds at any corpus scale."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
 
     def grams(df: DataFrame) -> DataFrame:
@@ -410,7 +406,7 @@ def corpus_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size) lift local numbers to global positions. At 100 TB,
     widen to more hex chars for more buckets; no sampling, no skew (the
     hash is uniform by construction)."""
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 2000)
+    d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 2000)
     key = F.md5(F.col("doc_id").cast("string"))
     bucket = F.conv(F.substring(key, 1, 2), 16, 10).cast("int")
     rows = d.select(
@@ -676,7 +672,7 @@ def interval_coalesce_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     both aggregates cluster on the high-cardinality user axis — one
     shuffle, per-user chains scan in O(n), no enum partition
     anywhere."""
-    ev = _t(spark, sf_dir, "events").where(
+    ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull() & (F.col("user_id") < 200)
     )
     s = F.unix_micros(F.col("ts").cast("timestamp"))

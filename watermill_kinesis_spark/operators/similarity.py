@@ -44,23 +44,28 @@ def _emb(
     distribute: bool = False,
     fixed: bool = False,
 ) -> DataFrame:
-    """embeddings; ``distribute=True`` spreads the one small input split
-    across all cores — needed when an operator does CPU-bound per-row
-    work over the whole corpus (e.g. 64 LSH projections/row). Left off
-    for broadcast-probe shapes, where the extra shuffle costs more than
-    it buys.
+    """embeddings as ``(vec_id, emb array<double>, …)``: the other
+    columns (``label`` in the testdata table) ride along.
+    ``distribute=True`` repartitions by vec_id for operators that do
+    CPU-bound per-row kernel work over the whole corpus (64 LSH
+    projections per row, the iterative k-means / k-center / PCA passes);
+    it is left off for broadcast-probe shapes, where the extra shuffle
+    costs more than it buys.
 
-    The partition count is derived from on-disk size, not a constant
-    (guide §2): tiny corpora stop paying the per-Python-task fixed cost
-    32× per kernel stage, real corpora still fan out to every core.
-    ``fixed=True`` keeps the old defaultParallelism layout — for the
-    one consumer (similarity_ann_pq) whose batch-local candidate pool
-    makes its approximate OUTPUT depend on the batch layout; its
-    results must stay identical to previous rounds'."""
-    e = load_table(spark, sf_dir, "embeddings").select(
+    The partition count is ``adaptive_partitions`` of the on-disk size:
+    the iterative fits run ~10 Python-kernel stages per call, and a
+    32-partition layout of a small corpus pays 32 × ~20 ms of
+    Python-task fixed cost per stage for microseconds of BLAS work
+    (measured 5.2 s → 3.3 s on the k-center audit at sf0.1), while a
+    real corpus still reaches defaultParallelism. ``fixed=True`` keeps
+    the defaultParallelism layout for the one consumer
+    (similarity_ann_pq) whose batch-local candidate pool makes its
+    approximate OUTPUT depend on the batch layout."""
+    t = load_table(spark, sf_dir, "embeddings")
+    e = t.select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("emb"),
-        "label",
+        *[c for c in t.columns if c not in ("vec_id", "embedding")],
     )
     if distribute:
         from watermill_kinesis_spark.sources.tables import adaptive_partitions

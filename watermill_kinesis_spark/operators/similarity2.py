@@ -390,12 +390,7 @@ def embedding_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from watermill_kinesis_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    e = e.repartition(e.sparkSession.sparkContext.defaultParallelism, "vec_id")
+    e = _emb(spark, sf_dir, distribute=True).select("vec_id", "emb")
     qrows = sorted(
         e.where(F.col("vec_id") < N_QUERIES).collect(), key=lambda r: r.vec_id
     )

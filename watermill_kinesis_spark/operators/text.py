@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from watermill_kinesis_spark.registry import query
-from watermill_kinesis_spark.sources.tables import load_table
+from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
 #: tiny stopword list matching the synthetic corpus vocabulary
 STOPWORDS = ("the", "a", "of", "and", "to")
@@ -26,14 +26,6 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 #: modulus keeps acc*257+c < 2^48 — no bigint overflow in either engine
 FP_BASE = 257
 FP_MOD = 1_000_000_007
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, redistributed across all cores — the table is one
-    input split on disk, and tokenization/fingerprinting is CPU-bound
-    per row; without this the operators serialize onto one task."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
 
 
 @query(
@@ -59,7 +51,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality statistics: char/token/distinct-token counts,
     mean token length, stopword ratio. The standard first-pass quality
     filter of an LLM data pipeline (cf. Gopher/C4 heuristics)."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
@@ -98,7 +90,7 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     r"""BPE-ish token counting: `\w+|[^\w\s]` splits words from
     punctuation the way byte-pair pretokenizers do, aggregated per
     source. Regex runs JVM-side once per row."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     n_tok = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\w+|[^\w\s]"), F.lit(0)))
     return d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -121,7 +113,7 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lang_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language allow-list filter + per-(lang, source) rollup — the
     partition-prunable corpus selection step."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     return (
         d.where(F.col("lang").isin("en", "fr"))
         .groupBy("lang", "source")
@@ -151,7 +143,7 @@ def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
     a prediction. (With real corpora the marker lists are per-language
     char n-grams; the mechanism — token match + threshold, one pass, no
     UDF — is the scale-relevant part.)"""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
@@ -196,7 +188,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     score is bit-stable across engines; regexes run JVM-side inside
     codegen — this is the shape of the first (and most selective) pass
     over a 100 TB crawl, and it's a pure narrow scan."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     n_tokens = F.size(toks)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -247,7 +239,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints can be joined across systems). DuckDB's ``list_reduce``
     seeds with the first element; a 0-seeded fold is identical because
     ``0*base + c0 = c0``."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     chars = F.transform(
         F.split(F.col("text"), ""), lambda ch: F.ascii(ch).cast("bigint")
     )
@@ -356,7 +348,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers with shared expression text. Plan: one corpus pass to
     |langs|² cells, then windows over that constant-size matrix — the
     eval is free at any corpus scale."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
@@ -711,7 +703,7 @@ def template_skeleton_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     One JVM regex pass per doc + a 16-byte-key shuffle — the same
     scale shape as ``dedup_exact_hashkey``; group size IS the signal,
     so skew equals output."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     skeleton = F.md5(
         F.regexp_replace(
             F.regexp_replace(F.col("text"), F.lit("[0-9]+"), F.lit("0")),
@@ -798,7 +790,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection pass per document, zero shuffle, and the scan reads
     only (doc_id, text) — at 100 TB this is embarrassingly parallel
     map work, the cheapest possible plan shape."""
-    d = _docs(spark, sf_dir)
+    d = fanned_documents(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     stop_arr = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
     n_words = F.size(toks)

@@ -512,12 +512,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 def _load_all() -> None:
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            if e.name and e.name.startswith("watermill_kinesis_spark"):
-                continue  # module not built yet
-            raise
+        importlib.import_module(mod)
 
 
 def all_specs() -> dict[str, QuerySpec]:

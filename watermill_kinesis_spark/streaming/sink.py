@@ -145,8 +145,8 @@ class KinesisPublisher:
     - the ``PutRecords`` response is READ, not discarded (reference
       publisher.go:84): entries whose response row carries an
       ``ErrorCode`` (throttle, internal failure) surface as
-      ``failed_indexes`` so ``put_chunked`` retries exactly those
-      records with backoff;
+      ``failed_indexes`` so ``put_chunked`` retries those records
+      (and the later records of their keys) with backoff;
     - >500-record requests never happen — ``put_chunked`` splits first
       (the reference hard-errors instead, publisher.go:65-68).
 
@@ -214,26 +214,53 @@ def put_chunked(
 ) -> int:
     """Publish entries in ≤``max_per_call`` chunks, retrying per-record
     failures (fixes reference publisher.go:65 TODO and the discarded
-    response at publisher.go:84). Returns records published. Raises if
-    records still fail after ``max_retries`` — the error must surface
-    so Spark fails (and later retries) the batch: that is the nack
-    path (SURVEY.md §2-A #7)."""
-    published = 0
+    response at publisher.go:84). Returns the number of entries
+    published. Raises if records still fail after ``max_retries`` — the
+    error must surface so Spark fails (and later retries) the batch:
+    that is the nack path (SURVEY.md §2-A #7).
+
+    Per-key order under a partial failure: a retry resends each failed
+    record AND every later record of the same partition key in the
+    chunk, even those that already landed, so the last copy of each
+    record lands in send order (the per-key FIFO of reference
+    marshaller.go:65-69). The trade-off is duplicates: one failed
+    record of a hot key resends the rest of that key's chunk, which
+    at-least-once delivery allows. The order holds for the stream as
+    delivered; a consumer that drops repeated UUIDs keeping the first
+    copy (``semantics.dedup_by_uuid``) can still see a resent record
+    ahead of the failed one. Keyless records carry no order and are
+    resent only when they failed themselves."""
     for i in range(0, len(entries), max_per_call):
         chunk = entries[i : i + max_per_call]
         for attempt in range(max_retries + 1):
-            result = publisher.put_records(chunk)
-            failed = result.failed_indexes
-            published += len(chunk) - len(failed)
+            failed = publisher.put_records(chunk).failed_indexes
             if not failed:
                 break
-            chunk = [chunk[j] for j in failed]
             if attempt == max_retries:
                 raise RuntimeError(
-                    f"{len(chunk)} records failed after {max_retries} retries"
+                    f"{len(failed)} records failed after {max_retries} retries"
                 )
+            chunk = _resend(chunk, failed)
             time.sleep(backoff_s * (2**attempt))
-    return published
+    return len(entries)
+
+
+def _resend(
+    chunk: list[PutRecordsEntry], failed: list[int]
+) -> list[PutRecordsEntry]:
+    """The failed records of ``chunk`` plus, from a key's first failed
+    record on, every later record of that key — in chunk order."""
+    failed_set = set(failed)
+    stalled: set[str] = set()
+    out = []
+    for j, e in enumerate(chunk):
+        if j in failed_set:
+            out.append(e)
+            if e.partition_key is not None:
+                stalled.add(e.partition_key)
+        elif e.partition_key in stalled:
+            out.append(e)
+    return out
 
 
 def put_wire(
