@@ -74,14 +74,14 @@ def main() -> int:
     #    verify → connected components → keep each cluster's canonical
     #    doc (the same blocked plan dedup_ngram_jaccard /
     #    dedup_cluster_canonical run; candidates travel as ids only)
+    from watermill_kinesis_spark.functions.textexpr import word_shingles
     from watermill_kinesis_spark.operators.dedup import (
-        _shingles,
+        SHINGLE_N,
         connected_components,
     )
 
-    sh = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh"),
+    sh = docs.select("doc_id", F.split("text", " ").alias("toks")).select(
+        "doc_id", F.explode(word_shingles("toks", SHINGLE_N)).alias("sh")
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (

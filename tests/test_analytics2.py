@@ -152,11 +152,13 @@ def test_containment_capped_drops_hot_shingles(spark, tmp_path):
 def test_containment_capped_equals_exact_below_cap(spark, sf_dir):
     """With no shingle above the cap (true at sf0.001), the capped
     face must emit exactly the exact face's pairs."""
-    from watermill_kinesis_spark.operators.dedup import _shingles
+    from watermill_kinesis_spark.functions.textexpr import word_shingles
+    from watermill_kinesis_spark.operators.dedup import SHINGLE_N
 
     df_max = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(_shingles(F.col("text"))).alias("sh"))
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", F.explode(word_shingles("toks", SHINGLE_N)).alias("sh"))
         .groupBy("sh").count().agg(F.max("count")).first()[0]
     )
     if df_max > 100:  # fixture condition not met at this SF

@@ -1,6 +1,7 @@
-"""Direct tests for operators/distscan.py — the distributed per-group
-scan that replaced every enum-partitioned window (r7). The ten
-operators riding it are oracle-checked end-to-end; these pin the
+"""Direct tests for functions/distscan.py — the distributed per-group
+scan that replaces every enum-partitioned window and every global
+single-partition rank. The operators riding it are oracle-checked
+end-to-end; these pin the
 helper's own contract: bit-identity with the single-window plan,
 NTILE closed-form equivalence, the slice-bounded parallelism claim,
 and the loud-failure paths."""
@@ -10,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row, Window as W, functions as F
 
-from watermill_kinesis_spark.operators.distscan import (
+from watermill_kinesis_spark.functions.distscan import (
     grouped_scan,
     ntile_closed_form,
     range_slices,
@@ -47,6 +48,33 @@ def test_grouped_scan_matches_window_rank_and_cumsum(spark):
     assert got == want
     assert totals[("tiny",)]["n"] == 1 and int(totals[("tiny",)]["x"]) == 9
     assert totals[("a",)]["n"] == 50
+
+
+def test_grouped_scan_without_groups_is_a_global_scan(spark):
+    """With no group columns rn and cum_<c> are the global row number
+    and running sum of ONE window over the whole relation — heavy ties
+    in the first order key are broken by the tiebreak column — and
+    the totals hold one entry under the empty key."""
+    rows = [Row(k=i % 3, tb=(i * 37) % 101, x=(i * 13) % 5) for i in range(101)]
+    df = spark.createDataFrame(rows)
+    scan, totals = grouped_scan(
+        df, [], [F.col("k"), F.col("tb")], sum_cols=["x"], nparts=4
+    )
+    got = {(r.k, r.tb): (r.rn, int(r.cum_x)) for r in scan.collect()}
+    w = W.orderBy("k", "tb")
+    ref = df.select(
+        "k",
+        "tb",
+        F.row_number().over(w).alias("rn"),
+        F.sum("x")
+        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("cum_x"),
+    )
+    want = {(r.k, r.tb): (r.rn, r.cum_x) for r in ref.collect()}
+    assert got == want and len(got) == 101
+    assert list(totals) == [()]
+    assert totals[()]["n"] == 101
+    assert int(totals[()]["x"]) == sum(r.x for r in rows)
 
 
 def test_ntile_closed_form_matches_window_ntile(spark):
@@ -119,7 +147,7 @@ def test_grouped_order_stats_matches_sorted_picks(spark):
     group shapes (singletons, heavy duplicates, negative values) every
     requested rank must select exactly sorted(values)[rank-1], and the
     free count_col must equal the group size."""
-    from watermill_kinesis_spark.operators.distscan import grouped_order_stats
+    from watermill_kinesis_spark.functions.distscan import grouped_order_stats
 
     cases = {
         "single": [7.0],
@@ -160,7 +188,7 @@ def test_grouped_order_stats_rejects_out_of_range_pick(spark):
     it must now raise, mirroring the null-group-key guard."""
     import pytest
 
-    from watermill_kinesis_spark.operators.distscan import grouped_order_stats
+    from watermill_kinesis_spark.functions.distscan import grouped_order_stats
 
     df = spark.createDataFrame(
         [("a", i) for i in range(5)], "g string, v int"

@@ -4,8 +4,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
 from watermill_kinesis_spark.operators.pipeline4 import BLOCK_TOKENS, BLOOM_N
-from watermill_kinesis_spark.operators.pipeline4 import _grams
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -15,11 +15,13 @@ def test_bloom_decontaminate_equals_exact_join(spark, sf_dir):
     exact-join decontamination (no FNs; FPs removed by the confirm)."""
     d = load_table(spark, sf_dir, "documents")
     eval_grams = (
-        _grams(d.where(F.col("doc_id") < 50), BLOOM_N).select("gram").distinct()
+        word_ngram_rows(d.where(F.col("doc_id") < 50), BLOOM_N)
+        .select("gram")
+        .distinct()
     )
     truth = {
         (r["doc_id"], r["n"])
-        for r in _grams(d.where(F.col("doc_id") >= 50), BLOOM_N)
+        for r in word_ngram_rows(d.where(F.col("doc_id") >= 50), BLOOM_N)
         .join(eval_grams, "gram")
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("n"))

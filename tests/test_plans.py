@@ -333,9 +333,6 @@ def test_no_red_flags_in_r4_added_plans(spark, sf_dir):
     land — assert the red-flag predicates stay empty on a spread of
     them, including the two scalar-subquery shapes whose 1-row
     BroadcastNestedLoopJoin build side is benign by design."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _bad_nested_loop, _bad_single_partition
 
     from watermill_kinesis_spark.registry import all_specs
@@ -370,11 +367,8 @@ def test_enum_window_guard_catches_prefix_shape(spark, sf_dir):
     audit columns let all six through with '0 red flags'). Then the
     benign case: the same enum partition over PRE-AGGREGATED input
     (bounded rows per group) must NOT trip."""
-    import sys
-
     from pyspark.sql import Window as W
 
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _bad_enum_window
 
     o = load_table(spark, sf_dir, "orders")
@@ -471,9 +465,6 @@ def test_replanned_operators_pass_enum_window_guard(spark, sf_dir):
     """The six re-planned operators (plus the binned KS) must stay
     clean under the new guard: their local windows partition by
     (slice, group) — never by the enum alone over raw rows."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _bad_enum_window
 
     from watermill_kinesis_spark.registry import all_specs
@@ -504,9 +495,6 @@ def test_r6_additions_stay_red_flag_free(spark, sf_dir):
     KS pair expansion uses broadcast equi-joins (no nested loop), the
     PPJoin graph query forms pairs only through prefix tokens, and
     RRF's per-group top-k compiles to WindowGroupLimit."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _bad_nested_loop, _bad_single_partition
 
     from watermill_kinesis_spark.registry import all_specs
@@ -552,9 +540,6 @@ def test_big_literal_guard_catches_prefix_bloom_shape(spark, sf_dir):
     the post-fix paths stay clean: the current bloom_fpp_audit and
     decontaminate_bloom plans (bounded literals), and the over-budget
     distributed-probe plan (no literal at all)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import BIG_LITERAL_ELEMS, ITERATIVE, _bad_big_literal
 
     import watermill_kinesis_spark.operators.pipeline4 as p4
@@ -604,9 +589,6 @@ def test_bloom_literal_budget_inside_big_literal_threshold(spark):
     sanctions as a plan literal stays at or under the element ceiling
     the audit flags (review finding: a 4 MiB budget with a 16384-long
     flag would make mid-size blooms trip the repo's own gate)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import BIG_LITERAL_ELEMS
 
     from watermill_kinesis_spark.operators.pipeline4 import (
@@ -625,9 +607,6 @@ def test_driver_fold_internal_stages_stay_red_flag_free(spark, sf_dir):
     via TakeOrderedAndProject — and neither may carry any red-flag
     shape (r8 review finding: eager collects otherwise blind the plan
     audit to regressions in these operators)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import (
         DRIVER_FOLD,
         _bad_big_literal,
@@ -682,9 +661,6 @@ def test_dict_broadcast_guard_catches_prefix_novelty_shape(spark, sf_dir):
     dictionary aggregate that collapses to a bounded rollup before
     broadcasting (the Kneser-Ney/vocab-Jaccard shape) — and that every
     operator re-planned or pinned for this class audits clean."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _corpus_dict_broadcast
 
     from watermill_kinesis_spark.registry import all_specs
@@ -785,9 +761,6 @@ def test_fact_key_broadcast_guard_catches_ria_shape(spark, sf_dir):
     fixed-dim broadcast (nation), a bounded key probe (doc_id ≤ k),
     a scalar-collapsed build side, and the merge-pinned operator
     itself."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import _fact_key_broadcast
 
     from watermill_kinesis_spark.registry import all_specs

@@ -8,7 +8,9 @@ scoped, and a returned DataFrame owns its checkpoints.
 - no operator module persists, caches or overrides the session conf
   outside the scope;
 - operators read tables through ``load_table`` and size fan-outs with
-  ``tables.adaptive_partitions`` only.
+  ``tables.adaptive_partitions`` only;
+- operators rank through ``functions/distscan.py``, not a hand-built
+  range-slice scaffold.
 """
 
 from __future__ import annotations
@@ -247,3 +249,63 @@ def test_sizing_guard_catches_each_forbidden_form(tmp_path):
         "    return spark.sparkContext.defaultParallelism\n"
     )
     assert _sizing_violations(pin) == []
+
+
+#: the one range repartition the operator layer keeps:
+#: ``evaluation._auc_slice_stats``, a one-pass ``mapInPandas`` kernel
+#: that reads its slices once and so needs neither the checkpoint nor
+#: the offsets join of ``functions/distscan.py``
+RANGE_PIN = ("evaluation.py", "_auc_slice_stats")
+
+
+def _range_violations(path: Path) -> list[str]:
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        if (path.name, getattr(top, "name", None)) == RANGE_PIN:
+            continue
+        for node in ast.walk(top):
+            where = f"{path.name}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Attribute) and node.attr == "repartitionByRange":
+                out.append(f"{where} .repartitionByRange")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "repartition_by_range" in node.value.lower()
+            ):
+                out.append(f"{where} REPARTITION_BY_RANGE hint")
+    return out
+
+
+def test_operators_rank_through_distscan():
+    """Operators get a distributed rank, prefix sum or NTILE from
+    ``functions/distscan.py`` (``grouped_scan``/``range_slices``), never
+    from a hand-built range-slice scaffold; the only
+    ``repartitionByRange`` left is the ``_auc_slice_stats`` kernel."""
+    files = sorted(OPERATORS.glob("*.py"))
+    assert len(files) > 30
+    found = [v for p in files for v in _range_violations(p)]
+    assert not found, "\n".join(found)
+
+
+def test_range_guard_catches_each_forbidden_form(tmp_path):
+    p = tmp_path / "bad.py"
+    p.write_text(
+        "def f(df):\n"
+        "    return df.repartitionByRange(32, 'k').sortWithinPartitions('k')\n"
+        "def g(df):\n"
+        "    part = df.repartitionByRange\n"
+        "    return part(8, 'k')\n"
+        "def h(df):\n"
+        "    return df.hint('repartition_by_range', 8, 'k')\n"
+        "def i(spark):\n"
+        "    return spark.sql('SELECT /*+ REPARTITION_BY_RANGE(8, k) */ * FROM t')\n"
+        "def _auc_slice_stats(df):\n"
+        "    return df.repartitionByRange(32, 'k')\n"
+    )
+    assert len(_range_violations(p)) == 5
+    pin = tmp_path / RANGE_PIN[0]
+    pin.write_text(
+        "def _auc_slice_stats(df):\n"
+        "    return df.repartitionByRange(32, 'k')\n"
+    )
+    assert _range_violations(pin) == []

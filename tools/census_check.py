@@ -14,7 +14,7 @@ hash compare is only cross-column row pairing and float columns
 (skipped, reported as such).
 
 Usage:
-    PYTHONPATH=/root/repo python tools/census_check.py <sf_dir> [name ...]
+    python tools/census_check.py <sf_dir> [name ...]
 
 Env: SPARK_GRAFT_VANILLA / SPARK_GRAFT_VANILLA_CORES as check_oracle.
 """
@@ -28,7 +28,7 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 from watermill_kinesis_spark.sources.tables import TABLE_NAMES  # noqa: E402

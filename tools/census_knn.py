@@ -15,7 +15,7 @@ distributed census. Tie-break parity: `arg_max` maximizes the
 the oracle's exact order; vec_ids (< 2^53) are exact doubles.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/census_knn.py [sf_dir]
+    python tools/census_knn.py [sf_dir]
 
 Env: SPARK_GRAFT_VANILLA / SPARK_GRAFT_VANILLA_CORES /
 SPARK_GRAFT_VANILLA_MEM / SPARK_GRAFT_DUCKDB_MEM /
@@ -30,7 +30,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from watermill_kinesis_spark.operators.similarity2 import KNN_MUTUAL_K  # noqa: E402
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402

@@ -5,7 +5,7 @@ sf_dir, then compares row count, sorted column names, and an
 order-insensitive canonicalization of all values (strict: floats must be
 bit-identical). Usage:
 
-    PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [name ...]
+    python tools/check_oracle.py [sf_dir] [name ...]
 
 Env toggles (both driver-accuracy modes, combinable):
   SPARK_GRAFT_VANILLA=1       plain SparkSession, none of session.py's tuning
@@ -43,7 +43,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 from watermill_kinesis_spark.session import get_spark  # noqa: E402

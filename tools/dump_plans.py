@@ -1,7 +1,7 @@
 """Dump .explain("formatted") for registry queries to text files.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/dump_plans.py OUTDIR SUFFIX [name ...]
+    python tools/dump_plans.py OUTDIR SUFFIX [name ...]
 
 Writes OUTDIR/<name>_<SUFFIX>.txt for each query (default: the bench
 HEADLINE set). Plans are built against $SPARK_GRAFT_SF_DIR (default
@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from watermill_kinesis_spark.registry import queries  # noqa: E402
 from watermill_kinesis_spark.session import get_spark  # noqa: E402

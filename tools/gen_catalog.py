@@ -2,15 +2,17 @@
 registered query, straight from the registry — the artifact for
 checking SURVEY.md §2 coverage line by line.
 
-    PYTHONPATH=/root/repo python tools/gen_catalog.py
+    python tools/gen_catalog.py
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 
@@ -44,7 +46,7 @@ def main() -> None:
         check = "oracle" if spec.oracle else "rows-only"
         doc = first_sentence(spec.doc or "").replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {check} | {mod} | {doc} |")
-    with open("/root/repo/CATALOG.md", "w") as f:
+    with open(os.path.join(REPO, "CATALOG.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote CATALOG.md ({len(specs)} queries)")
 

@@ -26,10 +26,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from watermill_kinesis_spark.registry import _PRIORITY, all_specs  # noqa: E402
 
@@ -56,7 +58,7 @@ def main() -> None:
     rows_only = [n for n, s in specs.items() if not s.oracle]
 
     last_green: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", path).group(1))
         d = json.load(open(path))
         for name, v in d.items():
@@ -84,7 +86,8 @@ def main() -> None:
 
     body = "".join(f'    "{n}",\n' for n in ordered)
     if patch:
-        src = open("/root/repo/watermill_kinesis_spark/registry.py").read()
+        registry = os.path.join(REPO, "watermill_kinesis_spark", "registry.py")
+        src = open(registry).read()
         pat = re.compile(
             r"(# ---- ROTATION BODY START \(gen_rotation\.py\) ----\n)"
             r".*?"
@@ -93,7 +96,7 @@ def main() -> None:
         )
         if not pat.search(src):
             sys.exit("ROTATION markers not found in registry.py")
-        open("/root/repo/watermill_kinesis_spark/registry.py", "w").write(
+        open(registry, "w").write(
             pat.sub(lambda m: m.group(1) + body + m.group(2), src)
         )
         print("registry.py patched", file=sys.stderr)

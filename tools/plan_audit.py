@@ -7,15 +7,16 @@ single-partition exchanges, nested-loop joins, windows partitioned by
 a low-cardinality enum over raw rows) — so plan regressions are
 reviewable in diffs, not just caught by tests/test_plans.py.
 
-    PYTHONPATH=/root/repo python tools/plan_audit.py [sf_dir]
+    python tools/plan_audit.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 from watermill_kinesis_spark.session import get_spark  # noqa: E402

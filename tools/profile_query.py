@@ -1,7 +1,7 @@
 """Per-stage profiler for registry queries (guide §1/§7: measure first).
 
 Usage:
-    PYTHONPATH=/root/repo python tools/profile_query.py name [name ...]
+    python tools/profile_query.py name [name ...]
 
 Runs each query twice (warm-up + measured) with the noop sink on the
 engine session (UI enabled), then prints wall time plus a per-stage
@@ -18,14 +18,13 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
     names = sys.argv[1:]
-    os.environ["SPARK_GRAFT_UI"] = "1"
     from pyspark.sql import SparkSession
 
     from watermill_kinesis_spark.registry import queries

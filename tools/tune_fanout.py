@@ -1,13 +1,13 @@
 """Measure a query's wall time as a function of the pre-explode /
-pre-kernel fan-out partition count (guide §1: measure first; VERDICT
-r13 task 1 done-criterion is the c8/c32 ratio, this is its local
-instrument). Monkeypatches ``tables.adaptive_partitions`` — the sites
-resolve it at call time — to force each candidate count, timing
-best-of-N noop-sink runs per point.
+pre-kernel fan-out partition count. Monkeypatches
+``tables.adaptive_partitions`` — the sites resolve it at call time —
+to force each candidate count, timing best-of-N noop-sink runs per
+point. The ``geo`` point runs the rule itself and is labelled with the
+count(s) it returned at the query's sites during the timed runs.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/tune_fanout.py q1 [q2 ...]
-    SPARK_GRAFT_TUNE_PARTS=2,4,8,16,32  (default; 'geo' = the rule)
+    python tools/tune_fanout.py q1 [q2 ...]
+    SPARK_GRAFT_TUNE_PARTS=geo,2,4,8,16,32  (default; 'geo' = the rule)
     SPARK_GRAFT_TUNE_RUNS=3
 """
 
@@ -17,7 +17,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -32,21 +32,29 @@ def main() -> int:
     from watermill_kinesis_spark.session import get_spark
     from watermill_kinesis_spark.sources import tables
 
-    spark = get_spark("tune_fanout", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("tune_fanout")
     qs = queries()
     spark.range(0, 10_000, 1, 32).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
     geo = tables.adaptive_partitions
+    used: list[int] = []
+
+    def recorded_geo(*a, **k):
+        n = geo(*a, **k)
+        used.append(n)
+        return n
+
     for name in names:
         fn = qs[name]
         # warm the plan shape once per query
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         for p in points:
             tables.adaptive_partitions = (
-                geo if p == "geo" else (lambda *a, _p=p, **k: _p)
+                recorded_geo if p == "geo" else (lambda *a, _p=p, **k: _p)
             )
+            used.clear()
             try:
                 best = float("inf")
                 for _ in range(runs):
@@ -55,7 +63,10 @@ def main() -> int:
                         "overwrite"
                     ).save()
                     best = min(best, time.perf_counter() - t0)
-                label = p if p != "geo" else f"geo={geo(spark, SF_DIR, 'documents')}"
+                # the counts the rule returned at this query's sites
+                label = p if p != "geo" else "geo=" + (
+                    "/".join(str(n) for n in sorted(set(used))) or "none"
+                )
                 print(f"{name:32s} parts={label!s:8} best={best:.3f}s", flush=True)
             finally:
                 tables.adaptive_partitions = geo

@@ -5,10 +5,9 @@ A Spark ``Window.partitionBy(g).orderBy(k)`` sorts and scans each
 group's rows inside ONE task. When the group axis is a small enum (an
 event-type code, a priority class), that is a parallelism collapse: at
 100 TB each of ~5 tasks sorts N/5 rows while the rest of the cluster
-idles. This module provides the decomposition the engine already uses
-for distributed selection (``analytics4.quantile_bucket_stats``,
-``frequency``): range-partition on (group, order-key) so every task
-holds a contiguous slice of some group's ordered rows, compute LOCAL
+idles. This module is the one home of the decomposition:
+range-partition on (group, order-key) so every task holds a contiguous
+slice of some group's ordered rows, compute LOCAL
 row numbers / prefix sums per slice with a (slice, group)-partitioned
 window (parallel — slices are the unit of parallelism, not groups),
 then lift local values to global ones by adding per-slice offsets
@@ -18,6 +17,8 @@ computed from a bounded ``collect()`` of per-(slice, group) counts —
 Rank, NTILE, and running sums all decompose this way and the results
 are bit-identical to the single-window plan, so the oracle SQL (which
 may keep its per-group window — DuckDB is single-node) is unchanged.
+With no group columns the same scan is a global rank / prefix sum
+(the slices still sort in parallel; only the offsets are global).
 
 Reference parity note: the reference engine (a Go Kinesis Pub/Sub
 connector, ~856 LoC) has no analytics surface; this is scale
@@ -116,7 +117,7 @@ def grouped_scan(
             # the broadcast-offsets join below is null-UNSAFE: a NULL
             # group key would silently drop its rows from the scan
             # (the window form this replaces kept them) — fail loudly
-            # instead (r7 review)
+            # instead
             raise ValueError(
                 f"grouped_scan requires non-null group keys; got {g!r} "
                 f"for columns {list(group_cols)}"
@@ -248,9 +249,9 @@ def grouped_order_stats(
             if not 1 <= r <= t["n"]:
                 # an out-of-range rank would match NO row and silently
                 # drop the whole group from the output — fail loudly
-                # instead, mirroring the null-group-key guard (r7
-                # ADVICE). All shipped pick functions are ceil(q·n)-
-                # style and stay in range; this guards future callers.
+                # instead, mirroring the null-group-key guard. All
+                # shipped pick functions are ceil(q·n)-style and stay
+                # in range; this guards future callers.
                 raise ValueError(
                     f"grouped_order_stats pick {name!r} computed rank "
                     f"{r} outside [1, {t['n']}] for group {g!r}"
@@ -259,7 +260,8 @@ def grouped_order_stats(
         pick_rows.append(
             tuple(g) + tuple(ranks) + ((int(t["n"]),) if count_col else ())
         )
-    picks_df = local_relation(spark, 
+    picks_df = local_relation(
+        spark,
         pick_rows,
         StructType(list(gschema.fields) + pick_fields + count_fields),
     )

@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql import types as T
 
+from watermill_kinesis_spark.functions.distscan import range_slices
 from watermill_kinesis_spark.functions.localrel import local_relation
-from watermill_kinesis_spark.operators.distscan import range_slices
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 

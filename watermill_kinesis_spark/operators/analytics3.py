@@ -13,9 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from watermill_kinesis_spark.functions.distscan import grouped_scan
 from watermill_kinesis_spark.functions.exact import lcents
 from watermill_kinesis_spark.functions.localrel import local_relation
-from watermill_kinesis_spark.operators.distscan import grouped_scan
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 

@@ -10,12 +10,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from watermill_kinesis_spark.functions.exact import lcents
-from watermill_kinesis_spark.functions.localrel import local_relation
-from watermill_kinesis_spark.operators.distscan import (
+from watermill_kinesis_spark.functions.distscan import (
     grouped_order_stats,
     grouped_scan,
+    ntile_closed_form,
 )
+from watermill_kinesis_spark.functions.exact import lcents
+from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -995,42 +996,17 @@ def quantile_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     step before per-band curriculum mixing or length-stratified
     sampling: 8 equal-population bands with boundaries and mass,
     NTILE semantics (first n%8 buckets take one extra row) written in
-    closed form over the global rank. The rank itself comes from the
-    DISTRIBUTED selection pattern (range-partitioned parallel sort +
-    per-partition local ranks + broadcast prefix offsets) — NO global
+    closed form over the global rank. The rank comes from
+    :func:`grouped_scan` with no group columns — NO global
     single-partition window anywhere, so the same plan holds at
     100 TB. The (n_chars, doc_id) composite key makes assignment
     deterministic in both engines."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    parted = (
-        d.repartitionByRange(32, "n_chars", "doc_id")
-        .sortWithinPartitions("n_chars", "doc_id")
-        .select("doc_id", "n_chars", F.spark_partition_id().alias("pid"))
-        .localCheckpoint()  # pin ONE materialization of the sampled ranges
-    )
-    w_local = W.partitionBy("pid").orderBy("n_chars", "doc_id")
-    local = parted.select(
-        "doc_id", "n_chars", "pid", F.row_number().over(w_local).alias("lrk")
-    )
-    sizes = {
-        r.pid: r.c
-        for r in parted.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    n = sum(sizes.values())
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = F.broadcast(
-        local_relation(d.sparkSession, offsets, "pid int, off long")
-    )
-    rk = F.col("off") + F.col("lrk")
-    q, r = n // 8, n % 8
-    bucket = F.when(
-        rk <= (q + 1) * r, F.ceil(rk / F.lit(float(q + 1)))
-    ).otherwise(r + F.ceil((rk - (q + 1) * r) / F.lit(float(q)))).cast("int")
-    tiled = local.join(off, "pid").select(
-        "n_chars", bucket.alias("bucket")
+    ranked, totals = grouped_scan(d, [], [F.col("n_chars"), F.col("doc_id")])
+    n = totals[()]["n"] if totals else 0
+    tiled = ranked.select(
+        "n_chars",
+        ntile_closed_form(F.col("rn"), F.lit(n), 8).cast("int").alias("bucket"),
     )
     return tiled.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -39,19 +39,6 @@ MH_PRIME = (1 << 31) - 1
 EMB_GRID_BLOCKS = 8
 
 
-def _shingles(col, n: int = SHINGLE_N):
-    """Distinct word n-gram shingles of a text column, via sequence +
-    transform (JVM-side; one pass, no explode until the caller asks)."""
-    toks = F.split(col, " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # exact
 
@@ -141,11 +128,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded distinct-shingle posting rows ``(doc_id, n, shingle)``
     — n is the doc's DISTINCT shingle count — computed in ONE
-    Arrow-vectorized pass over documents (optimization round 13,
-    guide §4.2/§4.4).
+    Arrow-vectorized pass over documents.
 
-    Why a kernel and not the ``_shingles`` HOF projection: the
-    declarative spelling planned pathologically. (1) Catalyst's
+    Why a kernel and not the ``textexpr.word_shingles`` HOF
+    projection: the declarative spelling planned pathologically here.
+    (1) Catalyst's
     InferFiltersFromGenerate inferred ``size(shingles) > 0`` from the
     explode and pushed it below the repartition exchange into the
     parquet SCAN stage — the whole interpreted HOF pipeline
@@ -158,7 +145,7 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel is not duplicated by filter inference, not re-planned per
     join side, and tokenizes ~10× faster than the interpreted HOFs.
 
-    Emission semantics are IDENTICAL to the old projection: tokens =
+    Emission semantics are IDENTICAL to ``word_shingles``: tokens =
     split(text, ' ', -1) (empty strings kept), shingles i..i+4 for
     i in 0..max(len−5, 0) (short docs yield their whole text as the
     one shingle), first-occurrence dedup (= array_distinct order),

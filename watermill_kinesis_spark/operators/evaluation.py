@@ -43,8 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from watermill_kinesis_spark.functions.localrel import local_relation
-from watermill_kinesis_spark.operators.distscan import (
+from watermill_kinesis_spark.functions.distscan import (
     N_SLICES,
     grouped_order_stats,
     grouped_scan,
@@ -52,6 +51,7 @@ from watermill_kinesis_spark.operators.distscan import (
     ntile_closed_form,
     range_slices,
 )
+from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from watermill_kinesis_spark.functions.distscan import grouped_scan
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
@@ -427,14 +428,20 @@ def approx_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The exact order statistic is computed WITHOUT a global
     single-partition sort (the naive ``row_number() OVER (ORDER BY
-    value)`` funnels the whole relation through one task): the data is
-    range-partitioned and sorted in parallel, global rank =
-    per-partition local rank + the broadcast prefix-offset of the
-    partition — the textbook distributed selection, O(n log n) work at
-    full parallelism."""
+    value)`` funnels the whole relation through one task): the global
+    rank comes from :func:`grouped_scan` with no group columns — the
+    textbook distributed selection, O(n log n) work at full
+    parallelism."""
     ev = load_table(spark, sf_dir, "events").select("value")
     pcts = [10, 25, 50, 75, 90, 99]
-    n = ev.count()
+    # exact selection: global rank under a total order (any tiebreak
+    # selects the same VALUE at a rank); n comes free with the offsets
+    ranked, totals = grouped_scan(
+        ev.withColumn("__tb", F.monotonically_increasing_id()),
+        [],
+        [F.col("value"), F.col("__tb")],
+    )
+    n = totals[()]["n"]
     approx = ev.agg(
         F.percentile_approx(
             "value", [p / 100 for p in pcts], APPROX_Q_ACC
@@ -452,9 +459,9 @@ def approx_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the approx value's actual rank under ties is an INTERVAL
     # [count(<av)+1, count(<=av)] — a point check against count(<=av)
     # false-alarms whenever the quantile lands inside a heavy tie
-    # mass (r13 fixture-suite find: a constant-valued corpus put
-    # count(<=av)=n while the sketch was exactly right). The sketch
-    # is within budget iff its rank interval OVERLAPS [lo, hi].
+    # mass (a constant-valued corpus puts count(<=av)=n while the
+    # sketch is exactly right). The sketch is within budget iff its
+    # rank interval OVERLAPS [lo, hi].
     le_counts = (
         ev.crossJoin(F.broadcast(audit))
         .groupBy("pct", "lo", "hi")
@@ -467,38 +474,11 @@ def approx_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rank_hi"),
         )
     )
-    # distributed exact selection: parallel range-partitioned sort +
-    # per-partition local ranks + broadcast prefix offsets
-    # localCheckpoint pins ONE materialization: range boundaries come
-    # from sampling, so deriving sizes and ranks from separate
-    # evaluations could see different partitionings
-    parted = (
-        ev.repartitionByRange(32, "value")
-        .sortWithinPartitions("value")
-        .select("value", F.spark_partition_id().alias("pid"))
-        .localCheckpoint()
-    )
-    w_local = W.partitionBy("pid").orderBy("value")
-    local = parted.select(
-        "value", "pid", F.row_number().over(w_local).alias("lrk")
-    )
-    sizes = {
-        r.pid: r.c
-        for r in parted.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = local_relation(spark, offsets, "pid int, off long")
-    ranked = local.join(F.broadcast(off), "pid").select(
-        "value", (F.col("off") + F.col("lrk")).alias("rk")
-    )
     exact = (
         ranked.crossJoin(F.broadcast(audit.select("pct")))
         .where(
             # DuckDB quantile_disc's discrete index: floor(q·(n−1)) + 1
-            F.col("rk")
+            F.col("rn")
             == F.floor(F.col("pct") / F.lit(100.0) * F.lit(n - 1)).cast("long") + 1
         )
         .select("pct", F.col("value").alias("exact_value"))

@@ -17,6 +17,7 @@ import uuid as uuidlib
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -31,20 +32,6 @@ BLOOM_N = 8
 #: ~0.2%; FPs cost one extra exact-join probe, FNs cannot happen.
 BLOOM_BITS = 1 << 16
 BLOOM_K = 4
-
-
-def _grams(df: DataFrame, n: int) -> DataFrame:
-    toks = F.split("text", " ")
-    starts = F.sequence(F.lit(1), F.greatest(F.size("toks") - n + 1, F.lit(0)))
-    return (
-        df.select("doc_id", toks.alias("toks"))
-        .where(F.size("toks") >= n)
-        .select("doc_id", F.explode(starts).alias("i"), "toks")
-        .select(
-            "doc_id",
-            F.array_join(F.slice("toks", F.col("i"), n), " ").alias("gram"),
-        )
-    )
 
 
 def _bloom_hashes(gram: F.Column, bits: int = BLOOM_BITS) -> list[F.Column]:
@@ -227,7 +214,9 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     of eval-set size growth (vs a broadcast table growing linearly)."""
     d = load_table(spark, sf_dir, "documents")
     eval_grams = (
-        _grams(d.where(F.col("doc_id") < 50), BLOOM_N).select("gram").distinct()
+        word_ngram_rows(d.where(F.col("doc_id") < 50), BLOOM_N)
+        .select("gram")
+        .distinct()
     )
     # build: positions → (word, bit) → BIT_OR per word → 1024 longs;
     # at 2^16 bits the probe densifies it into an ~8 KB plan literal
@@ -235,15 +224,15 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition the train side before its gram explode: the explode +
     # 4-hash bloom probe otherwise run inside the single-split scan
     # task (profiled serial); raw text bytes shuffle, gram rows don't.
-    # Geometry-derived count (optimization round 14, VERDICT r13 task
-    # 1): expand=75 ≈ the 8-token-gram bytes per parquet byte (~10×
-    # text decompression × ~7.5× gram materialization) — the probe is
-    # compute-heavy enough that the sweep prefers full width at sf0.1
+    # Geometry-derived count: expand=75 ≈ the 8-token-gram bytes per
+    # parquet byte (~10× text decompression × ~7.5× gram
+    # materialization) — the probe is compute-heavy enough that the
+    # sweep prefers full width at sf0.1
     # (tools/tune_fanout.py best-of-4: 8→0.722 s, 16→0.720, 32→0.658),
     # and the clamp keeps tiny inputs from paying 32 fixed task costs
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
-    train_grams = _grams(
+    train_grams = word_ngram_rows(
         d.where(F.col("doc_id") >= 50).repartition(
             adaptive_partitions(spark, sf_dir, "documents", expand=75),
             "doc_id",
@@ -297,37 +286,22 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-level MinHash misses. Documents split into non-overlapping
     20 (BLOCK_TOKENS)-token blocks; a block seen in more than one document
     is corpus-duplicated; each document reports its duplicated-block
-    ratio. NO block-keyed join anywhere (r10 restructure, the
-    ngram_novelty_score lesson: joining instances back to a
-    corpus-derived block dictionary leaves AQE free to broadcast the
-    dictionary — plan_audit's DictBcast column flagged exactly that
-    shape here): instances collapse to (doc_id, block, multiplicity)
-    rows, a COUNT window over the block partition attaches each
-    block's distinct-doc count in place — one row per (doc, block), so
-    the window input is the dictionary relation itself — and the
-    per-doc profile is one more doc-keyed aggregate. Three shuffles,
-    all on corpus-cardinality keys. Blocks are grouped by their text
-    to stay hash-collision-free for the oracle; at 100 TB swap the key
-    for xxhash64(block) (16 bytes/row, same plan shape — see
-    dedup_exact_hashkey) and explode paragraphs instead of fixed token
-    windows."""
+    ratio. NO block-keyed join anywhere (the ngram_novelty_score
+    lesson: joining instances back to a corpus-derived block
+    dictionary leaves AQE free to broadcast the dictionary —
+    plan_audit's DictBcast column flags that shape): instances
+    collapse to (doc_id, block, multiplicity) rows, a COUNT window
+    over the block partition attaches each block's distinct-doc count
+    in place — one row per (doc, block), so the window input is the
+    dictionary relation itself — and the per-doc profile is one more
+    doc-keyed aggregate. Three shuffles, all on corpus-cardinality
+    keys. Blocks are grouped by their text to stay hash-collision-free
+    for the oracle; at 100 TB swap the key for xxhash64(block)
+    (16 bytes/row, same plan shape — see dedup_exact_hashkey) and
+    explode paragraphs instead of fixed token windows."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    starts = F.sequence(
-        F.lit(1),
-        F.greatest(F.size("toks") - BLOCK_TOKENS + 1, F.lit(0)),
-        F.lit(BLOCK_TOKENS),
-    )
-    blocks = (
-        d.select("doc_id", toks.alias("toks"))
-        .where(F.size("toks") >= BLOCK_TOKENS)
-        .select("doc_id", F.explode(starts).alias("i"), "toks")
-        .select(
-            "doc_id",
-            F.array_join(F.slice("toks", F.col("i"), BLOCK_TOKENS), " ").alias(
-                "block"
-            ),
-        )
+    blocks = word_ngram_rows(d, BLOCK_TOKENS, step=BLOCK_TOKENS).select(
+        "doc_id", F.col("gram").alias("block")
     )
     from pyspark.sql import Window as W
 

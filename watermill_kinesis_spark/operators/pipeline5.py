@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from watermill_kinesis_spark.functions.textexpr import bigram_structs
+from watermill_kinesis_spark.functions.distscan import grouped_scan
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.textexpr import bigram_structs
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -465,51 +466,19 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic order are cut into ~10k-token shards by their global
     token prefix-sum, and the manifest records each shard's doc count,
     token mass, and id range (what the dataloader actually consumes).
-    The global prefix-sum uses the DISTRIBUTED pattern (range-partition
-    by doc_id, per-partition partial sums, broadcast prefix offsets) —
-    NO single-partition window, so the same plan cuts a 100 TB corpus.
+    The global prefix-sum is :func:`grouped_scan`'s running sum with
+    no group columns — NO single-partition window, so the same plan
+    cuts a 100 TB corpus.
     """
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(F.split(F.trim("text"), " ")).alias("n_tokens")
     )
-    parted = (
-        d.repartitionByRange(32, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .select("doc_id", "n_tokens", F.spark_partition_id().alias("pid"))
-        .localCheckpoint()  # pin one materialization of the sampled ranges
-    )
-    w_local = (
-        W.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = parted.select(
+    scan, _ = grouped_scan(d, [], [F.col("doc_id")], sum_cols=["n_tokens"])
+    tokens_before = (F.col("cum_n_tokens") - F.col("n_tokens")).cast("bigint")
+    assigned = scan.select(
         "doc_id",
         "n_tokens",
-        "pid",
-        F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0)).alias("local_before"),
-    )
-    sums = {
-        r.pid: r.s
-        for r in parted.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("s"))
-        .collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(sums):
-        offsets.append((pid, acc))
-        acc += sums[pid]
-    off = F.broadcast(
-        local_relation(d.sparkSession, offsets, "pid int, off long")
-    )
-    assigned = local.join(off, "pid").select(
-        "doc_id",
-        "n_tokens",
-        (
-            (F.col("off") + F.col("local_before")) / F.lit(SHARD_TOKENS)
-        )
-        .cast("bigint")
-        .alias("shard_id"),
+        (tokens_before / F.lit(SHARD_TOKENS)).cast("bigint").alias("shard_id"),
     )
     return assigned.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -263,23 +264,12 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-agg size estimate elected to BROADCAST the gram dictionary —
     an artifact that grows with the corpus — measured as a
     driver-broadcast OOM on the vanilla 1 GiB session at the 10×
-    replica (caught by the round-9 heavy-family sweep; the sf0.1 gate
-    fit by luck). Now no gram-keyed join exists to mis-plan: the gram
-    dictionary lives exactly one aggregation long. Novelty is an exact
-    integer permille, never a float."""
+    replica (the sf0.1 gate fit by luck). Now no gram-keyed join
+    exists to mis-plan: the gram dictionary lives exactly one
+    aggregation long. Novelty is an exact integer permille, never a
+    float."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    starts = F.sequence(F.lit(1), F.size("t") - NOVELTY_N + 1)
-    g = (
-        d.select("doc_id", toks.alias("t"))
-        .where(F.size("t") >= NOVELTY_N)
-        .select("doc_id", F.explode(starts).alias("i"), "t")
-        .select(
-            "doc_id",
-            F.array_join(F.slice("t", F.col("i"), NOVELTY_N), " ").alias("gram"),
-        )
-        .distinct()
-    )
+    g = word_ngram_rows(d, NOVELTY_N).distinct()
     per_doc = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     novel = (
         g.groupBy("gram")

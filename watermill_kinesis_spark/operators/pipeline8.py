@@ -594,7 +594,7 @@ def brier_decomposition_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the identity Σ(rel−res)/N + unc = Brier(binned forecast)
     holds in the consumer's rationals. The group windows run over the
     50-row bin table (aggregate below: plan-audit-exempt)."""
-    from watermill_kinesis_spark.operators.distscan import (
+    from watermill_kinesis_spark.functions.distscan import (
         group_sizes_df,
         grouped_scan,
         ntile_closed_form,

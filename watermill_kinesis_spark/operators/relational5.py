@@ -12,12 +12,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from watermill_kinesis_spark.functions.exact import dsum, sql_dsum
-from watermill_kinesis_spark.functions.localrel import local_relation
-from watermill_kinesis_spark.operators.distscan import (
+from watermill_kinesis_spark.functions.distscan import (
     grouped_scan,
     group_sizes_df,
 )
+from watermill_kinesis_spark.functions.exact import dsum, sql_dsum
+from watermill_kinesis_spark.functions.localrel import local_relation
+from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -353,28 +354,16 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eval-gram set stays benchmark-sized (MBs), so the broadcast
     pattern holds at any corpus scale."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-
-    def grams(df: DataFrame) -> DataFrame:
-        starts = F.sequence(F.lit(1), F.greatest(F.size("toks") - DECON_N + 1, F.lit(0)))
-        return (
-            df.select("doc_id", toks.alias("toks"))
-            .where(F.size("toks") >= DECON_N)
-            .select("doc_id", F.explode(starts).alias("i"), "toks")
-            .select(
-                "doc_id",
-                F.array_join(F.slice("toks", F.col("i"), DECON_N), " ").alias("gram"),
-            )
-        )
-
     eval_grams = (
-        grams(d.where(F.col("doc_id") < 50)).select("gram").distinct()
+        word_ngram_rows(d.where(F.col("doc_id") < 50), DECON_N)
+        .select("gram")
+        .distinct()
     )
     # join RAW train grams against the broadcast and dedup only the
     # survivors (countDistinct): the corpus-wide (doc_id, gram)
     # dropDuplicates shuffle this replaces is the whole training set's
     # n-grams — post-join it's just the contaminated candidates.
-    train_grams = grams(d.where(F.col("doc_id") >= 50))
+    train_grams = word_ngram_rows(d.where(F.col("doc_id") >= 50), DECON_N)
     return (
         train_grams.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")

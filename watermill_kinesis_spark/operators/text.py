@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from watermill_kinesis_spark.functions.textexpr import word_shingles
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
@@ -476,16 +477,11 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents; at 100 TB the same plan keys on xxhash64(gram) to
     shrink shuffle bytes, with the string re-attached to survivors
     only."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    idx = F.sequence(
-        F.lit(0), F.greatest(F.size(toks) - BOILERPLATE_N, F.lit(0))
+    toks = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("toks")
     )
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, BOILERPLATE_N), " ")
-    )
-    pairs = d.select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("gram")
+    pairs = toks.select(
+        "doc_id", F.explode(word_shingles("toks", BOILERPLATE_N)).alias("gram")
     )
     return (
         pairs.groupBy("gram")
