@@ -6,7 +6,8 @@ must hold for any input."""
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.analytics2 import HIST_BUCKETS, CONTAIN_T
+from watermill_kinesis_spark.operators.analytics2 import HIST_BUCKETS
+from watermill_kinesis_spark.operators.dedup import CONTAIN_T
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -122,7 +123,7 @@ def test_containment_capped_drops_hot_shingles(spark, tmp_path):
     containment pair built from sub-cap shingles still surfaces."""
     import pandas as pd
 
-    from watermill_kinesis_spark.operators.analytics2 import CONTAIN_DF_CAP
+    from watermill_kinesis_spark.operators.dedup import CONTAIN_DF_CAP
 
     assert CONTAIN_DF_CAP < 150
     rows = [

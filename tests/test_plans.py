@@ -122,7 +122,7 @@ def test_salted_join_spreads_hot_keys(spark, sf_dir):
     """The salted join must produce identical results to the plain
     join (oracle covers values); here: the salt column must appear in
     the join keys so hot keys split across tasks."""
-    from watermill_kinesis_spark.operators.relational2 import join_skew_salted
+    from watermill_kinesis_spark.operators.relational import join_skew_salted
 
     plan = optimized_of(join_skew_salted(spark, sf_dir))
     assert "salt" in plan
@@ -131,7 +131,7 @@ def test_salted_join_spreads_hot_keys(spark, sf_dir):
 def test_q17_decorrelated_no_nested_loop(spark, sf_dir):
     """The correlated per-part AVG must run as groupBy+broadcast join —
     never a per-row nested-loop re-aggregation."""
-    from watermill_kinesis_spark.operators.relational3 import q17_small_quantity_avg
+    from watermill_kinesis_spark.operators.relational import q17_small_quantity_avg
 
     plan = plan_of(q17_small_quantity_avg(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
@@ -141,7 +141,7 @@ def test_q17_decorrelated_no_nested_loop(spark, sf_dir):
 def test_q21_single_pass_no_self_join_explosion(spark, sf_dir):
     """The EXISTS/NOT-EXISTS pair is one aggregation + rejoin: exactly
     two lineitem scans (base + per-order stats), not three."""
-    from watermill_kinesis_spark.operators.relational3 import q21_late_sole_supplier
+    from watermill_kinesis_spark.operators.relational import q21_late_sole_supplier
 
     plan = plan_of(q21_late_sole_supplier(spark, sf_dir))
     assert plan.count("lineitem.parquet") <= 2
@@ -160,7 +160,7 @@ def test_tfidf_df_table_broadcasts(spark, sf_dir):
 def test_sessionize_one_shuffle_for_windows_and_agg(spark, sf_dir):
     """Both window passes and the session aggregation share the
     user_id partitioning — exactly one exchange in the plan."""
-    from watermill_kinesis_spark.operators.relational3 import sessionize_batch
+    from watermill_kinesis_spark.operators.relational import sessionize_batch
 
     plan = plan_of(sessionize_batch(spark, sf_dir))
     import re
@@ -184,7 +184,7 @@ def test_decontaminate_eval_grams_broadcast(spark, sf_dir):
     """The distinct eval-gram set (benchmark-sized at any corpus scale)
     must broadcast; the training corpus side must never be the build
     side of a shuffle join against it."""
-    from watermill_kinesis_spark.operators.relational5 import decontaminate_ngram
+    from watermill_kinesis_spark.operators.dedup import decontaminate_ngram
 
     plan = plan_of(decontaminate_ngram(spark, sf_dir))
     assert "BroadcastExchange" in plan
@@ -194,7 +194,7 @@ def test_decontaminate_eval_grams_broadcast(spark, sf_dir):
 def test_full_outer_joins_pre_aggregated_inputs(spark, sf_dir):
     """Both sides must aggregate to one row per customer BEFORE the
     full-outer join — the join input is |customers|, not |orders|."""
-    from watermill_kinesis_spark.operators.relational5 import join_full_outer
+    from watermill_kinesis_spark.operators.relational import join_full_outer
 
     plan = plan_of(join_full_outer(spark, sf_dir))
     assert "FullOuter" in plan
@@ -211,7 +211,7 @@ def test_corpus_shuffle_no_single_partition_bottleneck(spark, sf_dir):
     """Global shuffle positions must come from the bucketed two-pass
     index — never a single-partition global window (the classic
     driver-sized bottleneck at scale)."""
-    from watermill_kinesis_spark.operators.relational5 import corpus_shuffle_hash
+    from watermill_kinesis_spark.operators.pipeline import corpus_shuffle_hash
 
     plan = plan_of(corpus_shuffle_hash(spark, sf_dir))
     assert "SinglePartition" not in plan
@@ -223,7 +223,7 @@ def test_window_range_frame_bounded_exchanges(spark, sf_dir):
     shuffles: at most two exchanges total (collapse + frame)."""
     import re
 
-    from watermill_kinesis_spark.operators.relational5 import window_range_frame
+    from watermill_kinesis_spark.operators.relational import window_range_frame
 
     plan = plan_of(window_range_frame(spark, sf_dir))
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
@@ -235,7 +235,7 @@ def test_stats_moments_single_shuffle_no_welford(spark, sf_dir):
     builtin stddev/corr (Welford partials merge in shuffle-arrival
     order → nondeterministic low bits), and no second shuffle for the
     derived columns."""
-    from watermill_kinesis_spark.operators.relational4 import stats_moments
+    from watermill_kinesis_spark.operators.relational import stats_moments
 
     df = stats_moments(spark, sf_dir)
     plan = plan_of(df)

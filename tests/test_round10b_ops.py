@@ -207,7 +207,7 @@ def test_binary_quant_hamming_matches_bruteforce(spark, sf_dir):
     """Recompute sign codes and Hamming ranking per query in plain
     Python from the raw embeddings — independently of both the packed
     bit-ops path and the distance-domain cutoff trick."""
-    from watermill_kinesis_spark.operators.similarity2 import (
+    from watermill_kinesis_spark.operators.similarity import (
         binary_quant_hamming_topk,
     )
     from watermill_kinesis_spark.operators.similarity import (

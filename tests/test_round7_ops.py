@@ -19,7 +19,7 @@ from watermill_kinesis_spark.operators.retrieval import (
     precision_recall_at_k,
 )
 from watermill_kinesis_spark.operators.similarity import N_QUERIES, TOP_K
-from watermill_kinesis_spark.operators.similarity2 import (
+from watermill_kinesis_spark.operators.similarity import (
     INT8_QMAX,
     embedding_int8_quant_audit,
 )
@@ -193,7 +193,7 @@ def test_group_by_all_equals_explicit(spark, sf_dir):
 
 
 def test_maxsim_matches_brute_force(spark, sf_dir):
-    from watermill_kinesis_spark.operators.similarity2 import (
+    from watermill_kinesis_spark.operators.similarity import (
         MV_SUBDIM,
         MV_TOKENS,
         multivector_maxsim_topk,

@@ -33,11 +33,10 @@ def _write_embeddings(spark, tmp_path, vecs):
 def test_matryoshka_zero_prefix_vector_never_tops_truncated_ranking(
     spark, tmp_path
 ):
-    """Regression pin for the zero-norm guard (r6 ADVICE /
-    similarity2.py): a candidate whose MRL_DIM prefix is all-zero must
-    score −1.0 in the truncated variant (DuckDB's zero-vector
-    convention) — NEVER 0/0 = NaN, which Spark's descending sort
-    places ABOVE every finite score, silently promoting garbage into
+    """Regression pin for the zero-norm guard (similarity.py): a
+    candidate whose MRL_DIM prefix is all-zero must score −1.0 in the
+    truncated variant (DuckDB's zero-vector convention) — NEVER
+    0/0 = NaN, which Spark's descending sort places ABOVE every finite score, silently promoting garbage into
     the truncated top-k. The pin compares the operator's per-query
     overlap against a brute force that applies the −1.0 convention
     explicitly, on data where the poisoned candidate would flip the
@@ -47,7 +46,7 @@ def test_matryoshka_zero_prefix_vector_never_tops_truncated_ranking(
         N_QUERIES,
         TOP_K,
     )
-    from watermill_kinesis_spark.operators.similarity2 import MRL_DIM
+    from watermill_kinesis_spark.operators.similarity import MRL_DIM
 
     rng = np.random.default_rng(8)
     vecs: dict[int, np.ndarray] = {}
@@ -301,7 +300,7 @@ def test_l_diversity_matches_bruteforce(spark, sf_dir):
 def test_knn_mutual_matches_bruteforce(spark, sf_dir):
     import numpy as np
 
-    from watermill_kinesis_spark.operators.similarity2 import (
+    from watermill_kinesis_spark.operators.similarity import (
         KNN_MUTUAL_K,
         knn_mutual_label_blocked,
     )
@@ -339,7 +338,7 @@ def test_knn_mutual_matches_bruteforce(spark, sf_dir):
 
 
 def test_interval_islands_matches_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.relational5 import (
+    from watermill_kinesis_spark.operators.relational import (
         ISLAND_PAD_US,
         interval_coalesce_islands,
     )

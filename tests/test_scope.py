@@ -10,7 +10,9 @@ scoped, and a returned DataFrame owns its checkpoints.
 - operators read tables through ``load_table`` and size fan-outs with
   ``tables.adaptive_partitions`` only;
 - operators rank through ``functions/distscan.py``, not a hand-built
-  range-slice scaffold.
+  range-slice scaffold;
+- no operator module imports another's private names, and the
+  operator-to-operator imports form no cycle.
 """
 
 from __future__ import annotations
@@ -179,12 +181,6 @@ def test_guard_catches_each_forbidden_form(tmp_path):
     assert len(_violations(p)) == 5
 
 
-#: the one ``defaultParallelism`` reference the operator layer keeps:
-#: ``similarity._emb(fixed=True)``, because similarity_ann_pq's
-#: approximate output depends on the batch layout
-PARALLELISM_PIN = ("similarity.py", "_emb")
-
-
 def _only_wraps_load_table(fn: ast.FunctionDef) -> bool:
     body = fn.body
     if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
@@ -209,8 +205,6 @@ def _sizing_violations(path: Path) -> list[str]:
             a.name == "adaptive_partitions" for a in top.names
         ):
             out.append(f"{where} module-level import of adaptive_partitions")
-        if (path.name, name) == PARALLELISM_PIN:
-            continue
         for node in ast.walk(top):
             if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
                 out.append(f"{path.name}:{node.lineno} defaultParallelism")
@@ -221,9 +215,9 @@ def test_operators_share_one_loader_and_one_sizing_policy():
     """Operators read tables through ``load_table`` itself (no per-module
     wrapper) and size every fan-out with ``tables.adaptive_partitions``,
     imported inside the function body so a reassignment of the module
-    attribute (tools/tune_fanout.py) reaches every site. The only
-    ``defaultParallelism`` left is the ``similarity._emb(fixed=True)``
-    layout pin."""
+    attribute (tools/tune_fanout.py) reaches every site. No operator
+    reads ``defaultParallelism``; the one fixed layout left
+    (``tables.embedding_vectors(fixed=True)``) lives in ``sources/``."""
     files = sorted(OPERATORS.glob("*.py"))
     assert len(files) > 30
     found = [v for p in files for v in _sizing_violations(p)]
@@ -243,12 +237,12 @@ def test_sizing_guard_catches_each_forbidden_form(tmp_path):
         "    return spark.sparkContext.defaultParallelism\n"
     )
     assert len(_sizing_violations(p)) == 4
-    pin = tmp_path / PARALLELISM_PIN[0]
-    pin.write_text(
+    sim = tmp_path / "similarity.py"
+    sim.write_text(
         "def _emb(spark):\n"
         "    return spark.sparkContext.defaultParallelism\n"
     )
-    assert _sizing_violations(pin) == []
+    assert len(_sizing_violations(sim)) == 1
 
 
 #: the one range repartition the operator layer keeps:
@@ -309,3 +303,115 @@ def test_range_guard_catches_each_forbidden_form(tmp_path):
         "    return df.repartitionByRange(32, 'k')\n"
     )
     assert _range_violations(pin) == []
+
+
+OPERATOR_PACKAGE = "watermill_kinesis_spark.operators"
+
+
+def _operator_imports(path: Path) -> list[tuple[int, str, str | None]]:
+    """``(line, operator module, imported name or None)`` for every
+    import of an operator module in ``path``, at any depth (imports
+    inside function bodies included); ``None`` when the module itself
+    is bound. A private attribute read through such a module binding
+    (``D._x``) is reported as an import of ``_x``."""
+    tree = ast.parse(path.read_text())
+    out, aliases = [], {}
+    prefix = OPERATOR_PACKAGE + "."
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:  # relative: siblings of the operator package
+                mod = f"{prefix}{mod}" if mod else OPERATOR_PACKAGE
+            if mod.startswith(prefix):
+                for a in node.names:
+                    out.append((node.lineno, mod[len(prefix):], a.name))
+            elif mod == OPERATOR_PACKAGE:
+                for a in node.names:
+                    out.append((node.lineno, a.name, None))
+                    aliases[a.asname or a.name] = a.name
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith(prefix):
+                    out.append((node.lineno, a.name[len(prefix):], None))
+                    if a.asname:
+                        aliases[a.asname] = a.name[len(prefix):]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+            and node.attr.startswith("_")
+        ):
+            out.append((node.lineno, aliases[node.value.id], node.attr))
+    return out
+
+
+def _layering_violations(files: list[Path]) -> list[str]:
+    """Private cross-module imports, then every import cycle among the
+    operator modules in ``files`` (each reported once, as a path)."""
+    out, graph = [], {}
+    for p in files:
+        deps = graph.setdefault(p.stem, set())
+        for line, mod, name in _operator_imports(p):
+            if mod == p.stem:
+                continue
+            deps.add(mod)
+            if name is not None and name.startswith("_"):
+                out.append(f"{p.name}:{line} imports {mod}.{name}")
+    done: set[str] = set()
+
+    def visit(mod: str, path: list[str]) -> None:
+        if mod in path:
+            out.append("import cycle " + " -> ".join(path[path.index(mod):] + [mod]))
+            return
+        if mod in done or mod not in graph:
+            return
+        for dep in sorted(graph[mod]):
+            visit(dep, path + [mod])
+        done.add(mod)
+
+    for mod in sorted(graph):
+        visit(mod, [])
+    return out
+
+
+def test_operator_modules_import_only_public_names_without_cycles():
+    """An operator module uses another's public names only, and the
+    operator-to-operator import graph is acyclic: shared helpers belong
+    in ``functions/`` or ``sources/``, not behind an underscore in a
+    sibling module."""
+    files = sorted(p for p in OPERATORS.glob("*.py") if p.name != "__init__.py")
+    assert len(files) > 30
+    found = _layering_violations(files)
+    assert not found, "\n".join(found)
+
+
+def test_layering_guard_catches_each_forbidden_form(tmp_path):
+    (tmp_path / "a.py").write_text(
+        f"from {OPERATOR_PACKAGE}.b import _x, y\n"
+    )
+    (tmp_path / "b.py").write_text(
+        "def f():\n"
+        f"    from {OPERATOR_PACKAGE}.a import z\n"
+        "    return z\n"
+    )
+    (tmp_path / "c.py").write_text(
+        "from .a import _w\n"
+        f"from {OPERATOR_PACKAGE} import b as B\n"
+        f"import {OPERATOR_PACKAGE}.a as A\n"
+        "def g():\n"
+        "    return B._helper() + A._v\n"
+    )
+    found = _layering_violations(sorted(tmp_path.glob("*.py")))
+    assert sorted(found) == [
+        "a.py:1 imports b._x",
+        "c.py:1 imports a._w",
+        "c.py:5 imports a._v",
+        "c.py:5 imports b._helper",
+        "import cycle a -> b -> a",
+    ]
+    (tmp_path / "b.py").write_text("def f():\n    return 1\n")
+    (tmp_path / "c.py").write_text(f"from {OPERATOR_PACKAGE}.a import y\n")
+    assert _layering_violations(sorted(tmp_path.glob("*.py"))) == [
+        "a.py:1 imports b._x"
+    ]

@@ -22,13 +22,13 @@ KERNEL_SITES = (
     ("events", 10),  # messages: events replay; analytics4 sessionize
     ("documents", 7),  # messages, dedup shingle rows, frequency
     ("lineitem", 2),  # windows
-    ("documents", 10 * 5),  # dedup + analytics2 shingle exchange
+    ("documents", 10 * 5),  # dedup shingle exchanges
     ("documents", 10),  # fanned_documents (dedup._simhash_fps before)
     ("documents", 2),  # dedup simhash audit
     ("documents", 14),  # pipeline7
     ("documents", 75),  # pipeline4
     ("lineitem", 0.5),  # graph (two sites)
-    ("embeddings", 1),  # similarity._emb, clustering
+    ("embeddings", 1),  # tables.embedding_vectors
 )
 
 #: the four pre-explode doc repartitions of pipeline6

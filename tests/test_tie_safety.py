@@ -22,7 +22,7 @@ import pyarrow.parquet as pq
 
 from watermill_kinesis_spark.registry import all_specs
 from watermill_kinesis_spark.operators.similarity import N_QUERIES, TOP_K
-from watermill_kinesis_spark.operators.similarity2 import KNN_MUTUAL_K
+from watermill_kinesis_spark.operators.similarity import KNN_MUTUAL_K
 
 N_VEC = 40
 DIM = 64

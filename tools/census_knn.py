@@ -1,10 +1,10 @@
 """Bespoke census certification for `knn_mutual_label_blocked` at
-replica scale (VERDICT r12 task 1; the `sql_recursive_cte`
-engine-side-checksum convention).
+replica scale (the `sql_recursive_cte` engine-side-checksum
+convention).
 
 The entry's own oracle ranks every in-block pair with a ROW_NUMBER
 window — DuckDB materializes + sorts the full pair relation, which
-exhausted >51 GB temp at 100× (measured r12, standalone). This census
+exhausted >51 GB temp at 100× (measured standalone). This census
 recomputes the SAME mutual-kNN graph pair-STREAMED: the block
 self-join feeds a `arg_max(dst, [score, -dst], k)` hash aggregate
 (state = one k-list per src, never the pair relation), the 3n edge
@@ -32,17 +32,17 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from watermill_kinesis_spark.operators.similarity2 import KNN_MUTUAL_K  # noqa: E402
+from watermill_kinesis_spark.operators.similarity import KNN_MUTUAL_K  # noqa: E402
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 
 #: per-label top-k pass — ONE block's pair window at a time, with the
 #: cosine PRE-PROJECTED in an inner subquery so the window's
 #: materialized sort input is exactly (src, dst, score) = 24 B/row
 #: (~11 GB at the 100× replica's 21.8k-max blocks, held in RAM by an
-#: 80 GB memory limit). The r12 all-blocks spelling sorted every
-#: block's pairs at once (>51 GB temp); the r13 first cut windowed
-#: per label but spelled ``list_cosine_similarity(a.emb, b.emb)``
-#: directly in the window ORDER BY — DuckDB then materializes the
+#: 80 GB memory limit). An all-blocks spelling sorts every block's
+#: pairs at once (>51 GB temp); a per-label window that spells
+#: ``list_cosine_similarity(a.emb, b.emb)`` directly in the window
+#: ORDER BY is no better — DuckDB then materializes the
 #: sort input WITH every column the order expression references,
 #: i.e. two 64-double lists per pair row (~400 GB at the 100× block
 #: sizes; measured as temp-disk exhaustion at 51 GB free). Identical

@@ -2,10 +2,13 @@
 
 For each audited query this extracts the plan properties that decide
 100 TB behavior — exchange count, broadcast usage, parquet pushdown,
-whole-stage-codegen coverage, and the dangerous shapes (global sorts,
-single-partition exchanges, nested-loop joins, windows partitioned by
-a low-cardinality enum over raw rows) — so plan regressions are
-reviewable in diffs, not just caught by tests/test_plans.py.
+and the dangerous shapes (global sorts, single-partition exchanges,
+nested-loop joins, windows partitioned by a low-cardinality enum over
+raw rows) — so plan regressions are reviewable in diffs, not just
+caught by tests/test_plans.py. Plans are built, never executed: under
+AQE the unexecuted plan carries no whole-stage-codegen ``*(n)``
+markers, so codegen coverage is checked after execution by
+tests/test_plans.py instead.
 
     python tools/plan_audit.py [sf_dir]
 """
@@ -21,10 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 from watermill_kinesis_spark.session import get_spark  # noqa: E402
 
-# Round-5: the audit covers the ENTIRE registry (VERDICT r4 #7) —
-# every entry in all_specs(), in priority order. The red-flag
-# assertions are cheap and the newest entries are where plan
-# regressions land, so nothing is sampled.
+# The audit covers the ENTIRE registry — every entry in all_specs(),
+# in priority order. The red-flag assertions are cheap and the newest
+# entries are where plan regressions land, so nothing is sampled.
 AUDITED = None  # None = all registered queries
 
 
@@ -433,7 +435,6 @@ def audit_plan(plan: str) -> dict:
         "smj": plan.count("SortMergeJoin"),
         "pushed": "PushedFilters: [" in plan
         and "PushedFilters: []" not in plan.replace("PushedFilters: [],", "X"),
-        "codegen": len(re.findall(r"\*\(\d+\)", plan)) > 0,
         "take_ordered": "TakeOrderedAndProject" in plan,
         "wgl": "WindowGroupLimit" in plan,
         "scalar_agg": "Exchange SinglePartition" in plan,
@@ -457,8 +458,8 @@ def main() -> int:
         "",
         f"Auto-generated by `tools/plan_audit.py` at `{sf_dir}`; regenerate",
         "after any operator change. Columns: shuffle exchange count,",
-        "broadcast exchanges, join strategies, parquet pushdown, whole-stage",
-        "codegen, top-k short-circuits, Arrow/Python stages. Red-flag",
+        "broadcast exchanges, join strategies, parquet pushdown, top-k",
+        "short-circuits, Arrow/Python stages. Red-flag",
         "columns (global single-partition exchange, nested-loop join,",
         "enum-partitioned window, oversized plan literal, corpus-",
         "dictionary broadcast build side, fact-table key-projection",
@@ -474,9 +475,9 @@ def main() -> int:
         "their real distributed stages are factored helpers whose plans",
         "tests/test_plans.py pins directly.",
         "",
-        "| query | shuffles | broadcasts | BHJ | SMJ | pushdown | codegen |"
+        "| query | shuffles | broadcasts | BHJ | SMJ | pushdown |"
         " TakeOrdered | WindowGroupLimit | Arrow | scalar-agg | BadSinglePart! | BadNestedLoop! | BadEnumWindow! | BigLiteral! | DictBcast! | FactKeyBcast! |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
+        "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     flags: list[str] = []
     errors: list[str] = []
@@ -497,7 +498,7 @@ def main() -> int:
         lines.append(
             f"| {name} | {a['shuffles']}{it} | {a['broadcasts']}{it} | "
             f"{a['bcast_joins']} | {a['smj']} | {y(a['pushed'])} | "
-            f"{y(a['codegen'])} | {y(a['take_ordered'])} | {y(a['wgl'])} | "
+            f"{y(a['take_ordered'])} | {y(a['wgl'])} | "
             f"{y(a['arrow'])} | {y(a['scalar_agg'])} | {y(a['single_part'])} | "
             f"{y(a['bnlj'])} | {y(a['enum_window'])} | {y(a['big_literal'])} | "
             f"{y(bool(a['dict_bcast']))} | {y(bool(a['fact_key_bcast']))} |"

@@ -2,7 +2,7 @@
 (ISO-BMFF box tree), and TIFF/EXIF IFD metadata.
 
 The audio/video counterpart of ``functions/imaging.py``: these give
-``multimodal2.py``'s operators REAL container parsing — byte-level
+``operators/multimodal.py``'s operators REAL container parsing — byte-level
 RIFF chunk walking, ISO base-media box recursion, and a TIFF IFD
 entry walker — with matching minimal encoders so fixtures and oracle
 queries can synthesize valid container bytes deterministically (the

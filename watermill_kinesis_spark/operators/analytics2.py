@@ -1,7 +1,7 @@
-"""Analytics wave 4: value histograms, time-weighted averages, SCD2
-run-length history, deterministic argmax aggregates, window rank
-distributions, and three more LLM-corpus operators (prefix-containment
-dedup, shingle-containment dedup, corpus-frequency quality scoring).
+"""Value histograms, time-weighted averages, SCD2 run-length history,
+deterministic argmax aggregates, window rank distributions, and two
+corpus statistics (corpus-frequency quality scoring, vocabulary
+growth).
 
 Determinism discipline (same as analytics.py): every float reaching the
 oracle hash is either a raw-data projection, an exact integer ratio, or
@@ -318,313 +318,6 @@ def window_percentile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percent_rank().over(w).alias("pr"),
             F.cume_dist().over(w).alias("cd"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# prefix-containment dedup (truncated copies)
-
-#: blocking prefix length: only docs at least this long participate
-PREFIX_BLOCK = 50
-
-
-@query(
-    "dedup_prefix_containment",
-    oracle=f"""
-    SELECT a.doc_id AS doc_trunc, b.doc_id AS doc_full,
-           CAST(LENGTH(a.text) AS DOUBLE) / LENGTH(b.text) AS len_ratio
-    FROM documents a
-    JOIN documents b
-      ON SUBSTRING(a.text, 1, {PREFIX_BLOCK}) = SUBSTRING(b.text, 1, {PREFIX_BLOCK})
-     AND LENGTH(a.text) < LENGTH(b.text)
-     AND starts_with(b.text, a.text)
-    WHERE LENGTH(a.text) >= {PREFIX_BLOCK}
-    """,
-    tags=("dedup", "llm-pipeline"),
-)
-def dedup_prefix_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated-copy detection: pairs where one document is a strict
-    prefix of another (the classic crawl artifact — same page captured
-    at different cut-offs; MinHash can miss these when the longer doc
-    dwarfs the shared prefix). Candidate generation blocks on the first
-    50 (PREFIX_BLOCK) characters, so the join is an equi-join on a short
-    key — the full text only crosses the wire for rows sharing a block,
-    and at 100 TB the block key would be xxhash64(prefix) instead of
-    the prefix itself (same plan shape). Docs shorter than the block
-    are out of scope by definition."""
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.length("text") >= PREFIX_BLOCK)
-        .withColumn("blk", F.substring("text", 1, PREFIX_BLOCK))
-    )
-    a = d.select(
-        F.col("doc_id").alias("doc_trunc"),
-        F.col("text").alias("text_a"),
-        "blk",
-    )
-    b = d.select(
-        F.col("doc_id").alias("doc_full"), F.col("text").alias("text_b"), "blk"
-    )
-    return (
-        a.join(b, "blk")
-        .where(
-            (F.length("text_a") < F.length("text_b"))
-            & F.col("text_b").startswith(F.col("text_a"))
-        )
-        .select(
-            "doc_trunc",
-            "doc_full",
-            (
-                F.length("text_a").cast("double") / F.length("text_b")
-            ).alias("len_ratio"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# shingle-containment dedup (quoted / embedded near-dups)
-
-from watermill_kinesis_spark.operators.dedup import SHINGLE_N  # noqa: E402
-
-#: containment threshold: |A∩B| / |A| for the smaller shingle set
-CONTAIN_T = 0.8
-
-
-@query(
-    "dedup_containment_ngram",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
-    sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
-    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
-    scored AS (
-        SELECT p.doc_a, p.doc_b, p.n_common, sa.n AS na, sb.n AS nb
-        FROM pairs p
-        JOIN sizes sa ON sa.doc_id = p.doc_a
-        JOIN sizes sb ON sb.doc_id = p.doc_b)
-    SELECT doc_a AS doc_sub, doc_b AS doc_super,
-           CAST(n_common AS DOUBLE) / na AS containment
-    FROM scored WHERE CAST(n_common AS DOUBLE) / na >= {CONTAIN_T}
-    UNION ALL
-    SELECT doc_b AS doc_sub, doc_a AS doc_super,
-           CAST(n_common AS DOUBLE) / nb AS containment
-    FROM scored WHERE CAST(n_common AS DOUBLE) / nb >= {CONTAIN_T}
-    """,
-    tags=("dedup", "llm-pipeline"),
-)
-def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingle *containment* near-dup: C(A→B) = |A∩B| / |A| ≥ 0.8 (CONTAIN_T)
-    — flags documents mostly contained in another (quotes, boilerplate
-    wrapping, concatenated dumps) that symmetric Jaccard misses when
-    the sizes differ a lot. Same inverted-index candidate generation as
-    dedup_ngram_jaccard (cost Σ posting-list², never n²); each
-    surviving pair is emitted in whichever direction(s) clear the
-    threshold. Pure integer ratios → exact, order-independent. Set
-    sizes ride the exploded posting rows (dedup._shared_shingle_pairs),
-    so the corpus is shingled exactly once."""
-    from watermill_kinesis_spark.operators.dedup import _shared_shingle_pairs
-
-    scored = _shared_shingle_pairs(spark, sf_dir)
-    # BOTH directions in one pass (optimization round 13): the former
-    # fwd.unionAll(rev) planned the whole pair pipeline TWICE (union
-    # children are independent subtrees; nothing merged them). Each
-    # surviving pair row explodes into its two direction candidates and
-    # one filter keeps whichever clear the threshold — output-identical
-    # (the oracle compare is order-insensitive), half the work.
-    c_ab = F.col("n_common").cast("double") / F.col("na")
-    c_ba = F.col("n_common").cast("double") / F.col("nb")
-    return (
-        scored.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("doc_sub"),
-                        F.col("doc_b").alias("doc_super"),
-                        c_ab.alias("containment"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("doc_sub"),
-                        F.col("doc_a").alias("doc_super"),
-                        c_ba.alias("containment"),
-                    ),
-                )
-            ).alias("r")
-        )
-        .select("r.*")
-        .where(F.col("containment") >= CONTAIN_T)
-    )
-
-
-#: document-frequency ceiling for the capped containment face: a
-#: shingle appearing in more docs than this is boilerplate, carries
-#: ~no near-dup signal, and is the Σ|posting|² skew magnet — the
-#: standard inverted-index hot-term drop
-CONTAIN_DF_CAP = 100
-
-
-@query(
-    "dedup_containment_capped",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
-    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    df AS (SELECT shingle, COUNT(*) AS df FROM ex GROUP BY shingle),
-    kept AS (
-        SELECT ex.doc_id, ex.shingle
-        FROM ex JOIN df USING (shingle) WHERE df.df <= {CONTAIN_DF_CAP}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
-    pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM kept a JOIN kept b ON a.shingle = b.shingle
-                               AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
-    scored AS (
-        SELECT p.doc_a, p.doc_b, p.n_common, sa.n AS na, sb.n AS nb
-        FROM pairs p
-        JOIN sizes sa ON sa.doc_id = p.doc_a
-        JOIN sizes sb ON sb.doc_id = p.doc_b)
-    SELECT doc_a AS doc_sub, doc_b AS doc_super,
-           CAST(n_common AS DOUBLE) / na AS containment
-    FROM scored WHERE CAST(n_common AS DOUBLE) / na >= {CONTAIN_T}
-    UNION ALL
-    SELECT doc_b AS doc_sub, doc_a AS doc_super,
-           CAST(n_common AS DOUBLE) / nb AS containment
-    FROM scored WHERE CAST(n_common AS DOUBLE) / nb >= {CONTAIN_T}
-    """,
-    tags=("dedup", "llm-pipeline"),
-)
-def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DF-capped twin of ``dedup_containment_ngram`` (VERDICT r12 task
-    7): drop shingles whose document frequency exceeds CONTAIN_DF_CAP
-    before the posting-list self-join — the standard inverted-index
-    hot-term trick. The exact face's Σ|posting|² candidate generation
-    is quadratic in per-shingle document frequency, so one hot
-    boilerplate shingle ("all rights reserved …" in a crawl, or every
-    shingle of a ×100-duplicated corpus) dominates the join; capping
-    bounds every posting's pair contribution at CONTAIN_DF_CAP² and
-    makes the whole plan's shuffle O(Σ min(df, cap)²) — flat in corpus
-    duplication, the property the exact face lacks (its 100× OOM,
-    SCALE.md r12).
-
-    CONTRACT, stated honestly: containment is computed over the
-    sub-cap shingle VOCABULARY — both |A∩B| and |A| count only kept
-    shingles, a self-consistent redefinition rather than a biased
-    estimate of the exact score. The recall trade: a pair whose
-    overlap is mostly boilerplate no longer qualifies (that's the
-    point); a pair whose distinctive shingles overlap still scores
-    ≥ the threshold. Docs whose every shingle is hot leave the
-    relation (no zero-denominator row). On corpora with no shingle
-    above the cap the output EQUALS the exact face's, which is the
-    sf0.01 oracle condition; the cap behavior itself is pinned by a
-    hot-shingle pytest fixture (tests/test_analytics2.py)."""
-    from watermill_kinesis_spark.operators.dedup import _shingle_rows
-
-    # ONE corpus kernel pass (shared _shingle_rows, see its docstring
-    # for why the declarative HOF spelling planned pathologically),
-    # then posting arrays per shingle; hot-shingle rows never reach
-    # the pair stage, which is the property that bounds the plan at
-    # 100 TB. The shingle repartition carries an EXPLICIT count
-    # (REPARTITION_BY_NUM, exempt from AQE coalescing): posting bytes
-    # are tiny, the pair inline explodes Σ min(df, cap)² rows AQE
-    # cannot see (guide §2.5).
-    from watermill_kinesis_spark.sources.tables import adaptive_partitions
-
-    ex = (
-        _shingle_rows(spark, sf_dir)
-        .select("doc_id", "shingle")
-        # geometry-derived explicit count (optimization round 14; see
-        # dedup._shared_shingle_pairs for the sizing rationale)
-        .repartition(
-            adaptive_partitions(
-                spark, sf_dir, "documents", expand=10 * SHINGLE_N
-            ),
-            "shingle",
-        )
-    )
-    # The DF cap is enforced on a DISK-SPILLABLE operator BEFORE any
-    # posting array is materialized (optimization round 14, ADVICE
-    # r13): a collect_list over an uncapped group buffers O(df)
-    # doc_ids in one in-memory aggregation buffer, so a hot
-    # boilerplate shingle at the 100 TB design point would hold an
-    # O(corpus) array in one task — the cap no longer bounded executor
-    # memory, only the pair stage. A count window over the same
-    # shingle partitioning computes df while its partition-group
-    # buffer (ExternalAppendOnlyUnsafeRowArray) spills to disk past
-    # the in-memory threshold, so a hot shingle costs disk, not heap;
-    # only surviving rows reach collect_list, bounding every posting
-    # buffer at CONTAIN_DF_CAP entries. Cost stays one corpus
-    # shuffle + one spillable sort: the window and the groupBy both
-    # reuse the explicit shingle exchange. (A count-aggregate +
-    # semi-join spelling was measured first: column pruning makes the
-    # two exchange subtrees non-identical, so the serial shingle
-    # kernel ran TWICE — profiled +1.2 s at sf0.1.)
-    posting = (
-        ex.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("shingle")))
-        .where(F.col("df") <= CONTAIN_DF_CAP)
-        .groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-    )
-    kept = posting.select(F.explode("docs").alias("doc_id"))
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        posting.where(F.size("docs") >= 2)
-        .select(
-            F.expr(
-                "inline(flatten(transform(docs, (x, i) ->"
-                " transform(slice(docs, i + 2, size(docs) - i - 1), y ->"
-                " struct(x AS doc_a, y AS doc_b)))))"
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    scored = (
-        pairs.join(sizes.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("n", "nb"), "doc_b")
-    )
-    # both directions in one pass (see dedup_containment_ngram)
-    c_ab = F.col("n_common").cast("double") / F.col("na")
-    c_ba = F.col("n_common").cast("double") / F.col("nb")
-    return (
-        scored.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("doc_sub"),
-                        F.col("doc_b").alias("doc_super"),
-                        c_ab.alias("containment"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("doc_sub"),
-                        F.col("doc_a").alias("doc_super"),
-                        c_ba.alias("containment"),
-                    ),
-                )
-            ).alias("r")
-        )
-        .select("r.*")
-        .where(F.col("containment") >= CONTAIN_T)
     )
 
 

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.functions.scope import Scope
-from watermill_kinesis_spark.operators.similarity import _emb
 from watermill_kinesis_spark.registry import query
+from watermill_kinesis_spark.sources.tables import embedding_vectors
 
 KMEANS_K = 8
 KMEANS_ITERS = 5
@@ -102,7 +102,7 @@ def kmeans_fit(spark: SparkSession, sf_dir: str, k: int = KMEANS_K,
     # every pass re-reads parquet AND re-runs the repartition shuffle.
     # The returned assignment reads them: the result's own checkpoint.
     e = (
-        _emb(spark, sf_dir, distribute=True)
+        embedding_vectors(spark, sf_dir, distribute=True)
         .select("vec_id", "emb")
         .localCheckpoint()
     )
@@ -181,7 +181,7 @@ def pca_fit(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    e = _emb(spark, sf_dir, distribute=True).select("vec_id", "emb")
+    e = embedding_vectors(spark, sf_dir, distribute=True).select("vec_id", "emb")
     dim_row = e.select(F.size("emb").alias("d")).first()
     dim = dim_row["d"]
 
@@ -366,7 +366,7 @@ def kcenter_greedy_fit(spark: SparkSession, sf_dir: str, k: int = KCENTER_K):
 
     with Scope(spark) as scope:
         e = scope.checkpointed(
-            _emb(spark, sf_dir, distribute=True).select("vec_id", "emb")
+            embedding_vectors(spark, sf_dir, distribute=True).select("vec_id", "emb")
         )
         first = e.orderBy("vec_id").limit(1).collect()[0]
         center_ids = [first.vec_id]
@@ -376,7 +376,7 @@ def kcenter_greedy_fit(spark: SparkSession, sf_dir: str, k: int = KCENTER_K):
             # on a duplicate-heavy corpus every remaining mind can be 0,
             # and without the exclusion the (mind DESC, vec_id ASC) pick
             # re-selects center 0 forever — duplicate center ids, breaking
-            # the audit's distinctness guarantee (r13 tie-safety find)
+            # the audit's distinctness guarantee
             far_rows = (
                 mind_df(centers)
                 .where(~F.col("vec_id").isin(center_ids))
@@ -429,7 +429,7 @@ def kcenter_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = np.linalg.norm(C[:, None, :] - C[None, :, :], axis=2)
     np.fill_diagonal(pair, np.inf)
     separation = float(pair.min())
-    n = _emb(spark, sf_dir).count()
+    n = embedding_vectors(spark, sf_dir).count()
     return local_relation(spark, 
         [
             (

@@ -9,7 +9,10 @@ Scale design (the whole point of these):
   (`dedup_fuzzy_minhash`), SimHash block-combination keys
   (`dedup_simhash`, Manku-style C(6,3) tables).
   Bucket joins shuffle only (key, doc_id) pairs — bytes per row, not
-  documents.
+  documents. The containment faces block the same way (a 50-character
+  prefix key; the shingle inverted index, optionally DF-capped), and
+  benchmark decontamination joins the corpus against a broadcast
+  eval-set n-gram table.
 - Shingling/hashing is all JVM higher-order functions (transform/
   aggregate/xxhash64) — no Python in the hot path.
 - Pair canonicalization (doc_a < doc_b) before the verify join halves
@@ -18,15 +21,30 @@ Scale design (the whole point of these):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W, functions as F
+from pyspark.sql.types import LongType as _LongType
 
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.functions.scope import Scope
+from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import fanned_documents, load_table
 
 #: shingle width for near-dup candidate generation
 SHINGLE_N = 5
+#: the oracles' per-document shingle sets, the body of their ``sh``
+#: CTE: the distinct word SHINGLE_N-grams of each document, a document
+#: shorter than SHINGLE_N words kept whole as its one shingle (the
+#: semantics of ``textexpr.word_shingles`` and ``_shingle_rows``)
+_SHINGLE_SETS_SQL = f"""(
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
+                   i -> array_to_string(list_slice(string_split(text, ' '),
+                                                   CAST(i + 1 AS INT),
+                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
+               )) AS shingles
+        FROM documents)"""
 #: MinHash signature: B bands × R rows
 MINHASH_B, MINHASH_R = 16, 8
 #: Mersenne prime 2^31-1: constants and reduced hashes are < 2^31, so
@@ -61,8 +79,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``xxhash64(text)`` instead of the full text to shrink shuffle bytes
     — semantics identical, collisions ~2^-64."""
     d = fanned_documents(spark, sf_dir)
-    from pyspark.sql import Window as W
-
     w = W.partitionBy("text").orderBy("doc_id")
     return (
         d.withColumn("rn", F.row_number().over(w))
@@ -78,15 +94,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -179,8 +187,8 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        # fan the kernel out of the single-split scan task
-        # (optimization round 14): the tokenize+dedup pass profiled
+        # fan the kernel out of the single-split scan task: the
+        # tokenize+dedup pass profiled
         # 0.65 s SERIAL at sf0.1 inside every consumer of the shingle
         # family (jaccard, cross-source, both containment faces,
         # cluster_canonical). Raw text shuffles once; expand=7 is the
@@ -199,7 +207,7 @@ def _shared_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_a, doc_b, n_common, na, nb) with doc_a < doc_b — the common
     core of the Jaccard and containment near-dup operators.
 
-    Pair generation (optimization round 13): group the posting rows by
+    Pair generation: group the posting rows by
     shingle into a doc_id-sorted posting array and emit each unordered
     pair ONCE with an array-combination inline — replacing the former
     posting self-join, which shuffled the exploded corpus twice, sorted
@@ -211,8 +219,7 @@ def _shared_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the combination inline explodes Σ C(|posting|, 2) pairs that
     AQE's input-byte sizing cannot see (guide §2.5, exploding joins) —
     cost is Σ|posting|² exactly as before, spread over every core.
-    The count is geometry-derived (optimization round 14, VERDICT r13
-    task 1): expand = 10 (parquet→text) × SHINGLE_N (each token lands
+    The count is geometry-derived: expand = 10 (parquet→text) × SHINGLE_N (each token lands
     in ~SHINGLE_N shingle strings) sizes the exchange from the shingle
     rows it actually carries, clamped to the core count."""
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
@@ -241,6 +248,286 @@ def _shared_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_common"),
         F.min("na").alias("na"),
         F.min("nb").alias("nb"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# containment near-dups: truncated copies, quoted and embedded text
+
+#: blocking prefix length: only docs at least this long participate
+PREFIX_BLOCK = 50
+
+
+@query(
+    "dedup_prefix_containment",
+    oracle=f"""
+    SELECT a.doc_id AS doc_trunc, b.doc_id AS doc_full,
+           CAST(LENGTH(a.text) AS DOUBLE) / LENGTH(b.text) AS len_ratio
+    FROM documents a
+    JOIN documents b
+      ON SUBSTRING(a.text, 1, {PREFIX_BLOCK}) = SUBSTRING(b.text, 1, {PREFIX_BLOCK})
+     AND LENGTH(a.text) < LENGTH(b.text)
+     AND starts_with(b.text, a.text)
+    WHERE LENGTH(a.text) >= {PREFIX_BLOCK}
+    """,
+    tags=("dedup", "llm-pipeline"),
+)
+def dedup_prefix_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Truncated-copy detection: pairs where one document is a strict
+    prefix of another (the classic crawl artifact — same page captured
+    at different cut-offs; MinHash can miss these when the longer doc
+    dwarfs the shared prefix). Candidate generation blocks on the first
+    50 (PREFIX_BLOCK) characters, so the join is an equi-join on a short
+    key — the full text only crosses the wire for rows sharing a block,
+    and at 100 TB the block key would be xxhash64(prefix) instead of
+    the prefix itself (same plan shape). Docs shorter than the block
+    are out of scope by definition."""
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .where(F.length("text") >= PREFIX_BLOCK)
+        .withColumn("blk", F.substring("text", 1, PREFIX_BLOCK))
+    )
+    a = d.select(
+        F.col("doc_id").alias("doc_trunc"),
+        F.col("text").alias("text_a"),
+        "blk",
+    )
+    b = d.select(
+        F.col("doc_id").alias("doc_full"), F.col("text").alias("text_b"), "blk"
+    )
+    return (
+        a.join(b, "blk")
+        .where(
+            (F.length("text_a") < F.length("text_b"))
+            & F.col("text_b").startswith(F.col("text_a"))
+        )
+        .select(
+            "doc_trunc",
+            "doc_full",
+            (
+                F.length("text_a").cast("double") / F.length("text_b")
+            ).alias("len_ratio"),
+        )
+    )
+
+
+#: containment threshold: |A∩B| / |A| for the smaller shingle set
+CONTAIN_T = 0.8
+
+
+@query(
+    "dedup_containment_ngram",
+    oracle=f"""
+    WITH sh AS {_SHINGLE_SETS_SQL},
+    sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
+    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+    pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id),
+    scored AS (
+        SELECT p.doc_a, p.doc_b, p.n_common, sa.n AS na, sb.n AS nb
+        FROM pairs p
+        JOIN sizes sa ON sa.doc_id = p.doc_a
+        JOIN sizes sb ON sb.doc_id = p.doc_b)
+    SELECT doc_a AS doc_sub, doc_b AS doc_super,
+           CAST(n_common AS DOUBLE) / na AS containment
+    FROM scored WHERE CAST(n_common AS DOUBLE) / na >= {CONTAIN_T}
+    UNION ALL
+    SELECT doc_b AS doc_sub, doc_a AS doc_super,
+           CAST(n_common AS DOUBLE) / nb AS containment
+    FROM scored WHERE CAST(n_common AS DOUBLE) / nb >= {CONTAIN_T}
+    """,
+    tags=("dedup", "llm-pipeline"),
+)
+def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shingle *containment* near-dup: C(A→B) = |A∩B| / |A| ≥ 0.8 (CONTAIN_T)
+    — flags documents mostly contained in another (quotes, boilerplate
+    wrapping, concatenated dumps) that symmetric Jaccard misses when
+    the sizes differ a lot. Same inverted-index candidate generation as
+    dedup_ngram_jaccard (cost Σ posting-list², never n²); each
+    surviving pair is emitted in whichever direction(s) clear the
+    threshold. Pure integer ratios → exact, order-independent. Set
+    sizes ride the exploded posting rows (dedup._shared_shingle_pairs),
+    so the corpus is shingled exactly once."""
+    scored = _shared_shingle_pairs(spark, sf_dir)
+    # BOTH directions in one pass: a fwd.unionAll(rev) spelling planned the whole pair pipeline TWICE (union
+    # children are independent subtrees; nothing merged them). Each
+    # surviving pair row explodes into its two direction candidates and
+    # one filter keeps whichever clear the threshold — output-identical
+    # (the oracle compare is order-insensitive), half the work.
+    c_ab = F.col("n_common").cast("double") / F.col("na")
+    c_ba = F.col("n_common").cast("double") / F.col("nb")
+    return (
+        scored.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("doc_sub"),
+                        F.col("doc_b").alias("doc_super"),
+                        c_ab.alias("containment"),
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("doc_sub"),
+                        F.col("doc_a").alias("doc_super"),
+                        c_ba.alias("containment"),
+                    ),
+                )
+            ).alias("r")
+        )
+        .select("r.*")
+        .where(F.col("containment") >= CONTAIN_T)
+    )
+
+
+#: document-frequency ceiling for the capped containment face: a
+#: shingle appearing in more docs than this is boilerplate, carries
+#: ~no near-dup signal, and is the Σ|posting|² skew magnet — the
+#: standard inverted-index hot-term drop
+CONTAIN_DF_CAP = 100
+
+
+@query(
+    "dedup_containment_capped",
+    oracle=f"""
+    WITH sh AS {_SHINGLE_SETS_SQL},
+    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+    df AS (SELECT shingle, COUNT(*) AS df FROM ex GROUP BY shingle),
+    kept AS (
+        SELECT ex.doc_id, ex.shingle
+        FROM ex JOIN df USING (shingle) WHERE df.df <= {CONTAIN_DF_CAP}),
+    sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
+    pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+        FROM kept a JOIN kept b ON a.shingle = b.shingle
+                               AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id),
+    scored AS (
+        SELECT p.doc_a, p.doc_b, p.n_common, sa.n AS na, sb.n AS nb
+        FROM pairs p
+        JOIN sizes sa ON sa.doc_id = p.doc_a
+        JOIN sizes sb ON sb.doc_id = p.doc_b)
+    SELECT doc_a AS doc_sub, doc_b AS doc_super,
+           CAST(n_common AS DOUBLE) / na AS containment
+    FROM scored WHERE CAST(n_common AS DOUBLE) / na >= {CONTAIN_T}
+    UNION ALL
+    SELECT doc_b AS doc_sub, doc_a AS doc_super,
+           CAST(n_common AS DOUBLE) / nb AS containment
+    FROM scored WHERE CAST(n_common AS DOUBLE) / nb >= {CONTAIN_T}
+    """,
+    tags=("dedup", "llm-pipeline"),
+)
+def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DF-capped twin of ``dedup_containment_ngram`` (VERDICT r12 task
+    7): drop shingles whose document frequency exceeds CONTAIN_DF_CAP
+    before the posting-list self-join — the standard inverted-index
+    hot-term trick. The exact face's Σ|posting|² candidate generation
+    is quadratic in per-shingle document frequency, so one hot
+    boilerplate shingle ("all rights reserved …" in a crawl, or every
+    shingle of a ×100-duplicated corpus) dominates the join; capping
+    bounds every posting's pair contribution at CONTAIN_DF_CAP² and
+    makes the whole plan's shuffle O(Σ min(df, cap)²) — flat in corpus
+    duplication, the property the exact face lacks (its 100× OOM,
+    SCALE.md r12).
+
+    CONTRACT, stated honestly: containment is computed over the
+    sub-cap shingle VOCABULARY — both |A∩B| and |A| count only kept
+    shingles, a self-consistent redefinition rather than a biased
+    estimate of the exact score. The recall trade: a pair whose
+    overlap is mostly boilerplate no longer qualifies (that's the
+    point); a pair whose distinctive shingles overlap still scores
+    ≥ the threshold. Docs whose every shingle is hot leave the
+    relation (no zero-denominator row). On corpora with no shingle
+    above the cap the output EQUALS the exact face's, which is the
+    sf0.01 oracle condition; the cap behavior itself is pinned by a
+    hot-shingle pytest fixture (tests/test_analytics2.py)."""
+    # ONE corpus kernel pass (shared _shingle_rows, see its docstring
+    # for why the declarative HOF spelling planned pathologically),
+    # then posting arrays per shingle; hot-shingle rows never reach
+    # the pair stage, which is the property that bounds the plan at
+    # 100 TB. The shingle repartition carries an EXPLICIT count
+    # (REPARTITION_BY_NUM, exempt from AQE coalescing): posting bytes
+    # are tiny, the pair inline explodes Σ min(df, cap)² rows AQE
+    # cannot see (guide §2.5).
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    ex = (
+        _shingle_rows(spark, sf_dir)
+        .select("doc_id", "shingle")
+        # geometry-derived explicit count (see _shared_shingle_pairs
+        # for the sizing rationale)
+        .repartition(
+            adaptive_partitions(
+                spark, sf_dir, "documents", expand=10 * SHINGLE_N
+            ),
+            "shingle",
+        )
+    )
+    # The DF cap is enforced on a DISK-SPILLABLE operator BEFORE any
+    # posting array is materialized: a collect_list over an uncapped group buffers O(df)
+    # doc_ids in one in-memory aggregation buffer, so a hot
+    # boilerplate shingle at the 100 TB design point would hold an
+    # O(corpus) array in one task — the cap no longer bounded executor
+    # memory, only the pair stage. A count window over the same
+    # shingle partitioning computes df while its partition-group
+    # buffer (ExternalAppendOnlyUnsafeRowArray) spills to disk past
+    # the in-memory threshold, so a hot shingle costs disk, not heap;
+    # only surviving rows reach collect_list, bounding every posting
+    # buffer at CONTAIN_DF_CAP entries. Cost stays one corpus
+    # shuffle + one spillable sort: the window and the groupBy both
+    # reuse the explicit shingle exchange. (A count-aggregate +
+    # semi-join spelling was measured first: column pruning makes the
+    # two exchange subtrees non-identical, so the serial shingle
+    # kernel ran TWICE — profiled +1.2 s at sf0.1.)
+    posting = (
+        ex.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("shingle")))
+        .where(F.col("df") <= CONTAIN_DF_CAP)
+        .groupBy("shingle")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
+    )
+    kept = posting.select(F.explode("docs").alias("doc_id"))
+    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    pairs = (
+        posting.where(F.size("docs") >= 2)
+        .select(
+            F.expr(
+                "inline(flatten(transform(docs, (x, i) ->"
+                " transform(slice(docs, i + 2, size(docs) - i - 1), y ->"
+                " struct(x AS doc_a, y AS doc_b)))))"
+            )
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    scored = (
+        pairs.join(sizes.withColumnRenamed("doc_id", "doc_a")
+                   .withColumnRenamed("n", "na"), "doc_a")
+        .join(sizes.withColumnRenamed("doc_id", "doc_b")
+              .withColumnRenamed("n", "nb"), "doc_b")
+    )
+    # both directions in one pass (see dedup_containment_ngram)
+    c_ab = F.col("n_common").cast("double") / F.col("na")
+    c_ba = F.col("n_common").cast("double") / F.col("nb")
+    return (
+        scored.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("doc_sub"),
+                        F.col("doc_b").alias("doc_super"),
+                        c_ab.alias("containment"),
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("doc_sub"),
+                        F.col("doc_a").alias("doc_super"),
+                        c_ba.alias("containment"),
+                    ),
+                )
+            ).alias("r")
+        )
+        .select("r.*")
+        .where(F.col("containment") >= CONTAIN_T)
     )
 
 
@@ -384,7 +671,7 @@ def _simhash_fp_col(th: F.Column) -> F.Column:
     token hash votes ±1 on each of 64 bits; the sign vector is the
     fingerprint.
 
-    Vectorized (optimization round 13, guide §4.2): the original
+    Vectorized (guide §4.2): the HOF
     spelling was 64 interpreted ``F.aggregate`` HOF folds (one per
     bit) — HOF lambdas never enter codegen, and the 64-fold expression
     tree was so large that task deserialization alone dominated the
@@ -393,12 +680,9 @@ def _simhash_fp_col(th: F.Column) -> F.Column:
     Σ_tokens (bit b of xxhash64(token) ? +1 : −1) > 0, sign bit
     included — via one uint64 bit-unpack + sum per row. Token hashes
     still come from JVM ``xxhash64`` upstream, so fingerprint VALUES
-    are bit-identical to the previous rounds' (pinned by the pytest
+    are bit-identical to the HOF spelling's (pinned by the pytest
     fingerprint fixtures)."""
     return _simhash_fp_kernel(th)
-
-
-from pyspark.sql.types import LongType as _LongType  # noqa: E402
 
 
 # DataType instance, not a DDL string: a string returnType is parsed
@@ -483,7 +767,7 @@ def _simhash_pairs(fps: DataFrame, dfp: DataFrame | None = None) -> DataFrame:
        each fp is keyed by all C(6,3)=20 combinations of 3 block
        values (~32-bit keys). Pigeonhole keeps the guarantee exact —
        ≤3 flips touch ≤3 blocks, so some untouched combination agrees
-       — while random 16-bit-chunk buckets (the r7 form) held ~4.7k
+       — while random 16-bit-chunk buckets held ~4.7k
        docs each and joined ~99M accidental pairs.
     2. **Collapse identical fingerprints FIRST**: duplicate-dense
        corpora have fp clusters of thousands of docs, and OR-amplified
@@ -521,10 +805,10 @@ def _simhash_pairs(fps: DataFrame, dfp: DataFrame | None = None) -> DataFrame:
     # ``merge`` (sort-merge): at the 100× replica AQE's post-shuffle
     # size estimate elected to BROADCAST a fingerprint side (~500k
     # rows sit just under the compressed threshold while the hash
-    # relation build blew the vanilla 1 GiB driver) — the r9
+    # relation build blew the vanilla 1 GiB driver) — the
     # ngram_novelty_score class, on the fingerprint member of
     # SCALE.md's "grams, tokens, fingerprints" rule. shuffle_hash is
-    # NOT the right pin here (first attempt, same sweep): AQE
+    # NOT the right pin here (tried at the same replica): AQE
     # coalesces the shuffle to its 64 MB advisory partition size, and
     # a shuffled-hash build must hold a whole coalesced partition as
     # a hash relation per task — it OOM'd where SMJ spills and
@@ -532,7 +816,7 @@ def _simhash_pairs(fps: DataFrame, dfp: DataFrame | None = None) -> DataFrame:
     a = chunks.select("bkey", F.col("fp").alias("fp_a"))
     b = chunks.select("bkey", F.col("fp").alias("fp_b"))
     hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    # hamming ≤ 3 BEFORE dropDuplicates (r10, found at the 100×
+    # hamming ≤ 3 BEFORE dropDuplicates (found at the 100×
     # replica): the filter is a row-local bit_count on the join
     # output, but written after the dedup aggregate it cannot be
     # pushed below it — so the aggregate was ingesting every
@@ -600,11 +884,10 @@ def connected_components(
     ``comp`` = min doc_id of the component.
 
     Edges are treated as UNDIRECTED: unless ``symmetric_edges=True``,
-    the relation is symmetrized internally (optimization round 14,
-    VERDICT r13 task 8 — the r13 sweep rework made the helper silently
-    directional for an asymmetric edge list: a node appearing only as
-    ``doc_b`` was labeled isolated while still receiving labels, and
-    labels only flowed a→b). A caller that already materializes both
+    the relation is symmetrized internally (a directional sweep
+    mislabels an asymmetric edge list: a node appearing only as
+    ``doc_b`` is labeled isolated while still receiving labels, and
+    labels only flow a→b). A caller that already materializes both
     directions — ``dedup_cluster_canonical`` checkpoints the symmetric
     relation for the sweep loop — passes ``symmetric_edges=True`` and
     skips the doubled join work the internal union would cost it.
@@ -617,8 +900,8 @@ def connected_components(
     never leave the cluster (the driver only sees a 0/1 changed count).
     ``localCheckpoint`` truncates the growing loop lineage.
 
-    The sweeps iterate over EDGE-TOUCHED nodes only (optimization
-    round 13, guide §2.3): an isolated node is its own component by
+    The sweeps iterate over EDGE-TOUCHED nodes only (guide §2.3): an
+    isolated node is its own component by
     definition and never changes, yet the old per-sweep groupBy +
     shortcut self-join shuffled every corpus label every sweep. The
     near-dup edge set is orders of magnitude smaller than the corpus,
@@ -685,8 +968,7 @@ def connected_components(
             f"connected_components did not converge in {CC_MAX_ITERS} "
             "pointer-doubling sweeps — raise CC_MAX_ITERS"
         )
-    # Anti-join against the FINAL labels, not ``touched`` (optimization
-    # round 14, ADVICE r13): labels is a localCheckpointed flat RDD with
+    # Anti-join against the FINAL labels, not ``touched``: labels is a localCheckpointed flat RDD with
     # exactly the touched doc_id set, while touched's lineage is the
     # caller's edge relation — dedup_cluster_canonical releases edges
     # before the returned plan executes, so an anti-join on touched
@@ -701,15 +983,7 @@ def connected_components(
 @query(
     "dedup_cluster_canonical",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH RECURSIVE sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -760,10 +1034,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation's partition count tracks its actual bytes (a handful of
     # near-dup edges → 1-2 partitions; a duplicate-heavy crawl → many)
     # instead of inheriting the corpus pipeline's full fan-out — every
-    # CC sweep's map stages iterate over these partitions (optimization
-    # round 13; the loop stages ran 96 near-empty tasks per sweep)
-    # checkpoint, not persist (optimization round 14, the simhash-audit
-    # finding): every CC sweep replans against the edge relation, and
+    # CC sweep's map stages iterate over these partitions (a full
+    # fan-out ran 96 near-empty tasks per sweep)
+    # checkpoint, not persist: every CC sweep replans against the edge relation, and
     # with a persisted python-kernel lineage each AQE replan dragged
     # the full shingle-pair cached plan along — the sweep map stages
     # ran ~45 ms/task of zero-CPU wall. The eager checkpoint is a flat
@@ -896,15 +1169,7 @@ def embedding_cosine_pairs(
 @query(
     "cross_source_duplication",
     oracle=f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -963,15 +1228,7 @@ def cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dup_cluster_size_histogram",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH RECURSIVE sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -1025,7 +1282,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: per-pair miss probability is (1−(1−(1−J^8))^16)… ≈ 0.6% at exactly
 #: J=0.85 and <0.02% at J≥0.9, so misses are EXPECTED once the pair
 #: count is large (measured 97 ppm on a 236k-pair sf1-equivalent
-#: corpus, r7 SCALE.md) — a zero-miss verdict is statistically unsound
+#: corpus, SCALE.md) — a zero-miss verdict is statistically unsound
 #: at scale while 1000 ppm (0.1%) still sits 100× below any broken-
 #: banding regime. floor(budget·n/1e6) is 0 for n < 1000, so the gate
 #: stays exactly zero-miss at driver-sweep scales.
@@ -1035,15 +1292,7 @@ LSH_MISS_BUDGET_PPM = 1000
 @query(
     "lsh_recall_audit",
     oracle=f"""
-    WITH sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -1085,15 +1334,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "seed_label_closure",
     oracle=f"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(0, greatest(len(string_split(text, ' ')) - {SHINGLE_N}, 0) + 1),
-                   i -> array_to_string(list_slice(string_split(text, ' '),
-                                                   CAST(i + 1 AS INT),
-                                                   CAST(i + {SHINGLE_N} AS INT)), ' ')
-               )) AS shingles
-        FROM documents),
+    WITH RECURSIVE sh AS {_SHINGLE_SETS_SQL},
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     pairs AS (
@@ -1144,8 +1385,6 @@ def seed_label_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") % 10 == 0)
         .select("doc_id", F.col("lang").alias("seed_label"))
     )
-    from pyspark.sql import Window as W
-
     seeded = comp.join(seeds, "doc_id")
     w = W.partitionBy("cluster_id").orderBy("doc_id")
     comp_label = (
@@ -1238,8 +1477,7 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the projection because th is non-cheap and multiply-used)
         .select("doc_id", F.sha2(key, 256).alias("kh"), tok_hash.alias("th"))
         .select("doc_id", "kh", _simhash_fp_col(F.col("th")).alias("fp"))
-        # localCheckpoint, NOT persist (optimization round 14): the
-        # persisted form kept an ArrowEvalPython node above the
+        # localCheckpoint, NOT persist: the persisted form kept an ArrowEvalPython node above the
         # InMemoryTableScan in every downstream plan — each of the
         # ~16 AQE stage jobs of this audit re-ran the vote kernel on
         # the cached token hashes (profiled: 3 tasks × ~150 ms of
@@ -1291,4 +1529,63 @@ def simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "zero_hamming_complete"
             ),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# benchmark decontamination
+
+#: decontamination: n-gram order and overlap threshold
+DECON_N = 5
+DECON_MIN_HITS = 3
+
+
+@query(
+    "decontaminate_ngram",
+    oracle=f"""
+    WITH eval_docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        WHERE doc_id < 50),
+    train_docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        WHERE doc_id >= 50),
+    eval_grams AS (
+        SELECT DISTINCT array_to_string(list_slice(toks, i, i + {DECON_N - 1}), ' ') AS gram
+        FROM eval_docs, unnest(generate_series(1, len(toks) - {DECON_N - 1})) AS t(i)),
+    train_grams AS (
+        SELECT DISTINCT doc_id,
+               array_to_string(list_slice(toks, i, i + {DECON_N - 1}), ' ') AS gram
+        FROM train_docs, unnest(generate_series(1, len(toks) - {DECON_N - 1})) AS t(i))
+    SELECT t.doc_id, COUNT(*) AS n_shared_grams
+    FROM train_grams t JOIN eval_grams e USING (gram)
+    GROUP BY t.doc_id
+    HAVING COUNT(*) >= {DECON_MIN_HITS}
+    """,
+    tags=("pipeline", "dedup", "decontamination", "llm-pipeline"),
+)
+def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination — the pre-training hygiene pass that
+    flags training documents sharing ≥k distinct n-grams with an
+    evaluation set. Eval docs (tiny by construction) explode to a
+    DISTINCT 5-gram set that Catalyst broadcasts; the training corpus
+    explodes to (doc_id, gram) pairs that join against it — no shuffle
+    of the corpus side, candidates travel as ids+grams only. At 100 TB
+    the eval-gram set stays benchmark-sized (MBs), so the broadcast
+    pattern holds at any corpus scale."""
+    d = load_table(spark, sf_dir, "documents")
+    eval_grams = (
+        word_ngram_rows(d.where(F.col("doc_id") < 50), DECON_N)
+        .select("gram")
+        .distinct()
+    )
+    # join RAW train grams against the broadcast and dedup only the
+    # survivors (countDistinct): the corpus-wide (doc_id, gram)
+    # dropDuplicates shuffle this replaces is the whole training set's
+    # n-grams — post-join it's just the contaminated candidates.
+    train_grams = word_ngram_rows(d.where(F.col("doc_id") >= 50), DECON_N)
+    return (
+        train_grams.join(F.broadcast(eval_grams), "gram")
+        .groupBy("doc_id")
+        .agg(F.countDistinct("gram").alias("n_shared_grams"))
+        .where(F.col("n_shared_grams") >= DECON_MIN_HITS)
     )

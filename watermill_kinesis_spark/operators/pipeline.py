@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -84,6 +85,58 @@ def train_test_split_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
             F.countDistinct("lang").alias("n_langs"),
+        )
+    )
+
+
+@query(
+    "corpus_shuffle_hash",
+    oracle="""
+    SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS shuffle_key,
+           ROW_NUMBER() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+               AS shuffle_pos
+    FROM documents
+    WHERE doc_id < 2000
+    """,
+    tags=("pipeline", "sampling", "llm-pipeline"),
+)
+def corpus_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic global shuffle for training order: order by a
+    cryptographic hash of the document id — statistically a random
+    permutation, yet identical on every engine, run, and cluster size
+    (rand()-based shuffles are neither reproducible nor safe under task
+    retries). The global position is assigned WITHOUT a single-partition
+    window: md5's first byte range-buckets rows into 256 fixed,
+    data-independent ranges; each bucket numbers its rows in parallel,
+    and per-bucket offsets (a 256-row driver-side cumsum — constant in
+    corpus size) lift local numbers to global positions. At 100 TB,
+    widen to more hex chars for more buckets; no sampling, no skew (the
+    hash is uniform by construction)."""
+    d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 2000)
+    key = F.md5(F.col("doc_id").cast("string"))
+    bucket = F.conv(F.substring(key, 1, 2), 16, 10).cast("int")
+    rows = d.select(
+        "doc_id", key.alias("shuffle_key"), bucket.alias("bucket")
+    )
+    w = W.partitionBy("bucket").orderBy("shuffle_key", "doc_id")
+    numbered = rows.withColumn("rn", F.row_number().over(w))
+    counts = sorted(
+        (r.bucket, r.n)
+        for r in rows.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
+    )
+    offsets, acc = [], 0
+    for b, n in counts:
+        offsets.append((b, acc))
+        acc += n
+    off = F.broadcast(
+        local_relation(numbered.sparkSession, offsets, "bucket int, offset long")
+    )
+    return (
+        numbered.join(off, "bucket")
+        .select(
+            "doc_id",
+            "shuffle_key",
+            (F.col("offset") + F.col("rn")).alias("shuffle_pos"),
         )
     )
 

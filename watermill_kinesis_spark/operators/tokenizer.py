@@ -57,33 +57,6 @@ def word_vocab(docs: DataFrame, cap: int = BPE_VOCAB_CAP) -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """Frequency-weighted adjacent-pair counts over the symbol arrays.
-    NOTE: counts every occurrence (a word `aaa` contributes (a,a)
-    twice), matching the standard trainer's counting."""
-    pairs = vocab.select(
-        "freq",
-        F.explode(
-            F.expr(
-                """
-                CASE WHEN size(symbols) < 2
-                     THEN CAST(array() AS array<struct<left:string,right:string>>)
-                     ELSE transform(sequence(1, size(symbols) - 1),
-                                    i -> struct(element_at(symbols, i) AS left,
-                                                element_at(symbols, i + 1) AS right))
-                END
-                """
-            )
-        ).alias("p"),
-        # the CASE guard matters: Spark's sequence(1, 0) DESCENDS
-        # ([1, 0]), so an unguarded transform on a 1-symbol word would
-        # read element_at(symbols, 2) and throw
-    )
-    return pairs.groupBy("p.left", "p.right").agg(
-        F.sum("freq").alias("pair_freq")
-    )
-
-
 def _apply_merge(vocab: DataFrame, left: str, right: str) -> DataFrame:
     """Greedy left-to-right non-overlapping application of one merge,
     as a pure SQL fold: walk the symbols, and whenever the running
@@ -118,15 +91,15 @@ def train_bpe_merges(
     """Learn ``n_merges`` BPE merges; returns
     ``[(rank, left, right, pair_freq), ...]`` in learned order.
 
-    Re-planned in optimization round 13 (guide §1.2 — fix the
-    distributed algorithm first): the merge loop runs over the CAPPED
+    Planned as a driver loop (guide §1.2 — fix the distributed
+    algorithm first): the merge loop runs over the CAPPED
     word-frequency vocabulary, a ≤``cap``-row relation at ANY corpus
-    size — a model artifact, not data. The previous spelling iterated
-    it on the cluster anyway: 40 merges × (vocab-wide pair aggregate +
+    size — a model artifact, not data. Iterating it on the cluster
+    would cost 40 merges × (vocab-wide pair aggregate +
     TakeOrdered collect + a fold-expression rewrite + localCheckpoint)
     ≈ 80 scheduler round-trips per training run, all to transform 2000
-    rows. Now the corpus-scale work — the word-count aggregate — is
-    the one distributed pass it always was, the capped vocabulary is
+    rows. Instead the corpus-scale work — the word-count aggregate — is
+    the one distributed pass, the capped vocabulary is
     collected once (bounded by ``cap``, the kcenter/kmeans
     "big data, small model" contract), and the merge iterations run
     driver-local with IDENTICAL semantics: frequency-weighted

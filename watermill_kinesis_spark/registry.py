@@ -24,20 +24,14 @@ _OPERATOR_MODULES = (
     "watermill_kinesis_spark.operators.messages",
     "watermill_kinesis_spark.operators.custom_source",
     "watermill_kinesis_spark.operators.relational",
-    "watermill_kinesis_spark.operators.relational2",
-    "watermill_kinesis_spark.operators.relational3",
-    "watermill_kinesis_spark.operators.relational4",
-    "watermill_kinesis_spark.operators.relational5",
     "watermill_kinesis_spark.operators.windows",
     "watermill_kinesis_spark.operators.udf",
     "watermill_kinesis_spark.operators.formats",
     "watermill_kinesis_spark.operators.dedup",
     "watermill_kinesis_spark.operators.similarity",
-    "watermill_kinesis_spark.operators.similarity2",
     "watermill_kinesis_spark.operators.graph",
     "watermill_kinesis_spark.operators.text",
     "watermill_kinesis_spark.operators.multimodal",
-    "watermill_kinesis_spark.operators.multimodal2",
     "watermill_kinesis_spark.operators.pipeline",
     "watermill_kinesis_spark.operators.pipeline2",
     "watermill_kinesis_spark.operators.analytics",
@@ -59,7 +53,6 @@ _OPERATOR_MODULES = (
     "watermill_kinesis_spark.operators.streaming_batch",
     "watermill_kinesis_spark.operators.tokenizer",
     "watermill_kinesis_spark.operators.evaluation",
-    "watermill_kinesis_spark.operators.evaluation2",
     "watermill_kinesis_spark.operators.retrieval",
 )
 
@@ -86,13 +79,13 @@ _REGISTRY: dict[str, QuerySpec] = {}
 #: sampling). Queries not listed here follow in registration order;
 #: nothing is hidden — ``all_specs`` always returns the full registry.
 _PRIORITY: tuple[str, ...] = (
-    # ---- Rotation (round 13): STALENESS ordering, regenerated by
-    # tools/gen_rotation.py from CORRECTNESS_r01-r12 (last-green
-    # full-pass round per oracle-backed entry; see that script's
-    # docstring for the policy: round-changed entries first, then
+    # ---- Rotation: STALENESS ordering, regenerated by
+    # tools/gen_rotation.py from the CORRECTNESS_r*.json records
+    # (last-green full-pass run per oracle-backed entry; see that
+    # script's docstring for the policy: changed entries first, then
     # stalest-first with ties keeping prior relative order, then
     # rows-only entries at the back in prior order). Regenerate
-    # each round:
+    # after each verification run:
     #   python tools/gen_rotation.py --patch --changed <names...>
     # ---- ROTATION BODY START (gen_rotation.py) ----
     "approx_distinct",

@@ -194,3 +194,44 @@ def fanned_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents").repartition(
         adaptive_partitions(spark, sf_dir, "documents", expand=10), "doc_id"
     )
+
+
+def embedding_vectors(
+    spark: SparkSession,
+    sf_dir: str,
+    distribute: bool = False,
+    fixed: bool = False,
+) -> DataFrame:
+    """``embeddings`` as ``(vec_id, emb array<double>, …)``: the other
+    columns (``label`` in the testdata table) ride along.
+    ``distribute=True`` repartitions by vec_id for operators that do
+    CPU-bound per-row kernel work over the whole corpus (64 LSH
+    projections per row, the iterative k-means / k-center / PCA passes);
+    it is left off for broadcast-probe shapes, where the extra shuffle
+    costs more than it buys.
+
+    The partition count is ``adaptive_partitions`` of the on-disk size:
+    the iterative fits run ~10 Python-kernel stages per call, and a
+    32-partition layout of a small corpus pays 32 × ~20 ms of
+    Python-task fixed cost per stage for microseconds of BLAS work
+    (measured 5.2 s → 3.3 s on the k-center audit at sf0.1), while a
+    real corpus still reaches defaultParallelism. ``fixed=True`` keeps
+    the defaultParallelism layout for the one consumer
+    (similarity_ann_pq) whose batch-local candidate pool makes its
+    approximate OUTPUT depend on the batch layout."""
+    from pyspark.sql import functions as F
+
+    t = load_table(spark, sf_dir, "embeddings")
+    e = t.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("emb"),
+        *[c for c in t.columns if c not in ("vec_id", "embedding")],
+    )
+    if distribute:
+        n = (
+            spark.sparkContext.defaultParallelism
+            if fixed
+            else adaptive_partitions(spark, sf_dir, "embeddings")
+        )
+        e = e.repartition(n, "vec_id")
+    return e

@@ -14,9 +14,9 @@ module supplies the semantics a Spark engine adds on top:
                               (``dropDuplicatesWithinWatermark`` keeps
                               state bounded; the reference would
                               redeliver duplicates to the app)
-- ``tumbling / sliding / session`` window aggregations over messages
-  (same expressions the batch layer verifies against the oracle in
-  operators/windows.py)
+
+Window aggregations over messages use the expressions the batch layer
+verifies against the oracle in operators/windows.py.
 """
 
 from __future__ import annotations
@@ -56,12 +56,3 @@ def dedup_by_uuid(
         )
     return messages.dropDuplicates(["uuid"])
 
-
-def tumbling_counts(
-    messages: DataFrame, window: str = "1 hour", ts_col: str = "event_time"
-) -> DataFrame:
-    return (
-        messages.groupBy(F.window(ts_col, window))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), "n")
-    )
