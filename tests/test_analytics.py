@@ -1,5 +1,7 @@
-"""Semantics + plan tests for the third-wave analytics operators
-(operators/analytics.py)."""
+"""Semantics + plan tests for event-time operators (windows: gap-fill,
+z-score anomalies, islands, funnels, retention), text (repetition,
+n-gram counts), pipeline (domain mix), relational (merge/upsert) and
+frequency (mergeable HLL sketch)."""
 
 from __future__ import annotations
 

@@ -1,4 +1,6 @@
-"""Invariant tests for the wave-4 analytics operators (analytics2.py).
+"""Invariant tests for relational (histogram, argmax), windows
+(time-weighted average, SCD2, percentile windows), text (unigram
+score) and dedup (prefix and capped containment) operators.
 
 The DuckDB oracle pins exact values; these tests pin the *semantics*
 that the oracle can't express as a hash — structural invariants that
@@ -6,8 +8,8 @@ must hold for any input."""
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.analytics2 import HIST_BUCKETS
 from watermill_kinesis_spark.operators.dedup import CONTAIN_T
+from watermill_kinesis_spark.operators.relational import HIST_BUCKETS
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 

@@ -1,4 +1,5 @@
-"""Invariant tests for the wave-5 analytics operators (analytics3.py).
+"""Invariant tests for relational (mode, bitwise/bool, skew/kurtosis
+aggregates) and windows (running distinct, EWMA, as-of joins) operators.
 
 The DuckDB oracle pins exact values; these tests pin the semantics the
 hash can't express — structural invariants that must hold for any input."""
@@ -7,7 +8,7 @@ import math
 
 from pyspark.sql import Window as W, functions as F
 
-from watermill_kinesis_spark.operators.analytics3 import ASOF_TOLERANCE_DAYS, EWMA_K
+from watermill_kinesis_spark.operators.windows import ASOF_TOLERANCE_DAYS, EWMA_K
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 

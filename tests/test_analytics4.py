@@ -1,10 +1,13 @@
-"""Invariant tests for the wave-6 analytics operators (analytics4.py)."""
+"""Invariant tests for windows (LOCF, period-over-period, transitions),
+formats (XML shred, z-order), relational (collation, observe metrics,
+table diff), evaluation (crosstab, correlation matrix) and multimodal
+(audio energy) operators."""
 
 import math
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.analytics4 import LOCF_MISSING_BELOW
+from watermill_kinesis_spark.operators.windows import LOCF_MISSING_BELOW
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -88,7 +91,7 @@ def test_collation_group_folds_case_variants(spark, sf_dir):
 
 
 def test_zorder_buckets_confine_key_residues(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics4 import ZORDER_BITS
+    from watermill_kinesis_spark.operators.formats import ZORDER_BITS
 
     rows = queries()["zorder_layout"](spark, sf_dir).collect()
     assert rows
@@ -212,7 +215,7 @@ def test_transition_matrix_rows_are_distributions(spark, sf_dir):
 
 
 def test_table_diff_classes_partition_the_key_space(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics4 import diff_bounds
+    from watermill_kinesis_spark.operators.relational import diff_bounds
 
     rows = {
         r["change_type"]: r

@@ -142,7 +142,7 @@ def test_tiff_malformed_raises_value_error():
 
 
 def test_reservoir_sample_exactly_k_per_source(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline6 import (
+    from watermill_kinesis_spark.operators.pipeline import (
         RESERVOIR_K,
         reservoir_sample_per_source,
     )
@@ -166,7 +166,7 @@ def test_reservoir_sample_exactly_k_per_source(spark, sf_dir):
 
 
 def test_packing_next_fit_semantics(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline6 import (
+    from watermill_kinesis_spark.operators.pipeline import (
         BIN_CAPACITY,
         packing_next_fit,
     )

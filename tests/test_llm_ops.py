@@ -118,9 +118,7 @@ def test_hll_merge_audit_matches_direct_daily_estimate(spark, sf_dir):
     """r7: the merge twin's verdict must be 1 on every day, and the
     hourly→daily union path must agree with sketching each day
     directly (the mergeability property itself)."""
-    from watermill_kinesis_spark.operators.analytics import (
-        hll_merge_accuracy_audit,
-    )
+    from watermill_kinesis_spark.operators.frequency import hll_merge_accuracy_audit
     from watermill_kinesis_spark.sources.tables import load_table as _lt
 
     rows = hll_merge_accuracy_audit(spark, sf_dir).collect()

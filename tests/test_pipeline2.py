@@ -1,5 +1,6 @@
-"""Tests for the table catalog (memoization) and the second-wave
-pipeline operators."""
+"""Tests for the table catalog (memoization) and for the quality-filter
+funnel (pipeline), PII redaction (text), embedding normalization
+(similarity) and incremental rollup (windows)."""
 
 from __future__ import annotations
 

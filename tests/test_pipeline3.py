@@ -1,8 +1,9 @@
-"""Invariant tests for pipeline wave 3 + the SQL-text interface."""
+"""Invariant tests for concat-chunk packing (pipeline), hash-keyed
+exact dedup (dedup) and the SQL-text interface (sqltext)."""
 
 from pyspark.sql import Window as W, functions as F
 
-from watermill_kinesis_spark.operators.pipeline3 import PACK_BUDGET
+from watermill_kinesis_spark.operators.pipeline import PACK_BUDGET
 from watermill_kinesis_spark.registry import queries
 
 

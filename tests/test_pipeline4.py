@@ -1,11 +1,13 @@
-"""Invariant tests for the wave-5 pipeline operators (pipeline4.py)."""
+"""Invariant tests for Bloom decontamination and paragraph dedup
+(dedup), temperature mixing (pipeline) and binaryFile ingest
+(multimodal)."""
 
 import math
 
 from pyspark.sql import functions as F
 
 from watermill_kinesis_spark.functions.textexpr import word_ngram_rows
-from watermill_kinesis_spark.operators.pipeline4 import BLOCK_TOKENS, BLOOM_N
+from watermill_kinesis_spark.operators.dedup import BLOCK_TOKENS, BLOOM_N
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -92,7 +94,7 @@ def test_bloom_pack_probe_contract_property(spark):
     at every geometry the audit can derive."""
     from hypothesis import given, settings, strategies as st
 
-    from watermill_kinesis_spark.operators.pipeline4 import (
+    from watermill_kinesis_spark.operators.dedup import (
         BLOOM_BITS,
         _bloom_hit,
         _bloom_words,
@@ -129,7 +131,7 @@ def test_bloom_distributed_probe_matches_dense_literal(spark, monkeypatch):
     over members (all hit), a disjoint probe set (dense path decides),
     and a NULL key (both paths probe the constant empty-hash
     positions)."""
-    import watermill_kinesis_spark.operators.pipeline4 as p4
+    import watermill_kinesis_spark.operators.dedup as dedup
 
     members = spark.createDataFrame(
         [(f"key-{i}",) for i in range(200)], "key string"
@@ -140,17 +142,17 @@ def test_bloom_distributed_probe_matches_dense_literal(spark, monkeypatch):
         + [(None,)],
         "key string",
     )
-    bits = p4.BLOOM_BITS
-    words = p4._bloom_words(members, "key", bits)
-    dense_df = p4._bloom_hit(words, probes, "key", bits)
+    bits = dedup.BLOOM_BITS
+    words = dedup._bloom_words(members, "key", bits)
+    dense_df = dedup._bloom_hit(words, probes, "key", bits)
     # schema contract (r8 ADVICE): both strategies return exactly
     # probed-columns + hit — no h{i}/w{i} scratch may leak
     assert dense_df.columns == probes.columns + ["hit"]
     dense = {
         r["key"]: r["hit"] for r in dense_df.select("key", "hit").collect()
     }
-    monkeypatch.setattr(p4, "BLOOM_LITERAL_BUDGET_BYTES", 0)
-    dist_df = p4._bloom_hit(words, probes, "key", bits)
+    monkeypatch.setattr(dedup, "BLOOM_LITERAL_BUDGET_BYTES", 0)
+    dist_df = dedup._bloom_hit(words, probes, "key", bits)
     assert dist_df.columns == probes.columns + ["hit"]
     dist = {
         r["key"]: r["hit"] for r in dist_df.select("key", "hit").collect()
@@ -159,7 +161,7 @@ def test_bloom_distributed_probe_matches_dense_literal(spark, monkeypatch):
     assert all(dense[f"key-{i}"] for i in range(200))
     # the distributed plan must not carry the packed bloom literal
     plan = (
-        p4._bloom_hit(words, probes, "key", bits)
+        dedup._bloom_hit(words, probes, "key", bits)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

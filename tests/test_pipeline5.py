@@ -1,14 +1,12 @@
-"""Invariant tests for the wave-7 pipeline operators (pipeline5.py)."""
+"""Invariant tests for token-budget allocation and blocklist filtering
+(pipeline) and PMI collocations (text)."""
 
 import math
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.pipeline5 import (
-    PMI_MIN_COUNT,
-    PMI_TOP_N,
-    TOKEN_BUDGET,
-)
+from watermill_kinesis_spark.operators.pipeline import TOKEN_BUDGET
+from watermill_kinesis_spark.operators.text import PMI_MIN_COUNT, PMI_TOP_N
 from watermill_kinesis_spark.registry import queries
 from watermill_kinesis_spark.sources.tables import load_table
 

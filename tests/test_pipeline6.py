@@ -1,21 +1,26 @@
-"""Pipeline wave 6 invariants — semantic guarantees the row-hash
-oracle can't express (the oracle pins values; these pin meaning)."""
+"""Invariants for winnowing, content-defined chunking, n-gram novelty
+and substring excision (dedup), length trim and shard balance
+(pipeline) and vocabulary coverage (text) — semantic guarantees the
+row-hash oracle can't express (the oracle pins values; these pin
+meaning)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.pipeline6 import (
+from watermill_kinesis_spark.operators.dedup import (
     NOVELTY_N,
     WINNOW_K,
     WINNOW_W,
     chunk_cdc_rolling,
-    length_trim_percentile,
     ngram_novelty_score,
-    shard_balance_audit,
-    vocab_coverage_topk,
     winnowing_fingerprints,
 )
+from watermill_kinesis_spark.operators.pipeline import (
+    length_trim_percentile,
+    shard_balance_audit,
+)
+from watermill_kinesis_spark.operators.text import vocab_coverage_topk
 from watermill_kinesis_spark.sources.tables import load_table
 
 
@@ -176,7 +181,7 @@ def test_exact_substring_winnowing_superset_guarantee(spark, sf_dir):
     pair sharing a >=L-char window (the winnowing guarantee) — checked
     here against the direct gram join the oracle also uses, and the
     final result must equal that direct join exactly."""
-    from watermill_kinesis_spark.operators.pipeline6 import (
+    from watermill_kinesis_spark.operators.dedup import (
         SUB_L,
         SUB_MAX_DOC,
         _char_gram_hashes,
@@ -252,7 +257,7 @@ def test_excise_census_and_text_match_bruteforce(spark, sf_dir):
     """The winnowing-accelerated excision must equal the naive global
     keep-first reference on the real sf0.001 corpus — census AND the
     materialized kept text, byte for byte."""
-    from watermill_kinesis_spark.operators.pipeline6 import (
+    from watermill_kinesis_spark.operators.dedup import (
         SUB_L,
         dedup_substring_excise,
         dedup_substring_excise_text,
@@ -288,7 +293,7 @@ def test_excise_edge_cases_handcrafted(spark, monkeypatch):
     repeats mark only the later occurrence, sub-L docs and unique docs
     pass through verbatim, and overlapping dup windows merge into one
     maximal span."""
-    import watermill_kinesis_spark.operators.pipeline6 as p6
+    import watermill_kinesis_spark.operators.dedup as dedup
 
     base = "The quick brown fox jumps over the lazy dog while zebras watch."
     uniq = "Completely original content with no repeats anywhere inside it!"
@@ -304,12 +309,12 @@ def test_excise_edge_cases_handcrafted(spark, monkeypatch):
     df = spark.createDataFrame(
         [(k, v) for k, v in texts.items()], "doc_id long, text string"
     )
-    monkeypatch.setattr(p6, "load_table", lambda _s, _d, _t: df)
-    ref = _excise_reference(texts, p6.SUB_L)
-    census = {r.doc_id: r for r in p6.dedup_substring_excise(spark, "_").collect()}
+    monkeypatch.setattr(dedup, "load_table", lambda _s, _d, _t: df)
+    ref = _excise_reference(texts, dedup.SUB_L)
+    census = {r.doc_id: r for r in dedup.dedup_substring_excise(spark, "_").collect()}
     kept = {
         r.doc_id: r.kept_text
-        for r in p6.dedup_substring_excise_text(spark, "_").collect()
+        for r in dedup.dedup_substring_excise_text(spark, "_").collect()
     }
     for doc_id, want in ref.items():
         r = census[doc_id]

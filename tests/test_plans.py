@@ -151,7 +151,7 @@ def test_q21_single_pass_no_self_join_explosion(spark, sf_dir):
 def test_tfidf_df_table_broadcasts(spark, sf_dir):
     """The vocabulary-sized document-frequency side must broadcast;
     only token aggregations may shuffle."""
-    from watermill_kinesis_spark.operators.pipeline import tfidf_top_terms
+    from watermill_kinesis_spark.operators.text import tfidf_top_terms
 
     plan = plan_of(tfidf_top_terms(spark, sf_dir))
     assert plan.count("BroadcastExchange") >= 2  # df_ + n_docs scalar
@@ -250,7 +250,7 @@ def test_bloom_probe_filters_before_confirm_join(spark, sf_dir):
     array literal) must sit below the confirm join on the corpus side
     — candidates shrink BEFORE any join — and the confirm join must
     broadcast the eval-gram set, never shuffle the corpus."""
-    from watermill_kinesis_spark.operators.pipeline4 import decontaminate_bloom
+    from watermill_kinesis_spark.operators.dedup import decontaminate_bloom
 
     plan = plan_of(decontaminate_bloom(spark, sf_dir))
     assert "shiftright" in plan  # the probe expressions survived codegen
@@ -264,7 +264,7 @@ def test_ewma_single_shuffle(spark, sf_dir):
     spec must share one shuffle on the key and one Window node."""
     import re
 
-    from watermill_kinesis_spark.operators.analytics3 import ewma_halflife
+    from watermill_kinesis_spark.operators.windows import ewma_halflife
 
     plan = plan_of(ewma_halflife(spark, sf_dir))
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
@@ -275,7 +275,7 @@ def test_mode_agg_prunes_through_window_group_limit(spark, sf_dir):
     """mode_agg: the rank-1 filter over the counts aggregate must
     compile to WindowGroupLimit (rows pruned before the window sort
     materializes full per-group lists)."""
-    from watermill_kinesis_spark.operators.analytics3 import mode_agg
+    from watermill_kinesis_spark.operators.relational import mode_agg
 
     plan = plan_of(mode_agg(spark, sf_dir))
     assert "WindowGroupLimit" in plan
@@ -284,7 +284,7 @@ def test_mode_agg_prunes_through_window_group_limit(spark, sf_dir):
 def test_levenshtein_join_is_equi_not_cartesian(spark, sf_dir):
     """dedup_levenshtein: candidate generation must be an equi-join on
     the prefix block — never a nested-loop/cartesian over documents."""
-    from watermill_kinesis_spark.operators.pipeline4 import dedup_levenshtein
+    from watermill_kinesis_spark.operators.dedup import dedup_levenshtein
 
     plan = plan_of(dedup_levenshtein(spark, sf_dir))
     assert "CartesianProduct" not in plan
@@ -296,7 +296,7 @@ def test_zorder_single_aggregate_shuffle(spark, sf_dir):
     the |buckets| aggregate, with map-side partial aggregation."""
     import re
 
-    from watermill_kinesis_spark.operators.analytics4 import zorder_layout
+    from watermill_kinesis_spark.operators.formats import zorder_layout
 
     plan = plan_of(zorder_layout(spark, sf_dir))
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
@@ -542,7 +542,7 @@ def test_big_literal_guard_catches_prefix_bloom_shape(spark, sf_dir):
     distributed-probe plan (no literal at all)."""
     from tools.plan_audit import BIG_LITERAL_ELEMS, ITERATIVE, _bad_big_literal
 
-    import watermill_kinesis_spark.operators.pipeline4 as p4
+    import watermill_kinesis_spark.operators.dedup as dedup
     from watermill_kinesis_spark.registry import all_specs
 
     def plan(df):
@@ -569,13 +569,13 @@ def test_big_literal_guard_catches_prefix_bloom_shape(spark, sf_dir):
 
     # over-budget strategy: distributed probe, zero plan literal
     members = spark.range(64).select(F.col("id").cast("string").alias("key"))
-    words = p4._bloom_words(members, "key", p4.BLOOM_BITS)
-    orig = p4.BLOOM_LITERAL_BUDGET_BYTES
-    p4.BLOOM_LITERAL_BUDGET_BYTES = 0
+    words = dedup._bloom_words(members, "key", dedup.BLOOM_BITS)
+    orig = dedup.BLOOM_LITERAL_BUDGET_BYTES
+    dedup.BLOOM_LITERAL_BUDGET_BYTES = 0
     try:
-        dist_plan = plan(p4._bloom_hit(words, probe, "key", p4.BLOOM_BITS))
+        dist_plan = plan(dedup._bloom_hit(words, probe, "key", dedup.BLOOM_BITS))
     finally:
-        p4.BLOOM_LITERAL_BUDGET_BYTES = orig
+        dedup.BLOOM_LITERAL_BUDGET_BYTES = orig
     assert not _bad_big_literal(dist_plan)
     assert "element_at" not in dist_plan
 
@@ -591,9 +591,7 @@ def test_bloom_literal_budget_inside_big_literal_threshold(spark):
     flag would make mid-size blooms trip the repo's own gate)."""
     from tools.plan_audit import BIG_LITERAL_ELEMS
 
-    from watermill_kinesis_spark.operators.pipeline4 import (
-        BLOOM_LITERAL_BUDGET_BYTES,
-    )
+    from watermill_kinesis_spark.operators.dedup import BLOOM_LITERAL_BUDGET_BYTES
 
     assert BLOOM_LITERAL_BUDGET_BYTES // 8 <= BIG_LITERAL_ELEMS
 

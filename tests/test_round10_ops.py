@@ -13,22 +13,28 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.pipeline8 import (
+from watermill_kinesis_spark.operators.dedup import (
+    ingest_dedup_delta,
+    dedup_token_savings,
+)
+from watermill_kinesis_spark.operators.evaluation import (
     BRIER_BINS,
     cramer_von_mises_lengths,
     dow_uniformity_audit,
-    ingest_dedup_delta,
     mood_median_test_langs,
-    referential_integrity_audit,
-    BURST_TOP_N,
-    CADENCE_MIN_GAPS,
     brier_decomposition_exact,
-    dedup_token_savings,
     mann_whitney_u_lengths,
+)
+from watermill_kinesis_spark.operators.relational import referential_integrity_audit
+from watermill_kinesis_spark.operators.text import (
+    BURST_TOP_N,
     token_burstiness_topk,
     unigram_tvd_sources,
-    user_cadence_regularity,
     yule_sichel_richness,
+)
+from watermill_kinesis_spark.operators.windows import (
+    CADENCE_MIN_GAPS,
+    user_cadence_regularity,
 )
 from watermill_kinesis_spark.sources.tables import load_table
 

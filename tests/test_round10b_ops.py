@@ -12,7 +12,7 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.pipeline9 import (
+from watermill_kinesis_spark.operators.evaluation import (
     STAT_CLAMP,
     ansari_bradley_dispersion,
     kruskal_wallis_lengths,
@@ -245,9 +245,7 @@ def test_binary_quant_hamming_matches_bruteforce(spark, sf_dir):
 def test_cochran_armitage_matches_bruteforce(spark, sf_dir):
     """Recompute the trend moments from a literal join and the z from
     the same exact integers with Python floats."""
-    from watermill_kinesis_spark.operators.pipeline9 import (
-        cochran_armitage_trend,
-    )
+    from watermill_kinesis_spark.operators.evaluation import cochran_armitage_trend
 
     li = {
         r.l_orderkey: r
@@ -295,9 +293,7 @@ def test_cochran_armitage_matches_bruteforce(spark, sf_dir):
 def test_mcnemar_matches_bruteforce(spark, sf_dir):
     """Rebuild the per-customer paired flags and the 2×2 cells from
     literal collections."""
-    from watermill_kinesis_spark.operators.pipeline9 import (
-        mcnemar_paired_returns,
-    )
+    from watermill_kinesis_spark.operators.evaluation import mcnemar_paired_returns
 
     order_ret: dict = defaultdict(int)
     for r in (
@@ -443,7 +439,7 @@ def test_hilbert_layout_matches_reference_curve(spark, sf_dir):
     property — consecutive d values are ALWAYS grid neighbors (the
     locality guarantee Morton order lacks) — and recompute the bucket
     stats literally."""
-    from watermill_kinesis_spark.operators.analytics4 import (
+    from watermill_kinesis_spark.operators.formats import (
         HILBERT_BITS,
         hilbert_curve_layout,
     )
@@ -503,10 +499,7 @@ def test_acf_matches_bruteforce(spark, sf_dir):
     in Python (full-series mean/variance) and compare every lag."""
     from datetime import timedelta
 
-    from watermill_kinesis_spark.operators.analytics4 import (
-        ACF_MAX_LAG,
-        acf_daily_lags,
-    )
+    from watermill_kinesis_spark.operators.windows import ACF_MAX_LAG, acf_daily_lags
 
     counts: dict = defaultdict(int)
     for r in load_table(spark, sf_dir, "events").select("ts").collect():
@@ -582,7 +575,7 @@ def test_negative_sampling_matches_bruteforce(spark, sf_dir):
     tracks (c/cmax)^0.75."""
     import hashlib
 
-    from watermill_kinesis_spark.operators.pipeline5 import (
+    from watermill_kinesis_spark.operators.pipeline import (
         NEG_DRAW_BITS,
         negative_sampling_power75,
     )
@@ -627,7 +620,7 @@ def test_feature_hashing_matches_bruteforce(spark, sf_dir):
     """Recompute the bucket census literally from md5 buckets."""
     import hashlib
 
-    from watermill_kinesis_spark.operators.pipeline5 import (
+    from watermill_kinesis_spark.operators.text import (
         FEATHASH_BUCKETS,
         feature_hashing_counts,
     )
@@ -788,9 +781,7 @@ def test_bfs_hops_matches_python_bfs(spark, sf_dir):
 def test_dod_census_matches_bruteforce(spark, sf_dir):
     """Recompute the Gorilla bucket census literally: per-user ordered
     second-floored epochs, second differences, spec buckets."""
-    from watermill_kinesis_spark.operators.analytics4 import (
-        delta_of_delta_encoding_census,
-    )
+    from watermill_kinesis_spark.operators.windows import delta_of_delta_encoding_census
 
     per_user: dict = defaultdict(list)
     for r in (
@@ -843,7 +834,7 @@ def test_dod_census_matches_bruteforce(spark, sf_dir):
 def test_kaplan_meier_matches_bruteforce(spark, sf_dir):
     """Literal per-user lifetime/censoring recompute; at-risk suffix
     sums and hazards must match, and the KM identities must hold."""
-    from watermill_kinesis_spark.operators.analytics4 import (
+    from watermill_kinesis_spark.operators.evaluation import (
         KM_CENSOR_DAYS,
         kaplan_meier_hazard,
     )
@@ -882,7 +873,7 @@ def test_sax_matches_bruteforce(spark, sf_dir):
     std z-normalization, quartile breakpoints."""
     from datetime import timedelta
 
-    from watermill_kinesis_spark.operators.analytics4 import (
+    from watermill_kinesis_spark.operators.windows import (
         SAX_WINDOW_DAYS,
         sax_symbolic_daily,
     )

@@ -12,7 +12,7 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from watermill_kinesis_spark.operators.evaluation import kendall_tau_exact
-from watermill_kinesis_spark.operators.pipeline4 import bloom_fpp_audit
+from watermill_kinesis_spark.operators.dedup import bloom_fpp_audit
 from watermill_kinesis_spark.operators.retrieval import (
     RR_SCALE,
     mrr_at_k_exact,
@@ -498,9 +498,7 @@ def test_feature_extract_census_audit_verdicts(spark, sf_dir):
 
 
 def test_winsorized_mean_matches_brute_force(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics4 import (
-        winsorized_mean_exact,
-    )
+    from watermill_kinesis_spark.operators.evaluation import winsorized_mean_exact
 
     out = {r.event_type: r for r in winsorized_mean_exact(spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
@@ -554,7 +552,7 @@ def test_quantile_disc_rank_convention():
 
 
 def test_iqr_fences_match_brute_force(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics4 import iqr_outlier_fences
+    from watermill_kinesis_spark.operators.evaluation import iqr_outlier_fences
 
     out = {r.event_type: r for r in iqr_outlier_fences(spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")

@@ -162,9 +162,7 @@ def test_bm25_matches_bruteforce(spark, sf_dir):
 def test_cusum_matches_bruteforce(spark, sf_dir):
     from collections import Counter
 
-    from watermill_kinesis_spark.operators.analytics4 import (
-        cusum_changepoint_days,
-    )
+    from watermill_kinesis_spark.operators.evaluation import cusum_changepoint_days
     from watermill_kinesis_spark.sources.tables import load_table
 
     got = {
@@ -371,7 +369,7 @@ def test_interval_islands_matches_bruteforce(spark, sf_dir):
 
 
 def test_benford_counts_match_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics3 import (
+    from watermill_kinesis_spark.operators.evaluation import (
         BENFORD_PERMILLE,
         benford_first_digit_audit,
     )
@@ -399,7 +397,7 @@ def test_benford_counts_match_bruteforce(spark, sf_dir):
 
 
 def test_funnel_matches_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.analytics4 import (
+    from watermill_kinesis_spark.operators.windows import (
         FUNNEL_WINDOW_US,
         funnel_conversion_windows,
     )
@@ -446,7 +444,7 @@ def test_funnel_matches_bruteforce(spark, sf_dir):
 
 
 def test_chunker_covers_every_token_and_keeps_tails(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline6 import (
+    from watermill_kinesis_spark.operators.text import (
         CHUNK_S,
         CHUNK_W,
         chunk_documents_stride,

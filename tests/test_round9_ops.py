@@ -11,13 +11,13 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from watermill_kinesis_spark.operators.pipeline7 import (
+from watermill_kinesis_spark.operators.evaluation import welch_ttest_lengths
+from watermill_kinesis_spark.operators.text import (
     SKIP_MIN_COUNT,
     SKIP_TOP_N,
     SKIP_W,
     simpson_diversity_tokens,
     skipgram_cooccurrence,
-    welch_ttest_lengths,
 )
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -101,10 +101,7 @@ def test_welch_t2_matches_bruteforce(spark, sf_dir):
 def test_kneser_ney_matches_bruteforce(spark, sf_dir):
     """Independent Python recompute of unigram counts, distinct bigram
     types, left/right continuation type-counts, and the permille."""
-    from watermill_kinesis_spark.operators.pipeline7 import (
-        KN_TOP_N,
-        kneser_ney_continuation,
-    )
+    from watermill_kinesis_spark.operators.text import KN_TOP_N, kneser_ney_continuation
 
     uni: Counter = Counter()
     types = set()
@@ -183,7 +180,7 @@ def test_wilson_lower_bound_matches_bruteforce(spark, sf_dir):
     """Recompute the Wilson 95% lower bound per supplier in Python and
     pin the ranking property the raw rate violates: a tiny all-return
     group must not outrank a large nearly-all-return group."""
-    from watermill_kinesis_spark.operators.pipeline7 import (
+    from watermill_kinesis_spark.operators.evaluation import (
         WILSON_TOP_N,
         wilson_lower_bound_rank,
     )
@@ -220,9 +217,7 @@ def test_wilson_lower_bound_matches_bruteforce(spark, sf_dir):
 
 
 def test_vocab_jaccard_matches_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline7 import (
-        vocab_jaccard_sources,
-    )
+    from watermill_kinesis_spark.operators.text import vocab_jaccard_sources
 
     rows = (
         load_table(spark, sf_dir, "documents")
@@ -257,9 +252,7 @@ def test_vocab_jaccard_matches_bruteforce(spark, sf_dir):
 
 
 def test_chao1_matches_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline7 import (
-        chao1_vocab_richness,
-    )
+    from watermill_kinesis_spark.operators.text import chao1_vocab_richness
 
     rows = (
         load_table(spark, sf_dir, "documents")
@@ -286,10 +279,7 @@ def test_chao1_matches_bruteforce(spark, sf_dir):
 
 
 def test_good_turing_matches_bruteforce(spark, sf_dir):
-    from watermill_kinesis_spark.operators.pipeline7 import (
-        GT_N_ROWS,
-        good_turing_discounts,
-    )
+    from watermill_kinesis_spark.operators.text import GT_N_ROWS, good_turing_discounts
 
     bi: Counter = Counter()
     for text in _texts(spark, sf_dir):
@@ -313,14 +303,14 @@ def test_welch_null_nchars_excluded_handcrafted(spark, monkeypatch):
     engines would mix populations identically) — so pin it on a
     handcrafted frame: a NULL row must not count toward n1 while the
     sums skip it."""
-    import watermill_kinesis_spark.operators.pipeline7 as p7
+    import watermill_kinesis_spark.operators.evaluation as evaluation
 
     df = spark.createDataFrame(
         [("a", 10), ("a", 20), ("a", None), ("b", 30), ("b", 40), ("b", 50)],
         "source string, n_chars int",
     )
-    monkeypatch.setattr(p7, "load_table", lambda _s, _d, _t: df)
-    got = {r.source: r for r in p7.welch_ttest_lengths(spark, "_").collect()}
+    monkeypatch.setattr(evaluation, "load_table", lambda _s, _d, _t: df)
+    got = {r.source: r for r in evaluation.welch_ttest_lengths(spark, "_").collect()}
     a, b = got["a"], got["b"]
     # the NULL row is excluded from BOTH the count and the sums
     assert (a.n1, a.s1, a.ss1) == (2, 30, 500)
@@ -334,7 +324,7 @@ def test_token_dispersion_matches_bruteforce(spark, sf_dir):
     per-doc counts (zeros included) and Gries' DP over sources."""
     from fractions import Fraction
 
-    from watermill_kinesis_spark.operators.pipeline7 import (
+    from watermill_kinesis_spark.operators.text import (
         DISP_TOP_N,
         token_dispersion_stats,
     )

@@ -12,7 +12,9 @@ scoped, and a returned DataFrame owns its checkpoints.
 - operators rank through ``functions/distscan.py``, not a hand-built
   range-slice scaffold;
 - no operator module imports another's private names, and the
-  operator-to-operator imports form no cycle.
+  operator-to-operator imports form no cycle;
+- the operator modules on disk are exactly the registered ones, one per
+  domain, and none is named by a round number.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from pathlib import Path
 import pytest
 
 from watermill_kinesis_spark.functions.scope import Scope
-from watermill_kinesis_spark.registry import queries
+from watermill_kinesis_spark.registry import _OPERATOR_MODULES, queries
 
 #: the queries that kept a module-global "latest result" slot before
 #: the scope existed
@@ -41,6 +43,28 @@ FORMER_SLOT_QUERIES = (
 OPERATORS = (
     Path(__file__).resolve().parents[1] / "watermill_kinesis_spark" / "operators"
 )
+OPERATOR_PACKAGE = "watermill_kinesis_spark.operators"
+
+
+def _module_set_problems(files: list[Path], registered: tuple[str, ...]) -> list[str]:
+    """Differences between the operator files and the registered
+    modules, plus every module named by a round number (a trailing
+    digit): a stale file the registry no longer imports, or a
+    registered module without its file, both fail."""
+    on_disk = {p.stem for p in files}
+    listed = {m.removeprefix(OPERATOR_PACKAGE + ".") for m in registered}
+    out = [f"unregistered module {m}" for m in sorted(on_disk - listed)]
+    out += [f"registered module without a file {m}" for m in sorted(listed - on_disk)]
+    out += [f"round-named module {m}" for m in sorted(on_disk | listed) if m[-1].isdigit()]
+    return out
+
+
+def _operator_files() -> list[Path]:
+    """The operator modules, checked to be exactly the registered set."""
+    files = sorted(p for p in OPERATORS.glob("*.py") if p.name != "__init__.py")
+    found = _module_set_problems(files, _OPERATOR_MODULES)
+    assert not found, "\n".join(found)
+    return files
 
 
 def _persisted(spark) -> int:
@@ -162,9 +186,7 @@ def test_operators_leave_lifetimes_to_the_scope():
     session conf; a module-global slot or an unowned cache must not come
     back. (A memoized child session's own conf — sqltext's
     ``newSession()`` — is not the caller's session and is not matched.)"""
-    files = sorted(OPERATORS.glob("*.py"))
-    assert len(files) > 30
-    found = [v for p in files for v in _violations(p)]
+    found = [v for p in _operator_files() for v in _violations(p)]
     assert not found, "\n".join(found)
 
 
@@ -218,9 +240,7 @@ def test_operators_share_one_loader_and_one_sizing_policy():
     attribute (tools/tune_fanout.py) reaches every site. No operator
     reads ``defaultParallelism``; the one fixed layout left
     (``tables.embedding_vectors(fixed=True)``) lives in ``sources/``."""
-    files = sorted(OPERATORS.glob("*.py"))
-    assert len(files) > 30
-    found = [v for p in files for v in _sizing_violations(p)]
+    found = [v for p in _operator_files() for v in _sizing_violations(p)]
     assert not found, "\n".join(found)
 
 
@@ -275,9 +295,7 @@ def test_operators_rank_through_distscan():
     ``functions/distscan.py`` (``grouped_scan``/``range_slices``), never
     from a hand-built range-slice scaffold; the only
     ``repartitionByRange`` left is the ``_auc_slice_stats`` kernel."""
-    files = sorted(OPERATORS.glob("*.py"))
-    assert len(files) > 30
-    found = [v for p in files for v in _range_violations(p)]
+    found = [v for p in _operator_files() for v in _range_violations(p)]
     assert not found, "\n".join(found)
 
 
@@ -303,9 +321,6 @@ def test_range_guard_catches_each_forbidden_form(tmp_path):
         "    return df.repartitionByRange(32, 'k')\n"
     )
     assert _range_violations(pin) == []
-
-
-OPERATOR_PACKAGE = "watermill_kinesis_spark.operators"
 
 
 def _operator_imports(path: Path) -> list[tuple[int, str, str | None]]:
@@ -380,9 +395,7 @@ def test_operator_modules_import_only_public_names_without_cycles():
     operator-to-operator import graph is acyclic: shared helpers belong
     in ``functions/`` or ``sources/``, not behind an underscore in a
     sibling module."""
-    files = sorted(p for p in OPERATORS.glob("*.py") if p.name != "__init__.py")
-    assert len(files) > 30
-    found = _layering_violations(files)
+    found = _layering_violations(_operator_files())
     assert not found, "\n".join(found)
 
 
@@ -415,3 +428,27 @@ def test_layering_guard_catches_each_forbidden_form(tmp_path):
     assert _layering_violations(sorted(tmp_path.glob("*.py"))) == [
         "a.py:1 imports b._x"
     ]
+
+
+def test_operator_modules_are_the_registered_domain_modules():
+    """Every file under ``operators/`` is a registered module and every
+    registered module has its file; modules are named by domain, never
+    by a round or wave number."""
+    assert len(_operator_files()) == len(_OPERATOR_MODULES)
+
+
+def test_module_set_guard_catches_stale_and_round_named_modules(tmp_path):
+    for name in ("text", "text2", "windows"):
+        (tmp_path / f"{name}.py").write_text("")
+    registered = tuple(f"{OPERATOR_PACKAGE}.{m}" for m in ("text", "relational"))
+    found = _module_set_problems(sorted(tmp_path.glob("*.py")), registered)
+    assert found == [
+        "unregistered module text2",
+        "unregistered module windows",
+        "registered module without a file relational",
+        "round-named module text2",
+    ]
+    (tmp_path / "text2.py").unlink()
+    (tmp_path / "windows.py").unlink()
+    (tmp_path / "relational.py").write_text("")
+    assert _module_set_problems(sorted(tmp_path.glob("*.py")), registered) == []

@@ -19,19 +19,19 @@ from watermill_kinesis_spark.sources import tables
 
 #: (table, expand) of each former ``adaptive_partitions`` site
 KERNEL_SITES = (
-    ("events", 10),  # messages: events replay; analytics4 sessionize
+    ("events", 10),  # messages: events replay; windows arrival inversions
     ("documents", 7),  # messages, dedup shingle rows, frequency
     ("lineitem", 2),  # windows
     ("documents", 10 * 5),  # dedup shingle exchanges
     ("documents", 10),  # fanned_documents (dedup._simhash_fps before)
     ("documents", 2),  # dedup simhash audit
-    ("documents", 14),  # pipeline7
-    ("documents", 75),  # pipeline4
+    ("documents", 14),  # text skip-gram co-occurrence
+    ("documents", 75),  # dedup bloom decontamination
     ("lineitem", 0.5),  # graph (two sites)
     ("embeddings", 1),  # tables.embedding_vectors
 )
 
-#: the four pre-explode doc repartitions of pipeline6
+#: the four pre-explode doc repartitions of dedup's substring family
 GRAM_SITE = ("documents", 10 * 24)
 
 SCALES = ("sf0.001", "sf0.01", "sf0.1")

@@ -60,17 +60,15 @@ def test_bpe_merges_match_reference_trainer(spark, sf_dir):
 
 def test_bpe_greedy_nonoverlap_run_of_three(spark):
     """`aaa` under merge (a,a) must become [aa, a] — greedy
-    left-to-right, non-overlapping — in the SQL fold exactly as in the
-    reference formulation."""
-    from pyspark.sql import Row, functions as F
+    left-to-right, non-overlapping — in the trainer exactly as in the
+    reference formulation, so the second merge learned is (aa, a). A
+    right-to-left or overlapping application would learn (a, aa)."""
+    from pyspark.sql import Row
 
-    from watermill_kinesis_spark.operators.tokenizer import _apply_merge
+    from watermill_kinesis_spark.operators.tokenizer import train_bpe_merges
 
-    df = spark.createDataFrame(
-        [Row(word="aaa", freq=1, symbols=["a", "a", "a"])]
-    )
-    out = _apply_merge(df, "a", "a").select("symbols").collect()[0].symbols
-    assert out == ["aa", "a"]
+    docs = spark.createDataFrame([Row(doc_id=0, text="aaa aaa")])
+    assert train_bpe_merges(docs) == [(0, "a", "a", 4), (1, "aa", "a", 2)]
 
 
 def test_bpe_encode_agrees_with_sequential_merge_application():

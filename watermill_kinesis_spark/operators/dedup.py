@@ -1,5 +1,10 @@
 """Deduplication operators — exact and near-dup — over ``documents`` /
-``embeddings`` (north-star LLM-pipeline layer).
+``embeddings`` (north-star LLM-pipeline layer): exact (text- and
+hash-keyed, URL-canonical, paragraph-level), near-dup (n-gram Jaccard,
+containment, MinHash, SimHash, Levenshtein, embedding cosine),
+exact-substring detection and excision (winnowing fingerprints,
+content-defined chunks, n-gram novelty), Bloom-filter benchmark
+decontamination, and the dedup accounting and recall audits.
 
 Scale design (the whole point of these):
 - NOTHING does an all-pairs O(n²) comparison except the oracle-verified
@@ -1118,7 +1123,7 @@ def embedding_cosine_pairs(
         "emb",
         F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int").alias("blk"),
     )
-    grid = local_relation(spark, 
+    grid = local_relation(spark,
         [(i * B + j, i, j) for i in range(B) for j in range(i, B)],
         "cell int, gi int, gj int",
     )
@@ -1325,7 +1330,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_exact = exact.count()
     n_missed = missed.count()
     budget = (n_exact * LSH_MISS_BUDGET_PPM) // 1_000_000
-    return local_relation(spark, 
+    return local_relation(spark,
         [(n_exact, 1 if n_missed <= budget else 0)],
         "n_exact_pairs bigint, lsh_recall_ok int",
     )
@@ -1588,4 +1593,1479 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("n_shared_grams"))
         .where(F.col("n_shared_grams") >= DECON_MIN_HITS)
+    )
+
+
+# ---------------------------------------------------------------------------
+# URL canonicalization + URL-level dedup (crawl-pipeline pre-step)
+
+#: the canonicalization pipeline shared by both engines, as SQL text
+#: over a raw `url` column: strip fragment → split query → lowercase
+#: scheme+host → drop utm_* tracking params → sort remaining params.
+_URL_CANON_SQL = """
+    lower(split_part(split_part(split_part(url, '#', 1), '?', 1), '://', 1))
+    || '://'
+    || lower(split_part(split_part(split_part(split_part(url, '#', 1), '?', 1),
+                                   '://', 2), '/', 1))
+    || substr(split_part(split_part(split_part(url, '#', 1), '?', 1), '://', 2),
+              length(split_part(split_part(split_part(split_part(url, '#', 1),
+                                                      '?', 1), '://', 2),
+                                '/', 1)) + 1)
+    || CASE WHEN {params} = '' THEN '' ELSE '?' || {params} END
+"""
+
+
+@query(
+    "url_canonicalize_dedup",
+    oracle=f"""
+    WITH raw AS (
+        SELECT doc_id,
+               (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END)
+               || '://'
+               || (CASE WHEN doc_id % 3 = 0
+                        THEN upper('www.' || source || '.example.com')
+                        ELSE 'www.' || source || '.example.com' END)
+               || '/docs/' || CAST(doc_id // 2 AS VARCHAR)
+               || (CASE WHEN doc_id % 2 = 0
+                        THEN '?id=' || CAST(doc_id // 2 AS VARCHAR)
+                             || '&utm_source=news&ref=a'
+                        ELSE '?ref=a&id=' || CAST(doc_id // 2 AS VARCHAR)
+                             || '&utm_medium=mail' END)
+               || '#section-' || CAST(doc_id AS VARCHAR) AS url
+        FROM documents),
+    canon AS (
+        SELECT doc_id, url,
+               {_URL_CANON_SQL.format(params='''
+                   array_to_string(list_sort(list_filter(
+                       string_split(split_part(split_part(url, '#', 1), '?', 2), '&'),
+                       x -> NOT starts_with(x, 'utm_'))), '&')''')} AS url_canonical
+        FROM raw)
+    SELECT doc_id, url_canonical,
+           CAST(MIN(doc_id) OVER (PARTITION BY url_canonical) AS BIGINT)
+               AS keeper_doc_id
+    FROM canon
+    """,
+    tags=("pipeline", "dedup", "url", "llm-pipeline"),
+)
+def url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-level dedup — the cheapest pre-step of a crawl pipeline,
+    run BEFORE any content hashing: canonicalize (lowercase scheme and
+    host, strip the fragment, drop ``utm_*`` tracking params, sort the
+    surviving query params) and keep the lowest doc per canonical URL.
+    Two raw fetches of the same page routinely differ only in tracking
+    noise; at 100 TB this one string pipeline removes them for the
+    cost of a projection plus one |urls|-keyed window — no content
+    bytes touched.
+
+    The raw URLs are synthesized deterministically from doc fields
+    (scheme/host casing and param order vary per doc, consecutive doc
+    pairs share a page), so the oracle can rebuild the identical input
+    and the *canonicalization algorithm itself* — shared SQL text,
+    ``split_part``/higher-order-filter based, no UDF — is what both
+    engines must agree on, byte for byte."""
+    d = load_table(spark, sf_dir, "documents")
+    raw = d.select(
+        "doc_id",
+        F.expr(
+            """
+            (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END)
+            || '://'
+            || (CASE WHEN doc_id % 3 = 0
+                     THEN upper('www.' || source || '.example.com')
+                     ELSE 'www.' || source || '.example.com' END)
+            || '/docs/' || CAST(doc_id DIV 2 AS STRING)
+            || (CASE WHEN doc_id % 2 = 0
+                     THEN '?id=' || CAST(doc_id DIV 2 AS STRING)
+                          || '&utm_source=news&ref=a'
+                     ELSE '?ref=a&id=' || CAST(doc_id DIV 2 AS STRING)
+                          || '&utm_medium=mail' END)
+            || '#section-' || CAST(doc_id AS STRING)
+            """
+        ).alias("url"),
+    )
+    params = """
+        array_join(array_sort(filter(
+            split(split_part(split_part(url, '#', 1), '?', 2), '&'),
+            x -> NOT startswith(x, 'utm_'))), '&')"""
+    canon = raw.select(
+        "doc_id",
+        F.expr(_URL_CANON_SQL.format(params=params)).alias("url_canonical"),
+    )
+    w = W.partitionBy("url_canonical")
+    return canon.select(
+        "doc_id",
+        "url_canonical",
+        F.min("doc_id").over(w).cast("bigint").alias("keeper_doc_id"),
+    )
+
+
+@query(
+    "dedup_exact_hashkey",
+    oracle="""
+    SELECT doc_id, lang, n_chars
+    FROM (
+        SELECT doc_id, lang, n_chars,
+               ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
+        FROM documents)
+    WHERE rn = 1
+    """,
+    tags=("dedup", "llm-pipeline"),
+)
+def dedup_exact_hashkey(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup keyed on ``xxhash64(text)`` instead of the text
+    itself — the 100 TB spelling promised in dedup_exact's docstring:
+    the dedup shuffle moves 16 bytes per row (hash, doc_id) instead of
+    whole documents, and the keepers re-join the corpus by doc_id to
+    recover their columns. Semantically identical to dedup_exact up to
+    64-bit hash collisions (~n²/2⁶⁵ — absent at any test SF, and in
+    production you'd add a length column to the key), so it shares
+    dedup_exact's oracle."""
+    d = fanned_documents(spark, sf_dir)
+    keepers = (
+        d.select(F.xxhash64("text").alias("h"), "doc_id")
+        .groupBy("h")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    return keepers.join(d, "doc_id").select("doc_id", "lang", "n_chars")
+
+
+# ---------------------------------------------------------------------------
+# Bloom-prefiltered benchmark decontamination
+
+#: n-gram order for the bloom decontamination pass (distinct from
+#: decontaminate_ngram's 5-gram/≥3 config: 8-gram, any overlap flags).
+BLOOM_N = 8
+#: Bloom geometry: 2^16 bits in 1024 longs, 4 probes/key. At the
+#: expected eval-gram cardinality (~4k) the false-positive rate is
+#: ~0.2%; FPs cost one extra exact-join probe, FNs cannot happen.
+BLOOM_BITS = 1 << 16
+BLOOM_K = 4
+
+
+def _bloom_hashes(gram: F.Column, bits: int = BLOOM_BITS) -> list[F.Column]:
+    """BLOOM_K independent bit positions per key: xxhash64 with distinct
+    salts, folded into [0, bits). All JVM expressions."""
+    return [
+        F.pmod(F.xxhash64(F.concat(gram, F.lit(f"#bloom{i}"))), F.lit(bits))
+        for i in range(BLOOM_K)
+    ]
+
+
+#: plan-literal budget for a packed bloom: at or under this many BYTES
+#: of packed longs the probe ships the bloom as a dense array literal
+#: (zero extra shuffles, codegen bit arithmetic); above it the probe
+#: LEFT-joins the distributed words relation instead, so the driver
+#: artifact is O(1) at any member cardinality (an unbudgeted literal
+#: ships 16 bits/key unconditionally: ~2 GB in every task closure at
+#: 1e9 keys). 128 KiB = 16384 longs ≈ 64k members at
+#: 16 bits/key — EXACTLY the `BIG_LITERAL_ELEMS` ceiling of
+#: tools/plan_audit.py's oversized-literal red flag, so the sanctioned
+#: dense path can never trip the repo's own plan gate (a 4 MiB budget
+#: would have let mid-size blooms pass here and flag there).
+BLOOM_LITERAL_BUDGET_BYTES = 1 << 17
+
+
+def _bloom_words(
+    keys: DataFrame, key_col: str, bits: int = BLOOM_BITS
+) -> DataFrame:
+    """Distributed bloom build: salted-xxhash64 bit positions →
+    BIT_OR-packed longs, as a SPARSE ``(w int, word bigint)`` relation.
+    Never collected here — the build is a distributed reduce at any
+    member cardinality; :func:`_bloom_hit` decides (by the byte
+    budget) whether the PROBE side may densify it into a plan
+    literal. ``bits`` must be a multiple of 64 (the word packing
+    indexes bit // 64)."""
+    assert bits % 64 == 0 and bits > 0, "bloom bits must be a positive multiple of 64"
+    pos = keys.select(
+        F.explode(F.array(*_bloom_hashes(F.col(key_col), bits))).alias("h")
+    )
+    return (
+        pos.select(
+            (F.col("h") / 64).cast("int").alias("w"),
+            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(h % 64 AS INT))").alias(
+                "bit"
+            ),
+        )
+        .groupBy("w")
+        .agg(F.bit_or("bit").alias("word"))
+    )
+
+
+def _bloom_hit(
+    words: DataFrame, probed: DataFrame, key_col: str, bits: int = BLOOM_BITS
+) -> DataFrame:
+    """Append boolean ``hit``: all BLOOM_K salted bit positions set.
+
+    Two physical strategies, one semantics (any future bloom caller
+    inherits both through this single entry point):
+
+    - **dense literal** (``bits/8 ≤ BLOOM_LITERAL_BUDGET_BYTES``):
+      collect the sparse words into a packed ``array<bigint>`` literal
+      and probe with whole-stage-codegen shift/AND expressions — zero
+      extra shuffles, the decontamination fast path (8 KB sketch).
+    - **distributed probe** (beyond the budget): the DISTINCT probe
+      keys explode into their BLOOM_K word indices, LEFT-join the
+      words relation on the word index (an absent word is all-zero ⇒
+      bit unset ⇒ miss — false negatives stay impossible), a min-AND
+      re-aggregates the per-position checks into one ``hit`` per key,
+      and the verdicts join back onto ``probed``. O(1) driver memory
+      at any member count; both join sides are hash-partitioned on
+      bounded-width keys.
+
+    A NULL probe key behaves identically on both paths: ``xxhash64``
+    skips NULL inputs, so every NULL key probes the same constant
+    positions (the empty-input hash) — almost always a miss. The
+    distributed path keeps NULL keys via a null-safe join so the two
+    strategies are bit-identical (pinned by
+    ``test_bloom_distributed_probe_matches_dense_literal``)."""
+    if bits // 8 <= BLOOM_LITERAL_BUDGET_BYTES:
+        packed = [0] * (bits // 64)
+        for r in words.collect():
+            packed[r["w"]] = r["word"]
+        # The packed words ride a ONE-ROW broadcast relation, not a
+        # plan literal: F.lit(packed) builds a
+        # CreateArray of bits/64 literal nodes that the probe columns
+        # referenced once per hash — a 4×1024-node expression tree that
+        # cost ~2.4 s of driver analysis/codegen per call (profiled:
+        # stage wall 0.7 s vs query wall 3.2 s). A broadcast-joined
+        # array column is the same probe arithmetic and the same
+        # whole-stage-codegen shift/AND — the 8 KB sketch just ships as
+        # broadcast DATA instead of expression-tree nodes.
+        bloom_df = local_relation(probed.sparkSession,
+            [(packed,)], "__bloom array<bigint>"
+        )
+        probed = probed.crossJoin(F.broadcast(bloom_df))
+        bloom = F.col("__bloom")
+        helper_cols = ["__bloom"]
+        hit = F.lit(True)
+        for i, h in enumerate(_bloom_hashes(F.col(key_col), bits)):
+            probed = probed.withColumn(f"h{i}", h).withColumn(
+                f"w{i}",
+                F.element_at(bloom, (F.col(f"h{i}") / 64).cast("int") + 1),
+            )
+            helper_cols += [f"h{i}", f"w{i}"]
+            hit = hit & F.expr(
+                f"(shiftright(w{i}, CAST(h{i} % 64 AS INT)) & CAST(1 AS BIGINT))"
+                " = CAST(1 AS BIGINT)"
+            )
+        # drop the h{i}/w{i} scratch so BOTH strategies return exactly
+        # probed-columns + hit — a caller's schema must not change when
+        # the byte budget flips the physical path
+        return probed.withColumn("hit", hit).drop(*helper_cols)
+    keys = probed.select(F.col(key_col).alias("__bk")).distinct()
+    kpos = keys.select(
+        "__bk",
+        F.explode(
+            F.array(*_bloom_hashes(F.col("__bk"), bits))
+        ).alias("__h"),
+    ).select(
+        "__bk",
+        (F.col("__h") / 64).cast("int").alias("w"),
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__h % 64 AS INT))").alias(
+            "__mask"
+        ),
+    )
+    hits = (
+        kpos.join(words, "w", "left")
+        .select(
+            "__bk",
+            (
+                F.coalesce(F.col("word"), F.lit(0)).bitwiseAND(F.col("__mask"))
+                == F.col("__mask")
+            )
+            .cast("int")
+            .alias("__set"),
+        )
+        .groupBy("__bk")
+        .agg((F.min("__set") == 1).alias("hit"))
+    )
+    return probed.join(
+        hits, F.col(key_col).eqNullSafe(F.col("__bk")), "left"
+    ).drop("__bk")
+
+
+@query(
+    "decontaminate_bloom",
+    oracle=f"""
+    WITH eval_docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        WHERE doc_id < 50),
+    train_docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        WHERE doc_id >= 50),
+    eval_grams AS (
+        SELECT DISTINCT array_to_string(list_slice(toks, i, i + {BLOOM_N - 1}), ' ') AS gram
+        FROM eval_docs, unnest(generate_series(1, len(toks) - {BLOOM_N - 1})) AS t(i)),
+    train_grams AS (
+        SELECT DISTINCT doc_id,
+               array_to_string(list_slice(toks, i, i + {BLOOM_N - 1}), ' ') AS gram
+        FROM train_docs, unnest(generate_series(1, len(toks) - {BLOOM_N - 1})) AS t(i))
+    SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
+    FROM train_grams t JOIN eval_grams e USING (gram)
+    GROUP BY t.doc_id
+    """,
+    tags=("pipeline", "dedup", "decontamination", "bloom", "llm-pipeline"),
+)
+def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decontamination with a Bloom prefilter — the shape that survives
+    when the eval-gram set outgrows a comfortable broadcast hash table.
+    The engine builds the Bloom filter itself, in pure Spark SQL: eval
+    8-grams hash to 4 (BLOOM_K) bit positions (salted xxhash64), a
+    BIT_OR aggregate packs them into 1024 longs (a distributed
+    reduce to an 8 KB sketch), and the probe is word-index + shift
+    expressions over that array literal — whole-stage codegen, no UDF,
+    no per-executor hash table. Training grams that pass the bloom
+    (FP rate ~0.2%) go through an exact confirm join, so the result is
+    exact: Bloom filters admit false positives but never false
+    negatives. At 100 TB the corpus side is filtered to candidates
+    BEFORE any join/shuffle — the sketch costs 8 KB per task regardless
+    of eval-set size growth (vs a broadcast table growing linearly)."""
+    d = load_table(spark, sf_dir, "documents")
+    eval_grams = (
+        word_ngram_rows(d.where(F.col("doc_id") < 50), BLOOM_N)
+        .select("gram")
+        .distinct()
+    )
+    # build: positions → (word, bit) → BIT_OR per word → 1024 longs;
+    # at 2^16 bits the probe densifies it into an ~8 KB plan literal
+    words = _bloom_words(eval_grams, "gram")
+    # repartition the train side before its gram explode: the explode +
+    # 4-hash bloom probe otherwise run inside the single-split scan
+    # task (profiled serial); raw text bytes shuffle, gram rows don't.
+    # Geometry-derived count: expand=75 ≈ the 8-token-gram bytes per
+    # parquet byte (~10× text decompression × ~7.5× gram
+    # materialization) — the probe is compute-heavy enough that the
+    # sweep prefers full width at sf0.1
+    # (tools/tune_fanout.py best-of-4: 8→0.722 s, 16→0.720, 32→0.658),
+    # and the clamp keeps tiny inputs from paying 32 fixed task costs
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    train_grams = word_ngram_rows(
+        d.where(F.col("doc_id") >= 50).repartition(
+            adaptive_partitions(spark, sf_dir, "documents", expand=75),
+            "doc_id",
+        ),
+        BLOOM_N,
+    )
+    candidates = (
+        _bloom_hit(words, train_grams, "gram")
+        .where("hit")
+        .select("doc_id", "gram")
+    )
+    return (
+        candidates.join(F.broadcast(eval_grams), "gram")
+        .groupBy("doc_id")
+        .agg(F.countDistinct("gram").alias("n_shared_grams"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# paragraph-block duplication profile
+
+#: tokens per block for dedup_paragraph (non-overlapping; trailing
+#: partial blocks are dropped so every block is exactly this long).
+BLOCK_TOKENS = 20
+
+
+@query(
+    "dedup_paragraph",
+    oracle=f"""
+    WITH blocks AS (
+        SELECT doc_id,
+               array_to_string(list_slice(toks, i, i + {BLOCK_TOKENS - 1}), ' ') AS block
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+             unnest(generate_series(1, len(toks) - {BLOCK_TOKENS - 1}, {BLOCK_TOKENS}))
+                 AS t(i)),
+    block_docs AS (
+        SELECT block, COUNT(DISTINCT doc_id) AS n_docs FROM blocks GROUP BY block)
+    SELECT b.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_blocks,
+           CAST(COUNT_IF(bd.n_docs > 1) AS BIGINT) AS n_dup_blocks,
+           CAST(COUNT_IF(bd.n_docs > 1) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+               AS dup_block_ratio
+    FROM blocks b JOIN block_docs bd USING (block)
+    GROUP BY b.doc_id
+    """,
+    tags=("pipeline", "dedup", "llm-pipeline"),
+)
+def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paragraph-granular duplication profile — the sub-document dedup
+    pass (boilerplate headers, license blocks, templated spans) that
+    document-level MinHash misses. Documents split into non-overlapping
+    20 (BLOCK_TOKENS)-token blocks; a block seen in more than one document
+    is corpus-duplicated; each document reports its duplicated-block
+    ratio. NO block-keyed join anywhere (the ngram_novelty_score
+    lesson: joining instances back to a corpus-derived block
+    dictionary leaves AQE free to broadcast the dictionary —
+    plan_audit's DictBcast column flags that shape): instances
+    collapse to (doc_id, block, multiplicity) rows, a COUNT window
+    over the block partition attaches each block's distinct-doc count
+    in place — one row per (doc, block), so the window input is the
+    dictionary relation itself — and the per-doc profile is one more
+    doc-keyed aggregate. Three shuffles, all on corpus-cardinality
+    keys. Blocks are grouped by their text to stay hash-collision-free
+    for the oracle; at 100 TB swap the key for xxhash64(block)
+    (16 bytes/row, same plan shape — see dedup_exact_hashkey) and
+    explode paragraphs instead of fixed token windows."""
+    d = load_table(spark, sf_dir, "documents")
+    blocks = word_ngram_rows(d, BLOCK_TOKENS, step=BLOCK_TOKENS).select(
+        "doc_id", F.col("gram").alias("block")
+    )
+    from pyspark.sql import Window as W
+
+    inst = blocks.groupBy("doc_id", "block").agg(
+        F.count(F.lit(1)).alias("m")
+    )
+    # one row per (doc, block) ⇒ rows in the block partition ARE the
+    # block's distinct docs; the unordered COUNT window reads the
+    # dictionary-sized relation once, joins nothing
+    n_docs = F.count(F.lit(1)).over(W.partitionBy("block"))
+    prof = inst.select("doc_id", "m", (n_docs > 1).alias("dup"))
+    return prof.groupBy("doc_id").agg(
+        F.sum("m").cast("bigint").alias("n_blocks"),
+        F.sum(F.when(F.col("dup"), F.col("m")).otherwise(0))
+        .cast("bigint")
+        .alias("n_dup_blocks"),
+        (
+            F.sum(F.when(F.col("dup"), F.col("m")).otherwise(0)).cast("double")
+            / F.sum("m").cast("double")
+        ).alias("dup_block_ratio"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# edit-distance near-dup (blocked Levenshtein verify)
+
+#: prefix block for candidate generation and the comparison window /
+#: acceptance threshold for the Levenshtein verify
+LEV_BLOCK = 64
+LEV_WINDOW = 240
+LEV_MAX_DIST = 60
+
+
+@query(
+    "dedup_levenshtein",
+    oracle=f"""
+    WITH d AS (SELECT doc_id, text FROM documents
+               WHERE LENGTH(text) >= {LEV_BLOCK})
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(levenshtein(SUBSTRING(a.text, 1, {LEV_WINDOW}),
+                            SUBSTRING(b.text, 1, {LEV_WINDOW})) AS BIGINT)
+               AS edit_dist
+    FROM d a JOIN d b
+      ON SUBSTRING(a.text, 1, {LEV_BLOCK}) = SUBSTRING(b.text, 1, {LEV_BLOCK})
+     AND a.doc_id < b.doc_id
+    WHERE levenshtein(SUBSTRING(a.text, 1, {LEV_WINDOW}),
+                      SUBSTRING(b.text, 1, {LEV_WINDOW})) <= {LEV_MAX_DIST}
+    """,
+    tags=("dedup", "llm-pipeline"),
+)
+def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-dup: candidate pairs block on the first
+    64 (LEV_BLOCK) characters (equi-join on a short key — same shape as
+    dedup_prefix_containment), then verify with exact Levenshtein over
+    a fixed 240 (LEV_WINDOW)-char window. The window cap is the scale
+    guard: Levenshtein is O(n·m) per pair, so the engine bounds the
+    comparison cost per candidate to a constant regardless of document
+    length — the standard trick for edit-distance verify at corpus
+    scale (full-length distance only ever runs on pairs that already
+    passed the windowed check downstream). Both engines implement
+    classic unit-cost Levenshtein, so the result is exactly
+    oracle-checkable — a rarity among fuzzy-match operators."""
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .where(F.length("text") >= LEV_BLOCK)
+        .select(
+            "doc_id",
+            F.substring("text", 1, LEV_BLOCK).alias("blk"),
+            F.substring("text", 1, LEV_WINDOW).alias("win"),
+        )
+    )
+    a = d.select(
+        F.col("doc_id").alias("doc_a"), "blk", F.col("win").alias("win_a")
+    )
+    b = d.select(
+        F.col("doc_id").alias("doc_b"), "blk", F.col("win").alias("win_b")
+    )
+    dist = F.levenshtein("win_a", "win_b")
+    return (
+        a.join(b, "blk")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", dist.cast("bigint").alias("edit_dist"))
+        .where(F.col("edit_dist") <= LEV_MAX_DIST)
+    )
+
+
+#: measured false-positive budget for the bloom audit, in permille of
+#: probes, paired with a geometry DERIVED from member cardinality
+#: (BLOOM_AUDIT_BITS_PER_KEY bits/key, k=4): fill stays ≈ 1−e^(−1/4)
+#: ≈ 0.22 at ANY member count, so theoretical fpp ≈ 2.4e-3 — the 100‰
+#: budget is scale-invariant (the fixed-geometry spelling would
+#: mechanically trip the verdict once members outgrow the bit array;
+#: cf. the LSH miss-budget lesson in SCALE.md).
+BLOOM_FPP_BUDGET_PERMILLE = 100
+BLOOM_AUDIT_BITS_PER_KEY = 16
+
+@query(
+    "bloom_fpp_audit",
+    oracle="""
+    SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_members,
+           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_probes,
+           1 AS all_members_contained,
+           1 AS fpp_within_budget
+    FROM events
+    """,
+    tags=("sketch", "bloom", "statistics", "audit"),
+)
+def bloom_fpp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter guarantee audit, the ``hll_accuracy_audit`` pattern
+    applied to ``decontaminate_bloom``'s sketch: build the bloom over
+    every distinct member key (a distributed BIT_OR reduce to a
+    bit array sized 16 bits/key),
+    then pin BOTH sides of the bloom contract — (a) zero false
+    negatives: every member key probes back as contained; (b) bounded
+    false positives: a same-size DISJOINT key set (salt-prefixed, so
+    no probe is a member) measures the empirical fp rate, which must
+    sit under BLOOM_FPP_BUDGET_PERMILLE. The oracle pins the exact
+    member/probe counts and both verdicts; the raw fp count stays
+    engine-internal (it is a property of the hash geometry, not of
+    the data). Probing is whole-stage-codegen bit arithmetic — at
+    100 TB both probe passes are embarrassingly parallel map work.
+    Geometry: the bit width is derived from the measured member
+    cardinality (16 bits/key, power-of-two, 2^16 floor), so the
+    theoretical fpp — and therefore the 100‰ budget's soundness — is
+    the same at sf0.001 and at the sf1-equivalent sweep; a genuinely
+    broken hash/pack/probe path still flips the verdict instantly."""
+    ev = load_table(spark, sf_dir, "events")
+    # materialize the distinct member set: it feeds the count, the
+    # build, and the probe union — one shuffle instead of three. The
+    # returned plan reads it: the result's own checkpoint.
+    members = (
+        ev.where(F.col("user_id").isNotNull())  # a NULL key has no hash
+        .select(F.col("user_id").cast("string").alias("key"))
+        .distinct()
+        .localCheckpoint()
+    )
+    # geometry scales with membership: next power of two ≥ 16 bits/key
+    # (floor 2^16). The driver artifact no longer scales with it:
+    # _bloom_hit densifies the packed words into a plan literal only
+    # while bits/8 fits BLOOM_LITERAL_BUDGET_BYTES (n_members·2 bytes —
+    # KBs at the bench scales) and beyond that probes the distributed
+    # words relation with a left join, so the audit is O(1) driver
+    # memory at 1e9 members too.
+    n_est = members.count()
+    bits = max(
+        BLOOM_BITS, 1 << (n_est * BLOOM_AUDIT_BITS_PER_KEY - 1).bit_length()
+    )
+    words = _bloom_words(members, "key", bits)
+    # one fused probe pass: members flagged is_member=1, the disjoint
+    # salt-prefixed set is_member=0
+    probes = members.select("key", F.lit(1).alias("is_member")).unionAll(
+        members.select(
+            F.concat(F.lit("fpprobe:"), F.col("key")).alias("key"),
+            F.lit(0).alias("is_member"),
+        )
+    )
+    m = F.col("is_member") == 1
+    hitc = F.col("hit").cast("int")
+    agg = _bloom_hit(words, probes, "key", bits).agg(
+        F.sum(m.cast("int")).cast("bigint").alias("n_members"),
+        F.sum((~m).cast("int")).cast("bigint").alias("n_probes"),
+        F.sum(F.when(m, hitc).otherwise(0)).cast("bigint").alias("n_contained"),
+        F.sum(F.when(~m, hitc).otherwise(0)).cast("bigint").alias("n_fp"),
+    )
+    return agg.select(
+        "n_members",
+        "n_probes",
+        (F.col("n_contained") == F.col("n_members"))
+        .cast("int")
+        .alias("all_members_contained"),
+        (
+            F.lit(1000) * F.col("n_fp")
+            <= F.lit(BLOOM_FPP_BUDGET_PERMILLE) * F.col("n_probes")
+        )
+        .cast("int")
+        .alias("fpp_within_budget"),
+    )
+
+
+#: winnowing: char-k-gram length and window width (MOSS defaults scaled
+#: down to the synthetic corpus' ~250-char documents)
+WINNOW_K = 8
+WINNOW_W = 4
+
+#: content-defined chunking: a boundary fires where the k-gram hash's
+#: first two hex chars are "00" — P(boundary) = 1/256, E[chunk] ≈ 256
+CDC_K = 8
+CDC_BOUNDARY_PREFIX = "00"
+
+#: n-gram width for first-occurrence novelty
+NOVELTY_N = 5
+
+
+#: ``adaptive_partitions`` expansion for a pre-explode doc repartition:
+#: text decompresses ~10× out of parquet and each char-gram row is
+#: ~24 B of (doc_id, i, hash) in the exchange
+GRAM_EXPAND = 10 * 24
+
+
+def _char_gram_hashes(d: DataFrame, k: int) -> DataFrame:
+    """(doc_id, i, h): md5 of the k-char gram starting at 1-based i.
+    The hash stays a STRING — lexicographic order and hex-prefix
+    bucketing are engine-portable; parsing hex to integers is not."""
+    starts = F.sequence(F.lit(1), F.length("text") - k + 1)
+    return (
+        d.where(F.length("text") >= k)
+        .select("doc_id", F.explode(starts).alias("i"), "text")
+        .select(
+            "doc_id",
+            "i",
+            F.md5(F.substr("text", F.col("i"), F.lit(k))).alias("h"),
+        )
+    )
+
+
+def _char_gram_hashes_bin(d: DataFrame, k: int) -> DataFrame:
+    """ENGINE-INTERNAL twin of :func:`_char_gram_hashes` whose hash is
+    the 16-byte BINARY md5 (``unhex``) instead of the 32-char hex
+    string. For consumers where ``h`` never reaches the output —
+    equality joins, distinct, and window ranking/min — the two are
+    value-equivalent: hex encoding is byte-order-preserving, so
+    ``min()`` selects the same gram and equality groups the same rows,
+    while the shuffled key halves (16 B vs 32 B + string overhead) and
+    the sort comparisons run on raw bytes. Measured on the excise
+    ranking at sf0.1: 2.82 s → 0.74 s for the identical dup-row set
+    (optimization round 14, guide §2.3 "narrower types"). Consumers
+    that EXPOSE the hash (winnowing_fingerprints, chunk_cdc_rolling)
+    keep the hex form."""
+    starts = F.sequence(F.lit(1), F.length("text") - k + 1)
+    return (
+        d.where(F.length("text") >= k)
+        .select("doc_id", F.explode(starts).alias("i"), "text")
+        .select(
+            "doc_id",
+            "i",
+            F.unhex(F.md5(F.substr("text", F.col("i"), F.lit(k)))).alias("h"),
+        )
+    )
+
+
+@query(
+    "winnowing_fingerprints",
+    oracle=f"""
+    WITH grams AS (
+        SELECT doc_id, i,
+               md5(substr(text, CAST(i AS INT), {WINNOW_K})) AS h
+        FROM documents,
+             unnest(range(1, length(text) - {WINNOW_K} + 2)) AS t(i)
+        WHERE length(text) >= {WINNOW_K}),
+    wins AS (
+        SELECT doc_id,
+               MIN(h) OVER (PARTITION BY doc_id ORDER BY i
+                            ROWS BETWEEN {WINNOW_W - 1} PRECEDING
+                                     AND CURRENT ROW) AS fp,
+               ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) AS rn
+        FROM grams)
+    SELECT doc_id,
+           CAST(COUNT(*) FILTER (rn >= {WINNOW_W}) AS BIGINT) AS n_windows,
+           CAST(COUNT(DISTINCT fp) FILTER (rn >= {WINNOW_W}) AS BIGINT)
+               AS n_fingerprints,
+           MIN(fp) FILTER (rn >= {WINNOW_W}) AS min_fingerprint
+    FROM wins GROUP BY doc_id
+    """,
+    tags=("pipeline", "fingerprint", "dedup", "llm-pipeline"),
+)
+def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken
+    2003, "Winnowing: Local Algorithms for Document Fingerprinting" —
+    the MOSS algorithm): hash every char k-gram, slide a w-window over
+    the hash sequence, keep each window's MINIMUM — guaranteeing any
+    shared substring of length ≥ k+w−1 yields at least one shared
+    fingerprint, with ~2/(w+1) selection density. Hashes are md5
+    strings ordered lexicographically (any total order works for
+    winnowing, and this one is identical on every engine). Emits
+    per-doc window/fingerprint counts + the smallest fingerprint
+    (the doc's minhash over all windows). One explode + one w-row
+    window frame + one groupBy — all partitioned by doc_id, so the
+    whole plan is one doc-keyed shuffle at any corpus size."""
+    # Repartition by doc_id BEFORE the gram explode ("project before
+    # the exchange", inverted: exchange before the explode): the
+    # explode+md5 otherwise runs in the single-split scan task
+    # (profiled 3.7 s serial) and the doc_id window then shuffles the
+    # EXPLODED rows — 52 MB of md5
+    # strings at sf0.1 versus ~0.6 MB of raw text. With the text
+    # exchanged first, hashing is parallel and the window + final
+    # groupBy reuse the doc_id partitioning: zero post-explode
+    # exchanges. Sized from the estimated gram volume.
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
+    )
+    grams = _char_gram_hashes(d, WINNOW_K)
+    win = (
+        W.partitionBy("doc_id")
+        .orderBy("i")
+        .rowsBetween(-(WINNOW_W - 1), 0)
+    )
+    rn = W.partitionBy("doc_id").orderBy("i")
+    full = F.col("rn") >= WINNOW_W  # first w-1 windows are partial
+    wins = grams.select(
+        "doc_id",
+        F.min("h").over(win).alias("fp"),
+        F.row_number().over(rn).alias("rn"),
+    )
+    return wins.groupBy("doc_id").agg(
+        F.count(F.when(full, 1)).alias("n_windows"),
+        F.count_distinct(F.when(full, F.col("fp"))).alias("n_fingerprints"),
+        F.min(F.when(full, F.col("fp"))).alias("min_fingerprint"),
+    )
+
+
+@query(
+    "chunk_cdc_rolling",
+    oracle=f"""
+    WITH bounds AS (
+        SELECT doc_id, i
+        FROM documents,
+             unnest(range(1, length(text) - {CDC_K} + 2)) AS t(i)
+        WHERE length(text) >= {CDC_K}
+          AND substr(md5(substr(text, CAST(i AS INT), {CDC_K})), 1, 2)
+              = '{CDC_BOUNDARY_PREFIX}'),
+    chunks AS (
+        SELECT doc_id,
+               i - COALESCE(LAG(i) OVER (PARTITION BY doc_id ORDER BY i), 0)
+                   AS chunk_len
+        FROM bounds)
+    SELECT d.doc_id,
+           CAST(COALESCE(COUNT(c.chunk_len), 0) + 1 AS BIGINT) AS n_chunks,
+           CAST(COALESCE(MAX(c.chunk_len), 0) AS BIGINT) AS max_chunk,
+           CAST(d.n_chars - COALESCE(SUM(c.chunk_len), 0) AS BIGINT)
+               AS tail_chunk
+    FROM documents d LEFT JOIN chunks c ON d.doc_id = c.doc_id
+    GROUP BY d.doc_id, d.n_chars
+    """,
+    tags=("pipeline", "chunking", "dedup", "llm-pipeline"),
+)
+def chunk_cdc_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Content-defined chunking (the FastCDC/rabin family used by
+    dedup storage and by long-document splitters that must keep chunk
+    boundaries STABLE under insertions — fixed-size chunks shift every
+    boundary after an edit; content-defined ones realign): a boundary
+    fires wherever the rolling k-gram hash lands in a 1/256 target
+    region (md5 hex prefix "00" — engine-portable, stateless per
+    position, no sequential scan dependency). Chunk lengths come from
+    LAG over the boundary positions; the trailing unclosed chunk is
+    reported separately. Per-doc windowing only — one doc-keyed
+    shuffle; positions explode is Catalyst-vectorized; linear at
+    100 TB."""
+    # pre-explode doc_id repartition: parallel gram hashing + the LAG
+    # window and the final doc_id join reuse the partitioning (see
+    # winnowing_fingerprints)
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
+    )
+    grams = _char_gram_hashes(d, CDC_K)
+    bounds = grams.where(
+        F.substr("h", F.lit(1), F.lit(2)) == CDC_BOUNDARY_PREFIX
+    ).select("doc_id", "i")
+    lag = W.partitionBy("doc_id").orderBy("i")
+    chunks = bounds.select(
+        "doc_id",
+        (F.col("i") - F.coalesce(F.lag("i").over(lag), F.lit(0))).alias(
+            "chunk_len"
+        ),
+    )
+    return (
+        d.select("doc_id", "n_chars")
+        .join(chunks, "doc_id", "left")
+        .groupBy("doc_id", "n_chars")
+        .agg(
+            (F.count("chunk_len") + 1).alias("n_chunks"),
+            F.coalesce(F.max("chunk_len"), F.lit(0)).alias("max_chunk"),
+            (
+                F.col("n_chars") - F.coalesce(F.sum("chunk_len"), F.lit(0))
+            ).alias("tail_chunk"),
+        )
+        .select("doc_id", "n_chunks", "max_chunk", "tail_chunk")
+    )
+
+
+@query(
+    "ngram_novelty_score",
+    oracle=f"""
+    WITH toks AS (
+        SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    g AS (
+        SELECT DISTINCT doc_id,
+               array_to_string(t[CAST(i AS INT):CAST(i AS INT) + {NOVELTY_N - 1}], ' ') AS gram
+        FROM toks, unnest(range(1, len(t) - {NOVELTY_N} + 2)) AS r(i)
+        WHERE len(t) >= {NOVELTY_N}),
+    firsts AS (SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram)
+    SELECT g.doc_id,
+           CAST(COUNT(*) AS BIGINT) AS n_grams,
+           CAST(COUNT(*) FILTER (f.first_doc = g.doc_id) AS BIGINT) AS n_novel,
+           CAST(COUNT(*) FILTER (f.first_doc = g.doc_id) * 1000
+                // COUNT(*) AS BIGINT) AS novelty_permille
+    FROM g JOIN firsts f ON g.gram = f.gram
+    GROUP BY g.doc_id
+    """,
+    tags=("pipeline", "novelty", "dedup", "llm-pipeline"),
+)
+def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-occurrence novelty — the per-document "how much of this
+    have we already ingested" metric used to rank crawl snapshots and
+    prioritize fresh data: a doc's distinct n-grams are NOVEL if no
+    lower-doc_id document contains them (doc_id is ingest order here;
+    any monotone ingest key works). Computed set-exactly WITHOUT ever
+    joining on the gram: n_novel per doc is just the count of grams
+    whose min(doc_id) IS that doc — a second aggregation OVER the
+    firsts table — and n_grams is the per-doc distinct count; the two
+    doc-keyed aggregates then join on doc_id. The first cut joined the
+    g relation back against firsts on the gram string and AQE's
+    post-agg size estimate elected to BROADCAST the gram dictionary —
+    an artifact that grows with the corpus — measured as a
+    driver-broadcast OOM on the vanilla 1 GiB session at the 10×
+    replica (the sf0.1 gate fit by luck). Now no gram-keyed join
+    exists to mis-plan: the gram dictionary lives exactly one
+    aggregation long. Novelty is an exact integer permille, never a
+    float."""
+    d = load_table(spark, sf_dir, "documents")
+    g = word_ngram_rows(d, NOVELTY_N).distinct()
+    per_doc = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
+    novel = (
+        g.groupBy("gram")
+        .agg(F.min("doc_id").alias("first_doc"))
+        .groupBy(F.col("first_doc").alias("doc_id"))
+        .agg(F.count(F.lit(1)).alias("n_novel"))
+    )
+    return (
+        per_doc.join(novel, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.col("n_grams").cast("bigint").alias("n_grams"),
+            F.coalesce("n_novel", F.lit(0)).cast("bigint").alias("n_novel"),
+            F.expr(
+                "CAST(COALESCE(n_novel, 0) * 1000 div n_grams AS BIGINT)"
+            ).alias("novelty_permille"),
+        )
+    )
+
+
+#: exact-substring dedup: guarantee length L = SUB_K + SUB_W − 1 —
+#: any pair sharing an exact ≥L-char substring shares a selected
+#: winnowing fingerprint (Schleimer et al. 2003, Theorem: correctness
+#: of winnowing), so the fingerprint join's candidates are a SUPERSET
+#: of the true pairs and the verify step makes the result exact.
+SUB_K = 18
+SUB_W = 7
+SUB_L = SUB_K + SUB_W - 1
+#: bound the pair blow-up on the deliberately-repetitive synthetic
+#: corpus (same device as embedding_normalize's vec_id < 500)
+SUB_MAX_DOC = 500
+
+
+@query(
+    "dedup_exact_substring",
+    oracle=f"""
+    WITH g AS (
+        SELECT DISTINCT doc_id,
+               md5(substr(text, CAST(i AS INT), {SUB_L})) AS h
+        FROM documents,
+             unnest(range(1, length(text) - {SUB_L} + 2)) AS t(i)
+        WHERE length(text) >= {SUB_L} AND doc_id < {SUB_MAX_DOC})
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(COUNT(*) AS BIGINT) AS n_shared_windows
+    FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+    """,
+    tags=("pipeline", "dedup", "fingerprint", "llm-pipeline"),
+)
+def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring duplicate pairs (the Lee et al. 2022
+    "Deduplicating Training Data Makes Language Models Better"
+    criterion, at window granularity): every unordered doc pair
+    sharing at least one exact SUB_L(=24)-char window, with the count of
+    distinct shared windows. The engine computes it the SCALABLE way —
+    winnowing-accelerated:
+
+    1. select winnowing fingerprints (k=SUB_K, w=SUB_W) — ~2/(w+1)
+       of positions, so the candidate join shuffles a fraction of the
+       gram volume;
+    2. candidate pairs = docs sharing a selected fingerprint. The
+       winnowing guarantee makes this a SUPERSET of all pairs sharing
+       a ≥k+w−1-char substring — no recall loss by construction;
+    3. verify: the full SUB_L-gram sets of CANDIDATE DOCS ONLY are
+       joined to produce exact shared-window counts.
+
+    The oracle is the direct all-grams self-join — an INDEPENDENT
+    formulation that never sees the fingerprints — so the driver's
+    hash compare re-proves the winnowing superset guarantee over the
+    whole corpus every round, not just on a test fixture. At 100 TB
+    the fingerprint join is the only corpus-wide shuffle; the verify
+    join touches candidate docs only (dup-heavy inputs degrade toward
+    the plain gram join, never past it)."""
+    # pre-explode doc_id repartition: parallel gram hashing for BOTH
+    # gram passes + the winnowing window reuses the partitioning (see
+    # winnowing_fingerprints)
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < SUB_MAX_DOC)
+        .repartition(
+            adaptive_partitions(
+                spark, sf_dir, "documents", expand=GRAM_EXPAND
+            ),
+            "doc_id",
+        )
+    )
+    # binary md5 grams (engine-internal — h never reaches the output;
+    # see _char_gram_hashes_bin: same selection/equality semantics,
+    # half the shuffled key bytes, byte-wise sort comparisons)
+    grams = _char_gram_hashes_bin(d, SUB_L).select("doc_id", "h").distinct()
+    # 1. winnowing selection over the SUB_K-gram hash sequence
+    kg = _char_gram_hashes_bin(d, SUB_K)
+    win = W.partitionBy("doc_id").orderBy("i").rowsBetween(-(SUB_W - 1), 0)
+    rn = W.partitionBy("doc_id").orderBy("i")
+    fps = (
+        kg.select(
+            "doc_id",
+            F.min("h").over(win).alias("fp"),
+            F.row_number().over(rn).alias("rn"),
+        )
+        .where(F.col("rn") >= SUB_W)
+        .select("doc_id", "fp")
+        .distinct()
+    )
+    # 2. candidate pairs from the sparse fingerprint join
+    # posting-array pair emission, not a self-join (the
+    # _shared_shingle_pairs idiom): the aliased
+    # fps⋈fps / cg⋈cg spellings planned the whole winnowing / gram
+    # subtree once per side (Spark reuses exchanges only
+    # opportunistically); grouping into a doc_id-sorted posting array
+    # and inlining each unordered pair once keeps ONE lineage per
+    # relation and one exchange on the key. Posting buffers are
+    # bounded by the operator's own SUB_MAX_DOC(=500) cap. Output
+    # proven row-identical at sf0.1 (263 pairs); 1.71 → 1.56 s.
+    cand = (
+        fps.groupBy("fp")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .where(F.size("ds") >= 2)
+        .select(
+            F.expr(
+                "inline(flatten(transform(ds, (x, i) ->"
+                " transform(slice(ds, i + 2, size(ds) - i - 1), y ->"
+                " struct(x AS doc_a, y AS doc_b)))))"
+            )
+        )
+        .distinct()
+    )
+    cand_docs = (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .union(cand.select("doc_b"))
+        .distinct()
+    )
+    # 3. exact verify over candidate docs only
+    cg = grams.join(cand_docs, "doc_id", "left_semi")
+    shared = (
+        cg.groupBy("h")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .where(F.size("ds") >= 2)
+        .select(
+            F.expr(
+                "inline(flatten(transform(ds, (x, i) ->"
+                " transform(slice(ds, i + 2, size(ds) - i - 1), y ->"
+                " struct(x AS doc_a, y AS doc_b)))))"
+            )
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_shared_windows"))
+    )
+    # inner-join against cand: drops nothing when the guarantee holds
+    # (every truly-sharing pair IS a candidate); keeps the plan honest
+    # if parameters are ever edited out of sync
+    return shared.join(cand, ["doc_a", "doc_b"])
+
+
+# ---------------------------------------------------------------------------
+# exact-substring EXCISION — the Lee et al. 2022 pipeline's actual
+# output: the corpus with duplicate spans REMOVED, not just the pair
+# graph dedup_exact_substring detects
+
+#: shared CTE prefix for the two excise oracles: all SUB_L-grams →
+#: keep-first duplicate marking → per-doc maximal removed spans
+_EXCISE_ORACLE_SPANS = f"""
+    WITH g AS (
+        SELECT doc_id, i, md5(substr(text, CAST(i AS INT), {SUB_L})) AS h
+        FROM documents,
+             unnest(range(1, length(text) - {SUB_L} + 2)) AS t(i)
+        WHERE length(text) >= {SUB_L}),
+    dup AS (
+        SELECT doc_id, i FROM (
+            SELECT doc_id, i,
+                   ROW_NUMBER() OVER (PARTITION BY h
+                                      ORDER BY doc_id, i) AS rk
+            FROM g) WHERE rk > 1),
+    sp AS (
+        SELECT doc_id, i,
+               LAG(i) OVER (PARTITION BY doc_id ORDER BY i) AS pi
+        FROM dup),
+    isl AS (
+        SELECT doc_id, i,
+               SUM(CASE WHEN pi IS NULL OR i > pi + {SUB_L}
+                        THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY doc_id ORDER BY i) AS island
+        FROM sp),
+    spans AS (
+        SELECT doc_id, island, MIN(i) AS s, MAX(i) + {SUB_L} - 1 AS e
+        FROM isl GROUP BY doc_id, island)
+"""
+
+
+def _excise_spans(spark: SparkSession, sf_dir: str):
+    """Shared body of the excision pair: per-doc maximal duplicate
+    spans under the keep-first rule. Returns ``(docs, spans)`` where
+    ``spans`` is (doc_id, island, s, e) — merged 1-based char
+    intervals to remove.
+
+    Semantics (engine-portable, fully deterministic): a SUB_L(=24)-char
+    window is a DUPLICATE iff the same window content occurs earlier in
+    corpus order — at a smaller (doc_id, position) pair — i.e. every
+    gram's first occurrence is kept and all later ones are marked
+    (Lee et al. 2022, "Deduplicating Training Data Makes Language
+    Models Better": remove all but one occurrence of each duplicated
+    span; our canonical survivor is the corpus-order first). Marked
+    windows merge into maximal spans (overlapping OR adjacent).
+
+    Scale shape — winnowing-accelerated like ``dedup_exact_substring``:
+    the corpus-wide duplicate ranking only ever needs docs that CAN
+    contain a duplicated window, and the winnowing guarantee
+    (Schleimer et al. 2003: any shared substring of length ≥ k+w−1 =
+    SUB_L shares a selected fingerprint) plus the k-gram-multiplicity
+    check (an intra-doc duplicated L-window duplicates its first
+    k-gram at two positions) make the candidate gate a strict superset
+    of those docs. Non-candidate docs never enter the gram shuffle —
+    their grams are globally unique by construction, so gating loses
+    nothing (the oracle, which ranks ALL grams directly, re-proves
+    this corpus-wide every round). Remaining stages are doc-partitioned
+    windows over dup rows only (≤ doc-length rows per partition); the
+    one corpus-wide exchange is the gram hash ranking over candidate
+    docs, the same budget the pair detector already pays.
+
+    The candidate gate runs on xxhash64 LONGS: the gate is collision-TOLERANT — a hash
+    collision only ever ADDS a candidate doc (more shared
+    fingerprints, more apparent intra-doc repeats), never removes
+    one, so the superset guarantee — and with it the oracle-proved
+    output — is untouched while every gate row shrinks from a 32-char
+    md5 string to 8 bytes and the hashing itself vectorizes ~3×
+    cheaper. Only the VERIFY stage's duplicate ranking needs a
+    collision-FREE content hash; it rides the 16-byte BINARY md5
+    (:func:`_char_gram_hashes_bin` — same equality/order semantics as
+    the hex form at half the shuffled key bytes). On a vanilla
+    1 GiB session at 100× the md5-string gate OOM'd its
+    sort/aggregate spill-merges (140M × 56B gram rows; each spill
+    file's reader buffers ~1 MB of heap); the long-gram gate carries
+    the same rows at 24 B. Docs are also REPARTITIONED by doc_id
+    before every gram explosion, sized from the estimated gram volume
+    (``adaptive_partitions`` with ``GRAM_EXPAND``): parquet
+    splits size input tasks by FILE bytes, blind to the ~n_chars×
+    explode amplification, so 500k docs arrived as ~4 tasks — the
+    repartition also shuffles megabytes of documents instead of
+    gigabytes of grams and pre-satisfies every doc-partitioned
+    window downstream (a first row-local-array redesign of this gate
+    avoided the explode entirely but paid ~10× in interpreted HOF
+    time; the long-explode form keeps whole-stage codegen)."""
+    from watermill_kinesis_spark.sources.tables import adaptive_partitions
+
+    d = load_table(spark, sf_dir, "documents").repartition(
+        adaptive_partitions(spark, sf_dir, "documents", expand=GRAM_EXPAND),
+        "doc_id",
+    )
+    starts = F.sequence(F.lit(1), F.length("text") - SUB_K + 1)
+    kg = (
+        d.where(F.length("text") >= SUB_K)
+        .select("doc_id", F.explode(starts).alias("i"), "text")
+        .select(
+            "doc_id",
+            "i",
+            F.xxhash64(F.substr("text", F.col("i"), F.lit(SUB_K))).alias("h"),
+        )
+    )
+    # ONE linear pass computes BOTH candidate signals: branching kg into
+    # a fps subtree and an intra-count subtree made Spark re-run the
+    # whole gram explode per branch (~12 s CPU each at sf0.1, profiled).
+    # All three windows below are satisfied by the existing doc_id
+    # hash partitioning ({doc_id,h} ⊇ {doc_id}), so the fused form is
+    # explode-once, exchange-free until the (doc_id, fp) distinct:
+    # per-row k-gram multiplicity rides as ``rep`` next to the
+    # winnowing min/row_number, and the per-DOC intra flag is a
+    # max-over-doc window on the same partitioning. A doc with
+    # SUB_K ≤ len < SUB_L has no rn ≥ SUB_W row to carry its flag,
+    # but it also has no SUB_L-grams — it contributed nothing to the
+    # verify join under the old gate either (spans proven identical
+    # at sf0.1, 10856 rows).
+    win = W.partitionBy("doc_id").orderBy("i").rowsBetween(-(SUB_W - 1), 0)
+    rn = W.partitionBy("doc_id").orderBy("i")
+    sel = (
+        kg.select(
+            "doc_id",
+            F.min("h").over(win).alias("fp"),
+            F.row_number().over(rn).alias("rn"),
+            (F.count(F.lit(1)).over(W.partitionBy("doc_id", "h")) >= 2)
+            .cast("int")
+            .alias("rep"),
+        )
+        .select(
+            "doc_id",
+            "fp",
+            "rn",
+            F.max("rep").over(W.partitionBy("doc_id")).alias("intra"),
+        )
+        .where(F.col("rn") >= SUB_W)
+        .select("doc_id", "fp", "intra")
+        .distinct()
+    )
+    # candidates: docs sharing a selected fingerprint with another doc
+    # (count over the fp partition of the distinct (doc, fp) rows ≥ 2)
+    # or with an intra-doc k-gram repeat — same gate, no union/semi-join
+    cand = (
+        sel.select(
+            "doc_id",
+            "intra",
+            F.count(F.lit(1)).over(W.partitionBy("fp")).alias("nd"),
+        )
+        .where((F.col("nd") >= 2) | (F.col("intra") == 1))
+        .select("doc_id")
+        .distinct()
+    )
+    # binary md5 (h internal to the ranking — _char_gram_hashes_bin)
+    g = _char_gram_hashes_bin(d.join(cand, "doc_id", "left_semi"), SUB_L)
+    rk = F.row_number().over(W.partitionBy("h").orderBy("doc_id", "i"))
+    dup = (
+        g.select("doc_id", "i", rk.alias("rk"))
+        .where(F.col("rk") > 1)
+        .select("doc_id", "i")
+    )
+    lagw = W.partitionBy("doc_id").orderBy("i")
+    sp = dup.select("doc_id", "i", F.lag("i").over(lagw).alias("pi"))
+    new_island = F.when(
+        F.col("pi").isNull() | (F.col("i") > F.col("pi") + SUB_L), 1
+    ).otherwise(0)
+    isl = sp.select(
+        "doc_id",
+        "i",
+        F.sum(new_island)
+        .over(lagw.rowsBetween(W.unboundedPreceding, 0))
+        .alias("island"),
+    )
+    spans = isl.groupBy("doc_id", "island").agg(
+        F.min("i").alias("s"), (F.max("i") + SUB_L - 1).alias("e")
+    )
+    return d, spans
+
+
+@query(
+    "dedup_substring_excise",
+    oracle=_EXCISE_ORACLE_SPANS
+    + """,
+    census AS (
+        SELECT doc_id, CAST(SUM(e - s + 1) AS BIGINT) AS n_removed,
+               CAST(COUNT(*) AS BIGINT) AS n_spans
+        FROM spans GROUP BY doc_id)
+    SELECT d.doc_id,
+           CAST(length(d.text) AS BIGINT) AS n_chars,
+           CAST(COALESCE(c.n_removed, 0) AS BIGINT) AS n_removed_chars,
+           CAST(length(d.text) - COALESCE(c.n_removed, 0) AS BIGINT)
+               AS n_kept_chars,
+           CAST(COALESCE(c.n_spans, 0) AS BIGINT) AS n_dup_spans
+    FROM documents d LEFT JOIN census c USING (doc_id)
+    """,
+    tags=("pipeline", "dedup", "excision", "llm-pipeline"),
+)
+def dedup_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kept-byte census of exact-substring excision: per document, how
+    many chars survive removing every duplicate SUB_L-window (merged to
+    maximal spans, keep-first rule — see :func:`_excise_spans`). This
+    is the operator a training-data pipeline gates on ("how much of my
+    corpus is duplicated text?") and the driver-checkable face of the
+    corpus materialization in ``dedup_substring_excise_text``. The
+    oracle recomputes the census INDEPENDENTLY from all grams (no
+    fingerprint gating), so the winnowing candidate superset is
+    re-proved corpus-wide by the hash compare. Emits one row per doc
+    including untouched docs (n_removed_chars = 0)."""
+    d, spans = _excise_spans(spark, sf_dir)
+    census = spans.groupBy("doc_id").agg(
+        F.sum(F.col("e") - F.col("s") + 1).cast("bigint").alias("nr"),
+        F.count(F.lit(1)).cast("bigint").alias("ns"),
+    )
+    n_chars = F.length("text").cast("bigint")
+    rem = F.coalesce(F.col("nr"), F.lit(0)).cast("bigint")
+    return (
+        d.select("doc_id", "text")
+        .join(census, "doc_id", "left")
+        .select(
+            "doc_id",
+            n_chars.alias("n_chars"),
+            rem.alias("n_removed_chars"),
+            (n_chars - rem).cast("bigint").alias("n_kept_chars"),
+            F.coalesce(F.col("ns"), F.lit(0)).cast("bigint").alias("n_dup_spans"),
+        )
+    )
+
+
+@query(
+    "dedup_substring_excise_text",
+    oracle=_EXCISE_ORACLE_SPANS
+    + """,
+    last AS (SELECT doc_id, MAX(e) AS le FROM spans GROUP BY doc_id),
+    segs AS (
+        SELECT doc_id,
+               COALESCE(LAG(e) OVER (PARTITION BY doc_id ORDER BY s) + 1,
+                        1) AS ks,
+               s - 1 AS ke
+        FROM spans
+        UNION ALL
+        SELECT l.doc_id, l.le + 1 AS ks, length(d.text) AS ke
+        FROM last l JOIN documents d USING (doc_id)),
+    kept AS (
+        SELECT s.doc_id,
+               string_agg(substr(d.text, CAST(s.ks AS INT),
+                                 CAST(s.ke - s.ks + 1 AS INT)),
+                          '' ORDER BY s.ks) AS kept_text
+        FROM segs s JOIN documents d USING (doc_id)
+        WHERE s.ke >= s.ks GROUP BY s.doc_id)
+    SELECT d.doc_id,
+           CASE WHEN l.doc_id IS NULL THEN d.text
+                ELSE COALESCE(k.kept_text, '') END AS kept_text
+    FROM documents d
+    LEFT JOIN last l USING (doc_id)
+    LEFT JOIN kept k USING (doc_id)
+    """,
+    tags=("pipeline", "dedup", "excision", "llm-pipeline"),
+)
+def dedup_substring_excise_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MATERIALIZED deduplicated corpus — Lee et al. 2022's actual
+    pipeline output: each document's text with its duplicate spans cut
+    out (keep-first rule, maximal merged spans — :func:`_excise_spans`).
+    Kept segments are the complement intervals of the removed spans;
+    they are rebuilt with pure built-in functions — each doc's merged
+    spans are collapsed to ONE sorted array row, joined to the corpus
+    once, and the complement concat is a single ``aggregate`` fold
+    over that array — no UDF, per-doc state bounded by doc length,
+    never corpus size. Crucially the expensive spans sub-DAG (the
+    winnowing gram ranking of :func:`_excise_spans`) appears exactly
+    ONCE in the plan: the first cut of this operator referenced spans
+    from three branches (lead segments / tail segment / touched-doc
+    probe) and Spark re-evaluated the whole ranking per branch — ~3×
+    the census runtime for the same answer (measured 10.0 s at sf0.1
+    before this re-plan). A doc whose every window is a later
+    duplicate excises to the empty string; untouched docs (no spans
+    row) pass through verbatim. The oracle reconstructs the same
+    strings from the direct all-grams ranking with ordered
+    ``string_agg``, so the driver hash-compares the full cleaned
+    corpus byte-for-byte."""
+    d, spans = _excise_spans(spark, sf_dir)
+    spans_arr = spans.groupBy("doc_id").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("s").cast("bigint").alias("s"),
+                    F.col("e").cast("bigint").alias("e"),
+                )
+            )
+        ).alias("sp")
+    )
+    # one fold per doc: walk the sorted removed spans, emitting the gap
+    # before each span, then the tail after the last one. substring()
+    # with a non-positive length yields '' (first span at pos 1, or a
+    # span ending exactly at the doc tail), so no edge branches needed.
+    kept = F.expr(
+        """
+        CASE WHEN sp IS NULL THEN text ELSE aggregate(
+            sp,
+            named_struct('pos', CAST(1 AS BIGINT), 'acc', ''),
+            (a, x) -> named_struct(
+                'pos', x.e + CAST(1 AS BIGINT),
+                'acc', concat(a.acc, substring(text, CAST(a.pos AS INT),
+                                               CAST(x.s - a.pos AS INT)))),
+            a -> concat(a.acc,
+                        substring(text, CAST(a.pos AS INT),
+                                  CAST(length(text) - a.pos + 1 AS INT))))
+        END
+        """
+    ).alias("kept_text")
+    return (
+        d.select("doc_id", "text")
+        .join(spans_arr, "doc_id", "left")
+        .select("doc_id", kept)
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup token accounting
+
+
+@query(
+    "dedup_token_savings",
+    oracle="""
+    WITH keyed AS (
+        SELECT source, len(string_split(text, ' ')) AS ntok,
+               ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
+        FROM documents WHERE text IS NOT NULL)
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT_IF(rn = 1) AS BIGINT) AS n_kept,
+           CAST(SUM(ntok) AS BIGINT) AS tok_total,
+           CAST(COALESCE(SUM(CASE WHEN rn = 1 THEN ntok END), 0) AS BIGINT)
+               AS tok_kept,
+           CAST(1000 * (SUM(ntok)
+                        - COALESCE(SUM(CASE WHEN rn = 1 THEN ntok END), 0))
+                // SUM(ntok) AS BIGINT) AS savings_permille
+    FROM keyed GROUP BY source
+    """,
+    tags=("dedup", "pipeline", "llm-pipeline"),
+)
+def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-budget accounting for exact dedup — the number a training
+    -data pipeline actually reports upward: per source, how many
+    tokens the corpus holds, how many survive keep-first exact dedup,
+    and the savings in permille (what dedup buys before any fuzzy
+    pass). Keep-first = ROW_NUMBER over the text partition ordered by
+    doc_id — NO join against a text dictionary anywhere (the
+    dedup_paragraph/ngram_novelty lesson: a corpus-derived text key
+    must never be a join build side); the window's partition key is
+    corpus-cardinality, so parallelism is intact, and token counts
+    ride size(split(·)) per doc row — no explode. int64-safe
+    trivially (token totals)."""
+    keyed = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("text").isNotNull())
+        .select(
+            "source",
+            F.size(F.split("text", " ")).alias("ntok"),
+            F.row_number()
+            .over(W.partitionBy("text").orderBy("doc_id"))
+            .alias("rn"),
+        )
+    )
+    kept = F.sum(F.when(F.col("rn") == 1, F.col("ntok")))
+    return keyed.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.count_if(F.col("rn") == 1).cast("bigint").alias("n_kept"),
+        F.sum("ntok").cast("bigint").alias("tok_total"),
+        F.coalesce(kept, F.lit(0)).cast("bigint").alias("tok_kept"),
+        F.expr(
+            "CAST((1000 * (SUM(ntok)"
+            " - COALESCE(SUM(CASE WHEN rn = 1 THEN ntok END), 0)))"
+            " div SUM(ntok) AS BIGINT)"
+        ).alias("savings_permille"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# incremental-ingest exact dedup delta
+
+#: the "new batch" is the last fifth of the doc_id ingest range —
+#: deterministic, scale-free, and non-degenerate at every SF
+INGEST_SPLIT_NUM = 4
+INGEST_SPLIT_DEN = 5
+
+
+@query(
+    "ingest_dedup_delta",
+    oracle=f"""
+    WITH bounds AS (
+        SELECT MIN(doc_id) AS lo,
+               MIN(doc_id) + (MAX(doc_id) - MIN(doc_id) + 1)
+                   * {INGEST_SPLIT_NUM} // {INGEST_SPLIT_DEN} AS cut
+        FROM documents),
+    hashed AS (
+        SELECT doc_id, source, md5(text) AS h,
+               len(string_split(text, ' ')) AS ntok,
+               doc_id >= (SELECT cut FROM bounds) AS is_new
+        FROM documents WHERE text IS NOT NULL),
+    old_h AS (SELECT DISTINCT h FROM hashed WHERE NOT is_new),
+    newb AS (
+        SELECT n.*, o.h IS NOT NULL AS dup_corpus,
+               ROW_NUMBER() OVER (PARTITION BY n.h ORDER BY n.doc_id) AS rn
+        FROM hashed n LEFT JOIN old_h o USING (h)
+        WHERE n.is_new)
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_new,
+           CAST(COUNT_IF(dup_corpus) AS BIGINT) AS n_dup_corpus,
+           CAST(COUNT_IF(NOT dup_corpus AND rn > 1) AS BIGINT)
+               AS n_dup_intra,
+           CAST(COUNT_IF(NOT dup_corpus AND rn = 1) AS BIGINT) AS n_kept,
+           CAST(SUM(ntok) AS BIGINT) AS tok_new,
+           CAST(COALESCE(SUM(CASE WHEN NOT dup_corpus AND rn = 1
+                                  THEN ntok END), 0) AS BIGINT) AS tok_kept
+    FROM newb GROUP BY source
+    """,
+    tags=("dedup", "pipeline", "llm-pipeline"),
+)
+def ingest_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental-ingest dedup accounting — the shape a production
+    pipeline actually runs (nobody re-dedups 100 TB per crawl): the
+    NEW batch (last fifth of the ingest-ordered doc_id range, a
+    deterministic stand-in for "this week's crawl") is checked
+    against the EXISTING corpus by exact text hash, then within
+    itself by keep-first. Per source of the new batch: docs already
+    in the corpus, intra-batch duplicates, survivors, and the token
+    budget before/after. The corpus probe is a LEFT join against the
+    distinct old-hash relation pinned ``merge``: both sides grow with
+    the corpus and the build side is a corpus-derived content-hash
+    dictionary — never broadcastable (the r9/r10 rule; shuffled-hash
+    builds die at AQE's coalesced-partition sizes, the simhash
+    lesson). Intra-batch keep-first is a window over the hash
+    partition — no dictionary join at all (the dedup_token_savings
+    shape). The ingest cut itself is one scalar MIN/MAX aggregate."""
+    d = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    bounds = d.agg(
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hihi")
+    ).selectExpr(
+        "lo",
+        f"lo + ((hihi - lo + 1) * {INGEST_SPLIT_NUM})"
+        f" div {INGEST_SPLIT_DEN} AS cut",
+    )
+    hashed = d.crossJoin(F.broadcast(bounds)).select(
+        "doc_id",
+        "source",
+        F.md5("text").alias("h"),
+        F.size(F.split("text", " ")).alias("ntok"),
+        (F.col("doc_id") >= F.col("cut")).alias("is_new"),
+    )
+    old_h = hashed.where(~F.col("is_new")).select("h").distinct()
+    newb = hashed.where("is_new").join(
+        old_h.select(F.col("h"), F.lit(True).alias("dup_corpus")).hint(
+            "merge"
+        ),
+        "h",
+        "left",
+    )
+    rn = F.row_number().over(W.partitionBy("h").orderBy("doc_id"))
+    newb = newb.select(
+        "source",
+        "ntok",
+        F.coalesce("dup_corpus", F.lit(False)).alias("dup_corpus"),
+        rn.alias("rn"),
+    )
+    kept = ~F.col("dup_corpus") & (F.col("rn") == 1)
+    return newb.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_new"),
+        F.count_if(F.col("dup_corpus")).cast("bigint").alias("n_dup_corpus"),
+        F.count_if(~F.col("dup_corpus") & (F.col("rn") > 1))
+        .cast("bigint")
+        .alias("n_dup_intra"),
+        F.count_if(kept).cast("bigint").alias("n_kept"),
+        F.sum("ntok").cast("bigint").alias("tok_new"),
+        F.coalesce(F.sum(F.when(kept, F.col("ntok"))), F.lit(0))
+        .cast("bigint")
+        .alias("tok_kept"),
     )

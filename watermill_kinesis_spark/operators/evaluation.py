@@ -1,18 +1,23 @@
-"""Model/data evaluation metrics — the measurement half of a training
-pipeline: ranking quality (exact AUC), distribution drift (exact
-Kolmogorov–Smirnov matrix), corpus inequality (exact Gini), the
-chi-square statistic completing ``crosstab_expected``'s promise,
-probability calibration bins, deterministic k-fold assignment, content
-addressing, a closed-form regression fit from distributed sums,
-trend and change-point tests over time series, and the audits a
-dedup/mixing pipeline reports: record-linkage blocking quality (pairs
-completeness against reduction ratio, Christen 2012), Cliff's delta
-ordinal effect size, and Herfindahl–Hirschman concentration.
+"""Model/data evaluation metrics and statistical tests — the measurement
+half of a training pipeline: ranking quality (exact AUC), distribution
+drift (exact Kolmogorov–Smirnov matrix, Cramér–von Mises), corpus
+inequality (exact Gini), contingency tables and the chi-square
+statistic, correlation matrices, probability calibration bins and the
+Brier decomposition, deterministic k-fold assignment, content
+addressing, a closed-form regression fit from distributed sums, trend
+and change-point tests over time series, two-sample and k-sample
+tests (Welch, Mann-Whitney, Kruskal-Wallis, Levene, Ansari-Bradley,
+Mood, McNemar, Cochran-Armitage), robust statistics (MAD, winsorized
+mean, IQR fences), Benford and day-of-week screens, A/B readouts,
+survival (Kaplan-Meier), and the audits a dedup/mixing pipeline
+reports: record-linkage blocking quality (pairs completeness against
+reduction ratio, Christen 2012), Cliff's delta ordinal effect size,
+and Herfindahl–Hirschman concentration.
 
 Every metric that reaches the oracle hash is INTEGER arithmetic
 (permille / micro scaling with integer division), so Spark and DuckDB
 agree bit-for-bit with no float-accumulation-order hazard — the same
-determinism discipline as analytics.py / frequency.py. Integer
+determinism discipline as frequency.py. Integer
 division is SQL ``div`` on Spark and ``//`` in the oracle — BOTH
 truncate toward zero (verified on negatives: −7÷2 → −3 on each), so
 signed quotients like a below-chance kappa are exact and identical;
@@ -46,7 +51,6 @@ operators").
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
-
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from watermill_kinesis_spark.functions.distscan import (
@@ -57,6 +61,7 @@ from watermill_kinesis_spark.functions.distscan import (
     ntile_closed_form,
     range_slices,
 )
+from watermill_kinesis_spark.functions.exact import lcents
 from watermill_kinesis_spark.functions.localrel import local_relation
 from watermill_kinesis_spark.functions.scope import Scope
 from watermill_kinesis_spark.registry import query
@@ -246,7 +251,7 @@ def auc_roc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact truncating quotient: all terms are non-negative ints,
         # so Python // matches SQL div and DuckDB // bit-for-bit
         out.append((g, n_pos, n_neg, (u2 * 1000) // (2 * n_pos * n_neg)))
-    return local_relation(spark, 
+    return local_relation(spark,
         out,
         StructType(
             [
@@ -334,7 +339,7 @@ def ks_drift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the event-type enum is bounded (it is a code, not data): collect
     # to build the pair list driver-side, then broadcast
     types = sorted(r.t for r in vals.select("t").distinct().collect())
-    pairs = local_relation(spark, 
+    pairs = local_relation(spark,
         [(a, b) for i, a in enumerate(types) for b in types[i + 1 :]],
         "t1 string, t2 string",
     )
@@ -1226,7 +1231,7 @@ def runs_test_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (et, s["bounds"] + 1, n1, n2, 1000 + (2000 * n1 * n2) // (n1 + n2))
         )
-    return local_relation(spark, 
+    return local_relation(spark,
         rows,
         "event_type string, n_runs bigint, n1 bigint, n2 bigint,"
         " expected_runs_milli bigint",
@@ -1458,7 +1463,7 @@ def isotonic_pav_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     if bi != len(blocks) or in_block != 0:
         boundaries = False
 
-    return local_relation(spark, 
+    return local_relation(spark,
         [
             (
                 n_rows,
@@ -2452,3 +2457,2136 @@ def odds_ratio_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "               div ((a + b) * (c + d)) END AS BIGINT)"
         " AS risk_diff_micro",
     )
+
+
+#: Welch t² from exact bigint moments — the SAME double expression text
+#: runs on both engines (all casts to DOUBLE up front; sample variance
+#: via the computational formula; NULL for degenerate groups rather
+#: than a cross-engine div-by-zero skew, the funnel/auc guard pattern)
+_WELCH_T2 = """
+    CASE WHEN n1 >= 2 AND n2 >= 2
+              AND (CAST(ss1 AS DOUBLE)
+                   - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
+                     / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1e0)
+                  / CAST(n1 AS DOUBLE)
+                + (CAST(ss2 AS DOUBLE)
+                   - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE)
+                     / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1e0)
+                  / CAST(n2 AS DOUBLE) > 0e0
+    THEN
+        (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
+         - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
+        * (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
+           - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
+        / ((CAST(ss1 AS DOUBLE)
+            - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
+           / (CAST(n1 AS DOUBLE) - 1e0) / CAST(n1 AS DOUBLE)
+           + (CAST(ss2 AS DOUBLE)
+              - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
+             / (CAST(n2 AS DOUBLE) - 1e0) / CAST(n2 AS DOUBLE))
+    ELSE NULL END
+"""
+
+
+@query(
+    "welch_ttest_lengths",
+    oracle=f"""
+    WITH g AS (
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n1,
+               CAST(SUM(n_chars) AS BIGINT) AS s1,
+               CAST(SUM(CAST(n_chars AS BIGINT) * n_chars) AS BIGINT) AS ss1
+        FROM documents WHERE n_chars IS NOT NULL GROUP BY source),
+    tot AS (
+        SELECT SUM(n1) AS nt, SUM(s1) AS st, SUM(ss1) AS sst FROM g),
+    j AS (
+        SELECT g.source, g.n1, g.s1, g.ss1,
+               CAST(tot.nt - g.n1 AS BIGINT) AS n2,
+               CAST(tot.st - g.s1 AS BIGINT) AS s2,
+               CAST(tot.sst - g.ss1 AS BIGINT) AS ss2
+        FROM g CROSS JOIN tot)
+    SELECT source, n1, s1, ss1, n2, s2, ss2,
+           {_WELCH_T2} AS welch_t2
+    FROM j
+    """,
+    tags=("stats", "drift", "quality", "llm-pipeline"),
+)
+def welch_ttest_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source length-drift audit: Welch's unequal-variance t²
+    statistic of each source's document lengths against the REST of
+    the corpus — the one-vs-rest mean-shift screen a training-data
+    pipeline runs when a crawl source starts emitting truncated or
+    concatenated documents (the ``ks_drift_matrix`` sibling for means;
+    KS is the whole-distribution screen). Exact bigint moments
+    (n, Σlen, Σlen²) per source; the complement group is derived by
+    subtracting from corpus totals — no second scan, no self-join.
+    t² is ONE shared double expression over those bigints
+    (cross-engine bit-equal; see module docstring), NULL on degenerate
+    groups (n < 2 or zero pooled variance) rather than an
+    engine-divergent division by zero.
+
+    Rows with NULL n_chars are filtered up front — COUNT(*) would
+    count them while SUM skips them, silently mixing populations in
+    the moments (identically on both engines, so parity alone would
+    not catch it).
+
+    Plan: one map-side-combined groupBy(source) over the corpus, one
+    broadcast cross-join of the |sources|-row table against its own
+    1-row total. At 100 TB this is a single aggregation pass; the t²
+    math runs on |sources| rows."""
+    d = load_table(spark, sf_dir, "documents").where(
+        F.col("n_chars").isNotNull()
+    )
+    nc = F.col("n_chars").cast("bigint")
+    g = d.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n1"),
+        F.sum(nc).cast("bigint").alias("s1"),
+        F.sum(nc * nc).cast("bigint").alias("ss1"),
+    )
+    tot = g.agg(
+        F.sum("n1").alias("nt"), F.sum("s1").alias("st"), F.sum("ss1").alias("sst")
+    )
+    j = g.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "n1",
+        "s1",
+        "ss1",
+        (F.col("nt") - F.col("n1")).cast("bigint").alias("n2"),
+        (F.col("st") - F.col("s1")).cast("bigint").alias("s2"),
+        (F.col("sst") - F.col("ss1")).cast("bigint").alias("ss2"),
+    )
+    return j.select(
+        "source",
+        "n1",
+        "s1",
+        "ss1",
+        "n2",
+        "s2",
+        "ss2",
+        F.expr(_WELCH_T2).alias("welch_t2"),
+    )
+
+
+#: Wilson interval: z for 95% two-sided, and the report width
+WILSON_Z = "1.96e0"
+WILSON_TOP_N = 20
+
+#: the SAME double expression runs on both engines: n/r are exact
+#: bigints; +,*,/ and sqrt() are IEEE-754 correctly-rounded in both
+#: (unlike ln/exp), so the emitted score is bit-identical
+_WILSON_LB = f"""
+    (CAST(r AS DOUBLE) / CAST(n AS DOUBLE)
+     + {WILSON_Z} * {WILSON_Z} / (2e0 * CAST(n AS DOUBLE))
+     - {WILSON_Z} * sqrt(
+         (CAST(r AS DOUBLE) / CAST(n AS DOUBLE)
+          * (1e0 - CAST(r AS DOUBLE) / CAST(n AS DOUBLE))
+          + {WILSON_Z} * {WILSON_Z} / (4e0 * CAST(n AS DOUBLE)))
+         / CAST(n AS DOUBLE)))
+    / (1e0 + {WILSON_Z} * {WILSON_Z} / CAST(n AS DOUBLE))
+"""
+
+
+@query(
+    "wilson_lower_bound_rank",
+    oracle=f"""
+    WITH g AS (
+        SELECT l_suppkey,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(COUNT_IF(l_returnflag = 'R') AS BIGINT) AS r
+        FROM lineitem GROUP BY l_suppkey)
+    SELECT l_suppkey, n, r, {_WILSON_LB} AS wilson_lb
+    FROM g
+    ORDER BY wilson_lb DESC, l_suppkey
+    LIMIT {WILSON_TOP_N}
+    """,
+    tags=("stats", "ranking", "agg"),
+)
+def wilson_lower_bound_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Suppliers ranked by the Wilson score interval's lower bound on
+    their return rate — the small-sample-honest way to rank
+    proportions (a 1/1 = 100% supplier must NOT outrank a 480/500 =
+    96% one; the raw rate does exactly that, the Wilson lower bound
+    does not). The industry-standard fix popularized by Miller's
+    "How Not To Sort By Average Rating". Exact bigint (n, r) per
+    group; the bound is ONE shared double expression — sqrt is
+    IEEE-754 correctly-rounded in both engines (unlike ln/exp), so
+    this extends the bm25 shared-double discipline to interval
+    statistics and the emitted score hash-compares bit-exactly.
+
+    Plan: one map-side-combined groupBy over the fact table, then
+    |suppliers| rows of double math and a TakeOrdered top-N with a
+    total order (bound desc, supplier) — a single corpus scan at any
+    scale."""
+    li = load_table(spark, sf_dir, "lineitem")
+    g = li.groupBy("l_suppkey").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.count_if(F.col("l_returnflag") == "R").cast("bigint").alias("r"),
+    )
+    return (
+        g.select("l_suppkey", "n", "r", F.expr(_WILSON_LB).alias("wilson_lb"))
+        .orderBy(F.desc("wilson_lb"), F.asc("l_suppkey"))
+        .limit(WILSON_TOP_N)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Mann-Whitney U (nonparametric length drift, en vs rest)
+
+
+@query(
+    "mann_whitney_u_lengths",
+    oracle="""
+    WITH vals AS (
+        SELECT n_chars AS v, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS g
+        FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+    per_v AS (
+        SELECT v, COUNT_IF(g = 1) AS n1v, COUNT_IF(g = 0) AS n0v,
+               COUNT(*) AS t
+        FROM vals GROUP BY v),
+    ranked AS (
+        SELECT *,
+               COALESCE(SUM(t) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS cum_before
+        FROM per_v),
+    m AS (
+        SELECT SUM(n1v) AS n1, SUM(n0v) AS n0,
+               SUM(n1v * (2 * cum_before + t + 1)) AS r1x2,
+               SUM(t * t * t - t) AS t3t
+        FROM ranked)
+    SELECT CAST(n1 AS BIGINT) AS n1, CAST(n0 AS BIGINT) AS n0,
+           CAST(r1x2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
+           CAST(2 * n1 * n0 - (r1x2 - n1 * (n1 + 1)) AS BIGINT) AS u2_x2,
+           CAST(t3t AS BIGINT) AS tie_t3t,
+           CASE WHEN n1 > 0 AND n0 > 0 AND (n1 + n0) > 1
+                     AND (CAST(n1 AS DOUBLE) * n0 / 12e0)
+                         * ((n1 + n0 + 1e0)
+                            - CAST(t3t AS DOUBLE)
+                              / (CAST(n1 + n0 AS DOUBLE) * (n1 + n0 - 1e0)))
+                         > 0e0
+                THEN CAST(r1x2 - n1 * (n1 + 1) - n1 * n0 AS DOUBLE)
+                     / (2e0 * sqrt((CAST(n1 AS DOUBLE) * n0 / 12e0)
+                        * ((n1 + n0 + 1e0)
+                           - CAST(t3t AS DOUBLE)
+                             / (CAST(n1 + n0 AS DOUBLE) * (n1 + n0 - 1e0)))))
+                ELSE 0e0 END AS z
+    FROM m
+    """,
+    tags=("evaluation", "statistics", "drift", "llm-pipeline"),
+)
+def mann_whitney_u_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Whitney U test of document length, English vs everything
+    else — the NONPARAMETRIC companion of ``welch_ttest_lengths``
+    (rank-based, so heavy-tailed length distributions can't fake or
+    mask a drift the way they can a t statistic). Midranks over ties
+    are kept integral by the ×2 trick: 2·midrank(v) = 2·(count below)
+    + t_v + 1, so 2·R₁ and both 2·U statistics are EXACT bigints, and
+    the tie-corrected normal approximation z is emitted as one shared
+    double expression over those bigint moments (its only
+    transcendental is sqrt — IEEE-correctly-rounded, bit-exact
+    cross-engine; the Welch precedent). Zero-variance and empty-group
+    edges return z = 0 by the same CASE on both engines. Plan: the
+    corpus collapses to |distinct n_chars| aggregated rows FIRST; the
+    cumulative window then runs over that bounded value table (the
+    plan-audit single-partition exemption: aggregate below), and the
+    final moments are one scalar aggregate. Bounds: Σ(t³−t) ≤ n³
+    needs n ≲ 2·10⁶ per distinct-value tie group for int64 — holds at
+    the 100× replica (n = 5·10⁵ total); past that lift to
+    decimal(38,0)."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
+        .select(
+            F.col("n_chars").alias("v"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("g"),
+        )
+    )
+    per_v = vals.groupBy("v").agg(
+        F.count_if(F.col("g") == 1).alias("n1v"),
+        F.count_if(F.col("g") == 0).alias("n0v"),
+        F.count(F.lit(1)).alias("t"),
+    )
+    cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
+    ranked = per_v.select(
+        "n1v",
+        "n0v",
+        "t",
+        F.coalesce(F.sum("t").over(cum), F.lit(0)).alias("cum_before"),
+    )
+    m = ranked.agg(
+        F.sum("n1v").alias("n1"),
+        F.sum("n0v").alias("n0"),
+        F.sum(
+            F.col("n1v") * (2 * F.col("cum_before") + F.col("t") + 1)
+        ).alias("r1x2"),
+        F.sum(
+            F.col("t") * F.col("t") * F.col("t") - F.col("t")
+        ).alias("t3t"),
+    )
+    return m.selectExpr(
+        "CAST(n1 AS BIGINT) AS n1",
+        "CAST(n0 AS BIGINT) AS n0",
+        "CAST(r1x2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2",
+        "CAST(2 * n1 * n0 - (r1x2 - n1 * (n1 + 1)) AS BIGINT) AS u2_x2",
+        "CAST(t3t AS BIGINT) AS tie_t3t",
+        "CASE WHEN n1 > 0 AND n0 > 0 AND (n1 + n0) > 1"
+        "          AND (CAST(n1 AS DOUBLE) * n0 / 12e0)"
+        "              * ((n1 + n0 + 1e0)"
+        "                 - CAST(t3t AS DOUBLE)"
+        "                   / (CAST(n1 + n0 AS DOUBLE) * (n1 + n0 - 1e0)))"
+        "              > 0e0"
+        "     THEN CAST(r1x2 - n1 * (n1 + 1) - n1 * n0 AS DOUBLE)"
+        "          / (2e0 * sqrt((CAST(n1 AS DOUBLE) * n0 / 12e0)"
+        "             * ((n1 + n0 + 1e0)"
+        "                - CAST(t3t AS DOUBLE)"
+        "                  / (CAST(n1 + n0 AS DOUBLE) * (n1 + n0 - 1e0)))))"
+        "     ELSE 0e0 END AS z",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Murphy decomposition of the Brier score over calibration bins
+
+#: forecast bins (shared with calibration_bins_exact's NTILE count)
+BRIER_BINS = 10
+
+
+@query(
+    "brier_decomposition_exact",
+    oracle=f"""
+    WITH scored AS (
+        SELECT o_orderpriority AS grp,
+               NTILE({BRIER_BINS}) OVER (
+                   PARTITION BY o_orderpriority
+                   ORDER BY o_totalprice, o_orderkey) AS bin,
+               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS pos
+        FROM orders),
+    bins AS (
+        SELECT grp, bin, COUNT(*) AS n, SUM(pos) AS pos
+        FROM scored GROUP BY grp, bin),
+    tot AS (
+        SELECT *, SUM(n) OVER (PARTITION BY grp) AS ng,
+               SUM(pos) OVER (PARTITION BY grp) AS posg
+        FROM bins)
+    SELECT grp, CAST(bin AS BIGINT) AS bin, CAST(n AS BIGINT) AS n,
+           CAST(pos AS BIGINT) AS positives,
+           CAST(bin * 100 AS BIGINT) AS forecast_permille,
+           CAST(1000 * pos // n AS BIGINT) AS rate_permille,
+           CAST(CAST(1000000 AS HUGEINT)
+                * (bin * n - {BRIER_BINS} * pos) * (bin * n - {BRIER_BINS} * pos)
+                // ({BRIER_BINS * BRIER_BINS} * CAST(n AS HUGEINT))
+                AS BIGINT) AS rel_contrib_micro,
+           CAST(CAST(1000000 AS HUGEINT)
+                * (pos * ng - posg * n) * (pos * ng - posg * n)
+                // (CAST(n AS HUGEINT) * ng * ng) AS BIGINT)
+               AS res_contrib_micro,
+           CAST(CAST(1000000 AS HUGEINT) * posg * (ng - posg)
+                // (CAST(ng AS HUGEINT) * ng) AS BIGINT) AS unc_grp_micro
+    FROM tot
+    """,
+    tags=("evaluation", "statistics", "ranking"),
+)
+def brier_decomposition_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Murphy (1973) decomposition of the Brier score over forecast
+    bins — Brier = RELIABILITY − RESOLUTION + UNCERTAINTY, the
+    diagnosis behind every reliability diagram: is a bad score
+    miscalibration (REL), or a forecaster that can't separate
+    outcomes (low RES)? Forecast = bin/10 over the same deterministic
+    NTILE deciles as ``calibration_bins_exact`` (via the distributed
+    :func:`grouped_scan` + closed-form NTILE — no enum-partitioned
+    window over raw rows); outcome = order status. Every term is an
+    exact integer in micro units via cross-multiplication, per the
+    chi2_statistic_exact convention — squared intermediates ride
+    decimal(38,0) ↔ HUGEINT, exact through N per group ≈ 10¹⁵ —
+    and the identity Σ(rel−res)/N + unc = Brier(binned forecast)
+    holds in the consumer's rationals. The group windows run over the
+    50-row bin table (aggregate below: plan-audit-exempt)."""
+    from watermill_kinesis_spark.functions.distscan import (
+        group_sizes_df,
+        grouped_scan,
+        ntile_closed_form,
+    )
+
+    o = load_table(spark, sf_dir, "orders")
+    scored = o.select(
+        F.col("o_orderpriority").alias("grp"),
+        F.col("o_totalprice").alias("score"),
+        F.col("o_orderkey").alias("okey"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
+    )
+    ranked, totals = grouped_scan(
+        scored, ["grp"], [F.col("score"), F.col("okey")]
+    )
+    sizes = group_sizes_df(spark, totals, ranked.select("grp").schema)
+    binned = ranked.join(F.broadcast(sizes), "grp").select(
+        "grp",
+        ntile_closed_form(F.col("rn"), F.col("n"), BRIER_BINS).alias("bin"),
+        "pos",
+    )
+    bins = binned.groupBy("grp", "bin").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("pos")
+    )
+    gw = W.partitionBy("grp")
+    tot = bins.select(
+        "grp",
+        "bin",
+        "n",
+        "pos",
+        F.sum("n").over(gw).alias("ng"),
+        F.sum("pos").over(gw).alias("posg"),
+    )
+    return tot.selectExpr(
+        "grp",
+        "CAST(bin AS BIGINT) AS bin",
+        "CAST(n AS BIGINT) AS n",
+        "CAST(pos AS BIGINT) AS positives",
+        "CAST(bin * 100 AS BIGINT) AS forecast_permille",
+        "CAST((1000 * pos) div n AS BIGINT) AS rate_permille",
+        "CAST(CAST(1000000 AS DECIMAL(38,0))"
+        f" * (bin * n - {BRIER_BINS} * pos) * (bin * n - {BRIER_BINS} * pos)"
+        f" div ({BRIER_BINS * BRIER_BINS} * CAST(n AS DECIMAL(38,0)))"
+        " AS BIGINT) AS rel_contrib_micro",
+        "CAST(CAST(1000000 AS DECIMAL(38,0))"
+        " * (pos * ng - posg * n) * (pos * ng - posg * n)"
+        " div (CAST(n AS DECIMAL(38,0)) * ng * ng) AS BIGINT)"
+        " AS res_contrib_micro",
+        "CAST(CAST(1000000 AS DECIMAL(38,0)) * posg * (ng - posg)"
+        " div (CAST(ng AS DECIMAL(38,0)) * ng) AS BIGINT)"
+        " AS unc_grp_micro",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Cramér-von Mises two-sample drift (integral companion of KS / MW)
+
+
+@query(
+    "cramer_von_mises_lengths",
+    oracle="""
+    WITH vals AS (
+        SELECT n_chars AS v, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS g
+        FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+    per_v AS (
+        SELECT v, COUNT_IF(g = 1) AS av, COUNT_IF(g = 0) AS bv,
+               COUNT(*) AS t
+        FROM vals GROUP BY v),
+    cum AS (
+        SELECT *,
+               SUM(av) OVER (ORDER BY v) AS ca,
+               SUM(bv) OVER (ORDER BY v) AS cb
+        FROM per_v),
+    m AS (
+        SELECT SUM(av) AS n1, SUM(bv) AS n0,
+               SUM(t * (CAST(ca * (SELECT SUM(bv) FROM per_v)
+                             - cb * (SELECT SUM(av) FROM per_v) AS HUGEINT)
+                        * (ca * (SELECT SUM(bv) FROM per_v)
+                           - cb * (SELECT SUM(av) FROM per_v)))) AS s
+        FROM cum)
+    SELECT CAST(n1 AS BIGINT) AS n1, CAST(n0 AS BIGINT) AS n0,
+           CAST(CAST(1000000 AS HUGEINT) * s
+                // (CAST(n1 + n0 AS HUGEINT) * (n1 + n0) * n1 * n0)
+                AS BIGINT) AS t_micro
+    FROM m
+    """,
+    tags=("evaluation", "statistics", "drift", "llm-pipeline"),
+)
+def cramer_von_mises_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample Cramér-von Mises statistic on document length,
+    English vs everything else — the INTEGRAL drift measure completing
+    the two-sample family: KS (``ks_drift_matrix``) reacts to the
+    worst single ECDF gap, Mann-Whitney (``mann_whitney_u_lengths``)
+    to median shift, CvM to the whole squared ECDF difference — the
+    one that catches variance/shape drift a location test misses.
+    T = nm/(n+m)²·Σ_pooled (F(x)−G(x))², evaluated per distinct value
+    with multiplicities: every term is the cross-multiplied integer
+    t_v·(A_v·m − B_v·n)², summed in decimal(38,0) ↔ HUGEINT (the
+    squared term passes int64 around n·m ≈ 3·10⁹ — the 100× replica
+    already needs 128-bit), and T is reported in exact micro units by
+    one 128-bit quotient. Plan: the corpus collapses to |distinct
+    n_chars| rows first; cumulative windows run over that bounded
+    aggregated table (plan-audit-exempt); one scalar fold."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
+        .select(
+            F.col("n_chars").alias("v"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("g"),
+        )
+    )
+    per_v = vals.groupBy("v").agg(
+        F.count_if(F.col("g") == 1).alias("av"),
+        F.count_if(F.col("g") == 0).alias("bv"),
+        F.count(F.lit(1)).alias("t"),
+    )
+    cumw = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
+    totw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    cum = per_v.select(
+        "av",
+        "bv",
+        "t",
+        F.sum("av").over(cumw).alias("ca"),
+        F.sum("bv").over(cumw).alias("cb"),
+        F.sum("av").over(totw).alias("n1"),
+        F.sum("bv").over(totw).alias("n0"),
+    )
+    m = cum.agg(
+        F.max("n1").alias("n1"),
+        F.max("n0").alias("n0"),
+        F.sum(
+            F.expr(
+                "t * (CAST(ca * n0 - cb * n1 AS DECIMAL(38,0))"
+                "      * (ca * n0 - cb * n1))"
+            )
+        ).alias("s"),
+    )
+    return m.selectExpr(
+        "CAST(n1 AS BIGINT) AS n1",
+        "CAST(n0 AS BIGINT) AS n0",
+        "CAST(CAST(1000000 AS DECIMAL(38,0)) * s"
+        " div (CAST(n1 + n0 AS DECIMAL(38,0)) * (n1 + n0) * n1 * n0)"
+        " AS BIGINT) AS t_micro",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Mood's median test across languages
+
+
+@query(
+    "mood_median_test_langs",
+    oracle="""
+    WITH vals AS (
+        SELECT lang, n_chars AS v FROM documents
+        WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+    per_v AS (SELECT v, COUNT(*) AS t FROM vals GROUP BY v),
+    med AS (
+        SELECT MIN(v) AS med FROM (
+            SELECT v, SUM(t) OVER (ORDER BY v) AS cum FROM per_v)
+        WHERE cum >= ((SELECT COUNT(*) FROM vals) + 1) // 2),
+    cells AS (
+        SELECT lang,
+               COUNT_IF(v > (SELECT med FROM med)) AS above,
+               COUNT_IF(v <= (SELECT med FROM med)) AS below
+        FROM vals GROUP BY lang),
+    m AS (
+        SELECT lang, above, below, above + below AS nj,
+               SUM(above) OVER () AS ra, SUM(below) OVER () AS rb,
+               SUM(above + below) OVER () AS n
+        FROM cells),
+    longf AS (
+        SELECT lang, 'above' AS side, above AS o, ra AS r, nj, n FROM m
+        UNION ALL
+        SELECT lang, 'below' AS side, below AS o, rb AS r, nj, n FROM m)
+    SELECT lang, side, CAST(o AS BIGINT) AS observed,
+           CAST(r * nj * 1000 // n AS BIGINT) AS expected_permille,
+           CAST(CAST(o * n - r * nj AS HUGEINT) * (o * n - r * nj) * 1000000
+                // (CAST(n AS HUGEINT) * r * nj) AS BIGINT)
+               AS chi2_contrib_micro
+    FROM longf
+    """,
+    tags=("evaluation", "statistics", "drift"),
+)
+def mood_median_test_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mood's median test of document length across ALL languages —
+    the k-group nonparametric screen (Mann-Whitney handles two
+    groups): split every length at the EXACT grand lower median
+    (rank ⌈N/2⌉, found on the aggregated distinct-value table — the
+    quantile_disc integer-rank rule, never float·N), then test the
+    above/below × language contingency with the
+    ``chi2_statistic_exact`` per-cell convention — observed, the
+    independence expectation in permille, and (O·N − r·c)²·10⁶/(N·r·c)
+    with squared intermediates in decimal(38,0) ↔ HUGEINT. Output is
+    the 2×k cell table; χ² = Σ contribs/10⁶ with k−1 df. Plan: one
+    value-table aggregate for the median, one |langs|-sized cell
+    aggregate, windows only over those bounded relations."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
+        .select("lang", F.col("n_chars").alias("v"))
+    )
+    per_v = vals.groupBy("v").agg(F.count(F.lit(1)).alias("t"))
+    cumw = W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)
+    totw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    # the grand total rides a window over the SAME aggregated value
+    # table — no separate corpus count() action (an eager count here
+    # ran a full scan job even at plan-build time)
+    ranked = per_v.select(
+        "v",
+        F.sum("t").over(cumw).alias("cum"),
+        F.sum("t").over(totw).alias("ntot"),
+    )
+    med = (
+        ranked.where(F.expr("cum >= (ntot + 1) div 2"))
+        .agg(F.min("v").alias("med"))
+    )
+    cells = (
+        vals.crossJoin(F.broadcast(med))
+        .groupBy("lang")
+        .agg(
+            F.count_if(F.col("v") > F.col("med")).alias("above"),
+            F.count_if(F.col("v") <= F.col("med")).alias("below"),
+        )
+    )
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    m = cells.select(
+        "lang",
+        "above",
+        "below",
+        (F.col("above") + F.col("below")).alias("nj"),
+        F.sum("above").over(tw).alias("ra"),
+        F.sum("below").over(tw).alias("rb"),
+        F.sum(F.col("above") + F.col("below")).over(tw).alias("n"),
+    )
+    above = m.selectExpr(
+        "lang", "'above' AS side", "above AS o", "ra AS r", "nj", "n"
+    )
+    below = m.selectExpr(
+        "lang", "'below' AS side", "below AS o", "rb AS r", "nj", "n"
+    )
+    return above.unionByName(below).selectExpr(
+        "lang",
+        "side",
+        "CAST(o AS BIGINT) AS observed",
+        "CAST((r * nj * 1000) div n AS BIGINT) AS expected_permille",
+        "CAST(CAST(o * n - r * nj AS DECIMAL(38,0)) * (o * n - r * nj)"
+        " * 1000000 div (CAST(n AS DECIMAL(38,0)) * r * nj) AS BIGINT)"
+        " AS chi2_contrib_micro",
+    )
+
+
+# ---------------------------------------------------------------------------
+# day-of-week uniformity audit (order seasonality screen)
+
+
+@query(
+    "dow_uniformity_audit",
+    oracle="""
+    WITH d AS (
+        SELECT (CAST(o_orderdate AS DATE) - DATE '1970-01-05') % 7 AS dow
+        FROM orders WHERE o_orderdate IS NOT NULL),
+    cells AS (SELECT dow, COUNT(*) AS o FROM d GROUP BY dow),
+    m AS (SELECT *, SUM(o) OVER () AS n FROM cells)
+    SELECT CAST(dow AS BIGINT) AS dow, CAST(o AS BIGINT) AS observed,
+           CAST(n // 7 AS BIGINT) AS expected_floor,
+           CAST(CAST(7 * o - n AS HUGEINT) * (7 * o - n) * 1000000
+                // (CAST(7 AS HUGEINT) * n) AS BIGINT)
+               AS chi2_contrib_x7_micro
+    FROM m
+    """,
+    tags=("evaluation", "statistics", "events"),
+)
+def dow_uniformity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-of-week load profile of order dates with an exact χ²
+    uniformity audit — the seasonality screen a pipeline runs before
+    trusting any time-bucketed metric (a skewed weekday histogram is
+    the first symptom of a partial load or a timezone bug). Weekday
+    is computed PORTABLY as days-since-a-known-Monday mod 7 (0 =
+    Monday): Spark's dayofweek() is 1-based Sunday-first while
+    DuckDB's dow is 0-based Sunday-first, so neither engine's builtin
+    crosses the oracle — date arithmetic does, exactly. The χ² term
+    against the uniform expectation n/7 is kept integer-exact by
+    scaling through 7: Σ (O − n/7)²/(n/7) = Σ (7O − n)²/(7n), emitted
+    per cell ×10⁶ with 128-bit intermediates (decimal(38,0) ↔
+    HUGEINT). One scan, one 7-row aggregate; the marginal windows run
+    over the 7-row cell table."""
+    d = (
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderdate").isNotNull())
+        .select(
+            (
+                F.datediff(F.col("o_orderdate"), F.lit("1970-01-05").cast("date"))
+                % 7
+            ).alias("dow")
+        )
+    )
+    cells = d.groupBy("dow").agg(F.count(F.lit(1)).alias("o"))
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    m = cells.select("dow", "o", F.sum("o").over(tw).alias("n"))
+    return m.selectExpr(
+        "CAST(dow AS BIGINT) AS dow",
+        "CAST(o AS BIGINT) AS observed",
+        "CAST(n div 7 AS BIGINT) AS expected_floor",
+        "CAST(CAST(7 * o - n AS DECIMAL(38,0)) * (7 * o - n) * 1000000"
+        " div (CAST(7 AS DECIMAL(38,0)) * n) AS BIGINT)"
+        " AS chi2_contrib_x7_micro",
+    )
+
+
+#: shared ∞ sentinel for ratio statistics whose denominator can be
+#: made arbitrarily small by (pathological but constructible) data:
+#: 10¹⁵ micro-units = 10⁹ in natural units, far above any meaningful
+#: test statistic, and small enough that the clamped quotient always
+#: fits int64
+STAT_CLAMP = 10**15
+
+
+# ---------------------------------------------------------------------------
+# Kruskal-Wallis H: k-group rank omnibus over document lengths
+
+
+@query(
+    "kruskal_wallis_lengths",
+    oracle=f"""
+    WITH vals AS (
+        SELECT lang, n_chars AS v FROM documents
+        WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+    g1 AS (SELECT v, lang, COUNT(*) AS n_gv FROM vals GROUP BY 1, 2),
+    vt AS (SELECT v, SUM(n_gv) AS t FROM g1 GROUP BY v),
+    vtc AS (
+        SELECT v, t,
+               COALESCE(SUM(t) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS cb
+        FROM vt),
+    per_lang AS (
+        SELECT g1.lang,
+               SUM(g1.n_gv) AS n,
+               SUM(g1.n_gv * (2 * vtc.cb + vtc.t + 1)) AS r2
+        FROM g1 JOIN vtc ON g1.v = vtc.v
+        GROUP BY g1.lang),
+    ties AS (SELECT SUM(t * t * t - t) AS t3t FROM vt),
+    m AS (
+        SELECT lang, n, r2,
+               SUM(n) OVER () AS ntot,
+               COUNT(*) OVER () AS k,
+               SUM(CAST(r2 AS HUGEINT) * r2 // (4 * n)) OVER () AS s,
+               (SELECT t3t FROM ties) AS t3t
+        FROM per_lang),
+    h AS (
+        SELECT lang, n, r2, ntot, k, t3t,
+               CAST(s AS HUGEINT) * 12000000
+                   // (CAST(ntot AS HUGEINT) * (ntot + 1))
+                   - 3 * (ntot + 1) * 1000000 AS h_x1e6
+        FROM m)
+    SELECT lang,
+           CAST(n AS BIGINT) AS n,
+           CAST(r2 AS BIGINT) AS rank_sum_x2,
+           CAST(r2 // n AS BIGINT) AS mean_rank_x2,
+           CAST(k AS BIGINT) AS k_groups,
+           CAST(ntot AS BIGINT) AS n_total,
+           CAST(t3t AS BIGINT) AS tie_t3t,
+           CAST(h_x1e6 AS BIGINT) AS h_x1e6,
+           CAST(CASE WHEN h_x1e6 <= 0
+                          OR CAST(ntot AS HUGEINT) * ntot * ntot - ntot - t3t
+                             <= 0 THEN 0
+                     WHEN CAST(h_x1e6 AS HUGEINT)
+                          * (CAST(ntot AS HUGEINT) * ntot * ntot - ntot)
+                          > {STAT_CLAMP}
+                            * (CAST(ntot AS HUGEINT) * ntot * ntot - ntot
+                               - t3t)
+                     THEN {STAT_CLAMP}
+                     ELSE CAST(h_x1e6 AS HUGEINT)
+                          * (CAST(ntot AS HUGEINT) * ntot * ntot - ntot)
+                          // (CAST(ntot AS HUGEINT) * ntot * ntot - ntot
+                              - t3t) END AS BIGINT) AS h_tie_x1e6
+    FROM h ORDER BY lang
+    """,
+    tags=("evaluation", "statistics", "drift", "llm-pipeline"),
+)
+def kruskal_wallis_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kruskal-Wallis H test of document length across ALL languages —
+    the k-group omnibus that answers "is ANY language's length
+    distribution shifted?" before pairwise Mann-Whitney tells you
+    which (the standard rank-ANOVA screen; Mood's median test is its
+    blunter sibling already in the suite). Midranks stay integral by
+    the ×2 trick (2·midrank = 2·count-below + t + 1, the Mann-Whitney
+    convention), so each language's rank sum ×2 is an EXACT bigint.
+    H = 12/(N(N+1))·ΣR²ᵍ/nᵍ − 3(N+1) needs R²ᵍ — up to 4N⁴, past
+    int64 — so the per-group contribution r2²/(4n) rides
+    DECIMAL(38,0) ↔ HUGEINT with truncating division at UNIT scale
+    (its quotient n·N² must itself fit int64 — Spark's div lands in
+    bigint even from decimal operands; micro-scaling here would wrap
+    at the 100× replica), and H picks up its ×10⁶ in the follow-up
+    division, whose quotient is only O(N·10⁶). The ≤k-unit truncation
+    of ΣR²/n perturbs H by < 10⁻⁴ micro-units at any corpus size —
+    identical on both engines. The tie correction divides by
+    C = 1 − Σ(t³−t)/(N³−N): non-negative by the shared CASE guard
+    (the all-tied corner pins 0) and clamped at the 10¹⁵ sentinel by
+    a decimal-domain comparison before the division, so the
+    two-distinct-values corner (tiny C) can never wrap.
+
+    Plan: the corpus collapses to the per-(value, lang) aggregate
+    FIRST (≤ |distinct lengths|·k rows — bounded by the physical
+    document length cap, NOT corpus size, so the value table and its
+    rank window stay constant-sized at 100 TB); the cumulative window
+    runs over the |values| relation (plan-audit exemption: aggregate
+    below); per-language moments are one k-row aggregate and the
+    scalars ride unbounded windows over those k rows. Bounds: the
+    unit-scale contribution quotient n·N² ≤ int64 needs N ≲ 3·10⁶
+    docs — 6× past the 100× replica; beyond that, shift the
+    contribution to ÷2⁶ fixed-point."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
+        .select("lang", F.col("n_chars").alias("v"))
+    )
+    g1 = vals.groupBy("v", "lang").agg(F.count(F.lit(1)).alias("n_gv"))
+    vt = g1.groupBy("v").agg(F.sum("n_gv").alias("t"))
+    cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
+    vtc = vt.select(
+        "v", "t", F.coalesce(F.sum("t").over(cum), F.lit(0)).alias("cb")
+    )
+    # broadcast is sound here: |vtc| = |distinct n_chars| is bounded
+    # by the document length cap (a data-model constant), not by the
+    # corpus — NOT the grams/tokens/fingerprints dictionary class
+    per_lang = (
+        g1.join(F.broadcast(vtc), "v")
+        .groupBy("lang")
+        .agg(
+            F.sum("n_gv").alias("n"),
+            F.sum(
+                F.col("n_gv") * (2 * F.col("cb") + F.col("t") + 1)
+            ).alias("r2"),
+        )
+    )
+    ties = vt.agg(
+        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias("t3t")
+    )
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    m = per_lang.crossJoin(F.broadcast(ties)).select(
+        "lang",
+        "n",
+        "r2",
+        "t3t",
+        F.sum("n").over(tw).alias("ntot"),
+        F.count(F.lit(1)).over(tw).alias("k"),
+        F.sum(
+            F.expr(
+                "CAST(CAST(r2 AS DECIMAL(38,0)) * r2 div (4 * n)"
+                " AS DECIMAL(38,0))"
+            )
+        )
+        .over(tw)
+        .alias("s"),
+    )
+    h = m.selectExpr(
+        "lang",
+        "n",
+        "r2",
+        "ntot",
+        "k",
+        "t3t",
+        "CAST(s AS DECIMAL(38,0)) * 12000000"
+        " div (CAST(ntot AS DECIMAL(38,0)) * (ntot + 1))"
+        " - 3 * (ntot + 1) * 1000000 AS h_x1e6",
+    )
+    return h.selectExpr(
+        "lang",
+        "CAST(n AS BIGINT) AS n",
+        "CAST(r2 AS BIGINT) AS rank_sum_x2",
+        "CAST(r2 div n AS BIGINT) AS mean_rank_x2",
+        "CAST(k AS BIGINT) AS k_groups",
+        "CAST(ntot AS BIGINT) AS n_total",
+        "CAST(t3t AS BIGINT) AS tie_t3t",
+        "CAST(h_x1e6 AS BIGINT) AS h_x1e6",
+        "CAST(CASE WHEN h_x1e6 <= 0"
+        "               OR CAST(ntot AS DECIMAL(38,0)) * ntot * ntot - ntot"
+        "                  - t3t <= 0 THEN 0"
+        f"          WHEN CAST(h_x1e6 AS DECIMAL(38,0))"
+        "               * (CAST(ntot AS DECIMAL(38,0)) * ntot * ntot - ntot)"
+        f"               > {STAT_CLAMP}"
+        "                 * (CAST(ntot AS DECIMAL(38,0)) * ntot * ntot"
+        "                    - ntot - t3t)"
+        f"          THEN {STAT_CLAMP}"
+        "          ELSE CAST(h_x1e6 AS DECIMAL(38,0))"
+        "               * (CAST(ntot AS DECIMAL(38,0)) * ntot * ntot - ntot)"
+        "               div (CAST(ntot AS DECIMAL(38,0)) * ntot * ntot"
+        "                    - ntot - t3t) END AS BIGINT) AS h_tie_x1e6",
+    ).orderBy("lang")
+
+
+# ---------------------------------------------------------------------------
+# Brown-Forsythe (median-centered Levene): variance homogeneity
+
+
+@query(
+    "levene_brown_forsythe",
+    oracle=f"""
+    WITH vals AS (
+        SELECT source, n_chars AS v FROM documents
+        WHERE n_chars IS NOT NULL AND source IS NOT NULL),
+    sv AS (SELECT source, v, COUNT(*) AS c FROM vals GROUP BY 1, 2),
+    svc AS (
+        SELECT source, v, c,
+               SUM(c) OVER (PARTITION BY source ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cum,
+               SUM(c) OVER (PARTITION BY source) AS n
+        FROM sv),
+    med AS (
+        SELECT source,
+               MIN(CASE WHEN cum >= (n + 1) // 2 THEN v END)
+               + MIN(CASE WHEN cum >= n // 2 + 1 THEN v END) AS m2
+        FROM svc GROUP BY source),
+    z AS (
+        SELECT vals.source, abs(2 * vals.v - med.m2) AS z2
+        FROM vals JOIN med ON vals.source = med.source),
+    per_src AS (
+        SELECT source, COUNT(*) AS n, SUM(z2) AS s, SUM(z2 * z2) AS q
+        FROM z GROUP BY source),
+    m AS (
+        SELECT source, n, s, q,
+               SUM(n) OVER () AS ntot,
+               COUNT(*) OVER () AS k,
+               SUM(s) OVER () AS stot,
+               SUM(q) OVER () AS qtot,
+               SUM(CAST(s AS HUGEINT) * s * 1000000 // n) OVER () AS a
+        FROM per_src),
+    w AS (
+        SELECT source, n, s, q, ntot, k,
+               a - CAST(stot AS HUGEINT) * stot * 1000000 // ntot AS num,
+               CAST(qtot AS HUGEINT) * 1000000 - a AS den
+        FROM m)
+    SELECT source,
+           CAST(n AS BIGINT) AS n,
+           CAST(s AS BIGINT) AS absdev_sum_x2,
+           CAST(q AS BIGINT) AS absdev_sumsq_x4,
+           CAST(k AS BIGINT) AS k_groups,
+           CAST(ntot AS BIGINT) AS n_total,
+           CAST(CASE WHEN num <= 0 OR den <= 0 OR k < 2 THEN 0
+                     WHEN CAST(ntot - k AS HUGEINT) * num * 1000000
+                          > {STAT_CLAMP} * (CAST(k AS HUGEINT) - 1) * den
+                     THEN {STAT_CLAMP}
+                     ELSE CAST(ntot - k AS HUGEINT) * num * 1000000
+                          // ((CAST(k AS HUGEINT) - 1) * den)
+                     END AS BIGINT) AS w_x1e6
+    FROM w ORDER BY source
+    """,
+    tags=("evaluation", "statistics", "drift", "llm-pipeline"),
+)
+def levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brown-Forsythe test (median-centered Levene) of length-variance
+    homogeneity across sources — the heteroscedasticity screen that
+    catches a source whose documents are erratically sized even when
+    its MEAN length matches the rest (location tests are blind to
+    this; it is the standard ANOVA assumption check, and in a corpus
+    pipeline it flags scrape instability per source). Deviations are
+    taken from the per-source MEDIAN (the Brown-Forsythe robustness
+    choice) and kept integral by the ×2 trick: 2·median of integers
+    is v_lo + v_hi at the two middle ranks, found on the per-source
+    aggregated value table with the quantile_disc integer-rank rule
+    (never float·N); z = |2x − 2m| is then an exact bigint per row,
+    so every group moment (Σz, Σz²) is exact.
+    W = ((N−k)/(k−1)) · Σnᵍ(z̄ᵍ−z̄)² / ΣΣ(z−z̄ᵍ)² expands to pure
+    sums-of-squares algebra over those moments; the squared sums ride
+    DECIMAL(38,0) ↔ HUGEINT truncating division in micro units. Both
+    the between (num) and within (den) sums are clamped at 0 by a
+    shared CASE (mathematically ≥ 0; truncation can graze below), and
+    the final ratio — genuinely unbounded when all variance sits
+    between groups — clamps at the 10¹⁵ sentinel via a decimal-domain
+    comparison BEFORE dividing, so Spark's bigint-landing div can
+    never wrap.
+
+    Plan: per-(source, value) aggregate first (bounded by |sources| ×
+    length cap, constant at scale); medians from per-source windows
+    over that bounded relation; ONE broadcast join of the |sources|-
+    row median table back to the corpus scan (a bounded enum
+    dictionary, not the corpus-derived gram/token class); per-source
+    moments are one map-side-combinable aggregate and the scalars
+    ride unbounded windows over k rows. Bounds: the per-group
+    quotient s²·10⁶/n ≤ n·(2·len_cap)²·10⁶ fits int64 to N ≈ 4·10⁶
+    docs at the 600-char cap; past that, drop the contribution to
+    unit scale (the Kruskal-Wallis pattern)."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("source").isNotNull())
+        .select("source", F.col("n_chars").alias("v"))
+    )
+    sv = vals.groupBy("source", "v").agg(F.count(F.lit(1)).alias("c"))
+    cum = (
+        W.partitionBy("source")
+        .orderBy("v")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    tot = W.partitionBy("source")
+    svc = sv.select(
+        "source",
+        "v",
+        F.sum("c").over(cum).alias("cum"),
+        F.sum("c").over(tot).alias("n"),
+    )
+    med = svc.groupBy("source").agg(
+        (
+            F.min(F.when(F.expr("cum >= (n + 1) div 2"), F.col("v")))
+            + F.min(F.when(F.expr("cum >= n div 2 + 1"), F.col("v")))
+        ).alias("m2")
+    )
+    z = vals.join(F.broadcast(med), "source").select(
+        "source", F.abs(2 * F.col("v") - F.col("m2")).alias("z2")
+    )
+    per_src = z.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("z2").alias("s"),
+        F.sum(F.col("z2") * F.col("z2")).alias("q"),
+    )
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    m = per_src.select(
+        "source",
+        "n",
+        "s",
+        "q",
+        F.sum("n").over(tw).alias("ntot"),
+        F.count(F.lit(1)).over(tw).alias("k"),
+        F.sum("s").over(tw).alias("stot"),
+        F.sum("q").over(tw).alias("qtot"),
+        F.sum(
+            F.expr(
+                "CAST(CAST(s AS DECIMAL(38,0)) * s * 1000000 div n"
+                " AS DECIMAL(38,0))"
+            )
+        )
+        .over(tw)
+        .alias("a"),
+    )
+    w = m.selectExpr(
+        "source",
+        "n",
+        "s",
+        "q",
+        "ntot",
+        "k",
+        "a - CAST(stot AS DECIMAL(38,0)) * stot * 1000000 div ntot AS num",
+        "CAST(qtot AS DECIMAL(38,0)) * 1000000 - a AS den",
+    )
+    return w.selectExpr(
+        "source",
+        "CAST(n AS BIGINT) AS n",
+        "CAST(s AS BIGINT) AS absdev_sum_x2",
+        "CAST(q AS BIGINT) AS absdev_sumsq_x4",
+        "CAST(k AS BIGINT) AS k_groups",
+        "CAST(ntot AS BIGINT) AS n_total",
+        "CAST(CASE WHEN num <= 0 OR den <= 0 OR k < 2 THEN 0"
+        "          WHEN CAST(ntot - k AS DECIMAL(38,0)) * num * 1000000"
+        f"              > {STAT_CLAMP}"
+        "                 * (CAST(k AS DECIMAL(38,0)) - 1) * den"
+        f"          THEN {STAT_CLAMP}"
+        "          ELSE CAST(ntot - k AS DECIMAL(38,0)) * num * 1000000"
+        "               div ((CAST(k AS DECIMAL(38,0)) - 1) * den)"
+        "          END AS BIGINT) AS w_x1e6",
+    ).orderBy("source")
+
+
+# ---------------------------------------------------------------------------
+# Ansari-Bradley: 2-group dispersion (scale) test
+
+
+@query(
+    "ansari_bradley_dispersion",
+    oracle="""
+    WITH vals AS (
+        SELECT n_chars AS v, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS g
+        FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL),
+    per_v AS (
+        SELECT v, COUNT_IF(g = 1) AS n1v, COUNT_IF(g = 0) AS n0v,
+               COUNT(*) AS t
+        FROM vals GROUP BY v),
+    ranked AS (
+        SELECT *,
+               COALESCE(SUM(t) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS cb,
+               SUM(t) OVER () AS n
+        FROM per_v),
+    spans AS (
+        SELECT n1v, n0v, t, n,
+               cb + 1 AS a, cb + t AS b, (n + 1) // 2 AS tau
+        FROM ranked),
+    scored AS (
+        SELECT n1v, n0v, t, n,
+               (CASE WHEN a <= least(b, tau)
+                     THEN (a + least(b, tau)) * (least(b, tau) - a + 1)
+                     ELSE 0 END)
+               + (CASE WHEN greatest(a, tau + 1) <= b
+                       THEN 2 * (n + 1) * (b - greatest(a, tau + 1) + 1)
+                            - (greatest(a, tau + 1) + b)
+                              * (b - greatest(a, tau + 1) + 1)
+                       ELSE 0 END) AS rs2
+        FROM spans),
+    m AS (
+        SELECT SUM(n1v) AS n1, SUM(n0v) AS n0, MAX(n) AS n,
+               SUM(CAST(n1v AS HUGEINT) * rs2 * 1000000 // (2 * t)) AS ab
+        FROM scored),
+    e AS (
+        SELECT n1, n0, ab,
+               CASE WHEN n % 2 = 0
+                    THEN CAST(n1 AS HUGEINT) * (n + 2) * 1000000 // 4
+                    ELSE CAST(n1 AS HUGEINT) * (n + 1) * (n + 1)
+                         * 1000000 // (4 * n) END AS e
+        FROM m)
+    SELECT CAST(n1 AS BIGINT) AS n1,
+           CAST(n0 AS BIGINT) AS n0,
+           CAST(ab AS BIGINT) AS ab_x1e6,
+           CAST(e AS BIGINT) AS ab_expected_x1e6,
+           CAST(CASE WHEN ab >= e THEN 1 ELSE -1 END AS BIGINT) AS dev_sign,
+           CAST(1000 * abs(ab - e) // greatest(e, 1) AS BIGINT)
+               AS abs_dev_permille
+    FROM e
+    """,
+    tags=("evaluation", "statistics", "drift", "llm-pipeline"),
+)
+def ansari_bradley_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ansari-Bradley test of length DISPERSION, English vs the rest —
+    the rank test Mann-Whitney cannot replace: AB scores ranks from
+    BOTH ends (score(r) = min(r, N+1−r)), so two groups with the same
+    median but different spread separate here and nowhere else in the
+    location family. Completes the nonparametric suite's scale axis.
+
+    Exactness: ranks never materialize per row. On the aggregated
+    value table, a tied value occupies the contiguous rank span
+    [cb+1, cb+t], and Σ min(r, N+1−r) over a span has a CLOSED FORM —
+    two arithmetic series split at τ = ⌊(N+1)/2⌋ — kept integral by
+    the ×2 trick (rs2 = 2·span score sum). The tied docs share the
+    midscore rs2/(2t), so group 1's statistic AB = Σ n1v·rs2/(2t)
+    rides one DECIMAL(38,0) ↔ HUGEINT truncating division per value
+    row in micro units (quotient ≤ n1v·N·10⁶ — int64-safe to the
+    100× replica and ~10× beyond; the Σ re-enters decimal
+    immediately, rule 2 of the module discipline). The null
+    expectation E[AB] — n1(N+2)/4 for even N, n1(N+1)²/(4N) for odd —
+    is exact in the same units, and the deviation is emitted as
+    (sign, permille magnitude) because a signed numerator must never
+    meet the engines' divergent negative integer division.
+
+    Plan: the corpus collapses to the |distinct lengths| value table
+    first (bounded by the length cap, constant at 100 TB); the rank
+    window runs over that bounded relation (aggregate-below
+    exemption) and the statistic is one scalar aggregate."""
+    vals = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
+        .select(
+            F.col("n_chars").alias("v"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("g"),
+        )
+    )
+    per_v = vals.groupBy("v").agg(
+        F.count_if(F.col("g") == 1).alias("n1v"),
+        F.count_if(F.col("g") == 0).alias("n0v"),
+        F.count(F.lit(1)).alias("t"),
+    )
+    cum = W.orderBy("v").rowsBetween(W.unboundedPreceding, -1)
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    ranked = per_v.select(
+        "n1v",
+        "n0v",
+        "t",
+        F.coalesce(F.sum("t").over(cum), F.lit(0)).alias("cb"),
+        F.sum("t").over(tw).alias("n"),
+    )
+    spans = ranked.selectExpr(
+        "n1v",
+        "n0v",
+        "t",
+        "n",
+        "cb + 1 AS a",
+        "cb + t AS b",
+        "(n + 1) div 2 AS tau",
+    )
+    scored = spans.selectExpr(
+        "n1v",
+        "n0v",
+        "t",
+        "n",
+        "(CASE WHEN a <= least(b, tau)"
+        "      THEN (a + least(b, tau)) * (least(b, tau) - a + 1)"
+        "      ELSE 0 END)"
+        " + (CASE WHEN greatest(a, tau + 1) <= b"
+        "         THEN 2 * (n + 1) * (b - greatest(a, tau + 1) + 1)"
+        "              - (greatest(a, tau + 1) + b)"
+        "                * (b - greatest(a, tau + 1) + 1)"
+        "         ELSE 0 END) AS rs2",
+    )
+    m = scored.agg(
+        F.sum("n1v").alias("n1"),
+        F.sum("n0v").alias("n0"),
+        F.max("n").alias("n"),
+        F.sum(
+            F.expr(
+                "CAST(CAST(n1v AS DECIMAL(38,0)) * rs2 * 1000000"
+                " div (2 * t) AS DECIMAL(38,0))"
+            )
+        ).alias("ab"),
+    )
+    e = m.selectExpr(
+        "n1",
+        "n0",
+        "ab",
+        "CASE WHEN n % 2 = 0"
+        "     THEN CAST(n1 AS DECIMAL(38,0)) * (n + 2) * 1000000 div 4"
+        "     ELSE CAST(n1 AS DECIMAL(38,0)) * (n + 1) * (n + 1)"
+        "          * 1000000 div (4 * n) END AS e",
+    )
+    return e.selectExpr(
+        "CAST(n1 AS BIGINT) AS n1",
+        "CAST(n0 AS BIGINT) AS n0",
+        "CAST(ab AS BIGINT) AS ab_x1e6",
+        "CAST(e AS BIGINT) AS ab_expected_x1e6",
+        "CAST(CASE WHEN ab >= e THEN 1 ELSE -1 END AS BIGINT) AS dev_sign",
+        "CAST(1000 * abs(ab - e) div greatest(e, 1) AS BIGINT)"
+        " AS abs_dev_permille",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Cochran-Armitage trend: ordered groups × binary outcome
+
+
+@query(
+    "cochran_armitage_trend",
+    oracle="""
+    WITH base AS (
+        SELECT CAST(substring(o.o_orderpriority, 1, 1) AS INTEGER) AS w,
+               CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS ret
+        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+    per_class AS (
+        SELECT w, COUNT(*) AS n, SUM(ret) AS r FROM base GROUP BY w),
+    m AS (
+        SELECT w, n, r,
+               SUM(n) OVER () AS ntot,
+               SUM(r) OVER () AS rtot,
+               SUM(w * n) OVER () AS swn,
+               SUM(w * r) OVER () AS swr,
+               SUM(w * w * n) OVER () AS sw2n
+        FROM per_class),
+    s AS (
+        SELECT w, n, r, ntot,
+               CAST(ntot AS HUGEINT) * swr
+                   - CAST(rtot AS HUGEINT) * swn AS a,
+               CAST(rtot AS HUGEINT) * (ntot - rtot)
+                   * (CAST(ntot AS HUGEINT) * sw2n
+                      - CAST(swn AS HUGEINT) * swn) AS b
+        FROM m)
+    SELECT CAST(w AS BIGINT) AS priority_class,
+           CAST(n AS BIGINT) AS n,
+           CAST(r AS BIGINT) AS n_returned,
+           CAST(1000 * r // n AS BIGINT) AS return_permille,
+           CAST(ntot AS BIGINT) AS n_total,
+           CAST(a AS BIGINT) AS trend_numer_xn,
+           CASE WHEN b <= 0 THEN 0e0
+                ELSE CAST(a AS DOUBLE) * sqrt(CAST(ntot AS DOUBLE))
+                     / sqrt(CAST(b AS DOUBLE)) END AS z
+    FROM s ORDER BY priority_class
+    """,
+    tags=("evaluation", "statistics", "contingency", "llm-pipeline"),
+)
+def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cochran-Armitage trend test: does the lineitem RETURN rate move
+    monotonically with order priority? The contingency family's
+    ordered-alternative member — χ² (``chi2_statistic_exact``,
+    ``mood_median_test_langs``) treats the k classes as unordered and
+    wastes power when the alternative is a dose-response trend; CA
+    scores each class with its ordinal weight (the leading digit of
+    ``o_orderpriority``) and tests the weighted slope. All moments
+    (N, R, Σwn, Σwr, Σw²n) are exact bigints from ONE aggregate;
+    clearing denominators gives z = A·√N/√B with A = N·Σwr − R·Σwn
+    (exact, possibly negative — it is never fed to integer division)
+    and B = R(N−R)(N·Σw²n − (Σwn)²) ≥ 0 exact in DECIMAL(38,0) ↔
+    HUGEINT. z is ONE shared double expression whose only
+    transcendental is sqrt (IEEE correctly-rounded, the Mann-Whitney
+    precedent), so it hash-compares bit-exactly; zero variance (one
+    class, or R ∈ {0, N}) pins z = 0 via the shared CASE.
+
+    Plan: the lineitem⋈orders join is the engine's bread-and-butter
+    co-keyed big join (the q-series shape — shuffle on orderkey,
+    AQE-planned); everything after is a 5-row aggregate with
+    unbounded windows over those 5 rows. Bounds: B ≤ 25·N⁴ needs
+    N ≲ 10⁸ rows for DECIMAL(38,0) — two decades past the 100×
+    replica's lineitem."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ret"),
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.substring("o_orderpriority", 1, 1).cast("int").alias("w"),
+    )
+    per_class = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("ret").alias("r"))
+    )
+    tw = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    m = per_class.select(
+        "w",
+        "n",
+        "r",
+        F.sum("n").over(tw).alias("ntot"),
+        F.sum("r").over(tw).alias("rtot"),
+        F.sum(F.col("w") * F.col("n")).over(tw).alias("swn"),
+        F.sum(F.col("w") * F.col("r")).over(tw).alias("swr"),
+        F.sum(F.col("w") * F.col("w") * F.col("n")).over(tw).alias("sw2n"),
+    )
+    s = m.selectExpr(
+        "w",
+        "n",
+        "r",
+        "ntot",
+        "CAST(ntot AS DECIMAL(38,0)) * swr"
+        " - CAST(rtot AS DECIMAL(38,0)) * swn AS a",
+        "CAST(rtot AS DECIMAL(38,0)) * (ntot - rtot)"
+        " * (CAST(ntot AS DECIMAL(38,0)) * sw2n"
+        "    - CAST(swn AS DECIMAL(38,0)) * swn) AS b",
+    )
+    return s.selectExpr(
+        "CAST(w AS BIGINT) AS priority_class",
+        "CAST(n AS BIGINT) AS n",
+        "CAST(r AS BIGINT) AS n_returned",
+        "CAST(1000 * r div n AS BIGINT) AS return_permille",
+        "CAST(ntot AS BIGINT) AS n_total",
+        "CAST(a AS BIGINT) AS trend_numer_xn",
+        "CASE WHEN b <= 0 THEN 0e0"
+        "     ELSE CAST(a AS DOUBLE) * sqrt(CAST(ntot AS DOUBLE))"
+        "          / sqrt(CAST(b AS DOUBLE)) END AS z",
+    ).orderBy("priority_class")
+
+
+# ---------------------------------------------------------------------------
+# McNemar paired test: per-customer return behavior, H1 vs H2
+
+
+@query(
+    "mcnemar_paired_returns",
+    oracle="""
+    WITH order_ret AS (
+        SELECT l_orderkey, MAX(CASE WHEN l_returnflag = 'R' THEN 1
+                                    ELSE 0 END) AS ret
+        FROM lineitem GROUP BY l_orderkey),
+    per_cust AS (
+        SELECT o.o_custkey,
+               MAX(CASE WHEN month(o.o_orderdate) <= 6
+                        THEN COALESCE(r.ret, 0) ELSE 0 END) AS h1,
+               MAX(CASE WHEN month(o.o_orderdate) > 6
+                        THEN COALESCE(r.ret, 0) ELSE 0 END) AS h2
+        FROM orders o LEFT JOIN order_ret r ON o.o_orderkey = r.l_orderkey
+        GROUP BY o.o_custkey),
+    cells AS (
+        SELECT COUNT(*) AS n_pairs,
+               COUNT_IF(h1 = 1 AND h2 = 1) AS both_ret,
+               COUNT_IF(h1 = 1 AND h2 = 0) AS b,
+               COUNT_IF(h1 = 0 AND h2 = 1) AS c,
+               COUNT_IF(h1 = 0 AND h2 = 0) AS neither
+        FROM per_cust)
+    SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
+           CAST(both_ret AS BIGINT) AS both_ret,
+           CAST(b AS BIGINT) AS h1_only,
+           CAST(c AS BIGINT) AS h2_only,
+           CAST(neither AS BIGINT) AS neither,
+           CAST(CASE WHEN b + c = 0 THEN 0
+                     ELSE CAST(b - c AS HUGEINT) * (b - c) * 1000000
+                          // (b + c) END
+                AS BIGINT) AS mcnemar_x2_micro,
+           CAST(CASE WHEN b + c = 0 OR abs(b - c) < 1 THEN 0
+                     ELSE CAST(abs(b - c) - 1 AS HUGEINT)
+                          * (abs(b - c) - 1) * 1000000
+                          // (b + c) END AS BIGINT)
+               AS mcnemar_x2_corrected_micro
+    FROM cells
+    """,
+    tags=("evaluation", "statistics", "contingency", "llm-pipeline"),
+)
+def mcnemar_paired_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """McNemar's test of PAIRED binary outcomes: per customer, "had a
+    returned item in Jan–Jun" vs "had one in Jul–Dec" — the
+    within-subject design the independence-assuming χ² family cannot
+    touch (each customer is their own control; only the b/c
+    discordant cells carry information). The statistic
+    (b−c)²/(b+c) and its Edwards continuity correction
+    (|b−c|−1)²/(b+c) are pure integer arithmetic in micro units —
+    squared numerators are non-negative by construction, so the
+    truncating division is divergence-safe, and the squared
+    intermediate rides DECIMAL(38,0) ↔ HUGEINT (module rule 2: at
+    |b−c| ≳ 3.04e6 discordant customers, (b−c)²·10⁶ would wrap a
+    plain BIGINT silently in non-ANSI Spark while DuckDB errors — a
+    cross-engine divergence, unreachable at certified scales but now
+    impossible by construction) — and the full 2×2 cell census is
+    emitted alongside so the statistic is auditable.
+
+    Plan: per-order return flags from one map-side-combinable
+    lineitem aggregate; orders LEFT-join that relation on the
+    orderkey (co-keyed, the q-series shape; lineitem-less orders
+    count as no-return rather than dropping a pair); ONE per-customer
+    aggregate folds both halves simultaneously (a customer inactive
+    in a half pins that half's flag 0 — the pair population is every
+    ordering customer, stated explicitly rather than silently
+    dropping single-half customers); the cells are one scalar
+    aggregate. No window over raw rows anywhere."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ret0"),
+    )
+    order_ret = li.groupBy("l_orderkey").agg(F.max("ret0").alias("ret"))
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", F.month("o_orderdate").alias("mo")
+    )
+    per_cust = (
+        o.join(order_ret, o.o_orderkey == order_ret.l_orderkey, "left")
+        .groupBy("o_custkey")
+        .agg(
+            F.max(
+                F.when(F.col("mo") <= 6, F.coalesce("ret", F.lit(0)))
+                .otherwise(0)
+            ).alias("h1"),
+            F.max(
+                F.when(F.col("mo") > 6, F.coalesce("ret", F.lit(0)))
+                .otherwise(0)
+            ).alias("h2"),
+        )
+    )
+    cells = per_cust.agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.count_if((F.col("h1") == 1) & (F.col("h2") == 1)).alias("both_ret"),
+        F.count_if((F.col("h1") == 1) & (F.col("h2") == 0)).alias("b"),
+        F.count_if((F.col("h1") == 0) & (F.col("h2") == 1)).alias("c"),
+        F.count_if((F.col("h1") == 0) & (F.col("h2") == 0)).alias("neither"),
+    )
+    return cells.selectExpr(
+        "CAST(n_pairs AS BIGINT) AS n_pairs",
+        "CAST(both_ret AS BIGINT) AS both_ret",
+        "CAST(b AS BIGINT) AS h1_only",
+        "CAST(c AS BIGINT) AS h2_only",
+        "CAST(neither AS BIGINT) AS neither",
+        "CAST(CASE WHEN b + c = 0 THEN 0"
+        "          ELSE CAST(b - c AS DECIMAL(38,0)) * (b - c) * 1000000"
+        "               div (b + c) END"
+        "     AS BIGINT) AS mcnemar_x2_micro",
+        "CAST(CASE WHEN b + c = 0 OR abs(b - c) < 1 THEN 0"
+        "          ELSE CAST(abs(b - c) - 1 AS DECIMAL(38,0))"
+        "               * (abs(b - c) - 1) * 1000000"
+        "               div (b + c) END AS BIGINT)"
+        " AS mcnemar_x2_corrected_micro",
+    )
+
+
+#: Benford's law reference distribution, permille per leading digit
+#: 1..9 (log10(1+1/d), rounded to integer permille — a fixed constant
+#: table, so no engine evaluates a logarithm)
+BENFORD_PERMILLE = (301, 176, 125, 97, 79, 67, 58, 51, 46)
+
+
+@query(
+    "benford_first_digit_audit",
+    oracle=f"""
+    WITH digits AS (
+        SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice * 100) AS BIGINT)
+                                AS VARCHAR), 1, 1) AS BIGINT) AS digit
+        FROM orders WHERE o_totalprice > 0),
+    ref(digit, benford_permille) AS (
+        VALUES {", ".join(f"({d + 1}, {p})" for d, p in enumerate(BENFORD_PERMILLE))})
+    SELECT r.digit,
+           CAST(COALESCE(COUNT(d.digit), 0) AS BIGINT) AS n,
+           CAST(CASE WHEN (SELECT COUNT(*) FROM digits) = 0 THEN NULL
+                ELSE COALESCE(COUNT(d.digit), 0) * 1000
+                     // (SELECT COUNT(*) FROM digits) END AS BIGINT)
+               AS observed_permille,
+           CAST(r.benford_permille AS BIGINT) AS benford_permille
+    FROM ref r LEFT JOIN digits d USING (digit)
+    GROUP BY r.digit, r.benford_permille
+    """,
+    tags=("statistics", "data-quality", "audit"),
+)
+def benford_first_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benford's-law leading-digit census over order totals — the
+    classic anomaly/fabrication screen for financial-ish magnitudes
+    (synthetic uniform data deviates loudly, which is itself the
+    point: the report shows HOW a feed's digit profile compares to the
+    reference). Log-free on both engines: the leading significant
+    digit comes from the exact cent integer's decimal string (a
+    ``floor(p/10^floor(log10 p))`` formulation silently misbins at
+    powers of ten, where IEEE log10(1000) = 2.999…96), and the
+    reference distribution is a fixed integer-permille constant table
+    (FLOOR before the bigint cast on BOTH engines: Spark's double→
+    bigint cast truncates while DuckDB's rounds, so a bare cast would
+    split digits at d·10^k boundaries on data without exact cents —
+    r8 review). Cost, stated honestly: one map-side-combined 9-group
+    aggregate plus a scalar count — two passes over the SINGLE pruned
+    o_totalprice column (the scalar's SinglePartition exchange differs
+    from the group-by's hash exchange, so Spark does not reuse it);
+    no extra shuffle, both build sides broadcast as 9-row/1-row
+    relations, plan-audit clean."""
+    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
+    digits = o.select(
+        F.expr(
+            "CAST(substring(CAST(CAST(FLOOR(o_totalprice * 100) AS BIGINT)"
+            " AS STRING), 1, 1) AS BIGINT)"
+        ).alias("digit")
+    )
+    counts = digits.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
+    # scalar total folded from the aggregated ≤9-row relation — a
+    # benign 1-row broadcast build side per the plan-audit rules
+    tot1 = counts.agg(F.sum("n").alias("tot"))
+    ref = local_relation(spark,
+        [(d + 1, p) for d, p in enumerate(BENFORD_PERMILLE)],
+        "digit bigint, benford_permille bigint",
+    )
+    return (
+        ref.join(F.broadcast(counts), "digit", "left")
+        .crossJoin(F.broadcast(tot1))
+        .select(
+            "digit",
+            F.coalesce("n", F.lit(0)).cast("bigint").alias("n"),
+            # degenerate guard: on an empty corpus `tot`
+            # is NULL here (SUM over no rows) so `div` yields NULL;
+            # the oracle's CASE pins the same NULL where DuckDB's
+            # `// 0` would otherwise diverge loudly
+            F.expr("COALESCE(n, 0) * 1000 div tot")
+            .cast("bigint")
+            .alias("observed_permille"),
+            "benford_permille",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# contingency table with expected counts (categorical drift primitive)
+
+
+@query(
+    "crosstab_expected",
+    oracle="""
+    WITH cells AS (
+        -- DuckDB dayofweek is 0-based (Sun=0), Spark's 1-based (Sun=1)
+        SELECT event_type, dayofweek(ts) + 1 AS dow, COUNT(*) AS o
+        FROM events GROUP BY 1, 2),
+    tot AS (
+        SELECT event_type, dow, o,
+               SUM(o) OVER (PARTITION BY event_type) AS row_tot,
+               SUM(o) OVER (PARTITION BY dow) AS col_tot,
+               SUM(o) OVER () AS n
+        FROM cells)
+    SELECT event_type, CAST(dow AS BIGINT) AS dow, CAST(o AS BIGINT) AS observed,
+           CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE) AS expected,
+           CAST(o AS DOUBLE)
+               / (CAST(row_tot * col_tot AS DOUBLE) / CAST(n AS DOUBLE)) AS lift
+    FROM tot
+    """,
+    tags=("agg", "statistics"),
+)
+def crosstab_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contingency table of event type × day-of-week with
+    independence-expected counts and lift — the categorical-drift
+    primitive (a chi-square test is one further aggregation over these
+    cells). One data-scale aggregate down to |types × 7| cells;
+    marginals come from windows over that tiny cell table, and every
+    float is a division of exact integer products written identically
+    in the oracle (no cross-row double summation anywhere)."""
+    ev = load_table(spark, sf_dir, "events")
+    cells = ev.groupBy("event_type", F.dayofweek("ts").alias("dow")).agg(
+        F.count(F.lit(1)).alias("o")
+    )
+    row_tot = F.sum("o").over(W.partitionBy("event_type"))
+    col_tot = F.sum("o").over(W.partitionBy("dow"))
+    n = F.sum("o").over(W.partitionBy())
+    expected = (row_tot * col_tot).cast("double") / n.cast("double")
+    return cells.select(
+        "event_type",
+        F.col("dow").cast("bigint").alias("dow"),
+        F.col("o").alias("observed"),
+        expected.alias("expected"),
+        (F.col("o").cast("double") / expected).alias("lift"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# pairwise correlation matrix from exact sums
+
+# corr(x, y) from exact power sums, text shared with the oracle. The
+# numerator/denominator cancellations are computed in double, but both
+# engines execute the identical operand sequence over exactly-converted
+# integer sums, so the bits match.
+def _corr_sql(x: str, y: str) -> str:
+    n = "CAST(n AS DOUBLE)"
+    return (
+        f"({n} * CAST(s_{x}{y} AS DOUBLE) - CAST(s_{x} AS DOUBLE) * CAST(s_{y} AS DOUBLE))"
+        f" / (SQRT({n} * CAST(s_{x}{x} AS DOUBLE) - CAST(s_{x} AS DOUBLE) * CAST(s_{x} AS DOUBLE))"
+        f" * SQRT({n} * CAST(s_{y}{y} AS DOUBLE) - CAST(s_{y} AS DOUBLE) * CAST(s_{y} AS DOUBLE)))"
+    )
+
+
+@query(
+    "corr_matrix_exact",
+    oracle=f"""
+    SELECT l_returnflag, CAST(n AS BIGINT) AS n,
+           {_corr_sql('q', 'p')} AS corr_qty_price,
+           {_corr_sql('q', 'd')} AS corr_qty_disc,
+           {_corr_sql('p', 'd')} AS corr_price_disc
+    FROM (
+        SELECT l_returnflag, COUNT(*) AS n,
+               SUM(q) AS s_q, SUM(p) AS s_p, SUM(d) AS s_d,
+               SUM(q * q) AS s_qq, SUM(p * p) AS s_pp, SUM(d * d) AS s_dd,
+               SUM(q * p) AS s_qp, SUM(q * d) AS s_qd, SUM(p * d) AS s_pd
+        FROM (
+            SELECT l_returnflag,
+                   CAST(l_quantity AS BIGINT) AS q,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS p,
+                   CAST(ROUND(l_discount * 100) AS BIGINT) AS d
+            FROM lineitem)
+        GROUP BY l_returnflag)
+    """,
+    tags=("agg", "statistics"),
+)
+def corr_matrix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Pearson correlation matrix (quantity × price ×
+    discount) per return flag, from exact integer power sums — the
+    multi-column extension of stats_moments' moment-sketch pattern.
+    One map-side-combined aggregate carries 10 sums per group; the
+    closed forms run over exactly-converted integers with shared
+    expression text, so unlike builtin ``corr`` (Welford partials merge
+    in shuffle-arrival order) the bits are identical at any
+    parallelism. Price-cents squares reach ~6e19 × rows, past 2^63 —
+    the sums run in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB), both
+    exact, both correctly rounded on the final double conversion."""
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.select(
+        "l_returnflag",
+        F.col("l_quantity").cast("bigint").alias("q"),
+        lcents("l_extendedprice").alias("p"),
+        lcents("l_discount").alias("d"),
+    )
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    sums = base.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("q").alias("s_q"),
+        F.sum("p").alias("s_p"),
+        F.sum("d").alias("s_d"),
+        F.sum(dec(F.col("q") * F.col("q"))).alias("s_qq"),
+        F.sum(dec(F.col("p")) * dec(F.col("p"))).alias("s_pp"),
+        F.sum(dec(F.col("d") * F.col("d"))).alias("s_dd"),
+        F.sum(dec(F.col("q")) * dec(F.col("p"))).alias("s_qp"),
+        F.sum(dec(F.col("q") * F.col("d"))).alias("s_qd"),
+        F.sum(dec(F.col("p")) * dec(F.col("d"))).alias("s_pd"),
+    )
+    return sums.select(
+        "l_returnflag",
+        F.col("n").alias("n"),
+        F.expr(_corr_sql("q", "p")).alias("corr_qty_price"),
+        F.expr(_corr_sql("q", "d")).alias("corr_qty_disc"),
+        F.expr(_corr_sql("p", "d")).alias("corr_price_disc"),
+    )
+
+
+@query(
+    "mad_robust_stats",
+    oracle="""
+    WITH med AS (
+        SELECT event_type, quantile_disc(value, 0.5) AS med
+        FROM events GROUP BY event_type),
+    dev AS (
+        SELECT e.event_type, abs(e.value - m.med) AS adev, m.med
+        FROM events e JOIN med m USING (event_type))
+    SELECT event_type,
+           CAST(ANY_VALUE(med) AS DOUBLE) AS median_value,
+           CAST(quantile_disc(adev, 0.5) AS DOUBLE) AS mad
+    FROM dev GROUP BY event_type
+    """,
+    tags=("statistics", "analytics"),
+)
+def mad_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust dispersion per group: exact median and exact MAD
+    (median absolute deviation) — the outlier-resistant alternative to
+    stddev that data-quality monitors want when a corpus has heavy
+    tails. Two grouped exact order statistics, each via the
+    DISTRIBUTED selection (re-planned r7: the old per-group
+    ``row_number`` windows partitioned by the 5-value type enum over
+    raw rows serialized each group's sort into one task at scale;
+    :func:`grouped_scan`'s range slices + broadcast offsets give the
+    identical global rank with slice-level parallelism). Deviations
+    join back against the broadcast per-group medians, then the same
+    selection again. Both engines pick rank floor((n−1)/2)+1
+    (DuckDB's quantile_disc index) — the selected VALUE is invariant
+    to tie order, so the monotonic-id tiebreak only has to be a total
+    order, not a canonical one — and medians/MADs are pass-through
+    doubles: bit-exact compare."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+
+    def disc_median(df: DataFrame, col: str, out: str) -> DataFrame:
+        return grouped_order_stats(
+            spark, df, ["event_type"], col, {out: lambda n: (n - 1) // 2 + 1}
+        )
+
+    med = disc_median(ev, "value", "median_value")
+    dev = ev.join(F.broadcast(med), "event_type").select(
+        "event_type",
+        "median_value",
+        F.abs(F.col("value") - F.col("median_value")).alias("adev"),
+    )
+    mad = disc_median(dev.select("event_type", "adev"), "adev", "mad")
+    return med.join(mad, "event_type")
+
+
+@query(
+    "benford_first_digit",
+    oracle="""
+    WITH digits AS (
+        SELECT CAST(substring(CAST(CAST(value AS DOUBLE) AS VARCHAR), 1, 1)
+                    AS INT) AS digit
+        FROM events WHERE value >= 1),
+    tot AS (SELECT COUNT(*) AS n FROM digits)
+    SELECT digit,
+           CAST(COUNT(*) AS BIGINT) AS n_values,
+           CAST(COUNT(*) * 1000000 // (SELECT n FROM tot) AS BIGINT)
+               AS share_ppm
+    FROM digits GROUP BY digit
+    """,
+    tags=("statistics", "quality"),
+)
+def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-significant-digit distribution — the Benford's-law data
+    QA probe (fabricated or truncated numeric columns show up as a
+    skewed digit histogram). Values ≥ 1, so the first character of the
+    decimal rendering IS the first significant digit in both engines;
+    the share is exact integer parts-per-million (count·10⁶ // total —
+    no float division crosses the compare). One map-side-combinable
+    aggregate plus a 1-row broadcast scalar for the total."""
+    ev = load_table(spark, sf_dir, "events").where(F.col("value") >= 1)
+    digits = ev.select(
+        F.substring(F.col("value").cast("double").cast("string"), 1, 1)
+        .cast("int")
+        .alias("digit")
+    )
+    total = digits.count()
+    return digits.groupBy("digit").agg(
+        F.count(F.lit(1)).alias("n_values"),
+        F.floor(F.count(F.lit(1)) * 1_000_000 / F.lit(total))
+        .cast("bigint")
+        .alias("share_ppm"),
+    )
+
+
+#: z-statistic from exact integer power sums — ONE shared expression
+#: text evaluated by both engines (sqrt and division are IEEE
+#: correctly-rounded, so identical inputs give identical doubles).
+#: Inputs: n_a/n_b (counts) and s1/s2 per arm in exact value-cents.
+_AB_Z = """
+    (CAST(s1a AS DOUBLE) / CAST(n_a AS DOUBLE)
+     - CAST(s1b AS DOUBLE) / CAST(n_b AS DOUBLE))
+    / sqrt(
+        (CAST(s2a AS DOUBLE) / CAST(n_a AS DOUBLE)
+         - (CAST(s1a AS DOUBLE) / CAST(n_a AS DOUBLE))
+           * (CAST(s1a AS DOUBLE) / CAST(n_a AS DOUBLE)))
+        / CAST(n_a AS DOUBLE)
+      + (CAST(s2b AS DOUBLE) / CAST(n_b AS DOUBLE)
+         - (CAST(s1b AS DOUBLE) / CAST(n_b AS DOUBLE))
+           * (CAST(s1b AS DOUBLE) / CAST(n_b AS DOUBLE)))
+        / CAST(n_b AS DOUBLE))
+"""
+
+
+@query(
+    "ab_test_report",
+    oracle=f"""
+    WITH arms AS (
+        SELECT event_type,
+               CAST(COUNT(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS n_a,
+               CAST(COUNT(*) FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS n_b,
+               CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
+                    FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS s1a,
+               CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
+                    FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS s1b,
+               CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)
+                        * CAST(ROUND(value * 100) AS BIGINT))
+                    FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS s2a,
+               CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)
+                        * CAST(ROUND(value * 100) AS BIGINT))
+                    FILTER (WHERE user_id % 2 = 1) AS BIGINT) AS s2b
+        FROM events GROUP BY event_type)
+    SELECT event_type, n_a, n_b, s1a, s1b,
+           {_AB_Z} AS z_score
+    FROM arms
+    """,
+    tags=("analytics", "statistics", "experimentation"),
+)
+def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The experimentation readout: per metric (event type), a
+    two-sample z-statistic between arms A/B (deterministic hash split
+    on user_id) over the value metric — counts, exact cent sums, and
+    the z-score computed from exact integer power sums by ONE
+    expression text shared verbatim with the oracle (IEEE
+    correctly-rounded sqrt/divide ⇒ bit-identical). The per-arm
+    moments are one map-side-combinable aggregate; nothing but the
+    final statistic is floating point."""
+    ev = load_table(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    is_a = F.col("user_id") % 2 == 0
+    arms = ev.groupBy("event_type").agg(
+        F.count(F.when(is_a, 1)).cast("bigint").alias("n_a"),
+        F.count(F.when(~is_a, 1)).cast("bigint").alias("n_b"),
+        F.sum(F.when(is_a, cents)).cast("bigint").alias("s1a"),
+        F.sum(F.when(~is_a, cents)).cast("bigint").alias("s1b"),
+        F.sum(F.when(is_a, cents * cents)).cast("bigint").alias("s2a"),
+        F.sum(F.when(~is_a, cents * cents)).cast("bigint").alias("s2b"),
+    )
+    return arms.select(
+        "event_type", "n_a", "n_b", "s1a", "s1b",
+        F.expr(_AB_Z).alias("z_score"),
+    )
+
+
+@query(
+    "seasonal_naive_error",
+    oracle="""
+    WITH daily AS (
+        SELECT event_type, date_trunc('day', ts) AS day,
+               SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
+        FROM events GROUP BY event_type, day),
+    scored AS (
+        SELECT event_type, day, cents,
+               LAG(cents, 7) OVER (PARTITION BY event_type ORDER BY day)
+                   AS forecast
+        FROM daily)
+    SELECT event_type,
+           CAST(COUNT(forecast) AS BIGINT) AS n_days_scored,
+           CAST(SUM(abs(cents - forecast)) AS BIGINT) AS sum_abs_err_cents,
+           CAST(MAX(abs(cents - forecast)) AS BIGINT) AS max_abs_err_cents
+    FROM scored GROUP BY event_type
+    """,
+    tags=("timeseries", "forecast", "analytics"),
+)
+def seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-naive backtest — the forecasting BASELINE every model
+    must beat (M-competition practice: forecast(d) = actual(d − season))
+    — scored in exact integer cents: daily revenue per event type,
+    weekly seasonality (lag 7 over days), per-type absolute-error
+    totals. The lag window orders DAYS per type — calendar-bounded
+    rows, not data-bounded — after the daily rollup reduced the corpus,
+    so the window is constant-size at any event volume; errors are
+    integer cents end to end (no float drift between engines)."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.sum(lcents("value")).alias("cents"))
+    w = W.partitionBy("event_type").orderBy("day")
+    forecast = F.lag("cents", 7).over(w)
+    scored = daily.select(
+        "event_type", "cents", forecast.alias("forecast")
+    )
+    err = F.abs(F.col("cents") - F.col("forecast"))
+    return scored.groupBy("event_type").agg(
+        F.count("forecast").alias("n_days_scored"),
+        F.sum(err).alias("sum_abs_err_cents"),
+        F.max(err).alias("max_abs_err_cents"),
+    )
+
+
+@query(
+    "winsorized_mean_exact",
+    oracle="""
+    WITH b AS (
+        SELECT event_type,
+               quantile_disc(value, 0.05) AS p05,
+               quantile_disc(value, 0.95) AS p95
+        FROM events GROUP BY event_type),
+    w AS (
+        SELECT e.event_type, b.p05, b.p95,
+               CAST(ROUND(LEAST(GREATEST(e.value, b.p05), b.p95) * 100)
+                    AS BIGINT) AS cents
+        FROM events e JOIN b USING (event_type))
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(ANY_VALUE(p05) AS DOUBLE) AS p05,
+           CAST(ANY_VALUE(p95) AS DOUBLE) AS p95,
+           CAST(SUM(cents) AS BIGINT) AS winsorized_sum_cents,
+           CAST(CAST(SUM(cents) AS HUGEINT) * 10000 // COUNT(*) AS BIGINT)
+               AS winsorized_mean_micro
+    FROM w GROUP BY event_type
+    """,
+    tags=("statistics", "analytics", "quality"),
+)
+def winsorized_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winsorized mean per group — the robust location estimate that
+    clamps (not drops) the tails at the exact p05/p95 order statistics
+    before averaging, completing the robust-statistics family beside
+    :func:`mad_robust_stats`. The percentile picks are EXACT
+    distributed selection, not approxQuantile: :func:`grouped_scan`'s
+    range slices + broadcast offsets give every row its global
+    per-group rank with slice-level parallelism (never a window over
+    the 5-value enum), and the pick rank replicates DuckDB's
+    ``quantile_disc`` convention — rank = ⌈q·n⌉ with q as an EXACT
+    decimal, i.e. ``(95·n + 99) // 100`` in pure integers (a float
+    ``0.95·n`` ceil disagrees whenever the product grazes an integer:
+    0.95·20 is 19 exactly in decimal but 19.000000000000004 in
+    binary). Clamping happens against the broadcast |groups|-row
+    bounds relation; the mean crosses the compare as exact integers:
+    the cent sum ACCUMULATES as decimal(38,0) on Spark (DuckDB's
+    SUM(BIGINT) is already HUGEINT) and the micro mean divides at that
+    width, so the arithmetic itself never wraps at any corpus size —
+    only the reported bigint sum column saturates its cast past 2⁶³,
+    loudly on both engines, never silently wrong. Two selection
+    shuffles + one map-side-combinable aggregate."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    bounds = grouped_order_stats(
+        spark,
+        ev,
+        ["event_type"],
+        "value",
+        {
+            # ⌈q·n⌉ is already ≥ 1 for every n ≥ 1 — no floor guard
+            "p05": lambda n: (5 * n + 99) // 100,
+            "p95": lambda n: (95 * n + 99) // 100,
+        },
+    )
+    cents = F.round(
+        F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95")) * 100
+    ).cast("bigint")
+    return (
+        ev.join(F.broadcast(bounds), "event_type")
+        .select("event_type", "p05", "p95", cents.alias("cents"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.min("p05").alias("p05"),
+            F.min("p95").alias("p95"),
+            # accumulate at decimal(38,0) width — the SUM itself never
+            # wraps; only the reported bigint cast below can saturate
+            F.sum(F.col("cents").cast("decimal(38,0)")).alias("__sum_dec"),
+        )
+        .selectExpr(
+            "event_type",
+            "n",
+            "p05",
+            "p95",
+            "CAST(__sum_dec AS BIGINT) AS winsorized_sum_cents",
+            "CAST(__sum_dec * 10000 div n AS BIGINT)"
+            " AS winsorized_mean_micro",
+        )
+    )
+
+
+@query(
+    "iqr_outlier_fences",
+    oracle="""
+    WITH q AS (
+        SELECT event_type,
+               quantile_disc(value, 0.25) AS q1,
+               quantile_disc(value, 0.75) AS q3
+        FROM events GROUP BY event_type)
+    SELECT e.event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(ANY_VALUE(q.q1) AS DOUBLE) AS q1,
+           CAST(ANY_VALUE(q.q3) AS DOUBLE) AS q3,
+           CAST(COUNT(*) FILTER (
+               WHERE e.value < q.q1 - 1.5 * (q.q3 - q.q1)) AS BIGINT)
+               AS n_below_fence,
+           CAST(COUNT(*) FILTER (
+               WHERE e.value > q.q3 + 1.5 * (q.q3 - q.q1)) AS BIGINT)
+               AS n_above_fence
+    FROM events e JOIN q USING (event_type)
+    GROUP BY e.event_type
+    """,
+    tags=("statistics", "analytics", "quality"),
+)
+def iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tukey boxplot outlier census per group: exact q1/q3 order
+    statistics via the shared :func:`grouped_order_stats` distributed
+    selection (rank = ⌈q·n⌉ in pure integers — DuckDB's exact-decimal
+    ``quantile_disc`` convention, see ``winsorized_mean_exact``), then
+    one broadcast-join pass counting values beyond the classic
+    1.5·IQR fences — the standard data-quality outlier report beside
+    :func:`mad_robust_stats` (which fences on MAD instead). The fence
+    arithmetic runs the IDENTICAL IEEE expression on both engines over
+    the same pass-through doubles, so the counts cross the compare as
+    exact integers. One selection shuffle + one map-side-combinable
+    aggregate; the bounds relation is |groups| rows, broadcast."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
+    q = grouped_order_stats(
+        spark,
+        ev,
+        ["event_type"],
+        "value",
+        {
+            # ⌈q·n⌉ is already ≥ 1 for every n ≥ 1 — no floor guard
+            "q1": lambda n: (25 * n + 99) // 100,
+            "q3": lambda n: (75 * n + 99) // 100,
+        },
+    )
+    iqr = F.col("q3") - F.col("q1")
+    return (
+        ev.join(F.broadcast(q), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.min("q1").alias("q1"),
+            F.min("q3").alias("q3"),
+            F.sum(
+                (F.col("value") < F.col("q1") - 1.5 * iqr).cast("long")
+            ).cast("bigint").alias("n_below_fence"),
+            F.sum(
+                (F.col("value") > F.col("q3") + 1.5 * iqr).cast("long")
+            ).cast("bigint").alias("n_above_fence"),
+        )
+    )
+
+
+@query(
+    "cusum_changepoint_days",
+    oracle="""
+    WITH cells AS (
+        SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS c
+        FROM events GROUP BY 1, 2),
+    tot AS (
+        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+               CAST(SUM(c) AS BIGINT) AS total
+        FROM cells GROUP BY 1),
+    scan AS (
+        SELECT c.event_type, c.day, t.n_days,
+               t.n_days * CAST(SUM(c.c) OVER w AS BIGINT)
+                   - CAST(ROW_NUMBER() OVER w AS BIGINT) * t.total AS s
+        FROM cells c JOIN tot t USING (event_type)
+        WINDOW w AS (PARTITION BY c.event_type ORDER BY c.day
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+    ranked AS (
+        SELECT event_type, n_days, day, ABS(s) AS a,
+               ROW_NUMBER() OVER (PARTITION BY event_type
+                                  ORDER BY ABS(s) DESC, day) AS rk
+        FROM scan)
+    SELECT event_type, n_days,
+           CAST(a AS BIGINT) AS max_abs_cusum_scaled,
+           day AS changepoint_day
+    FROM ranked WHERE rk = 1
+    """,
+    tags=("statistics", "timeseries", "drift"),
+)
+def cusum_changepoint_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM change-point detection over each event type's daily
+    VOLUME (Page 1954, the classic drift alarm for ingest monitoring):
+    the cumulative deviation from the group mean peaks at the most
+    likely shift point. Complements ``cusum_changepoint``
+    (in this module), which runs the same statistic over the raw
+    per-event VALUE series and therefore needs the distscan
+    decomposition; this operator's axis is the calendar day, so the
+    pre-aggregation bounds the windowed relation instead. Kept integer-exact by scaling with the day
+    count — S'_t = n_days·Σ_{i≤t} x_i − t·ΣX = n_days·S_t — so the
+    argmax and the reported magnitude are bit-identical on both
+    engines (a float running mean would accumulate rounding). Emits
+    the scaled peak and its day (ties → earliest day). Scale shape:
+    events pre-aggregate map-side to (type, day) cells — ONE shuffle —
+    and every window below runs over the pre-aggregated, time-bounded
+    day axis (≤ |days| rows per type at ANY corpus size; the
+    enum-partition guard explicitly allows aggregate-fed windows), so
+    the single-task scan touches a calendar's worth of rows, not
+    N/|types|."""
+    ev = load_table(spark, sf_dir, "events")
+    cells = ev.groupBy(
+        "event_type", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.count(F.lit(1)).alias("c"))
+    wall = W.partitionBy("event_type")
+    wcum = wall.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
+    scan = cells.select(
+        "event_type",
+        "day",
+        F.count(F.lit(1)).over(wall).alias("n_days"),
+        (
+            F.count(F.lit(1)).over(wall) * F.sum("c").over(wcum)
+            - F.row_number().over(wall.orderBy("day"))
+            * F.sum("c").over(wall)
+        ).alias("s"),
+    )
+    best = scan.groupBy("event_type").agg(
+        F.max("n_days").cast("bigint").alias("n_days"),
+        F.min(F.struct((-F.abs("s")).alias("neg_a"), F.col("day"))).alias(
+            "pick"
+        ),
+    )
+    return best.select(
+        "event_type",
+        "n_days",
+        (-F.col("pick.neg_a")).cast("bigint").alias("max_abs_cusum_scaled"),
+        F.col("pick.day").alias("changepoint_day"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Kaplan-Meier hazard table (user-lifetime survival analysis)
+
+#: censoring horizon: a user whose LAST event is within this many days
+#: of the corpus end may still be alive — censored, not churned
+KM_CENSOR_DAYS = 28
+
+
+@query(
+    "kaplan_meier_hazard",
+    oracle=f"""
+    WITH per_user AS (
+        SELECT user_id,
+               MIN(CAST(ts AS DATE)) AS first_day,
+               MAX(CAST(ts AS DATE)) AS last_day
+        FROM events GROUP BY user_id),
+    bounds AS (SELECT MAX(last_day) AS corpus_end FROM per_user),
+    lives AS (
+        SELECT date_diff('day', first_day, last_day) AS t,
+               CASE WHEN date_diff('day', last_day,
+                                   (SELECT corpus_end FROM bounds))
+                         < {KM_CENSOR_DAYS}
+                    THEN 1 ELSE 0 END AS censored
+        FROM per_user),
+    per_t AS (
+        SELECT t, COUNT_IF(censored = 0) AS d, COUNT_IF(censored = 1) AS c
+        FROM lives GROUP BY t),
+    risk AS (
+        SELECT t, d, c,
+               SUM(d + c) OVER (ORDER BY t DESC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS n_at_risk
+        FROM per_t)
+    SELECT CAST(t AS BIGINT) AS lifetime_days,
+           CAST(n_at_risk AS BIGINT) AS n_at_risk,
+           CAST(d AS BIGINT) AS n_churned,
+           CAST(c AS BIGINT) AS n_censored,
+           CAST(1000 * d // n_at_risk AS BIGINT) AS hazard_permille
+    FROM risk ORDER BY lifetime_days
+    """,
+    tags=("event-time", "statistics", "lifecycle"),
+)
+def kaplan_meier_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kaplan-Meier hazard table over user lifetimes — survival
+    analysis with honest RIGHT-CENSORING, the lifecycle tool
+    ``retention_cohort``'s calendar matrix cannot replace: a user
+    whose last event sits within {KM_CENSOR_DAYS} days of the corpus
+    end has not been observed to churn (they may act tomorrow), so
+    they leave the risk set at their observed lifetime WITHOUT
+    counting as a death — naive churn curves silently overestimate
+    hazard near the observation boundary and this operator does not.
+    Per lifetime offset t: the at-risk count (suffix sum over the
+    bounded lifetime table — everyone who survived at least t),
+    deaths, censored exits, and the discrete hazard d/n in exact
+    permille; the Kaplan-Meier survival curve is the running product
+    of (1 − hazard) — left to the reader precisely because a float
+    product is order-fragile, while this table is the exact input
+    every survival library consumes.
+
+    Plan: one per-user aggregate (map-side combined), a scalar corpus
+    -end broadcast, a |lifetimes|-row aggregate (bounded by the
+    observation span in days), and the suffix-sum window over those
+    bounded rows (aggregate-below exemption). Corpus-scale work is
+    the single events scan."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", F.col("ts").cast("date").alias("day")
+    )
+    per_user = ev.groupBy("user_id").agg(
+        F.min("day").alias("first_day"), F.max("day").alias("last_day")
+    )
+    bounds = per_user.agg(F.max("last_day").alias("corpus_end"))
+    lives = per_user.crossJoin(F.broadcast(bounds)).select(
+        F.datediff("last_day", "first_day").alias("t"),
+        F.when(
+            F.datediff("corpus_end", "last_day") < KM_CENSOR_DAYS, 1
+        )
+        .otherwise(0)
+        .alias("censored"),
+    )
+    per_t = lives.groupBy("t").agg(
+        F.count_if(F.col("censored") == 0).alias("d"),
+        F.count_if(F.col("censored") == 1).alias("c"),
+    )
+    sw = W.orderBy(F.desc("t")).rowsBetween(W.unboundedPreceding, 0)
+    risk = per_t.select(
+        "t",
+        "d",
+        "c",
+        F.sum(F.col("d") + F.col("c")).over(sw).alias("n_at_risk"),
+    )
+    return risk.selectExpr(
+        "CAST(t AS BIGINT) AS lifetime_days",
+        "CAST(n_at_risk AS BIGINT) AS n_at_risk",
+        "CAST(d AS BIGINT) AS n_churned",
+        "CAST(c AS BIGINT) AS n_censored",
+        "CAST(1000 * d div n_at_risk AS BIGINT) AS hazard_permille",
+    ).orderBy("lifetime_days")

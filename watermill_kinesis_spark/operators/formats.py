@@ -1,5 +1,6 @@
-"""File-format I/O surface: Parquet, JSON-lines, CSV, and partitioned
-layouts.
+"""File-format I/O surface: Parquet, ORC, JSON-lines, CSV, fixed-width
+and XML parsing, and partitioned, bucketed and space-filling-curve
+(Z-order, Hilbert) layouts.
 
 The reference has no file I/O at all (SURVEY.md §2-B — its only I/O is
 the AWS SDK); a batch engine needs the standard lake formats. Each
@@ -23,7 +24,7 @@ import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from watermill_kinesis_spark.functions.exact import dsum, sql_dsum
+from watermill_kinesis_spark.functions.exact import dsum, lcents, sql_dsum
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
@@ -298,4 +299,255 @@ def format_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("bigint").alias("total_cents"),
         F.min("okey").alias("min_key"),
         F.max("okey").alias("max_key"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# XML shredding (the other semi-structured ingest format)
+
+
+@query(
+    "xml_shred",
+    oracle="""
+    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+           CAST(SUM(user_id) AS BIGINT) AS sum_uid
+    FROM events GROUP BY event_type
+    """,
+    tags=("scalar", "xml", "format"),
+)
+def xml_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XML ingest via Spark 4's built-in ``from_xml`` — the enterprise
+    sibling of variant_shred: each event re-serializes to an XML
+    fragment, parses back through a typed schema, and aggregates from
+    the shredded struct. The oracle aggregates the raw columns, so a
+    hash match proves serialize→parse→shred is lossless. Values are
+    exact integers end-to-end; the parse is a JVM expression at scan
+    speed (no Python, no RDD)."""
+    ev = load_table(spark, sf_dir, "events")
+    xml = F.concat(
+        F.lit("<e><t>"),
+        F.col("event_type"),
+        F.lit("</t><c>"),
+        lcents("value").cast("string"),
+        F.lit("</c><u>"),
+        F.col("user_id").cast("string"),
+        F.lit("</u></e>"),
+    )
+    parsed = ev.select(
+        F.from_xml(xml, "t STRING, c BIGINT, u BIGINT").alias("x")
+    )
+    return (
+        parsed.select(
+            F.col("x.t").alias("event_type"),
+            F.col("x.c").alias("cents"),
+            F.col("x.u").alias("uid"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("cents").alias("sum_cents"),
+            F.sum("uid").alias("sum_uid"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# z-order layout (multi-dimensional data skipping)
+
+#: bits per dimension → 2^(2·ZORDER_BITS) z-buckets
+ZORDER_BITS = 4
+
+
+def _z_interleave_sql(bx: str, by: str, intdiv: str = "DIV") -> str:
+    """Bit-interleave two {ZORDER_BITS}-bit ints into a z-value — pure
+    integer div/mod arithmetic, exact on any engine. The only dialect
+    difference is the integer-division spelling (Spark ``DIV``,
+    DuckDB ``//``); every operand is an exact integer, so the results
+    are identical regardless."""
+    terms = []
+    for i in range(ZORDER_BITS):
+        terms.append(f"(({bx} {intdiv} {1 << i}) % 2) * {1 << (2 * i)}")
+        terms.append(f"(({by} {intdiv} {1 << i}) % 2) * {1 << (2 * i + 1)}")
+    return " + ".join(terms)
+
+
+@query(
+    "zorder_layout",
+    oracle=f"""
+    SELECT zbucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+           MIN(l_partkey) AS min_part, MAX(l_partkey) AS max_part,
+           MIN(l_suppkey) AS min_supp, MAX(l_suppkey) AS max_supp
+    FROM (
+        SELECT l_partkey, l_suppkey,
+               {_z_interleave_sql(f"(l_partkey % {1 << ZORDER_BITS})",
+                                  f"(l_suppkey % {1 << ZORDER_BITS})",
+                                  intdiv="//")} AS zbucket
+        FROM lineitem)
+    GROUP BY zbucket
+    """,
+    tags=("layout", "scan"),
+)
+def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order (Morton) clustering layout: interleaving the bits of two
+    key dimensions gives a 1-D sort key under which contiguous file
+    groups cover small rectangles of the 2-D key space — so min/max
+    file statistics prune scans on EITHER dimension (the Delta/Iceberg
+    OPTIMIZE ZORDER technique, here as a first-class operator). The
+    z-value is pure integer div/mod arithmetic (shared text with the
+    oracle); the output is each z-bucket's row count and per-dimension
+    min/max — exactly the skipping statistics a writer would persist.
+    At 100 TB: add dimensions by extending the interleave, widen
+    ZORDER_BITS to match file count, write with
+    ``df.repartitionByRange(zbucket).sortWithinPartitions``."""
+    li = load_table(spark, sf_dir, "lineitem")
+    z = F.expr(
+        _z_interleave_sql(
+            f"(l_partkey % {1 << ZORDER_BITS})", f"(l_suppkey % {1 << ZORDER_BITS})"
+        )
+    )
+    return (
+        li.select("l_partkey", "l_suppkey", z.alias("zbucket"))
+        .groupBy("zbucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("l_partkey").alias("min_part"),
+            F.max("l_partkey").alias("max_part"),
+            F.min("l_suppkey").alias("min_supp"),
+            F.max("l_suppkey").alias("max_supp"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hilbert-curve layout (the locality-stronger sibling of z-order)
+
+#: bits per dimension → a 2^HILBERT_BITS × 2^HILBERT_BITS grid and
+#: 4^HILBERT_BITS hilbert buckets (matches ZORDER_BITS so the two
+#: layouts are directly comparable)
+HILBERT_BITS = 4
+
+
+def _hilbert_d_sql(x: str, y: str, intdiv: str = "DIV") -> str:
+    """xy→d on the order-``HILBERT_BITS`` Hilbert curve as ONE nested
+    SQL expression, shared verbatim between engines (the
+    ``_z_interleave_sql`` convention; only the integer-division
+    spelling differs). The classic loop (per level: quadrant digit
+    from the two high bits, then reflect/transpose the frame) is
+    unrolled into ``HILBERT_BITS`` nested SELECTs over (x, y, d) —
+    state threading the optimizer collapses into straight-line
+    integer arithmetic. No bitwise XOR anywhere: ``^`` means POWER in
+    DuckDB, so the quadrant digit (3·rx)⊕ry is spelled as the
+    explicit 4-case CASE."""
+    inner = f"SELECT {x} AS x, {y} AS y, 0 AS d FROM __src__"
+    for lvl in range(HILBERT_BITS - 1, -1, -1):
+        s = 1 << lvl
+        rx = f"((x {intdiv} {s}) % 2)"
+        ry = f"((y {intdiv} {s}) % 2)"
+        digit = (
+            f"(CASE WHEN {rx} = 0 AND {ry} = 0 THEN 0"
+            f"      WHEN {rx} = 0 AND {ry} = 1 THEN 1"
+            f"      WHEN {rx} = 1 AND {ry} = 1 THEN 2"
+            f"      ELSE 3 END)"
+        )
+        # rotation operates on the SUB-SQUARE coordinates (x % s):
+        # reflecting the raw coordinate (s-1-x) goes negative whenever
+        # the extracted high bit was set, and negative div/mod then
+        # diverges between engines — masking first keeps every
+        # intermediate in [0, s) (verified equivalent to the classic
+        # formulation and pinned against it in tests)
+        new_x = (
+            f"(CASE WHEN {ry} = 0 THEN"
+            f" (CASE WHEN {rx} = 1 THEN {s} - 1 - (y % {s})"
+            f"       ELSE y % {s} END)"
+            f" ELSE x % {s} END)"
+        )
+        new_y = (
+            f"(CASE WHEN {ry} = 0 THEN"
+            f" (CASE WHEN {rx} = 1 THEN {s} - 1 - (x % {s})"
+            f"       ELSE x % {s} END)"
+            f" ELSE y % {s} END)"
+        )
+        inner = (
+            f"SELECT {new_x} AS x, {new_y} AS y,"
+            f" d + {s * s} * {digit} AS d FROM ({inner})"
+        )
+    return inner
+
+
+@query(
+    "hilbert_curve_layout",
+    oracle=f"""
+    WITH __src__ AS (
+        SELECT l_partkey, l_suppkey,
+               l_partkey % {1 << HILBERT_BITS} AS hx,
+               l_suppkey % {1 << HILBERT_BITS} AS hy
+        FROM lineitem),
+    hd AS ({_hilbert_d_sql("hx", "hy", intdiv="//")
+            .replace("FROM __src__",
+                     ", l_partkey AS pk, l_suppkey AS sk FROM __src__")
+            .replace("AS d FROM (", "AS d, pk, sk FROM (")})
+    SELECT d AS hbucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+           MIN(pk) AS min_part, MAX(pk) AS max_part,
+           MIN(sk) AS min_supp, MAX(sk) AS max_supp
+    FROM hd GROUP BY d
+    """,
+    tags=("layout", "scan"),
+)
+def hilbert_curve_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hilbert-curve clustering layout — ``zorder_layout``'s
+    locality-stronger sibling and the curve behind Databricks liquid
+    clustering: unlike Morton order, the Hilbert curve never jumps
+    across the key space (consecutive d values are always grid
+    neighbors), so contiguous file groups cover tighter rectangles
+    and min/max skipping prunes strictly better on range predicates.
+    The xy→d map is the classic reflect/transpose recursion unrolled
+    to ``HILBERT_BITS`` levels of pure integer div/mod/CASE
+    arithmetic — one expression text shared with the oracle, exact on
+    both engines (no float, no xor — ``^`` is POWER in DuckDB). The
+    output is each hilbert-bucket's row count and per-dimension
+    min/max — the skipping statistics a writer would persist, and
+    directly comparable with ``zorder_layout``'s buckets since both
+    use {1 << HILBERT_BITS}×{1 << HILBERT_BITS} grids. At 100 TB: add
+    dimensions by lifting the unroll to the n-D Hilbert recursion,
+    widen bits to the target file count, and write with
+    ``repartitionByRange(hbucket).sortWithinPartitions``."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_partkey",
+        "l_suppkey",
+        (F.col("l_partkey") % (1 << HILBERT_BITS)).alias("hx"),
+        (F.col("l_suppkey") % (1 << HILBERT_BITS)).alias("hy"),
+    )
+    cur = li.selectExpr(
+        "hx AS x", "hy AS y", "0 AS d", "l_partkey AS pk", "l_suppkey AS sk"
+    )
+    for lvl in range(HILBERT_BITS - 1, -1, -1):
+        s = 1 << lvl
+        rx = f"((x DIV {s}) % 2)"
+        ry = f"((y DIV {s}) % 2)"
+        digit = (
+            f"(CASE WHEN {rx} = 0 AND {ry} = 0 THEN 0"
+            f"      WHEN {rx} = 0 AND {ry} = 1 THEN 1"
+            f"      WHEN {rx} = 1 AND {ry} = 1 THEN 2"
+            f"      ELSE 3 END)"
+        )
+        cur = cur.selectExpr(
+            f"(CASE WHEN {ry} = 0 THEN"
+            f" (CASE WHEN {rx} = 1 THEN {s} - 1 - (y % {s})"
+            f"       ELSE y % {s} END)"
+            f" ELSE x % {s} END) AS x",
+            f"(CASE WHEN {ry} = 0 THEN"
+            f" (CASE WHEN {rx} = 1 THEN {s} - 1 - (x % {s})"
+            f"       ELSE x % {s} END)"
+            f" ELSE y % {s} END) AS y",
+            f"d + {s * s} * {digit} AS d",
+            "pk",
+            "sk",
+        )
+    return cur.groupBy(F.col("d").alias("hbucket")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min("pk").alias("min_part"),
+        F.max("pk").alias("max_part"),
+        F.min("sk").alias("min_supp"),
+        F.max("sk").alias("max_supp"),
     )

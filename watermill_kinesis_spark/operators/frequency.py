@@ -1,6 +1,6 @@
-"""Frequency analytics wave: corpus heavy hitters, weight-proportional
-deterministic sampling, mergeable histogram quantile sketches, and an
-inverted index build.
+"""Frequency analytics: corpus heavy hitters, weight-proportional
+deterministic sampling, mergeable distinct-count and quantile
+sketches with their accuracy audits, and an inverted index build.
 
 These fill the frequency/statistics family of the LLM-pipeline layer:
 heavy hitters drive vocabulary pruning and boilerplate detection,
@@ -10,7 +10,7 @@ store keeps per bucket (the quantile companion to
 ``sketch_distinct_mergeable``), and the inverted index is the retrieval
 / contamination-lookup structure built over the corpus.
 
-Determinism discipline (same as analytics.py): every value that reaches
+Determinism discipline: every value that reaches
 the oracle hash is integer arithmetic, an md5-derived integer, or a
 double produced by the identical IEEE-754 expression on both engines —
 no RNG, no float accumulation order dependence.
@@ -1156,4 +1156,73 @@ def lincoln_petersen_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div (m + 1) - 1000 AS BIGINT) AS chapman_est_x1000",
             "CAST(n_exact AS BIGINT) AS n_distinct_exact",
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# mergeable distinct-count sketch (the 100 TB COUNT DISTINCT path)
+
+
+@query("sketch_distinct_mergeable", tags=("sketch", "agg", "rollup"))
+def sketch_distinct_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Datasketches-HLL distinct users per day, computed MERGEABLY:
+    hourly sketches first, daily = union of 24 hourly sketches — the
+    decomposition exact COUNT DISTINCT famously lacks (see
+    rollup_incremental's two-level workaround). At 100 TB this is the
+    distinct-count architecture: partials are a few KB per bucket,
+    re-aggregate associatively to any coarser grain, and persist
+    alongside the continuous aggregate. Rows-only for the driver
+    (DuckDB has no compatible sketch); tests/test_analytics.py bounds
+    the estimate against the exact count."""
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
+        F.hll_sketch_agg("user_id").alias("sk")
+    )
+    return (
+        hourly.groupBy(F.date_trunc("day", "hour").alias("day"))
+        .agg(
+            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users")
+        )
+        .select("day", "approx_users")
+    )
+
+
+@query(
+    "hll_merge_accuracy_audit",
+    oracle="""
+    SELECT date_trunc('day', ts) AS day,
+           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_distinct_exact,
+           1 AS merge_within_bound
+    FROM events GROUP BY 1
+    """,
+    tags=("sketch", "agg", "audit"),
+)
+def hll_merge_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-backed twin of the rows-only ``sketch_distinct_mergeable``
+    (r6 VERDICT task 7): the TWO-LEVEL sketch path — hourly HLL
+    sketches unioned to daily — runs beside the exact per-day COUNT
+    DISTINCT, and the row carries the verdict that the MERGED estimate
+    stays within ±5% (or ±1 for tiny days). This is the property the
+    rows-only entry could only assert in pytest: hll_union_agg over
+    partial sketches loses nothing vs sketching the day directly,
+    the decomposition that makes distinct counts re-aggregable at
+    100 TB. Estimates stay engine-side; the envelope crosses the
+    compare."""
+    ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
+    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
+        F.hll_sketch_agg("user_id").alias("sk")
+    )
+    merged = hourly.groupBy(F.date_trunc("day", "hour").alias("day")).agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
+    )
+    exact = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
+        F.countDistinct("user_id").cast("bigint").alias("n_distinct_exact")
+    )
+    slack = F.greatest(F.lit(1.0), F.col("n_distinct_exact") * F.lit(0.05))
+    return exact.join(merged, "day").select(
+        "day",
+        "n_distinct_exact",
+        F.when(F.abs(F.col("est") - F.col("n_distinct_exact")) <= slack, 1)
+        .otherwise(0)
+        .alias("merge_within_bound"),
     )

@@ -21,7 +21,9 @@ Two tiers, per SURVEY.md §2-C:
 
 The compressed (int8, 1-bit, Matryoshka-prefix) and multi-vector faces,
 hard-negative mining, rank fusion and the mutual-kNN graph build on the
-same exact top-k and the same ``tables.embedding_vectors`` loader.
+same exact top-k and the same ``tables.embedding_vectors`` loader;
+embedding normalization, average pooling and per-dimension drift are
+the vector-preparation steps around them.
 
 Vector math runs in Arrow-vectorized numpy kernels (``mapInPandas``):
 Spark's array higher-order functions evaluate interpreted per element,
@@ -1540,4 +1542,210 @@ def binary_quant_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("hamming").cast("bigint").alias("hamming"),
             F.col("rank").cast("bigint").alias("rank"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# embeddings
+
+
+@query(
+    "embedding_avg_pool",
+    oracle="""
+    SELECT label, pos,
+           CAST(SUM(CAST(floor(CAST(e AS DOUBLE) * 1000000000000.0) AS BIGINT)) AS DOUBLE)
+               / 1000000000000.0 / COUNT(*) AS avg_val,
+           COUNT(*) AS n_vecs
+    FROM (
+        SELECT label,
+               unnest(embedding) AS e,
+               unnest(generate_series(0, len(embedding) - 1)) AS pos
+        FROM embeddings
+    )
+    GROUP BY label, pos
+    """,
+    tags=("pipeline", "embedding"),
+)
+def embedding_avg_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label centroid via element-wise average pooling: posexplode
+    flattens vectors to (label, pos, value) rows so the aggregation is
+    a plain hash groupBy on (label, pos) — fully JVM-side, scales to
+    any vector count with one shuffle of dims×rows skinny rows. Float
+    components are quantized to integer picounits via floor(x·1e12)
+    and summed as exact bigints (order-independent, and floor — unlike
+    decimal rounding — has no round-half midpoint ambiguity between
+    engines; one in ~30k values landed on an exact midpoint and
+    HALF_UP/HALF_EVEN diverged)."""
+    em = load_table(spark, sf_dir, "embeddings")
+    pico = F.floor(F.col("e").cast("double") * F.lit(1e12)).cast("bigint")
+    return (
+        em.select("label", F.posexplode("embedding").alias("pos", "e"))
+        .groupBy("label", "pos")
+        .agg(
+            (
+                F.sum(pico).cast("double") / F.lit(1e12) / F.count(F.lit(1))
+            ).alias("avg_val"),
+            F.count(F.lit(1)).alias("n_vecs"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# embedding normalization + quantization
+
+
+@query(
+    "embedding_normalize",
+    oracle="""
+    WITH m AS (
+        SELECT vec_id,
+               CAST(embedding AS DOUBLE[]) AS e,
+               list_transform(CAST(embedding AS DOUBLE[]),
+                              x -> CAST(floor(x * 1000000.0) AS BIGINT)) AS micro
+        FROM embeddings WHERE vec_id < 500),
+    n AS (
+        SELECT vec_id, e,
+               sqrt(CAST(list_sum(list_transform(micro, u -> u * u)) AS DOUBLE))
+                   / 1000000.0 AS l2_norm
+        FROM m)
+    SELECT vec_id,
+           round(l2_norm, 6) AS l2_norm,
+           array_to_string(
+               list_transform(e, x -> CAST(floor(x / l2_norm * 127.0) AS INT)),
+               ',') AS q8
+    FROM n
+    """,
+    tags=("pipeline", "embedding", "quantize", "llm-pipeline"),
+)
+def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L2-normalize + int8-quantize an embedding column — the storage
+    shrink (4 bytes → 1 byte/dim) every vector corpus applies before
+    indexing. The norm is computed from EXACT integer arithmetic:
+    components quantize to micro-units (floor(x·1e6) — exact on
+    float32-origin doubles), squares sum as bigints (≤ 2^53, so the
+    bigint→double conversion is exact), and one sqrt yields the norm —
+    bit-identical on any engine and partition order, unlike a naive
+    float sum-of-squares whose result depends on addition order. The
+    quantized code floor(x/‖x‖·127) then divides exactly-equal doubles.
+    Partition-local, zero shuffle, linear at 100 TB; the array HOFs stay
+    JVM-side (for BLAS-speed batches see similarity.py's kernels).
+
+    The q8 vector is emitted as a comma-joined STRING, not array<int>:
+    the correctness harness canonicalizes by sorting raw pandas rows,
+    and a top-level Python-list cell is unhashable there — a scalar
+    column carries the same information and is hashable everywhere."""
+    e = (
+        load_table(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < 500)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    )
+    micro = F.transform(F.col("e"), lambda x: F.floor(x * 1000000.0).cast("bigint"))
+    sumsq = F.aggregate(
+        F.transform(micro, lambda u: u * u), F.lit(0).cast("bigint"), lambda a, x: a + x
+    )
+    norm = F.sqrt(sumsq.cast("double")) / F.lit(1000000.0)
+    n = e.select("vec_id", "e", norm.alias("l2_norm"))
+    q8 = F.transform(
+        F.col("e"), lambda x: F.floor(x / F.col("l2_norm") * 127.0).cast("int")
+    )
+    return n.select(
+        "vec_id",
+        F.round("l2_norm", 6).alias("l2_norm"),
+        F.array_join(q8.cast("array<string>"), ",").alias("q8"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# embedding distribution drift (reference vs candidate corpus halves)
+
+#: report the top-N drifted dimensions
+DRIFT_TOP_DIMS = 8
+
+
+@query(
+    "embedding_drift_dims",
+    oracle=f"""
+    WITH m AS (
+        SELECT vec_id, vec_id % 2 = 0 AS is_ref,
+               list_transform(CAST(embedding AS DOUBLE[]),
+                              x -> CAST(floor(x * 1000000.0) AS BIGINT)) AS micro
+        FROM embeddings),
+    d AS (
+        SELECT CAST(r.dim AS INT) AS dim, is_ref, micro[CAST(r.dim AS INT)] AS val
+        FROM m, unnest(range(1, len(micro) + 1)) AS r(dim)),
+    s AS (
+        SELECT dim,
+               CAST(SUM(CASE WHEN is_ref THEN val END) AS BIGINT) AS s_ref,
+               CAST(SUM(CASE WHEN NOT is_ref THEN val END) AS BIGINT) AS s_cand,
+               CAST(COUNT(CASE WHEN is_ref THEN 1 END) AS BIGINT) AS n_ref,
+               CAST(COUNT(CASE WHEN NOT is_ref THEN 1 END) AS BIGINT) AS n_cand
+        FROM d GROUP BY dim),
+    r AS (
+        SELECT dim, n_ref, n_cand, s_ref, s_cand,
+               CAST(n_cand * s_ref - n_ref * s_cand AS DOUBLE)
+                   / (CAST(n_ref AS DOUBLE) * CAST(n_cand AS DOUBLE) * 1000000.0)
+                   AS mean_diff,
+               ROW_NUMBER() OVER (
+                   ORDER BY abs(n_cand * s_ref - n_ref * s_cand) DESC, dim)
+                   AS drift_rank
+        FROM s)
+    SELECT dim, n_ref, n_cand, s_ref, s_cand, mean_diff,
+           CAST(drift_rank AS INT) AS drift_rank
+    FROM r WHERE drift_rank <= {DRIFT_TOP_DIMS}
+    """,
+    tags=("pipeline", "embedding", "monitoring", "llm-pipeline"),
+)
+def embedding_drift_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-distribution drift monitor: per-dimension mean shift
+    between a reference corpus half and a candidate half (here: even
+    vs odd vec_id — in production, last month's index vs this week's
+    ingest), reporting the top-8 (DRIFT_TOP_DIMS) drifted dimensions.
+    Per-dim mean difference IS the linear-kernel MMD witness function —
+    the standard cheap drift alarm before re-training an index or a
+    router.
+
+    Exactness: components quantize to micro-units (floor(x·1e6), the
+    embedding_normalize pattern) so per-dim sums are exact BIGINTs, and
+    the ranking key |n_cand·s_ref − n_ref·s_cand| is an exact integer —
+    no float comparison anywhere until the single closed-form division
+    that renders the human-readable mean_diff. One explode + one
+    (dim)-keyed aggregate: at 100 TB the shuffle is |dims| cells, and
+    the window runs over a constant |dims|-row table."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        (F.col("vec_id") % 2 == 0).alias("is_ref"),
+        F.expr(
+            "transform(CAST(embedding AS ARRAY<DOUBLE>),"
+            " x -> CAST(floor(x * 1000000.0) AS BIGINT))"
+        ).alias("micro"),
+    )
+    d = e.select(
+        "is_ref", F.posexplode("micro").alias("dim0", "val")
+    ).select((F.col("dim0") + 1).cast("int").alias("dim"), "is_ref", "val")
+    s = d.groupBy("dim").agg(
+        F.sum(F.when(F.col("is_ref"), F.col("val"))).cast("bigint").alias("s_ref"),
+        F.sum(F.when(~F.col("is_ref"), F.col("val"))).cast("bigint").alias("s_cand"),
+        F.count(F.when(F.col("is_ref"), 1)).cast("bigint").alias("n_ref"),
+        F.count(F.when(~F.col("is_ref"), 1)).cast("bigint").alias("n_cand"),
+    )
+    from pyspark.sql import Window as W
+
+    key = F.abs(F.col("n_cand") * F.col("s_ref") - F.col("n_ref") * F.col("s_cand"))
+    r = s.withColumn(
+        "drift_rank",
+        F.row_number()
+        .over(W.orderBy(key.desc(), F.asc("dim")))
+        .cast("int"),
+    )
+    return r.where(F.col("drift_rank") <= DRIFT_TOP_DIMS).select(
+        "dim",
+        "n_ref",
+        "n_cand",
+        "s_ref",
+        "s_cand",
+        F.expr(
+            "CAST(n_cand * s_ref - n_ref * s_cand AS DOUBLE)"
+            " / (CAST(n_ref AS DOUBLE) * CAST(n_cand AS DOUBLE) * 1000000.0)"
+        ).alias("mean_diff"),
+        "drift_rank",
     )

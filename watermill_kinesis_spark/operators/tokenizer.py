@@ -1,5 +1,7 @@
-"""Distributed BPE tokenizer training — the merge-learning loop every
-LLM data stack runs before anything else tokenizes.
+"""Tokenizer operators: distributed BPE training — the merge-learning
+loop every LLM data stack runs before anything else tokenizes — with
+the pair-count statistics behind one merge step, subword encoding,
+and T5-style span-corruption masks over the tokenized corpus.
 
 The classic trainer operates on the WORD-FREQUENCY VOCABULARY, not the
 corpus: the corpus-scale work is one word-count aggregation (map-side
@@ -9,13 +11,12 @@ makes BPE training tractable at 100 TB, and it is exactly how this
 module splits the work:
 
 - ``word_vocab``: corpus → (word, freq), one shuffle.
-- ``train_bpe_merges``: N iterations over the vocab DataFrame; each
-  iteration is (1) adjacent-pair frequency aggregate, (2) a 1-row
-  driver argmax (deterministic tie-break: highest freq, then
-  lexicographically smallest pair), (3) greedy non-overlapping merge
-  application — expressed as a pure ``F.aggregate`` fold over the
-  symbol array, JVM-side, no Python in the loop. ``localCheckpoint``
-  per iteration truncates the otherwise exponentially nesting lineage.
+- ``train_bpe_merges``: the capped vocabulary (≤ ``cap`` rows at any
+  corpus size) is collected once, and N merge iterations run
+  driver-local over it; each iteration is (1) the frequency-weighted
+  adjacent-pair counts, (2) the argmax (deterministic tie-break:
+  highest freq, then lexicographically smallest pair), (3) greedy
+  left-to-right non-overlapping merge application.
 
 Merge semantics match the reference BPE formulation (Sennrich et al.,
 "Neural Machine Translation of Rare Words with Subword Units", 2016):
@@ -57,42 +58,14 @@ def word_vocab(docs: DataFrame, cap: int = BPE_VOCAB_CAP) -> DataFrame:
     )
 
 
-def _apply_merge(vocab: DataFrame, left: str, right: str) -> DataFrame:
-    """Greedy left-to-right non-overlapping application of one merge,
-    as a pure SQL fold: walk the symbols, and whenever the running
-    tail equals `left` and the next symbol is `right`, replace the
-    tail with the merged token. JVM expressions only — the loop body
-    never leaves codegen."""
-    merged = F.expr(
-        f"""
-        aggregate(
-            symbols,
-            CAST(array() AS array<string>),
-            (acc, s) -> CASE
-                WHEN size(acc) > 0
-                     AND element_at(acc, -1) = {_sq(left)}
-                     AND s = {_sq(right)}
-                THEN concat(slice(acc, 1, size(acc) - 1),
-                            array({_sq(left + right)}))
-                ELSE concat(acc, array(s)) END)
-        """
-    )
-    return vocab.withColumn("symbols", merged)
-
-
-def _sq(s: str) -> str:
-    """SQL single-quoted literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def train_bpe_merges(
     docs: DataFrame, n_merges: int = BPE_MERGES, cap: int = BPE_VOCAB_CAP
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns
     ``[(rank, left, right, pair_freq), ...]`` in learned order.
 
-    Planned as a driver loop (guide §1.2 — fix the distributed
-    algorithm first): the merge loop runs over the CAPPED
+    Planned as a driver loop (fix the distributed algorithm first):
+    the merge loop runs over the CAPPED
     word-frequency vocabulary, a ≤``cap``-row relation at ANY corpus
     size — a model artifact, not data. Iterating it on the cluster
     would cost 40 merges × (vocab-wide pair aggregate +
@@ -108,10 +81,9 @@ def train_bpe_merges(
     greedy left-to-right non-overlapping application. The sequence is
     pinned exactly by tests/test_tokenizer.py's independent trainer.
 
-    (The same round removed the cross-invocation ``_MERGES_MEMO``:
-    memoizing training results across runs hid the loop's real cost
-    from the bench — every invocation now trains from the parquet
-    inputs.)"""
+    There is no cross-invocation memo: memoizing training results
+    across runs would hide the loop's real cost from the bench, so
+    every invocation trains from the parquet inputs."""
     vocab_rows = word_vocab(docs, cap).collect()
     vocab: list[tuple[int, list[str]]] = [
         (int(r.freq), list(r.symbols)) for r in vocab_rows
@@ -283,4 +255,149 @@ def bpe_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_known") == F.col("n_words")).cast("int").alias(
             "all_pieces_known"
         ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# BPE-style pair counting (the inner loop of tokenizer training)
+
+#: result size for bpe_pair_counts
+BPE_TOP_N = 50
+
+
+@query(
+    "bpe_pair_counts",
+    oracle=f"""
+    WITH tok AS (
+        SELECT t AS token, CAST(COUNT(*) AS BIGINT) AS freq
+        FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
+        WHERE length(t) >= 2
+        GROUP BY t),
+    pairs AS (
+        SELECT substring(token, CAST(i AS INT), 2) AS pair, freq
+        FROM tok, unnest(range(1, length(token))) AS r(i)),
+    counts AS (
+        SELECT pair, CAST(SUM(freq) AS BIGINT) AS n
+        FROM pairs GROUP BY pair)
+    SELECT pair, n FROM counts
+    ORDER BY n DESC, pair LIMIT {BPE_TOP_N}
+    """,
+    tags=("text", "tokenizer", "llm-pipeline"),
+)
+def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Byte-pair-encoding pair statistics — the exact computation a BPE
+    tokenizer trainer runs every merge iteration: count adjacent symbol
+    pairs across the corpus weighted by word frequency, pick the top
+    pair to merge. Here: top-50 (BPE_TOP_N) character bigrams inside
+    whitespace words.
+
+    Scale shape (this is why BPE training parallelizes): the corpus
+    collapses to the *frequency-weighted vocabulary* in the first
+    aggregate — pair extraction then runs over |vocab| rows, not
+    |corpus| rows, which is the difference between re-scanning 100 TB
+    per merge and re-scanning megabytes. Pair explosion is a JVM
+    higher-order transform (no Python); counts are exact BIGINTs. A
+    full trainer loops this query with the chosen merge applied to the
+    vocab — each iteration touches only the |vocab|-sized table."""
+    d = load_table(spark, sf_dir, "documents")
+    tok = (
+        d.select(F.explode(F.split("text", " ")).alias("token"))
+        .where(F.length("token") >= 2)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
+    )
+    # substring with a dynamic start needs the SQL spelling; transform
+    # yields the per-position 2-char slice JVM-side
+    pairs = tok.select(
+        F.explode(
+            F.expr(
+                "transform(sequence(1, length(token) - 1),"
+                " i -> substring(token, i, 2))"
+            )
+        ).alias("pair"),
+        "freq",
+    )
+    counts = pairs.groupBy("pair").agg(
+        F.sum("freq").cast("bigint").alias("n")
+    )
+    return counts.orderBy(F.desc("n"), F.asc("pair")).limit(BPE_TOP_N)
+
+
+# ---------------------------------------------------------------------------
+# span-corruption mask generation (T5/UL2-style denoising prep)
+
+#: tokens per mask block, span length, and the two mixing constants of
+#: the per-(doc, block) span-offset hash — all pure integer arithmetic
+#: so the mask layout is reproducible on any engine
+SPAN_BLOCK = 20
+SPAN_LEN = 3
+SPAN_MIX_A = 2654435761  # Knuth multiplicative constant
+SPAN_MIX_B = 40503
+
+
+@query(
+    "span_corruption_masks",
+    oracle=f"""
+    WITH t AS (
+        SELECT doc_id,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        FROM documents),
+    d AS (SELECT doc_id, n_tokens, n_tokens // {SPAN_BLOCK} AS n_spans FROM t),
+    spans AS (
+        SELECT doc_id,
+               b * {SPAN_BLOCK}
+                 + (doc_id * {SPAN_MIX_A} + b * {SPAN_MIX_B})
+                   % 2147483648 % {SPAN_BLOCK - SPAN_LEN + 1} AS start
+        FROM d, unnest(range(n_spans)) AS r(b))
+    SELECT d.doc_id, d.n_tokens,
+           CAST(d.n_spans AS BIGINT) AS n_spans,
+           CAST(d.n_spans * {SPAN_LEN} AS BIGINT) AS n_masked,
+           CAST(COALESCE(SUM(s.start), 0) AS BIGINT) AS span_start_sum
+    FROM d LEFT JOIN spans s USING (doc_id)
+    GROUP BY d.doc_id, d.n_tokens, d.n_spans
+    """,
+    tags=("tokenizer", "training-prep", "llm-pipeline"),
+)
+def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T5/UL2-style span-corruption mask layout, deterministically
+    derived from (doc_id, block) integer hashing: every full 20-token
+    (SPAN_BLOCK) block masks one 3-token (SPAN_LEN) span whose offset
+    is ``(doc_id·A + block·B) mod 2³¹ mod 18`` — non-overlapping by
+    construction, ~15% mask rate, and reproducible bit-for-bit on any
+    engine or replica (a denoising objective must present the same
+    corruption for the same document on every epoch and every worker).
+
+    The Spark side *materializes* each span (sequence → transform →
+    explode of real start indices) and aggregates count + start-sum;
+    the oracle recomputes the same arithmetic independently — agreement
+    verifies every span position, not just the counts. One scan, one
+    shuffle on doc_id; span generation is JVM higher-order functions,
+    mask metadata is 24 bytes/doc regardless of document size."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+    )
+    d = d.withColumn(
+        "n_spans", F.expr(f"CAST(n_tokens DIV {SPAN_BLOCK} AS BIGINT)")
+    )
+    spans = d.where(F.col("n_spans") > 0).select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, CAST(n_spans AS INT) - 1),"
+                f" b -> CAST(b AS BIGINT) * {SPAN_BLOCK}"
+                f" + (doc_id * {SPAN_MIX_A} + CAST(b AS BIGINT) * {SPAN_MIX_B})"
+                f" % 2147483648 % {SPAN_BLOCK - SPAN_LEN + 1})"
+            )
+        ).alias("start"),
+    )
+    sums = spans.groupBy("doc_id").agg(
+        F.sum("start").cast("bigint").alias("span_start_sum")
+    )
+    return d.join(sums, "doc_id", "left").select(
+        "doc_id",
+        "n_tokens",
+        F.col("n_spans").cast("bigint").alias("n_spans"),
+        (F.col("n_spans") * SPAN_LEN).cast("bigint").alias("n_masked"),
+        F.coalesce("span_start_sum", F.lit(0)).cast("bigint").alias("span_start_sum"),
     )

@@ -33,18 +33,6 @@ _OPERATOR_MODULES = (
     "watermill_kinesis_spark.operators.text",
     "watermill_kinesis_spark.operators.multimodal",
     "watermill_kinesis_spark.operators.pipeline",
-    "watermill_kinesis_spark.operators.pipeline2",
-    "watermill_kinesis_spark.operators.analytics",
-    "watermill_kinesis_spark.operators.analytics2",
-    "watermill_kinesis_spark.operators.analytics3",
-    "watermill_kinesis_spark.operators.analytics4",
-    "watermill_kinesis_spark.operators.pipeline3",
-    "watermill_kinesis_spark.operators.pipeline4",
-    "watermill_kinesis_spark.operators.pipeline5",
-    "watermill_kinesis_spark.operators.pipeline6",
-    "watermill_kinesis_spark.operators.pipeline7",
-    "watermill_kinesis_spark.operators.pipeline8",
-    "watermill_kinesis_spark.operators.pipeline9",
     "watermill_kinesis_spark.operators.sqltext",
     "watermill_kinesis_spark.operators.modern",
     "watermill_kinesis_spark.operators.governance",
