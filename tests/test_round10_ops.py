@@ -1,4 +1,5 @@
-"""Round-10 operator invariants (pipeline8): brute-force pins for the
+"""Operator invariants for ``text``, ``dedup``, ``evaluation``,
+``windows`` and ``relational``: brute-force pins for the
 lexical-richness profile, token burstiness, the TVD drift matrix, the
 Mann-Whitney length test, dedup token accounting, cadence screening,
 and the Brier decomposition — semantics the row-hash oracle can't

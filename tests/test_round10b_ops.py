@@ -1,8 +1,9 @@
-"""Round-10 wave-2 operator invariants (pipeline9 + NDCG): brute-force
-pins for the nonparametric-suite completions — Kruskal-Wallis H,
-Brown-Forsythe/Levene W, Ansari-Bradley dispersion (its closed-form
-span score re-derived by LITERAL per-rank summation), and NDCG@k
-recomputed with exact Fractions against real log2 discounts.
+"""Operator invariants for ``evaluation``, ``retrieval`` and
+``similarity``: brute-force pins for the nonparametric-suite
+completions — Kruskal-Wallis H, Brown-Forsythe/Levene W, Ansari-Bradley
+dispersion (its closed-form span score re-derived by LITERAL per-rank
+summation), NDCG@k recomputed with exact Fractions against real log2
+discounts, and binary-quantized Hamming retrieval.
 """
 
 from __future__ import annotations

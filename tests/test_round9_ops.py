@@ -1,4 +1,4 @@
-"""Round-9 wave-2 operator invariants (pipeline7): brute-force pins
+"""Operator invariants for ``text`` and ``evaluation``: brute-force pins
 for skip-gram co-occurrence, the Welch drift audit, and Simpson
 diversity — semantics the row-hash oracle can't express (the oracle
 pins values; these pin meaning against independent Python recomputes).

@@ -22,6 +22,7 @@
 #     this runner (its own oracle needs a 4.4e9-row window sort).
 set -u
 cd "$(dirname "$0")/.."
+ROOT="$(pwd)"
 REPLICA="${1:-/tmp/sf10_replica}"
 shift || true
 LOG="${TAIL_CERT_LOG:-/tmp/tail_certs.log}"
@@ -34,10 +35,10 @@ while [ "$#" -ge 2 ]; do
   budget=$2
   shift 2
   echo "=== $name (start $(date +%T), budget ${budget}s) ===" >> "$LOG"
-  PYTHONPATH=/root/repo SPARK_GRAFT_VANILLA=1 \
+  PYTHONPATH="$ROOT" SPARK_GRAFT_VANILLA=1 \
     SPARK_GRAFT_VANILLA_CORES="${TAIL_CERT_CORES:-8}" \
     SPARK_GRAFT_VANILLA_MEM="${TAIL_CERT_MEM:-24g}" \
-    timeout "$budget" python /root/repo/tools/check_oracle.py "$REPLICA" "$name" \
+    timeout "$budget" python "$ROOT/tools/check_oracle.py" "$REPLICA" "$name" \
     >> "$LOG" 2>> "${LOG%.log}.err"
   echo "exit: $? (end $(date +%T))" >> "$LOG"
   df -h /tmp | tail -1 >> "$LOG"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from watermill_kinesis_spark import codec
 from watermill_kinesis_spark.operators.messages import messages_from_events
+from watermill_kinesis_spark.operators.streaming_batch import drain
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources import kinesis_aws
 from watermill_kinesis_spark.sources.kinesis_stub import FileStubKinesisClient
@@ -102,43 +103,29 @@ def custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only: live streaming offsets are not SQL-expressible;
     restart/replay invariants are asserted in
     tests/test_kinesis_aws_parallel.py."""
-    import uuid as uuidlib
-
     kinesis_aws.register(spark)
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"kinesis_aws_stream_{run_id}_")
-    stub_dir = os.path.join(base, "stub")
-    client = FileStubKinesisClient(stub_dir)
-    for i in range(4):
-        client.add_shard(f"shardId-{i:012d}")
     msgs = messages_from_events(spark, sf_dir, fanout=True)
     uid = F.col("uuid").cast("bigint")
-    for lo, hi in ((0, 1500), (1500, 2000)):  # two publish batches
-        wire = codec.marshal(msgs.where((uid >= lo) & (uid < hi)))
-        _stub_stream(wire.write, stub_dir).mode("append").save()
-    stream = (
-        _stub_stream(spark.readStream, stub_dir)
-        .option("positionDir", os.path.join(base, "pos"))
-        .load()
-    )
-    decoded = codec.unmarshal(stream, drop_corrupt=True)
-    name = f"css_{run_id}"
-    q = (
-        decoded.select(
+    with tempfile.TemporaryDirectory(prefix="kinesis_aws_stream_") as base:
+        stub_dir = os.path.join(base, "stub")
+        client = FileStubKinesisClient(stub_dir)
+        for i in range(4):
+            client.add_shard(f"shardId-{i:012d}")
+        for lo, hi in ((0, 1500), (1500, 2000)):  # two publish batches
+            wire = codec.marshal(msgs.where((uid >= lo) & (uid < hi)))
+            _stub_stream(wire.write, stub_dir).mode("append").save()
+        stream = (
+            _stub_stream(spark.readStream, stub_dir)
+            .option("positionDir", os.path.join(base, "pos"))
+            .load()
+        )
+        decoded = codec.unmarshal(stream, drop_corrupt=True).select(
             F.col("metadata").getItem("eventType").alias("event_type"),
             F.col("metadata").getItem("shardID").alias("shard_id"),
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        rows = drain(decoded, os.path.join(base, "ckpt"))
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        rows.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_messages"),
             F.countDistinct("shard_id").alias("n_shards"),

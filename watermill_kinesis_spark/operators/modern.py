@@ -234,22 +234,22 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the face is safe at scale; the oracle runs the identical LATERAL
     spelling on DuckDB. Top-2 ties break on o_orderkey so both
     engines pick the same rows; money sums in exact cents."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT c.c_mktsegment,
                CAST(COUNT(*) AS BIGINT) AS n_customers,
                CAST(SUM(t.top_cents) AS BIGINT) AS sum_top2_cents
-        FROM customer c, LATERAL (
+        FROM {customer} c, LATERAL (
             SELECT COALESCE(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)), 0)
                        AS top_cents
             FROM (SELECT o_totalprice, o_orderkey
-                  FROM orders o
+                  FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                   ORDER BY o.o_totalprice DESC, o_orderkey
                   LIMIT 2) o
         ) t
         GROUP BY c.c_mktsegment
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )

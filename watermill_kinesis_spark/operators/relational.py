@@ -1777,16 +1777,15 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark expands to a single shuffle with a grouping-id column, not
     three scans (same contract as rollup_agg/cube_agg but with an
     explicit, non-hierarchical set list)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("gs_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n,
                CAST(SUM(CAST(l_quantity AS DECIMAL(12,0))) AS DOUBLE) AS sum_qty
-        FROM gs_lineitem
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        li=load_table(spark, sf_dir, "lineitem"),
     )
 
 

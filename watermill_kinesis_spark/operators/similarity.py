@@ -1314,7 +1314,6 @@ def ann_model_save_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a single mapInPandas scan emitting 3 longs per Arrow batch, and
     the parquet model files are the exact artifact a 1000-executor
     apply job would broadcast-load."""
-    import shutil
     import tempfile
 
     import numpy as np
@@ -1340,8 +1339,7 @@ def ann_model_save_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         C[lab_idx[r.label], r.i] = r.c
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
-    tmp = tempfile.mkdtemp(prefix="wk_ann_model_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="wk_ann_model_") as tmp:
         # single-slice parallelize: the models are KB-sized driver
         # artifacts — default createDataFrame parallelism wrote them as
         # 32 one-row parquet files through 32 Python-RDD tasks
@@ -1415,8 +1413,6 @@ def ann_model_save_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_relation(spark, 
         [(int(agg.n), model_ok, int(agg.bc == 0), int(agg.bl == 0))],
         "n_vectors bigint, model_roundtrip_identical int, "

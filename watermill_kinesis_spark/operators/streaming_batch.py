@@ -8,16 +8,22 @@ the window *arithmetic* itself is oracle-verified in batch by
 operators/windows.py (SURVEY.md §2-C, driver contract note on
 non-SQL-expressible ops).
 
-Topic directories and checkpoints live under a per-query temp dir; the
-memory-sink table name is unique per run so repeated driver invocations
-don't collide.
+Each call owns its files: topic directories, checkpoints and file-sink
+outputs live in a ``tempfile.TemporaryDirectory`` that goes when the
+call returns or raises. ``drain`` runs a stream into a memory sink and
+drops the sink's view at once, so no name is left in the caller's
+catalog; the restart entries drain through a file sink (a memory sink
+cannot recover from a checkpoint) and return a ``localCheckpoint`` of
+its rows.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import tempfile
 import uuid as uuidlib
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -63,17 +69,63 @@ def _subscribe(spark: SparkSession, topic: str) -> DataFrame:
     return SubscriberBuilder().with_endpoint(root).build().subscribe(spark, name)
 
 
-def _run_available_now(stream_df: DataFrame, name: str, checkpoint: str):
+def drain(stream_df: DataFrame, checkpoint: str, mode: str = "append") -> DataFrame:
+    """Run ``stream_df`` to the end of its input (one ``availableNow``
+    trigger) into a memory sink and return the sink's rows. The sink's
+    temp view is dropped before returning, on error too: the returned
+    DataFrame holds the sink itself, not its name."""
+    spark = stream_df.sparkSession
+    name = f"wk_drain_{uuidlib.uuid4().hex}"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
+        .outputMode(mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return q
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _drain_across_restart(
+    spark: SparkSession,
+    batches: Iterable[DataFrame],
+    stream_of: Callable[[str], DataFrame],
+    prefix: str,
+) -> DataFrame:
+    """Publish each batch to one topic and drain ``stream_of(topic)``
+    after each, every run from the SAME checkpoint: run n+1 restarts
+    from run n's committed offsets, watermark and state. A memory sink
+    refuses to recover from a checkpoint, so the runs append to a JSON
+    file sink; its rows come back as a ``localCheckpoint``, which the
+    result owns once the directory is gone."""
+    with tempfile.TemporaryDirectory(prefix=f"wk_{prefix}_") as base:
+        topic, ckpt, out = (os.path.join(base, d) for d in ("topic", "ckpt", "out"))
+        for batch in batches:
+            _publish(batch, topic)
+            stream = stream_of(topic)
+            (
+                stream.writeStream.format("json")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.read.schema(stream.schema).json(out).localCheckpoint()
+
+
+def _key_totals(emissions: DataFrame) -> DataFrame:
+    """Final per-key totals of the key-accounting emissions."""
+    return emissions.groupBy("partition_key").agg(
+        F.max("n_messages").alias("total_messages"),
+        F.max("n_bytes").alias("total_bytes"),
+        F.count(F.lit(1)).alias("n_emissions"),
+    )
 
 
 @query("stream_roundtrip_counts", tags=("streaming",))
@@ -86,21 +138,16 @@ def stream_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark state are not SQL-expressible; the arithmetic twin is
     oracle-checked in batch and the streaming invariants are asserted
     in tests/test_streaming.py."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_stream_{run_id}_")
-    topic = os.path.join(base, "topic")
-    msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    _publish(msgs, topic)
-    decoded = _subscribe(spark, topic)
-    counted = decoded.select(
-        F.col("metadata").getItem("eventType").alias("event_type"),
-        F.col("metadata").getItem("shardID").alias("shard_id"),
-    )
-    name = f"roundtrip_{run_id}"
-    _run_available_now(counted, name, os.path.join(base, "ckpt"))
+    with tempfile.TemporaryDirectory(prefix="wk_stream_") as base:
+        topic = os.path.join(base, "topic")
+        _publish(_event_messages(spark, sf_dir, F.col("event_id") < 2000), topic)
+        counted = _subscribe(spark, topic).select(
+            F.col("metadata").getItem("eventType").alias("event_type"),
+            F.col("metadata").getItem("shardID").alias("shard_id"),
+        )
+        rows = drain(counted, os.path.join(base, "ckpt"))
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        rows.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct("shard_id").alias("n_shards"),
@@ -119,22 +166,18 @@ def stream_dedup_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark state are not SQL-expressible; the arithmetic twin is
     oracle-checked in batch and the streaming invariants are asserted
     in tests/test_streaming.py."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_dedup_{run_id}_")
-    topic = os.path.join(base, "topic")
     msgs = _event_messages(spark, sf_dir, F.col("event_id") < 1000)
-    # batch0: all messages; batch1: the same messages again (redelivery)
-    _publish(msgs, topic)
-    _publish(msgs, topic)
-    decoded = _subscribe(spark, topic).withColumn(
-        "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
-    )
-    deduped = dedup_by_uuid(decoded, delay="1 hour")
-    name = f"dedup_{run_id}"
-    _run_available_now(
-        deduped.select("uuid"), name, os.path.join(base, "ckpt")
-    )
-    return spark.table(name).agg(
+    with tempfile.TemporaryDirectory(prefix="wk_dedup_") as base:
+        topic = os.path.join(base, "topic")
+        # batch0: all messages; batch1: the same messages again (redelivery)
+        _publish(msgs, topic)
+        _publish(msgs, topic)
+        decoded = _subscribe(spark, topic).withColumn(
+            "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
+        )
+        deduped = dedup_by_uuid(decoded, delay="1 hour")
+        rows = drain(deduped.select("uuid"), os.path.join(base, "ckpt"))
+    return rows.agg(
         F.count(F.lit(1)).alias("n_delivered"),
         F.countDistinct("uuid").alias("n_unique"),
     )
@@ -153,16 +196,11 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     PREVIOUS batch: in-run it lags one micro-batch, across restart it
     gates immediately. Output exposes n_fresh/n_late inputs so the
     drop is visible: n_counted ≤ n_fresh despite n_late extra rows."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_wm_{run_id}_")
-    topic = os.path.join(base, "topic")
     ev = load_table(spark, sf_dir, "events")
     fresh = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
     # the reference point is the FRESH batch's own max event time —
     # that is what the watermark will be derived from after batch 0
     cutoff = ev.where(F.col("event_id") < 2000).agg(F.max("ts")).collect()[0][0]
-    import datetime
-
     late_bound = cutoff - datetime.timedelta(hours=48)
     # batch 1 re-delivers OLD events from batch 0's range (event ids
     # correlate with time in the testdata, so a disjoint id range would
@@ -172,14 +210,12 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         (F.col("event_id") < 2000) & (F.col("ts") < F.lit(late_bound)),
     )
-    ckpt = os.path.join(base, "ckpt")
-    out_dir = os.path.join(base, "out")
 
-    def run_once() -> None:
+    def windowed(topic: str) -> DataFrame:
         decoded = _subscribe(spark, topic).withColumn(
             "event_time", F.col("metadata").getItem("eventTime").cast("timestamp")
         )
-        windowed = (
+        return (
             decoded.withWatermark("event_time", "1 hour")
             .groupBy(F.window("event_time", "6 hours"))
             .agg(F.count(F.lit(1)).alias("n"))
@@ -190,22 +226,12 @@ def watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        q = (
-            windowed.writeStream.format("json")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    _publish(fresh, topic)
-    run_once()  # commits the fresh watermark
-    _publish(late, topic)
-    run_once()  # replay run: every late row gated by the watermark
+    # run 1 commits the fresh watermark; in run 2, the replay, every
+    # late row is gated by it
+    out = _drain_across_restart(spark, (fresh, late), windowed, "wm")
     n_fresh, n_late = fresh.count(), late.count()
-    return spark.read.json(out_dir).agg(
+    return out.agg(
         F.sum("n").cast("bigint").alias("n_counted"),
         F.count(F.lit(1)).alias("n_windows"),
         F.lit(n_fresh).alias("n_fresh_input"),
@@ -224,41 +250,15 @@ def stream_stateful_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     not SQL-expressible; invariants asserted in tests."""
     from watermill_kinesis_spark.streaming.stateful import key_accounting
 
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_state_{run_id}_")
-    topic = os.path.join(base, "topic")
-    ckpt = os.path.join(base, "ckpt")
-    out_dir = os.path.join(base, "out")
-
-    def run_once() -> None:
-        decoded = _subscribe(spark, topic)
-        acct = key_accounting(decoded)
-        q = (
-            acct.writeStream.format("json")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     b0 = _event_messages(spark, sf_dir, F.col("event_id") < 600)
     b1 = _event_messages(
         spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
     )
-    _publish(b0, topic)
-    run_once()
-    _publish(b1, topic)
-    run_once()  # restart: state restored from checkpoint, counts continue
-
-    out = spark.read.schema(
-        "partition_key string, n_messages long, n_bytes long, batch_messages long"
-    ).json(out_dir)
-    return out.groupBy("partition_key").agg(
-        F.max("n_messages").alias("total_messages"),
-        F.max("n_bytes").alias("total_bytes"),
-        F.count(F.lit(1)).alias("n_emissions"),
+    # run 2 restarts: state restored from checkpoint, counts continue
+    return _key_totals(
+        _drain_across_restart(
+            spark, (b0, b1), lambda t: key_accounting(_subscribe(spark, t)), "state"
+        )
     )
 
 
@@ -271,24 +271,21 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark state are not SQL-expressible; the arithmetic twin is
     oracle-checked in batch and the streaming invariants are asserted
     in tests/test_streaming.py."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_ssj_{run_id}_")
-    topic = os.path.join(base, "topic")
-    msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    _publish(msgs, topic)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("string").alias("partition_key"),
         "c_mktsegment",
     )
-    decoded = _subscribe(spark, topic).select(
-        F.col("metadata").getItem("partitionKey").alias("partition_key")
-    )
-    enriched = decoded.join(cust, "partition_key", "left")
-    name = f"ssj_{run_id}"
-    _run_available_now(enriched, name, os.path.join(base, "ckpt"))
+    with tempfile.TemporaryDirectory(prefix="wk_ssj_") as base:
+        topic = os.path.join(base, "topic")
+        _publish(_event_messages(spark, sf_dir, F.col("event_id") < 2000), topic)
+        decoded = _subscribe(spark, topic).select(
+            F.col("metadata").getItem("partitionKey").alias("partition_key")
+        )
+        rows = drain(
+            decoded.join(cust, "partition_key", "left"), os.path.join(base, "ckpt")
+        )
     return (
-        spark.table(name)
-        .groupBy("c_mktsegment")
+        rows.groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("c_mktsegment")
     )
@@ -296,48 +293,42 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _watermarked_click_buy_join(
     spark: SparkSession, sf_dir: str, prefix: str, how: str
-):
+) -> DataFrame:
     """Shared scaffolding for the stream-stream funnel joins: publish
     one batch of events to a topic, subscribe twice (clicks /
     purchases), watermark both sides 2 h, and join on same-user within
-    a 1-hour window with the given join type. Returns the name of the
-    memory table holding (user_c, click_ts, buy_ts) rows."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_{prefix}_{run_id}_")
-    topic = os.path.join(base, "topic")
-    msgs = _event_messages(spark, sf_dir, F.col("event_id") < 4000)
-    _publish(msgs, topic)
+    a 1-hour window with the given join type. Returns the drained
+    (user_c, click_ts, buy_ts) rows."""
+    with tempfile.TemporaryDirectory(prefix=f"wk_{prefix}_") as base:
+        topic = os.path.join(base, "topic")
+        _publish(_event_messages(spark, sf_dir, F.col("event_id") < 4000), topic)
 
-    def side(kind: str, ts_alias: str, key_alias: str):
-        return (
-            _subscribe(spark, topic)
-            .where(F.col("metadata").getItem("eventType") == kind)
-            .select(
-                F.col("metadata").getItem("partitionKey").alias(key_alias),
-                F.col("metadata")
-                .getItem("eventTime")
-                .cast("timestamp")
-                .alias(ts_alias),
+        def side(kind: str, ts_alias: str, key_alias: str):
+            return (
+                _subscribe(spark, topic)
+                .where(F.col("metadata").getItem("eventType") == kind)
+                .select(
+                    F.col("metadata").getItem("partitionKey").alias(key_alias),
+                    F.col("metadata")
+                    .getItem("eventTime")
+                    .cast("timestamp")
+                    .alias(ts_alias),
+                )
+                .withWatermark(ts_alias, "2 hours")
             )
-            .withWatermark(ts_alias, "2 hours")
-        )
 
-    clicks = side("click", "click_ts", "user_c")
-    buys = side("purchase", "buy_ts", "user_b")
-    joined = clicks.join(
-        buys,
-        (F.col("user_c") == F.col("user_b"))
-        & (F.col("buy_ts") >= F.col("click_ts"))
-        & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        how,
-    )
-    name = f"{prefix}_{run_id}"
-    _run_available_now(
-        joined.select("user_c", "click_ts", "buy_ts"),
-        name,
-        os.path.join(base, "ckpt"),
-    )
-    return name
+        clicks = side("click", "click_ts", "user_c")
+        buys = side("purchase", "buy_ts", "user_b")
+        joined = clicks.join(
+            buys,
+            (F.col("user_c") == F.col("user_b"))
+            & (F.col("buy_ts") >= F.col("click_ts"))
+            & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+            how,
+        )
+        return drain(
+            joined.select("user_c", "click_ts", "buy_ts"), os.path.join(base, "ckpt")
+        )
 
 
 @query("stream_stream_join", tags=("streaming", "join"))
@@ -348,8 +339,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks, the canonical funnel/attribution shape. Rows-only:
     stream-stream state semantics are not SQL-expressible (DuckDB has
     no notion of two buffered sides)."""
-    name = _watermarked_click_buy_join(spark, sf_dir, "s2j", "inner")
-    return spark.table(name).agg(
+    return _watermarked_click_buy_join(spark, sf_dir, "s2j", "inner").agg(
         F.count(F.lit(1)).alias("n_attributed"),
         F.countDistinct("user_c").alias("n_users"),
     )
@@ -371,8 +361,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     its watermark-flushable subset (clicks whose window never ages
     past the final watermark legitimately stay buffered at
     end-of-stream — the documented outer-join tail holdback)."""
-    name = _watermarked_click_buy_join(spark, sf_dir, "slo", "left_outer")
-    return spark.table(name).agg(
+    return _watermarked_click_buy_join(spark, sf_dir, "slo", "left_outer").agg(
         F.count(F.lit(1)).alias("n_click_rows"),
         F.sum(F.when(F.col("buy_ts").isNotNull(), 1).otherwise(0)).alias(
             "n_matched"
@@ -398,43 +387,29 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (one 'stateStoreSave' operator). Rows-only: state-file
     layout is engine-internal; the count arithmetic itself is
     oracle-verified in batch by partition_key_group."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_ssr_{run_id}_")
-    topic = os.path.join(base, "topic")
-    ckpt = os.path.join(base, "ckpt")
-    name = f"ssr_{run_id}"
-
-    msgs = _event_messages(spark, sf_dir, F.col("event_id") < 2000)
-    _publish(msgs, topic)
-    counts = (
-        _subscribe(spark, topic)
-        .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
-        .groupBy("partition_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    live = spark.table(name).select(
-        "partition_key", F.col("n").alias("n_live")
-    )
-    meta = spark.read.format("state-metadata").load(ckpt)
-    n_operators = meta.count()
-    st = spark.read.format("statestore").load(ckpt)
-    # key/value struct field names follow the aggregation's grouping
-    # column and agg alias — resolve from the schema, not by guess
-    key_field = st.schema["key"].dataType.names[0]
-    val_field = st.schema["value"].dataType.names[0]
-    state = st.select(
-        F.col(f"key.{key_field}").alias("partition_key"),
-        F.col(f"value.{val_field}").alias("n_state"),
-    )
+    with tempfile.TemporaryDirectory(prefix="wk_ssr_") as base:
+        topic, ckpt = os.path.join(base, "topic"), os.path.join(base, "ckpt")
+        _publish(_event_messages(spark, sf_dir, F.col("event_id") < 2000), topic)
+        counts = (
+            _subscribe(spark, topic)
+            .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
+            .groupBy("partition_key")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        live = drain(counts, ckpt, "complete").select(
+            "partition_key", F.col("n").alias("n_live")
+        )
+        n_operators = spark.read.format("state-metadata").load(ckpt).count()
+        st = spark.read.format("statestore").load(ckpt)
+        # key/value struct field names follow the aggregation's grouping
+        # column and agg alias — resolve from the schema, not by guess
+        key_field = st.schema["key"].dataType.names[0]
+        val_field = st.schema["value"].dataType.names[0]
+        # the state files go with the directory: the result owns a copy
+        state = st.select(
+            F.col(f"key.{key_field}").alias("partition_key"),
+            F.col(f"value.{val_field}").alias("n_state"),
+        ).localCheckpoint()
     return (
         state.join(live, "partition_key", "full_outer")
         .select(
@@ -485,25 +460,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithState requires a google.protobuf runtime"
         )
 
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_tws_{run_id}_")
-    topic = os.path.join(base, "topic")
-    ckpt = os.path.join(base, "ckpt")
-    out_dir = os.path.join(base, "out")
-
-    def run_once() -> None:
-        decoded = _subscribe(spark, topic)
-        acct = key_accounting_tws(decoded)
-        q = (
-            acct.writeStream.format("json")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     b0 = _event_messages(spark, sf_dir, F.col("event_id") < 600)
     b1 = _event_messages(
         spark, sf_dir, (F.col("event_id") >= 600) & (F.col("event_id") < 1200)
@@ -513,19 +469,11 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        _publish(b0, topic)
-        run_once()
-        _publish(b1, topic)
-        run_once()  # restart: ValueState restored, totals continue
-
-    out = spark.read.schema(
-        "partition_key string, n_messages long, n_bytes long, batch_messages long"
-    ).json(out_dir)
-    return out.groupBy("partition_key").agg(
-        F.max("n_messages").alias("total_messages"),
-        F.max("n_bytes").alias("total_bytes"),
-        F.count(F.lit(1)).alias("n_emissions"),
-    )
+        # run 2 restarts: ValueState restored, totals continue
+        out = _drain_across_restart(
+            spark, (b0, b1), lambda t: key_accounting_tws(_subscribe(spark, t)), "tws"
+        )
+    return _key_totals(out)
 
 
 if has_tws_runtime():  # pragma: no cover - container lacks protobuf
@@ -544,35 +492,22 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key must equal the batch ground truth. Rows-only: output-mode
     mechanics are not SQL-expressible; the count arithmetic is
     oracle-verified in batch by partition_key_group."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_upd_{run_id}_")
-    topic = os.path.join(base, "topic")
-    name = f"upd_{run_id}"
-
-    for lo, hi in ((0, 1000), (1000, 2000)):
-        msgs = _event_messages(
-            spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+    with tempfile.TemporaryDirectory(prefix="wk_upd_") as base:
+        topic = os.path.join(base, "topic")
+        for lo, hi in ((0, 1000), (1000, 2000)):
+            msgs = _event_messages(
+                spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+            )
+            _publish(msgs, topic)
+        counts = (
+            _subscribe(spark, topic)
+            .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
+            .groupBy("partition_key")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        _publish(msgs, topic)
-
-    counts = (
-        _subscribe(spark, topic)
-        .select(F.col("metadata").getItem("partitionKey").alias("partition_key"))
-        .groupBy("partition_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        rows = drain(counts, os.path.join(base, "ckpt"), "update")
     return (
-        spark.table(name)
-        .groupBy("partition_key")
+        rows.groupBy("partition_key")
         .agg(F.max("n").alias("n_messages"))
         .orderBy("partition_key")
     )
@@ -589,31 +524,19 @@ def stream_complete_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — not accumulate emissions. Rows-only: output-mode
     mechanics are not SQL-expressible; the count arithmetic is
     oracle-checked in batch by partition_key_group."""
-    run_id = uuidlib.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix=f"wk_cmp_{run_id}_")
-    topic = os.path.join(base, "topic")
-    name = f"cmp_{run_id}"
-
-    for lo, hi in ((0, 1000), (1000, 2000)):
-        msgs = _event_messages(
-            spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+    with tempfile.TemporaryDirectory(prefix="wk_cmp_") as base:
+        topic = os.path.join(base, "topic")
+        for lo, hi in ((0, 1000), (1000, 2000)):
+            msgs = _event_messages(
+                spark, sf_dir, (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+            )
+            _publish(msgs, topic)
+        counts = (
+            _subscribe(spark, topic)
+            .select(F.col("metadata").getItem("eventType").alias("event_type"))
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        _publish(msgs, topic)
-
-    counts = (
-        _subscribe(spark, topic)
-        .select(F.col("metadata").getItem("eventType").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # complete mode: the memory sink holds exactly the LAST emission
-    return spark.table(name).orderBy("event_type")
+        # complete mode: the memory sink holds exactly the LAST emission
+        rows = drain(counts, os.path.join(base, "ckpt"), "complete")
+    return rows.orderBy("event_type")

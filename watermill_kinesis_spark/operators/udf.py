@@ -143,11 +143,10 @@ def udtf_token_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, " ".join(toks[i : i + 3])
 
     spark.udtf.register("wk_trigrams", Trigrams)
-    d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    d.createOrReplaceTempView("udtf_docs")
     return spark.sql(
         "SELECT t.doc_id, t.ngram "
-        "FROM udtf_docs AS d, LATERAL wk_trigrams(d.doc_id, d.text) AS t"
+        "FROM {docs} AS d, LATERAL wk_trigrams(d.doc_id, d.text) AS t",
+        docs=load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50),
     )
 
 
