@@ -4,10 +4,13 @@ import importlib
 import os
 import sys
 import tempfile
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _entry_module():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     return importlib.import_module("__spark_entry__")
 
 
@@ -31,9 +34,10 @@ def test_queries_and_oracles_consistent(spark):
 
 
 def test_each_query_builds_a_dataframe(spark, sf_dir, tmp_path, monkeypatch):
-    """Every entry builds. Each streaming entry also removes every file
-    it wrote before it returns, and its result still collects; no entry
-    leaves a temp view behind except sqltext's documented table views."""
+    """Every entry builds. Each streaming and custom-source entry also
+    removes every file it wrote before it returns, and its result still
+    collects; no entry leaves a temp view behind except sqltext's
+    documented table views."""
     from watermill_kinesis_spark.sources.tables import TABLE_NAMES
     from watermill_kinesis_spark.streaming.pbcompat import ensure_protobuf_on_workers
 
@@ -48,7 +52,7 @@ def test_each_query_builds_a_dataframe(spark, sf_dir, tmp_path, monkeypatch):
         files_before = set(os.listdir(tmp_path))
         df = fn(spark, sf_dir)
         assert df.schema is not None, name
-        if fn.__module__.endswith(".streaming_batch") or name == "custom_source_stream":
+        if fn.__module__.endswith((".streaming_batch", ".custom_source")):
             left = set(os.listdir(tmp_path)) - files_before
             assert not left, f"{name} left {sorted(left)}"
             df.collect()

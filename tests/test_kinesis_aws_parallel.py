@@ -365,7 +365,7 @@ def test_reader_mode_switch_offsets_compatible(tmp_path):
     # the backlog was consumed and committed as {shards, init} only
     logged = {
         "shards": {
-            sid: client._shards[sid][-1]["SequenceNumber"]
+            sid: client._shards[sid][-1]["seq"]
             for sid in ("shardId-000000000000", "shardId-000000000001")
         },
         "init": None,
@@ -635,23 +635,6 @@ def test_fencestore_not_found_classification():
     assert not _is_not_found(OSError("bucket Not Found"))
 
 
-def test_stub_state_copy_does_not_alias(tmp_path):
-    """r6 ADVICE: the bench seeded an in-memory stub by aliasing the
-    file-backed stub's private lists — a mutation through either
-    client corrupted the other. copy_state_from must deep-copy."""
-    from watermill_kinesis_spark.sources.kinesis_stub import StubKinesisClient
-
-    a = StubKinesisClient()
-    a.put("shardId-000000000000", b"one", partition_key="k")
-    b = StubKinesisClient()
-    b.copy_state_from(a)
-    b.put("shardId-000000000000", b"two", partition_key="k")
-    b.split_shard("shardId-000000000000", "s1", "s2")
-    assert len(a._shards["shardId-000000000000"]) == 1  # a untouched
-    assert "shardId-000000000000" not in a._closed
-    assert b._seq == 2 and a._seq == 1
-
-
 def test_driver_failfast_when_fences_never_visible(tmp_path, monkeypatch):
     """Multi-node misconfiguration shape: executors fence to disks the
     driver cannot see (driver-local default positionDir on a real
@@ -874,3 +857,97 @@ def test_file_stub_torn_journal_tail_is_terminated(tmp_path):
     r = FileStubKinesisClient(sdir)
     recs = r._shards["shardId-000000000000"]
     assert len(recs) == 2
+
+
+def test_file_stub_writer_skips_its_own_entries_past_a_torn_tail(tmp_path):
+    """A writer that terminates a torn journal tail also counts that
+    tail as replayed: its next read must not apply its own entry a
+    second time."""
+    sdir = str(tmp_path / "stub")
+    w = FileStubKinesisClient(sdir)
+    w.put("shardId-000000000000", b"before", partition_key="k")
+    with open(w._jpath, "ab") as f:
+        # a crashed writer's torn line, longer than the next entry
+        f.write(b'{"op": "puts", "items": [["shardId-000000000000", "' + b"A" * 400)
+    w.put("shardId-000000000000", b"after", partition_key="k")
+    w.list_shards()
+    assert [r["seq"] for r in w._shards["shardId-000000000000"]] == ["1", "2"]
+
+
+def test_memory_and_file_stub_clients_answer_alike(tmp_path, monkeypatch):
+    """The in-memory and file-backed stub clients are one client: the
+    same mutations, then every iterator type and paged GetRecords, get
+    equal responses from both, from a file-backed client whose state is
+    folded into a snapshot, and from cold clients that only read the
+    state directories back."""
+    from datetime import datetime, timezone
+    from types import SimpleNamespace
+
+    from watermill_kinesis_spark.sources import kinesis_stub
+
+    clock = SimpleNamespace(now=100.0)
+    monkeypatch.setattr(kinesis_stub, "time", SimpleNamespace(time=lambda: clock.now))
+    dirs = [str(tmp_path / "journal"), str(tmp_path / "snapshot")]
+    clients = [kinesis_stub.StubKinesisClient()] + [FileStubKinesisClient(d) for d in dirs]
+    clients[2]._COMPACT_MIN_BYTES = 1
+
+    def alike(call, *a, **kw):
+        got = [getattr(c, call)(*a, **kw) for c in clients]
+        assert all(g == got[0] for g in got), (call, a, kw, got)
+        return got[0]
+
+    def put_batch(n, prefix):
+        return alike(
+            "put_records",
+            StreamName="s",
+            Records=[{"Data": f"{prefix}{i}", "PartitionKey": f"k{i}"} for i in range(n)],
+        )
+
+    # put_records on an empty stream creates its two shards
+    assert {r["ShardId"] for r in put_batch(8, "a")["Records"]} == {
+        "shardId-000000000000",
+        "shardId-000000000001",
+    }
+    clock.now = 200.0
+    alike("put", "shardId-000000000001", b"put-bytes", partition_key="p")
+    alike("put", "shardId-000000000002", "put-new-shard", partition_key="p")
+    put_batch(6, "b")
+    clock.now = 300.0
+    alike("split_shard", "shardId-000000000000", "c1", "c2")
+    alike("merge_shards", "c1", "c2", "m")
+    alike("close_shard", "shardId-000000000002")
+    alike("put", "m", b"merged", partition_key="p")
+
+    clients[2]._compact()  # the whole state in the snapshot, no journal
+    clients += [FileStubKinesisClient(d) for d in dirs]  # cold
+    assert clients[-1]._stamp is not None and clients[-1]._jpos == 0
+    shards = [s["ShardId"] for s in alike("list_shards", StreamName="s")["Shards"]]
+    assert shards == sorted(
+        ["c1", "c2", "m"] + [f"shardId-{i:012d}" for i in range(3)]
+    )
+    closed = {"c1", "c2", "shardId-000000000000", "shardId-000000000002"}
+    for shard in shards:
+        recs = clients[0]._shards[shard]
+        starts = [
+            {"ShardIteratorType": "TRIM_HORIZON"},
+            {"ShardIteratorType": "LATEST"},
+            {"ShardIteratorType": "AT_TIMESTAMP", "Timestamp": 150.0},
+            {
+                "ShardIteratorType": "AT_TIMESTAMP",
+                "Timestamp": datetime.fromtimestamp(250.0, tz=timezone.utc),
+            },
+        ]
+        for rec in recs[:2]:
+            for kind in ("AT_SEQUENCE_NUMBER", "AFTER_SEQUENCE_NUMBER"):
+                starts.append(
+                    {"ShardIteratorType": kind, "StartingSequenceNumber": rec["seq"]}
+                )
+        for start in starts:
+            it = alike("get_shard_iterator", "s", shard, **start)["ShardIterator"]
+            for _ in range(len(recs) + 2):  # pages of 2, then an empty one
+                page = alike("get_records", ShardIterator=it, Limit=2)
+                it = page["NextShardIterator"]
+                if it is None or not page["Records"]:
+                    break
+            assert (it is None) == (shard in closed)
+    assert clients[0].calls == clients[1].calls

@@ -238,17 +238,12 @@ def test_kpl_deaggregation_through_source(reader_on):
 
     c = StubKinesisClient()
     packed = kpl.aggregate([("k1", b"sub-a"), ("k2", b"sub-b"), ("k1", b"sub-c")])
-    c._shards.setdefault("shardId-000000000000", []).append(
-        {"Data": packed, "PartitionKey": "k1", "SequenceNumber": "100",
-         "ApproximateArrivalTimestamp": None}
-    )
+    c.put("shardId-000000000000", packed, partition_key="k1")
     c.put("shardId-000000000000", "plain-record", partition_key="kp")
     corrupt = bytearray(kpl.aggregate([("k9", b"x")]))
     corrupt[8] ^= 0xFF
-    c._shards["shardId-000000000000"].append(
-        {"Data": bytes(corrupt), "PartitionKey": "k9", "SequenceNumber": "102",
-         "ApproximateArrivalTimestamp": None}
-    )
+    c.put("shardId-000000000000", bytes(corrupt), partition_key="k9")
+    seq = c._shards["shardId-000000000000"][0]["seq"]
 
     r = reader_on(c)
     start = r.initialOffset()
@@ -257,7 +252,7 @@ def test_kpl_deaggregation_through_source(reader_on):
     rows = _tuples(r.read(part))
     datas = [row[0] for row in rows]
     assert datas[:3] == ["sub-a", "sub-b", "sub-c"]
-    assert [row[2] for row in rows[:3]] == ["100:0", "100:1", "100:2"]
+    assert [row[2] for row in rows[:3]] == [f"{seq}:{i}" for i in range(3)]
     assert [row[1] for row in rows[:3]] == ["k1", "k2", "k1"]
     assert "plain-record" in datas
     assert len(rows) == 5  # 3 subs + plain + corrupt-container fallback row

@@ -7,6 +7,8 @@ scoped, and a returned DataFrame owns its checkpoints.
 - dropped results free their blocks (no session-long cache pins);
 - no operator module persists, caches or overrides the session conf
   outside the scope;
+- operators take their directories from ``tempfile.TemporaryDirectory``,
+  bar the open ``mkdtemp`` sites;
 - operators read tables through ``load_table`` and size fan-outs with
   ``tables.adaptive_partitions`` only;
 - operators rank through ``functions/distscan.py``, not a hand-built
@@ -201,6 +203,54 @@ def test_guard_catches_each_forbidden_form(tmp_path):
         "    spark.conf.unset('k')\n"
     )
     assert len(_violations(p)) == 5
+
+
+#: (module, top-level function) that may still make a directory nothing
+#: removes: ROADMAP direction 9's open sites, whose results read the
+#: files lazily after the call returns
+MKDTEMP_SITES = {("formats", "_tmp"), ("multimodal", "binaryfile_ingest")}
+
+
+def _mkdtemp_violations(path: Path) -> list[str]:
+    """``mkdtemp`` calls and imports outside ``MKDTEMP_SITES``; an
+    operator takes its directories from ``tempfile.TemporaryDirectory``."""
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        owner = top.name if isinstance(top, ast.FunctionDef) else None
+        if (path.stem, owner) in MKDTEMP_SITES:
+            continue
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+                name = next((a.name for a in node.names if a.name == "mkdtemp"), None)
+            else:
+                continue
+            if name == "mkdtemp":
+                out.append(f"{path.name}:{node.lineno} mkdtemp in {owner or 'module'}")
+    return out
+
+
+def test_operators_own_their_temp_directories():
+    """No operator makes a directory that outlives its call, apart from
+    the open ``MKDTEMP_SITES``."""
+    found = [v for p in _operator_files() for v in _mkdtemp_violations(p)]
+    assert not found, "\n".join(found)
+
+
+def test_mkdtemp_guard_catches_each_forbidden_form(tmp_path):
+    p = tmp_path / "formats.py"
+    p.write_text(
+        "import tempfile\n"
+        "from tempfile import mkdtemp\n"
+        "def _tmp(prefix):\n"
+        "    return tempfile.mkdtemp(prefix=prefix)\n"
+        "def f(spark):\n"
+        "    a = tempfile.mkdtemp()\n"
+        "    return mkdtemp(), a\n"
+    )
+    assert len(_mkdtemp_violations(p)) == 3
 
 
 def _only_wraps_load_table(fn: ast.FunctionDef) -> bool:

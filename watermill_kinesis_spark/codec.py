@@ -184,8 +184,8 @@ def merge_system_metadata(
     partition_key_col: str | None = "partition_key",
 ) -> Column:
     """Headers map + system-populated keys (partition key, shard id,
-    arrival timestamp — subscriber.go:60 enrichment), shared by every
-    unmarshaller flavor (JSON, binary, protobuf). System keys overwrite
+    arrival timestamp — subscriber.go:60 enrichment), shared by the JSON
+    and protobuf unmarshallers. System keys overwrite
     header keys, as in the reference (marshaller.go:35-40). Conflicting
     keys are stripped from the headers first so the merge is
     well-defined under any ``spark.sql.mapKeyDedupPolicy`` — the engine

@@ -72,23 +72,24 @@ def aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n) bytes across n puts, like the real service's appends — so
     this entry runs in replica-scale sweeps directly.)"""
     kinesis_aws.register(spark)
-    stub_dir = tempfile.mkdtemp(prefix="kinesis_aws_rt_")
-    FileStubKinesisClient(stub_dir)  # init empty stream state
     wire = codec.marshal(messages_from_events(spark, sf_dir, fanout=True))
-    _stub_stream(wire.write, stub_dir).mode("append").save()
-    back = _stub_stream(spark.read, stub_dir).load()
-    msgs = codec.unmarshal(back, drop_corrupt=False)
-    return (
-        msgs.select(
-            F.col("metadata").getItem("eventType").alias("event_type"),
-            F.col("metadata").getItem("partitionKey").alias("partition_key"),
+    with tempfile.TemporaryDirectory(prefix="kinesis_aws_rt_") as stub_dir:
+        _stub_stream(wire.write, stub_dir).mode("append").save()
+        back = _stub_stream(spark.read, stub_dir).load()
+        msgs = codec.unmarshal(back, drop_corrupt=False)
+        # one row per event type, held before the stub's files go
+        return (
+            msgs.select(
+                F.col("metadata").getItem("eventType").alias("event_type"),
+                F.col("metadata").getItem("partitionKey").alias("partition_key"),
+            )
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_messages"),
+                F.countDistinct("partition_key").alias("n_keys"),
+            )
+            .localCheckpoint()
         )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_messages"),
-            F.countDistinct("partition_key").alias("n_keys"),
-        )
-    )
 
 
 @query("custom_source_stream", tags=("streaming", "source", "custom-format"))

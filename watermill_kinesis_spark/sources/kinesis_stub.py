@@ -1,31 +1,79 @@
-"""In-memory boto3-Kinesis lookalike for tests and the dev loop.
+"""In-memory and file-backed boto3-Kinesis stand-ins for tests, the dev
+loop and the benchmark.
 
-Implements the three calls the ``kinesis_aws`` source uses
-(``list_shards`` / ``get_shard_iterator`` / ``get_records``) with real
-Kinesis semantics: per-shard monotonically-increasing sequence
-numbers, iterator types TRIM_HORIZON / AT_SEQUENCE_NUMBER /
-AFTER_SEQUENCE_NUMBER, ``MillisBehindLatest`` backlog signaling, and
-closed shards that drain then return a null ``NextShardIterator``
-(the SHARD_END condition, reference subscriber.go:78-88).
+Implements the calls the ``kinesis_aws`` source and sink use
+(``list_shards`` / ``get_shard_iterator`` / ``get_records`` /
+``put_records``) with real Kinesis semantics: per-shard monotonically
+increasing sequence numbers, iterator types TRIM_HORIZON / LATEST /
+AT_TIMESTAMP / AT_SEQUENCE_NUMBER / AFTER_SEQUENCE_NUMBER,
+``MillisBehindLatest`` backlog signaling, and closed shards that drain
+then return a null ``NextShardIterator`` (the SHARD_END condition,
+reference subscriber.go:78-88).
 
 This is the consume-side counterpart of ``sink.CollectingPublisher``
 and plays the same role as the reference's ``testProducer`` stub
 (reference subscriber/subscriber_test.go:14-25): exercise the full
 protocol without the service.
+
+Both clients are one event-sourced client. Every mutation is a list of
+journal entries (``puts``, ``add``, ``close``, ``adj``) built from the
+current state, and ``_apply`` folds one entry into the state. The
+in-memory client's ``_commit`` only applies them; the file-backed
+client's ``_commit`` also appends them to a journal under a file lock,
+so that clients in other processes replay the same entries. Records are
+kept in one stored form (base64 ``data``, ``key``, ``seq``, epoch
+``ts``), the form the journal and snapshot hold; ``get_records``
+converts only the page it serves.
 """
 
 from __future__ import annotations
 
 import base64
+import fcntl
 import json
 import os
+import time
+import zlib
 from datetime import datetime, timezone
 
 
+def _stored(seq: int, key: str, data: bytes | str, ts: float) -> dict:
+    """A record in the one form the shard lists, journal and snapshot hold."""
+    if isinstance(data, str):
+        data = data.encode("utf-8")
+    return {
+        "data": base64.b64encode(data).decode("ascii"),
+        "key": key,
+        "seq": str(seq),
+        "ts": ts,
+    }
+
+
+def _served(r: dict) -> dict:
+    """A stored record as GetRecords returns it."""
+    ts = r["ts"]
+    return {
+        "Data": base64.b64decode(r["data"]),
+        "PartitionKey": r["key"],
+        "SequenceNumber": r["seq"],
+        "ApproximateArrivalTimestamp": (
+            None if ts is None else datetime.fromtimestamp(ts, tz=timezone.utc)
+        ),
+    }
+
+
+def _add(shard: str, parent: str | None) -> dict:
+    return {"op": "add", "shard": shard, "parent": parent}
+
+
+def _close(shard: str) -> dict:
+    return {"op": "close", "shard": shard}
+
+
 class StubKinesisClient:
-    """Records live in per-shard lists; iterators are stateless JSON
-    tokens ``{"shard": ..., "idx": ...}`` — like the real service,
-    an iterator survives process boundaries."""
+    """In-memory stream. Records live in per-shard lists; iterators are
+    stateless JSON tokens ``{"shard": ..., "idx": ...}`` — like the real
+    service, an iterator survives process boundaries."""
 
     def __init__(self):
         self._shards: dict[str, list[dict]] = {}
@@ -36,83 +84,114 @@ class StubKinesisClient:
         #: call log for assertions
         self.calls: list[str] = []
 
+    # -- event sourcing ----------------------------------------------
+
+    def _refresh(self) -> None:
+        """Catch up with mutations made by other clients (none in memory)."""
+
+    def _commit(self, build) -> list[dict]:
+        """Apply the journal entries ``build()`` makes from the current
+        state, and return them."""
+        entries = build()
+        for e in entries:
+            self._apply(e)
+        return entries
+
+    def _apply(self, e: dict) -> None:
+        op = e.get("op")
+        if op == "puts":
+            for shard in e.get("shards", ()):  # shards created empty
+                self._shards.setdefault(shard, [])
+            for shard, rec in e["items"]:
+                self._shards.setdefault(shard, []).append(rec)
+            self._seq = max(self._seq, int(e["seq"]))
+        elif op == "add":
+            self._shards.setdefault(e["shard"], [])
+            if e.get("parent"):
+                self._parents[e["shard"]] = e["parent"]
+        elif op == "close":
+            self._closed.add(e["shard"])
+        elif op == "adj":
+            self._adj_parents[e["child"]] = e["adjacent"]
+
+    def _puts(self, items: list[tuple[str, str, bytes | str]]) -> dict:
+        """One ``puts`` entry for ``(shard, key, data)`` items, numbered
+        on from the current sequence counter, with one arrival time for
+        the whole call."""
+        ts = round(time.time(), 6)  # microseconds, as the served datetime
+        recs = [
+            [shard, _stored(self._seq + i, key, data, ts)]
+            for i, (shard, key, data) in enumerate(items, 1)
+        ]
+        return {"op": "puts", "seq": self._seq + len(recs), "items": recs}
+
     # -- producer/test controls --------------------------------------
 
-    def copy_state_from(self, other: "StubKinesisClient") -> None:
-        """Copy another stub's stream state (records, lineage, closed
-        set, sequence counter) WITHOUT aliasing its mutable internals —
-        the public seam for benches/tests that seed one client from
-        another (an alias would let either client corrupt the other on
-        mutation, and reaching into privates breaks if the layout
-        changes; r6 ADVICE)."""
-        self._shards = {
-            s: [dict(r) for r in recs] for s, recs in other._shards.items()
-        }
-        self._closed = set(other._closed)
-        self._parents = dict(other._parents)
-        self._adj_parents = dict(other._adj_parents)
-        self._seq = other._seq
-
     def put(self, shard_id: str, data: bytes | str, partition_key: str = "k"):
-        import time
-        from datetime import datetime, timezone
-
-        if isinstance(data, str):
-            data = data.encode("utf-8")
-        self._seq += 1
-        self._shards.setdefault(shard_id, []).append(
-            {
-                "Data": data,
-                "PartitionKey": partition_key,
-                "SequenceNumber": str(self._seq),
-                "ApproximateArrivalTimestamp": datetime.fromtimestamp(
-                    time.time(), tz=timezone.utc
-                ),
-            }
-        )
+        self._commit(lambda: [self._puts([(shard_id, partition_key, data)])])
 
     def add_shard(self, shard_id: str, parent: str | None = None) -> None:
-        self._shards.setdefault(shard_id, [])
-        if parent:
-            self._parents[shard_id] = parent
+        self._commit(lambda: [_add(shard_id, parent)])
 
     def close_shard(self, shard_id: str) -> None:
         """No more records will arrive; readers drain then see a null
         NextShardIterator (split/merge retirement)."""
-        self._closed.add(shard_id)
+        self._commit(lambda: [_close(shard_id)])
 
     def split_shard(self, parent: str, *children: str) -> None:
         """Service-shaped split: children appear carrying
         ``ParentShardId``, the parent closes (drains then SHARD_END) —
         the lineage ``list_shards`` exposes on the real service."""
-        for child in children:
-            self.add_shard(child, parent=parent)
-        self.close_shard(parent)
+        self._commit(lambda: [_add(c, parent) for c in children] + [_close(parent)])
 
     def merge_shards(self, parent: str, adjacent: str, child: str) -> None:
         """Service-shaped merge: ONE child carrying BOTH lineage edges
         (``ParentShardId`` = parent, ``AdjacentParentShardId`` =
         adjacent, exactly as MergeShards reports them); both parents
         close and drain independently to SHARD_END."""
-        self.add_shard(child, parent=parent)
-        self.close_shard(parent)
-        self.close_shard(adjacent)
-        # (the file-backed subclass overrides this method wholesale —
-        # one lock scope, one journal line per sub-mutation)
-        self._adj_parents[child] = adjacent
+        self._commit(
+            lambda: [
+                _add(child, parent),
+                _close(parent),
+                _close(adjacent),
+                {"op": "adj", "child": child, "adjacent": adjacent},
+            ]
+        )
 
     # -- boto3-shaped API --------------------------------------------
 
+    def put_records(self, StreamName=None, Records=None):
+        """boto3-shaped PutRecords: routes each record to a shard by
+        crc32(partition key) — stable like the service's MD5 routing —
+        and appends with monotonically increasing sequence numbers. A
+        stream with no shards gets two."""
+        self.calls.append("put_records")
+
+        def build():
+            shards = sorted(self._shards) or [f"shardId-{i:012d}" for i in range(2)]
+            items = []
+            for rec in Records or []:
+                key = rec.get("PartitionKey") or "0"
+                shard = shards[zlib.crc32(key.encode("utf-8")) % len(shards)]
+                items.append((shard, key, rec["Data"]))
+            return [self._puts(items) | {"shards": shards}]
+
+        (entry,) = self._commit(build)
+        return {
+            "FailedRecordCount": 0,
+            "Records": [
+                {"SequenceNumber": rec["seq"], "ShardId": shard}
+                for shard, rec in entry["items"]
+            ],
+        }
+
     def list_shards(self, StreamName=None, NextToken=None):
+        self._refresh()
         self.calls.append("list_shards")
         return {
             "Shards": [
                 {"ShardId": s}
-                | (
-                    {"ParentShardId": self._parents[s]}
-                    if s in self._parents
-                    else {}
-                )
+                | ({"ParentShardId": self._parents[s]} if s in self._parents else {})
                 | (
                     {"AdjacentParentShardId": self._adj_parents[s]}
                     if s in self._adj_parents
@@ -130,6 +209,7 @@ class StubKinesisClient:
         StartingSequenceNumber=None,
         Timestamp=None,
     ):
+        self._refresh()
         self.calls.append(f"get_shard_iterator:{ShardIteratorType}")
         recs = self._shards.get(ShardId, [])
         if ShardIteratorType == "TRIM_HORIZON":
@@ -140,14 +220,16 @@ class StubKinesisClient:
             # first record whose arrival ts >= Timestamp (service
             # semantics); Timestamp arrives as datetime (boto3) or
             # epoch seconds
-            t = Timestamp.timestamp() if hasattr(Timestamp, "timestamp") else float(
-                Timestamp
+            t = (
+                Timestamp.timestamp()
+                if hasattr(Timestamp, "timestamp")
+                else float(Timestamp)
             )
             idx = next(
                 (
                     i
-                    for i, (ts, _seq) in enumerate(_iter_ts_seq(recs))
-                    if ts is not None and ts >= t
+                    for i, r in enumerate(recs)
+                    if r["ts"] is not None and r["ts"] >= t
                 ),
                 len(recs),
             )
@@ -155,8 +237,8 @@ class StubKinesisClient:
             idx = next(
                 (
                     i
-                    for i, (_ts, seq) in enumerate(_iter_ts_seq(recs))
-                    if seq == StartingSequenceNumber
+                    for i, r in enumerate(recs)
+                    if r["seq"] == StartingSequenceNumber
                 ),
                 len(recs),
             )
@@ -167,11 +249,12 @@ class StubKinesisClient:
         return {"ShardIterator": json.dumps({"shard": ShardId, "idx": idx})}
 
     def get_records(self, ShardIterator, Limit=1000):
+        self._refresh()
         self.calls.append("get_records")
         tok = json.loads(ShardIterator)
         shard, idx = tok["shard"], tok["idx"]
         recs = self._shards.get(shard, [])
-        batch = recs[idx : idx + Limit]
+        batch = [_served(r) for r in recs[idx : idx + Limit]]
         nxt = idx + len(batch)
         drained_closed = shard in self._closed and nxt >= len(recs)
         return {
@@ -187,8 +270,6 @@ def demo_client() -> StubKinesisClient:
     """clientfactory target for end-to-end readStream tests: a fixed
     two-shard stream of five valid wire envelopes and one corrupt
     record (exercising the poison-skip path end to end)."""
-    import base64
-
     c = StubKinesisClient()
     for i in range(5):
         env = json.dumps(
@@ -203,108 +284,31 @@ def demo_client() -> StubKinesisClient:
     return c
 
 
-def _iter_ts_seq(recs):
-    """Yield ``(arrival_epoch_or_None, sequence_number)`` per record
-    WITHOUT materializing service-shaped dicts: iterator-position
-    lookups (AT_TIMESTAMP / AT_SEQUENCE_NUMBER) only need these two
-    fields, and enumerating a :class:`_LazyShardRecords` view converts
-    (b64decode + datetime) every record up to the match — partially
-    re-introducing the eager-conversion cost the lazy view exists to
-    avoid (r8 ADVICE). Scans the raw entries directly instead; plain
-    in-memory record lists read the already-built fields."""
-    if isinstance(recs, _LazyShardRecords):
-        for r in recs.raw:
-            yield r["ts"], r["seq"]
-    else:
-        for r in recs:
-            ts = r["ApproximateArrivalTimestamp"]
-            yield (
-                ts.timestamp() if ts is not None else None
-            ), r["SequenceNumber"]
-
-
-class _LazyShardRecords:
-    """Sequence view over the RAW on-disk record entries of one shard:
-    converts to service-shaped record dicts (``Data`` bytes, datetime
-    arrival ts) only for the window actually served. Eager whole-state
-    conversion was the dominant cost of the r7 sustained throughput
-    measurement — every executor worker paid a full parse+convert of
-    ALL shards' records before serving its one slice; lazily, a worker
-    pays json.load once and converts just the ranges it returns."""
-
-    __slots__ = ("_raw",)
-
-    def __init__(self, raw: list[dict]):
-        self._raw = raw
-
-    @staticmethod
-    def _conv(r: dict) -> dict:
-        return {
-            "Data": base64.b64decode(r["data"]),
-            "PartitionKey": r["key"],
-            "SequenceNumber": r["seq"],
-            "ApproximateArrivalTimestamp": (
-                datetime.fromtimestamp(r["ts"], tz=timezone.utc)
-                if r["ts"] is not None
-                else None
-            ),
-        }
-
-    @staticmethod
-    def to_raw(rec: dict) -> dict:
-        return {
-            "data": base64.b64encode(bytes(rec["Data"])).decode("ascii"),
-            "key": rec["PartitionKey"],
-            "seq": rec["SequenceNumber"],
-            "ts": (
-                rec["ApproximateArrivalTimestamp"].timestamp()
-                if rec["ApproximateArrivalTimestamp"] is not None
-                else None
-            ),
-        }
-
-    def __len__(self) -> int:
-        return len(self._raw)
-
-    def __getitem__(self, i):
-        if isinstance(i, slice):
-            return [self._conv(r) for r in self._raw[i]]
-        return self._conv(self._raw[i])
-
-    def __iter__(self):
-        return (self._conv(r) for r in self._raw)
-
-    def append(self, rec: dict) -> None:
-        self._raw.append(self.to_raw(rec))
-
-    @property
-    def raw(self) -> list[dict]:
-        return self._raw
-
-
 class FileStubKinesisClient(StubKinesisClient):
     """Disk-backed stub: shard state lives in ``<dir>`` as a compacted
     ``state.json`` snapshot plus a generation-numbered APPEND-ONLY
-    ``journal.<gen>.jsonl`` of mutations since the snapshot, so a
-    factory-constructed client in an EXECUTOR python worker sees the
-    records the test's driver-side client put — required to exercise
-    the parallel (``DataSourceStreamReader``) read path, where
-    ``get_records`` runs in separate worker processes.
+    ``journal.<gen>.jsonl`` of the entries committed since the
+    snapshot, so a factory-constructed client in an EXECUTOR python
+    worker sees the records the test's driver-side client put —
+    required to exercise the parallel (``DataSourceStreamReader``) read
+    path, where ``get_records`` runs in separate worker processes.
 
-    The journal replaces the r7-r11 whole-state rewrite-per-put
-    (O(N²) bytes across N puts — VERDICT r11 task 7): every mutation
-    appends ONE JSONL line (a put_records batch is one line), like the
-    real service appends to a shard. Readers replay only the journal
-    bytes past their consumed offset (complete lines only — a torn
-    tail is left for the next replay); writers serialize through the
-    ``.lock`` flock. Compaction folds the journal into a new snapshot
-    generation when the journal outgrows ``max(1 MiB, snapshot size)``
-    — the log-structured doubling rule, so total compaction I/O is
-    O(N) amortized, never quadratic. The generation number in the
-    journal FILENAME makes the snapshot swap atomic for lockless
-    readers: a reader on generation g replays journal.g (an unlinked
-    file stays readable on POSIX); its next call stats the replaced
-    snapshot, reparses, and follows journal.(g+1)."""
+    Every mutation appends one JSONL line per entry (a put_records
+    batch is one line), like the real service appends to a shard, so N
+    puts write O(total records) bytes, not the O(N²) of rewriting the
+    whole state per put. Writers serialize through the ``.lock``
+    flock and build their entries after replaying the journal, so
+    sequence numbers stay monotone across processes. Readers replay
+    only the journal bytes past their consumed offset, locklessly
+    (complete lines only — a torn tail is left for the next replay).
+    Compaction folds the journal into a new snapshot generation when
+    the journal outgrows ``max(1 MiB, snapshot size)`` — the
+    log-structured doubling rule, so total compaction I/O is O(N)
+    amortized, never quadratic. The generation number in the journal
+    FILENAME makes the snapshot swap atomic for lockless readers: a
+    reader on generation g replays journal.g (an unlinked file stays
+    readable on POSIX); its next call stats the replaced snapshot,
+    reparses, and follows journal.(g+1)."""
 
     #: journal size that triggers compaction, floored at 1 MiB and
     #: scaled to the snapshot so compaction cost stays amortized-O(N)
@@ -317,26 +321,13 @@ class FileStubKinesisClient(StubKinesisClient):
         self._stamp: tuple[int, int] | None = None
         self._gen = 0
         self._jpos = 0  # journal bytes already replayed into memory
-        self._load()
+        self._refresh()
 
     @property
     def _jpath(self) -> str:
         return os.path.join(self._dir, f"journal.{self._gen}.jsonl")
 
-    def _locked(self):
-        import fcntl
-        from contextlib import contextmanager
-
-        @contextmanager
-        def hold():
-            os.makedirs(self._dir, exist_ok=True)
-            with open(os.path.join(self._dir, ".lock"), "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
-                yield
-
-        return hold()
-
-    def _load(self) -> None:
+    def _refresh(self) -> None:
         # mtime+size guard on the snapshot: a changed snapshot means
         # another process compacted — reparse and jump generations.
         # Unchanged snapshot = replay only new journal bytes, so an
@@ -358,15 +349,9 @@ class FileStubKinesisClient(StubKinesisClient):
                 self._jpos = 0
                 self._seq = raw["seq"]
                 self._closed = set(raw["closed"])
-                self._parents = dict(raw.get("parents", {}))
-                self._adj_parents = dict(raw.get("adj_parents", {}))
-                self._shards = {
-                    shard: _LazyShardRecords(recs)
-                    for shard, recs in raw["shards"].items()
-                }
-        self._replay_journal()
-
-    def _replay_journal(self) -> None:
+                self._parents = raw.get("parents", {})
+                self._adj_parents = raw.get("adj_parents", {})
+                self._shards = raw["shards"]
         try:
             size = os.path.getsize(self._jpath)
         except OSError:
@@ -380,201 +365,80 @@ class FileStubKinesisClient(StubKinesisClient):
         if end < 0:
             return
         for line in buf[: end + 1].splitlines():
-            if not line.strip():
-                continue
             try:
                 self._apply(json.loads(line))
-            except ValueError:
+            except ValueError:  # blank or torn-then-terminated line
                 continue
         self._jpos += end + 1
 
-    def _apply(self, e: dict) -> None:
-        op = e.get("op")
-        if op == "puts":
-            for shard in e.get("shards", ()):  # shards created empty
-                self._shards.setdefault(shard, _LazyShardRecords([]))
-            for shard, raw in e["items"]:
-                recs = self._shards.setdefault(shard, _LazyShardRecords([]))
-                if isinstance(recs, _LazyShardRecords):
-                    recs.raw.append(raw)
-                else:
-                    recs.append(_LazyShardRecords._conv(raw))
-            self._seq = max(self._seq, int(e["seq"]))
-        elif op == "add":
-            self._shards.setdefault(e["shard"], _LazyShardRecords([]))
-            if e.get("parent"):
-                self._parents[e["shard"]] = e["parent"]
-        elif op == "close":
-            self._closed.add(e["shard"])
-        elif op == "adj":
-            self._adj_parents[e["child"]] = e["adjacent"]
+    def _commit(self, build) -> list[dict]:
+        os.makedirs(self._dir, exist_ok=True)
+        with open(os.path.join(self._dir, ".lock"), "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            self._refresh()
+            entries = super()._commit(build)
+            self._append(entries)
+            # the journal now ends at _jpos; the stamp is the snapshot's
+            if self._jpos >= max(
+                self._COMPACT_MIN_BYTES, self._stamp[1] if self._stamp else 0
+            ):
+                self._compact()
+        return entries
 
-    def _append_line(self, entry: dict) -> None:
-        # caller holds the flock and has replayed to EOF, so _jpos is
-        # the journal end and advancing it by our own write keeps the
-        # next replay from re-applying this entry
-        line = (json.dumps(entry) + "\n").encode("utf-8")
+    def _append(self, entries: list[dict]) -> None:
+        # lock held and journal replayed to its last newline, so
+        # advancing _jpos by our own write keeps the next replay from
+        # re-applying these entries
+        data = "".join(json.dumps(e) + "\n" for e in entries).encode("utf-8")
         fd = os.open(self._jpath, os.O_WRONLY | os.O_CREAT | os.O_APPEND, 0o644)
         try:
             # A writer that crashed mid-append leaves a torn final line
             # with no newline; replay stops at the last newline, so
             # _jpos < EOF detects it. Terminate the torn tail with a
-            # lone "\n" first so our entry starts on a fresh line —
+            # lone "\n" first so our entries start on a fresh line —
             # otherwise O_APPEND would glue our JSON onto the torn
             # prefix and BOTH mutations would be silently skipped.
             size = os.fstat(fd).st_size
             if size > self._jpos:
-                os.write(fd, b"\n")
-                self._jpos = size + 1
-            os.write(fd, line)
+                data = b"\n" + data
+                self._jpos = size
+            os.write(fd, data)
         finally:
             os.close(fd)
-        self._jpos += len(line)
-
-    def _last_raw(self, shard_id: str) -> dict:
-        recs = self._shards[shard_id]
-        if isinstance(recs, _LazyShardRecords):
-            return recs.raw[-1]
-        return _LazyShardRecords.to_raw(recs[-1])
-
-    def _maybe_compact(self) -> None:
-        # lock held, journal fully replayed: fold it into a fresh
-        # snapshot generation once it outgrows the snapshot itself
-        # (log-structured doubling — amortized O(N) total compaction)
-        try:
-            jsize = os.path.getsize(self._jpath)
-        except OSError:
-            return
-        try:
-            ssize = os.path.getsize(self._path)
-        except OSError:
-            ssize = 0
-        if jsize < max(self._COMPACT_MIN_BYTES, ssize):
-            return
-        self._compact()
+        self._jpos += len(data)
 
     def _compact(self) -> None:
-        # lock held, journal fully replayed: write the in-memory state
-        # as snapshot generation g+1 and retire journal.g
+        # lock held, journal fully replayed: write the state as snapshot
+        # generation g+1 and retire journal.g
         old_jpath = self._jpath
         self._gen += 1
-        raw = {
+        snapshot = {
             "gen": self._gen,
             "seq": self._seq,
             "closed": sorted(self._closed),
-            "shards": {
-                shard: (
-                    recs.raw
-                    if isinstance(recs, _LazyShardRecords)
-                    else [_LazyShardRecords.to_raw(r) for r in recs]
-                )
-                for shard, recs in self._shards.items()
-            },
+            "shards": self._shards,
             "parents": self._parents,
             "adj_parents": self._adj_parents,
         }
         tmp = f"{self._path}.tmp-{os.getpid()}"
         with open(tmp, "w") as f:
-            json.dump(raw, f)
+            json.dump(snapshot, f)
         os.replace(tmp, self._path)
         self._jpos = 0
-        try:
-            st = os.stat(self._path)
-            self._stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            self._stamp = None
+        st = os.stat(self._path)
+        self._stamp = (st.st_mtime_ns, st.st_size)
         try:
             os.remove(old_jpath)
         except OSError:
             pass
-
-    def dump_state(self) -> None:
-        """Persist the CURRENT in-memory state as a fresh snapshot
-        generation — the seam for benches/tests that build shard lists
-        directly on the object instead of going through put()/
-        put_records() (which journal themselves). One snapshot write,
-        no per-record journaling of the seeded records."""
-        with self._locked():
-            self._replay_journal()  # don't drop another writer's tail
-            self._compact()
-
-    # mutations journal one line under the flock; reads re-load
-    # locklessly (another process may have appended)
-    def put(self, shard_id: str, data, partition_key: str = "k"):
-        with self._locked():
-            self._load()
-            self._shards.setdefault(shard_id, _LazyShardRecords([]))
-            StubKinesisClient.put(self, shard_id, data, partition_key)
-            self._append_line(
-                {
-                    "op": "puts",
-                    "seq": self._seq,
-                    "items": [[shard_id, self._last_raw(shard_id)]],
-                }
-            )
-            self._maybe_compact()
-
-    def add_shard(self, shard_id: str, parent: str | None = None) -> None:
-        with self._locked():
-            self._load()
-            self._shards.setdefault(shard_id, _LazyShardRecords([]))
-            StubKinesisClient.add_shard(self, shard_id, parent=parent)
-            self._append_line(
-                {"op": "add", "shard": shard_id, "parent": parent}
-            )
-
-    def close_shard(self, shard_id: str) -> None:
-        with self._locked():
-            self._load()
-            StubKinesisClient.close_shard(self, shard_id)
-            self._append_line({"op": "close", "shard": shard_id})
-
-    def split_shard(self, parent: str, *children: str) -> None:
-        # one lock scope for the whole lineage mutation (the base
-        # method would re-enter the flock through self.add_shard)
-        with self._locked():
-            self._load()
-            for child in children:
-                self._shards.setdefault(child, _LazyShardRecords([]))
-                StubKinesisClient.add_shard(self, child, parent=parent)
-                self._append_line(
-                    {"op": "add", "shard": child, "parent": parent}
-                )
-            StubKinesisClient.close_shard(self, parent)
-            self._append_line({"op": "close", "shard": parent})
-
-    def merge_shards(self, parent: str, adjacent: str, child: str) -> None:
-        with self._locked():
-            self._load()
-            self._shards.setdefault(child, _LazyShardRecords([]))
-            StubKinesisClient.add_shard(self, child, parent=parent)
-            self._append_line({"op": "add", "shard": child, "parent": parent})
-            StubKinesisClient.close_shard(self, parent)
-            self._append_line({"op": "close", "shard": parent})
-            StubKinesisClient.close_shard(self, adjacent)
-            self._append_line({"op": "close", "shard": adjacent})
-            self._adj_parents[child] = adjacent
-            self._append_line({"op": "adj", "child": child, "adjacent": adjacent})
-
-    def list_shards(self, *a, **kw):
-        self._load()
-        return super().list_shards(*a, **kw)
-
-    def get_shard_iterator(self, *a, **kw):
-        self._load()
-        return super().get_shard_iterator(*a, **kw)
-
-    def get_records(self, *a, **kw):
-        self._load()
-        return super().get_records(*a, **kw)
 
 
 _client_cache: dict[str, FileStubKinesisClient] = {}
 
 #: LRU bound on cached stub clients: long pytest/bench sessions create
 #: many unique temp state dirs, and each cached client pins a fully
-#: parsed state in memory (r7 ADVICE). A handful covers every
-#: concurrent-stream scenario the suite runs.
+#: parsed state in memory. A handful covers every concurrent-stream
+#: scenario the suite runs.
 _CLIENT_CACHE_MAX = 4
 
 
@@ -599,88 +463,8 @@ def file_stub_client(options) -> FileStubKinesisClient:
     if c is None:
         c = FileStubKinesisClient(sdir)
     else:
-        c._load()
+        c._refresh()
     _client_cache[sdir] = c  # re-insert = most recently used
     while len(_client_cache) > _CLIENT_CACHE_MAX:
         del _client_cache[next(iter(_client_cache))]  # evict LRU
     return c
-
-
-    # -- producer API (boto3-shaped) ---------------------------------
-
-
-def _stub_put_records(self, StreamName=None, Records=None):
-    """boto3-shaped PutRecords: routes each record to a shard by
-    crc32(partition key) — stable like the service's MD5 routing —
-    and appends with monotonically increasing sequence numbers."""
-    import time as _time
-    import zlib
-    from datetime import datetime, timezone
-
-    self.calls.append("put_records")
-    if not self._shards:
-        for i in range(2):
-            self._shards[f"shardId-{i:012d}"] = []
-    shard_ids = sorted(self._shards)
-    out = []
-    for rec in Records or []:
-        data = rec["Data"]
-        if isinstance(data, str):
-            data = data.encode("utf-8")
-        key = rec.get("PartitionKey") or "0"
-        shard = shard_ids[zlib.crc32(key.encode("utf-8")) % len(shard_ids)]
-        self._seq += 1
-        self._shards[shard].append(
-            {
-                "Data": data,
-                "PartitionKey": key,
-                "SequenceNumber": str(self._seq),
-                "ApproximateArrivalTimestamp": datetime.fromtimestamp(
-                    _time.time(), tz=timezone.utc
-                ),
-            }
-        )
-        out.append({"SequenceNumber": str(self._seq), "ShardId": shard})
-    return {"FailedRecordCount": 0, "Records": out}
-
-
-StubKinesisClient.put_records = _stub_put_records
-
-
-def _file_stub_put_records(self, StreamName=None, Records=None):
-    # concurrent executor partitions all publish through one journal:
-    # the flock serializes append position, like the service
-    # serializes per-shard appends — the WHOLE batch is one JSONL
-    # line, so N batches write O(total records) bytes, not O(N²)
-    with self._locked():
-        self._load()
-        if not self._shards:
-            for i in range(2):
-                self._shards[f"shardId-{i:012d}"] = _LazyShardRecords([])
-        pre = {s: len(r) for s, r in self._shards.items()}
-        resp = _stub_put_records(self, StreamName=StreamName, Records=Records)
-        items = []
-        for shard, recs in self._shards.items():
-            lazy = recs if isinstance(recs, _LazyShardRecords) else None
-            for i in range(pre.get(shard, 0), len(recs)):
-                items.append(
-                    [
-                        shard,
-                        lazy.raw[i]
-                        if lazy is not None
-                        else _LazyShardRecords.to_raw(recs[i]),
-                    ]
-                )
-        self._append_line(
-            {
-                "op": "puts",
-                "seq": self._seq,
-                "items": items,
-                "shards": sorted(self._shards),
-            }
-        )
-        self._maybe_compact()
-    return resp
-
-
-FileStubKinesisClient.put_records = _file_stub_put_records
