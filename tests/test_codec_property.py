@@ -229,7 +229,7 @@ def test_kpl_corruption_never_passes_silently(records, data):
 def test_png_pixel_roundtrip_property(w, h, ch, seed):
     import numpy as np
 
-    from watermill_kinesis_spark.operators.multimodal import (
+    from watermill_kinesis_spark.functions.imaging import (
         decode_image_pixels,
         encode_png,
     )

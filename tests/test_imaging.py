@@ -10,13 +10,11 @@ import pytest
 from watermill_kinesis_spark.functions.imaging import (
     decode_bmp,
     decode_gif,
+    decode_image_pixels,
     decode_jpeg,
     encode_bmp,
     encode_gif,
     encode_jpeg,
-)
-from watermill_kinesis_spark.operators.multimodal import (
-    decode_image_pixels,
     sniff_image,
 )
 

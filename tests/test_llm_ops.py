@@ -15,10 +15,8 @@ from watermill_kinesis_spark.operators.dedup import (
     dedup_ngram_jaccard,
     dedup_simhash,
 )
-from watermill_kinesis_spark.operators.multimodal import (
-    decode_image_features,
-    multimodal_feature_extract,
-)
+from watermill_kinesis_spark.functions.imaging import decode_image_features
+from watermill_kinesis_spark.operators.multimodal import multimodal_feature_extract
 from watermill_kinesis_spark.operators.similarity import (
     TOP_K,
     similarity_ann_lsh,
@@ -178,7 +176,7 @@ def test_image_header_decode_real_fixtures():
     hand-built PNG / JPEG / GIF / BMP containers — no imaging lib."""
     import struct
 
-    from watermill_kinesis_spark.operators.multimodal import (
+    from watermill_kinesis_spark.functions.imaging import (
         decode_image_pixels,
         sniff_image,
     )
@@ -534,7 +532,7 @@ def test_png_pixel_decode_roundtrip_and_filters():
 
     import numpy as np
 
-    from watermill_kinesis_spark.operators.multimodal import (
+    from watermill_kinesis_spark.functions.imaging import (
         PNG_SIG,
         decode_image_pixels,
         encode_png,
@@ -590,14 +588,14 @@ def test_png_pixel_decode_roundtrip_and_filters():
 def test_png_palette_and_errors():
     import numpy as np
 
-    from watermill_kinesis_spark.operators.multimodal import (
+    from watermill_kinesis_spark.functions.imaging import (
         decode_image_pixels,
         encode_png,
     )
     import zlib
 
     # palette image: indices expand through PLTE to RGB
-    from watermill_kinesis_spark.operators.multimodal import PNG_SIG
+    from watermill_kinesis_spark.functions.imaging import PNG_SIG
 
     def chunk(tag, data):
         crc = zlib.crc32(tag + data) & 0xFFFFFFFF

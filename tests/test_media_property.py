@@ -8,6 +8,7 @@ contract style, SURVEY.md §5)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from watermill_kinesis_spark.functions.containers import (
@@ -137,7 +138,7 @@ def test_tiff_roundtrip_property(tags, big):
     seed=st.integers(0, 2**32 - 1),
 )
 def test_animated_gif_probe_property(n_frames, h, w, loops, seed):
-    from watermill_kinesis_spark.functions.containers import (
+    from watermill_kinesis_spark.functions.imaging import (
         encode_animated_gif,
         probe_gif_animation,
     )
@@ -175,7 +176,7 @@ def test_animated_gif_probe_property(n_frames, h, w, loops, seed):
     ),
 )
 def test_png_chunk_walk_property(h, w, texts):
-    from watermill_kinesis_spark.functions.containers import (
+    from watermill_kinesis_spark.functions.imaging import (
         encode_png_text,
         probe_png_chunks,
     )
@@ -197,7 +198,7 @@ def test_png_any_flipped_bit_raises(pos, bit):
     the signature) must raise, never return silently-wrong metadata."""
     import pytest as _pytest
 
-    from watermill_kinesis_spark.functions.containers import (
+    from watermill_kinesis_spark.functions.imaging import (
         encode_png_text,
         probe_png_chunks,
     )
@@ -218,3 +219,65 @@ def test_png_any_flipped_bit_raises(pos, bit):
         info["width"],
         info["height"],
     ) == (5, 4), "corrupt PNG parsed to different metadata without error"
+
+
+def _media_samples():
+    """One small encoder output per decoder/probe, named by format."""
+    from watermill_kinesis_spark.functions.imaging import (
+        decode_image_pixels,
+        encode_animated_gif,
+        encode_png,
+        encode_png_text,
+        probe_gif_animation,
+        probe_png_chunks,
+    )
+    from watermill_kinesis_spark.functions.containers import (
+        encode_id3v2,
+        probe_id3v2,
+    )
+
+    yy, xx = np.mgrid[0:16, 0:16]
+    rgb16 = np.stack([yy * 16, xx * 16, (yy + xx) * 8], axis=2).astype(np.uint8)
+    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
+    idx = (np.arange(12).reshape(3, 4) % 4).astype(np.uint8)
+    return {
+        "bmp": (decode_bmp, encode_bmp(rgb16[:4, :5])),
+        "gif": (decode_gif, encode_gif(idx, pal)),
+        "gif-animation": (
+            probe_gif_animation,
+            encode_animated_gif([idx, idx[::-1]], pal, [5, 7], loops=2),
+        ),
+        "jpeg": (decode_jpeg, encode_jpeg(rgb16, restart_interval=2)),
+        "png": (decode_image_pixels, encode_png(rgb16[:3, :4])),
+        "png-chunks": (probe_png_chunks, encode_png_text(3, 2, [("k", "v")])),
+        "wav": (decode_wav, encode_wav(np.arange(-6, 6, dtype=np.int16), 8000)),
+        "mp4": (probe_mp4, encode_mp4(600, 1200, 2)),
+        "tiff": (decode_tiff_tags, encode_tiff({0x100: (4, 640), 0x112: (3, 6)})),
+        "id3": (probe_id3v2, encode_id3v2([("TIT2", "t"), ("TPE1", "a")], padding=4)),
+    }
+
+
+@pytest.mark.parametrize("fmt", sorted(_media_samples()))
+def test_every_truncation_and_bit_flip_raises_value_error_or_decodes(fmt):
+    """The corrupt-skip contract, exhaustively: every prefix of a valid
+    container and every single-bit flip of it either decodes or raises
+    ``ValueError`` — never an internal IndexError/KeyError/struct
+    error that would crash the Arrow worker."""
+    decode, payload = _media_samples()[fmt]
+    variants = [(f"cut at {cut}", payload[:cut]) for cut in range(len(payload))]
+    for pos in range(len(payload)):
+        for bit in range(8):
+            flipped = bytearray(payload)
+            flipped[pos] ^= 1 << bit
+            variants.append((f"flip byte {pos} bit {bit}", bytes(flipped)))
+    failures = []
+    for label, v in variants:
+        try:
+            decode(v)
+        except ValueError:
+            pass
+        except Exception as e:  # noqa: BLE001 - any other class breaks the contract
+            failures.append(f"{label}: {type(e).__name__}: {e}")
+    assert not failures, f"{len(failures)} of {len(variants)} variants: " + "; ".join(
+        failures[:5]
+    )

@@ -253,6 +253,35 @@ def test_mkdtemp_guard_catches_each_forbidden_form(tmp_path):
     assert len(_mkdtemp_violations(p)) == 3
 
 
+def test_vendor_zip_directory_goes_when_the_driver_exits(tmp_path):
+    """The protobuf vendor zip lives for the whole driver process (its
+    workers import from it) and its directory goes when that process
+    exits."""
+    import subprocess
+    import sys
+
+    src = tmp_path / "protobuf"
+    src.mkdir()
+    (src / "runtime_version.py").write_text("MAJOR = 6\n")
+    (src / "message.py").write_text("X = 1\n")
+    (tmp_path / "t").mkdir()
+    code = (
+        "import os, sys, tempfile\n"
+        f"tempfile.tempdir = {str(tmp_path / 't')!r}\n"
+        "from watermill_kinesis_spark.streaming.pbcompat import _build_vendor_zip\n"
+        f"z = _build_vendor_zip({str(src)!r}, '6.32.0')\n"
+        "assert os.path.isfile(z)\n"
+        "print(os.path.dirname(z))\n"
+    )
+    root = Path(__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    )
+    made = Path(out.stdout.strip())
+    assert made.parent == tmp_path / "t"
+    assert not made.exists()
+
+
 def _only_wraps_load_table(fn: ast.FunctionDef) -> bool:
     body = fn.body
     if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):

@@ -16,7 +16,10 @@ hash compare is only cross-column row pairing and float columns
 Usage:
     python tools/census_check.py <sf_dir> [name ...]
 
-Env: SPARK_GRAFT_VANILLA / SPARK_GRAFT_VANILLA_CORES as check_oracle.
+Env: SPARK_GRAFT_VANILLA / SPARK_GRAFT_VANILLA_CORES /
+SPARK_GRAFT_VANILLA_MEM pick the session exactly as check_oracle does
+(its ``oracle_session``); SPARK_GRAFT_DUCKDB_MEM /
+SPARK_GRAFT_DUCKDB_THREADS bound the DuckDB side.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_oracle import oracle_session  # noqa: E402
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 from watermill_kinesis_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
@@ -80,21 +84,7 @@ def main() -> int:
     sf_dir = argv[0] if argv and "/" in argv[0] else "/root/testdata/sf0.01"
     names = [a for a in argv if "/" not in a]
 
-    if os.environ.get("SPARK_GRAFT_VANILLA"):
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_VANILLA_CORES', '4')}]"
-            )
-            .appName("census-check-vanilla")
-            .config("spark.ui.showConsoleProgress", "false")
-            .getOrCreate()
-        )
-    else:
-        from watermill_kinesis_spark.session import get_spark
-
-        spark = get_spark("census-check")
+    spark = oracle_session("census-check")
     con = duckdb.connect()
     # SPARK_GRAFT_DUCKDB_MEM: raise the oracle's memory ceiling for
     # pair-dense recomputes whose spill exceeds the disk budget (the

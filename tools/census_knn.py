@@ -19,7 +19,8 @@ Usage:
 
 Env: SPARK_GRAFT_VANILLA / SPARK_GRAFT_VANILLA_CORES /
 SPARK_GRAFT_VANILLA_MEM / SPARK_GRAFT_DUCKDB_MEM /
-SPARK_GRAFT_DUCKDB_THREADS as the other census tools.
+SPARK_GRAFT_DUCKDB_THREADS as census_check (the session comes from
+check_oracle's ``oracle_session``).
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from check_oracle import oracle_session  # noqa: E402
 from watermill_kinesis_spark.operators.similarity import KNN_MUTUAL_K  # noqa: E402
 from watermill_kinesis_spark.registry import all_specs  # noqa: E402
 
@@ -77,25 +79,7 @@ FROM srcs s LEFT JOIN mutual m USING (src)
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    if os.environ.get("SPARK_GRAFT_VANILLA"):
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_VANILLA_CORES', '8')}]"
-            )
-            .appName("census-knn-vanilla")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config(
-                "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_VANILLA_MEM", "1g"),
-            )
-            .getOrCreate()
-        )
-    else:
-        from watermill_kinesis_spark.session import get_spark
-
-        spark = get_spark("census-knn")
+    spark = oracle_session("census-knn")
 
     from pyspark.sql import functions as F
 

@@ -10,6 +10,7 @@ bit-identical). Usage:
 Env toggles (both driver-accuracy modes, combinable):
   SPARK_GRAFT_VANILLA=1       plain SparkSession, none of session.py's tuning
   SPARK_GRAFT_VANILLA_CORES=N vanilla core count (default 8; 4 = 256 MB/core)
+  SPARK_GRAFT_VANILLA_MEM=M   vanilla driver heap (default 1g)
   SPARK_GRAFT_DRIVER_CANON=1  sort RAW pandas rows before stringifying,
                               mirroring the gate's _canon (catches
                               unhashable-cell outputs like r4's
@@ -157,6 +158,39 @@ def hash_df(df: pd.DataFrame) -> tuple[list[str], int, int]:
     return cols, len(df), total
 
 
+def oracle_session(app: str):
+    """The session every oracle tool runs on: the engine's tuned
+    ``get_spark(app)``, or with ``SPARK_GRAFT_VANILLA`` set the
+    driver-accurate plain session with NONE of session.py's tuning,
+    catching hidden config coupling."""
+    if not os.environ.get("SPARK_GRAFT_VANILLA"):
+        return get_spark(app)
+    from pyspark.sql import SparkSession
+
+    return (
+        SparkSession.builder.master(
+            # SPARK_GRAFT_VANILLA_CORES: heap-per-core knob for
+            # replica-scale sweeps — the default local[8] on the
+            # 1 GiB vanilla heap is 128 MB/core, BELOW any real
+            # deployment; heavy entries document their floor
+            f"local[{os.environ.get('SPARK_GRAFT_VANILLA_CORES', '8')}]"
+        )
+        .appName(f"{app}-vanilla")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config(
+            # SPARK_GRAFT_VANILLA_MEM: heap for replica-scale solo
+            # certification runs. Default stays the gate-accurate
+            # 1g; the 100x pair-dense dedup faces are certified at
+            # an explicitly recorded larger heap (SCALE.md r13) —
+            # a single-node stand-in for the executor memory any
+            # real deployment of those shuffles would have.
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_VANILLA_MEM", "1g"),
+        )
+        .getOrCreate()
+    )
+
+
 def main() -> int:
     argv = sys.argv[1:]
     sf_dir = argv[0] if argv and "/" in argv[0] else "/root/testdata/sf0.01"
@@ -166,35 +200,7 @@ def main() -> int:
     if names:
         specs = {n: specs[n] for n in names}
 
-    if os.environ.get("SPARK_GRAFT_VANILLA"):
-        # driver-accurate mode: a plain session with NONE of the
-        # engine's session.py tuning, catching hidden config coupling
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.master(
-                # SPARK_GRAFT_VANILLA_CORES: heap-per-core knob for
-                # replica-scale sweeps — the default local[8] on the
-                # 1 GiB vanilla heap is 128 MB/core, BELOW any real
-                # deployment; heavy entries document their floor
-                f"local[{os.environ.get('SPARK_GRAFT_VANILLA_CORES', '8')}]"
-            )
-            .appName("check-oracle-vanilla")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config(
-                # SPARK_GRAFT_VANILLA_MEM: heap for replica-scale solo
-                # certification runs. Default stays the gate-accurate
-                # 1g; the 100x pair-dense dedup faces are certified at
-                # an explicitly recorded larger heap (SCALE.md r13) —
-                # a single-node stand-in for the executor memory any
-                # real deployment of those shuffles would have.
-                "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_VANILLA_MEM", "1g"),
-            )
-            .getOrCreate()
-        )
-    else:
-        spark = get_spark("check-oracle")
+    spark = oracle_session("check-oracle")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(

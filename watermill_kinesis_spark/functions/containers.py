@@ -1,12 +1,13 @@
 """Pure stdlib+numpy media-container codecs: WAV (RIFF PCM), MP4
-(ISO-BMFF box tree), and TIFF/EXIF IFD metadata.
+(ISO-BMFF box tree), TIFF/EXIF IFD metadata and ID3v2.3 tags.
 
-The audio/video counterpart of ``functions/imaging.py``: these give
-``operators/multimodal.py``'s operators REAL container parsing — byte-level
-RIFF chunk walking, ISO base-media box recursion, and a TIFF IFD
-entry walker — with matching minimal encoders so fixtures and oracle
-queries can synthesize valid container bytes deterministically (the
-same pattern the image formats use). Decoders raise ``ValueError`` on
+The audio/video/metadata counterpart of ``functions/imaging.py`` (which
+owns every image format): these give ``operators/multimodal.py``'s
+operators REAL container parsing — byte-level RIFF chunk walking, ISO
+base-media box recursion, a TIFF IFD entry walker and an ID3 frame
+walker — with matching minimal encoders so fixtures and oracle queries
+can synthesize valid container bytes deterministically (the same
+pattern the image formats use). Decoders raise ``ValueError`` on
 malformed/truncated input — the corrupt-skip contract — and never an
 internal struct/index error.
 """
@@ -24,10 +25,6 @@ __all__ = [
     "encode_mp4",
     "decode_tiff_tags",
     "encode_tiff",
-    "encode_animated_gif",
-    "probe_gif_animation",
-    "encode_png_text",
-    "probe_png_chunks",
     "encode_id3v2",
     "probe_id3v2",
 ]
@@ -266,240 +263,6 @@ def encode_tiff(tags: dict[int, tuple[int, int]], big_endian: bool = False) -> b
 
 
 # ---------------------------------------------------------------------------
-# Animated GIF (89a block stream)
-
-
-def _gif_lzw_pack(values, min_code_size: int) -> bytes:
-    """Spec-valid LZW stream of (CLEAR, literal) pairs — the same
-    no-table strategy as ``imaging.encode_gif``, shared here for
-    multi-frame use."""
-    clear = 1 << min_code_size
-    width = min_code_size + 1
-    acc = 0
-    nbits = 0
-    body = bytearray()
-    for v in list(values) + [None]:
-        codes = (clear + 1,) if v is None else (clear, int(v))
-        for c in codes:
-            acc |= c << nbits
-            nbits += width
-            while nbits >= 8:
-                body.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-    if nbits:
-        body.append(acc & 0xFF)
-    return bytes(body)
-
-
-def encode_animated_gif(frames, palette, delays_cs, loops: int = 0) -> bytes:
-    """List of (h, w) uint8 index arrays + shared global palette +
-    per-frame delays (centiseconds) → animated GIF89a: NETSCAPE 2.0
-    looping application extension, one Graphic Control Extension per
-    frame carrying its delay, then the image descriptor + LZW data."""
-    frames = [np.asarray(f, dtype=np.uint8) for f in frames]
-    if not frames or len(frames) != len(delays_cs):
-        raise ValueError("frames/delays mismatch")
-    pal = np.asarray(palette, dtype=np.uint8)
-    h, w = frames[0].shape
-    n = len(pal)
-    size_field = max(1, (n - 1).bit_length() - 1) if n > 2 else 0
-    table_n = 2 << size_field
-    if n > table_n:
-        raise ValueError("palette larger than color table size")
-    pal_full = np.zeros((table_n, 3), dtype=np.uint8)
-    pal_full[:n] = pal
-    min_code_size = max(2, size_field + 1)
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | (size_field & 7), 0, 0)
-    out += pal_full.tobytes()
-    # NETSCAPE 2.0 looping extension (loops=0 ⇒ forever)
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01" + struct.pack("<H", loops) + b"\x00"
-    for frame, delay in zip(frames, delays_cs):
-        if frame.shape != (h, w):
-            raise ValueError("all frames must share the logical screen size")
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", int(delay)) + b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out.append(min_code_size)
-        body = _gif_lzw_pack(frame.reshape(-1).tolist(), min_code_size)
-        for off in range(0, len(body), 255):
-            chunk = body[off : off + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def probe_gif_animation(p: bytes) -> dict:
-    """Walk a GIF's block stream WITHOUT decoding pixels: count image
-    frames, sum Graphic-Control delays, and read the NETSCAPE loop
-    count — the animation-index pass a media catalog runs per asset.
-    Raises ``ValueError`` on malformed/truncated block structure."""
-    p = bytes(p)
-    if p[:6] not in (b"GIF87a", b"GIF89a") or len(p) < 13:
-        raise ValueError("not a GIF container")
-    w, h, flags, _bg, _ar = struct.unpack_from("<HHBBB", p, 6)
-    i = 13
-    if flags & 0x80:
-        i += 3 * (2 << (flags & 7))  # global color table
-    n_frames = 0
-    total_delay_cs = 0
-    loops = None
-    pending_delay = 0
-
-    def sub_blocks(j: int) -> int:
-        while True:
-            if j >= len(p):
-                raise ValueError("GIF: truncated sub-blocks")
-            ln = p[j]
-            j += 1
-            if ln == 0:
-                return j
-            if j + ln > len(p):
-                raise ValueError("GIF: truncated sub-block data")
-            j += ln
-
-    while True:
-        if i >= len(p):
-            raise ValueError("GIF: missing trailer")
-        b = p[i]
-        i += 1
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            if i >= len(p):
-                raise ValueError("GIF: truncated extension")
-            label = p[i]
-            i += 1
-            if label == 0xF9:  # Graphic Control Extension
-                if i + 6 > len(p) or p[i] != 4:
-                    raise ValueError("GIF: malformed GCE")
-                pending_delay = struct.unpack_from("<H", p, i + 2)[0]
-                i += 5
-                if p[i] != 0:
-                    raise ValueError("GIF: GCE missing terminator")
-                i += 1
-            elif label == 0xFF:  # application extension
-                if i >= len(p):
-                    raise ValueError("GIF: truncated app extension")
-                ln = p[i]
-                app = p[i + 1 : i + 1 + ln]
-                j = i + 1 + ln
-                if app == b"NETSCAPE2.0":
-                    if j + 4 > len(p) or p[j] != 3 or p[j + 1] != 1:
-                        raise ValueError("GIF: malformed NETSCAPE block")
-                    loops = struct.unpack_from("<H", p, j + 2)[0]
-                i = sub_blocks(j)
-            else:  # comment / plain-text / unknown: skip sub-blocks
-                i = sub_blocks(i)
-        elif b == 0x2C:  # image descriptor
-            if i + 9 > len(p):
-                raise ValueError("GIF: truncated image descriptor")
-            iflags = p[i + 8]
-            i += 9
-            if iflags & 0x80:
-                i += 3 * (2 << (iflags & 7))  # local color table
-            if i >= len(p):
-                raise ValueError("GIF: truncated image data")
-            i += 1  # LZW min code size
-            i = sub_blocks(i)
-            n_frames += 1
-            total_delay_cs += pending_delay
-            pending_delay = 0
-        else:
-            raise ValueError(f"GIF: unknown block 0x{b:02x}")
-    if n_frames == 0:
-        raise ValueError("GIF: no image frames")
-    return {
-        "width": w,
-        "height": h,
-        "n_frames": n_frames,
-        "total_delay_cs": total_delay_cs,
-        "loops": loops,
-    }
-
-
-# ---------------------------------------------------------------------------
-# PNG chunk stream (metadata walk, CRC-verified)
-
-
-def encode_png_text(w: int, h: int, texts: list[tuple[str, str]]) -> bytes:
-    """Minimal valid grayscale PNG carrying ``tEXt`` metadata chunks:
-    signature, IHDR, one tEXt per (key, value), a real zlib IDAT of
-    zero scanlines, IEND — every chunk CRC32-sealed."""
-    import zlib
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + b"\x00" * w for _ in range(h))
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    for k, v in texts:
-        out += chunk(b"tEXt", k.encode("latin-1") + b"\x00" + v.encode("latin-1"))
-    out += chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b"")
-    return out
-
-
-def probe_png_chunks(p: bytes) -> dict:
-    """Walk a PNG's chunk stream verifying EVERY chunk's CRC32 (a
-    flipped bit anywhere raises — the integrity pass an asset store
-    runs on ingest): returns dimensions, chunk census, total IDAT
-    payload bytes, and the tEXt metadata pairs in file order."""
-    import zlib
-
-    p = bytes(p)
-    if p[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG container")
-    i = 8
-    w = h = None
-    n_chunks = 0
-    idat_bytes = 0
-    texts: list[tuple[str, str]] = []
-    seen_end = False
-    while i < len(p):
-        if i + 8 > len(p):
-            raise ValueError("PNG: truncated chunk header")
-        ln = struct.unpack_from(">I", p, i)[0]
-        ctype = p[i + 4 : i + 8]
-        body = p[i + 8 : i + 8 + ln]
-        if len(body) != ln or i + 12 + ln > len(p):
-            raise ValueError("PNG: truncated chunk body")
-        crc = struct.unpack_from(">I", p, i + 8 + ln)[0]
-        if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG: CRC mismatch in {ctype!r}")
-        n_chunks += 1
-        if ctype == b"IHDR":
-            w, h = struct.unpack_from(">II", body, 0)
-        elif ctype == b"IDAT":
-            idat_bytes += ln
-        elif ctype == b"tEXt":
-            sep = body.find(b"\x00")
-            if sep < 0:
-                raise ValueError("PNG: malformed tEXt")
-            texts.append(
-                (body[:sep].decode("latin-1"), body[sep + 1 :].decode("latin-1"))
-            )
-        elif ctype == b"IEND":
-            seen_end = True
-            i += 12 + ln
-            break
-        i += 12 + ln
-    if w is None or not seen_end:
-        raise ValueError("PNG: missing IHDR/IEND")
-    return {
-        "width": w,
-        "height": h,
-        "n_chunks": n_chunks,
-        "idat_bytes": idat_bytes,
-        "texts": texts,
-    }
-
-
-# ---------------------------------------------------------------------------
 # MP3 / ID3v2.3 tag container
 
 
@@ -544,7 +307,7 @@ def probe_id3v2(p: bytes) -> dict:
     if p[5] != 0:
         # unsynchronisation / extended header / experimental flags
         # change the body layout: walking anyway would emit phantom
-        # frames with control-character ids (r6 review, reproduced)
+        # frames with control-character ids
         raise ValueError("ID3: header flags unsupported")
     size = _unsynchsafe(p[6:10])
     if 10 + size > len(p):
@@ -569,7 +332,7 @@ def probe_id3v2(p: bytes) -> dict:
         i += 10 + fsize
     # everything after the last frame must be zero padding: a torn
     # final frame header (1-9 junk bytes) is structural corruption,
-    # not padding (r6 review, reproduced)
+    # not padding
     if any(p[i:end]):
         raise ValueError("ID3: non-padding bytes after last frame")
     return {"version": 3, "tag_bytes": 10 + size, "frames": frames}

@@ -1,50 +1,352 @@
-"""Pure stdlib+numpy image codecs: BMP, GIF (LZW), baseline JPEG.
+"""Pure stdlib+numpy image codecs: PNG, BMP, GIF (LZW), baseline JPEG.
 
-These complete the engine's pixel-decode surface (PNG lives in
-``operators/multimodal.py``): every container ``sniff_image``
-recognizes now decodes to pixels with no imaging library. Decoders are
-written for the kernel seam ``decode_image_pixels`` — called per-row
-inside Arrow-batched ``mapInPandas``, so the per-image Python cost is
-amortized across a batch and the surrounding Spark plan (partitioning,
-schema, shuffle shape) is identical to what a C-backed decoder would
-use at 100 TB.
+The one home of every image byte layout the engine reads or writes:
+each format's framing is written once and walked once here, and
+``operators/multimodal.py`` only calls in. ``sniff_image`` parses the
+container header of all four; ``decode_image_pixels`` is the kernel
+seam that decodes any of them to pixels with no imaging library —
+called per-row inside Arrow-batched ``mapInPandas``, so the per-image
+Python cost is amortized across a batch and the surrounding Spark plan
+(partitioning, schema, shuffle shape) is identical to what a C-backed
+decoder would use at 100 TB.
 
 Each decoder has a matching minimal encoder so fixtures and oracle
 queries can synthesize REAL container bytes deterministically (no
 imaging library on the write side either):
 
+- PNG: one chunk writer and one chunk iterator; 8-bit grayscale/LA/
+  RGB/RGBA and palette, non-interlaced, zlib IDAT inflate and all five
+  scanline unfilters; ``probe_png_chunks`` walks the same chunks
+  verifying every CRC and collecting ``tEXt`` metadata.
 - BMP: BITMAPINFOHEADER, uncompressed (BI_RGB) 8/24/32-bit,
   bottom-up or top-down, 4-byte row padding, palette expansion.
 - GIF: 87a/89a, global/local color tables, full LZW with variable
   code width (3–12 bits, LSB-first), interlace reordering; the
   encoder emits spec-valid LZW (clear code before every symbol, so
-  the code width never grows — simple, always decodable).
+  the code width never grows — simple, always decodable). One screen
+  header, LZW packer and sub-block writer serve the still and the
+  animated encoder; one block iterator serves ``decode_gif`` and
+  ``probe_gif_animation``.
 - JPEG: baseline sequential DCT (SOF0), 8-bit, grayscale or YCbCr
   with any sampling factors (4:4:4 / 4:2:0 / 4:2:2), restart
   markers; Huffman decode, dequantize, dezigzag, float IDCT
   (separable 8×8 via one matrix product), JFIF YCbCr→RGB. The
-  encoder produces 4:4:4 baseline JPEGs with the Annex-K tables.
+  encoder produces 4:4:4 baseline JPEGs with the Annex-K tables. One
+  marker-segment iterator serves ``sniff_image`` and both of
+  ``decode_jpeg``'s walks.
 
-Lossless formats (BMP/GIF) round-trip bit-exactly; JPEG round-trips
-within quantization tolerance (exact for DC-only uniform blocks up to
-rounding). Hostile/truncated payloads raise ``ValueError`` — the same
-contract as the PNG path, so corrupt-skip logic never sees internals.
+Lossless formats (PNG/BMP/GIF) round-trip bit-exactly; JPEG
+round-trips within quantization tolerance (exact for DC-only uniform
+blocks up to rounding). Hostile/truncated payloads raise
+``ValueError`` — every walker raises it when a declared length runs
+past the buffer — so corrupt-skip logic never sees internals.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
 
 import numpy as np
 
 __all__ = [
+    "PNG_SIG",
+    "sniff_image",
+    "decode_image_features",
+    "decode_image_pixels",
+    "png_header",
+    "encode_png",
+    "encode_png_text",
+    "probe_png_chunks",
     "decode_bmp",
     "encode_bmp",
     "decode_gif",
     "encode_gif",
+    "encode_animated_gif",
+    "probe_gif_animation",
     "decode_jpeg",
     "encode_jpeg",
 ]
+
+
+# ---------------------------------------------------------------------------
+# header sniffing and the pixel-decode seam
+
+PNG_SIG = b"\x89PNG\r\n\x1a\n"
+#: PNG color type → mode string (PNG spec §11.2.2)
+_PNG_MODES = {0: "L", 2: "RGB", 3: "P", 4: "LA", 6: "RGBA"}
+#: JPEG SOFn markers carry frame dimensions; C4/C8/CC look like SOFs
+#: but are DHT/JPG/DAC (ITU T.81 table B.1)
+_JPEG_SOF = {
+    m for m in range(0xC0, 0xD0) if m not in (0xC4, 0xC8, 0xCC)
+}
+_JPEG_MODES = {1: "L", 3: "RGB", 4: "CMYK"}
+
+
+def sniff_image(payload: bytes) -> tuple[str, int, int, str] | None:
+    """Parse ``(format, width, height, mode)`` from an image container
+    header in pure Python — PNG IHDR, JPEG SOFn scan, GIF logical
+    screen descriptor, BMP info header. Returns ``None`` if the bytes
+    are not a recognized image container (never raises on truncated or
+    hostile input — a 100 TB crawl corpus *will* contain both)."""
+    p = bytes(payload)
+    # PNG: 8-byte signature, then IHDR chunk (len + type + 13 data bytes)
+    if p[:8] == PNG_SIG and len(p) >= 29 and p[12:16] == b"IHDR":
+        w, h = struct.unpack_from(">II", p, 16)
+        mode = _PNG_MODES.get(p[25], "RGB")
+        return ("png", w, h, mode) if w > 0 and h > 0 else None
+    # JPEG: SOI, then marker segments until a SOFn yields dimensions
+    if p[:2] == b"\xff\xd8":
+        try:
+            for marker, start, end in _jpeg_segments(p, 2):
+                if marker in _JPEG_SOF:
+                    if end - start < 6:
+                        return None
+                    h, w = struct.unpack_from(">HH", p, start + 1)
+                    mode = _JPEG_MODES.get(p[start + 5], "RGB")
+                    return ("jpeg", w, h, mode) if w > 0 and h > 0 else None
+        except ValueError:
+            pass
+        return None
+    # GIF: 6-byte version tag then little-endian logical screen size
+    if p[:6] in (b"GIF87a", b"GIF89a") and len(p) >= 10:
+        w, h = struct.unpack_from("<HH", p, 6)
+        return ("gif", w, h, "P") if w > 0 and h > 0 else None
+    # BMP: 'BM' + BITMAPINFOHEADER (width/height at offsets 18/22)
+    if p[:2] == b"BM" and len(p) >= 26:
+        w, h = struct.unpack_from("<ii", p, 18)
+        return ("bmp", w, abs(h), "RGB") if w > 0 and h != 0 else None
+    return None
+
+
+def decode_image_features(payload: bytes) -> tuple[int, int, str]:
+    """Real image header decode: dimensions + mode from the container
+    header via :func:`sniff_image`. Raises ``ValueError`` for bytes
+    that are not a recognized image container."""
+    info = sniff_image(payload)
+    if info is None:
+        raise ValueError("payload is not a recognized image container")
+    _, w, h, mode = info
+    return w, h, mode
+
+
+def decode_image_pixels(payload: bytes) -> np.ndarray:
+    """Full pixel decode for EVERY container ``sniff_image``
+    recognizes, in pure stdlib+numpy Python — no imaging library:
+    zlib-inflated, unfiltered PNG; uncompressed BI_RGB BMP (8/24/32-
+    bit, palette, row padding, both row orders); GIF87a/89a with full
+    LZW and interlace; baseline sequential JPEG (SOF0) with Huffman
+    decode, dequantize, IDCT, chroma upsample, restart markers.
+
+    Returns a numpy ``uint8`` array of shape ``(height, width,
+    channels)`` (palette rows expand to RGB). The per-row/per-block
+    Python loops are correct and fine for fixtures and spot decodes;
+    a 100 TB decode pass should swap a C-backed decoder into the same
+    kernel seam (nothing else changes)."""
+    info = sniff_image(payload)
+    if info is None:
+        raise ValueError("payload is not a recognized image container")
+    decoder = {
+        "png": _decode_png,
+        "bmp": decode_bmp,
+        "gif": decode_gif,
+        "jpeg": decode_jpeg,
+    }[info[0]]
+    return decoder(payload)
+
+
+# ---------------------------------------------------------------------------
+# PNG
+
+
+def _png_chunk(ctype: bytes, body: bytes) -> bytes:
+    """One CRC32-sealed chunk: [len:4][type:4][body][crc:4]."""
+    return (
+        struct.pack(">I", len(body))
+        + ctype
+        + body
+        + struct.pack(">I", zlib.crc32(ctype + body))
+    )
+
+
+def _png_chunks(p: bytes):
+    """Walk the chunk stream after the signature: yields ``(type,
+    body, crc)`` up to and including IEND. The walk ends quietly where
+    the buffer ends inside a chunk header; a chunk whose declared
+    length (with its CRC) runs past the buffer raises ``ValueError``.
+    CRCs are returned, not checked."""
+    i, n = len(PNG_SIG), len(p)
+    while i + 8 <= n:
+        ln, ctype = struct.unpack_from(">I4s", p, i)
+        end = i + 8 + ln
+        if end + 4 > n:
+            raise ValueError(f"PNG: {ctype!r} chunk runs past the buffer")
+        yield ctype, p[i + 8 : end], struct.unpack_from(">I", p, end)[0]
+        if ctype == b"IEND":
+            return
+        i = end + 4
+
+
+def png_header(w: int, h: int, color_type: int = 0) -> bytes:
+    """The PNG signature and an 8-bit, non-interlaced IHDR chunk — the
+    header ``sniff_image`` reads."""
+    return PNG_SIG + _png_chunk(
+        b"IHDR", struct.pack(">II5B", w, h, 8, color_type, 0, 0, 0)
+    )
+
+
+def _decode_png(payload: bytes) -> np.ndarray:
+    """PNG → (h, w, channels) uint8: IDAT streams are ``zlib``-inflated
+    and the per-scanline filters (PNG spec §9: None/Sub/Up/Average/
+    Paeth) are undone; palette images expand through PLTE to RGB."""
+    p = bytes(payload)
+    width, height = struct.unpack_from(">II", p, 16)
+    bit_depth, color_type = p[24], p[25]
+    interlace = p[28]
+    if bit_depth != 8:
+        raise ValueError(f"unsupported PNG bit depth {bit_depth} (8 only)")
+    if interlace != 0:
+        raise ValueError("unsupported interlaced PNG (Adam7)")
+    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
+    if channels is None:
+        raise ValueError(f"invalid PNG color type {color_type}")
+    idat: list[bytes] = []
+    plte = b""
+    for ctype, body, _ in _png_chunks(p):
+        if ctype == b"IDAT":
+            idat.append(body)
+        elif ctype == b"PLTE":
+            plte = body
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error as e:
+        # hostile/truncated containers surface as the same ValueError
+        # contract as every other malformed-image path — the caller's
+        # corrupt-skip logic must never see raw zlib internals
+        raise ValueError(f"PNG IDAT stream undecodable: {e}") from e
+    stride = width * channels
+    if len(raw) < height * (1 + stride):
+        raise ValueError("PNG pixel data truncated")
+    out = np.empty((height, stride), dtype=np.uint8)
+    prev = bytearray(stride)
+    bpp = channels  # bytes per pixel at bit depth 8
+    pos = 0
+    for y in range(height):
+        ftype = raw[pos]
+        line = bytearray(raw[pos + 1 : pos + 1 + stride])
+        pos += 1 + stride
+        if ftype == 1:  # Sub
+            for x in range(bpp, stride):
+                line[x] = (line[x] + line[x - bpp]) & 0xFF
+        elif ftype == 2:  # Up
+            for x in range(stride):
+                line[x] = (line[x] + prev[x]) & 0xFF
+        elif ftype == 3:  # Average
+            for x in range(stride):
+                left = line[x - bpp] if x >= bpp else 0
+                line[x] = (line[x] + ((left + prev[x]) >> 1)) & 0xFF
+        elif ftype == 4:  # Paeth
+            for x in range(stride):
+                a = line[x - bpp] if x >= bpp else 0
+                b = prev[x]
+                c = prev[x - bpp] if x >= bpp else 0
+                pp = a + b - c
+                pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
+                if pa <= pb and pa <= pc:
+                    pred = a
+                elif pb <= pc:
+                    pred = b
+                else:
+                    pred = c
+                line[x] = (line[x] + pred) & 0xFF
+        elif ftype != 0:
+            raise ValueError(f"invalid PNG filter type {ftype}")
+        out[y] = np.frombuffer(bytes(line), dtype=np.uint8)
+        prev = line
+    pixels = out.reshape(height, width, channels)
+    if color_type == 3:  # palette → RGB through PLTE
+        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
+        if int(pixels.max(initial=0)) >= len(pal):
+            raise ValueError("PNG palette index out of range")
+        pixels = pal[pixels[:, :, 0]]
+    return pixels
+
+
+def encode_png(pixels, color_type: int = 0) -> bytes:
+    """Minimal PNG encoder (filter 0, one IDAT) for fixtures and the
+    pixel-statistics oracle: ``pixels`` is a numpy uint8 array of shape
+    (h, w) or (h, w, channels); colors map 1→grayscale, 2→LA, 3→RGB,
+    4→RGBA. Output decodes in any PNG reader (CRCs included)."""
+    px = np.asarray(pixels, dtype=np.uint8)
+    if px.ndim == 2:
+        px = px[:, :, None]
+    h, w, ch = px.shape
+    ctype = color_type or {1: 0, 2: 4, 3: 2, 4: 6}[ch]
+    scanlines = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
+    return (
+        png_header(w, h, ctype)
+        + _png_chunk(b"IDAT", zlib.compress(scanlines))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def encode_png_text(w: int, h: int, texts: list[tuple[str, str]]) -> bytes:
+    """Minimal valid grayscale PNG carrying ``tEXt`` metadata chunks:
+    signature, IHDR, one tEXt per (key, value), a real zlib IDAT of
+    zero scanlines, IEND — every chunk CRC32-sealed."""
+    raw = b"".join(b"\x00" + b"\x00" * w for _ in range(h))
+    return (
+        png_header(w, h)
+        + b"".join(
+            _png_chunk(b"tEXt", k.encode("latin-1") + b"\x00" + v.encode("latin-1"))
+            for k, v in texts
+        )
+        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def probe_png_chunks(p: bytes) -> dict:
+    """Walk a PNG's chunk stream verifying EVERY chunk's CRC32 (a
+    flipped bit anywhere raises — the integrity pass an asset store
+    runs on ingest): returns dimensions, chunk census, total IDAT
+    payload bytes, and the tEXt metadata pairs in file order."""
+    p = bytes(p)
+    if p[:8] != PNG_SIG:
+        raise ValueError("not a PNG container")
+    w = h = None
+    n_chunks = 0
+    idat_bytes = 0
+    texts: list[tuple[str, str]] = []
+    seen_end = False
+    for ctype, body, crc in _png_chunks(p):
+        if zlib.crc32(ctype + body) != crc:
+            raise ValueError(f"PNG: CRC mismatch in {ctype!r}")
+        n_chunks += 1
+        if ctype == b"IHDR":
+            if len(body) < 8:
+                raise ValueError("PNG: IHDR too short")
+            w, h = struct.unpack_from(">II", body, 0)
+        elif ctype == b"IDAT":
+            idat_bytes += len(body)
+        elif ctype == b"tEXt":
+            sep = body.find(b"\x00")
+            if sep < 0:
+                raise ValueError("PNG: malformed tEXt")
+            texts.append(
+                (body[:sep].decode("latin-1"), body[sep + 1 :].decode("latin-1"))
+            )
+        elif ctype == b"IEND":
+            seen_end = True
+    if w is None or not seen_end:
+        raise ValueError("PNG: missing IHDR/IEND")
+    return {
+        "width": w,
+        "height": h,
+        "n_chunks": n_chunks,
+        "idat_bytes": idat_bytes,
+        "texts": texts,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -115,6 +417,132 @@ def encode_bmp(pixels) -> bytes:
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+def _gif_screen_header(w: int, h: int, palette) -> tuple[bytes, int]:
+    """GIF89a signature, logical screen descriptor and global color
+    table (``palette`` zero-padded to a power of two) → (header bytes,
+    LZW minimum code size)."""
+    pal = np.asarray(palette, dtype=np.uint8)
+    n = len(pal)
+    size_field = max(1, (n - 1).bit_length() - 1) if n > 2 else 0
+    table_n = 2 << size_field
+    if n > table_n:
+        raise ValueError("palette larger than color table size")
+    pal_full = np.zeros((table_n, 3), dtype=np.uint8)
+    pal_full[:n] = pal
+    header = (
+        b"GIF89a"
+        + struct.pack("<HHBBB", w, h, 0x80 | (size_field & 7), 0, 0)
+        + pal_full.tobytes()
+    )
+    return header, max(2, size_field + 1)
+
+
+def _gif_lzw_pack(values, min_code_size: int) -> bytes:
+    """Spec-valid LZW stream of (CLEAR, literal) pairs ending in EOI:
+    codes never exceed min_code_size+1 bits — larger than optimal but
+    decodable by any reader, with no table bookkeeping."""
+    clear = 1 << min_code_size
+    width = min_code_size + 1
+    acc = 0
+    nbits = 0
+    body = bytearray()
+    for v in list(values) + [None]:
+        codes = (clear + 1,) if v is None else (clear, int(v))
+        for c in codes:
+            acc |= c << nbits
+            nbits += width
+            while nbits >= 8:
+                body.append(acc & 0xFF)
+                acc >>= 8
+                nbits -= 8
+    if nbits:
+        body.append(acc & 0xFF)
+    return bytes(body)
+
+
+def _gif_sub_blocks(data: bytes) -> bytes:
+    """``data`` as length-prefixed sub-blocks of at most 255 bytes,
+    then the 0x00 block terminator."""
+    out = bytearray()
+    for off in range(0, len(data), 255):
+        chunk = data[off : off + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0)
+    return bytes(out)
+
+
+def _gif_image(indexed: np.ndarray, min_code_size: int) -> bytes:
+    """Image descriptor (full screen, no local table) + LZW data."""
+    h, w = indexed.shape
+    return (
+        b"\x2c"
+        + struct.pack("<HHHHBB", 0, 0, w, h, 0, min_code_size)
+        + _gif_sub_blocks(_gif_lzw_pack(indexed.reshape(-1).tolist(), min_code_size))
+    )
+
+
+def _gif_screen(p: bytes) -> tuple[int, int, bytes, int]:
+    """Signature + logical screen descriptor → (width, height, global
+    color table bytes (empty when absent), offset of the first block)."""
+    if p[:6] not in (b"GIF87a", b"GIF89a") or len(p) < 13:
+        raise ValueError("not a GIF container")
+    w, h, flags = struct.unpack_from("<HHB", p, 6)
+    end = 13 + (3 * (2 << (flags & 7)) if flags & 0x80 else 0)
+    if end > len(p):
+        raise ValueError("GIF: global color table runs past the buffer")
+    return w, h, p[13:end], end
+
+
+def _gif_blocks(p: bytes, i: int):
+    """Walk the block stream from offset ``i`` to the trailer: yields
+    ``(0x21, label, sub_blocks)`` per extension and ``(0x2C, head,
+    sub_blocks)`` per image, where ``head`` is the 9-byte image
+    descriptor, its local color table and the LZW minimum code size
+    byte. A truncated head, a sub-block whose length runs past the
+    buffer, or a missing trailer raises ``ValueError``."""
+    n = len(p)
+
+    def sub_blocks(j: int) -> tuple[list[bytes], int]:
+        subs = []
+        while j < n:
+            ln = p[j]
+            j += 1
+            if ln == 0:
+                return subs, j
+            if j + ln > n:
+                raise ValueError("GIF: sub-block runs past the buffer")
+            subs.append(p[j : j + ln])
+            j += ln
+        return subs, j  # cut at the terminator: the trailer check fails
+
+    while True:
+        if i >= n:
+            raise ValueError("GIF: missing trailer")
+        block = p[i]
+        i += 1
+        if block == 0x3B:
+            return
+        if block == 0x21:
+            if i >= n:
+                raise ValueError("GIF: truncated extension")
+            label = p[i]
+            subs, i = sub_blocks(i + 1)
+            yield block, label, subs
+        elif block == 0x2C:
+            if i + 9 > n:
+                raise ValueError("GIF: truncated image descriptor")
+            flags = p[i + 8]
+            end = i + 10 + (3 * (2 << (flags & 7)) if flags & 0x80 else 0)
+            if end > n:
+                raise ValueError("GIF: truncated image data")
+            head = p[i:end]
+            subs, i = sub_blocks(end)
+            yield block, head, subs
+        else:
+            raise ValueError(f"GIF: unknown block 0x{block:02x}")
+
+
 def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> bytearray:
     """GIF-flavor LZW: LSB-first bit packing, variable code width
     starting at min_code_size+1, CLEAR resets the table, EOI ends."""
@@ -167,54 +595,21 @@ def decode_gif(p: bytes) -> np.ndarray:
     """GIF → (h, w, 3) uint8 RGB of the FIRST image frame (the
     still-image contract; animation frames are out of scope)."""
     p = bytes(p)
-    if p[:6] not in (b"GIF87a", b"GIF89a") or len(p) < 13:
-        raise ValueError("not a GIF container")
-    packed = p[10]
-    i = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(p, dtype=np.uint8, count=3 * n, offset=i).reshape(n, 3)
-        i += 3 * n
-    while i < len(p):
-        block = p[i]
-        i += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            i += 1
-            while i < len(p) and p[i] != 0:
-                i += 1 + p[i]
-            i += 1
-            continue
+    _, _, gct, i = _gif_screen(p)
+    for block, head, subs in _gif_blocks(p, i):
         if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        if i + 9 > len(p):
-            raise ValueError("GIF image descriptor truncated")
-        _, _, w, h = struct.unpack_from("<HHHH", p, i)
-        ipacked = p[i + 8]
-        i += 9
-        pal = gct
-        if ipacked & 0x80:  # local color table
-            n = 2 << (ipacked & 0x07)
-            pal = np.frombuffer(p, dtype=np.uint8, count=3 * n, offset=i).reshape(n, 3)
-            i += 3 * n
-        if pal is None:
+            continue
+        _, _, w, h, flags = struct.unpack_from("<HHHHB", head)
+        pal = np.frombuffer(head[9:-1] or gct, dtype=np.uint8).reshape(-1, 3)
+        if not len(pal):
             raise ValueError("GIF image has no color table")
         if w == 0 or h == 0:
             raise ValueError("degenerate GIF dimensions")
-        min_code_size = p[i]
-        i += 1
-        chunks = []
-        while i < len(p) and p[i] != 0:
-            size = p[i]
-            chunks.append(p[i + 1 : i + 1 + size])
-            i += 1 + size
-        idx_bytes = _lzw_decode(min_code_size, b"".join(chunks), w * h)
+        idx_bytes = _lzw_decode(head[-1], b"".join(subs), w * h)
         if len(idx_bytes) < w * h:
             raise ValueError("GIF pixel data truncated")
         idx = np.frombuffer(bytes(idx_bytes[: w * h]), dtype=np.uint8).reshape(h, w)
-        if ipacked & 0x40:  # interlaced: rows stored in 4 passes
+        if flags & 0x40:  # interlaced: rows stored in 4 passes
             ordered = np.empty_like(idx)
             src = 0
             for start, step in _GIF_INTERLACE_PASSES:
@@ -229,51 +624,70 @@ def decode_gif(p: bytes) -> np.ndarray:
 
 
 def encode_gif(indexed, palette) -> bytes:
-    """(h, w) uint8 index array + (n, 3) palette → GIF89a bytes.
-
-    The LZW stream emits a CLEAR code before every literal, so codes
-    never exceed min_code_size+1 bits — larger than optimal but
-    spec-valid for any decoder, with no table bookkeeping."""
+    """(h, w) uint8 index array + (n, 3) palette → GIF89a bytes."""
     idx = np.asarray(indexed, dtype=np.uint8)
-    pal = np.asarray(palette, dtype=np.uint8)
     h, w = idx.shape
-    n = len(pal)
-    size_field = max(1, (n - 1).bit_length() - 1) if n > 2 else 0
-    table_n = 2 << size_field
-    if n > table_n:
-        raise ValueError("palette larger than color table size")
-    pal_full = np.zeros((table_n, 3), dtype=np.uint8)
-    pal_full[:n] = pal
-    min_code_size = max(2, size_field + 1)
-    clear = 1 << min_code_size
-    width = min_code_size + 1
-    # bit-pack (clear, literal) pairs LSB-first
-    acc = 0
-    nbits = 0
-    body = bytearray()
-    for v in idx.reshape(-1).tolist() + [None]:
-        codes = (clear + 1,) if v is None else (clear, int(v))  # EOI at end
-        for c in codes:
-            acc |= c << nbits
-            nbits += width
-            while nbits >= 8:
-                body.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-    if nbits:
-        body.append(acc & 0xFF)
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | (size_field & 7), 0, 0)
-    out += pal_full.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out.append(min_code_size)
-    for off in range(0, len(body), 255):
-        chunk = body[off : off + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
+    header, min_code_size = _gif_screen_header(w, h, palette)
+    return header + _gif_image(idx, min_code_size) + b"\x3b"
+
+
+def encode_animated_gif(frames, palette, delays_cs, loops: int = 0) -> bytes:
+    """List of (h, w) uint8 index arrays + shared global palette +
+    per-frame delays (centiseconds) → animated GIF89a: NETSCAPE 2.0
+    looping application extension, one Graphic Control Extension per
+    frame carrying its delay, then the image descriptor + LZW data."""
+    frames = [np.asarray(f, dtype=np.uint8) for f in frames]
+    if not frames or len(frames) != len(delays_cs):
+        raise ValueError("frames/delays mismatch")
+    h, w = frames[0].shape
+    header, min_code_size = _gif_screen_header(w, h, palette)
+    out = bytearray(header)
+    # NETSCAPE 2.0 looping extension (loops=0 ⇒ forever)
+    out += b"\x21\xff\x0bNETSCAPE2.0" + _gif_sub_blocks(b"\x01" + struct.pack("<H", loops))
+    for frame, delay in zip(frames, delays_cs):
+        if frame.shape != (h, w):
+            raise ValueError("all frames must share the logical screen size")
+        out += b"\x21\xf9" + _gif_sub_blocks(
+            b"\x00" + struct.pack("<H", int(delay)) + b"\x00"
+        )
+        out += _gif_image(frame, min_code_size)
+    out += b"\x3b"
     return bytes(out)
+
+
+def probe_gif_animation(p: bytes) -> dict:
+    """Walk a GIF's block stream WITHOUT decoding pixels: count image
+    frames, sum Graphic-Control delays, and read the NETSCAPE loop
+    count — the animation-index pass a media catalog runs per asset.
+    Raises ``ValueError`` on malformed/truncated block structure."""
+    p = bytes(p)
+    w, h, _, i = _gif_screen(p)
+    n_frames = 0
+    total_delay_cs = 0
+    loops = None
+    pending_delay = 0
+    for block, head, subs in _gif_blocks(p, i):
+        if block == 0x2C:
+            n_frames += 1
+            total_delay_cs += pending_delay
+            pending_delay = 0
+        elif head == 0xF9:  # Graphic Control Extension
+            if len(subs) != 1 or len(subs[0]) != 4:
+                raise ValueError("GIF: malformed GCE")
+            pending_delay = struct.unpack_from("<H", subs[0], 1)[0]
+        elif head == 0xFF and subs[:1] == [b"NETSCAPE2.0"]:
+            if len(subs) < 2 or len(subs[1]) != 3 or subs[1][0] != 1:
+                raise ValueError("GIF: malformed NETSCAPE block")
+            loops = struct.unpack_from("<H", subs[1], 1)[0]
+    if n_frames == 0:
+        raise ValueError("GIF: no image frames")
+    return {
+        "width": w,
+        "height": h,
+        "n_frames": n_frames,
+        "total_delay_cs": total_delay_cs,
+        "loops": loops,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -484,6 +898,37 @@ def _extend(v: int, t: int) -> int:
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+def _jpeg_segments(p: bytes, i: int):
+    """Walk marker segments from offset ``i``: yields ``(marker, start,
+    end)`` with the segment payload at ``p[start:end]`` (empty for the
+    standalone markers TEM, RSTn, SOI and EOI). 0xFF fill bytes are
+    skipped; the walk ends after EOI, or quietly where the buffer ends
+    inside a marker or length field. A byte other than 0xFF where a
+    marker must start, a length below 2, or a segment running past
+    the buffer raises ``ValueError``."""
+    n = len(p)
+    while i + 1 < n:
+        if p[i] != 0xFF:
+            raise ValueError("JPEG: marker desync")
+        marker = p[i + 1]
+        if marker == 0xFF:  # fill byte
+            i += 1
+            continue
+        i += 2
+        if marker == 0x01 or 0xD0 <= marker <= 0xD9:
+            yield marker, i, i
+            if marker == 0xD9:
+                return
+            continue
+        if i + 2 > n:
+            return
+        seglen = (p[i] << 8) | p[i + 1]
+        if seglen < 2 or i + seglen > n:
+            raise ValueError(f"JPEG: segment 0x{marker:02x} runs past the buffer")
+        yield marker, i + 2, i + seglen
+        i += seglen
+
+
 def decode_jpeg(p: bytes) -> np.ndarray:
     """Baseline JPEG → (h, w, channels) uint8: channels=1 for
     grayscale scans, 3 (RGB) for YCbCr."""
@@ -495,20 +940,10 @@ def decode_jpeg(p: bytes) -> np.ndarray:
     comps: list[dict] = []
     w = h = 0
     restart_interval = 0
-    i = 2
     scan_comps: list[dict] = []
     data_start = -1
-    while i + 3 < len(p):
-        if p[i] != 0xFF:
-            raise ValueError("JPEG: marker desync")
-        marker = p[i + 1]
-        i += 2
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        seglen = struct.unpack_from(">H", p, i)[0]
-        seg = p[i + 2 : i + seglen]
+    for marker, start, data_end in _jpeg_segments(p, 2):
+        seg = p[start:data_end]
         if marker == 0xDB:  # DQT
             j = 0
             while j < len(seg):
@@ -521,6 +956,8 @@ def decode_jpeg(p: bytes) -> np.ndarray:
                 qt[tq] = zz.reshape(8, 8)
                 j += 65
         elif marker == 0xC0:  # SOF0 baseline
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                raise ValueError("JPEG: SOF0 segment truncated")
             if seg[0] != 8:
                 raise ValueError("JPEG: only 8-bit precision")
             h, w = struct.unpack_from(">HH", seg, 1)
@@ -539,25 +976,36 @@ def decode_jpeg(p: bytes) -> np.ndarray:
                 tc, th = seg[j] >> 4, seg[j] & 0x0F
                 bits = list(seg[j + 1 : j + 17])
                 nval = sum(bits)
+                if j + 17 + nval > len(seg):
+                    raise ValueError("JPEG: DHT code counts run past the segment")
                 vals = list(seg[j + 17 : j + 17 + nval])
                 huff[(tc, th)] = _huff_decode_table(bits, vals)
                 j += 17 + nval
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("JPEG: DRI segment truncated")
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS
-            ns = seg[0]
+            if not seg or len(seg) < 1 + 2 * seg[0]:
+                raise ValueError("JPEG: SOS segment truncated")
             scan_comps = []
-            for c in range(ns):
+            for c in range(seg[0]):
                 cs, tda = seg[1 + 2 * c], seg[2 + 2 * c]
-                comp = next(cc for cc in comps if cc["id"] == cs)
+                comp = next((cc for cc in comps if cc["id"] == cs), None)
+                if comp is None:
+                    raise ValueError(f"JPEG: scan names undeclared component {cs}")
                 scan_comps.append(
                     {**comp, "dc": tda >> 4, "ac": tda & 0x0F}
                 )
-            data_start = i + seglen
+            data_start = data_end
             break
-        i += seglen
-    if not comps or data_start < 0 or w == 0 or h == 0:
+    if not scan_comps or data_start < 0 or w == 0 or h == 0:
         raise ValueError("JPEG: missing SOF/SOS")
+    for c in scan_comps:
+        if c["h"] == 0 or c["v"] == 0:
+            raise ValueError("JPEG: zero sampling factor")
+        if (0, c["dc"]) not in huff or (1, c["ac"]) not in huff or c["tq"] not in qt:
+            raise ValueError("JPEG: scan uses an undefined DQT/DHT table")
     hmax = max(c["h"] for c in scan_comps)
     vmax = max(c["v"] for c in scan_comps)
     mcux = -(-w // (8 * hmax))
@@ -583,6 +1031,8 @@ def decode_jpeg(p: bytes) -> np.ndarray:
                         t = _huff_read(reader, huff[(0, c["dc"])])
                         diff = _extend(reader.bits(t), t) if t else 0
                         pred[c["id"]] += diff
+                        if not -(1 << 63) <= pred[c["id"]] < (1 << 63):
+                            raise ValueError("JPEG: DC predictor overflows int64")
                         zz[0] = pred[c["id"]]
                         k = 1
                         ac = huff[(1, c["ac"])]
@@ -614,24 +1064,20 @@ def decode_jpeg(p: bytes) -> np.ndarray:
     # (skipping each by its declared length) rather than substring-
     # searching the raw tail: first skip residual entropy up to the
     # first real marker (0xFF followed by neither 0x00 nor RSTn), then
-    # follow segment lengths until EOI.
+    # follow segment lengths until EOI (trailing bytes beyond it are
+    # ignored). A torn trailer ends the check: the image itself
+    # decoded fully.
     j = data_start + reader.pos
     while j + 1 < len(p) and not (
         p[j] == 0xFF and p[j + 1] != 0x00 and not (0xD0 <= p[j + 1] <= 0xD7)
     ):
         j += 1
-    while j + 1 < len(p):
-        marker = p[j + 1]
-        if marker == 0xD9:  # EOI: trailing bytes beyond are ignored
-            break
-        if marker == 0xDA:
-            raise ValueError("JPEG: multi-scan baseline files unsupported")
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7 or marker == 0xFF:
-            j += 2 if marker != 0xFF else 1  # standalone / fill byte
-            continue
-        if j + 4 > len(p):
-            break  # truncated trailer: the image itself decoded fully
-        j += 2 + struct.unpack_from(">H", p, j + 2)[0]
+    try:
+        second_scan = any(m == 0xDA for m, _, _ in _jpeg_segments(p, j))
+    except ValueError:
+        second_scan = False
+    if second_scan:
+        raise ValueError("JPEG: multi-scan baseline files unsupported")
     out_planes = []
     for c in scan_comps:
         pl = planes[c["id"]]
@@ -640,6 +1086,8 @@ def decode_jpeg(p: bytes) -> np.ndarray:
         if ry > 1 or rx > 1:
             pl = np.repeat(np.repeat(pl, ry, axis=0), rx, axis=1)
         out_planes.append(pl[:h, :w])
+    if len(out_planes) == 2:
+        raise ValueError("JPEG: two-component scans unsupported")
     if len(out_planes) == 1:
         g = np.clip(np.rint(out_planes[0]), 0, 255).astype(np.uint8)
         return g[:, :, None]

@@ -8,30 +8,29 @@ payload is opaque bytes with a string→string metadata map
 stores images/audio/video — a binary column plus typed metadata, decoded
 only at the edge of the pipeline.
 
-Decoding: container *headers* (PNG IHDR, JPEG SOFn, GIF screen
-descriptor, BMP info header) are parsed in pure Python — no Pillow
-needed — so ``decode_image_features`` extracts real dimensions from
-real image bytes. *Pixels* decode in pure stdlib+numpy Python for
-EVERY recognized container (``decode_image_pixels``): PNG here (zlib
-IDAT inflate + all five scanline unfilters + palette expansion), and
-BMP / GIF-LZW / baseline-JPEG in ``functions/imaging.py`` (Huffman +
-IDCT + chroma upsample for JPEG) — all round-trip-tested, the
+This module holds operators only; every container byte layout lives in
+``functions/``. The image formats (PNG, JPEG, GIF, BMP) live in
+``functions/imaging.py``: ``sniff_image`` parses their headers in pure Python — no Pillow needed —
+so ``decode_image_features`` extracts real dimensions from real image
+bytes, and ``decode_image_pixels`` decodes EVERY recognized container
+to pixels in pure stdlib+numpy Python — all round-trip-tested, the
 lossless three oracle-verified. Payloads that aren't a recognized
 image container fall back to a deterministic fake decoder (the test
 seam). Everything around the kernels — the binary column handling,
 the metadata map, the Arrow batch shape through ``mapInPandas``, the
 partitioning — is real and tested.
 
-Audio (WAV), video (MP4) and image metadata (TIFF/EXIF) follow the same
-verification shape: each document synthesizes a REAL container
-(``functions/containers.py`` encoders) whose contents derive
+Audio (WAV, ID3), video (MP4) and image metadata (TIFF/EXIF) come from
+``functions/containers.py`` and follow the same verification shape:
+each document synthesizes a REAL container whose contents derive
 arithmetically from ``doc_id``, the REAL byte-level parser decodes it
-inside an Arrow-batched ``mapInPandas`` kernel, and the DuckDB oracle
-recomputes the expected values from the same arithmetic — so the RIFF
-chunk walker, the ISO-BMFF box recursion and the TIFF IFD walker are
-verified value-exactly on every row. Each is one Arrow pass, zero
-shuffle, linear at 100 TB; on a real lake the synth step is replaced
-by stored payload bytes and the kernel seam is unchanged.
+inside one per-document kernel (``_per_document``, an Arrow-batched
+``mapInPandas`` pass), and the DuckDB oracle recomputes the expected
+values from the same arithmetic — so the RIFF chunk walker, the
+ISO-BMFF box recursion and the TIFF IFD walker are verified
+value-exactly on every row. Each is one Arrow pass, zero shuffle,
+linear at 100 TB; on a real lake the synth step is replaced by stored
+payload bytes and the kernel seam is unchanged.
 """
 
 from __future__ import annotations
@@ -43,38 +42,41 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
 
+from watermill_kinesis_spark.functions.imaging import (
+    decode_image_pixels,
+    encode_animated_gif,
+    encode_bmp,
+    encode_gif,
+    encode_png,
+    encode_png_text,
+    png_header,
+    probe_gif_animation,
+    probe_png_chunks,
+    sniff_image,
+)
 from watermill_kinesis_spark.registry import query
 from watermill_kinesis_spark.sources.tables import load_table
 
-#: schema of a multimodal asset row — payload is opaque, metadata typed
-ASSET_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("meta", MapType(StringType(), StringType())),
-    ]
+FEATURE_SCHEMA = (
+    "doc_id long, n_bytes int, width int, height int, mode string, decoder string"
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("mode", StringType()),
-        StructField("decoder", StringType()),
-    ]
-)
+
+def _per_document(df: DataFrame, row, schema: str) -> DataFrame:
+    """The per-document kernel: one Arrow-batched ``mapInPandas`` pass
+    that calls ``row`` with each input row's values (in ``df``'s
+    column order) and emits the tuple it returns as one output row in
+    ``schema``'s column order. Zero shuffle; only the output columns
+    cross the wire."""
+    names = [col.split()[0] for col in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row(*vals) for vals in zip(*(pdf[c] for c in pdf.columns))]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(kernel, schema)
 
 
 def assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,234 +92,6 @@ def assets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("source"), F.col("source"),
             F.lit("lang"), F.col("lang"),
         ).alias("meta"),
-    )
-
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-#: PNG color type → mode string (PNG spec §11.2.2)
-_PNG_MODES = {0: "L", 2: "RGB", 3: "P", 4: "LA", 6: "RGBA"}
-#: JPEG SOFn markers carry frame dimensions; C4/C8/CC look like SOFs
-#: but are DHT/JPG/DAC (ITU T.81 table B.1)
-_JPEG_SOF = {
-    m for m in range(0xC0, 0xD0) if m not in (0xC4, 0xC8, 0xCC)
-}
-_JPEG_MODES = {1: "L", 3: "RGB", 4: "CMYK"}
-
-
-def sniff_image(payload: bytes) -> tuple[str, int, int, str] | None:
-    """Parse ``(format, width, height, mode)`` from an image container
-    header in pure Python — PNG IHDR, JPEG SOFn scan, GIF logical
-    screen descriptor, BMP info header. Returns ``None`` if the bytes
-    are not a recognized image container (never raises on truncated or
-    hostile input — a 100 TB crawl corpus *will* contain both)."""
-    p = bytes(payload)
-    # PNG: 8-byte signature, then IHDR chunk (len + type + 13 data bytes)
-    if p[:8] == PNG_SIG and len(p) >= 29 and p[12:16] == b"IHDR":
-        w = int.from_bytes(p[16:20], "big")
-        h = int.from_bytes(p[20:24], "big")
-        mode = _PNG_MODES.get(p[25], "RGB")
-        return ("png", w, h, mode) if w > 0 and h > 0 else None
-    # JPEG: SOI, then marker segments until a SOFn yields dimensions
-    if p[:2] == b"\xff\xd8":
-        i = 2
-        while i + 3 < len(p):
-            if p[i] != 0xFF:  # desynchronized — not a well-formed JPEG
-                return None
-            while i < len(p) and p[i] == 0xFF:  # fill bytes allowed
-                i += 1
-            if i >= len(p):
-                return None
-            marker = p[i]
-            i += 1
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                continue  # standalone markers: no length field
-            if i + 1 >= len(p):
-                return None
-            seglen = int.from_bytes(p[i : i + 2], "big")
-            if seglen < 2:
-                return None
-            if marker in _JPEG_SOF:
-                if i + 7 >= len(p):
-                    return None
-                h = int.from_bytes(p[i + 3 : i + 5], "big")
-                w = int.from_bytes(p[i + 5 : i + 7], "big")
-                mode = _JPEG_MODES.get(p[i + 7], "RGB")
-                return ("jpeg", w, h, mode) if w > 0 and h > 0 else None
-            i += seglen
-        return None
-    # GIF: 6-byte version tag then little-endian logical screen size
-    if p[:6] in (b"GIF87a", b"GIF89a") and len(p) >= 10:
-        w = int.from_bytes(p[6:8], "little")
-        h = int.from_bytes(p[8:10], "little")
-        return ("gif", w, h, "P") if w > 0 and h > 0 else None
-    # BMP: 'BM' + BITMAPINFOHEADER (width/height at offsets 18/22)
-    if p[:2] == b"BM" and len(p) >= 26:
-        w = int.from_bytes(p[18:22], "little", signed=True)
-        h = abs(int.from_bytes(p[22:26], "little", signed=True))
-        return ("bmp", w, h, "RGB") if w > 0 and h > 0 else None
-    return None
-
-
-def decode_image_features(payload: bytes) -> tuple[int, int, str]:
-    """Real image header decode: dimensions + mode from the container
-    header via :func:`sniff_image`. Raises ``ValueError`` for bytes
-    that are not a recognized image container."""
-    info = sniff_image(payload)
-    if info is None:
-        raise ValueError("payload is not a recognized image container")
-    _, w, h, mode = info
-    return w, h, mode
-
-
-def decode_image_pixels(payload: bytes):
-    """Full pixel decode for EVERY container ``sniff_image``
-    recognizes, in pure stdlib+numpy Python — no imaging library:
-
-    - **PNG** (decoded here): IDAT streams are ``zlib``-inflated and
-      the per-scanline filters (PNG spec §9: None/Sub/Up/Average/
-      Paeth) are undone; 8-bit grayscale/LA/RGB/RGBA and palette,
-      non-interlaced.
-    - **BMP / GIF / JPEG** (``functions/imaging.py``): uncompressed
-      BI_RGB BMP (8/24/32-bit, palette, row padding, both row
-      orders); GIF87a/89a with full LZW and interlace; baseline
-      sequential JPEG (SOF0) with Huffman decode, dequantize, IDCT,
-      chroma upsample, restart markers.
-
-    Returns a numpy ``uint8`` array of shape ``(height, width,
-    channels)`` (palette rows expand to RGB). The per-row/per-block
-    Python loops are correct and fine for fixtures and spot decodes;
-    a 100 TB decode pass should swap a C-backed decoder into the same
-    kernel seam (nothing else changes)."""
-    import numpy as np
-
-    info = sniff_image(payload)
-    if info is None:
-        raise ValueError("payload is not a recognized image container")
-    fmt = info[0]
-    if fmt != "png":
-        from watermill_kinesis_spark.functions import imaging
-
-        decoder = {
-            "bmp": imaging.decode_bmp,
-            "gif": imaging.decode_gif,
-            "jpeg": imaging.decode_jpeg,
-        }[fmt]
-        return decoder(payload)
-    p = bytes(payload)
-    # walk chunks: [len:4][type:4][data][crc:4]
-    width = int.from_bytes(p[16:20], "big")
-    height = int.from_bytes(p[20:24], "big")
-    bit_depth, color_type = p[24], p[25]
-    interlace = p[28]
-    if bit_depth != 8:
-        raise NotImplementedError(f"PNG bit depth {bit_depth} (8 only)")
-    if interlace != 0:
-        raise NotImplementedError("interlaced PNG (Adam7) not supported")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    if channels is None:
-        raise ValueError(f"invalid PNG color type {color_type}")
-    idat: list[bytes] = []
-    plte = b""
-    i = 8
-    while i + 8 <= len(p):
-        clen = int.from_bytes(p[i : i + 4], "big")
-        ctype = p[i + 4 : i + 8]
-        data = p[i + 8 : i + 8 + clen]
-        if ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"IEND":
-            break
-        i += 12 + clen
-    import zlib
-
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as e:
-        # hostile/truncated containers surface as the same ValueError
-        # contract as every other malformed-image path — the caller's
-        # corrupt-skip logic must never see raw zlib internals
-        raise ValueError(f"PNG IDAT stream undecodable: {e}") from e
-    stride = width * channels
-    if len(raw) < height * (1 + stride):
-        raise ValueError("PNG pixel data truncated")
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = bytearray(stride)
-    bpp = channels  # bytes per pixel at bit depth 8
-    pos = 0
-    for y in range(height):
-        ftype = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        pos += 1 + stride
-        if ftype == 1:  # Sub
-            for x in range(bpp, stride):
-                line[x] = (line[x] + line[x - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for x in range(stride):
-                line[x] = (line[x] + prev[x]) & 0xFF
-        elif ftype == 3:  # Average
-            for x in range(stride):
-                left = line[x - bpp] if x >= bpp else 0
-                line[x] = (line[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for x in range(stride):
-                a = line[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                pp = a + b - c
-                pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
-                if pa <= pb and pa <= pc:
-                    pred = a
-                elif pb <= pc:
-                    pred = b
-                else:
-                    pred = c
-                line[x] = (line[x] + pred) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"invalid PNG filter type {ftype}")
-        out[y] = np.frombuffer(bytes(line), dtype=np.uint8)
-        prev = line
-    pixels = out.reshape(height, width, channels)
-    if color_type == 3:  # palette → RGB through PLTE
-        pal = np.frombuffer(plte, dtype=np.uint8)
-        pal = pal.reshape(-1, 3)
-        pixels = pal[pixels[:, :, 0]]
-    return pixels
-
-
-def encode_png(pixels, color_type: int = 0) -> bytes:
-    """Minimal PNG encoder (filter 0, one IDAT) for fixtures and the
-    pixel-statistics oracle: ``pixels`` is a numpy uint8 array of shape
-    (h, w) or (h, w, channels); colors map 1→grayscale, 2→LA, 3→RGB,
-    4→RGBA. Output decodes in any PNG reader (CRCs included)."""
-    import zlib
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ch = px.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-    if color_type:
-        ctype = color_type
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        crc = zlib.crc32(tag + data) & 0xFFFFFFFF
-        return len(data).to_bytes(4, "big") + tag + data + crc.to_bytes(4, "big")
-
-    ihdr = (
-        w.to_bytes(4, "big")
-        + h.to_bytes(4, "big")
-        + bytes([8, ctype, 0, 0, 0])
-    )
-    scanlines = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
-    return (
-        PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(scanlines))
-        + chunk(b"IEND", b"")
     )
 
 
@@ -353,29 +127,14 @@ def extract_image_features(asset_df: DataFrame) -> DataFrame:
     (``FEATURE_SCHEMA``), real header decode with fake-decoder
     fallback. Partition-parallel; only features cross the wire."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                info = sniff_image(p)
-                if info is not None:
-                    fmt, w, h, mode = info
-                    feats.append((w, h, mode, fmt))
-                else:
-                    w, h, mode = _fake_decode(p)
-                    feats.append((w, h, mode, "fake"))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mode": [f[2] for f in feats],
-                    "decoder": [f[3] for f in feats],
-                }
-            )
+    def extract(did, p):
+        info = sniff_image(p)
+        if info is None:
+            return (did, len(p), *_fake_decode(p), "fake")
+        fmt, w, h, mode = info
+        return did, len(p), w, h, mode, fmt
 
-    return asset_df.mapInPandas(extract, FEATURE_SCHEMA)
+    return _per_document(asset_df.select("doc_id", "payload"), extract, FEATURE_SCHEMA)
 
 
 #: fake "video" framing over the payload bytes: fixed-size frames,
@@ -501,36 +260,19 @@ def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-gated operator rather than a rows-only stub. One Arrow pass,
     no shuffle; at 100 TB the synth step is replaced by the lake's
     actual payload bytes and the kernel is unchanged."""
-    import struct
-    import zlib as _zlib
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
-    def synth_and_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, modes, fmts = [], [], [], [], []
-            for did, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 16 + int(n_chars) % 320
-                h = 16 + (int(n_chars) * 7919) % 240
-                color_type = 2 if did % 2 == 0 else 0  # RGB / grayscale
-                ihdr = struct.pack(">II5B", w, h, 8, color_type, 0, 0, 0)
-                chunk = struct.pack(">I", 13) + b"IHDR" + ihdr
-                chunk += struct.pack(">I", _zlib.crc32(b"IHDR" + ihdr))
-                payload = PNG_SIG + chunk
-                info = sniff_image(payload)  # the real parser, real bytes
-                assert info is not None
-                fmt, pw, ph, mode = info
-                ids.append(did)
-                ws.append(pw)
-                hs.append(ph)
-                modes.append(mode)
-                fmts.append(fmt)
-            yield pd.DataFrame(
-                {"doc_id": ids, "width": ws, "height": hs, "mode": modes, "fmt": fmts}
-            )
+    def synth_and_decode(did, n_chars):
+        w = 16 + int(n_chars) % 320
+        h = 16 + (int(n_chars) * 7919) % 240
+        color_type = 2 if did % 2 == 0 else 0  # RGB / grayscale
+        info = sniff_image(png_header(w, h, color_type))  # the real parser
+        assert info is not None
+        fmt, pw, ph, mode = info
+        return did, pw, ph, mode, fmt
 
-    return d.mapInPandas(
-        synth_and_decode, "doc_id long, width int, height int, mode string, fmt string"
+    return _per_document(
+        d, synth_and_decode, "doc_id long, width int, height int, mode string, fmt string"
     )
 
 
@@ -567,27 +309,24 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth_decode_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "width", "height", "n_pixels", "sum_pixels", "max_pixel"
-            )}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                flat = (did * 31 + np.arange(w * h, dtype=np.int64)) % 256
-                png = encode_png(flat.astype(np.uint8).reshape(h, w))
-                decoded = decode_image_pixels(png)  # real inflate+unfilter
-                assert decoded.shape == (h, w, 1)
-                out["doc_id"].append(did)
-                out["width"].append(decoded.shape[1])
-                out["height"].append(decoded.shape[0])
-                out["n_pixels"].append(int(decoded.size))
-                out["sum_pixels"].append(int(decoded.sum(dtype=np.int64)))
-                out["max_pixel"].append(int(decoded.max()))
-            yield pd.DataFrame(out)
+    def synth_decode_stats(did):
+        did = int(did)
+        w, h = 4 + did % 13, 3 + did % 7
+        flat = (did * 31 + np.arange(w * h, dtype=np.int64)) % 256
+        png = encode_png(flat.astype(np.uint8).reshape(h, w))
+        decoded = decode_image_pixels(png)  # real inflate+unfilter
+        assert decoded.shape == (h, w, 1)
+        return (
+            did,
+            decoded.shape[1],
+            decoded.shape[0],
+            int(decoded.size),
+            int(decoded.sum(dtype=np.int64)),
+            int(decoded.max()),
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_decode_stats,
         "doc_id long, width int, height int, n_pixels long, "
         "sum_pixels long, max_pixel long",
@@ -704,43 +443,37 @@ def multimodal_pixel_decode_formats(spark: SparkSession, sf_dir: str) -> DataFra
     step is replaced by stored payload bytes, the kernel unchanged."""
     import numpy as np
 
-    from watermill_kinesis_spark.functions.imaging import encode_bmp, encode_gif
-
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     _GRAY_PAL = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
 
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "fmt", "width", "height",
-                "n_pixels", "sum_pixels", "max_pixel",
-            )}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                gray = (
-                    (did * 31 + np.arange(w * h, dtype=np.int64)) % 256
-                ).astype(np.uint8).reshape(h, w)
-                fmt = ("png", "bmp", "gif")[did % 3]
-                if fmt == "png":
-                    payload = encode_png(gray)
-                elif fmt == "bmp":
-                    payload = encode_bmp(gray)
-                else:
-                    payload = encode_gif(gray, _GRAY_PAL)
-                decoded = decode_image_pixels(payload)  # sniff + dispatch
-                chan0 = decoded[:, :, 0].astype(np.int64)
-                assert chan0.shape == (h, w)
-                out["doc_id"].append(did)
-                out["fmt"].append(fmt)
-                out["width"].append(chan0.shape[1])
-                out["height"].append(chan0.shape[0])
-                out["n_pixels"].append(int(chan0.size))
-                out["sum_pixels"].append(int(chan0.sum()))
-                out["max_pixel"].append(int(chan0.max()))
-            yield pd.DataFrame(out)
+    def synth_decode(did):
+        did = int(did)
+        w, h = 4 + did % 13, 3 + did % 7
+        gray = (
+            (did * 31 + np.arange(w * h, dtype=np.int64)) % 256
+        ).astype(np.uint8).reshape(h, w)
+        fmt = ("png", "bmp", "gif")[did % 3]
+        if fmt == "png":
+            payload = encode_png(gray)
+        elif fmt == "bmp":
+            payload = encode_bmp(gray)
+        else:
+            payload = encode_gif(gray, _GRAY_PAL)
+        decoded = decode_image_pixels(payload)  # sniff + dispatch
+        chan0 = decoded[:, :, 0].astype(np.int64)
+        assert chan0.shape == (h, w)
+        return (
+            did,
+            fmt,
+            chan0.shape[1],
+            chan0.shape[0],
+            int(chan0.size),
+            int(chan0.sum()),
+            int(chan0.max()),
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_decode,
         "doc_id long, fmt string, width int, height int, "
         "n_pixels long, sum_pixels long, max_pixel long",
@@ -958,28 +691,20 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples", "sum_abs", "energy", "peak"
-            )}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 64 + did % 129
-                s = ((did * 7 + np.arange(n, dtype=np.int64) * 13) % 4096 - 2048)
-                payload = encode_wav(s.astype(np.int16), 8000 + (did % 3) * 4000)
-                rate, ch, dec = decode_wav(payload)  # the real chunk walker
-                assert ch == 1 and dec.shape == (n, 1)
-                v = dec[:, 0].astype(np.int64)
-                out["doc_id"].append(did)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(v))
-                out["sum_abs"].append(int(np.abs(v).sum()))
-                out["energy"].append(int((v * v).sum()))
-                out["peak"].append(int(v.max()))
-            yield pd.DataFrame(out)
+    def synth_decode(did):
+        did = int(did)
+        n = 64 + did % 129
+        s = ((did * 7 + np.arange(n, dtype=np.int64) * 13) % 4096 - 2048)
+        payload = encode_wav(s.astype(np.int16), 8000 + (did % 3) * 4000)
+        rate, ch, dec = decode_wav(payload)  # the real chunk walker
+        assert ch == 1 and dec.shape == (n, 1)
+        v = dec[:, 0].astype(np.int64)
+        return (
+            did, rate, len(v), int(np.abs(v).sum()), int((v * v).sum()), int(v.max())
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_decode,
         "doc_id long, sample_rate long, n_samples long, "
         "sum_abs long, energy long, peak long",
@@ -1013,26 +738,22 @@ def multimodal_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
-    def synth_probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "brand", "timescale", "duration", "n_tracks", "duration_ms"
-            )}
-            for did, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                did, n_chars = int(did), int(n_chars)
-                ts = 600 + (did % 5) * 200
-                dur = n_chars * 100
-                payload = encode_mp4(ts, dur, 1 + did % 3)
-                info = probe_mp4(payload)  # the real box walker
-                out["doc_id"].append(did)
-                out["brand"].append(info["brand"])
-                out["timescale"].append(info["timescale"])
-                out["duration"].append(info["duration"])
-                out["n_tracks"].append(info["n_tracks"])
-                out["duration_ms"].append(info["duration"] * 1000 // info["timescale"])
-            yield pd.DataFrame(out)
+    def synth_probe(did, n_chars):
+        did, n_chars = int(did), int(n_chars)
+        info = probe_mp4(  # the real box walker
+            encode_mp4(600 + (did % 5) * 200, n_chars * 100, 1 + did % 3)
+        )
+        return (
+            did,
+            info["brand"],
+            info["timescale"],
+            info["duration"],
+            info["n_tracks"],
+            info["duration"] * 1000 // info["timescale"],
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_probe,
         "doc_id long, brand string, timescale long, duration long, "
         "n_tracks long, duration_ms long",
@@ -1073,31 +794,28 @@ def multimodal_exif_orientation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def synth_walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "byte_order", "width", "height", "orientation"
-            )}
-            for did in pdf["doc_id"]:
-                did = int(did)
-                big = did % 2 == 1
-                payload = encode_tiff(
-                    {
-                        TAG_IMAGE_WIDTH: (4, 160 + (did % 11) * 16),
-                        TAG_IMAGE_LENGTH: (4, 120 + (did % 7) * 16),
-                        TAG_ORIENTATION: (3, 1 + did % 8),
-                    },
-                    big_endian=big,
-                )
-                tags = decode_tiff_tags(payload)  # the real IFD walker
-                out["doc_id"].append(did)
-                out["byte_order"].append("MM" if big else "II")
-                out["width"].append(tags[TAG_IMAGE_WIDTH])
-                out["height"].append(tags[TAG_IMAGE_LENGTH])
-                out["orientation"].append(tags[TAG_ORIENTATION])
-            yield pd.DataFrame(out)
+    def synth_walk(did):
+        did = int(did)
+        big = did % 2 == 1
+        payload = encode_tiff(
+            {
+                TAG_IMAGE_WIDTH: (4, 160 + (did % 11) * 16),
+                TAG_IMAGE_LENGTH: (4, 120 + (did % 7) * 16),
+                TAG_ORIENTATION: (3, 1 + did % 8),
+            },
+            big_endian=big,
+        )
+        tags = decode_tiff_tags(payload)  # the real IFD walker
+        return (
+            did,
+            "MM" if big else "II",
+            tags[TAG_IMAGE_WIDTH],
+            tags[TAG_IMAGE_LENGTH],
+            tags[TAG_ORIENTATION],
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_walk,
         "doc_id long, byte_order string, width long, height long, orientation long",
     )
@@ -1131,48 +849,27 @@ def multimodal_gif_animation_probe(spark: SparkSession, sf_dir: str) -> DataFram
     One Arrow pass, zero shuffle, linear at 100 TB."""
     import numpy as np
 
-    from watermill_kinesis_spark.functions.containers import (
-        encode_animated_gif,
-        probe_gif_animation,
-    )
-
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
 
-    def synth_probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "n_frames",
-                    "frame_delay_cs",
-                    "total_delay_cs",
-                    "duration_ms",
-                    "loops",
-                )
-            }
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = 1 + did % 4
-                delay = 4 + did % 6
-                frames = [
-                    np.full((8, 8), (did + f) % 4, dtype=np.uint8)
-                    for f in range(k)
-                ]
-                payload = encode_animated_gif(
-                    frames, pal, [delay] * k, loops=did % 3
-                )
-                info = probe_gif_animation(payload)  # the real block walker
-                out["doc_id"].append(did)
-                out["n_frames"].append(info["n_frames"])
-                out["frame_delay_cs"].append(delay)
-                out["total_delay_cs"].append(info["total_delay_cs"])
-                out["duration_ms"].append(info["total_delay_cs"] * 10)
-                out["loops"].append(info["loops"])
-            yield pd.DataFrame(out)
+    def synth_probe(did):
+        did = int(did)
+        k = 1 + did % 4
+        delay = 4 + did % 6
+        frames = [np.full((8, 8), (did + f) % 4, dtype=np.uint8) for f in range(k)]
+        payload = encode_animated_gif(frames, pal, [delay] * k, loops=did % 3)
+        info = probe_gif_animation(payload)  # the real block walker
+        return (
+            did,
+            info["n_frames"],
+            delay,
+            info["total_delay_cs"],
+            info["total_delay_cs"] * 10,
+            info["loops"],
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_probe,
         "doc_id long, n_frames long, frame_delay_cs long, "
         "total_delay_cs long, duration_ms long, loops long",
@@ -1202,33 +899,24 @@ def multimodal_png_text_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corrupt-skip contract) and extracting the metadata pairs —
     the ingest-integrity + sidecar-metadata pass of an image lake.
     One Arrow pass, zero shuffle."""
-    from watermill_kinesis_spark.functions.containers import (
-        encode_png_text,
-        probe_png_chunks,
-    )
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
 
-    def synth_walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_chunks", "text_meta")}
-            for did, src in zip(pdf["doc_id"], pdf["source"]):
-                did = int(did)
-                w, h = 1 + did % 16, 1 + did % 9
-                payload = encode_png_text(
-                    w, h, [("Title", f"doc-{did}"), ("Source", str(src))]
-                )
-                info = probe_png_chunks(payload)  # CRC-verified walk
-                out["doc_id"].append(did)
-                out["width"].append(info["width"])
-                out["height"].append(info["height"])
-                out["n_chunks"].append(info["n_chunks"])
-                out["text_meta"].append(
-                    ";".join(f"{k}={v}" for k, v in info["texts"])
-                )
-            yield pd.DataFrame(out)
+    def synth_walk(did, src):
+        did = int(did)
+        payload = encode_png_text(
+            1 + did % 16, 1 + did % 9, [("Title", f"doc-{did}"), ("Source", str(src))]
+        )
+        info = probe_png_chunks(payload)  # CRC-verified walk
+        return (
+            did,
+            info["width"],
+            info["height"],
+            info["n_chunks"],
+            ";".join(f"{k}={v}" for k, v in info["texts"]),
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_walk,
         "doc_id long, width long, height long, n_chunks long, text_meta string",
     )
@@ -1266,24 +954,22 @@ def multimodal_id3_tag_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
 
-    def synth_walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "title", "artist", "n_frames", "tag_bytes")}
-            for did, src in zip(pdf["doc_id"], pdf["source"]):
-                did, src = int(did), str(src)
-                payload = encode_id3v2(
-                    [("TIT2", f"track-{did}"), ("TPE1", src)]
-                )
-                info = probe_id3v2(payload)  # the real frame walker
-                frames = dict(info["frames"])
-                out["doc_id"].append(did)
-                out["title"].append(frames["TIT2"])
-                out["artist"].append(frames["TPE1"])
-                out["n_frames"].append(len(info["frames"]))
-                out["tag_bytes"].append(info["tag_bytes"])
-            yield pd.DataFrame(out)
+    def synth_walk(did, src):
+        did, src = int(did), str(src)
+        info = probe_id3v2(  # the real frame walker
+            encode_id3v2([("TIT2", f"track-{did}"), ("TPE1", src)])
+        )
+        frames = dict(info["frames"])
+        return (
+            did,
+            frames["TIT2"],
+            frames["TPE1"],
+            len(info["frames"]),
+            info["tag_bytes"],
+        )
 
-    return d.mapInPandas(
+    return _per_document(
+        d,
         synth_walk,
         "doc_id long, title string, artist string, n_frames long, tag_bytes long",
     )
@@ -1334,7 +1020,7 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the per-source byte totals still prove the write→list→read→
     slice path lossless against the original table (the text writer's
     one trailing newline per doc is subtracted). This layout is what
-    fixes the r11 100× failure class: one-file-per-doc listing put
+    keeps a 100× corpus listable: one-file-per-doc listing put
     500k FileStatus objects in the DRIVER's InMemoryFileIndex (OOM on
     a 1 GiB driver); containers bound driver metadata to
     ``n_docs / docs_per_container`` entries at ANY corpus size — the

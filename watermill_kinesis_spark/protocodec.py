@@ -441,7 +441,16 @@ def unmarshal_proto(
     simulator transport's latin1-mapped STRING (exact byte recovery
     via ``encode(data, 'ISO-8859-1')`` — the KPL-payload convention).
     Corrupt rows surface as ``uuid IS NULL``; ``drop_corrupt=True``
-    skips them (subscriber.go:54-59)."""
+    skips them (subscriber.go:54-59).
+
+    Protobuf records round-trip over the directory transport only.
+    The ``kinesis_aws`` source's ``_record_rows`` decodes record bytes
+    as UTF-8 with ``errors="replace"``, so a record holding a non-UTF-8
+    byte fails the task here with ``MALFORMED_CHARACTER_CODING``. A
+    prototype typing the wire ``data`` column as BINARY (cast at
+    ``codec._parse_envelope``) lost throughput on ``pubsub_stream`` by
+    an amount inside the benchmark bounds but unresolved, and was not
+    adopted (CHANGES.md)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType
 

@@ -26,8 +26,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Memo of logical table DataFrames, keyed by (applicationId, SESSION,
 # sf_dir, name). ``spark.read.parquet`` costs a driver round-trip (file
 # listing + footer schema read, ~70-100 ms) on EVERY call; a multi-table

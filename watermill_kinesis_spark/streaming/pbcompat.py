@@ -65,7 +65,7 @@ def ensure_protobuf_on_workers(spark) -> bool:
     sc = spark.sparkContext
     # dedup marker lives ON the context object (an id()-keyed set
     # could collide after a stopped context is garbage-collected and
-    # its address reused — r7 review)
+    # its address reused)
     if getattr(sc, "_wk_pb_shipped", False):
         return True
     if _zip_cache is None or not os.path.exists(_zip_cache):
@@ -89,14 +89,18 @@ def ensure_protobuf_on_workers(spark) -> bool:
 def _build_vendor_zip(src: str, version: str) -> str:
     """Zip the vendored ``google/protobuf`` tree as a regular package
     (explicit ``google/__init__.py`` — zipimport does not resolve the
-    SDK's implicit namespace package) with the lenient validator."""
+    SDK's implicit namespace package) with the lenient validator.
+    The zip's directory is removed when the driver interpreter exits:
+    workers import from it for as long as the session lives."""
+    import atexit
+    import shutil
     import tempfile
     import zipfile
 
     major = int(version.split(".")[0] or 0)
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="wk_pbvendor_"), "pbvendor.zip"
-    )
+    tmp = tempfile.mkdtemp(prefix="wk_pbvendor_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    out = os.path.join(tmp, "pbvendor.zip")
     lenient = (
         '"""Same-major-lenient protobuf gencode/runtime gate (engine-'
         'vendored): wire format is stable within a major version, so '
@@ -151,7 +155,7 @@ def ensure_protobuf() -> bool:
         # drop only protobuf stubs left by the failed import above —
         # an already-imported google namespace package recomputes its
         # path dynamically, and unrelated siblings (google.auth, ...)
-        # must keep their module identity (r7 review)
+        # must keep their module identity
         for mod in [
             m
             for m in sys.modules
