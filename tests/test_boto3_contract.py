@@ -223,7 +223,7 @@ def test_shard_drain_end_to_end_on_real_botocore_pipeline(monkeypatch, tmp_path)
         (part,) = r.partitions(start, r.latestOffset())
         batches = list(r.read(part))
         stub.assert_no_pending_responses()
-    assert [d for b in batches for d in b.column("data").to_pylist()] == ["r1", "r2"]
+    assert [d for b in batches for d in b.column("data").to_pylist()] == [b"r1", b"r2"]
     r._merge_fences()
     assert r._pos["shardId-000000000000"] == SHARD_END
 
@@ -388,7 +388,7 @@ def test_expired_iterator_refreshes_at_last_position(monkeypatch):
         (part,) = r.partitions()
         batches = list(r.read(part))
         stub.assert_no_pending_responses()
-    assert [d for b in batches for d in b.column("data").to_pylist()] == ["a", "b"]
+    assert [d for b in batches for d in b.column("data").to_pylist()] == [b"a", b"b"]
 
 
 def test_expired_iterator_double_expiry_propagates(monkeypatch):

@@ -43,7 +43,7 @@ def test_marshal_partition_key_extraction(spark):
     msgs = _messages(spark, [("u1", b"x", {"partitionKey": "pk9", "o": "y"})])
     row = codec.marshal(msgs).collect()[0]
     assert row.partition_key == "pk9"
-    assert '"watermill_message_uuid":"u1"' in row.data
+    assert b'"watermill_message_uuid":"u1"' in row.data
 
 
 def test_unmarshal_injects_system_metadata(spark):
@@ -90,14 +90,14 @@ def test_arrival_ts_rfc3339_is_utc_in_any_session_tz(spark):
 
 def test_corrupt_records_skipped_not_fatal(spark):
     rows = [
-        ('{"watermill_message_uuid":"ok1","data":"aGk=","headers":{}}', None, None, None, None),
-        ("not json at all", None, None, None, None),
+        (b'{"watermill_message_uuid":"ok1","data":"aGk=","headers":{}}', None, None, None, None),
+        (b"not json at all", None, None, None, None),
         # valid JSON but data fails base64 decode — the reference's
         # unmarshal errors on this too (marshaller.go:42-46) and
         # subscriber.go:54-59 skips it like any other poison record
-        ('{"watermill_message_uuid":"bad1","data":"!!!invalid-b64","headers":{}}', None, None, None, None),
+        (b'{"watermill_message_uuid":"bad1","data":"!!!invalid-b64","headers":{}}', None, None, None, None),
         # nil payload (data absent) is NOT corrupt: uuid survives, payload NULL
-        ('{"watermill_message_uuid":"ok2","headers":{}}', None, None, None, None),
+        (b'{"watermill_message_uuid":"ok2","headers":{}}', None, None, None, None),
     ]
     wire = spark.createDataFrame(rows, WIRE_RECORD_SCHEMA)
     out = codec.unmarshal(wire, drop_corrupt=True).orderBy("uuid").collect()
@@ -108,24 +108,24 @@ def test_corrupt_records_skipped_not_fatal(spark):
 
 def test_split_corrupt_dead_letter(spark):
     rows = [
-        ('{"watermill_message_uuid":"ok1","data":"aGk=","headers":{}}', None, None, None, None),
-        ("garbage", None, None, None, None),
-        ('{"watermill_message_uuid":"bad1","data":"%%%not-b64","headers":{}}', None, None, None, None),
+        (b'{"watermill_message_uuid":"ok1","data":"aGk=","headers":{}}', None, None, None, None),
+        (b"garbage", None, None, None, None),
+        (b'{"watermill_message_uuid":"bad1","data":"%%%not-b64","headers":{}}', None, None, None, None),
     ]
     wire = spark.createDataFrame(rows, WIRE_RECORD_SCHEMA)
     good, dead = codec.split_corrupt(wire)
     assert good.count() == 1
     assert dead.count() == 2
-    assert {r.data for r in dead.collect()} == {
-        "garbage",
-        '{"watermill_message_uuid":"bad1","data":"%%%not-b64","headers":{}}',
+    assert {bytes(r.data) for r in dead.collect()} == {
+        b"garbage",
+        b'{"watermill_message_uuid":"bad1","data":"%%%not-b64","headers":{}}',
     }
 
 
 def _envelope_rows(datas):
     """Wire rows ``u0, u1, ...`` whose envelope ``data`` fields are ``datas``."""
     return [
-        (json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}),)
+        (json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}).encode(),)
         + (None,) * 4
         for i, d in enumerate(datas)
     ]

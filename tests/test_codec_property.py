@@ -130,7 +130,7 @@ def _b64_candidates(draw):
 def test_corrupt_predicate_matches_grouped_regex_property(spark, datas):
     rows = [
         (
-            json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}),
+            json.dumps({"watermill_message_uuid": f"u{i}", "data": d, "headers": {}}).encode(),
             None, None, None, None,
         )
         for i, d in enumerate(datas)

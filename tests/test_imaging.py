@@ -12,6 +12,7 @@ from watermill_kinesis_spark.functions.imaging import (
     decode_gif,
     decode_image_pixels,
     decode_jpeg,
+    encode_animated_gif,
     encode_bmp,
     encode_gif,
     encode_jpeg,
@@ -84,6 +85,18 @@ def test_gif_roundtrip_full_palette():
     pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
     idx = rng.integers(0, 256, (31, 17), dtype=np.uint8)
     assert np.array_equal(decode_gif(encode_gif(idx, pal)), pal[idx])
+
+
+@pytest.mark.parametrize("n_colors", [257, 300, 512])
+def test_gif_palette_over_256_colors_raises(n_colors):
+    # the screen descriptor's 3-bit size field cannot declare more than
+    # 256 entries; a bigger palette used to encode an unreadable GIF
+    pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
+    idx = rng.integers(0, 256, (3, 4), dtype=np.uint8)
+    with pytest.raises(ValueError, match="256"):
+        encode_gif(idx, pal)
+    with pytest.raises(ValueError, match="256"):
+        encode_animated_gif([idx, idx], pal, [10, 10])
 
 
 def test_gif_sniff_and_dispatch():

@@ -74,7 +74,7 @@ def test_one_partition_per_shard_and_rows_flow(tmp_path):
         seqs = [int(row[2]) for row in part_rows]
         assert seqs == sorted(seqs)
         rows.extend(part_rows)
-    assert sorted(row[0] for row in rows) == [f"d{i}" for i in range(6)]
+    assert sorted(row[0] for row in rows) == [f"d{i}".encode() for i in range(6)]
 
 
 def test_fence_makes_task_retry_deterministic(tmp_path):
@@ -107,7 +107,7 @@ def test_positions_advance_between_batches_no_duplicates(tmp_path):
     r.commit(off2)
     client.put("shardId-000000000001", "fresh")
     rows3, off3, _ = _run_batch(r, off2)
-    assert [t[0] for t in rows3] == ["fresh"]
+    assert [t[0] for t in rows3] == [b"fresh"]
 
 
 def test_restart_replays_uncommitted_window_from_offset_log(tmp_path):
@@ -128,7 +128,7 @@ def test_restart_replays_uncommitted_window_from_offset_log(tmp_path):
     end2 = r2.latestOffset()
     parts = r2.partitions(off1, end2)  # start = restored offset log entry
     rows = [t for p in parts for t in _tuples(r2.read(p))]
-    assert [t[0] for t in rows] == ["post-restart"]
+    assert [t[0] for t in rows] == [b"post-restart"]
 
 
 def test_latest_pins_timestamp_no_backlog_replay(tmp_path):
@@ -143,7 +143,7 @@ def test_latest_pins_timestamp_no_backlog_replay(tmp_path):
     assert rows1 == []  # backlog skipped
     client.put("shardId-000000000000", "fresh")
     rows2, _, _ = _run_batch(r, off1)
-    assert [t[0] for t in rows2] == ["fresh"]
+    assert [t[0] for t in rows2] == [b"fresh"]
 
 
 def test_reshard_tombstone_and_pickup(tmp_path):
@@ -156,7 +156,7 @@ def test_reshard_tombstone_and_pickup(tmp_path):
     client.put("shardId-000000000000", "final-on-old")
     client.close_shard("shardId-000000000000")
     rows2, off2, _ = _run_batch(r, off1)
-    assert sorted(t[0] for t in rows2) == ["final-on-old", "from-new-shard"]
+    assert sorted(t[0] for t in rows2) == [b"final-on-old", b"from-new-shard"]
     rows3, off3, parts3 = _run_batch(r, off2)
     assert rows3 == []
     # closed shard drained → tombstoned out of future partitions
@@ -238,7 +238,7 @@ def test_batch_read_drains_stream(spark, tmp_path):
         .load()
     )
     rows = df.collect()
-    assert sorted(r.data for r in rows) == [f"d{i}" for i in range(10)]
+    assert sorted(r.data for r in rows) == [f"d{i}".encode() for i in range(10)]
     assert {r.shard_id for r in rows} == {
         f"shardId-{i:012d}" for i in range(3)
     }
@@ -268,7 +268,7 @@ def test_batch_read_shard_filter_prunes_partitions(spark, tmp_path):
         .where("shard_id = 'shardId-000000000001'")
     )
     rows = df.collect()
-    assert sorted(r.data for r in rows) == ["d1", "d4", "d7"]
+    assert sorted(r.data for r in rows) == [b"d1", b"d4", b"d7"]
     assert df.rdd.getNumPartitions() == 1  # two shards pruned at plan time
 
 
@@ -324,7 +324,7 @@ def test_live_multi_trigger_no_loss_no_dup(spark, tmp_path):
         q.stop()
     rows = [r.data for r in spark.table(name).collect()]
     assert sorted(rows) == sorted(
-        [f"pre-{i}" for i in range(4)] + ["mid-0", "mid-1", "late-0"]
+        [f"pre-{i}".encode() for i in range(4)] + [b"mid-0", b"mid-1", b"late-0"]
     ), "loss or duplication across triggers"
 
 
@@ -374,7 +374,7 @@ def test_reader_mode_switch_offsets_compatible(tmp_path):
     end = rp.latestOffset()
     parts = rp.partitions(logged, end)  # no "epoch" key in start
     got = [t[0] for p in parts for t in _tuples(rp.read(p))]
-    assert got == ["after-switch"]
+    assert got == [b"after-switch"]
 
 
 def test_vanished_shard_tombstones_other_errors_raise(tmp_path):
@@ -454,7 +454,7 @@ def test_kpl_container_deaggregates_on_executors(spark, tmp_path):
         .collect()
     )
     datas = sorted(r.data for r in rows)
-    assert datas == ["plain", "sub-a", "sub-b", "sub-c"]
+    assert datas == [b"plain", b"sub-a", b"sub-b", b"sub-c"]
     subseqs = sorted(r.sequence_number for r in rows if ":" in r.sequence_number)
     assert [s.split(":")[1] for s in subseqs] == ["0", "1", "2"]
 
@@ -468,9 +468,9 @@ def test_poll_budget_paces_batches(tmp_path):
         client.put("shardId-000000000000", f"d{i:02d}")
     off0 = r.initialOffset()
     rows1, off1, _ = _run_batch(r, off0)
-    assert [t[0] for t in rows1] == [f"d{i:02d}" for i in range(10)]
+    assert [t[0] for t in rows1] == [f"d{i:02d}".encode() for i in range(10)]
     rows2, off2, _ = _run_batch(r, off1)
-    assert [t[0] for t in rows2] == [f"d{i:02d}" for i in range(10, 14)]
+    assert [t[0] for t in rows2] == [f"d{i:02d}".encode() for i in range(10, 14)]
     rows3, _, _ = _run_batch(r, off2)
     assert rows3 == []
 
@@ -513,7 +513,7 @@ def test_batch_write_then_read_roundtrip(spark, tmp_path):
         .load()
         .collect()
     )
-    assert sorted(r.data for r in back) == sorted(f"env-{i}" for i in range(40))
+    assert sorted(r.data for r in back) == sorted(f"env-{i}".encode() for i in range(40))
     # per-key shard affinity (ordered delivery per key, reference
     # marshaller.go:65-69 routing contract)
     by_key = {}
@@ -548,7 +548,7 @@ def test_stream_write_quadrant(spark, tmp_path):
 
     topic = str(tmp_path / "topic")
     DirectoryPublisher(topic, n_shards=2).put_records(
-        [PutRecordsEntry(f"m-{i}", f"k{i % 2}") for i in range(12)]
+        [PutRecordsEntry(f"m-{i}".encode(), f"k{i % 2}") for i in range(12)]
     )
 
     stream = read_topic(spark.readStream, topic)
@@ -578,7 +578,7 @@ def test_stream_write_quadrant(spark, tmp_path):
         .load()
         .collect()
     )
-    assert sorted(r.data for r in landed) == sorted(f"m-{i}" for i in range(12))
+    assert sorted(r.data for r in landed) == sorted(f"m-{i}".encode() for i in range(12))
 
 
 def test_fence_roundtrip_through_file_uri(tmp_path):
@@ -591,14 +591,14 @@ def test_fence_roundtrip_through_file_uri(tmp_path):
     _fill(client, 6)
     start = r.initialOffset()
     rows1, end1, _ = _run_batch(r, start)
-    assert sorted(row[0] for row in rows1) == [f"d{i}" for i in range(6)]
+    assert sorted(row[0] for row in rows1) == [f"d{i}".encode() for i in range(6)]
     r.commit(end1)
     # fences visible through the plain-path view of the same dir
     plain = str(tmp_path / "pos-uri" / "s")
     assert [f for f in os.listdir(plain) if f.endswith(".json")]
     client.put("shardId-000000000000", "d6", partition_key="k0")
     rows2, end2, _ = _run_batch(r, end1)
-    assert [row[0] for row in rows2] == ["d6"]  # no replay of batch 1
+    assert [row[0] for row in rows2] == [b"d6"]  # no replay of batch 1
 
 
 def test_fencestore_normalizes_hadoop_scheme_aliases():
@@ -684,7 +684,7 @@ def test_split_defers_children_until_parent_drained(tmp_path):
     client.put("shardId-000000000000", "p0", partition_key="k")
     off0 = r.initialOffset()
     rows1, off1, _ = _run_batch(r, off0)
-    assert [t[0] for t in rows1] == ["p0"]
+    assert [t[0] for t in rows1] == [b"p0"]
     # split: parent gets its final record, then closes; children appear
     client.put("shardId-000000000000", "p-final", partition_key="k")
     client.split_shard(
@@ -693,19 +693,19 @@ def test_split_defers_children_until_parent_drained(tmp_path):
     client.put("shardId-000000000002", "c0", partition_key="k")
     # batch 2: ONLY the parent's tail — children gated on SHARD_END
     rows2, off2, parts2 = _run_batch(r, off1)
-    assert [t[0] for t in rows2] == ["p-final"]
+    assert [t[0] for t in rows2] == [b"p-final"]
     assert {p.shard_id for p in parts2} == {"shardId-000000000000"}
     assert off2["shards"].get("shardId-000000000002") is None or (
         "shardId-000000000002" not in off2["shards"]
     )
     # batch 3: parent fence reported SHARD_END → children admitted
     rows3, off3, parts3 = _run_batch(r, off2)
-    assert [t[0] for t in rows3] == ["c0"]
+    assert [t[0] for t in rows3] == [b"c0"]
     assert "shardId-000000000000" not in {p.shard_id for p in parts3}
     assert off3["shards"]["shardId-000000000000"] == SHARD_END
     # no batch ever interleaved child records before the parent's tail
     all_rows = [t[0] for t in rows1 + rows2 + rows3]
-    assert all_rows.index("c0") > all_rows.index("p-final")
+    assert all_rows.index(b"c0") > all_rows.index(b"p-final")
 
 
 def test_merge_child_waits_for_adjacent_parent_unit():
@@ -739,7 +739,7 @@ def test_merge_ordering_staggered_parents(tmp_path):
         client.put("shardId-000000000001", f"b{i}", partition_key="kb")
     off0 = r.initialOffset()
     rows1, off1, _ = _run_batch(r, off0)  # a0 + b0..b4
-    assert sorted(t[0] for t in rows1) == sorted(["a0"] + [f"b{i}" for i in range(5)])
+    assert sorted(t[0] for t in rows1) == sorted([b"a0"] + [f"b{i}".encode() for i in range(5)])
     client.merge_shards(
         "shardId-000000000000", "shardId-000000000001", "shardId-000000000004"
     )
@@ -748,20 +748,20 @@ def test_merge_ordering_staggered_parents(tmp_path):
     # still has b10 pending (fences surface in the NEXT planning pass)
     rows2, off2, parts2 = _run_batch(r, off1)
     assert "shardId-000000000004" not in {p.shard_id for p in parts2}
-    assert sorted(t[0] for t in rows2) == [f"b{i}" for i in range(5, 10)]
+    assert sorted(t[0] for t in rows2) == [f"b{i}".encode() for i in range(5, 10)]
     # batch 3 planning merges batch-2 fences: A=SHARD_END, B mid-drain
     # → the child STILL gated (primary-only gating would admit it HERE)
     rows3, off3, parts3 = _run_batch(r, off2)
     assert off3["shards"]["shardId-000000000000"] == SHARD_END
     assert off3["shards"]["shardId-000000000001"] != SHARD_END
     assert "shardId-000000000004" not in {p.shard_id for p in parts3}
-    assert [t[0] for t in rows3] == ["b10"]
+    assert [t[0] for t in rows3] == [b"b10"]
     # batch 4: both parents fenced SHARD_END → child admitted
     rows4, off4, parts4 = _run_batch(r, off3)
     assert off4["shards"]["shardId-000000000001"] == SHARD_END
-    assert [t[0] for t in rows4] == ["c0"]
+    assert [t[0] for t in rows4] == [b"c0"]
     all_rows = [t[0] for t in rows1 + rows2 + rows3 + rows4]
-    assert all_rows.index("c0") > all_rows.index("b10")
+    assert all_rows.index(b"c0") > all_rows.index(b"b10")
 
 
 def test_late_child_pickup_enters_at_pinned_position(tmp_path):

@@ -64,7 +64,7 @@ def test_trim_horizon_reads_all_then_drains(reader_on):
     assert len(rows) == 6
     # rows carry decoded data + shard + sequence + key + arrival slot
     datas = sorted(row[0] for row in rows)
-    assert datas == [f"d{i}" for i in range(6)]
+    assert datas == [f"d{i}".encode() for i in range(6)]
     assert all(row[3].startswith("shardId-") for row in rows)
 
     rows2, end2 = _batch(r, end)
@@ -74,7 +74,7 @@ def test_trim_horizon_reads_all_then_drains(reader_on):
 
     c.put("shardId-000000000000", "d6", partition_key="k0")
     rows3, _ = _batch(r, end2)
-    assert [row[0] for row in rows3] == ["d6"]
+    assert [row[0] for row in rows3] == [b"d6"]
 
 
 def test_latest_skips_backlog(reader_on):
@@ -85,7 +85,7 @@ def test_latest_skips_backlog(reader_on):
     assert rows == []  # backlog skipped
     c.put("shardId-000000000001", "fresh")
     rows2, _ = _batch(r, end)
-    assert [row[0] for row in rows2] == ["fresh"]
+    assert [row[0] for row in rows2] == [b"fresh"]
 
 
 def test_reshard_new_shard_picked_up_and_closed_shard_tombstoned(reader_on):
@@ -102,7 +102,7 @@ def test_reshard_new_shard_picked_up_and_closed_shard_tombstoned(reader_on):
     c.close_shard("shardId-000000000000")
 
     rows2, off2 = _batch(r, off)
-    assert sorted(row[0] for row in rows2) == ["final-on-old", "from-new-shard"]
+    assert sorted(row[0] for row in rows2) == [b"final-on-old", b"from-new-shard"]
 
     rows3, off3 = _batch(r, off2)
     assert rows3 == []
@@ -251,10 +251,10 @@ def test_kpl_deaggregation_through_source(reader_on):
     (part,) = r.partitions(start, end)
     rows = _tuples(r.read(part))
     datas = [row[0] for row in rows]
-    assert datas[:3] == ["sub-a", "sub-b", "sub-c"]
+    assert datas[:3] == [b"sub-a", b"sub-b", b"sub-c"]
     assert [row[2] for row in rows[:3]] == [f"{seq}:{i}" for i in range(3)]
     assert [row[1] for row in rows[:3]] == ["k1", "k2", "k1"]
-    assert "plain-record" in datas
+    assert b"plain-record" in datas
     assert len(rows) == 5  # 3 subs + plain + corrupt-container fallback row
     # positions track the CONTAINER sequence, so a retried task
     # replaying to the fence reproduces the subs
@@ -273,7 +273,7 @@ def test_kpl_pack_publish_consume_full_cycle():
         put_chunked,
     )
 
-    entries = [PutRecordsEntry(f"env-{i}", f"k{i % 3}") for i in range(30)]
+    entries = [PutRecordsEntry(f"env-{i}".encode(), f"k{i % 3}") for i in range(30)]
     packed = kpl.pack_entries(entries, max_per_container=4)
     # 3 keys × ceil(10/4)=3 containers each → 9 service records for 30
     assert len(packed) == 9
@@ -401,4 +401,4 @@ def test_throttled_shard_iterator_call_retries_not_fails(reader_on, monkeypatch)
     r = reader_on(c)
     rows, _ = _batch(r, r.initialOffset())
     assert c.throttled == 1
-    assert sorted(row[0] for row in rows) == [f"d{i}" for i in range(6)]
+    assert sorted(row[0] for row in rows) == [f"d{i}".encode() for i in range(6)]

@@ -15,13 +15,15 @@ digests, so the pin runs in the default suite (no Spark needed).
 from __future__ import annotations
 
 import importlib.util
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 
 _spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
+    "check_oracle",
+    Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py",
 )
 co = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(co)

@@ -124,7 +124,7 @@ def test_kinesis_publisher_chunking_and_partial_failure_retry(spark):
 
     client = _StubKinesisClient(fail_first=7)
     pub = KinesisPublisher("my-stream", client=client)
-    entries = [PutRecordsEntry(f"d{i}", f"k{i % 3}" if i % 5 else None) for i in range(1203)]
+    entries = [PutRecordsEntry(f"d{i}".encode(), f"k{i % 3}" if i % 5 else None) for i in range(1203)]
     n = put_chunked(pub, entries)
     assert n == 1203
     # 3 chunks + 1 retry call: the 7 throttled records (keys k0, k1, k2
@@ -162,7 +162,7 @@ def _last_copy_order(landed) -> dict:
     last = {}
     for pos, r in enumerate(landed):
         key = r["PartitionKey"] if isinstance(r, dict) else (r.partition_key or "0")
-        data = r["Data"].decode("utf-8") if isinstance(r, dict) else r.data
+        data = r["Data"] if isinstance(r, dict) else r.data
         last[(key, data)] = pos
     out: dict = {}
     for (key, data), _ in sorted(last.items(), key=lambda kv: kv[1]):
@@ -382,7 +382,7 @@ def test_directory_put_fails_halfway_leaves_no_visible_file(tmp_path, monkeypatc
     topic = tmp_path / "topic"
     with pytest.raises(OSError, match="disk full"):
         DirectoryPublisher(str(topic), n_shards=2).put_records(
-            [PutRecordsEntry(f"d{i}", f"k{i}") for i in range(10)]
+            [PutRecordsEntry(f"d{i}".encode(), f"k{i}") for i in range(10)]
         )
     assert list(topic.glob("*.json")) == []
     assert os.listdir(topic) == []  # the partial temp file is gone too
@@ -448,7 +448,7 @@ def test_publish_batch_through_directory_publisher(spark, tmp_path):
     msgs = _messages(spark, 30)
     publish_batch(msgs, lambda: DirectoryPublisher(topic, n_shards=2))
     back = codec.unmarshal(
-        spark.read.json(topic), drop_corrupt=True
+        read_topic(spark.read, topic), drop_corrupt=True
     )
     rows = back.collect()
     assert len(rows) == 30
@@ -467,7 +467,7 @@ def test_directory_publisher_routing_is_deterministic(tmp_path):
     topic = str(tmp_path / "det_topic")
     pub = DirectoryPublisher(topic, n_shards=4)
     keys = [f"key-{i}" for i in range(20)]
-    pub.put_records([PutRecordsEntry('{"x":1}', k) for k in keys])
+    pub.put_records([PutRecordsEntry(b'{"x":1}', k) for k in keys])
     routed = {}
     for fname in os.listdir(topic):
         shard = int(fname.split("-")[1])
@@ -989,23 +989,21 @@ def test_state_ttl_expires_idle_keys(spark, sf_dir, tmp_path):
 
 def test_sim_publisher_roundtrips_bytes_payloads(spark, tmp_path):
     """KPL-packed (bytes) entries must survive the directory transport:
-    base64 on the JSON line, latin1-mapped in the string column, exact
-    bytes via encode(data, 'ISO-8859-1') — the same convention through
-    the streaming subscribe and the builder's batch snapshot."""
+    base64 on the JSON line, the exact bytes in the BINARY ``data``
+    column — through the streaming subscribe and the builder's batch
+    snapshot."""
     root = str(tmp_path / "endpoint")
     topic = os.path.join(root, "topic")
     payload = bytes(range(256)) * 2  # every byte value, not UTF-8 safe
     DirectoryPublisher(topic, n_shards=2).put_records(
         [
             PutRecordsEntry(payload, "pk-bytes"),
-            PutRecordsEntry('{"plain":"json"}', "pk-str"),
+            PutRecordsEntry(b'{"plain":"json"}', "pk-str"),
         ]
     )
 
     def raw_by_key(wire):
-        return wire.select(
-            "partition_key", F.encode("data", "ISO-8859-1").alias("raw")
-        )
+        return wire.select("partition_key", F.col("data").alias("raw"))
 
     sub = (
         SubscriberBuilder()

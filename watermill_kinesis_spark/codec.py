@@ -116,15 +116,16 @@ def marshal(
     payload_col: str = "payload",
     metadata_col: str = "metadata",
 ) -> DataFrame:
-    """Messages → wire entries ``(data, partition_key)``.
+    """Messages → wire entries ``(data binary, partition_key)``: the
+    UTF-8 bytes of the JSON envelope.
 
     Spark analogue of the reference's JSONMarshaller
     (marshaller.go:52-71): one PutRecords request entry per row.
     """
     return df.select(
-        envelope_json(
-            F.col(uuid_col), F.col(payload_col), F.col(metadata_col)
-        ).alias("data"),
+        envelope_json(F.col(uuid_col), F.col(payload_col), F.col(metadata_col))
+        .cast("binary")
+        .alias("data"),
         F.col(metadata_col).getItem(META_PARTITION_KEY).alias("partition_key"),
     )
 
@@ -135,8 +136,10 @@ def _parse_envelope(df: DataFrame, data_col: str) -> DataFrame:
     barrier: predicate pushdown substitutes a projected ``from_json``
     into every reference to it, so a plain projection parsed each
     envelope once per field the corrupt filter reads, and once more for
-    the output. Malformed JSON stays a row with a NULL struct."""
-    env = F.from_json(F.col(data_col), ENVELOPE_SCHEMA)
+    the output. Malformed JSON stays a row with a NULL struct. The wire
+    bytes are read as UTF-8 text here, the one place the JSON codec
+    does so; on a text column (a hand-built wire) the cast is a no-op."""
+    env = F.from_json(F.col(data_col).cast("string"), ENVELOPE_SCHEMA)
     return df.select("*", F.explode(F.array(env)).alias("_env"))
 
 

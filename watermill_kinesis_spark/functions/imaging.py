@@ -423,6 +423,9 @@ def _gif_screen_header(w: int, h: int, palette) -> tuple[bytes, int]:
     LZW minimum code size)."""
     pal = np.asarray(palette, dtype=np.uint8)
     n = len(pal)
+    if n > 256:
+        # the descriptor's 3-bit size field tops out at 2**8 entries
+        raise ValueError(f"GIF palette of {n} colors exceeds 256")
     size_field = max(1, (n - 1).bit_length() - 1) if n > 2 else 0
     table_n = 2 << size_field
     if n > table_n:

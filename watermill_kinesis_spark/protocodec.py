@@ -437,22 +437,10 @@ def unmarshal_proto(
     protobuf counterpart of ``codec.unmarshal``, sharing its
     system-metadata merge (``codec.merge_system_metadata``) so shard
     id / arrival time / partition key enrichment cannot drift between
-    wire formats. Accepts the data column as BINARY or as the
-    simulator transport's latin1-mapped STRING (exact byte recovery
-    via ``encode(data, 'ISO-8859-1')`` — the KPL-payload convention).
-    Corrupt rows surface as ``uuid IS NULL``; ``drop_corrupt=True``
-    skips them (subscriber.go:54-59).
-
-    Protobuf records round-trip over the directory transport only.
-    The ``kinesis_aws`` source's ``_record_rows`` decodes record bytes
-    as UTF-8 with ``errors="replace"``, so a record holding a non-UTF-8
-    byte fails the task here with ``MALFORMED_CHARACTER_CODING``. A
-    prototype typing the wire ``data`` column as BINARY (cast at
-    ``codec._parse_envelope``) lost throughput on ``pubsub_stream`` by
-    an amount inside the benchmark bounds but unresolved, and was not
-    adopted (CHANGES.md)."""
+    wire formats. The data column is the BINARY wire bytes, as both
+    transports read them. Corrupt rows surface as ``uuid IS NULL``;
+    ``drop_corrupt=True`` skips them (subscriber.go:54-59)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType
 
     from watermill_kinesis_spark import codec
     from watermill_kinesis_spark.streaming.pbcompat import (
@@ -461,11 +449,7 @@ def unmarshal_proto(
 
     if not ensure_protobuf_on_workers(df.sparkSession):  # pragma: no cover
         raise ImportError("no protobuf runtime available for workers")
-    dec = _decode_udf()
-    raw = F.col(data_col)
-    if not isinstance(df.schema[data_col].dataType, BinaryType):
-        raw = F.encode(raw, "ISO-8859-1")
-    parsed = df.withColumn("_env", dec(raw))
+    parsed = df.withColumn("_env", _decode_udf()(F.col(data_col)))
     headers = F.coalesce(
         F.col("_env.headers"), F.create_map().cast("map<string,string>")
     )

@@ -54,7 +54,9 @@ ENVELOPE_SCHEMA = T.StructType(
 #: shard id + approximate arrival timestamp).
 WIRE_RECORD_SCHEMA = T.StructType(
     [
-        T.StructField("data", T.StringType(), True),  # JSON envelope text
+        # the record's bytes as the service holds them; only a codec
+        # (codec.py, protocodec.py) knows what they mean
+        T.StructField("data", T.BinaryType(), True),
         T.StructField("partition_key", T.StringType(), True),
         T.StructField("sequence_number", T.StringType(), True),
         T.StructField("shard_id", T.StringType(), True),

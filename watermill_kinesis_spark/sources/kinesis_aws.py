@@ -32,8 +32,11 @@ Spark's own machinery instead of the KCL's:
   (reference subscriber.go:60, marshaller.go:39-40).
 
 Rows come out in ``WIRE_RECORD_SCHEMA`` — identical to the directory
-transport's ``streaming.source.read_topic`` — so everything downstream (codec, corrupt-skip, semantics, sinks) is
-transport-agnostic; ``codec.unmarshal`` turns them into messages.
+transport's ``streaming.source.read_topic`` — so everything downstream
+(codec, corrupt-skip, semantics, sinks) is transport-agnostic;
+``codec.unmarshal`` turns them into messages. Record bytes pass
+through untouched both ways: ``data`` is the service's ``Data`` read
+and written as BINARY, and only the codecs read it as text.
 
 Streaming reads plan one ``InputPartition`` per shard and run every
 ``GetRecords`` call ON AN EXECUTOR. The driver does control-plane work
@@ -194,7 +197,7 @@ ARROW_BATCH_ROWS = 65536
 
 
 def _rows_to_arrow_batches(rows: list[tuple]):
-    """Pack decoded wire rows into ``pyarrow.RecordBatch``es (VERDICT
+    """Pack wire rows into ``pyarrow.RecordBatch``es (VERDICT
     r7 task 5): Spark 4's Python data source yields Arrow batches from
     ``read()`` directly, skipping the per-tuple, per-value bridge the
     worker otherwise runs (``records_to_arrow_batches``'s row loop —
@@ -232,7 +235,7 @@ def _rows_to_arrow_batches(rows: list[tuple]):
         ]
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(cols[0], pa.string()),
+                pa.array(cols[0], pa.binary()),
                 pa.array(cols[1], pa.string()),
                 pa.array(cols[2], pa.string()),
                 pa.array(cols[3], pa.string()),
@@ -249,9 +252,10 @@ def _record_rows(rec: dict, shard_id: str) -> list[tuple]:
     awslabs/kinesis-aggregation (reference go.mod:27); sub-records get
     ``<seq>:<i>`` sub-sequence numbers, KCL-style. A corrupt container
     falls through as a single undecodable row, which the downstream
-    corrupt-skip drops (reference subscriber.go:54-59)."""
-    data = rec["Data"]
-    raw = bytes(data) if isinstance(data, (bytes, bytearray)) else str(data).encode()
+    corrupt-skip drops (reference subscriber.go:54-59). Record and
+    sub-record payloads stay the service's bytes; only a codec reads
+    them."""
+    raw = rec["Data"]
     seq = rec.get("SequenceNumber")
     ts = rec.get("ApproximateArrivalTimestamp")
     if kpl.is_aggregated(raw):
@@ -262,7 +266,7 @@ def _record_rows(rec: dict, shard_id: str) -> list[tuple]:
         if subs is not None:
             return [
                 (
-                    payload.decode("utf-8", errors="replace"),
+                    payload,
                     key,
                     f"{seq}:{i}",
                     shard_id,
@@ -272,7 +276,7 @@ def _record_rows(rec: dict, shard_id: str) -> list[tuple]:
             ]
     return [
         (
-            raw.decode("utf-8", errors="replace"),
+            raw,
             rec.get("PartitionKey"),
             seq,
             shard_id,
@@ -820,13 +824,11 @@ class KinesisAwsWriter(DataSourceWriter):
         # imported here: runs on the executor
         from watermill_kinesis_spark.streaming.sink import (
             KinesisPublisher,
-            PutRecordsEntry,
             put_chunked,
+            wire_entries,
         )
 
-        entries = [
-            PutRecordsEntry(row.data, row.partition_key) for row in iterator
-        ]
+        entries = wire_entries(iterator)
         n = 0
         if entries:
             pub = KinesisPublisher(

@@ -189,9 +189,9 @@ def pack_entries(entries, max_per_container: int = 100):
     records would aggregate past the service's 1 MiB per-record limit
     and the whole PutRecords call would ValidationException-fail
     forever (a poison batch Spark would retry endlessly; r6 review).
-    Returns ``PutRecordsEntry``-shaped objects with *bytes* data —
-    pass to ``put_chunked`` with the ``KinesisPublisher`` transport,
-    which sends bytes as-is. This is how a producer beats the 1,000
+    Takes and returns ``PutRecordsEntry``s, whose data is bytes — pass
+    the result to ``put_chunked`` with the ``KinesisPublisher``
+    transport. This is how a producer beats the 1,000
     records/s/shard service limit: N user records cost one service
     record. Consumers (the engine's ``kinesis_aws`` source, or any
     KCL app) unpack transparently."""
@@ -200,8 +200,7 @@ def pack_entries(entries, max_per_container: int = 100):
     by_key: dict[str, list] = {}
     for e in entries:
         key = e.partition_key or "0"
-        data = e.data if isinstance(e.data, bytes) else e.data.encode("utf-8")
-        by_key.setdefault(key, []).append((key, data))
+        by_key.setdefault(key, []).append((key, e.data))
     packed = []
     for key, recs in by_key.items():
         group: list = []

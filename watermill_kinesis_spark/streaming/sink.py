@@ -20,13 +20,18 @@ loop: it puts each Spark write task's rows through :func:`put_chunked`
 as the task receives them, without a key repartition. The service
 client is built per partition on the executor, never serialized from
 the driver.
+
+Record data is bytes from end to end: :func:`wire_entries`, shared by
+both callers, is the one place a text ``data`` becomes bytes, and every
+publisher here stores or sends the bytes as it gets them.
 """
 
 from __future__ import annotations
 
+import base64
 import os
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -36,15 +41,27 @@ from watermill_kinesis_spark.schema import MAX_RECORDS_PER_PUT
 
 class PutRecordsEntry:
     """One wire record: (data, partition_key) — the shape of a Kinesis
-    PutRecordsRequestEntry (reference marshaller.go:61-70)."""
+    PutRecordsRequestEntry (reference marshaller.go:61-70). ``data`` is
+    the record's bytes, whatever codec made them."""
 
     __slots__ = ("data", "partition_key")
 
-    def __init__(self, data: str | bytes, partition_key: str | None):
-        # str for the JSON envelope; bytes for pre-packed payloads
-        # (KPL aggregate containers, custom binary codecs)
+    def __init__(self, data: bytes, partition_key: str | None):
         self.data = data
         self.partition_key = partition_key
+
+
+def wire_entries(rows: Iterable) -> list[PutRecordsEntry]:
+    """Wire rows ``(data, partition_key)`` → put entries. A text
+    ``data`` (a hand-built wire) becomes its UTF-8 bytes here, once, as
+    Spark's Kafka sink takes a string or binary ``value``."""
+    return [
+        PutRecordsEntry(
+            r.data.encode("utf-8") if isinstance(r.data, str) else r.data,
+            r.partition_key,
+        )
+        for r in rows
+    ]
 
 
 class PutRecordsResult:
@@ -60,7 +77,9 @@ class DirectoryPublisher:
     of the directory transport: each put lands one JSON-lines file per
     touched shard in the topic directory (read back by
     ``source.read_topic``). Used by tests and the local dev loop, same
-    role as the reference's Localstack harness.
+    role as the reference's Localstack harness. A line carries the
+    record bytes as base64 text, the form Spark's JSON source reads back
+    into a BINARY column.
 
     Each file becomes visible whole: it is written under a dot-prefixed
     temp name (Spark's file source skips hidden files) and renamed into
@@ -79,22 +98,6 @@ class DirectoryPublisher:
         os.makedirs(self.topic_dir, exist_ok=True)
         by_shard: dict[int, list[str]] = {}
         for seq, e in enumerate(entries):
-            # bytes payloads (KPL aggregate containers, binary codecs)
-            # round-trip through the JSON-lines transport as base64 +
-            # a marker field; source.read_topic decodes them back into
-            # the string `data` column latin1-mapped (one codepoint per
-            # byte — recover exact bytes with encode(data,
-            # 'ISO-8859-1')). json.dumps on raw bytes would otherwise
-            # TypeError and crash the simulator.
-            if isinstance(e.data, (bytes, bytearray)):
-                import base64 as _b64
-
-                data_repr: dict = {
-                    "data": _b64.b64encode(bytes(e.data)).decode("ascii"),
-                    "data_encoding": "base64",
-                }
-            else:
-                data_repr = {"data": e.data}
             # deterministic hash: Python's builtin hash() is
             # PYTHONHASHSEED-randomized per process, which would route the
             # same key to different shards across executors/runs and break
@@ -108,7 +111,7 @@ class DirectoryPublisher:
             by_shard.setdefault(shard, []).append(
                 json.dumps(
                     {
-                        **data_repr,
+                        "data": base64.b64encode(e.data).decode("ascii"),
                         "partition_key": e.partition_key,
                         "sequence_number": str(seq),
                         "shard_id": f"shard-{shard}",
@@ -163,12 +166,7 @@ class KinesisPublisher:
     def put_records(self, entries: list[PutRecordsEntry]) -> PutRecordsResult:
         records = [
             {
-                # bytes OR bytearray: PySpark materializes BinaryType
-                # columns (e.g. the protobuf marshaller's wire) as
-                # bytearray in foreachPartition rows
-                "Data": bytes(e.data)
-                if isinstance(e.data, (bytes, bytearray))
-                else e.data.encode("utf-8"),
+                "Data": e.data,
                 # Kinesis requires a non-empty partition key; keyless
                 # messages share one key = one shard, matching the
                 # simulator's shard-0 routing for None keys
@@ -280,7 +278,7 @@ def put_wire(
         wire = wire.repartition(F.col("partition_key"))
 
     def run(rows: Iterator) -> None:
-        entries = [PutRecordsEntry(r.data, r.partition_key) for r in rows]
+        entries = wire_entries(rows)
         if entries:
             put_chunked(publisher_factory(), entries)
 

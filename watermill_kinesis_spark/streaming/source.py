@@ -17,21 +17,17 @@ deployable transport is ``format("kinesis_aws")``, and
 ``api.Subscriber.subscribe`` is the one subscribe entry point over
 both. Everything downstream (codec, semantics, sinks) is
 source-agnostic because it only sees the WIRE_RECORD_SCHEMA columns.
+A record's bytes come back untouched in the BINARY ``data`` column on
+either transport; only the codecs read them as text.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame
 
 from watermill_kinesis_spark.schema import WIRE_RECORD_SCHEMA
-
-#: one JSON line as DirectoryPublisher writes it: the wire record plus
-#: the marker it sets on a base64-carried bytes payload
-_FILE_SCHEMA = T.StructType(
-    [*WIRE_RECORD_SCHEMA.fields, T.StructField("data_encoding", T.StringType())]
-)
 
 
 def read_topic(reader, topic_dir: str) -> DataFrame:
@@ -39,19 +35,8 @@ def read_topic(reader, topic_dir: str) -> DataFrame:
     (``spark.read`` or ``spark.readStream``), in WIRE_RECORD_SCHEMA.
 
     A topic nobody has published to reads as 0 rows (the directory is
-    created, as a publisher would). A bytes payload (KPL containers,
-    binary codecs) comes back latin1-mapped, one codepoint per byte:
-    recover the exact bytes with ``encode(data, 'ISO-8859-1')``."""
+    created, as a publisher would). Each line carries its record bytes
+    as base64 text, which Spark's JSON source decodes into the BINARY
+    ``data`` column by itself."""
     os.makedirs(topic_dir, exist_ok=True)
-    raw = reader.schema(_FILE_SCHEMA).json(topic_dir)
-    data = F.when(
-        F.col("data_encoding") == "base64",
-        F.decode(F.unbase64("data"), "ISO-8859-1"),
-    ).otherwise(F.col("data"))
-    return raw.select(
-        *(
-            data.alias("data") if f.name == "data" else F.col(f.name)
-            for f in WIRE_RECORD_SCHEMA.fields
-        )
-    )
-
+    return reader.schema(WIRE_RECORD_SCHEMA).json(topic_dir)

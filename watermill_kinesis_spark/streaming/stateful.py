@@ -22,7 +22,7 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
@@ -49,22 +49,34 @@ OUTPUT_SCHEMA = StructType(
 )
 
 
-def _account(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold this batch's rows for one key into persistent state and emit
-    the updated totals."""
+def _fold(pdfs: Iterable[pd.DataFrame], prior: tuple) -> tuple[int, int, int]:
+    """One key's batch folded onto its prior ``(n_messages, n_bytes)``
+    (``(0, 0)`` for a new key) → ``(n_messages, n_bytes, batch_messages)``."""
     batch_n = 0
     batch_bytes = 0
     for pdf in pdfs:
         batch_n += len(pdf)
         batch_bytes += int(pdf["n_bytes"].sum())
-    if state.exists:
-        (n_messages, n_bytes) = state.get
-    else:
-        n_messages, n_bytes = 0, 0
-    n_messages += batch_n
-    n_bytes += batch_bytes
+    return int(prior[0]) + batch_n, int(prior[1]) + batch_bytes, batch_n
+
+
+def _keyed(messages: DataFrame) -> GroupedData:
+    """``(partition_key, n_bytes)`` per message, grouped by key: the
+    input every accounting face folds."""
+    from pyspark.sql import functions as F
+
+    return messages.select(
+        F.col("metadata").getItem("partitionKey").alias("partition_key"),
+        F.octet_length("payload").cast("long").alias("n_bytes"),
+    ).groupBy("partition_key")
+
+
+def _account(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Fold this batch's rows for one key into persistent state and emit
+    the updated totals."""
+    n_messages, n_bytes, batch_n = _fold(pdfs, state.get if state.exists else (0, 0))
     state.update((n_messages, n_bytes))
     yield pd.DataFrame(
         {
@@ -81,13 +93,7 @@ def key_accounting(messages: DataFrame) -> DataFrame:
     stream; output one row per (key, batch) with cumulative totals.
     State is checkpointed with the query — restart-safe by
     construction."""
-    from pyspark.sql import functions as F
-
-    keyed = messages.select(
-        F.col("metadata").getItem("partitionKey").alias("partition_key"),
-        F.octet_length("payload").cast("long").alias("n_bytes"),
-    )
-    return keyed.groupBy("partition_key").applyInPandasWithState(
+    return _keyed(messages).applyInPandasWithState(
         _account,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -117,7 +123,6 @@ def key_accounting_ttl(messages: DataFrame, ttl_ms: int) -> DataFrame:
     implemented on ``GroupStateTimeout.ProcessingTimeTimeout``:
     every update re-arms the key's deadline; the expiry callback fires
     on the first batch processed past it."""
-    from pyspark.sql import functions as F
 
     def account_ttl(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -132,14 +137,7 @@ def key_accounting_ttl(messages: DataFrame, ttl_ms: int) -> DataFrame:
                 }
             )
             return
-        batch_n = 0
-        batch_bytes = 0
-        for pdf in pdfs:
-            batch_n += len(pdf)
-            batch_bytes += int(pdf["n_bytes"].sum())
-        n_messages, n_bytes = state.get if state.exists else (0, 0)
-        n_messages += batch_n
-        n_bytes += batch_bytes
+        n_messages, n_bytes, _ = _fold(pdfs, state.get if state.exists else (0, 0))
         state.update((n_messages, n_bytes))
         state.setTimeoutDuration(ttl_ms)
         yield pd.DataFrame(
@@ -151,11 +149,7 @@ def key_accounting_ttl(messages: DataFrame, ttl_ms: int) -> DataFrame:
             }
         )
 
-    keyed = messages.select(
-        F.col("metadata").getItem("partitionKey").alias("partition_key"),
-        F.octet_length("payload").cast("long").alias("n_bytes"),
-    )
-    return keyed.groupBy("partition_key").applyInPandasWithState(
+    return _keyed(messages).applyInPandasWithState(
         account_ttl,
         outputStructType=EXPIRE_OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -203,18 +197,9 @@ class KeyTotalsProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        batch_n = 0
-        batch_bytes = 0
-        for pdf in rows:
-            batch_n += len(pdf)
-            batch_bytes += int(pdf["n_bytes"].sum())
-        if self._totals.exists():
-            prior = self._totals.get()
-            n_messages, n_bytes = int(prior[0]), int(prior[1])
-        else:
-            n_messages, n_bytes = 0, 0
-        n_messages += batch_n
-        n_bytes += batch_bytes
+        n_messages, n_bytes, batch_n = _fold(
+            rows, self._totals.get() if self._totals.exists() else (0, 0)
+        )
         self._totals.update((n_messages, n_bytes))
         yield pd.DataFrame(
             {
@@ -235,13 +220,7 @@ def key_accounting_tws(messages: DataFrame) -> DataFrame:
     ``spark.sql.streaming.stateStore.providerClass`` to
     ``...RocksDBStateStoreProvider`` before starting the query; the
     rocksdbjni jar ships with Spark)."""
-    from pyspark.sql import functions as F
-
-    keyed = messages.select(
-        F.col("metadata").getItem("partitionKey").alias("partition_key"),
-        F.octet_length("payload").cast("long").alias("n_bytes"),
-    )
-    return keyed.groupBy("partition_key").transformWithStateInPandas(
+    return _keyed(messages).transformWithStateInPandas(
         statefulProcessor=KeyTotalsProcessor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Append",
